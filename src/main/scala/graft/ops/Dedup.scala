@@ -63,10 +63,9 @@ object Dedup {
     val cached = gramMetaCache.get(path)
     if (cached != null && cached._1 == sig) cached._2
     else {
-      val meta = spark.read.parquet(s"$path/meta").head
+      val meta = readIndexMeta(spark, path)
       val v = (meta.getAs[Int]("min_len"), meta.getAs[Int]("n_buckets"),
-        if (meta.schema.fieldNames.contains("generation"))
-          meta.getAs[Long]("generation") else 0L)
+        meta.getAs[Long]("generation"))
       gramMetaCache.put(path, (sig, v))
       v
     }
@@ -626,15 +625,16 @@ object Dedup {
     * [[appendToGramIndex]] — without it two batches carrying the same
     * novel passage both survive (each is novel vs the standing corpus).
     *
-    * Scale shape: the probe is SIZE-GATED (the `temperatureSample`
-    * contract pattern, VERDICT r10) on the batch's anchor count — a
-    * map-side partial count over the cached anchor table, paid before
-    * any join; it upper-bounds the distinct gram count, so the gate
-    * only errs conservative. At or under `maxBroadcastGrams` (the
-    * ingest-micro-batch
-    * regime) the gram set broadcasts: the index side streams ONCE
-    * through a broadcast semi-join, and the surviving corpus-hit grams
-    * (batch-bounded) broadcast back onto the batch's anchor table.
+    * Scale shape: the probe is SIZE-GATED (VERDICT r10), and despite
+    * its name `maxBroadcastGrams` caps anchor OCCURRENCES (every gram
+    * position, repeats included — a map-side count over the cached
+    * anchor table), not distinct grams: a self-repeating batch reaches
+    * the cap early, so the gate errs toward the shuffle regime, never
+    * toward an oversized broadcast. At or under the cap (the
+    * ingest-micro-batch regime) the gram set broadcasts: the index
+    * side streams ONCE through a broadcast semi-join, and the surviving
+    * corpus-hit grams (batch-bounded) broadcast back onto the batch's
+    * anchor table.
     * Past the gate (a backfill-sized "batch") both probes degrade to
     * hash-partitioned semi-joins on the 8-byte gram key — more
     * exchange, but no driver- or executor-memory cliff. Both regimes
@@ -792,8 +792,7 @@ object Dedup {
     * delete and the write); every writer instead CLAIMS the next
     * generation by atomically creating the side file `$path/gen/g<N>`
     * ([[claimGeneration]]) — readers of the drift signal take
-    * max(meta, side files), so pre-r12 indexes (whose appends bumped
-    * the meta in place) read their recorded value unchanged. */
+    * max(meta, side files). */
   def indexGeneration(spark: org.apache.spark.sql.SparkSession,
       path: String): Long = {
     val genDir = new org.apache.hadoop.fs.Path(s"$path/gen")
@@ -801,14 +800,7 @@ object Dedup {
     val side = if (!fs.exists(genDir)) Seq.empty[Long]
       else fs.listStatus(genDir).toSeq.map(_.getPath.getName)
         .flatMap(parseGenFile).collect { case ('g', v) => v }
-    (metaGenOf(spark, path) +: side).max
-  }
-
-  private def metaGenOf(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val meta = spark.read.parquet(s"$path/meta").head
-    if (meta.schema.fieldNames.contains("generation"))
-      meta.getAs[Long]("generation") else 0L
+    (readIndexMeta(spark, path).getAs[Long]("generation") +: side).max
   }
 
   /** Parse a gen-dir side-file name — `g`/`d`/`c` + a NON-EMPTY digit
@@ -833,7 +825,8 @@ object Dedup {
     * counts STARTED writes, never under-counts completed ones. */
   private def claimGeneration(spark: org.apache.spark.sql.SparkSession,
       path: String): Long =
-    claimWrite(spark, path, metaGenOf(spark, path),
+    claimWrite(spark, path,
+      readIndexMeta(spark, path).getAs[Long]("generation"),
       failOnCompaction = false)
 
   /** The write-side claim sequence in ONE gen-dir listing (the append
@@ -1150,7 +1143,7 @@ object Dedup {
   def compactSignatureIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFiles: Int = 64): Unit = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
-    readSignatureMeta(spark, path) // fail with guidance when meta absent
+    readIndexMeta(spark, path) // fail with guidance on an unreadable meta
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverCrashedSwap(fs, path, "sets")
@@ -1672,16 +1665,15 @@ object Dedup {
       textCol: String): Unit = {
     import graft.functions.ShingleExprs._
     val spark = batch.sparkSession
-    val meta = readSignatureMeta(spark, path)
+    val meta = readIndexMeta(spark, path)
     val shingleN = meta.getAs[Int]("shingle_n")
     val bands = meta.getAs[Int]("bands")
     val rowsPerBand = meta.getAs[Int]("rows_per_band")
     // claim BEFORE any data write (the single-writer CAS); the
     // in-flight-compaction abort and history prune share the claim's
-    // one directory listing, and metaGen rides the meta row read above
-    val metaGen = if (meta.schema.fieldNames.contains("generation"))
-      meta.getAs[Long]("generation") else 0L
-    val claimed = claimWrite(spark, path, metaGen, failOnCompaction = true)
+    // one directory listing, and the generation rides the meta row above
+    val claimed = claimWrite(spark, path, meta.getAs[Long]("generation"),
+      failOnCompaction = true)
     val existing = spark.read.parquet(s"$path/sets").select(col("id"))
     // materialize the novel slice BEFORE appending to the directory its
     // plan reads (batch-sized; the Dedup lineage-cut convention)
@@ -1700,19 +1692,24 @@ object Dedup {
     markGenerationDone(spark, path, claimed)
   }
 
-  /** The signature index's recorded parameters, failing with GUIDANCE
-    * when the index predates the meta file (a pre-round-11 release
-    * build) instead of an opaque path error mid-lifecycle. */
-  private[graft] def readSignatureMeta(
+  /** A gram or signature index's one-row meta: the build parameters
+    * plus the release `generation`. An absent meta, or one without the
+    * `generation` column, is refused by path with GUIDANCE instead of
+    * an opaque error mid-lifecycle. */
+  private[graft] def readIndexMeta(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.spark.sql.Row =
-    try spark.read.parquet(s"$path/meta").head
-    catch { case e: org.apache.spark.sql.AnalysisException =>
-      throw new IllegalArgumentException(
-        s"signature index at $path has no meta (built before the " +
-          "parameters were recorded) — rebuild it with " +
-          "saveSignatureIndex to enable appends/streaming ingest", e)
-    }
+      path: String): org.apache.spark.sql.Row = {
+    def refuse(found: String, cause: Throwable = null) =
+      new IllegalArgumentException(s"index meta at $path/meta $found; " +
+        "expected a meta row with a `generation` column — rebuild the " +
+        "index with saveGramIndex / saveSignatureIndex", cause)
+    val meta = try spark.read.parquet(s"$path/meta").head
+      catch { case e: org.apache.spark.sql.AnalysisException =>
+        throw refuse("is unreadable or absent", e) }
+    if (!meta.schema.fieldNames.contains("generation")) throw refuse(
+      s"holds (${meta.schema.fieldNames.mkString(", ")})")
+    meta
+  }
 
   /** Near-dups of a NEW batch against a [[saveSignatureIndex]] corpus:
     * batch signatures join the saved bucket table band-wise (the only
@@ -1779,11 +1776,13 @@ object Dedup {
 
   /** True when `corpus`'s optimizer size estimate reaches the byte
     * threshold configured under `confKey` (default 1 GiB) — the shared
-    * plan-time predicate behind the scale-adaptive strategy gates. */
+    * plan-time predicate behind the scale-adaptive strategy gates. A
+    * setting that is not a whole byte count fails naming the key. */
   private[graft] def corpusExceeds(corpus: DataFrame,
       confKey: String): Boolean = {
-    val minBytes = corpus.sparkSession.conf
-      .get(confKey, (1L << 30).toString).toLong
+    val raw = corpus.sparkSession.conf.get(confKey, (1L << 30).toString)
+    val minBytes = raw.trim.toLongOption.getOrElse(throw new
+      IllegalArgumentException(s"$confKey must be a byte count, got '$raw'"))
     corpus.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes
   }
 

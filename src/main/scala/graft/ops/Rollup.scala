@@ -80,10 +80,11 @@ object Rollup {
     * 64 bits of entropy: two independently-seeded 32-bit murmur passes
     * packed into one Long (VERDICT r13 — a single 32-bit hash widened
     * to Long gave the XOR only half the collision margin the freshness
-    * scaladoc advertises). Changing the stamp invalidates PERSISTED
-    * streaming `_base_snapshot` accumulations: a pre-r14 streaming
-    * artifact stops routing (conservative fall-through, never a wrong
-    * answer) — rebuild it or point the stream at a fresh path.
+    * scaladoc advertises). PERSISTED streaming `_base_snapshot`
+    * accumulations are tagged with the stamp's format (`v2|…`), and a
+    * snapshot without that tag is refused by path
+    * ([[graft.streaming.StreamOps.accumulatedBaseSnapshot]]) — an XOR
+    * mixing two stamp formats could never match a listing again.
     * In-memory registration snapshots just re-register. */
   private[graft] def fileStamp(p: org.apache.hadoop.fs.Path,
       mtime: Long, len: Long): Long = {
@@ -129,8 +130,8 @@ object Rollup {
   // that was the common case, not the corner.) The streaming sink
   // commits versions the same way through a java.io twin
   // ([[graft.streaming.StreamOps.currentLocalDataDir]], wider grace —
-  // folds are seconds apart, not hours); legacy pre-r14 `data`
-  // directories resolve through this helper's fallback.
+  // folds are seconds apart, not hours). Versions are the ONE layout:
+  // an unversioned root is refused ([[refuseUnversioned]]), never read.
   // ------------------------------------------------------------------
 
   private[graft] val CommittedMarker = "_committed"
@@ -155,18 +156,37 @@ object Rollup {
       }
     }.sorted
 
+  /** Refuse a root with no committed version whose data sits in the
+    * unversioned in-place layout (`data`, or its `.old`/`.next` swap
+    * sides). `exists` probes a child name with the caller's filesystem
+    * — shared with the streaming sink's java.io resolver. */
+  private[graft] def refuseUnversioned(root: String,
+      exists: String => Boolean): Unit =
+    Seq("data", "data.old", "data.next").find(exists).foreach { d =>
+      throw new IllegalStateException(
+        s"rollup at $root holds the unversioned in-place layout (`$d`, " +
+          "no committed data_v<N>); expected committed " +
+          s"`data_v<N>/$CommittedMarker` directories — rebuild it at a " +
+          "fresh path")
+    }
+
   /** The rollup's CURRENT data directory: the highest committed
-    * `data_v<N>`, else the legacy in-place `data`. One listing of the
-    * rollup ROOT (a handful of entries) — the router already analyzes
-    * the artifact per rewrite, so resolution adds a metadata call of
-    * strictly smaller order, never a data read. */
+    * `data_v<N>` — `data_v0`, which never exists, when none is
+    * committed. One listing of the rollup ROOT (a handful of entries)
+    * — the router already analyzes the artifact per rewrite, so
+    * resolution adds a metadata call of strictly smaller order, never
+    * a data read. A root with no committed version but an unversioned
+    * in-place directory is refused ([[refuseUnversioned]]). */
   private[graft] def currentDataPath(spark: SparkSession,
       rollupPath: String): String = {
     val root = new org.apache.hadoop.fs.Path(rollupPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    committedVersions(fs, root).lastOption
-      .map(n => new org.apache.hadoop.fs.Path(root, s"data_v$n").toString)
-      .getOrElse(s"$rollupPath/data")
+    val v = committedVersions(fs, root).lastOption.getOrElse {
+      refuseUnversioned(rollupPath,
+        d => fs.exists(new org.apache.hadoop.fs.Path(root, d)))
+      0L
+    }
+    new org.apache.hadoop.fs.Path(root, s"data_v$v").toString
   }
 
   /** Refuse a BATCH write at an artifact the streaming sink maintains
@@ -262,11 +282,7 @@ object Rollup {
     * query planned seconds ago); everything else — older-and-aged
     * versions, uncommitted crashed-writer leftovers — goes. A reader
     * that outlives both bounds can still lose its files (documented;
-    * at hourly-refresh pitch that is a query running for hours). The
-    * legacy in-place `data` directory is "version 0": it survives the
-    * first versioned write and then GCs like any superseded version —
-    * its supersede moment is v1's commit, so v1's marker age stands in
-    * for the commit marker the pre-versioned era never wrote.
+    * at hourly-refresh pitch that is a query running for hours).
     *
     * Ages are measured against the JUST-COMMITTED version's marker
     * mtime, not the driver's clock (review finding, r15): both stamps
@@ -276,10 +292,8 @@ object Rollup {
   private def gcVersions(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, current: Long,
       minAgeMs: Long): Unit = {
-    def markerOf(v: Long) = new org.apache.hadoop.fs.Path(
-      root, s"data_v$v/$CommittedMarker")
-    val now = scala.util.Try(
-      fs.getFileStatus(markerOf(current)).getModificationTime)
+    val now = scala.util.Try(fs.getFileStatus(new org.apache.hadoop.fs.Path(
+        root, s"data_v$current/$CommittedMarker")).getModificationTime)
       .getOrElse(System.currentTimeMillis())
     def aged(marker: org.apache.hadoop.fs.Path): Boolean =
       scala.util.Try(
@@ -297,15 +311,6 @@ object Rollup {
             fs.delete(st.getPath, true)
         case _ => ()
       }
-    }
-    // the legacy dir was superseded when v1 committed; while v1's
-    // marker is younger than the floor, a query planned against the
-    // legacy layout may still be executing (review finding, r15)
-    if (current >= 2L &&
-        (!fs.exists(markerOf(1L)) || aged(markerOf(1L)))) {
-      fs.delete(new org.apache.hadoop.fs.Path(root, "data"), true)
-      AtomicSwap.dropLeftovers(fs,
-        new org.apache.hadoop.fs.Path(root, "data"))
     }
   }
 
@@ -467,9 +472,6 @@ object Rollup {
     val spark = base.sparkSession
     val root = new org.apache.hadoop.fs.Path(path)
     val hfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // heal a legacy (pre-versioned) artifact's crashed swap first so
-    // the grace-keeping below preserves a READABLE previous state
-    AtomicSwap.recover(hfs, new org.apache.hadoop.fs.Path(s"$path/data"))
     // a streaming-maintained artifact refuses the batch write LOUDLY
     // (ADVICE r14) — this module's GC would sweep the stream's wider
     // grace window and race its in-flight fold
@@ -522,10 +524,9 @@ object Rollup {
   }
 
   /** The covered-files record of a rollup's data directory, or None
-    * when the artifact predates incremental tracking (pre-r13) or was
-    * built from a derived frame. Driver-side size is file-count-
-    * bounded — the same order as any file listing this engine already
-    * does. */
+    * when the artifact was built from a derived frame. Driver-side
+    * size is file-count-bounded — the same order as any file listing
+    * this engine already does. */
   private def readCovered(spark: SparkSession, dataPath: String)
       : Option[Map[String, (Long, Long)]] = {
     val p = new org.apache.hadoop.fs.Path(s"$dataPath/_covered")
@@ -556,8 +557,8 @@ object Rollup {
     * vanished or changed (mtime/len) makes refresh throw — deletions
     * are not incrementally subtractable (min/max are not invertible);
     * rebuild with [[saveRollup]] at the next release. Artifacts
-    * without a covered-files record (pre-r13, or built from a derived
-    * frame) also refuse with that guidance.
+    * without a covered-files record (built from a derived frame) also
+    * refuse with that guidance.
     *
     * Crash and live-reader safety is the VERSIONED-artifact contract
     * (see [[CommittedMarker]]): the merged data and the updated
@@ -583,9 +584,6 @@ object Rollup {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(rollupPath)
     val fs = root.getFileSystem(conf)
-    // heal a LEGACY (pre-versioned) artifact's crashed swap: between
-    // its two renames, data.old held the only copy
-    AtomicSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$rollupPath/data"))
     // a streaming-maintained artifact refuses the batch refresh LOUDLY
     // (ADVICE r14): the covered-files check below would refuse anyway
     // (no _covered record), but with guidance — "rebuild with
@@ -605,7 +603,7 @@ object Rollup {
     val covered = readCovered(spark, curPath).getOrElse(
       throw new IllegalStateException(
         s"rollup at $rollupPath has no covered-files record (built " +
-          "before incremental tracking, or from a derived frame) — " +
+          "from a derived frame) — " +
           "incremental refresh cannot prove what it already " +
           "aggregated; rebuild with saveRollup"))
     val current = files.map(st =>

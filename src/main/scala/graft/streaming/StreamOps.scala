@@ -322,9 +322,9 @@ object StreamOps extends org.apache.spark.internal.Logging {
     * [[recoverSwap]] at the top of each fold. Kept java.io on purpose
     * — these sinks' fences are java.nio local files by contract, and
     * resolving caller paths through the default Hadoop FS would
-    * silently retarget them on HDFS-default clusters; the PERSISTED-
-    * artifact twin with identical `.next`/`.old` protocol is
-    * [[graft.ops.AtomicSwap]] — keep the two in lockstep. */
+    * silently retarget them on HDFS-default clusters. Persisted rollup
+    * artifacts never swap in place: they commit versions
+    * ([[graft.ops.Rollup.CommittedMarker]]). */
   private def swapInto(target: java.io.File)
       (write: java.io.File => Unit): Unit = {
     val next = new java.io.File(target.getPath + ".next")
@@ -376,17 +376,23 @@ object StreamOps extends org.apache.spark.internal.Logging {
         ()
       }
 
-  /** Parse a snapshot fence: `<batchId>` (legacy, pre-r13) or
-    * `<batchId>|<runId>`. A None return means no fence file. */
+  /** Parse a snapshot fence, `<batchId>|<runId>` (the run id is empty
+    * for runId-less direct calls: `<batchId>|`). A None return means no
+    * fence file; any other layout is refused by path. */
   private def readFence(dir: java.io.File): Option[(Long, String)] = {
     val fence = new java.io.File(dir, "_last_batch_id")
     if (!fence.exists()) None
-    else java.nio.file.Files.readString(fence.toPath).trim
-      .split('|') match {
-        case Array(id) => Some((id.toLong, ""))
-        case Array(id, run) => Some((id.toLong, run))
-        case other => Some((other.head.toLong, other.tail.mkString("|")))
+    else {
+      val text = java.nio.file.Files.readString(fence.toPath).trim
+      text.split("\\|", 2) match {
+        case Array(id, run) if id.nonEmpty && id.forall(_.isDigit) =>
+          Some((id.toLong, run))
+        case _ => throw new IllegalStateException(
+          s"snapshot fence at $fence holds '$text'; expected the " +
+            "`<batchId>|<runId>` layout — rebuild the artifact at a " +
+            "fresh path")
       }
+    }
   }
 
   /** The fold's admission check, shared by both rollup sinks (review
@@ -395,27 +401,13 @@ object StreamOps extends org.apache.spark.internal.Logging {
     * and let the first fold silently REPLACE a pre-existing unfenced
     * artifact, e.g. one saveRollup built): returns Some(lastApplied)
     * when this stream owns the artifact, throws when a different
-    * stream (or no stream) built what is already there. Legacy fences
-    * without a run id (pre-r13 artifacts) are grandfathered — an
-    * in-place upgrade continues its stream rather than crashing; all
-    * new fences carry identity. */
+    * stream (or no stream) built what is already there. The run ids
+    * must match exactly: a fence without one admits only runId-less
+    * direct calls. */
   private def fenceAdmission(dir: java.io.File, path: String,
       runId: String): Long = readFence(dir) match {
     case Some((last, run)) =>
-      // grandfathered legacy fence: identity can't be checked, so a
-      // NEW stream with restarted batch ids over this artifact would
-      // misread its early batches as replays until one id exceeds the
-      // old fence — say so once, so accidental path reuse is spottable
-      // (VERDICT r13 #3a / ADVICE r13)
-      if (run.isEmpty && runId.nonEmpty) warnOnce(s"legacy-fence|$path",
-        s"rollup snapshot at $path carries a pre-identity fence " +
-          s"(batch id $last, no stream run id): accepting this stream " +
-          "as its continuation. If this is actually a NEW stream over " +
-          "a standing artifact, batches with ids <= the fence are " +
-          "being skipped as replays — point new streams at fresh " +
-          "paths. The first accepted fold upgrades the fence with " +
-          "this stream's identity.")
-      if (run.nonEmpty && run != runId) throw new IllegalStateException(
+      if (run != runId) throw new IllegalStateException(
         s"rollup snapshot at $path was maintained by stream run '$run' " +
           s"but this stream is '$runId' — a fresh-checkpoint stream " +
           "re-reads its source from scratch, so folding onto another " +
@@ -470,7 +462,7 @@ object StreamOps extends org.apache.spark.internal.Logging {
     * [[rollupSink]] keeps an exactly-once incremental aggregate, and
     * [[graft.ops.Rollup.register]] routes matching queries to a saved
     * rollup; this sink does BOTH, writing the incrementally-maintained
-    * snapshot in Rollup's own on-disk format (`$path/data` +
+    * snapshot in Rollup's own on-disk format (`$path/data_v<N>` +
     * `$path/meta`, the full cnt/sum/min/max/cnt-per-measure column
     * set) and — when `routeBase` names the stream's source directory —
     * re-registering after every fold, so a continuously maintained
@@ -607,9 +599,8 @@ object StreamOps extends org.apache.spark.internal.Logging {
   /** java.io twin of [[graft.ops.Rollup.currentDataPath]]'s version
     * resolution (these sinks' fences and markers are LOCAL files by
     * contract — see [[swapInto]]): the highest `data_v<N>` under the
-    * artifact root carrying the commit marker, as a version number.
-    * 0 = none committed; the legacy in-place `data` directory is
-    * "version 0". The naming scheme is the SHARED
+    * artifact root carrying the commit marker, as a version number
+    * (0 = none committed). The naming scheme is the SHARED
     * [[graft.ops.Rollup.VersionDirPattern]] constant, so this resolver
     * and the Hadoop-FS one can never disagree on which directory is
     * current. */
@@ -623,11 +614,14 @@ object StreamOps extends org.apache.spark.internal.Logging {
       case _ => None
     }.maxOption.getOrElse(0L)
 
-  /** The routable artifact's CURRENT data directory under `path`. */
+  /** The routable artifact's CURRENT data directory under `path`
+    * (`data_v0`, which never exists, when none is committed); an
+    * unversioned root is refused ([[graft.ops.Rollup.refuseUnversioned]]). */
   private[graft] def currentLocalDataDir(path: String): java.io.File = {
     val v = currentLocalVersion(new java.io.File(path))
-    if (v > 0L) new java.io.File(path, s"data_v$v")
-    else new java.io.File(path, "data")
+    if (v == 0L) graft.ops.Rollup.refuseUnversioned(path,
+      d => new java.io.File(path, d).exists())
+    new java.io.File(path, s"data_v$v")
   }
 
   /** How many SUPERSEDED versions a streaming artifact keeps as reader
@@ -638,16 +632,13 @@ object StreamOps extends org.apache.spark.internal.Logging {
     * The artifact is dim-cardinality-sized, so the extra copies are
     * noise; a routed read is artifact-sized and normally sub-second,
     * far inside the bound. A query slower than grace×trigger-interval
-    * can STILL lose its files — a stated bound, not a new in-place
-    * hazard (pre-r14 the swap gave ZERO grace on every fold). */
+    * can STILL lose its files — a stated bound (an in-place swap
+    * gives ZERO grace on every fold). */
   private[graft] val StreamRollupGraceFolds = 4L
 
   /** Keep the just-committed version and the [[StreamRollupGraceFolds]]
-    * it superseded; sweep older and uncommitted versions. The legacy
-    * in-place `data` directory is version 0: it survives while inside
-    * the grace window, then goes (with any of its crashed-swap
-    * leftovers). */
-  private def gcLocalVersions(root: java.io.File, current: Long): Unit = {
+    * it superseded; sweep older and uncommitted versions. */
+  private def gcLocalVersions(root: java.io.File, current: Long): Unit =
     Option(root.list()).iterator.flatten.foreach {
       case name @ LocalVersionName(n) =>
         val v = n.toLong
@@ -658,49 +649,33 @@ object StreamOps extends org.apache.spark.internal.Logging {
           delete(new java.io.File(root, name))
       case _ => ()
     }
-    if (current > StreamRollupGraceFolds)
-      Seq("data", "data.old", "data.next").foreach { n =>
-        val f = new java.io.File(root, n)
-        if (f.exists()) delete(f)
-      }
-  }
 
   /** The processed-files snapshot [[applyRoutableRollupBatch]] has
     * accumulated so far — rides inside the artifact's current data
     * version so each fold commits data + fence + snapshot together.
     *
-    * Format is VERSION-TAGGED since r15 (`v2|count|bytes|hash` —
-    * ADVICE r14): r13 widened [[graft.ops.Rollup.fileStamp]] from a
-    * 32-bit-derived to a true 64-bit hash, so an artifact whose
-    * accumulation STARTED before that change carries a mixed-stamp XOR
-    * that can never again equal a freshly-listed base — routing is
-    * permanently dead for it, and no amount of folding or
-    * re-registration (which this sink does every fold) can revive it.
-    * An UNTAGGED snapshot is exactly that grandfathered accumulation
-    * (or an r14-era one, which would still route — the format cannot
-    * tell them apart): it keeps being honored, but the operator gets
-    * one warning with the only guidance that always works — rebuild at
-    * a fresh path — instead of the generic stale message that
-    * suggested a re-registration which cannot help. */
+    * The one layout is VERSION-TAGGED, `v2|count|bytes|hash`: the tag
+    * names the 64-bit [[graft.ops.Rollup.fileStamp]] the hash XORs.
+    * An accumulation under any other stamp could never again equal a
+    * freshly-listed base — routing would be permanently dead, and no
+    * amount of folding or re-registration could revive it — so any
+    * other content is refused by path, with the only remedy that
+    * works: rebuild at a fresh path. */
   private[graft] def accumulatedBaseSnapshot(
       spark: org.apache.spark.sql.SparkSession, path: String)
       : Option[graft.ops.Rollup.BaseSnapshot] = {
     val f = new java.io.File(currentLocalDataDir(path), "_base_snapshot")
     if (!f.exists()) None
-    else java.nio.file.Files.readString(f.toPath).trim.split('|') match {
-      case Array("v2", c, b, h) => Some(graft.ops.Rollup.BaseSnapshot(
-        c.toInt, b.toLong, h.toLong))
-      case Array(c, b, h) =>
-        warnOnce(s"legacy-snapshot|$path",
-          s"the routable rollup at $path carries a pre-r15 (untagged) " +
-            "_base_snapshot; if its accumulation began before the " +
-            "64-bit fileStamp change, the listing compare can never " +
-            "match again and neither folding nor re-registration can " +
-            "restore routing (queries stay correct on the base scan). " +
-            "If routed reads do not resume within a fold or two, " +
-            "rebuild the artifact at a FRESH path to restore routing")
-        Some(graft.ops.Rollup.BaseSnapshot(c.toInt, b.toLong, h.toLong))
-      case _ => None
+    else {
+      val text = java.nio.file.Files.readString(f.toPath).trim
+      text.split('|') match {
+        case Array("v2", c, b, h) => Some(graft.ops.Rollup.BaseSnapshot(
+          c.toInt, b.toLong, h.toLong))
+        case _ => throw new IllegalStateException(
+          s"processed-files snapshot at $f holds '$text'; expected the " +
+            "`v2|<count>|<bytes>|<hash>` layout — rebuild the rollup at " +
+            "a fresh path")
+      }
     }
   }
 
@@ -714,14 +689,10 @@ object StreamOps extends org.apache.spark.internal.Logging {
     import graft.ops.Rollup
     val spark = batch.sparkSession
     val root = new java.io.File(path)
-    // heal a LEGACY (pre-r14, in-place) artifact's crashed swap first
-    // so resolution sees a readable previous state
-    recoverSwap(new java.io.File(s"$path/data"))
-    // current state = the highest committed version (legacy `data` as
-    // fallback). The fence rides INSIDE it, so admission — including
-    // the foreign-artifact refusal: a saveRollup-built version dir has
-    // data but no fence — checks whatever directory actually holds the
-    // standing state
+    // current state = the highest committed version. The fence rides
+    // INSIDE it, so admission — including the foreign-artifact refusal:
+    // a saveRollup-built version dir has data but no fence — checks
+    // whatever directory actually holds the standing state
     val curDir = currentLocalDataDir(path)
     val lastApplied = fenceAdmission(curDir, curDir.getPath, runId)
     if (batchId <= lastApplied) return false
@@ -1154,8 +1125,13 @@ object StreamOps extends org.apache.spark.internal.Logging {
     * IS the result; the substring ingest stages the cut DECISIONS and
     * re-derives the rewrite deterministically from the replayed batch —
     * round 16, the staged write is then cut-sized, not batch-text-
-    * sized). `deliver` sees whatever schema is on disk, so it must
-    * sniff and pass legacy artifacts through unchanged. */
+    * sized).
+    *
+    * One stage layout: the data, its `_SUCCESS`, then the plain
+    * `_input_fp_v2` fingerprint file. A stage holding the parquet
+    * `_input_fp` fingerprint directory instead is refused by path —
+    * recomputing it would be wrong whenever the batch's append already
+    * ran (the batch would excise against its own grams). */
   private def stagedBatchResult(batch: DataFrame, idCol: String,
       textCol: String, indexPath: String, batchId: Long, runId: String)
       (compute: => DataFrame)
@@ -1186,18 +1162,11 @@ object StreamOps extends org.apache.spark.internal.Logging {
     // (the append for THIS input has not run, so the standing index is
     // the correct pre-batch state). The fingerprint lands AFTER the
     // data (underscore-prefixed → invisible to the data read); a crash
-    // between the two reads as a mismatch and recomputes safely. Old
-    // two-column fingerprints (pre-r13) fail the read and recompute —
-    // the safe direction.
+    // between the two reads as a mismatch and recomputes safely. It is
+    // ONE tiny record, a plain file written through the FS API — a
+    // 1-row parquet dataset cost a full Spark write job (~0.14 s) on
+    // every micro-batch for ~40 bytes of state (round 15).
     val fp = inputFingerprint(batch, idCol, textCol)
-    val fpDir = s"$dir/_input_fp"
-    // the fingerprint is ONE tiny record — since round 15 it lands as a
-    // plain file written through the FS API (`_input_fp_v2`), not a
-    // 1-row parquet dataset: the parquet form cost a full Spark
-    // write job (~0.14 s) on every micro-batch for ~40 bytes of state.
-    // Read order: a v2 file is authoritative when present (any mismatch
-    // recomputes — never falls through to a stale legacy dir); absent
-    // it, the pre-r15 parquet forms are honored unchanged.
     val fpFile = new org.apache.hadoop.fs.Path(s"$dir/_input_fp_v2")
     def fpFileMatches(): Boolean = scala.util.Try {
       val in = fs.open(fpFile)
@@ -1211,35 +1180,12 @@ object StreamOps extends org.apache.spark.internal.Logging {
     val staged =
       fs.exists(new org.apache.hadoop.fs.Path(hPath, "_SUCCESS")) && (
         if (fs.exists(fpFile)) fpFileMatches()
-        else scala.util.Try {
-          val fpDf = spark.read.parquet(fpDir)
-          val r = fpDf.head()
-          if (fpDf.columns.length >= 4)
-            (r.getLong(0), r.getLong(1), r.getLong(2)) == fp &&
-              r.getString(3) == runId
-          else {
-            // legacy 2-column stage (pre-content-hash build): accept
-            // on input identity alone (review finding, r13). Rejecting
-            // it would RECOMPUTE, and for a genuine replay whose
-            // append already ran, recomputation excises the batch
-            // against its own grams — the exact loss the stage
-            // prevents. The legacy stage merely lacks the stronger
-            // fences; every stage written by this build carries them —
-            // and the acceptance is no longer silent (ADVICE r13), so
-            // accidental index-path reuse is spottable in the log
-            val ok = (r.getLong(0), r.getLong(1)) == ((fp._1, fp._2))
-            if (ok) warnOnce(s"legacy-stage|$indexPath",
-              s"accepted a pre-content-hash staged batch result under " +
-                s"$indexPath/ingest_stage/b$batchId on input identity " +
-                "(count + id-xor) alone: if this index path was reused " +
-                "by a NEW stream with restarted batch ids, the replayed " +
-                "stage may predate the current index state — point new " +
-                "streams at fresh index paths. Stages written by this " +
-                "build carry the full content-hash + stream-identity " +
-                "fingerprint.")
-            ok
-          }
-        }.getOrElse(false))
+        else if (fs.exists(new org.apache.hadoop.fs.Path(hPath, "_input_fp")))
+          throw new IllegalStateException(
+            s"staged batch at $dir holds the parquet `_input_fp` " +
+              "fingerprint directory; expected the `_input_fp_v2` file " +
+              "— point the stream at a fresh index path")
+        else false)
     if (!staged) {
       // compute is by-name: a replayed batch never re-plans (let alone
       // re-runs) the dedup against the already-grown index. The
@@ -1278,8 +1224,9 @@ object StreamOps extends org.apache.spark.internal.Logging {
     * batch = [[graft.ops.Dedup.exciseAgainstIndex]] (size-gated
     * broadcast, bucket-pruned index read) +
     * [[graft.ops.Dedup.appendToGramIndex]] (batch-shaped append) + one
-    * batch-sized staged write; single-writer: one ingest stream per
-    * index. */
+    * cut-sized staged write; single-writer: one ingest stream per
+    * index. `maxBroadcastGrams` caps the batch's anchor OCCURRENCES
+    * (see [[graft.ops.Dedup.exciseAgainstIndex]]). */
   def substringDedupIngest(docs: DataFrame, indexPath: String,
       checkpoint: String,
       idCol: String = "doc_id", textCol: String = "text", minLen: Int = 8,
@@ -1300,7 +1247,9 @@ object StreamOps extends org.apache.spark.internal.Logging {
   /** One micro-batch of [[substringDedupIngest]] — public so replay
     * behavior is directly testable (call twice with the same batchId
     * and runId: the second delivers the staged first result
-    * bit-for-bit; a DIFFERENT runId — a new stream — recomputes). */
+    * bit-for-bit; a DIFFERENT runId — a new stream — recomputes). The
+    * stage holds the per-doc cut table (`cuts` column); a stage without
+    * it is refused by path. */
   def substringDedupIngestBatch(batch: DataFrame, batchId: Long,
       indexPath: String, idCol: String, textCol: String, minLen: Int = 8,
       maxBroadcastGrams: Long = 4000000L, runId: String = "")
@@ -1314,16 +1263,16 @@ object StreamOps extends org.apache.spark.internal.Logging {
     // staged-v3 (round 16): the artifact is the per-doc merged CUT
     // table — cut-sized, not batch-text-sized — and the sink-facing
     // rewrite re-derives deterministically (integer spans + codegen'd
-    // excise over the replay-identical batch text, fingerprint-fenced).
-    // A legacy stage (pre-r16: the full rewritten batch) has no `cuts`
-    // column and is delivered verbatim, exactly as before.
+    // excise over the replay-identical batch text, fingerprint-fenced)
     val cleaned = stagedBatchResult(batch, idCol, textCol, indexPath,
       batchId, runId)(
       graft.ops.Dedup.exciseCutsAgainstIndexAnchored(anchors,
         indexPath, minLen, maxBroadcastGrams)) { staged =>
-      if (staged.columns.contains("cuts"))
-        graft.ops.Dedup.applyCuts(batch, staged, idCol, textCol)
-      else staged
+      if (!staged.columns.contains("cuts")) throw new IllegalStateException(
+        s"staged batch at $indexPath/ingest_stage/b$batchId holds " +
+          s"(${staged.columns.mkString(", ")}); expected the cut table " +
+          "(id, cuts, removed) — point the stream at a fresh index path")
+      graft.ops.Dedup.applyCuts(batch, staged, idCol, textCol)
     }
     sink(cleaned, batchId)
     graft.ops.Dedup.appendToGramIndexAnchored(batch, indexPath, idCol,
@@ -1381,7 +1330,7 @@ object StreamOps extends org.apache.spark.internal.Logging {
       (sink: (DataFrame, Long) => Unit): Unit = {
     import graft.ops.Dedup
     val spark = batch.sparkSession
-    val meta = Dedup.readSignatureMeta(spark, indexPath)
+    val meta = Dedup.readIndexMeta(spark, indexPath)
     val shingleN = meta.getAs[Int]("shingle_n")
     val bands = meta.getAs[Int]("bands")
     val rowsPerBand = meta.getAs[Int]("rows_per_band")

@@ -79,7 +79,7 @@ object CompactionProbe {
         odd.where(pmod(col("doc_id"), lit(2L * nAppends)) === 2 * i + 1),
         sIdx, "doc_id", "text")
     }
-    val sigMeta = graft.ops.Dedup.readSignatureMeta(spark, sIdx)
+    val sigMeta = graft.ops.Dedup.readIndexMeta(spark, sIdx)
     def sigProbe(): Long = graft.ops.Dedup.incrementalNearDups(
       probe, sIdx, "doc_id", "text",
       sigMeta.getAs[Int]("shingle_n"), sigMeta.getAs[Int]("bands"),

@@ -1099,4 +1099,66 @@ class DedupSpec extends SparkSpec {
     assert(kept.contains(s"g$cutoff") || cutoff < 1)
     assert(kept.contains("g100") && kept.contains("g101"))
   }
+
+  test("an index meta without a generation column is refused by name") {
+    // every gram/signature build records `generation` in its meta; a
+    // meta without it is an older layout, refused by path on every read
+    val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta eta " +
+      "theta iota kappa")).toDF("doc_id", "text")
+    val batch = Seq((101L, "red orange yellow green blue indigo violet " +
+      "ultraviolet")).toDF("doc_id", "text")
+    def refused(path: String)(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains(s"index meta at $path/meta holds") &&
+        e.getMessage.contains("`generation`"), e.getMessage)
+    }
+    val gramIdx = java.nio.file.Files
+      .createTempDirectory("graft-gram-nogen").toString
+    Dedup.saveGramIndex(corpus, gramIdx, "text", minLen = 8, buckets = 8)
+    Seq((8, 8)).toDF("min_len", "n_buckets").coalesce(1)
+      .write.mode("overwrite").parquet(s"$gramIdx/meta")
+    refused(gramIdx)(Dedup.exciseAgainstIndex(batch, gramIdx, "doc_id",
+      "text"))
+    refused(gramIdx)(Dedup.appendToGramIndex(batch, gramIdx, "doc_id",
+      "text"))
+    refused(gramIdx)(Dedup.indexGeneration(spark, gramIdx))
+    val sigIdx = java.nio.file.Files
+      .createTempDirectory("graft-sig-nogen").toString
+    Dedup.saveSignatureIndex(corpus, sigIdx, "doc_id", "text")
+    Seq((3, 16, 4)).toDF("shingle_n", "bands", "rows_per_band")
+      .coalesce(1).write.mode("overwrite").parquet(s"$sigIdx/meta")
+    refused(sigIdx)(Dedup.appendToSignatureIndex(batch, sigIdx, "doc_id",
+      "text"))
+    refused(sigIdx)(graft.streaming.StreamOps.nearDupIngestBatch(batch,
+      0L, sigIdx, "doc_id", "text")((_, _) => ()))
+    assert(!new java.io.File(s"$gramIdx/gen").exists() &&
+      !new java.io.File(s"$sigIdx/gen").exists(),
+      "a refused index claims no generation")
+  }
+
+  test("a malformed byte-count gate setting fails naming the key") {
+    val keys = Seq("spark.graft.confirm.explodeMinBytes",
+      "spark.graft.jaccard.sharedTokExchangeMinBytes")
+    for (key <- keys) {
+      spark.conf.set(key, "1g")
+      try {
+        val e = intercept[IllegalArgumentException](
+          Dedup.corpusExceeds(docs, key))
+        assert(e.getMessage.contains(key) &&
+          e.getMessage.contains("byte count") &&
+          e.getMessage.contains("'1g'"), e.getMessage)
+        // a well-formed value gates as before: 0 bytes is always reached
+        spark.conf.set(key, "0")
+        assert(Dedup.corpusExceeds(docs, key))
+      } finally spark.conf.unset(key)
+      assert(!Dedup.corpusExceeds(docs, key), "the 1 GiB default")
+    }
+    // the public entry points surface the same error
+    spark.conf.set(keys(1), "lots")
+    try {
+      val e = intercept[IllegalArgumentException](
+        Dedup.jaccardPairs(docs, "doc_id", "text", threshold = 0.5))
+      assert(e.getMessage.contains(keys(1)), e.getMessage)
+    } finally spark.conf.unset(keys(1))
+  }
 }

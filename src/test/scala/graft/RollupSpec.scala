@@ -542,23 +542,34 @@ class RollupSpec extends SparkSpec {
       .write.mode("append").parquet(bp)
     val rp = dir.resolve("roll").toString
     Rollup.saveRollup(spark.read.parquet(bp), rp, Seq("lang"), Seq("n"))
-    // turn the artifact into a LEGACY (pre-versioned, in-place) one:
-    // data_v1 -> data with no commit marker — the form every pre-r14
-    // build shipped — then simulate ITS crash window (data -> data.old
-    // done, data.next -> data not); the next refresh must restore the
-    // legacy directory and then fold the pending append into a fresh
-    // committed version
-    assert(new java.io.File(s"$rp/data_v1")
-      .renameTo(new java.io.File(s"$rp/data")))
-    assert(new java.io.File(s"$rp/data/${Rollup.CommittedMarker}").delete())
-    assert(new java.io.File(s"$rp/data")
-      .renameTo(new java.io.File(s"$rp/data.old")))
+    // a refresh that crashed mid-write left an uncommitted data_v2 (no
+    // marker, a torn part file): the next refresh ignores it, replaces
+    // it, and folds the pending append into the committed version
+    val torn = new java.io.File(s"$rp/data_v2")
+    assert(torn.mkdirs())
+    java.nio.file.Files.writeString(
+      new java.io.File(torn, "part-torn.parquet").toPath, "not parquet")
     Seq(("fr", 30L)).toDF("lang", "n").coalesce(1)
       .write.mode("append").parquet(bp)
     assert(Rollup.refresh(spark, bp, rp, register = false) == 1L)
+    assert(Rollup.currentDataPath(spark, rp).endsWith("data_v2"))
+    assert(!new java.io.File(torn, "part-torn.parquet").exists())
     assert(spark.read.parquet(Rollup.currentDataPath(spark, rp))
       .agg(sum(col(Rollup.cntCol))).head.getLong(0) == 3L,
-      "recovered artifact must keep pre-crash history plus the fold")
+      "the healed artifact must keep its history plus the fold")
+    // the unversioned in-place layout's crash window (data -> data.old
+    // done, data.next -> data not) is refused by path, not healed
+    val rpOld = dir.resolve("roll_inplace").toString
+    Rollup.saveRollup(spark.read.parquet(bp), rpOld, Seq("lang"), Seq("n"))
+    assert(new java.io.File(s"$rpOld/data_v1")
+      .renameTo(new java.io.File(s"$rpOld/data.old")))
+    assert(new java.io.File(s"$rpOld/data.old/${Rollup.CommittedMarker}")
+      .delete())
+    val eOld = intercept[IllegalStateException](
+      Rollup.refresh(spark, bp, rpOld, register = false))
+    assert(eOld.getMessage.contains(s"rollup at $rpOld ") &&
+      eOld.getMessage.contains("`data.old`"), eOld.getMessage)
+    assert(new java.io.File(s"$rpOld/data.old").exists())
     // a covered file vanishes -> not append-only -> loud refusal
     val part = new java.io.File(bp).listFiles()
       .filter(f => f.getName.endsWith(".parquet")).head
@@ -803,41 +814,61 @@ class RollupSpec extends SparkSpec {
     } finally Rollup.unregister(spark, bp)
   }
 
-  test("rebuild at a standing path commits the next version, and the " +
-      "legacy in-place directory survives exactly one cycle") {
+  test("rebuild at a standing path commits the next version; an " +
+      "unversioned in-place root is refused by name") {
     import spark.implicits._
     Graft.init(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft-rollup-reb")
     val bp = dir.resolve("base").toString
     Seq(("en", 10L)).toDF("lang", "n").coalesce(1).write.parquet(bp)
     val rp = dir.resolve("roll").toString
-    // floor OFF: this test pins the write-cycle bound for the legacy
-    // layout; under the default floor the legacy dir would (rightly)
-    // survive while v1's commit marker is younger than the minimum age
+    // floor OFF: this test pins the write-cycle bound; under the default
+    // floor a superseded version survives while the next commit marker
+    // is younger than the minimum age
     spark.conf.set(Rollup.GcMinAgeConf, "0")
-    Rollup.saveRollup(spark.read.parquet(bp), rp, Seq("lang"), Seq("n"))
-    // age the artifact into the legacy layout (what pre-r14 shipped)
-    assert(new java.io.File(s"$rp/data_v1")
-      .renameTo(new java.io.File(s"$rp/data")))
-    assert(new java.io.File(s"$rp/data/${Rollup.CommittedMarker}").delete())
-    assert(Rollup.currentDataPath(spark, rp).endsWith("/data"),
-      "a legacy artifact resolves through the fallback")
-    // first versioned rebuild: data stays as reader grace
-    Rollup.saveRollup(spark.read.parquet(bp), rp, Seq("lang"), Seq("n"))
-    assert(Rollup.currentDataPath(spark, rp).endsWith("data_v1"))
-    assert(new java.io.File(s"$rp/data").exists(),
-      "legacy directory is version 0: it survives the first commit")
-    // second rebuild: legacy grace expires
-    Rollup.saveRollup(spark.read.parquet(bp), rp, Seq("lang"), Seq("n"))
-    assert(Rollup.currentDataPath(spark, rp).endsWith("data_v2"))
-    assert(!new java.io.File(s"$rp/data").exists(),
-      "legacy directory GCs on the second commit")
-    // the artifact still registers and routes
-    Rollup.register(spark, bp, rp)
     try {
+      Rollup.saveRollup(spark.read.parquet(bp), rp, Seq("lang"), Seq("n"))
+      assert(Rollup.currentDataPath(spark, rp).endsWith("data_v1"))
+      // first rebuild: v1 stays as reader grace
+      Rollup.saveRollup(spark.read.parquet(bp), rp, Seq("lang"), Seq("n"))
+      assert(Rollup.currentDataPath(spark, rp).endsWith("data_v2"))
+      assert(new java.io.File(s"$rp/data_v1").exists(),
+        "the superseded version survives one write cycle")
+      // second rebuild: v1's grace expires
+      Rollup.saveRollup(spark.read.parquet(bp), rp, Seq("lang"), Seq("n"))
+      assert(Rollup.currentDataPath(spark, rp).endsWith("data_v3"))
+      assert(!new java.io.File(s"$rp/data_v1").exists(),
+        "v1 GCs on the second rebuild")
+      assert(new java.io.File(s"$rp/data_v2").exists())
+      // the artifact still registers and routes
+      Rollup.register(spark, bp, rp)
       val q = spark.read.parquet(bp).groupBy("lang").agg(sum("n").as("s"))
       assert(readsRollup(q))
       assert(rows(q) == Seq(Seq("en", 10L)))
+      // a root whose data sits in the in-place layout (`data`, or either
+      // side of its rename swap) with no committed version: every entry
+      // point refuses it by path and leaves it untouched
+      for (name <- Seq("data", "data.old", "data.next")) {
+        val rpOld = dir.resolve(s"roll_$name").toString
+        Rollup.saveRollup(spark.read.parquet(bp), rpOld, Seq("lang"),
+          Seq("n"))
+        assert(new java.io.File(s"$rpOld/data_v1")
+          .renameTo(new java.io.File(s"$rpOld/$name")))
+        assert(new java.io.File(s"$rpOld/$name/${Rollup.CommittedMarker}")
+          .delete())
+        val refusals = Seq(
+          intercept[IllegalStateException](Rollup.currentDataPath(spark,
+            rpOld)),
+          intercept[IllegalStateException](Rollup.saveRollup(
+            spark.read.parquet(bp), rpOld, Seq("lang"), Seq("n"))),
+          intercept[IllegalStateException](Rollup.register(spark, bp,
+            rpOld)))
+        refusals.foreach(e => assert(
+          e.getMessage.contains(s"rollup at $rpOld ") &&
+            e.getMessage.contains(s"`$name`") &&
+            e.getMessage.contains("data_v<N>"), e.getMessage))
+        assert(new java.io.File(s"$rpOld/$name").exists())
+      }
     } finally {
       Rollup.unregister(spark, bp)
       spark.conf.unset(Rollup.GcMinAgeConf)

@@ -1090,28 +1090,15 @@ class StreamingSpec extends SparkSpec {
     assert(eC.getMessage.contains("maintained by stream run"), eC.getMessage)
   }
 
-  test("a LEGACY artifact's crashed swap recovers; an uncommitted " +
+  test("an unversioned rollup root is refused by name; an uncommitted " +
       "version is invisible and swept") {
-    // pre-r14 artifacts swapped `data` in place; their crash window
-    // (data -> data.old succeeded, data.next -> data did not) must
-    // still heal before the fold resolves current state. Without
-    // recovery the next fold reads an ABSENT directory and silently
-    // restarts the rollup from one batch (review finding, r13)
+    // a version directory written but never committed (no marker) must
+    // stay invisible to resolution and be swept by the next fold
     val p = java.nio.file.Files
       .createTempDirectory("graft-roll-crash").toString
     assert(StreamOps.applyRoutableRollupBatch(p,
       Seq(("en", 10L), ("de", 20L)).toDF("lang", "n"), 0L,
       Seq("lang"), Seq("n"), runId = "r"))
-    // age the fold's version into the legacy in-place layout, then
-    // simulate the legacy crash window
-    assert(new java.io.File(s"$p/data_v1")
-      .renameTo(new java.io.File(s"$p/data")))
-    assert(new java.io.File(
-      s"$p/data/${graft.ops.Rollup.CommittedMarker}").delete())
-    assert(new java.io.File(s"$p/data")
-      .renameTo(new java.io.File(s"$p/data.old")))
-    // r14 crash shape on top: a version directory written but never
-    // committed (no marker) must stay invisible and be swept
     val junk = new java.io.File(s"$p/data_v9")
     assert(junk.mkdirs())
     assert(StreamOps.applyRoutableRollupBatch(p,
@@ -1122,20 +1109,42 @@ class StreamingSpec extends SparkSpec {
       .parquet(StreamOps.currentLocalDataDir(p).getPath)
       .where(col("lang") === "en").head()
     assert(en.getAs[Long](graft.ops.Rollup.cntCol) == 2L,
-      "recovered fold must keep batch 0's history")
+      "the fold must keep batch 0's history")
     assert(en.getAs[Long](graft.ops.Rollup.sumCol("n")) == 40L)
+    // the in-place layout (`data`, or either side of its rename swap)
+    // with no committed version is refused by path, never read or swept
+    for (name <- Seq("data", "data.old", "data.next")) {
+      val q = java.nio.file.Files
+        .createTempDirectory("graft-roll-inplace").toString
+      assert(StreamOps.applyRoutableRollupBatch(q,
+        Seq(("en", 1L)).toDF("lang", "n"), 0L, Seq("lang"), Seq("n"),
+        runId = "r"))
+      assert(new java.io.File(s"$q/data_v1")
+        .renameTo(new java.io.File(s"$q/$name")))
+      assert(new java.io.File(
+        s"$q/$name/${graft.ops.Rollup.CommittedMarker}").delete())
+      val e = intercept[IllegalStateException](
+        StreamOps.applyRoutableRollupBatch(q,
+          Seq(("de", 2L)).toDF("lang", "n"), 1L, Seq("lang"), Seq("n"),
+          runId = "r"))
+      assert(e.getMessage.contains(s"rollup at $q ") &&
+        e.getMessage.contains(s"`$name`") &&
+        e.getMessage.contains("data_v<N>"), e.getMessage)
+      assert(new java.io.File(s"$q/$name").exists(),
+        "a refused artifact is left untouched")
+    }
   }
 
-  test("a legacy 2-column staged fingerprint is reused, not recomputed") {
-    // pre-r13 stages carry only (count, id-xor). Rejecting them would
-    // recompute — and for a genuine replay whose append already ran,
-    // recomputation excises the batch against its OWN grams (review
-    // finding, r13). The legacy stage must be accepted on input
-    // identity alone.
+  test("a parquet staged fingerprint is refused by name, never recomputed") {
+    // the stage's one fingerprint layout is the `_input_fp_v2` file. A
+    // stage carrying the parquet `_input_fp` directory instead (either
+    // its 4-column or its 2-column form) cannot be checked against this
+    // stream, and recomputing it would excise the batch against its
+    // OWN grams whenever the append already ran — so it is refused
     import graft.ops.Dedup
     val corpus = Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text")
     val tmp = java.nio.file.Files
-      .createTempDirectory("graft-legacy-fp").toString
+      .createTempDirectory("graft-parquet-fp").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 8)
     val batch = Seq((101L, "head s1 s2 s3 s4 s5 s6 s7 s8 foot"))
       .toDF("doc_id", "text")
@@ -1145,38 +1154,39 @@ class StreamingSpec extends SparkSpec {
     StreamOps.substringDedupIngestBatch(batch, 0L, tmp, "doc_id",
       "text", minLen = 8, runId = "runA")(sink)
     assert(delivered == Vector("head s1 s2 s3 s4 s5 s6 s7 s8 foot"))
-    // since r15 a fresh stage records its fingerprint as the plain
-    // `_input_fp_v2` FILE (no per-batch parquet job); a pre-r15 stage
-    // carries the parquet DIR instead. Rebuild that legacy state:
-    // drop the v2 file and plant the 2-column (count, id-xor) parquet
-    // a pre-r13 build would have written.
     val fpV2 = java.nio.file.Paths.get(tmp, "ingest_stage", "b0",
       "_input_fp_v2")
     assert(java.nio.file.Files.exists(fpV2),
       "fresh stage must record the v2 fingerprint file")
     java.nio.file.Files.delete(fpV2)
-    val fpDir = s"$tmp/ingest_stage/b0/_input_fp"
+    val stage = s"$tmp/ingest_stage/b0"
     val cx = batch.selectExpr("count(1) AS c",
       "coalesce(bit_xor(xxhash64(cast(doc_id AS string))), 0L) AS x")
       .head()
-    import spark.implicits._
-    Seq((cx.getLong(0), cx.getLong(1))).toDF("c", "x")
-      .coalesce(1).write.mode("overwrite").parquet(fpDir)
-    // replay (same input; the append ALREADY ran above): must deliver
-    // the staged original, not a recompute that excises the passage
-    delivered = Vector.empty
-    StreamOps.substringDedupIngestBatch(batch, 0L, tmp, "doc_id",
-      "text", minLen = 8, runId = "runA")(sink)
-    assert(delivered == Vector("head s1 s2 s3 s4 s5 s6 s7 s8 foot"),
-      s"legacy stage must replay, got $delivered")
-    // the acceptance is logged once (ADVICE r13): accidental index-path
-    // reuse by a new stream is spottable
-    assert(StreamOps.warnedOnce.contains(s"legacy-stage|$tmp"),
-      "legacy-stage acceptance must warn, not pass silently")
+    val genBefore = Dedup.indexGeneration(spark, tmp)
+    val forms = Seq(
+      Seq((cx.getLong(0), cx.getLong(1))).toDF("c", "x"),
+      Seq((cx.getLong(0), cx.getLong(1), 0L, "runA"))
+        .toDF("c", "x", "t", "run"))
+    for (fpDf <- forms) {
+      fpDf.coalesce(1).write.mode("overwrite").parquet(s"$stage/_input_fp")
+      delivered = Vector.empty
+      val e = intercept[IllegalStateException](
+        StreamOps.substringDedupIngestBatch(batch, 0L, tmp, "doc_id",
+          "text", minLen = 8, runId = "runA")(sink))
+      assert(e.getMessage.contains(s"staged batch at $stage ") &&
+        e.getMessage.contains("`_input_fp`") &&
+        e.getMessage.contains("`_input_fp_v2`"), e.getMessage)
+      assert(delivered.isEmpty, "a refused stage delivers nothing")
+      assert(!java.nio.file.Files.exists(fpV2),
+        "a refused stage is not recomputed")
+    }
+    assert(Dedup.indexGeneration(spark, tmp) == genBefore,
+      "a refused stage appends nothing")
   }
 
   test("staged-v3 stages the CUT decisions, replays them bit-exactly, " +
-      "and a pre-r16 full-text staged artifact is delivered verbatim") {
+      "and a full-text stage without cuts is refused by name") {
     import graft.ops.Dedup
     val corpus = Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text")
     val tmp = java.nio.file.Files
@@ -1206,9 +1216,8 @@ class StreamingSpec extends SparkSpec {
     StreamOps.substringDedupIngestBatch(batch, 0L, tmp, "doc_id",
       "text", minLen = 8, runId = "runV3")(sink)
     assert(out == firstOut, s"v3 replay diverged: $out vs $firstOut")
-    // a pre-r16 stage held the full rewritten frame; plant one (with a
-    // sentinel) under the same fingerprint and the replay must deliver
-    // it verbatim — never re-derive from cuts it does not have
+    // a stage holding the full rewritten frame (no `cuts` column) under
+    // the same fingerprint is refused by path — never delivered verbatim
     val fpV2 = java.nio.file.Paths.get(stagedDir, "_input_fp_v2")
     val fpBytes = java.nio.file.Files.readAllBytes(fpV2)
     Seq((101L, "SENTINEL", 9L, 8L), (102L, "SENTINEL2", 5L, 0L))
@@ -1216,40 +1225,193 @@ class StreamingSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(stagedDir)
     java.nio.file.Files.write(fpV2, fpBytes)
     out = Map.empty
-    StreamOps.substringDedupIngestBatch(batch, 0L, tmp, "doc_id",
-      "text", minLen = 8, runId = "runV3")(sink)
-    assert(out(101L)._1 == "SENTINEL" && out(102L)._1 == "SENTINEL2",
-      s"legacy full-text stage must be delivered verbatim, got $out")
+    val e = intercept[IllegalStateException](
+      StreamOps.substringDedupIngestBatch(batch, 0L, tmp, "doc_id",
+        "text", minLen = 8, runId = "runV3")(sink))
+    assert(e.getMessage.contains(s"staged batch at $stagedDir ") &&
+      e.getMessage.contains("text_dedup") &&
+      e.getMessage.contains("cut table"), e.getMessage)
+    assert(out.isEmpty, "a refused stage delivers nothing")
   }
 
-  test("a grandfathered legacy fence is accepted WITH a warning, and " +
-      "the first fold upgrades it to this stream's identity") {
-    // VERDICT r13 #2 / #3a: the acceptance is correct (an in-place
-    // upgrade continues its stream) but must not be silent — operators
-    // need to spot accidental path reuse in the log
+  test("a zero-cut staged batch keeps the cut schema and replays every " +
+      "doc verbatim") {
+    // no corpus hit and no within-batch repeat: the cut table is EMPTY,
+    // and the stage must still read back as the cut layout (not be
+    // refused), delivering each doc unchanged with nothing removed
+    import graft.ops.Dedup
+    val corpus = Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text")
+    val tmp = java.nio.file.Files
+      .createTempDirectory("graft-stage-zero").toString
+    Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 8)
+    val docs = Seq(
+      (101L, "q1 q2 q3 q4 q5 q6 q7 q8 q9"),
+      (102L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"),
+      (103L, "short doc"))
+    val batch = docs.toDF("doc_id", "text")
+    val verbatim = docs.map { case (id, t) => (id, t, 0L) }.toSet
+    var out = Set.empty[(Long, String, Long)]
+    def sink(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      out = df.collect().map(r =>
+        (r.getLong(0), r.getString(1), r.getLong(3))).toSet
+    StreamOps.substringDedupIngestBatch(batch, 0L, tmp, "doc_id",
+      "text", minLen = 8, runId = "runZ")(sink)
+    assert(out == verbatim, s"first delivery: $out")
+    val staged = spark.read.parquet(s"$tmp/ingest_stage/b0")
+    assert(staged.columns.toSeq == Seq("id", "cuts", "removed"),
+      s"zero-cut stage schema: ${staged.columns.mkString(",")}")
+    assert(staged.count() == 0L)
+    out = Set.empty
+    StreamOps.substringDedupIngestBatch(batch, 0L, tmp, "doc_id",
+      "text", minLen = 8, runId = "runZ")(sink)
+    assert(out == verbatim, s"replay: $out")
+  }
+
+  /** A fresh gram index over the one-doc corpus the crash-replay tests
+    * share, and their batch: one doc the corpus passage hits, one that
+    * repeats its own passage. */
+  private def crashIndex(): String = {
+    val tmp = java.nio.file.Files
+      .createTempDirectory("graft-ingest-crash").toString
+    graft.ops.Dedup.saveGramIndex(
+      Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text"), tmp,
+      "text", minLen = 8, buckets = 8)
+    tmp
+  }
+
+  private def crashBatch = Seq(
+    (101L, "head a b c d e f g h foot"),
+    (102L, "n1 n2 n3 n4 n5 n6 n7 n8 and n1 n2 n3 n4 n5 n6 n7 n8"))
+    .toDF("doc_id", "text")
+
+  /** One ingest micro-batch 0 of [[crashBatch]]; the sink records what
+    * it was handed, then throws when `sinkFails`. */
+  private def crashRun(idx: String, sinkFails: Boolean = false)
+      : Set[(Long, String, Long)] = {
+    var out = Set.empty[(Long, String, Long)]
+    StreamOps.substringDedupIngestBatch(crashBatch, 0L, idx, "doc_id",
+      "text", minLen = 8, runId = "runC") { (df, _) =>
+      out = df.collect().map(r =>
+        (r.getLong(0), r.getString(1), r.getLong(3))).toSet
+      if (sinkFails) throw new java.io.IOException("sink down")
+    }
+    out
+  }
+
+  private lazy val crashExpected: Set[(Long, String, Long)] = {
+    val ref = crashRun(crashIndex())
+    assert(ref == Set((101L, "head foot", 8L),
+      (102L, "n1 n2 n3 n4 n5 n6 n7 n8 and", 8L)), s"reference run: $ref")
+    ref
+  }
+
+  test("ingest crash between the staged write and its fingerprint: the " +
+      "replay recomputes the same output") {
+    val idx = crashIndex()
+    // a failing sink stops the batch after the stage commits and before
+    // the append; dropping the fingerprint file rewinds it to the crash
+    // between the stage's data write and its fingerprint write
+    intercept[java.io.IOException](crashRun(idx, sinkFails = true))
+    val fpV2 = java.nio.file.Paths.get(idx, "ingest_stage", "b0",
+      "_input_fp_v2")
+    java.nio.file.Files.delete(fpV2)
+    assert(crashRun(idx) == crashExpected)
+    assert(java.nio.file.Files.exists(fpV2),
+      "the recompute must record its fingerprint")
+  }
+
+  test("ingest crash in the sink after the stage commits: the replay " +
+      "delivers the staged result") {
+    val idx = crashIndex()
+    intercept[java.io.IOException](crashRun(idx, sinkFails = true))
+    def partFiles() = new java.io.File(s"$idx/ingest_stage/b0").list()
+      .filter(_.startsWith("part-")).toSet
+    val before = partFiles()
+    assert(before.nonEmpty)
+    assert(crashRun(idx) == crashExpected)
+    assert(partFiles() == before,
+      "the replay must read the committed stage, not rewrite it")
+  }
+
+  test("ingest crash after the append: the index holds the batch's grams " +
+      "exactly once") {
+    import graft.ops.Dedup
+    val idx = crashIndex()
+    // sink crash, successful replay (the append runs), then a replay of
+    // the already-appended batch (a crash before the streaming commit)
+    intercept[java.io.IOException](crashRun(idx, sinkFails = true))
+    assert(crashRun(idx) == crashExpected)
+    assert(crashRun(idx) == crashExpected)
+    val grams = spark.read.parquet(s"$idx/grams")
+    assert(grams.groupBy("h").count().where(col("count") > 1).isEmpty,
+      "a replayed append must not duplicate grams")
+    val batchGrams = Dedup.batchAnchorTable(crashBatch, "doc_id", "text", 8)
+      .select("h").distinct()
+    assert(batchGrams.join(grams, Seq("h"), "left_anti").isEmpty,
+      "every gram of the batch must be in the index")
+  }
+
+  test("a fence must carry the stream's run id: a runId-less or bare-id " +
+      "fence is refused by name") {
     val p = java.nio.file.Files
-      .createTempDirectory("graft-legacy-fence").toString
-    // a pre-identity artifact: runId "" writes the bare-id fence form
+      .createTempDirectory("graft-fence-run").toString
+    // a runId-less direct call writes `<id>|` and can continue it
     assert(StreamOps.applyRoutableRollupBatch(p,
       Seq(("en", 1L)).toDF("lang", "n"), 0L, Seq("lang"), Seq("n"),
       runId = ""))
-    val fenced = StreamOps.currentLocalDataDir(p)
-    assert(java.nio.file.Files.readString(
-      new java.io.File(fenced, "_last_batch_id").toPath).trim == "0|",
-      "runId-less fold must write the legacy-parseable fence")
-    // an identity-carrying stream continues it: accepted + warned once
+    def fence() = new java.io.File(StreamOps.currentLocalDataDir(p),
+      "_last_batch_id")
+    assert(java.nio.file.Files.readString(fence().toPath).trim == "0|",
+      "runId-less fold must write the `<id>|` fence")
     assert(StreamOps.applyRoutableRollupBatch(p,
       Seq(("de", 2L)).toDF("lang", "n"), 1L, Seq("lang"), Seq("n"),
-      runId = "runX"))
-    assert(StreamOps.warnedOnce.contains(s"legacy-fence|${fenced.getPath}"),
-      "grandfathering must warn, not pass silently")
-    // the accepted fold upgraded the fence: a DIFFERENT run now refuses
+      runId = ""))
+    // an identified stream over it is a different stream: refused
     val e = intercept[IllegalStateException](
       StreamOps.applyRoutableRollupBatch(p,
         Seq(("fr", 3L)).toDF("lang", "n"), 2L, Seq("lang"), Seq("n"),
-        runId = "runY"))
-    assert(e.getMessage.contains("maintained by stream run 'runX'"),
-      e.getMessage)
+        runId = "runX"))
+    assert(e.getMessage.contains(
+        s"rollup snapshot at ${StreamOps.currentLocalDataDir(p)} ") &&
+      e.getMessage.contains("maintained by stream run ''") &&
+      e.getMessage.contains("'runX'"), e.getMessage)
+    // a bare `<id>` fence (no run-id field) is refused for every caller
+    java.nio.file.Files.writeString(fence().toPath, "1")
+    for (run <- Seq("", "runX")) {
+      val eBare = intercept[IllegalStateException](
+        StreamOps.applyRoutableRollupBatch(p,
+          Seq(("fr", 3L)).toDF("lang", "n"), 2L, Seq("lang"), Seq("n"),
+          runId = run))
+      assert(eBare.getMessage.contains(s"snapshot fence at ${fence()} ") &&
+        eBare.getMessage.contains("`<batchId>|<runId>`"), eBare.getMessage)
+    }
+    assert(StreamOps.currentLocalDataDir(p).getName == "data_v2",
+      "a refused fold commits nothing")
+  }
+
+  test("an untagged processed-files snapshot is refused by name") {
+    // the snapshot's one layout is `v2|count|bytes|hash`; an untagged
+    // accumulation may mix fileStamp formats and could never route again
+    val p = java.nio.file.Files
+      .createTempDirectory("graft-snap-tag").toString
+    assert(StreamOps.applyRoutableRollupBatch(p,
+      Seq(("en", 1L)).toDF("lang", "n"), 0L, Seq("lang"), Seq("n"),
+      runId = "r"))
+    val snap = new java.io.File(StreamOps.currentLocalDataDir(p),
+      "_base_snapshot")
+    assert(java.nio.file.Files.readString(snap.toPath).startsWith("v2|"))
+    assert(StreamOps.accumulatedBaseSnapshot(spark, p).nonEmpty)
+    java.nio.file.Files.writeString(snap.toPath, "0|0|0")
+    val e = intercept[IllegalStateException](
+      StreamOps.accumulatedBaseSnapshot(spark, p))
+    assert(e.getMessage.contains(s"processed-files snapshot at $snap ") &&
+      e.getMessage.contains("`v2|<count>|<bytes>|<hash>`"), e.getMessage)
+    intercept[IllegalStateException](
+      StreamOps.applyRoutableRollupBatch(p,
+        Seq(("de", 2L)).toDF("lang", "n"), 1L, Seq("lang"), Seq("n"),
+        runId = "r"))
+    assert(StreamOps.currentLocalDataDir(p).getName == "data_v1",
+      "a refused fold commits nothing")
   }
 
   test("an unreadable source metadata log warns once and degrades to " +
