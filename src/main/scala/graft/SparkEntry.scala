@@ -3274,7 +3274,8 @@ object SparkEntry {
     // of exact copies (docs 0..24, id+100000) is deduped against the
     // corpus at hamming 0; only corpus-vs-batch pairs are reported. An
     // exact copy has an identical simhash, and no natural doc shares a
-    // simhash with any doc id < 25 (verified with tools/FixtureStats at
+    // simhash with any doc id < 25 (verified with tools/FixtureStats,
+    // since deleted, source at commit aaa65ea, at
     // BOTH verify-able SFs: sf0.01's natural hamming-0 pairs have
     // endpoints >= 58, sf0.1's >= 179) -> output is exactly the 25
     // planted pairs. Natural-corpus hamming<=3 is exercised in DedupSpec.

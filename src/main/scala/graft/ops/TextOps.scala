@@ -1299,8 +1299,9 @@ object TextOps {
     * cluster size. Every real BPE trainer collapses to word counts and
     * trains in memory for this reason; the learned rules are
     * bit-identical to the distributed loop's (pinned by TextOpsSpec),
-    * so the oracle replay is unchanged. Measured
-    * (`tools/BpeTrainProbe`): 32,000 merges over a 1M-word vocabulary
+    * so the oracle replay is unchanged. Measured (`tools/BpeTrainProbe`,
+    * since deleted; `git show aaa65ea:src/main/scala/graft/tools/
+    * BpeTrainProbe.scala`): 32,000 merges over a 1M-word vocabulary
     * in 74 s, where the loop measures ~3.6 s PER MERGE on the same
     * corpus (SCALING.md).
     *

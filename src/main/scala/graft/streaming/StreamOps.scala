@@ -99,7 +99,10 @@ object StreamOps extends org.apache.spark.internal.Logging {
     * `dropDuplicates` would grow forever). On a batch frame this runs as
     * ordinary fingerprint dedup (`dropDuplicatesWithinWatermark` is
     * streaming-only, and on finite input bounded state is moot), keeping
-    * the batch/stream parity contract. */
+    * the batch/stream parity contract — with one boundary: the stream
+    * drops an event at or before the first batch's watermark (0, i.e.
+    * the epoch, before any event is seen) as late, while the batch form
+    * keeps it. Stamp events after the epoch for the two to agree. */
   def dedupByFingerprint(df: DataFrame, contentCol: String,
       tsCol: String = "ts", watermark: String = "1 hour"): DataFrame = {
     // same reserved-name contract as AsOfJoin: silently overwriting and
@@ -143,7 +146,10 @@ object StreamOps extends org.apache.spark.internal.Logging {
     * groupBy), so the batch result IS the oracle for the streaming one —
     * parity pinned in StreamingSpec. At scale: the only stateful pieces
     * are the fingerprint store (16 bytes/doc, watermark-evicted) and one
-    * counter row per source. */
+    * counter row per source. Parity boundary (see [[dedupByFingerprint]]):
+    * a document whose `tsCol` is at or before the first batch's
+    * watermark (the epoch) is dropped by the stream but kept by the
+    * batch form. */
   def ingestCorpus(docs: DataFrame, tsCol: String = "ingest_ts",
       watermark: String = "1 hour"): DataFrame = {
     val quality = graft.ops.TextOps.qualitySignals(docs)

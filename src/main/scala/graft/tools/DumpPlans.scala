@@ -7,8 +7,12 @@ import graft.{GraftSession, SparkEntry}
 /** Regenerates PLANS.md: the formatted physical plans of the headline
   * queries, the artifact showing the scale-relevant plan properties
   * (pushed filters, pruned read schemas, broadcast joins, partial
-  * aggregation, codegen spans). Run after plan-affecting changes:
-  *   sbt "runMain graft.tools.DumpPlans"  */
+  * aggregation, codegen spans). Run from the repo root after
+  * plan-affecting changes:
+  *   sbt "runMain graft.tools.DumpPlans"
+  * It reads SPARK_GRAFT_SF_DIR (default sf0.001) on SPARK_GRAFT_CPUS
+  * threads and shuffle partitions (default 4: partition counts show in
+  * the plans) and writes PLANS.md in the working directory. */
 object DumpPlans {
   private val annotated = Seq(
     "q_filter_project" -> "Filters reach the parquet scan (PushedFilters); only 4 of 11 lineitem columns are read (ReadSchema).",
@@ -67,9 +71,10 @@ object DumpPlans {
     "q_substring_dedup" -> "Corpus-global substring-dedup rewrite: the fused shingle_anchors pass is the only corpus-sized stream; the duplicated-gram table comes from ONE hash-keyed partial+final count/min aggregate (algebraic — the exchange carries distinct-gram volume), joins back on the 64-bit gram key, interval merge windows only over DUPLICATED positions per doc, and the excise_spans rewrite is a map-side codegen'd two-pointer loop — cuts travel to the text, the text never shuffles. Round 11: the anchors pass is exchanged on the gram key exactly ONCE (explicit repartition reused by the aggregate and the probe join — the aggregate's distribution is already satisfied, so no second exchange).")
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.create("local[4]", 4)
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
     sb.append(s"Generated by `graft.tools.DumpPlans` against `$dir`.\n")
@@ -155,7 +160,7 @@ object DumpPlans {
           "the aggregates need.\n\n```\n" + planS + "\n```\n")
       } finally graft.ops.Rollup.unregister(spark, basePath)
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"[plans] wrote PLANS.md (${sb.length} chars)")
     spark.stop()
   }

@@ -4,13 +4,20 @@ package graft.tools
   * counts materialized FileScans vs ReusedExchanges in the final
   * adaptive plan — the quickest detector for the branch-specialization
   * trap (column pruning de-canonicalizing shared subtrees so AQE
-  * re-materializes a corpus scan per consumer). */
+  * re-materializes a corpus scan per consumer).
+  *
+  * `ScanAudit [--plan] [q_name ...]` audits the named queries (default:
+  * the batch headline) at SPARK_GRAFT_SF_DIR (default sf0.001) on
+  * SPARK_GRAFT_CPUS threads (default 8); `--plan` also prints each
+  * final plan. */
 object ScanAudit {
   def main(args: Array[String]): Unit = {
-    val sf = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val spark = graft.GraftSession.create("local[8]", 8)
+    val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val spark = graft.GraftSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.length > 1) args.drop(1).toSeq
+    val (flags, given) = args.toSeq.partition(_ == "--plan")
+    val names = if (given.nonEmpty) given
       else graft.Bench.headline.filterNot(_.startsWith("s_"))
     names.foreach { name =>
       try {
@@ -18,6 +25,7 @@ object ScanAudit {
         val scans = "FileScan parquet".r.findAllIn(fin).size
         val reused = "ReusedExchange".r.findAllIn(fin).size
         println(f"[scanaudit] $name%-24s scans=$scans reused=$reused")
+        if (flags.nonEmpty) println(fin)
       } catch { case e: Throwable =>
         // String.valueOf: a bare NPE has a null message, and calling
         // .take on it would abort the remaining audit
