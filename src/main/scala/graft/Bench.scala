@@ -254,20 +254,22 @@ object Bench {
   private[graft] final case class StreamRun(dir: Path, view: String)
 
   /** One streaming entry. Per run, `setup` (untimed) fills the run's tree
-    * and returns the query to start; the clock covers start, every
-    * available micro-batch, stop, and `check` of the sink. A failed run
-    * records no sample and never aborts the other entries. The tree and
-    * view are deleted in a finally (runs otherwise leak them, ADVICE r13). */
+    * and returns the query builder; the clock covers building the query
+    * (stream analysis included), start, every available micro-batch,
+    * stop, and `check` of the sink. A failed run records no sample and
+    * never aborts the other entries. The tree and view are deleted in a
+    * finally (runs otherwise leak them, ADVICE r13). */
   private[graft] def streamEntry(spark: SparkSession, name: String, runs: Int)(
-      setup: StreamRun => DataStreamWriter[_])(check: StreamRun => Unit): Entry = {
+      setup: StreamRun => () => DataStreamWriter[_])(
+      check: StreamRun => Unit): Entry = {
     val samples = (1 to runs).map { i =>
       try {
         val run = StreamRun(Files.createTempDirectory(s"graft-bench-$name-$i"),
           s"bench_${name}_$i")
         try {
-          val writer = setup(run)
+          val query = setup(run)
           timed(spark) {
-            val q = writer.start()
+            val q = query().start()
             try q.processAllAvailable() finally q.stop()
             check(run)
           }
@@ -299,42 +301,41 @@ object Bench {
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
       math.min(4, prevShuffle.toInt).toString)
-    // the fixture table, copied into the run's tree, which the stream watches
-    def watch(table: String, run: StreamRun): DataFrame = {
-      val src = s"$sfDir/$table.parquet"
-      Files.copy(Paths.get(src), run.dir.resolve(s"$table.parquet"))
-      spark.readStream.schema(spark.read.parquet(src).schema)
-        .parquet(run.dir.toString)
-    }
-    // an entry whose query writes the memory sink, checked non-empty
-    def memoryEntry(name: String, mode: String, what: String)(
-        query: StreamRun => Dataset[_]): Entry =
-      streamEntry(spark, name, runs)(run => query(run).writeStream
-          .format("memory").queryName(run.view).outputMode(mode))(
-        run => require(spark.table(run.view).count() > 0, what))
+    // an entry streaming one fixture table, copied into the run's tree
+    // (untimed), through `query` into the memory sink, checked non-empty
+    def memoryEntry(name: String, table: String, mode: String, what: String)(
+        query: DataFrame => Dataset[_]): Entry =
+      streamEntry(spark, name, runs) { run =>
+        val src = s"$sfDir/$table.parquet"
+        Files.copy(Paths.get(src), run.dir.resolve(s"$table.parquet"))
+        val schema = spark.read.parquet(src).schema
+        () => query(spark.readStream.schema(schema).parquet(run.dir.toString))
+          .writeStream.format("memory").queryName(run.view).outputMode(mode)
+      }(run => require(spark.table(run.view).count() > 0, what))
     var delivered = 0L // rows the substring ingest's sink received
     try Seq(
       // the same tumbling-window aggregation the batch oracle
       // q_events_hourly verifies, driven as a stream — the batch/stream
       // parity claim under measurement
-      memoryEntry("s_windowed_counts", "complete",
-          "streaming query produced no windows")(run =>
-        StreamOps.windowedCounts(StreamOps.withEventTime(watch("events", run)))),
+      memoryEntry("s_windowed_counts", "events", "complete",
+          "streaming query produced no windows")(src =>
+        StreamOps.windowedCounts(StreamOps.withEventTime(src))),
       // the composed corpus-ingest pipeline (quality gate ->
       // watermark-bounded dedup -> per-source totals) over the documents
       // fixture. The ingest clock starts at 2024-01-01 00:00 UTC, not at
       // the epoch: the first batch's watermark is 0, so an event stamped
-      // 0 would be dropped as late, which the batch form keeps
-      memoryEntry("s_ingest_corpus", "complete",
-          "ingest stream produced no per-source rows")(run =>
-        StreamOps.ingestCorpus(watch("documents", run).withColumn("ingest_ts",
+      // 0 would be dropped as late, which the batch form keeps (the same
+      // clock as perfbench's Workloads.withIngestTs; keep the two equal)
+      memoryEntry("s_ingest_corpus", "documents", "complete",
+          "ingest stream produced no per-source rows")(src =>
+        StreamOps.ingestCorpus(src.withColumn("ingest_ts",
           timestamp_micros(col("doc_id") * 1000000L + 1704067200000000L)))),
       // the stateful HLL distinct sketch — one 2^p-int register array per
       // event_type in mapGroupsWithState (the batch-parity claim is
       // pinned in StreamingSpec; this times the stateful path itself)
-      memoryEntry("s_hll_users", "update", "hll stream produced no estimates")(
-        run => StreamOps.hllDistinct(watch("events", run), "event_type",
-          "user_id", 6)),
+      memoryEntry("s_hll_users", "events", "update",
+          "hll stream produced no estimates")(src =>
+        StreamOps.hllDistinct(src, "event_type", "user_id", 6)),
       // the exact-substring ingest LIFECYCLE (excise against the standing
       // gram index -> staged durable write -> sink -> novel-gram append),
       // driven as a real foreachBatch stream in two micro-batches so batch
@@ -364,7 +365,7 @@ object Bench {
         Seq(1L, 3L).foreach { r =>
           docs.where(pmod(col("doc_id"), lit(4)) === r)
             .coalesce(1).write.mode("append").parquet(watchDir.toString) }
-        StreamOps.substringDedupIngest(
+        () => StreamOps.substringDedupIngest(
             spark.readStream.schema(docs.schema)
               .option("maxFilesPerTrigger", 1).parquet(watchDir.toString),
             idxPath, checkpoint = run.dir.resolve("ckpt").toString) {

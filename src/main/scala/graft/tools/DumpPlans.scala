@@ -10,9 +10,9 @@ import graft.{GraftSession, SparkEntry}
   * aggregation, codegen spans). Run from the repo root after
   * plan-affecting changes:
   *   sbt "runMain graft.tools.DumpPlans"
-  * It reads SPARK_GRAFT_SF_DIR (default sf0.001) on SPARK_GRAFT_CPUS
-  * threads and shuffle partitions (default 4: partition counts show in
-  * the plans) and writes PLANS.md in the working directory. */
+  * It plans against SPARK_GRAFT_SF_DIR (default sf0.001) on 4 threads
+  * and 4 shuffle partitions, fixed because partition counts show in the
+  * plans, and writes PLANS.md in the working directory. */
 object DumpPlans {
   private val annotated = Seq(
     "q_filter_project" -> "Filters reach the parquet scan (PushedFilters); only 4 of 11 lineitem columns are read (ReadSchema).",
@@ -72,8 +72,7 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.create("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of the headline queries\n\n")

@@ -19,17 +19,12 @@ import org.apache.spark.sql.functions._
   * rather than collapsing onto ten copies of the same centroids.
   *
   * Everything is md5-keyed — rebuilding the slice bit-identically on
-  * any machine, the repo's determinism contract.
-  *
-  * `MakeSf1 [outDir]` replicates the sf0.1 tables at SPARK_GRAFT_SF_DIR
-  * on SPARK_GRAFT_CPUS threads; the 32 shuffle partitions are sized to
-  * the output, not the threads. */
+  * any machine, the repo's determinism contract. */
 object MakeSf1 {
   def main(args: Array[String]): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val out = args.headOption.getOrElse("/tmp/graft_sf1")
-    val spark = graft.GraftSession.create(s"local[$cpus]", 32)
+    val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
+    val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
+    val spark = graft.GraftSession.create("local[8]", 32)
     spark.sparkContext.setLogLevel("WARN")
 
     val reps = spark.range(0, 10).toDF("rep")

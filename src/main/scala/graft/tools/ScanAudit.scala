@@ -7,14 +7,12 @@ package graft.tools
   * re-materializes a corpus scan per consumer).
   *
   * `ScanAudit [--plan] [q_name ...]` audits the named queries (default:
-  * the batch headline) at SPARK_GRAFT_SF_DIR (default sf0.001) on
-  * SPARK_GRAFT_CPUS threads (default 8); `--plan` also prints each
-  * final plan. */
+  * the batch headline) at SPARK_GRAFT_SF_DIR (default sf0.001);
+  * `--plan` also prints each final plan. */
 object ScanAudit {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.create(s"local[$cpus]", cpus.toInt)
+    val spark = graft.GraftSession.create("local[8]", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val (flags, given) = args.toSeq.partition(_ == "--plan")
     val names = if (given.nonEmpty) given

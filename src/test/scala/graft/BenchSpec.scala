@@ -59,8 +59,8 @@ class BenchSpec extends SparkSpec {
     val trees = benchTrees()
     val e = Bench.streamEntry(spark, "s_failing_check", runs = 2) { run =>
       Files.copy(Paths.get(s"$sfDir/events.parquet"), run.dir.resolve("events.parquet"))
-      spark.readStream.schema(spark.read.parquet(s"$sfDir/events.parquet").schema)
-        .parquet(run.dir.toString)
+      val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+      () => spark.readStream.schema(schema).parquet(run.dir.toString)
         .writeStream.format("memory").queryName(run.view).outputMode("append")
     }(_ => require(false, "check failed on purpose"))
     assert(e.samples.isEmpty && !e.ok && e.med == -1.0)
