@@ -32,4 +32,14 @@ object Graft {
         spark.experimental.extraOptimizations :+ graft.plans.RollupRouting
     spark
   }
+
+  /** A whole-number `spark.graft.*` setting, `default` when unset; a
+    * value that is not `what` (e.g. "a byte count") fails naming the
+    * key. */
+  private[graft] def longSetting(spark: SparkSession, key: String,
+      default: Long, what: String): Long = {
+    val raw = spark.conf.get(key, default.toString)
+    raw.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be $what, got '$raw'"))
+  }
 }

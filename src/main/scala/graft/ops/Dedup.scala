@@ -1059,7 +1059,8 @@ object Dedup {
       .getAs[Int]("n_buckets")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverCrashedSwap(fs, path, "grams")
+    val (grams, stagedGrams, oldGrams) = swapNames(path, "grams")
+    DirCommit.recover(fs, grams, oldGrams)
     sweepStaleCompactionMarkers(fs, path)
     val claimed = claimGeneration(spark, path)
     // the in-flight marker spans rewrite AND swap: appends that claim
@@ -1082,7 +1083,7 @@ object Dedup {
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$path/_compacting/grams")
       validateClaim(spark, path, claimed, fs)
-      atomicSwapDir(fs, path, "grams")
+      DirCommit.swap(fs, grams, stagedGrams, oldGrams)
       swapped = true
       markGenerationDone(spark, path, claimed)
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/_compacting"), true)
@@ -1146,8 +1147,8 @@ object Dedup {
     readIndexMeta(spark, path) // fail with guidance on an unreadable meta
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverCrashedSwap(fs, path, "sets")
-    recoverCrashedSwap(fs, path, "buckets")
+    val subs = Seq("sets", "buckets").map(swapNames(path, _))
+    subs.foreach { case (live, _, old) => DirCommit.recover(fs, live, old) }
     sweepStaleCompactionMarkers(fs, path)
     val claimed = claimGeneration(spark, path)
     val marker = new org.apache.hadoop.fs.Path(s"$path/gen/c$claimed")
@@ -1166,9 +1167,10 @@ object Dedup {
         .repartition(targetFiles)
         .write.mode("overwrite").parquet(s"$path/_compacting/buckets")
       validateClaim(spark, path, claimed, fs)
-      atomicSwapDir(fs, path, "sets")
-      swapped = true
-      atomicSwapDir(fs, path, "buckets")
+      subs.foreach { case (live, staged, old) =>
+        DirCommit.swap(fs, live, staged, old)
+        swapped = true
+      }
       markGenerationDone(spark, path, claimed)
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/_compacting"), true)
       ()
@@ -1192,34 +1194,14 @@ object Dedup {
           "compaction when the index is quiet)")
     }
 
-  /** Swap `$path/_compacting/<sub>` over `$path/<sub>`, keeping the
-    * previous directory as `_old_<sub>` until the swap completes. */
-  private def atomicSwapDir(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, sub: String): Unit = {
-    val cur = new org.apache.hadoop.fs.Path(s"$path/$sub")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/_compacting/$sub")
-    val old = new org.apache.hadoop.fs.Path(s"$path/_old_$sub")
-    fs.delete(old, true)
-    if (!fs.rename(cur, old)) throw new IllegalStateException(
-      s"compaction: cannot move $cur aside")
-    if (!fs.rename(tmp, cur)) {
-      // report what actually happened: if something foreign recreated
-      // $cur between the renames, the restore ALSO fails and claiming
-      // "restored" would send the operator away from the real state
-      val restored = fs.rename(old, cur)
-      throw new IllegalStateException(
-        if (restored)
-          s"compaction: swap of $cur failed; previous contents restored"
-        else
-          s"compaction: swap of $cur failed AND the restore failed — " +
-            s"the previous contents remain at $old and $cur holds " +
-            "foreign files; remove the foreign directory and rerun " +
-            "(recoverCrashedSwap restores from the _old_ copy when " +
-            s"$cur is absent)")
-    }
-    fs.delete(old, true)
-    ()
-  }
+  /** `$path/<sub>`'s live, staged and retired names for the
+    * compaction's [[DirCommit.swap]]. */
+  private def swapNames(path: String, sub: String)
+      : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path,
+        org.apache.hadoop.fs.Path) =
+    (new org.apache.hadoop.fs.Path(s"$path/$sub"),
+      new org.apache.hadoop.fs.Path(s"$path/_compacting/$sub"),
+      new org.apache.hadoop.fs.Path(s"$path/_old_$sub"))
 
   /** A marker left by a CRASHED compaction blocks every append until
     * it clears; a new compaction starting is the single-writer
@@ -1233,16 +1215,6 @@ object Dedup {
         if (parseGenFile(st.getPath.getName).exists(_._1 == 'c'))
           fs.delete(st.getPath, false)
       }
-  }
-
-  /** A crash between [[atomicSwapDir]]'s two renames leaves the live
-    * directory missing and `_old_<sub>` holding the data — restore it
-    * before doing anything else. */
-  private def recoverCrashedSwap(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, sub: String): Unit = {
-    val cur = new org.apache.hadoop.fs.Path(s"$path/$sub")
-    val old = new org.apache.hadoop.fs.Path(s"$path/_old_$sub")
-    if (!fs.exists(cur) && fs.exists(old)) { fs.rename(old, cur); () }
   }
 
   /** SimHash near-duplicate pairs: 64-bit simhash per doc (custom codegen'd
@@ -1780,9 +1752,8 @@ object Dedup {
     * setting that is not a whole byte count fails naming the key. */
   private[graft] def corpusExceeds(corpus: DataFrame,
       confKey: String): Boolean = {
-    val raw = corpus.sparkSession.conf.get(confKey, (1L << 30).toString)
-    val minBytes = raw.trim.toLongOption.getOrElse(throw new
-      IllegalArgumentException(s"$confKey must be a byte count, got '$raw'"))
+    val minBytes = graft.Graft.longSetting(corpus.sparkSession, confKey,
+      1L << 30, "a byte count")
     corpus.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes
   }
 

@@ -231,51 +231,41 @@ object Retrieval {
     * fashion). */
   def appendToIndex(docs: DataFrame, path: String,
       idCol: String = "doc_id", textCol: String = "text",
-      nBuckets: Int = 64): Unit =
+      nBuckets: Int = 64): Unit = {
+    recoveredPostings(docs.sparkSession, path)
     writePostings(docs, path, idCol, textCol, nBuckets, "append")
+  }
 
   /** Compact an index that has accumulated small files from many
     * [[appendToIndex]] increments: rewrite the postings to a fresh
     * directory with one file per bucket partition, then swap
-    * directories. Never compacts in place — a crash mid-rewrite leaves
-    * the live index untouched (the [[graft.ops.Layout.compact]] rule).
-    * Answers are layout-invariant; only file counts change. */
+    * directories ([[DirCommit.swap]]). Never compacts in place — a
+    * crash mid-rewrite leaves the live index untouched (the
+    * [[graft.ops.Layout.compact]] rule), and a crash mid-swap is undone
+    * by the next append or compaction. Answers are layout-invariant;
+    * only file counts change. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val live = Paths.get(s"$path/postings")
-    val fresh = Paths.get(s"$path/postings.compact")
-    val retired0 = Paths.get(s"$path/postings.old")
-    // re-runnability: a prior compact that died mid-delete (or
-    // mid-rewrite) leaves postings.old / postings.compact behind, and
-    // the ATOMIC_MOVE below would then fail on every later compact —
-    // clear the scratch names first (the live index is never touched)
-    def deleteTree(p: java.nio.file.Path): Unit =
-      if (Files.exists(p)) {
-        val s = Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.toList.foreach(Files.delete)
-        } finally s.close()
-      }
-    deleteTree(retired0)
-    deleteTree(fresh)
+    val (fs, live, retired) = recoveredPostings(spark, path)
+    val staged = new org.apache.hadoop.fs.Path(s"$path/postings.compact")
     spark.read.parquet(live.toString)
       .repartition(col("bucket")).sortWithinPartitions(col("term"))
       .write.mode("overwrite").partitionBy("bucket")
-      .parquet(fresh.toString)
-    val retired = Paths.get(s"$path/postings.old")
-    Files.move(live, retired, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(fresh, live, StandardCopyOption.ATOMIC_MOVE)
-    // retired files delete only after the swap completes (stream closed
-    // — the r6 Files.walk handle-leak lesson)
-    val s = Files.walk(retired)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.toList.foreach(Files.delete)
-    } finally s.close()
+      .parquet(staged.toString)
+    DirCommit.swap(fs, live, staged, retired)
+  }
+
+  /** The postings directory and the name [[compactIndex]] retires it
+    * under, with a crashed swap undone first: its retired copy may be
+    * the only one. */
+  private def recoveredPostings(spark: org.apache.spark.sql.SparkSession,
+      path: String): (org.apache.hadoop.fs.FileSystem,
+        org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) = {
+    val live = new org.apache.hadoop.fs.Path(s"$path/postings")
+    val retired = new org.apache.hadoop.fs.Path(s"$path/postings.old")
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    DirCommit.recover(fs, live, retired)
+    (fs, live, retired)
   }
 
   /** Conjunctive (boolean AND) search against a [[buildIndex]] index:

@@ -117,76 +117,30 @@ object Rollup {
 
   // ------------------------------------------------------------------
   // Artifact versioning (VERDICT r13 #1). Every batch (re)build and
-  // refresh writes a FRESH `data_v<N+1>` directory next to the current
-  // one and commits it by creating the `_committed` marker LAST, so a
-  // crashed writer leaves an uncommitted directory that resolution
-  // ignores and the next writer deletes. Readers resolve the highest
-  // committed version; a routed query that already planned against
-  // data_v<N> keeps reading it while a refresh lands data_v<N+1> — the
-  // superseded version survives exactly one more write cycle as the
-  // in-flight readers' grace period, then GCs. (The r13 in-place swap
-  // degraded gracefully at PLAN time but yanked files out from under a
-  // query already EXECUTING; at hourly-refresh-plus-dashboard traffic
-  // that was the common case, not the corner.) The streaming sink
-  // commits versions the same way through a java.io twin
-  // ([[graft.streaming.StreamOps.currentLocalDataDir]], wider grace —
-  // folds are seconds apart, not hours). Versions are the ONE layout:
-  // an unversioned root is refused ([[refuseUnversioned]]), never read.
+  // refresh commits a FRESH `data_v<N+1>` version through
+  // [[DirCommit.commitVersion]]; readers resolve the highest committed
+  // one. A routed query that already planned against data_v<N> keeps
+  // reading it while a refresh lands data_v<N+1> — the superseded
+  // version survives one more write cycle (and [[GcMinAgeConf]]) as
+  // the in-flight readers' grace period, then GCs. (The r13 in-place
+  // swap degraded gracefully at PLAN time but yanked files out from
+  // under a query already EXECUTING; at hourly-refresh-plus-dashboard
+  // traffic that was the common case, not the corner.) The streaming
+  // sink ([[graft.streaming.StreamOps.routableRollupSink]]) commits
+  // through the same module with a wider grace — folds are seconds
+  // apart, not hours. An unversioned root is refused, never read.
   // ------------------------------------------------------------------
 
-  private[graft] val CommittedMarker = "_committed"
-
-  /** The version-directory naming scheme, shared with the streaming
-    * sink's java.io resolver so the two can never disagree on which
-    * directory is current. */
-  private[graft] val VersionDirPattern = "data_v([0-9]+)"
-  private val VersionRe = VersionDirPattern.r
-
-  /** The committed artifact versions at a rollup root, ascending. */
-  private[graft] def committedVersions(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case VersionRe(n) if st.isDirectory && fs.exists(
-            new org.apache.hadoop.fs.Path(st.getPath, CommittedMarker)) =>
-          Some(n.toLong)
-        case _ => None
-      }
-    }.sorted
-
-  /** Refuse a root with no committed version whose data sits in the
-    * unversioned in-place layout (`data`, or its `.old`/`.next` swap
-    * sides). `exists` probes a child name with the caller's filesystem
-    * — shared with the streaming sink's java.io resolver. */
-  private[graft] def refuseUnversioned(root: String,
-      exists: String => Boolean): Unit =
-    Seq("data", "data.old", "data.next").find(exists).foreach { d =>
-      throw new IllegalStateException(
-        s"rollup at $root holds the unversioned in-place layout (`$d`, " +
-          "no committed data_v<N>); expected committed " +
-          s"`data_v<N>/$CommittedMarker` directories — rebuild it at a " +
-          "fresh path")
-    }
-
-  /** The rollup's CURRENT data directory: the highest committed
-    * `data_v<N>` — `data_v0`, which never exists, when none is
-    * committed. One listing of the rollup ROOT (a handful of entries)
-    * — the router already analyzes the artifact per rewrite, so
+  /** The rollup's CURRENT data directory ([[DirCommit.currentVersion]]):
+    * the router already analyzes the artifact per rewrite, so
     * resolution adds a metadata call of strictly smaller order, never
-    * a data read. A root with no committed version but an unversioned
-    * in-place directory is refused ([[refuseUnversioned]]). */
+    * a data read. */
   private[graft] def currentDataPath(spark: SparkSession,
       rollupPath: String): String = {
     val root = new org.apache.hadoop.fs.Path(rollupPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = committedVersions(fs, root).lastOption.getOrElse {
-      refuseUnversioned(rollupPath,
-        d => fs.exists(new org.apache.hadoop.fs.Path(root, d)))
-      0L
-    }
-    new org.apache.hadoop.fs.Path(root, s"data_v$v").toString
+    DirCommit.currentVersion(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+      .toString
   }
 
   /** Refuse a BATCH write at an artifact the streaming sink maintains
@@ -241,7 +195,7 @@ object Rollup {
   }
 
   /** Minimum age (spark conf, milliseconds) a SUPERSEDED committed
-    * version must reach before [[gcVersions]] may delete it — the
+    * version must reach before the GC may delete it — the
     * time floor under the write-cycle-keyed grace (VERDICT r14 #1):
     * without it, a script rebuilding twice in quick succession (a
     * dim-set iteration, a per-partition backfill loop) GCs the version
@@ -253,66 +207,8 @@ object Rollup {
   private[graft] val GcMinAgeDefaultMs = 600000L
 
   private def gcMinAgeMs(spark: SparkSession): Long =
-    spark.conf.getOption(GcMinAgeConf).map(_.toLong)
-      .getOrElse(GcMinAgeDefaultMs)
-
-  /** Write one new committed version: `write` fills the fresh
-    * directory, the `_committed` marker lands last, then older versions
-    * GC. Returns the committed version's path. Single-writer contract
-    * (same as every artifact in this engine): two concurrent writers
-    * could pick the same next version number. */
-  private def commitVersion(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, minAgeMs: Long)(
-      write: org.apache.hadoop.fs.Path => Unit)
-      : org.apache.hadoop.fs.Path = {
-    val next = committedVersions(fs, root).lastOption.getOrElse(0L) + 1L
-    val target = new org.apache.hadoop.fs.Path(root, s"data_v$next")
-    fs.delete(target, true) // a crashed writer's uncommitted leftover
-    write(target)
-    fs.create(new org.apache.hadoop.fs.Path(target, CommittedMarker))
-      .close()
-    gcVersions(fs, root, next, minAgeMs)
-    target
-  }
-
-  /** Keep the just-committed version, the one it superseded (the
-    * one-write-cycle reader grace), and any older COMMITTED version
-    * whose commit marker is younger than `minAgeMs` (the time floor —
-    * VERDICT r14 #1: back-to-back rebuilds must not sweep the files a
-    * query planned seconds ago); everything else — older-and-aged
-    * versions, uncommitted crashed-writer leftovers — goes. A reader
-    * that outlives both bounds can still lose its files (documented;
-    * at hourly-refresh pitch that is a query running for hours).
-    *
-    * Ages are measured against the JUST-COMMITTED version's marker
-    * mtime, not the driver's clock (review finding, r15): both stamps
-    * come from the same storage clock, so driver/storage skew can
-    * neither erode nor inflate the floor. Fallback to the local clock
-    * only if that marker cannot be statted. */
-  private def gcVersions(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, current: Long,
-      minAgeMs: Long): Unit = {
-    val now = scala.util.Try(fs.getFileStatus(new org.apache.hadoop.fs.Path(
-        root, s"data_v$current/$CommittedMarker")).getModificationTime)
-      .getOrElse(System.currentTimeMillis())
-    def aged(marker: org.apache.hadoop.fs.Path): Boolean =
-      scala.util.Try(
-        now - fs.getFileStatus(marker).getModificationTime >= minAgeMs)
-        .getOrElse(true) // unstattable marker: no age claim to honor
-    fs.listStatus(root).foreach { st =>
-      st.getPath.getName match {
-        case VersionRe(n) =>
-          val v = n.toLong
-          val marker =
-            new org.apache.hadoop.fs.Path(st.getPath, CommittedMarker)
-          val committed = fs.exists(marker)
-          if ((v < current - 1L && (!committed || aged(marker))) ||
-              (v != current && !committed))
-            fs.delete(st.getPath, true)
-        case _ => ()
-      }
-    }
-  }
+    graft.Graft.longSetting(spark, GcMinAgeConf, GcMinAgeDefaultMs,
+      "a whole number of milliseconds")
 
   /** Everything the router needs per registered base table — PLAIN
     * DATA only. Holding an analyzed template relation here would pin
@@ -479,7 +375,7 @@ object Rollup {
     // a rebuild at a standing path commits the NEXT version — never an
     // in-place overwrite, so a routed query planned against the
     // current version finishes on intact files (VERDICT r13 #1)
-    commitVersion(hfs, root, gcMinAgeMs(spark)) { target =>
+    DirCommit.commitVersion(hfs, root, 1L, gcMinAgeMs(spark)) { target =>
       // building=true makes RollupRouting skip this plan: the write
       // action plans synchronously on this thread, and the build must
       // always scan the BASE — routing a rebuild through the old
@@ -561,7 +457,7 @@ object Rollup {
     * refuse with that guidance.
     *
     * Crash and live-reader safety is the VERSIONED-artifact contract
-    * (see [[CommittedMarker]]): the merged data and the updated
+    * ([[DirCommit.commitVersion]]): the merged data and the updated
     * covered record land in a fresh `data_v<N+1>` whose `_committed`
     * marker is created LAST — a reader resolves the old version or the
     * new, never a mix, and a routed query already EXECUTING against
@@ -630,7 +526,7 @@ object Rollup {
       // version; the current one stays intact for any routed query
       // already executing against it, and a crash before the marker
       // leaves only an invisible uncommitted directory
-      commitVersion(fs, root, gcMinAgeMs(spark)) { target =>
+      DirCommit.commitVersion(fs, root, 1L, gcMinAgeMs(spark)) { target =>
         building.withValue(true) {
           old.unionByName(delta).groupBy(dims.map(col): _*)
             .agg(merge.head, merge.tail: _*)
@@ -659,7 +555,7 @@ object Rollup {
     * QUERY (no cached relation — see [[RollupInfo]]), so a rollup
     * refreshed or rebuilt at the same path is picked up by the next
     * query, while queries already executing finish on the previous
-    * version's intact files (see [[CommittedMarker]]).
+    * version's intact files (see [[DirCommit.CommittedMarker]]).
     *
     * Registering a SECOND rollup (different path) over the same base
     * adds it; the router tries most-recently-registered first and

@@ -98,8 +98,8 @@ import graft.ops.Rollup
   * (VERDICT r14 #3 — register-time size, ties keep the r13
   * most-recently-registered-first order), and the artifact's CURRENT
   * data version is resolved per rewrite (see
-  * [[Rollup.CommittedMarker]]), so a concurrent refresh never yanks a
-  * planned query's files.
+  * [[graft.ops.DirCommit.currentVersion]]), so a concurrent refresh
+  * never yanks a planned query's files.
   *
   * Freshness (judge finding, r12): a matched base relation's
   * [[org.apache.spark.sql.execution.datasources.FileIndex]] was

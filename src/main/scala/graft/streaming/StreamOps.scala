@@ -1,9 +1,11 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.ops.DirCommit
 
 /** Structured Streaming operators over the `events` schema
   * (event_id, ts, user_id, event_type, value, props).
@@ -284,70 +286,36 @@ object StreamOps extends org.apache.spark.internal.Logging {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val dir = new java.io.File(path)
-        recoverSwap(dir)
+        val (fs, live) = fsPath(spark, path)
+        val (staged, retired) = (live.suffix(".next"), live.suffix(".old"))
+        DirCommit.recover(fs, live, retired)
         val base =
-          if (dir.exists() && dir.list() != null && dir.list().nonEmpty)
+          if (fs.exists(live) && fs.listStatus(live).nonEmpty)
             spark.read.parquet(path)
           else batch.select(payloadCols.map(col).toIndexedSeq: _*).limit(0)
         val merged = graft.ops.Cdc.applyChanges(base, batch,
           keyCols, seqCols, opCol)
         // swap: the reader sees the old snapshot or the new, never a
         // mix (no fence needed — applyChanges is idempotent per batch)
-        swapInto(dir)(next =>
-          merged.write.mode("overwrite").parquet(next.getPath))
+        merged.write.mode("overwrite").parquet(staged.toString)
+        DirCommit.swap(fs, live, staged, retired)
       }
   }
 
-  private def delete(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(delete)
-    if (f.exists() && !f.delete())
-      throw new java.io.IOException(s"cdcSink: cannot delete $f")
-  }
-
-  /** Restore a snapshot directory whose atomic swap crashed between
-    * its two renames (review finding, r13): that window leaves
-    * `<target>.old` holding the ONLY copy of the accumulated state —
-    * without this, the next fold would read an absent directory and
-    * silently restart the snapshot from one batch. Call before
-    * reading current state; the interrupted batch then re-folds onto
-    * the restored state (its id is above the restored fence). */
-  private def recoverSwap(target: java.io.File): Unit = {
-    val tmp = new java.io.File(target.getPath + ".old")
-    if (!target.exists() && tmp.exists() && !tmp.renameTo(target))
-      throw new java.io.IOException(
-        s"cannot recover crashed snapshot swap at $target")
-  }
-
-  /** The one atomic directory replacement the LOCAL snapshot sinks
-    * share (cdc MERGE, rollup, routable rollup — review finding, r13:
-    * three hand-rolled copies drifted): `write` materializes the next
-    * state into `<target>.next`, then two renames swap it in — a
-    * reader sees the old state or the new, never a mix. Pair with
-    * [[recoverSwap]] at the top of each fold. Kept java.io on purpose
-    * — these sinks' fences are java.nio local files by contract, and
-    * resolving caller paths through the default Hadoop FS would
-    * silently retarget them on HDFS-default clusters. Persisted rollup
-    * artifacts never swap in place: they commit versions
-    * ([[graft.ops.Rollup.CommittedMarker]]). */
-  private def swapInto(target: java.io.File)
-      (write: java.io.File => Unit): Unit = {
-    val next = new java.io.File(target.getPath + ".next")
-    if (next.exists()) delete(next)
-    write(next)
-    val tmp = new java.io.File(target.getPath + ".old")
-    if (tmp.exists()) delete(tmp)
-    if (target.exists() && !target.renameTo(tmp))
-      throw new java.io.IOException(s"snapshot swap: cannot stage $target")
-    if (!next.renameTo(target)) {
-      // leave the reader a present directory, not a dangling name
-      val restored = tmp.exists() && tmp.renameTo(target)
-      throw new java.io.IOException(s"snapshot swap: cannot swap $next" +
-        (if (restored) " (previous state restored)"
-         else s" and could not restore $tmp — restore it manually"))
-    }
-    delete(tmp)
+  /** An artifact path and its own Hadoop filesystem — the one every
+    * snapshot sink writes data, fences and markers through, so a `file:`
+    * or `hdfs:` path resolves the same way for all three. The in-place
+    * snapshot sinks swap `<path>.next` in over `<path>` and retire the
+    * previous state as `<path>.old` ([[DirCommit.swap]]); each fold
+    * first undoes a swap that crashed between its renames
+    * ([[DirCommit.recover]]), so the interrupted batch re-folds onto the
+    * restored state (its id is above the restored fence). Persisted
+    * rollup artifacts never swap in place: they commit versions
+    * ([[DirCommit.commitVersion]]). */
+  private def fsPath(spark: org.apache.spark.sql.SparkSession,
+      path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
   /** Streaming materialized rollup with EXACTLY-ONCE batch folding:
@@ -385,14 +353,13 @@ object StreamOps extends org.apache.spark.internal.Logging {
   /** Parse a snapshot fence, `<batchId>|<runId>` (the run id is empty
     * for runId-less direct calls: `<batchId>|`). A None return means no
     * fence file; any other layout is refused by path. */
-  private def readFence(dir: java.io.File): Option[(Long, String)] = {
-    val fence = new java.io.File(dir, "_last_batch_id")
-    if (!fence.exists()) None
-    else {
-      val text = java.nio.file.Files.readString(fence.toPath).trim
+  private def readFence(fs: FileSystem, dir: Path)
+      : Option[(Long, String)] = {
+    val fence = new Path(dir, "_last_batch_id")
+    DirCommit.readText(fs, fence).map { text =>
       text.split("\\|", 2) match {
         case Array(id, run) if id.nonEmpty && id.forall(_.isDigit) =>
-          Some((id.toLong, run))
+          (id.toLong, run)
         case _ => throw new IllegalStateException(
           s"snapshot fence at $fence holds '$text'; expected the " +
             "`<batchId>|<runId>` layout — rebuild the artifact at a " +
@@ -410,8 +377,8 @@ object StreamOps extends org.apache.spark.internal.Logging {
     * stream (or no stream) built what is already there. The run ids
     * must match exactly: a fence without one admits only runId-less
     * direct calls. */
-  private def fenceAdmission(dir: java.io.File, path: String,
-      runId: String): Long = readFence(dir) match {
+  private def fenceAdmission(fs: FileSystem, dir: Path, path: String,
+      runId: String): Long = readFence(fs, dir) match {
     case Some((last, run)) =>
       if (run != runId) throw new IllegalStateException(
         s"rollup snapshot at $path was maintained by stream run '$run' " +
@@ -421,8 +388,7 @@ object StreamOps extends org.apache.spark.internal.Logging {
           "at a fresh path (or delete the artifact to rebuild)")
       last
     case None =>
-      val files = dir.list()
-      if (dir.exists() && files != null && files.nonEmpty)
+      if (fs.exists(dir) && fs.listStatus(dir).nonEmpty)
         throw new IllegalStateException(
           s"directory at $path already holds data but no snapshot " +
             "fence — it was not built by this sink (saveRollup " +
@@ -438,9 +404,10 @@ object StreamOps extends org.apache.spark.internal.Logging {
   def applyRollupBatch(path: String, batch: DataFrame, batchId: Long,
       groupCol: String, valueCol: String, runId: String = ""): Boolean = {
     val spark = batch.sparkSession
-    val dir = new java.io.File(path)
-    recoverSwap(dir)
-    val lastApplied = fenceAdmission(dir, path, runId)
+    val (fs, live) = fsPath(spark, path)
+    val (staged, retired) = (live.suffix(".next"), live.suffix(".old"))
+    DirCommit.recover(fs, live, retired)
+    val lastApplied = fenceAdmission(fs, live, path, runId)
     if (batchId <= lastApplied) return false
     val dec = org.apache.spark.sql.types.DecimalType(18, 6)
     val delta = batch.groupBy(col(groupCol))
@@ -454,12 +421,10 @@ object StreamOps extends org.apache.spark.internal.Logging {
         sum(col("total").cast(dec)).cast(dec).as("total"))
     // the fence rides inside the staged directory: one rename commits
     // data + fence atomically
-    swapInto(dir) { next =>
-      merged.write.mode("overwrite").parquet(next.getPath)
-      java.nio.file.Files.writeString(
-        new java.io.File(next, "_last_batch_id").toPath,
-        s"$batchId|$runId")
-    }
+    merged.write.mode("overwrite").parquet(staged.toString)
+    DirCommit.writeText(fs, new Path(staged, "_last_batch_id"),
+      s"$batchId|$runId")
+    DirCommit.swap(fs, live, staged, retired)
     true
   }
 
@@ -602,34 +567,6 @@ object StreamOps extends org.apache.spark.internal.Logging {
       Nil
     }
 
-  /** java.io twin of [[graft.ops.Rollup.currentDataPath]]'s version
-    * resolution (these sinks' fences and markers are LOCAL files by
-    * contract — see [[swapInto]]): the highest `data_v<N>` under the
-    * artifact root carrying the commit marker, as a version number
-    * (0 = none committed). The naming scheme is the SHARED
-    * [[graft.ops.Rollup.VersionDirPattern]] constant, so this resolver
-    * and the Hadoop-FS one can never disagree on which directory is
-    * current. */
-  private val LocalVersionName = graft.ops.Rollup.VersionDirPattern.r
-
-  private[graft] def currentLocalVersion(root: java.io.File): Long =
-    Option(root.list()).iterator.flatten.flatMap {
-      case LocalVersionName(n) if new java.io.File(root,
-          s"data_v$n/${graft.ops.Rollup.CommittedMarker}").exists() =>
-        Some(n.toLong)
-      case _ => None
-    }.maxOption.getOrElse(0L)
-
-  /** The routable artifact's CURRENT data directory under `path`
-    * (`data_v0`, which never exists, when none is committed); an
-    * unversioned root is refused ([[graft.ops.Rollup.refuseUnversioned]]). */
-  private[graft] def currentLocalDataDir(path: String): java.io.File = {
-    val v = currentLocalVersion(new java.io.File(path))
-    if (v == 0L) graft.ops.Rollup.refuseUnversioned(path,
-      d => new java.io.File(path, d).exists())
-    new java.io.File(path, s"data_v$v")
-  }
-
   /** How many SUPERSEDED versions a streaming artifact keeps as reader
     * grace. Folds land seconds apart (not hours like a batch refresh),
     * so one cycle of grace would protect almost nothing — a routed
@@ -641,20 +578,6 @@ object StreamOps extends org.apache.spark.internal.Logging {
     * can STILL lose its files — a stated bound (an in-place swap
     * gives ZERO grace on every fold). */
   private[graft] val StreamRollupGraceFolds = 4L
-
-  /** Keep the just-committed version and the [[StreamRollupGraceFolds]]
-    * it superseded; sweep older and uncommitted versions. */
-  private def gcLocalVersions(root: java.io.File, current: Long): Unit =
-    Option(root.list()).iterator.flatten.foreach {
-      case name @ LocalVersionName(n) =>
-        val v = n.toLong
-        val committed = new java.io.File(root,
-          s"$name/${graft.ops.Rollup.CommittedMarker}").exists()
-        if (v < current - StreamRollupGraceFolds ||
-            (v != current && !committed))
-          delete(new java.io.File(root, name))
-      case _ => ()
-    }
 
   /** The processed-files snapshot [[applyRoutableRollupBatch]] has
     * accumulated so far — rides inside the artifact's current data
@@ -670,13 +593,12 @@ object StreamOps extends org.apache.spark.internal.Logging {
   private[graft] def accumulatedBaseSnapshot(
       spark: org.apache.spark.sql.SparkSession, path: String)
       : Option[graft.ops.Rollup.BaseSnapshot] = {
-    val f = new java.io.File(currentLocalDataDir(path), "_base_snapshot")
-    if (!f.exists()) None
-    else {
-      val text = java.nio.file.Files.readString(f.toPath).trim
+    val (fs, f) = fsPath(spark,
+      s"${graft.ops.Rollup.currentDataPath(spark, path)}/_base_snapshot")
+    DirCommit.readText(fs, f).map { text =>
       text.split('|') match {
-        case Array("v2", c, b, h) => Some(graft.ops.Rollup.BaseSnapshot(
-          c.toInt, b.toLong, h.toLong))
+        case Array("v2", c, b, h) => graft.ops.Rollup.BaseSnapshot(
+          c.toInt, b.toLong, h.toLong)
         case _ => throw new IllegalStateException(
           s"processed-files snapshot at $f holds '$text'; expected the " +
             "`v2|<count>|<bytes>|<hash>` layout — rebuild the rollup at " +
@@ -694,13 +616,13 @@ object StreamOps extends org.apache.spark.internal.Logging {
       inputFiles: Seq[String] = Seq.empty, runId: String = ""): Boolean = {
     import graft.ops.Rollup
     val spark = batch.sparkSession
-    val root = new java.io.File(path)
+    val (fs, root) = fsPath(spark, path)
     // current state = the highest committed version. The fence rides
     // INSIDE it, so admission — including the foreign-artifact refusal:
     // a saveRollup-built version dir has data but no fence — checks
     // whatever directory actually holds the standing state
-    val curDir = currentLocalDataDir(path)
-    val lastApplied = fenceAdmission(curDir, curDir.getPath, runId)
+    val curDir = Rollup.currentDataPath(spark, path)
+    val lastApplied = fenceAdmission(fs, new Path(curDir), curDir, runId)
     if (batchId <= lastApplied) return false
     val hasCurrent = lastApplied >= 0L
     // pinned, fold-stable storage type per measure (sum(decimal(p,s))
@@ -730,7 +652,7 @@ object StreamOps extends org.apache.spark.internal.Logging {
     val delta = batch.groupBy(dims.map(col): _*)
       .agg(deltaAggs.head, deltaAggs.tail: _*)
     val current =
-      if (hasCurrent) spark.read.parquet(curDir.getPath)
+      if (hasCurrent) spark.read.parquet(curDir)
       else delta.limit(0)
     val merged = current.unionByName(delta)
       .groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
@@ -766,26 +688,22 @@ object StreamOps extends org.apache.spark.internal.Logging {
     // too; the in-place swap yanked files under live routed readers on
     // EVERY fold. The bound is stated, not absolute: a query slower
     // than grace x trigger-interval can still lose its files
-    val next = currentLocalVersion(root) + 1L
-    val target = new java.io.File(root, s"data_v$next")
-    if (target.exists()) delete(target) // crashed uncommitted leftover
-    merged.write.mode("overwrite").parquet(target.getPath)
-    java.nio.file.Files.writeString(
-      new java.io.File(target, "_last_batch_id").toPath,
-      s"$batchId|$runId")
-    java.nio.file.Files.writeString(
-      new java.io.File(target, "_base_snapshot").toPath,
-      s"v2|$accC|$accB|$accH")
-    java.nio.file.Files.createFile(
-      new java.io.File(target, Rollup.CommittedMarker).toPath)
-    gcLocalVersions(root, next)
+    DirCommit.commitVersion(fs, root, StreamRollupGraceFolds, 0L) {
+      target =>
+        merged.write.mode("overwrite").parquet(target.toString)
+        DirCommit.writeText(fs, new Path(target, "_last_batch_id"),
+          s"$batchId|$runId")
+        DirCommit.writeText(fs, new Path(target, "_base_snapshot"),
+          s"v2|$accC|$accB|$accH")
+    }
     // meta is immutable Rollup metadata; written once, after the first
-    // data swap so register's fail-fast read never sees meta-without-data
-    val metaDir = new java.io.File(s"$path/meta")
-    if (!metaDir.exists()) {
+    // data commit so register's fail-fast read never sees
+    // meta-without-data
+    val meta = new Path(root, "meta")
+    if (!fs.exists(meta)) {
       import spark.implicits._
       Seq((dims, measures)).toDF("dims", "measures")
-        .coalesce(1).write.mode("overwrite").parquet(metaDir.getPath)
+        .coalesce(1).write.mode("overwrite").parquet(meta.toString)
     }
     true
   }

@@ -929,6 +929,54 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.indexGeneration(spark, tmp) == genBefore + 2)
   }
 
+  test("compactGramIndex restores a swap that crashed between its " +
+      "renames; a restore that cannot succeed fails naming the path") {
+    import java.nio.file.{Files, Paths}
+    val corpus = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again today"),
+      (2L, "pack my box with five dozen liquor jugs right now ok"))
+      .toDF("doc_id", "text")
+    val tmp = Files.createTempDirectory("graft-gramidx-crash").toString
+    Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 8)
+    Dedup.appendToGramIndex(Seq((100L, "novel passage with words " +
+      "wa wb wc wd")).toDF("doc_id", "text"), tmp, "doc_id", "text")
+    val probe = Seq((999L, "the quick brown fox jumps over the lazy " +
+      "dog again today plus fresh tail words")).toDF("doc_id", "text")
+    def excise() = Dedup.exciseAgainstIndex(probe, tmp, "doc_id", "text",
+      minLen = 8).as[(Long, String, Long, Long)].collect().toSeq
+    def rows() = spark.read.parquet(s"$tmp/grams")
+      .select("h", "bucket").as[(Long, Long)].collect().sorted.toSeq
+    val (exciseBefore, rowsBefore) = (excise(), rows())
+    // the crash window: the rewrite is staged, the live index moved
+    // aside, and the second rename never ran
+    def crash(): Unit = {
+      Files.move(Paths.get(s"$tmp/grams"), Paths.get(s"$tmp/_old_grams"))
+      spark.read.parquet(s"$tmp/_old_grams").write.partitionBy("bucket")
+        .mode("overwrite").parquet(s"$tmp/_compacting/grams")
+    }
+    crash()
+    Dedup.compactGramIndex(spark, tmp)
+    assert(!Files.exists(Paths.get(s"$tmp/_old_grams")) &&
+      !Files.exists(Paths.get(s"$tmp/_compacting")))
+    assert(rows() == rowsBefore, "the restored index lost grams")
+    assert(excise() == exciseBefore, "probe diverged after the restore")
+    // a filesystem that refuses the restoring rename: the error names
+    // both paths and the only copy stays where it is
+    crash()
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val noRename = new org.apache.hadoop.fs.FilterFileSystem(
+        org.apache.hadoop.fs.FileSystem.getLocal(hconf)) {
+      override def rename(src: org.apache.hadoop.fs.Path,
+          dst: org.apache.hadoop.fs.Path): Boolean = false
+    }
+    val e = intercept[java.io.IOException](graft.ops.DirCommit.recover(
+      noRename, new org.apache.hadoop.fs.Path(s"$tmp/grams"),
+      new org.apache.hadoop.fs.Path(s"$tmp/_old_grams")))
+    assert(e.getMessage.contains(s"$tmp/grams ") &&
+      e.getMessage.contains(s"$tmp/_old_grams"), e.getMessage)
+    assert(Files.exists(Paths.get(s"$tmp/_old_grams")))
+  }
+
   test("compactSignatureIndex: sets/buckets content preserved, torn-" +
       "write duplicate bucket rows swept, probes unchanged") {
     import scala.jdk.CollectionConverters._
@@ -1027,7 +1075,7 @@ class DedupSpec extends SparkSpec {
 
   test("a POST-swap compaction failure keeps the claim and reports " +
       "the commit (ADVICE r13)") {
-    // failure injected AFTER atomicSwapDir: gen/d2 pre-exists as a
+    // failure injected AFTER the directory swap: gen/d2 pre-exists as a
     // non-empty DIRECTORY, so markGenerationDone's file create throws.
     // The old catch released g2/d2 on any Throwable — reporting a
     // committed compaction as failed and regressing the generation
@@ -1136,7 +1184,7 @@ class DedupSpec extends SparkSpec {
       "a refused index claims no generation")
   }
 
-  test("a malformed byte-count gate setting fails naming the key") {
+  test("a malformed spark.graft.* setting fails naming the key") {
     val keys = Seq("spark.graft.confirm.explodeMinBytes",
       "spark.graft.jaccard.sharedTokExchangeMinBytes")
     for (key <- keys) {
@@ -1160,5 +1208,17 @@ class DedupSpec extends SparkSpec {
         Dedup.jaccardPairs(docs, "doc_id", "text", threshold = 0.5))
       assert(e.getMessage.contains(keys(1)), e.getMessage)
     } finally spark.conf.unset(keys(1))
+    // the rollup GC floor fails the same way, before anything is written
+    val rp = java.nio.file.Files.createTempDirectory("graft-gc-conf")
+      .resolve("r").toString
+    spark.conf.set(graft.ops.Rollup.GcMinAgeConf, "10m")
+    try {
+      val e = intercept[IllegalArgumentException](
+        graft.ops.Rollup.saveRollup(docs, rp, Seq("doc_id")))
+      assert(e.getMessage.contains(graft.ops.Rollup.GcMinAgeConf) &&
+        e.getMessage.contains("milliseconds") &&
+        e.getMessage.contains("'10m'"), e.getMessage)
+    } finally spark.conf.unset(graft.ops.Rollup.GcMinAgeConf)
+    assert(!new java.io.File(rp).exists(), "a refused setting writes nothing")
   }
 }

@@ -256,6 +256,34 @@ class RetrievalSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$tmp/postings.old")))
   }
 
+  test("compactIndex and appendToIndex restore a swap that crashed " +
+      "between its renames") {
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("graft-invidx-crash").toString
+    Retrieval.buildIndex(Seq((1L, "alpha beta"), (2L, "beta gamma"))
+      .toDF("doc_id", "text"), tmp, nBuckets = 2)
+    Retrieval.appendToIndex(Seq((3L, "alpha gamma")).toDF("doc_id", "text"),
+      tmp, nBuckets = 2)
+    val queries = Map(1L -> "alpha", 2L -> "beta gamma")
+    def search() = Retrieval.searchIndex(spark, tmp, queries, nBuckets = 2)
+      .as[(Long, Long)].collect().toSet
+    val before = search()
+    // the crash window: the rewrite is staged, the live postings moved
+    // aside as the only copy, and the second rename never ran
+    def crash() = Files.move(Paths.get(s"$tmp/postings"),
+      Paths.get(s"$tmp/postings.old"))
+    crash()
+    spark.read.parquet(s"$tmp/postings.old").write.partitionBy("bucket")
+      .parquet(s"$tmp/postings.compact")
+    Retrieval.compactIndex(spark, tmp)
+    assert(search() == before)
+    assert(!Files.exists(Paths.get(s"$tmp/postings.old")))
+    crash()
+    Retrieval.appendToIndex(Seq((4L, "alpha")).toDF("doc_id", "text"),
+      tmp, nBuckets = 2)
+    assert(search() == before + ((1L, 4L)))
+  }
+
   test("rrfFuse: hand-computed fusion, missing-doc convention, tie-break") {
     // list A ranks docs 1,2,3; list B ranks 2,1,9 — doc 2 is the
     // consensus pick: 1M/(60+2)+1M/(60+1) = 16129+16393 = 32522

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Rollup
+import graft.ops.{DirCommit, Rollup}
 
 /** Materialized-rollup routing: the saved summary must answer every
   * in-surface aggregation EXACTLY as the base scan would (including
@@ -563,7 +563,7 @@ class RollupSpec extends SparkSpec {
     Rollup.saveRollup(spark.read.parquet(bp), rpOld, Seq("lang"), Seq("n"))
     assert(new java.io.File(s"$rpOld/data_v1")
       .renameTo(new java.io.File(s"$rpOld/data.old")))
-    assert(new java.io.File(s"$rpOld/data.old/${Rollup.CommittedMarker}")
+    assert(new java.io.File(s"$rpOld/data.old/${DirCommit.CommittedMarker}")
       .delete())
     val eOld = intercept[IllegalStateException](
       Rollup.refresh(spark, bp, rpOld, register = false))
@@ -655,7 +655,7 @@ class RollupSpec extends SparkSpec {
       .coalesce(1).write.parquet(bp)
     val rp = dir.resolve("roll").toString
     Rollup.saveRollup(spark.read.parquet(bp), rp, Seq("lang"), Seq("n"))
-    assert(new java.io.File(s"$rp/data_v1/${Rollup.CommittedMarker}")
+    assert(new java.io.File(s"$rp/data_v1/${DirCommit.CommittedMarker}")
       .exists(), "saveRollup must commit data_v1 with its marker")
     // floor OFF: this test pins the write-cycle bound itself; the time
     // floor (r15) gets its own test below
@@ -670,7 +670,7 @@ class RollupSpec extends SparkSpec {
       Seq(("fr", 40L)).toDF("lang", "n").coalesce(1)
         .write.mode("append").parquet(bp)
       assert(Rollup.refresh(spark, bp, rp) == 1L)
-      assert(new java.io.File(s"$rp/data_v2/${Rollup.CommittedMarker}")
+      assert(new java.io.File(s"$rp/data_v2/${DirCommit.CommittedMarker}")
         .exists(), "refresh must commit data_v2")
       assert(new java.io.File(s"$rp/data_v1").exists(),
         "superseded version must survive one write cycle as grace")
@@ -854,7 +854,7 @@ class RollupSpec extends SparkSpec {
           Seq("n"))
         assert(new java.io.File(s"$rpOld/data_v1")
           .renameTo(new java.io.File(s"$rpOld/$name")))
-        assert(new java.io.File(s"$rpOld/$name/${Rollup.CommittedMarker}")
+        assert(new java.io.File(s"$rpOld/$name/${DirCommit.CommittedMarker}")
           .delete())
         val refusals = Seq(
           intercept[IllegalStateException](Rollup.currentDataPath(spark,

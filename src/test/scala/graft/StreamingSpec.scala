@@ -14,6 +14,10 @@ class StreamingSpec extends SparkSpec {
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
 
+  /** A routable rollup's current version directory. */
+  private def currentDir(path: String) =
+    new java.io.File(graft.ops.Rollup.currentDataPath(spark, path))
+
   private val evs = Seq(
     Ev(1, ts(0), 1, "click", 1.0),
     Ev(2, ts(5), 1, "click", 2.0),
@@ -529,6 +533,52 @@ class StreamingSpec extends SparkSpec {
       Seq(Ev(9, ts(59), 9, "click", 10.0)).toDF(), 99L,
       "event_type", "value", runId))
     assert(snapshot() != before)
+  }
+
+  test("the snapshot sinks commit through the path's own filesystem: " +
+      "file: URIs fold, read back and fence") {
+    implicit val sql = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("graft-uri-sinks")
+    def uri(name: String) = root.resolve(name).toUri.toString
+    assert(uri("t").startsWith("file:/"))
+    // cdcSink: the second fold merges onto the first one's snapshot
+    val table = uri("cdc")
+    val mem = MemoryStream[(Long, String, String, Long)]
+    val q = StreamOps.cdcSink(mem.toDF().toDF("k", "v", "op", "seq"),
+      table, Seq("k"), Seq("seq"), "op", root.resolve("ckpt").toString)
+      .start()
+    def cdc() = spark.read.parquet(table).select("k", "v")
+      .as[(Long, String)].collect().toSet
+    try {
+      mem.addData((1L, "a1", "U", 1L), (2L, "b1", "U", 2L))
+      q.processAllAvailable()
+      assert(cdc() == Set((1L, "a1"), (2L, "b1")))
+      mem.addData((1L, "a2", "U", 3L), (2L, "x", "D", 4L))
+      q.processAllAvailable()
+      assert(cdc() == Set((1L, "a2")))
+    } finally q.stop()
+    // applyRollupBatch: two folds accumulate; a replayed id is fenced
+    val agg = uri("agg")
+    def fold(b: Seq[Ev], id: Long) = StreamOps.applyRollupBatch(agg,
+      b.toDF(), id, "event_type", "value", runId = "r")
+    assert(fold(evs.take(2), 0L) && fold(evs.drop(2), 1L))
+    assert(!fold(evs.drop(2), 1L), "replayed batch id must be fenced out")
+    assert(spark.read.parquet(agg).select("event_type", "n")
+      .as[(String, Long)].collect().toSet == Set(("click", 3L), ("view", 1L)))
+    // applyRoutableRollupBatch: the same, over committed versions
+    val routable = uri("routable")
+    def foldR(rows: Seq[(String, Long)], id: Long) =
+      StreamOps.applyRoutableRollupBatch(routable, rows.toDF("lang", "n"),
+        id, Seq("lang"), Seq("n"), runId = "r")
+    assert(foldR(Seq(("en", 1L), ("de", 2L)), 0L) && foldR(Seq(("en", 3L)), 1L))
+    assert(!foldR(Seq(("en", 3L)), 1L), "replayed batch id must be fenced out")
+    val cur = graft.ops.Rollup.currentDataPath(spark, routable)
+    assert(cur.endsWith("data_v2"), cur)
+    val en = spark.read.parquet(cur).where(col("lang") === "en").head()
+    assert(en.getAs[Long](graft.ops.Rollup.cntCol) == 2L &&
+      en.getAs[Long](graft.ops.Rollup.sumCol("n")) == 4L)
+    // nothing landed under a relative `file:` directory
+    assert(!new java.io.File("file:").exists())
   }
 
   test("streaming transforms work identically on batch frames") {
@@ -1106,7 +1156,7 @@ class StreamingSpec extends SparkSpec {
       Seq("lang"), Seq("n"), runId = "r"))
     assert(!junk.exists(), "uncommitted version must be swept by the fold")
     val en = spark.read
-      .parquet(StreamOps.currentLocalDataDir(p).getPath)
+      .parquet(currentDir(p).getPath)
       .where(col("lang") === "en").head()
     assert(en.getAs[Long](graft.ops.Rollup.cntCol) == 2L,
       "the fold must keep batch 0's history")
@@ -1122,7 +1172,7 @@ class StreamingSpec extends SparkSpec {
       assert(new java.io.File(s"$q/data_v1")
         .renameTo(new java.io.File(s"$q/$name")))
       assert(new java.io.File(
-        s"$q/$name/${graft.ops.Rollup.CommittedMarker}").delete())
+        s"$q/$name/${graft.ops.DirCommit.CommittedMarker}").delete())
       val e = intercept[IllegalStateException](
         StreamOps.applyRoutableRollupBatch(q,
           Seq(("de", 2L)).toDF("lang", "n"), 1L, Seq("lang"), Seq("n"),
@@ -1359,7 +1409,7 @@ class StreamingSpec extends SparkSpec {
     assert(StreamOps.applyRoutableRollupBatch(p,
       Seq(("en", 1L)).toDF("lang", "n"), 0L, Seq("lang"), Seq("n"),
       runId = ""))
-    def fence() = new java.io.File(StreamOps.currentLocalDataDir(p),
+    def fence() = new java.io.File(currentDir(p),
       "_last_batch_id")
     assert(java.nio.file.Files.readString(fence().toPath).trim == "0|",
       "runId-less fold must write the `<id>|` fence")
@@ -1372,7 +1422,7 @@ class StreamingSpec extends SparkSpec {
         Seq(("fr", 3L)).toDF("lang", "n"), 2L, Seq("lang"), Seq("n"),
         runId = "runX"))
     assert(e.getMessage.contains(
-        s"rollup snapshot at ${StreamOps.currentLocalDataDir(p)} ") &&
+        s"rollup snapshot at ${currentDir(p)} ") &&
       e.getMessage.contains("maintained by stream run ''") &&
       e.getMessage.contains("'runX'"), e.getMessage)
     // a bare `<id>` fence (no run-id field) is refused for every caller
@@ -1385,7 +1435,7 @@ class StreamingSpec extends SparkSpec {
       assert(eBare.getMessage.contains(s"snapshot fence at ${fence()} ") &&
         eBare.getMessage.contains("`<batchId>|<runId>`"), eBare.getMessage)
     }
-    assert(StreamOps.currentLocalDataDir(p).getName == "data_v2",
+    assert(currentDir(p).getName == "data_v2",
       "a refused fold commits nothing")
   }
 
@@ -1397,7 +1447,7 @@ class StreamingSpec extends SparkSpec {
     assert(StreamOps.applyRoutableRollupBatch(p,
       Seq(("en", 1L)).toDF("lang", "n"), 0L, Seq("lang"), Seq("n"),
       runId = "r"))
-    val snap = new java.io.File(StreamOps.currentLocalDataDir(p),
+    val snap = new java.io.File(currentDir(p),
       "_base_snapshot")
     assert(java.nio.file.Files.readString(snap.toPath).startsWith("v2|"))
     assert(StreamOps.accumulatedBaseSnapshot(spark, p).nonEmpty)
@@ -1410,7 +1460,7 @@ class StreamingSpec extends SparkSpec {
       StreamOps.applyRoutableRollupBatch(p,
         Seq(("de", 2L)).toDF("lang", "n"), 1L, Seq("lang"), Seq("n"),
         runId = "r"))
-    assert(StreamOps.currentLocalDataDir(p).getName == "data_v1",
+    assert(currentDir(p).getName == "data_v1",
       "a refused fold commits nothing")
   }
 
@@ -1462,7 +1512,7 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-routable-fence").toString
     val b0 = Seq(("en", 1L), ("de", 2L)).toDF("lang", "n")
-    def cur() = StreamOps.currentLocalDataDir(dir).getPath
+    def cur() = currentDir(dir).getPath
     assert(StreamOps.applyRoutableRollupBatch(dir, b0, 0L,
       Seq("lang"), Seq("n")))
     val snap1 = spark.read.parquet(cur()).collect().toSet
