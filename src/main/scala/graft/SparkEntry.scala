@@ -26,6 +26,20 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  /** A fresh directory for a query's artifacts, under one per-JVM root
+    * a shutdown hook deletes. The tree lives until JVM exit, not until
+    * the query function returns: the frame it returns reads the tree
+    * lazily. */
+  private[graft] def scratchDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix)
+
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-scratch")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)))
+    root
+  }
+
   /** Planted token blocks for q_repeated_spans: shared verbatim between
     * the Spark plant and the DuckDB oracle so both engines see the same
     * partial-overlap pairs. */
@@ -50,8 +64,7 @@ object SparkEntry {
     * the same cache key. */
   private def rollupFor(s: SparkSession, dir: String): String =
     rollupCache.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-rollup-q").toString
+      val p = scratchDir("graft-rollup-q").toString
       graft.ops.Rollup.saveRollup(
         s.read.parquet(s"$dir/documents.parquet"), p,
         dims = Seq("lang", "source"), measures = Seq("n_chars"))
@@ -72,8 +85,7 @@ object SparkEntry {
     * that drifted would break q_rollup_star's hash parity silently). */
   private[graft] def starDimFor(s: SparkSession, dir: String): String =
     starDimCache.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-rollup-dim").toString
+      val p = scratchDir("graft-rollup-dim").toString
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("source")).distinct()
         .select(col("source").as("src"),
@@ -95,19 +107,9 @@ object SparkEntry {
   private def refreshFixtureFor(s: SparkSession, dir: String)
       : (String, String) =
     refreshCache.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-rollup-refresh-q")
-      // a JVM-lifetime fixture, not a leak: the copy drops `text`
-      // (~95% of the bytes — the rollup and the oracle use only the
-      // dims + n_chars) and the whole tree is swept at JVM exit
-      // (review finding, r13: repeated bench/verify runs otherwise
-      // accumulate corpus-sized dead copies in /tmp)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(root.toFile)
-      }))
+      // the copy drops `text` (~95% of the bytes — the rollup and the
+      // oracle use only the dims + n_chars)
+      val root = scratchDir("graft-rollup-refresh-q")
       val bp = root.resolve("base").toString
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "lang", "source", "n_chars")
@@ -2148,7 +2150,7 @@ object SparkEntry {
     // layout changes the physical plan, never the answer — the oracle is
     // the same filter over the unclustered source.
     "q_layout_scan" -> ((s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-layout")
+      val path = scratchDir("graft-layout")
         .resolve("lineitem_by_shipdate").toString
       graft.ops.Layout.writeClustered(t(s, dir, "lineitem"), path, 12, "l_shipdate")
       s.read.parquet(path)
@@ -2167,7 +2169,7 @@ object SparkEntry {
     // (exact) dictionary instead of materializing the bloom — the bloom
     // path itself is pinned at overflow cardinality in LayoutSpec.
     "q_bloom_scan" -> ((s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-bloom")
+      val path = scratchDir("graft-bloom")
         .resolve("lineitem_bloom").toString
       graft.ops.Layout.writeWithBloom(t(s, dir, "lineitem"), path,
         Seq("l_partkey"), expectedNdv = 300000L)
@@ -2183,7 +2185,7 @@ object SparkEntry {
     // exactly the corrected bkt=2 rows and untouched others (per-row
     // double add, bit-exact on both engines).
     "q_upsert_partitions" -> ((s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-upsert")
+      val path = scratchDir("graft-upsert")
         .resolve("orders_by_bkt").toString
       val base = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"),
@@ -2318,7 +2320,7 @@ object SparkEntry {
     // schema seam. The real-world shape of a 100 TB table whose
     // producer added a column mid-history
     "q_schema_evolution" -> ((s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-evol")
+      val path = scratchDir("graft-evol")
         .resolve("orders_evol").toString
       val o = t(s, dir, "orders")
       o.where(col("o_orderkey") % 2 === 0)
@@ -2340,7 +2342,7 @@ object SparkEntry {
     // single-column sort can only give one of them (LayoutSpec pins the
     // per-file rectangle claim). Same answer as the unclustered source.
     "q_zorder_scan" -> ((s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-zorder")
+      val path = scratchDir("graft-zorder")
         .resolve("lineitem_z").toString
       graft.ops.Layout.writeZOrdered(t(s, dir, "lineitem"), path, 16,
         "l_orderkey", "l_partkey")
@@ -2973,8 +2975,7 @@ object SparkEntry {
     // to prove it holds the same rows — no reliance on parquet bytes
     // (never byte-stable). The oracle recomputes the whole manifest
     "q_export_shards" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-export-q").toString
+      val tmp = scratchDir("graft-export-q").toString
       graft.ops.Layout.exportShards(
         t(s, dir, "documents"), tmp, "doc_id", nShards = 8)
     }),
@@ -3161,8 +3162,7 @@ object SparkEntry {
       val evalSet = docs.where(col("doc_id") < 20)
       val corpus = docs.where(col("doc_id") >= 20).unionByName(
         evalSet.select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-sigidx-q").toString
+      val tmp = scratchDir("graft-sigidx-q").toString
       graft.ops.Dedup.saveSignatureIndex(corpus, tmp, "doc_id", "text",
         shingleN = 3, bands = 16, rowsPerBand = 4)
       TextOps.fuzzyContaminatedIdsIndexed(s, tmp, evalSet, "doc_id",
@@ -3219,8 +3219,7 @@ object SparkEntry {
     // torn read of v1 or v3 fails the hash
     // (ops/Layout.commitSnapshot/readSnapshot)
     "q_snapshot_commit" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-snap-q").toString
+      val tmp = scratchDir("graft-snap-q").toString
       val li = t(s, dir, "lineitem")
       graft.ops.Layout.commitSnapshot(Map(
         "rf" -> li.where(col("l_orderkey") <= 100)
@@ -3260,8 +3259,7 @@ object SparkEntry {
       Graft.init(s)
       val docs = t(s, dir, "documents")
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-sigidx-q").toString
+      val tmp = scratchDir("graft-sigidx-q").toString
       Dedup.saveSignatureIndex(docs, tmp, "doc_id", "text")
       val batch = docs.where(col("doc_id") < 25)
         .select((col("doc_id") + 500000L).as("doc_id"), col("text"))
@@ -4255,8 +4253,7 @@ object SparkEntry {
     // semantics with NO index — an index that loses a posting fails the
     // hash (ops/Retrieval.buildIndex/searchIndex)
     "q_index_search" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-invidx-q").toString
+      val tmp = scratchDir("graft-invidx-q").toString
       graft.ops.Retrieval.buildIndex(t(s, dir, "documents"), tmp)
       graft.ops.Retrieval.searchIndex(s, tmp, Map(
         1L -> "vector hash join", 2L -> "merge stream window filter",
@@ -4351,8 +4348,7 @@ object SparkEntry {
       // measure the PROBE path (what an ingest batch actually pays),
       // not a per-measurement rebuild of the corpus release artifact
       val tmp = gramIdxCache.getOrElseUpdate(dir, {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-gramidx-q").toString
+        val p = scratchDir("graft-gramidx-q").toString
         Dedup.saveGramIndex(corpus, p, "text", minLen = 8, buckets = 64)
         p
       })
@@ -4484,7 +4480,7 @@ object SparkEntry {
       val planted = emb.where(col("vec_id") < 10)
         .select((col("vec_id") + 100000L).as("vec_id"),
           typedLit(q).as("embedding"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-q").toString
+      val tmp = scratchDir("graft-ivf-q").toString
       Ivf.save(Ivf.index(emb.unionByName(planted), "vec_id", "embedding"), tmp)
       Ivf.probe(Ivf.load(s, tmp), q, 10)
         .select(col("vec_id"), round(col("cosine"), 4).as("cosine"))

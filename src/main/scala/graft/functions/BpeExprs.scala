@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, functions}
+import org.apache.spark.sql.{Column, functions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -168,37 +168,17 @@ object BpeEncode {
       (p.substring(0, i), p.substring(i + 1))
     }
 
-  /** Registry hook (wired through `Graft.init` via [[TextExprs.register]]'s
-    * caller): `bpe_encode(text, <encoded merge list literal>)`. The merge
-    * list rides a string literal because the registry builder only
-    * receives Expressions — the Column wrapper below hides the encoding. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("bpe_encode", es =>
-      BpeEncode(es(0), es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(
-          s: UTF8String, StringType) => decodeMerges(s.toString)
-        case other => throw new IllegalArgumentException(
-          s"bpe_encode merges must be a string literal, got $other")
-      }), "built-in")
-    reg.createOrReplaceTempFunction("unigram_encode", es =>
-      UnigramEncode(es(0), es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(
-          s: UTF8String, StringType) => UnigramEncode.decodePieces(s.toString)
-        case other => throw new IllegalArgumentException(
-          s"unigram_encode pieces must be a string literal, got $other")
-      }, ShingleExprs.foldLong(es(2))), "built-in")
-  }
-
   /** Column wrapper: `bpeEncode(col("text"), merges)` -> array<string>.
-    * Requires [[register]] (part of `Graft.init`) on the active session. */
+    * The merge list rides a string literal because a function builder
+    * only receives Expressions; this wrapper hides the encoding. Needs
+    * `Graft.init` or `GraftExtensions` on the active session. */
   def bpeEncode(text: Column, merges: Seq[(String, String)]): Column =
     functions.call_function("bpe_encode", text,
       functions.lit(encodeMerges(merges)))
 
   /** Column wrapper: `unigramEncode(col("text"), pieces)` ->
-    * array<string>. Requires [[register]] on the active session. */
+    * array<string>. Needs `Graft.init` or `GraftExtensions` on the
+    * active session. */
   def unigramEncode(text: Column, pieces: Seq[(String, Long)],
       unkScore: Long = UnigramEncode.DefaultUnkScore): Column =
     functions.call_function("unigram_encode", text,

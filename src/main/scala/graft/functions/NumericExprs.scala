@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, functions}
+import org.apache.spark.sql.{Column, functions}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
@@ -175,31 +175,14 @@ object PoissonWeights {
   }
 }
 
-/** Registration + Column wrappers for the numeric expressions. */
+/** Column wrappers for the numeric expressions; each needs
+  * `Graft.init` or `GraftExtensions` on the active session. */
 object NumericExprs {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("sortable_f64",
-      es => SortableF64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("sortable_f64_inv",
-      es => SortableF64Inv(es.head), "built-in")
-    reg.createOrReplaceTempFunction("poisson_weights", es =>
-      PoissonWeights(es(0), ShingleExprs.foldInt(es(1)), es(2) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(
-          s: org.apache.spark.unsafe.types.UTF8String, _) => s.toString
-        case other => throw new IllegalArgumentException(
-          s"poisson_weights salt must be a string literal, got $other")
-      }), "built-in")
-  }
-
-  /** Requires [[register]] on the active session. */
   def sortableF64(x: Column): Column =
     functions.call_function("sortable_f64", x)
   def sortableF64Inv(s: Column): Column =
     functions.call_function("sortable_f64_inv", s)
 
-  /** Requires [[register]] on the active session. */
   def poissonWeights(idStr: Column, b: Int, salt: String): Column =
     functions.call_function("poisson_weights", idStr,
       functions.lit(b), functions.lit(salt))

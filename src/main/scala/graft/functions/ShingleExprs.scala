@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, functions}
+import org.apache.spark.sql.{Column, functions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -353,41 +353,10 @@ object Md5BucketGrams {
   }
 }
 
-/** Registration + Column wrappers (int params are passed as literals and
-  * extracted at function-build time). */
+/** Column wrappers (int params pass as literals, read at
+  * function-build time); each needs `Graft.init` or `GraftExtensions`
+  * on the active session. */
 object ShingleExprs {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("shingle_hash64",
-      es => ShingleHash64(es.head, foldInt(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      es => MinHashSig(es.head, foldInt(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("shingle_anchors",
-      es => ShingleAnchors(es.head, foldInt(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("md5_bucket_grams",
-      es => Md5BucketGrams(es.head, foldInt(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("sorted_intersect_count",
-      es => SortedIntersectCount(es(0), es(1)), "built-in")
-  }
-
-  private[graft] def foldInt(e: Expression): Int =
-    e.eval(null) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"expected a literal int, got $other")
-    }
-
-  private[graft] def foldLong(e: Expression): Long =
-    e.eval(null) match {
-      case i: Int => i.toLong
-      case l: Long => l
-      case other => throw new IllegalArgumentException(
-        s"expected a literal long, got $other")
-    }
-
-  /** Requires [[register]] on the active session. */
   def shingleHash64(text: Column, n: Int): Column =
     functions.call_function("shingle_hash64", text, functions.lit(n))
   def minhashSig64(shingles: Column, k: Int): Column =

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession, functions}
+import org.apache.spark.sql.{Column, functions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -209,22 +209,12 @@ case class BottomKPairs(
     copy(sortKey = newChildren(0), payload = newChildren(1))
 }
 
-/** Registration + Column wrappers (the [[ShingleExprs]] pattern: int
-  * params pass as literals and are extracted at function-build time;
-  * the analyzer wraps the returned AggregateFunction in an
-  * AggregateExpression like any built-in aggregate). */
+/** Column wrappers (the [[ShingleExprs]] pattern: int params pass as
+  * literals, read at function-build time; the analyzer wraps the
+  * returned AggregateFunction in an AggregateExpression like any
+  * built-in aggregate); each needs `Graft.init` or `GraftExtensions` on
+  * the active session. */
 object SketchExprs {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("bottom_k",
-      es => BottomKLongs(es.head, ShingleExprs.foldInt(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("bottom_k_by",
-      es => BottomKPairs(es(0), es(1), ShingleExprs.foldInt(es(2))),
-      "built-in")
-  }
-
-  /** Requires [[register]] on the active session. */
   def bottomK(values: Column, k: Int): Column =
     functions.call_function("bottom_k", values, functions.lit(k))
   def bottomKBy(sortKey: Column, payload: Column, k: Int): Column =

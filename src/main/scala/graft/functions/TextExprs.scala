@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, functions}
+import org.apache.spark.sql.{Column, functions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -431,54 +431,27 @@ object ExciseSpans {
   }
 }
 
-/** Registration + Column wrappers for the text expressions. */
+/** Column wrappers for the text expressions; each needs `Graft.init`
+  * or `GraftExtensions` on the active session. */
 object TextExprs {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64",
-      es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("unicode_normalize", es =>
-      UnicodeNormalize(es(0), es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(
-          s: UTF8String, StringType) => s.toString
-        case other => throw new IllegalArgumentException(
-          s"unicode_normalize form must be a string literal, got $other")
-      }), "built-in")
-    reg.createOrReplaceTempFunction("span_corrupt_stats", es =>
-      SpanCorruptStats(es(0), es(1), ShingleExprs.foldInt(es(2))), "built-in")
-    reg.createOrReplaceTempFunction("excise_spans", es =>
-      ExciseSpans(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("word_stop_stats", es =>
-      WordStopStats(es(0), es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(
-          s: UTF8String, StringType) => s.toString.split(",").toSeq
-        case other => throw new IllegalArgumentException(
-          s"word_stop_stats stopwords must be a CSV string literal, got $other")
-      }), "built-in")
-  }
-
-  /** Requires [[register]] on the active session. */
   def simhash64(tokens: Column): Column =
     functions.call_function("simhash64", tokens)
 
-  /** Requires [[register]] on the active session. */
   def unicodeNormalize(text: Column, form: String = "NFC"): Column =
     functions.call_function("unicode_normalize", text, functions.lit(form))
 
-  /** Requires [[register]] on the active session. */
   def spanCorruptStats(idStr: Column, text: Column,
       maskPermille: Int): Column =
     functions.call_function("span_corrupt_stats", idStr, text,
       functions.lit(maskPermille))
 
-  /** Requires [[register]] on the active session. `cuts` must be sorted
-    * by start and disjoint (1-based [s, e) token intervals). */
+  /** `cuts` must be sorted by start and disjoint (1-based [s, e) token
+    * intervals). */
   def exciseSpans(text: Column, cuts: Column): Column =
     functions.call_function("excise_spans", text, cuts)
 
-  /** Requires [[register]] on the active session. Stopwords must not
-    * contain commas (they ride a CSV literal through the registry). */
+  /** Stopwords must not contain commas (they ride a CSV literal
+    * through the registry). */
   def wordStopStats(text: Column, stopwords: Seq[String]): Column = {
     require(stopwords.forall(!_.contains(",")),
       "stopwords must not contain commas")

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, functions}
+import org.apache.spark.sql.{Column, functions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -459,36 +459,12 @@ object PqEncode {
   }
 }
 
-/** Registration + Column-level wrappers. Registration is per-session and
-  * idempotent; wrappers use `call_function`, so they resolve against the
-  * active session's registry at analysis time. Requires a CLASSIC
-  * SparkSession (the cast below throws on a Spark Connect session) —
-  * Connect deployments should configure
-  * `spark.sql.extensions=graft.GraftExtensions` on the server instead. */
+/** Column-level wrappers over the functions [[graft.GraftExtensions.table]]
+  * defines. They use `call_function`, so they resolve against the active
+  * session's registry at analysis time: register with `Graft.init` (a
+  * classic SparkSession) or, on a Spark Connect server, configure
+  * `spark.sql.extensions=graft.GraftExtensions`. */
 object VectorExprs {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("dot_f",
-      es => DotProduct(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("cosine_sim",
-      es => CosineSimilarity(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("sign_project",
-      es => SignProject(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("pq_encode",
-      es => PqEncode(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("sign_band_keys", es => {
-      def asInt(e: Expression, name: String): Int = e match {
-        case Literal(v: Int, IntegerType) => v
-        case _ => throw new IllegalArgumentException(
-          s"sign_band_keys: $name must be an INT literal, got $e")
-      }
-      SignBandKeys(es(0), es(1), asInt(es(2), "bands"),
-        asInt(es(3), "rowsPerBand"))
-    }, "built-in")
-  }
-
-  /** Requires [[register]] to have been called on the active session. */
   def dot(a: Column, b: Column): Column = functions.call_function("dot_f", a, b)
   def cosineSim(a: Column, b: Column): Column =
     functions.call_function("cosine_sim", a, b)

@@ -266,7 +266,7 @@ object Dedup {
     val toksBase = sets.select(col("id"), size(col("sh")).as("sz"),
       explode(col("sh")).as("tok"))
     val toks =
-      if (corpusExceeds(sets, "spark.graft.jaccard.sharedTokExchangeMinBytes"))
+      if (corpusExceeds(sets, graft.Graft.SharedTokExchangeMinBytes))
         toksBase.repartition(col("tok"))
       else toksBase
     val df = toks.groupBy("tok").agg(count(lit(1)).as("df"))
@@ -712,7 +712,7 @@ object Dedup {
     // exactSubstringDedup reuse shape; its input is the materialized
     // anchor cache, not a re-explode
     val anchors = anchorTable.repartition(col("h"))
-    val idx = spark.read.parquet(s"$path/grams")
+    val idx = readIndexDir(spark, path, "grams")
     // bucket arithmetic must mirror the writer: pmod(h, nBuckets) with
     // the recorded bucket count (and the recorded minLen must match —
     // a mismatch would silently MISS duplicated spans, so fail loudly);
@@ -1012,7 +1012,7 @@ object Dedup {
     // still be correct but the index would grow with dead weight
     val wanted = grams.select(col("bucket")).distinct()
       .collect().map(_.getLong(0))
-    val standing = spark.read.parquet(s"$path/grams")
+    val standing = readIndexDir(spark, path, "grams")
       .where(col("bucket").isin(wanted: _*)).select(col("h"))
     // localCheckpoint cuts the write's lineage from the directory it
     // appends to (the novel set is batch-gram-bounded)
@@ -1192,6 +1192,28 @@ object Dedup {
           s"${indexGeneration(spark, path)} while compaction held " +
           s"$claimed — aborting the swap (index unchanged; re-run " +
           "compaction when the index is quiet)")
+    }
+
+  /** A standing index's `$path/<sub>` directory. A read that fails
+    * because `sub` is missing while `_old_<sub>` exists is a compaction
+    * that crashed between its renames: the error names both paths and
+    * the compaction that restores the index. Only the failure path
+    * looks, so a probe pays no extra filesystem call; a reader never
+    * restores the directory itself, since that could race a live
+    * compaction's swap. */
+  private[graft] def readIndexDir(spark: org.apache.spark.sql.SparkSession,
+      path: String, sub: String): DataFrame =
+    try spark.read.parquet(s"$path/$sub")
+    catch { case e: Exception =>
+      val (live, _, old) = swapNames(path, sub)
+      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(live) || !fs.exists(old)) throw e
+      val restore =
+        if (sub == "grams") "compactGramIndex" else "compactSignatureIndex"
+      throw new IllegalStateException(
+        s"index at $path: $path/$sub is missing and $path/_old_$sub " +
+          "exists — a compaction crashed between its renames; run " +
+          s"Dedup.$restore on the index to restore it", e)
     }
 
   /** `$path/<sub>`'s live, staged and retired names for the
@@ -1646,7 +1668,7 @@ object Dedup {
     // one directory listing, and the generation rides the meta row above
     val claimed = claimWrite(spark, path, meta.getAs[Long]("generation"),
       failOnCompaction = true)
-    val existing = spark.read.parquet(s"$path/sets").select(col("id"))
+    val existing = readIndexDir(spark, path, "sets").select(col("id"))
     // materialize the novel slice BEFORE appending to the directory its
     // plan reads (batch-sized; the Dedup lineage-cut convention)
     val novel = Checkpoints.materialize(
@@ -1705,11 +1727,11 @@ object Dedup {
         bands * rowsPerBand).as("_sig"))
       .select(col("id"),
         explode(bandKeys(col("_sig"), bands, rowsPerBand)).as("bucket"))
-    val saved = spark.read.parquet(s"$path/buckets")
+    val saved = readIndexDir(spark, path, "buckets")
     val cand = bBuckets.as("b").join(saved.as("c"), Seq("bucket"))
       .select(col("b.id").as("id_a"), col("c.id").as("id_b"))
       .distinct()
-    val allSets = bSets.unionByName(spark.read.parquet(s"$path/sets"))
+    val allSets = bSets.unionByName(readIndexDir(spark, path, "sets"))
     confirmJaccard(cand, allSets, threshold)
       .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"),
         col("jaccard"))
@@ -1744,18 +1766,16 @@ object Dedup {
     * spark.graft.confirm.explodeMinBytes (bytes; local default keeps
     * every test SF in the two-join regime, see OPTIMIZATION_r16.md). */
   private[graft] def pairExplodeAttach(corpus: DataFrame): Boolean =
-    corpusExceeds(corpus, "spark.graft.confirm.explodeMinBytes")
+    corpusExceeds(corpus, graft.Graft.ConfirmExplodeMinBytes)
 
   /** True when `corpus`'s optimizer size estimate reaches the byte
-    * threshold configured under `confKey` (default 1 GiB) — the shared
-    * plan-time predicate behind the scale-adaptive strategy gates. A
-    * setting that is not a whole byte count fails naming the key. */
+    * threshold `minBytes` sets — the shared plan-time predicate behind
+    * the scale-adaptive strategy gates. A setting that is not a whole
+    * byte count fails naming the key. */
   private[graft] def corpusExceeds(corpus: DataFrame,
-      confKey: String): Boolean = {
-    val minBytes = graft.Graft.longSetting(corpus.sparkSession, confKey,
-      1L << 30, "a byte count")
-    corpus.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes
-  }
+      minBytes: graft.Graft.LongSetting): Boolean =
+    corpus.queryExecution.optimizedPlan.stats.sizeInBytes >=
+      minBytes.get(corpus.sparkSession)
 
   /** Exact-Jaccard confirm of a DISTINCT candidate-pair table (every
     * caller distincts — the pair-explode regroup relies on it). The

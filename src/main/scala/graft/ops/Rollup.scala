@@ -121,9 +121,10 @@ object Rollup {
   // [[DirCommit.commitVersion]]; readers resolve the highest committed
   // one. A routed query that already planned against data_v<N> keeps
   // reading it while a refresh lands data_v<N+1> — the superseded
-  // version survives one more write cycle (and [[GcMinAgeConf]]) as
-  // the in-flight readers' grace period, then GCs. (The r13 in-place
-  // swap degraded gracefully at PLAN time but yanked files out from
+  // version survives one more write cycle (and
+  // [[graft.Graft.RollupGcMinAgeMs]]) as the in-flight readers' grace
+  // period, then GCs. (The r13 in-place swap degraded gracefully at
+  // PLAN time but yanked files out from
   // under a query already EXECUTING; at hourly-refresh-plus-dashboard
   // traffic that was the common case, not the corner.) The streaming
   // sink ([[graft.streaming.StreamOps.routableRollupSink]]) commits
@@ -193,22 +194,6 @@ object Rollup {
     val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(cur, "_last_batch_id"), false)
   }
-
-  /** Minimum age (spark conf, milliseconds) a SUPERSEDED committed
-    * version must reach before the GC may delete it — the
-    * time floor under the write-cycle-keyed grace (VERDICT r14 #1):
-    * without it, a script rebuilding twice in quick succession (a
-    * dim-set iteration, a per-partition backfill loop) GCs the version
-    * a dashboard query planned seconds ago. 10 minutes by default —
-    * generous against any routed read of a dim-cardinality-sized
-    * artifact, and retention stays bounded at one version per rebuild
-    * inside the window (at the feature's hourly-refresh pitch: one). */
-  private[graft] val GcMinAgeConf = "spark.graft.rollup.gcMinAgeMs"
-  private[graft] val GcMinAgeDefaultMs = 600000L
-
-  private def gcMinAgeMs(spark: SparkSession): Long =
-    graft.Graft.longSetting(spark, GcMinAgeConf, GcMinAgeDefaultMs,
-      "a whole number of milliseconds")
 
   /** Everything the router needs per registered base table — PLAIN
     * DATA only. Holding an analyzed template relation here would pin
@@ -375,7 +360,8 @@ object Rollup {
     // a rebuild at a standing path commits the NEXT version — never an
     // in-place overwrite, so a routed query planned against the
     // current version finishes on intact files (VERDICT r13 #1)
-    DirCommit.commitVersion(hfs, root, 1L, gcMinAgeMs(spark)) { target =>
+    DirCommit.commitVersion(hfs, root, 1L,
+        graft.Graft.RollupGcMinAgeMs.get(spark)) { target =>
       // building=true makes RollupRouting skip this plan: the write
       // action plans synchronously on this thread, and the build must
       // always scan the BASE — routing a rebuild through the old
@@ -526,7 +512,8 @@ object Rollup {
       // version; the current one stays intact for any routed query
       // already executing against it, and a crash before the marker
       // leaves only an invisible uncommitted directory
-      DirCommit.commitVersion(fs, root, 1L, gcMinAgeMs(spark)) { target =>
+      DirCommit.commitVersion(fs, root, 1L,
+          graft.Graft.RollupGcMinAgeMs.get(spark)) { target =>
         building.withValue(true) {
           old.unionByName(delta).groupBy(dims.map(col): _*)
             .agg(merge.head, merge.tail: _*)

@@ -391,13 +391,13 @@ object TextOps {
         bands * rowsPerBand).as("_sig"))
       .select(col("id"), explode(Dedup.bandKeys(col("_sig"),
         bands, rowsPerBand)).as("bucket"))
-    val cand = spark.read.parquet(s"$indexPath/buckets")
+    val cand = Dedup.readIndexDir(spark, indexPath, "buckets")
       .select(col("id").as("cid"), col("bucket"))
       .join(broadcast(buckets(evalSet)
         .select(col("id").as("eid"), col("bucket"))), Seq("bucket"))
       .select(col("cid"), col("eid")).distinct()
     cand
-      .join(spark.read.parquet(s"$indexPath/sets")
+      .join(Dedup.readIndexDir(spark, indexPath, "sets")
         .select(col("id").as("cid"), col("sh").as("sh_c")), Seq("cid"))
       .join(broadcast(sets(evalSet)
         .select(col("id").as("eid"), col("sh").as("sh_e"))), Seq("eid"))

@@ -98,7 +98,7 @@ object DumpPlans {
       import org.apache.spark.sql.functions._
       graft.Graft.init(spark)
       val basePath = s"$dir/documents.parquet"
-      val roll = Files.createTempDirectory("graft-plans-rollup").toString
+      val roll = SparkEntry.scratchDir("graft-plans-rollup").toString
       graft.ops.Rollup.saveRollup(spark.read.parquet(basePath), roll,
         dims = Seq("lang", "source"), measures = Seq("n_chars"))
       graft.ops.Rollup.register(spark, basePath, roll)

@@ -955,6 +955,14 @@ class DedupSpec extends SparkSpec {
         .mode("overwrite").parquet(s"$tmp/_compacting/grams")
     }
     crash()
+    // a reader in the window names the retired copy and the restoring
+    // call, and leaves both directories as they are
+    val window = intercept[IllegalStateException](excise())
+    assert(window.getMessage.contains(s"$tmp/grams ") &&
+      window.getMessage.contains(s"$tmp/_old_grams") &&
+      window.getMessage.contains("compactGramIndex"), window.getMessage)
+    assert(Files.exists(Paths.get(s"$tmp/_old_grams")) &&
+      !Files.exists(Paths.get(s"$tmp/grams")))
     Dedup.compactGramIndex(spark, tmp)
     assert(!Files.exists(Paths.get(s"$tmp/_old_grams")) &&
       !Files.exists(Paths.get(s"$tmp/_compacting")))
@@ -1185,21 +1193,22 @@ class DedupSpec extends SparkSpec {
   }
 
   test("a malformed spark.graft.* setting fails naming the key") {
-    val keys = Seq("spark.graft.confirm.explodeMinBytes",
-      "spark.graft.jaccard.sharedTokExchangeMinBytes")
-    for (key <- keys) {
+    val settings = Seq(Graft.ConfirmExplodeMinBytes,
+      Graft.SharedTokExchangeMinBytes)
+    val keys = settings.map(_.key)
+    for (setting <- settings; key = setting.key) {
       spark.conf.set(key, "1g")
       try {
         val e = intercept[IllegalArgumentException](
-          Dedup.corpusExceeds(docs, key))
+          Dedup.corpusExceeds(docs, setting))
         assert(e.getMessage.contains(key) &&
           e.getMessage.contains("byte count") &&
           e.getMessage.contains("'1g'"), e.getMessage)
         // a well-formed value gates as before: 0 bytes is always reached
         spark.conf.set(key, "0")
-        assert(Dedup.corpusExceeds(docs, key))
+        assert(Dedup.corpusExceeds(docs, setting))
       } finally spark.conf.unset(key)
-      assert(!Dedup.corpusExceeds(docs, key), "the 1 GiB default")
+      assert(!Dedup.corpusExceeds(docs, setting), "the 1 GiB default")
     }
     // the public entry points surface the same error
     spark.conf.set(keys(1), "lots")
@@ -1211,14 +1220,14 @@ class DedupSpec extends SparkSpec {
     // the rollup GC floor fails the same way, before anything is written
     val rp = java.nio.file.Files.createTempDirectory("graft-gc-conf")
       .resolve("r").toString
-    spark.conf.set(graft.ops.Rollup.GcMinAgeConf, "10m")
+    spark.conf.set(Graft.RollupGcMinAgeMs.key, "10m")
     try {
       val e = intercept[IllegalArgumentException](
         graft.ops.Rollup.saveRollup(docs, rp, Seq("doc_id")))
-      assert(e.getMessage.contains(graft.ops.Rollup.GcMinAgeConf) &&
+      assert(e.getMessage.contains(Graft.RollupGcMinAgeMs.key) &&
         e.getMessage.contains("milliseconds") &&
         e.getMessage.contains("'10m'"), e.getMessage)
-    } finally spark.conf.unset(graft.ops.Rollup.GcMinAgeConf)
+    } finally spark.conf.unset(Graft.RollupGcMinAgeMs.key)
     assert(!new java.io.File(rp).exists(), "a refused setting writes nothing")
   }
 }

@@ -33,6 +33,16 @@ class QueriesSmokeSpec extends SparkSpec {
     }
   }
 
+  test("query artifacts land under one scratch root, not in the temp dir") {
+    val tmpDir = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def leftovers() = tmpDir.list().toSet.filter(n =>
+      n.startsWith("graft-layout") || n.startsWith("graft-export-q"))
+    val before = leftovers()
+    for (name <- Seq("q_layout_scan", "q_export_shards"))
+      SparkEntry.queries(name)(spark, sfDir).collect()
+    assert((leftovers() -- before).isEmpty, leftovers() -- before)
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).collect().nonEmpty)
   }

@@ -659,7 +659,7 @@ class RollupSpec extends SparkSpec {
       .exists(), "saveRollup must commit data_v1 with its marker")
     // floor OFF: this test pins the write-cycle bound itself; the time
     // floor (r15) gets its own test below
-    spark.conf.set(Rollup.GcMinAgeConf, "0")
+    spark.conf.set(Graft.RollupGcMinAgeMs.key, "0")
     Rollup.register(spark, bp, rp)
     try {
       val planned = spark.read.parquet(bp).groupBy("lang")
@@ -692,7 +692,7 @@ class RollupSpec extends SparkSpec {
       assert(new java.io.File(s"$rp/data_v2").exists())
     } finally {
       Rollup.unregister(spark, bp)
-      spark.conf.unset(Rollup.GcMinAgeConf)
+      spark.conf.unset(Graft.RollupGcMinAgeMs.key)
     }
   }
 
@@ -728,7 +728,7 @@ class RollupSpec extends SparkSpec {
         "query planned before the rebuild burst must finish on v1")
       // aged expiry: with a 300ms floor, a version older than that is
       // outside both the cycle grace and the floor — it goes
-      spark.conf.set(Rollup.GcMinAgeConf, "300")
+      spark.conf.set(Graft.RollupGcMinAgeMs.key, "300")
       Thread.sleep(400L)
       Rollup.saveRollup(spark.read.parquet(bp), rp, Seq("lang"), Seq("n"))
       assert(Rollup.currentDataPath(spark, rp).endsWith("data_v4"))
@@ -738,7 +738,7 @@ class RollupSpec extends SparkSpec {
       assert(new java.io.File(s"$rp/data_v3").exists())
     } finally {
       Rollup.unregister(spark, bp)
-      spark.conf.unset(Rollup.GcMinAgeConf)
+      spark.conf.unset(Graft.RollupGcMinAgeMs.key)
     }
   }
 
@@ -825,7 +825,7 @@ class RollupSpec extends SparkSpec {
     // floor OFF: this test pins the write-cycle bound; under the default
     // floor a superseded version survives while the next commit marker
     // is younger than the minimum age
-    spark.conf.set(Rollup.GcMinAgeConf, "0")
+    spark.conf.set(Graft.RollupGcMinAgeMs.key, "0")
     try {
       Rollup.saveRollup(spark.read.parquet(bp), rp, Seq("lang"), Seq("n"))
       assert(Rollup.currentDataPath(spark, rp).endsWith("data_v1"))
@@ -871,7 +871,7 @@ class RollupSpec extends SparkSpec {
       }
     } finally {
       Rollup.unregister(spark, bp)
-      spark.conf.unset(Rollup.GcMinAgeConf)
+      spark.conf.unset(Graft.RollupGcMinAgeMs.key)
     }
   }
 
