@@ -3212,11 +3212,11 @@ object SparkEntry {
         .select(col("source"), col("hour"), col("doc_id"))),
 
     // ---- scale mechanics: atomic multi-table snapshot commit ----------
-    // manifest-published versioned writes: v1 lands a stale slice, v2
-    // the full aggregate, then a FAILED v3 (data directory written,
-    // manifest never renamed). The read resolves through the manifest
-    // and must see exactly v2 — the oracle states v2's content, so a
-    // torn read of v1 or v3 fails the hash
+    // marker-committed versioned writes: v1 lands a stale slice, v2
+    // the full aggregate, then a FAILED v3 (table data written, no
+    // `_committed` marker). The read resolves the highest committed
+    // version and must see exactly v2 — the oracle states v2's
+    // content, so a torn read of v1 or v3 fails the hash
     // (ops/Layout.commitSnapshot/readSnapshot)
     "q_snapshot_commit" -> ((s, dir) => {
       val tmp = scratchDir("graft-snap-q").toString
@@ -3227,7 +3227,7 @@ object SparkEntry {
       graft.ops.Layout.commitSnapshot(Map(
         "rf" -> li.groupBy(col("l_returnflag"))
           .agg(count(lit(1)).as("n"))), tmp)
-      li.limit(1).write.parquet(s"$tmp/rf/v3") // torn write, no manifest
+      li.limit(1).write.parquet(s"$tmp/data_v3/rf") // torn, uncommitted
       graft.ops.Layout.readSnapshot(s, tmp, "rf")
     }),
 

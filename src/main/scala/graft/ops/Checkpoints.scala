@@ -20,15 +20,21 @@ import org.apache.spark.sql.DataFrame
   *
   * The two paths are observationally identical (same rows, same
   * convergence — pinned by spec); only failure recovery differs. The
-  * context's checkpoint dir is set on first use and left alone when
-  * already set (SparkContext appends a unique child per set call —
-  * re-setting per round would scatter state across directories). */
+  * context's checkpoint dir is set only when it does not already lie
+  * under `path` (SparkContext appends a unique child per set call —
+  * re-setting per round would scatter state across directories), so
+  * a later caller's `path` is honored, not silently replaced by the
+  * first caller's. */
 private[graft] object Checkpoints {
   def materialize(df: DataFrame, dir: Option[String]): DataFrame =
     dir match {
       case Some(path) =>
         val sc = df.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(path)
+        val root = new org.apache.hadoop.fs.Path(path)
+        val qualified = root.getFileSystem(sc.hadoopConfiguration)
+          .makeQualified(root).toString
+        if (!sc.getCheckpointDir.exists(_.startsWith(s"$qualified/")))
+          sc.setCheckpointDir(path)
         df.checkpoint(eager = true)
       case None => df.localCheckpoint(eager = true)
     }

@@ -885,8 +885,8 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       gen: Long): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$path/gen/d$gen")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(p, /* overwrite = */ true).close()
+    DirCommit.writeText(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, "")
   }
 
   /** Compaction aborts here if any OTHER claim in the kept history
@@ -1057,36 +1057,52 @@ object Dedup {
       path: String): Unit = {
     val nBuckets = spark.read.parquet(s"$path/meta").head
       .getAs[Int]("n_buckets")
+    // hash-repartition on the partition column: each bucket's rows land
+    // in exactly one task, so each bucket directory gets exactly one file
+    compactIndex(spark, path, Seq("grams")) { (sub, staged) =>
+      spark.read.parquet(s"$path/$sub")
+        .repartition(nBuckets, col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(staged)
+    }
+  }
+
+  /** The claim-validate-swap skeleton both compactions share: restore a
+    * crashed swap of any of `subs`, sweep dead compactions' markers,
+    * claim a generation and hold its in-flight marker across the
+    * rewrite AND the swap (appends that claim while it exists abort
+    * before writing any data, so none can slip rows into — or
+    * recreate — a directory mid-swap), require the index quiet,
+    * `rewrite` each `$path/<sub>` into its staged directory, re-check
+    * the claim, swap every sub in, then mark the generation done. */
+  private def compactIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String, subs: Seq[String])
+      (rewrite: (String, String) => Unit): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (grams, stagedGrams, oldGrams) = swapNames(path, "grams")
-    DirCommit.recover(fs, grams, oldGrams)
+    val names = subs.map(swapNames(path, _))
+    names.foreach { case (live, _, old) => DirCommit.recover(fs, live, old) }
     sweepStaleCompactionMarkers(fs, path)
     val claimed = claimGeneration(spark, path)
-    // the in-flight marker spans rewrite AND swap: appends that claim
-    // while it exists abort before writing any data, so no append can
-    // slip rows into (or recreate) a directory mid-swap
     val marker = new org.apache.hadoop.fs.Path(s"$path/gen/c$claimed")
-    fs.create(marker, true).close()
-    // tracks whether the directory swap committed: the catch path must
-    // distinguish a failed compaction (index untouched — release the
-    // claim) from a committed one whose CLEANUP failed (index already
-    // compacted — keep the claim, report the truth). ADVICE r13.
+    DirCommit.writeText(fs, marker, "")
+    val compacting = new org.apache.hadoop.fs.Path(s"$path/_compacting")
+    // flips on the FIRST swap: from then on the index content has
+    // changed (still consistent — compaction is content-identical per
+    // directory) and the catch path must keep the claim and report
+    // the commit, not release it (ADVICE r13)
     var swapped = false
     try {
       requireQuiet(spark, path, claimed, fs)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_compacting"), true)
-      // hash-repartition on the partition column: each bucket's rows land
-      // in exactly one task, so each bucket directory gets exactly one file
-      spark.read.parquet(s"$path/grams")
-        .repartition(nBuckets, col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/_compacting/grams")
+      fs.delete(compacting, true)
+      subs.zip(names).foreach { case (sub, (_, staged, _)) =>
+        rewrite(sub, staged.toString) }
       validateClaim(spark, path, claimed, fs)
-      DirCommit.swap(fs, grams, stagedGrams, oldGrams)
-      swapped = true
+      names.foreach { case (live, staged, old) =>
+        DirCommit.swap(fs, live, staged, old)
+        swapped = true
+      }
       markGenerationDone(spark, path, claimed)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_compacting"), true)
+      fs.delete(compacting, true)
       ()
     } catch { case e: Throwable =>
       abortOrCommitReport(spark, path, claimed, fs, swapped, e)
@@ -1145,38 +1161,12 @@ object Dedup {
       path: String, targetFiles: Int = 64): Unit = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
     readIndexMeta(spark, path) // fail with guidance on an unreadable meta
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val subs = Seq("sets", "buckets").map(swapNames(path, _))
-    subs.foreach { case (live, _, old) => DirCommit.recover(fs, live, old) }
-    sweepStaleCompactionMarkers(fs, path)
-    val claimed = claimGeneration(spark, path)
-    val marker = new org.apache.hadoop.fs.Path(s"$path/gen/c$claimed")
-    fs.create(marker, true).close()
-    // flips on the FIRST swap: once `sets` is swapped the index content
-    // has changed (still consistent — compaction is content-identical
-    // per directory, so a half-compacted index is correct, just not yet
-    // fully defragmented) and the claim must survive (ADVICE r13)
-    var swapped = false
-    try {
-      requireQuiet(spark, path, claimed, fs)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_compacting"), true)
-      spark.read.parquet(s"$path/sets").repartition(targetFiles)
-        .write.mode("overwrite").parquet(s"$path/_compacting/sets")
-      spark.read.parquet(s"$path/buckets").distinct()
+    compactIndex(spark, path, Seq("sets", "buckets")) { (sub, staged) =>
+      val live = spark.read.parquet(s"$path/$sub")
+      (if (sub == "buckets") live.distinct() else live)
         .repartition(targetFiles)
-        .write.mode("overwrite").parquet(s"$path/_compacting/buckets")
-      validateClaim(spark, path, claimed, fs)
-      subs.foreach { case (live, staged, old) =>
-        DirCommit.swap(fs, live, staged, old)
-        swapped = true
-      }
-      markGenerationDone(spark, path, claimed)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_compacting"), true)
-      ()
-    } catch { case e: Throwable =>
-      abortOrCommitReport(spark, path, claimed, fs, swapped, e)
-    } finally { fs.delete(marker, false); () }
+        .write.mode("overwrite").parquet(staged)
+    }
   }
 
   /** Abort the compaction (temp swept, index untouched) if any writer

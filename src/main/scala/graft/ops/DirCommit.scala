@@ -18,14 +18,15 @@ import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
   *    directory is read or rewritten. Each caller keeps its own names
   *    (`<dir>.next`/`<dir>.old`, `_compacting/<sub>`/`_old_<sub>`,
   *    `postings.compact`/`postings.old`).
-  *  - Versioned commit ([[commitVersion]], [[currentVersion]]): every
-  *    write lands a FRESH `data_v<N+1>` next to the current version and
-  *    commits it by creating [[CommittedMarker]] LAST, so a crashed
-  *    writer leaves an uncommitted directory that resolution ignores
-  *    and the next writer deletes. Superseded versions survive as the
-  *    grace period of readers that planned against them. Versions are
-  *    the one layout: a root holding the unversioned in-place `data`
-  *    directory is refused, never read.
+  *  - Versioned commit ([[commitVersion]], [[currentVersion]]) —
+  *    rollups, the streaming rollup sink and `Layout`'s multi-table
+  *    snapshots: every write lands a FRESH `data_v<N+1>` next to the
+  *    current version and commits it by creating [[CommittedMarker]]
+  *    LAST, so a crashed writer leaves an uncommitted directory that
+  *    resolution ignores and the next writer deletes. Superseded
+  *    versions survive as the grace period of readers that planned
+  *    against them. Versions are the one layout: a root holding an
+  *    older one is refused, never read.
   *
   * Error messages name paths as the caller built them (never
   * qualified), so they match what the caller passed in. */
@@ -67,10 +68,10 @@ private[graft] object DirCommit {
   val CommittedMarker = "_committed"
   private val VersionRe = "data_v([0-9]+)".r
 
-  private def versionDir(root: Path, v: Long) = new Path(root, s"data_v$v")
+  def versionDir(root: Path, v: Long) = new Path(root, s"data_v$v")
 
   /** The committed versions under `root`, ascending. */
-  private def committedVersions(fs: FileSystem, root: Path): Seq[Long] =
+  def committedVersions(fs: FileSystem, root: Path): Seq[Long] =
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq.flatMap { st =>
       st.getPath.getName match {
@@ -81,39 +82,41 @@ private[graft] object DirCommit {
       }
     }.sorted
 
-  /** The CURRENT version directory under `root`: the highest committed
-    * `data_v<N>` — `data_v0`, which never exists, when none is
-    * committed. One listing of the root (a handful of entries). A root
-    * with no committed version whose data sits in the unversioned
-    * in-place layout (`data`, or its `.old`/`.next` swap sides) is
+  /** The CURRENT version under `root` ([[versionDir]] names its
+    * directory): the highest committed `data_v<N>` — 0, whose
+    * directory never exists, when none is committed. One listing of
+    * the root (a handful of entries). A root with no committed version
+    * that holds an older layout — the unversioned in-place `data` (or
+    * its `.old`/`.next` swap sides), or a snapshot `manifest` — is
     * refused by path. */
-  def currentVersion(fs: FileSystem, root: Path): Path =
-    versionDir(root, committedVersions(fs, root).lastOption.getOrElse {
-      Seq("data", "data.old", "data.next")
+  def currentVersion(fs: FileSystem, root: Path): Long =
+    committedVersions(fs, root).lastOption.getOrElse {
+      Seq("data", "data.old", "data.next", "manifest")
         .find(d => fs.exists(new Path(root, d))).foreach { d =>
           throw new IllegalStateException(
-            s"rollup at $root holds the unversioned in-place layout " +
-              s"(`$d`, no committed data_v<N>); expected committed " +
+            s"artifact at $root holds an older layout (`$d`, no " +
+              s"committed data_v<N>); expected committed " +
               s"`data_v<N>/$CommittedMarker` directories — rebuild it " +
               "at a fresh path")
         }
       0L
-    })
+    }
 
   /** Write one new committed version under `root`: `write` fills the
     * fresh directory, the marker lands last, then superseded versions
-    * GC ([[gcVersions]]). Returns the committed directory. Two
-    * concurrent writers could pick the same next version number — the
+    * GC ([[gcVersions]]). Returns the committed version. A root in an
+    * older layout is refused ([[currentVersion]]). Two concurrent
+    * writers could pick the same next version number — the
     * single-writer contract. */
   def commitVersion(fs: FileSystem, root: Path, keepSuperseded: Long,
-      minAgeMs: Long)(write: Path => Unit): Path = {
-    val next = committedVersions(fs, root).lastOption.getOrElse(0L) + 1L
+      minAgeMs: Long)(write: Path => Unit): Long = {
+    val next = currentVersion(fs, root) + 1L
     val target = versionDir(root, next)
     fs.delete(target, true) // a crashed writer's uncommitted leftover
     write(target)
     writeText(fs, new Path(target, CommittedMarker), "")
     gcVersions(fs, root, next, keepSuperseded, minAgeMs)
-    target
+    next
   }
 
   /** Keep the just-committed version, the `keepSuperseded` versions

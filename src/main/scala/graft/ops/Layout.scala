@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -224,116 +225,74 @@ object Layout {
       .partitionBy(partCols: _*).parquet(path)
   }
 
-  /** Atomic MULTI-TABLE snapshot commit — the manifest pattern under
-    * every table format (Iceberg/Delta reduce to it): each table writes
-    * to a fresh versioned directory, and only after EVERY write
-    * succeeds does one atomic rename publish a manifest naming the new
-    * directories. Readers resolve through the manifest, so a crash
-    * after any subset of table writes leaves them on the previous
-    * consistent snapshot — no torn reads across tables, no cleanup
-    * required before retrying (orphan version directories are inert
-    * garbage, collectable any time). Version ids are monotonically
-    * increasing; the manifest is tiny (one line per table).
+  /** Atomic MULTI-TABLE snapshot commit through
+    * [[DirCommit.commitVersion]]: every table writes under one fresh
+    * `data_v<N>/<table>`, and the version's `_committed` marker lands
+    * only after EVERY write succeeds. Readers resolve the highest
+    * committed version and read all its tables from that one
+    * directory, so a crash after any subset of table writes leaves
+    * them on the previous consistent snapshot — no torn reads across
+    * tables; the next commit deletes the uncommitted leftover. Every
+    * committed version is kept until [[vacuumSnapshots]]. Returns the
+    * committed version.
     *
     * This is the cross-TABLE atomicity complement to
     * [[upsertPartitions]] (within-table idempotent re-lands) and the
     * streaming rollup sink's batch-id fence (exactly-once deltas). */
   def commitSnapshot(tables: Map[String, DataFrame], path: String): Long = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     require(tables.nonEmpty, "commitSnapshot needs at least one table")
-    require(tables.keys.forall(n => n.nonEmpty && !n.contains('/')
-        && !n.contains('\t') && !n.contains('\n') && n != ".."),
+    require(tables.keys.forall(n => n.nonEmpty && !n.contains('/') &&
+        !n.startsWith(".") && !n.startsWith("_")),
       "table names must be plain directory names")
-    val root = Paths.get(path)
-    Files.createDirectories(root)
-    val version = currentVersion(path) + 1
-    // 1. write every table's data under its new version directory
-    tables.toSeq.sortBy(_._1).foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$path/$name/v$version")
+    val (fs, root) = snapshotRoot(path)
+    DirCommit.commitVersion(fs, root, Long.MaxValue, 0L) { dir =>
+      tables.toSeq.sortBy(_._1).foreach { case (name, df) =>
+        df.write.parquet(new Path(dir, name).toString)
+      }
     }
-    // 2. publish: write the manifest aside, then ATOMIC_MOVE into place
-    val lines = tables.keys.toSeq.sorted.map(n => s"$n\tv$version")
-    val tmp = root.resolve(s".manifest.v$version.tmp")
-    Files.write(tmp, (s"version\t$version\n" + lines.mkString("\n"))
-      .getBytes("UTF-8"))
-    Files.move(tmp, root.resolve("manifest"),
-      StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    version
   }
 
-  /** Garbage-collect snapshot history: delete version directories older
-    * than the newest `keepLast` PUBLISHED versions. Directories ABOVE
-    * the published version are leftovers of failed commits — but they
-    * are indistinguishable from an IN-FLIGHT commit's half-written next
-    * version, so deleting them is OPT-IN (`dropTornAbove`): pass true
-    * only inside a maintenance window when no commit can be running
-    * (single-writer). The current manifest's version always survives
-    * regardless of `keepLast`. Readers pinned to vacuumed versions lose
-    * time travel, not correctness — the manifest never references a
-    * vacuumed directory. */
-  def vacuumSnapshots(path: String, keepLast: Int,
-      dropTornAbove: Boolean = false): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
+  /** Delete committed versions below the newest `keepLast`. Nothing at
+    * or above the current version goes: a directory above it may be an
+    * in-flight commit's next version (the next commit sweeps it if it
+    * is a crashed one). Readers pinned to vacuumed versions lose time
+    * travel, not correctness. */
+  def vacuumSnapshots(path: String, keepLast: Int): Unit = {
     require(keepLast >= 1, "keepLast must retain at least the current version")
-    val current = currentVersion(path)
-    val cutoff = current - keepLast + 1
-    val root = Paths.get(path)
-    if (!Files.exists(root)) return
-    // every directory stream is drained to a List and closed before use
-    // (the r6 Files.walk handle-leak lesson)
-    def listDirs(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
-      val s = Files.list(p)
-      try s.iterator().asScala.filter(Files.isDirectory(_)).toList
-      finally s.close()
-    }
-    def deleteTree(p: java.nio.file.Path): Unit = {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.toList.foreach(Files.delete)
-      finally s.close()
-    }
-    listDirs(root).foreach { tableDir =>
-      listDirs(tableDir)
-        .filter { v =>
-          val n = v.getFileName.toString
-          n.startsWith("v") && n.length > 1 && n.drop(1).forall(_.isDigit) && {
-            val ver = n.drop(1).toLong
-            // torn-orphan deletion (ver > current) is OPT-IN: a vacuum
-            // racing an in-flight commitSnapshot would destroy the new
-            // version's directories before its manifest publishes
-            // (r11 self-review) — only pass dropTornAbove when no
-            // commit can be running (single-writer maintenance window)
-            ver < cutoff || (dropTornAbove && ver > current)
-          }
-        }
-        .foreach(deleteTree)
-    }
+    val (fs, root) = snapshotRoot(path)
+    DirCommit.committedVersions(fs, root).dropRight(keepLast)
+      .foreach(v => fs.delete(DirCommit.versionDir(root, v), true))
   }
 
-  /** The committed snapshot's version (0 when nothing is published). */
+  /** The committed snapshot's version (0 when nothing is committed). */
   def currentVersion(path: String): Long = {
-    val m = java.nio.file.Paths.get(path, "manifest")
-    if (!java.nio.file.Files.exists(m)) 0L
-    else new String(java.nio.file.Files.readAllBytes(m), "UTF-8")
-      .linesIterator.next().split('\t')(1).toLong
+    val (fs, root) = snapshotRoot(path)
+    DirCommit.currentVersion(fs, root)
   }
 
-  /** Read one table of the CURRENT committed snapshot. Writers landing
-    * a new version concurrently are invisible until their manifest
-    * rename. */
+  /** Read one table of the CURRENT committed snapshot. A commit landing
+    * concurrently is invisible until its marker. */
   def readSnapshot(spark: SparkSession, path: String,
       table: String): DataFrame = {
-    val m = java.nio.file.Paths.get(path, "manifest")
-    require(java.nio.file.Files.exists(m),
-      s"no committed snapshot at $path")
-    val dirs = new String(java.nio.file.Files.readAllBytes(m), "UTF-8")
-      .linesIterator.drop(1)
-      .map(_.split('\t')).map(a => a(0) -> a(1)).toMap
-    val v = dirs.getOrElse(table, throw new NoSuchElementException(
-      s"table '$table' not in snapshot at $path (has ${dirs.keys.toSeq.sorted})"))
-    spark.read.parquet(s"$path/$table/$v")
+    val (fs, root) = snapshotRoot(path)
+    val v = DirCommit.currentVersion(fs, root)
+    require(v > 0, s"no committed snapshot at $path")
+    val dir = DirCommit.versionDir(root, v)
+    if (!fs.exists(new Path(dir, table))) {
+      val has = fs.listStatus(dir).filter(_.isDirectory)
+        .map(_.getPath.getName).sorted
+      throw new NoSuchElementException(s"table '$table' not in snapshot " +
+        s"at $path (has ${has.mkString(", ")})")
+    }
+    spark.read.parquet(new Path(dir, table).toString)
+  }
+
+  /** A snapshot root and its own filesystem, configured from the
+    * active session. */
+  private def snapshotRoot(path: String): (FileSystem, Path) = {
+    val root = new Path(path)
+    (root.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration),
+      root)
   }
 
   /** Trainer-facing sharded export: write `df` into `nShards`
@@ -400,8 +359,9 @@ object Layout {
       manifest.collect().map(r =>
         s"${r.getLong(0)}\t${r.getLong(1)}\t${r.getLong(2)}\t${r.getLong(3)}")
         .mkString("\n")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_manifest.tsv"), lines)
+    val out = new Path(path, "_manifest.tsv")
+    DirCommit.writeText(out.getFileSystem(
+      df.sparkSession.sparkContext.hadoopConfiguration), out, lines)
     manifest
   }
 }

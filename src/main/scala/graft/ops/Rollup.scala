@@ -139,8 +139,8 @@ object Rollup {
   private[graft] def currentDataPath(spark: SparkSession,
       rollupPath: String): String = {
     val root = new org.apache.hadoop.fs.Path(rollupPath)
-    DirCommit.currentVersion(
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+    DirCommit.versionDir(root, DirCommit.currentVersion(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root))
       .toString
   }
 

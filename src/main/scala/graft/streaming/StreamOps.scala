@@ -533,21 +533,16 @@ object StreamOps extends org.apache.spark.internal.Logging {
       val compact =
         new org.apache.hadoop.fs.Path(s"$dir/$batchId.compact")
       val fs = plain.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val p = if (fs.exists(plain)) plain
-        else if (fs.exists(compact)) compact
-        else return Nil
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
       // compact Spark-written JSON; paths are URIs (no raw quotes)
       val pathRe = "\"path\"\\s*:\\s*\"([^\"]+)\"".r
       val bidRe = "\"batchId\"\\s*:\\s*(-?\\d+)".r
-      text.linesIterator.flatMap { line =>
-        val bid = bidRe.findFirstMatchIn(line).map(_.group(1).toLong)
-        if (bid.contains(batchId))
-          pathRe.findFirstMatchIn(line).map(_.group(1))
-        else None
-      }.toSeq
+      DirCommit.readText(fs, plain).orElse(DirCommit.readText(fs, compact))
+        .toSeq.flatMap(_.linesIterator.flatMap { line =>
+          val bid = bidRe.findFirstMatchIn(line).map(_.group(1).toLong)
+          if (bid.contains(batchId))
+            pathRe.findFirstMatchIn(line).map(_.group(1))
+          else None
+        })
     } catch { case e: java.io.IOException =>
       // a FAILED read of an EXISTING metadata log is not the benign
       // no-log (memory stream) case: the processed-files snapshot only
@@ -1011,17 +1006,10 @@ object StreamOps extends org.apache.spark.internal.Logging {
       spark: org.apache.spark.sql.SparkSession,
       checkpoint: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$checkpoint/metadata")
-    def read(): String = {
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) ""
-      else {
-        val in = fs.open(p)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        "\"id\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(text)
-          .map(_.group(1)).getOrElse("")
-      }
-    }
+    def read(): String = DirCommit.readText(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .flatMap("\"id\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(_))
+      .map(_.group(1)).getOrElse("")
     try read() catch {
       case _: java.io.IOException =>
         // give a transient blip a window to clear before the retry —
@@ -1093,10 +1081,7 @@ object StreamOps extends org.apache.spark.internal.Logging {
     val fp = inputFingerprint(batch, idCol, textCol)
     val fpFile = new org.apache.hadoop.fs.Path(s"$dir/_input_fp_v2")
     def fpFileMatches(): Boolean = scala.util.Try {
-      val in = fs.open(fpFile)
-      val line = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim finally in.close()
-      val parts = line.split("\\|", 4)
+      val parts = DirCommit.readText(fs, fpFile).get.split("\\|", 4)
       parts.length == 4 && parts(0).toLong == fp._1 &&
         parts(1).toLong == fp._2 && parts(2).toLong == fp._3 &&
         parts(3) == runId
@@ -1117,9 +1102,7 @@ object StreamOps extends org.apache.spark.internal.Logging {
       // Spark job): a crash between the two reads as a mismatch on
       // replay and recomputes, the safe direction.
       compute.write.mode("overwrite").parquet(dir)
-      val out = fs.create(fpFile, true)
-      try out.write(s"${fp._1}|${fp._2}|${fp._3}|$runId\n"
-        .getBytes("UTF-8")) finally out.close()
+      DirCommit.writeText(fs, fpFile, s"${fp._1}|${fp._2}|${fp._3}|$runId")
     }
     deliver(spark.read.parquet(dir))
   }

@@ -39,7 +39,7 @@ class BenchSpec extends SparkSpec {
   test("a run whose fixture is missing records no sample; the others still run") {
     // an sf dir with documents but no events: the two events entries
     // fail in their setup
-    val sf = Files.createTempDirectory("graft-benchspec-sf")
+    val sf = tempDir("graft-benchspec-sf")
     try {
       Files.copy(Paths.get(s"$sfDir/documents.parquet"),
         sf.resolve("documents.parquet"))

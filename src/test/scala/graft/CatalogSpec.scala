@@ -108,7 +108,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("catalog save/load round-trips file-backed registrations") {
-    val reg = Files.createTempFile("graft-catalog", ".tsv").toString
+    val reg = tempDir("graft-catalog").resolve("catalog.tsv").toString
     val c = new Catalog(spark)
       .addParquetTable("cat_nation", s"$sfDir/nation.parquet")
       .addCsvTable("cat_people", s"$dataDir/people.csv")

@@ -172,8 +172,7 @@ class DedupSpec extends SparkSpec {
     val corpus = Seq(
       (1L, "c1 a b c d e f g h c2"),
       (2L, "p q r s t u v w")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-gramidx-spec").toString
+    val tmp = tempDir("graft-gramidx-spec").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 16)
     val batch = Seq(
       (101L, "lead a b c d e f g h tail"),     // corpus hit: excised
@@ -205,8 +204,7 @@ class DedupSpec extends SparkSpec {
   test("gram-index lifecycle: appended batches dedup later batches; " +
       "the broadcast gate's shuffle regime selects identically") {
     val corpus = Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-gramidx-life").toString
+    val tmp = tempDir("graft-gramidx-life").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 16)
     // batch 1 carries a NOVEL passage — it survives its own excision
     val passage = "w1 w2 w3 w4 w5 w6 w7 w8"
@@ -246,8 +244,7 @@ class DedupSpec extends SparkSpec {
     assert(shuffled == again, "regimes diverged")
     // the grown index equals a fresh rebuild over corpus ∪ batch1 for
     // every future probe (the lifecycle's correctness statement)
-    val tmp2 = java.nio.file.Files
-      .createTempDirectory("graft-gramidx-life2").toString
+    val tmp2 = tempDir("graft-gramidx-life2").toString
     Dedup.saveGramIndex(corpus.unionByName(batch1), tmp2, "text",
       minLen = 8, buckets = 16)
     val rebuilt = Dedup.exciseAgainstIndex(batch2, tmp2, "doc_id",
@@ -262,8 +259,7 @@ class DedupSpec extends SparkSpec {
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (2L, "one two three four five six seven eight nine ten"))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-sigidx-life").toString
+    val tmp = tempDir("graft-sigidx-life").toString
     Dedup.saveSignatureIndex(corpus, tmp, "doc_id", "text")
     // batch 1: a near-copy of nothing in the corpus — passes, appended
     val b1Text = "red orange yellow green blue indigo violet ultraviolet"
@@ -447,8 +443,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("reliable-checkpoint path converges identically to the default") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt").toString
     val pairs = Seq((0L, 1L), (1L, 2L), (5L, 6L), (9L, 3L), (3L, 2L))
       .toDF("id_a", "id_b")
     val default = Dedup.nearDupClusters(pairs)
@@ -683,7 +678,7 @@ class DedupSpec extends SparkSpec {
       mk(101L, "the quick brown fox jumps over the lazy cat again and again"),
       mk(102L, "entirely novel text that matches nothing in the index"))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sigidx").toString
+    val tmp = tempDir("graft-sigidx").toString
     Dedup.saveSignatureIndex(corpus, tmp, "doc_id", "text")
     val inc = Dedup.incrementalNearDups(batch, tmp, "doc_id", "text",
         threshold = 0.5)
@@ -816,8 +811,7 @@ class DedupSpec extends SparkSpec {
       "throws loudly") {
     val corpus = Seq((1L, "a b c d e f g h i j"),
       (2L, "k l m n o p q r s t")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-gramidx-cas").toString
+    val tmp = tempDir("graft-gramidx-cas").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 16)
     assert(Dedup.indexGeneration(spark, tmp) == 0L)
     // the race: writer A reads generation 0; writer B claims g1 and
@@ -836,8 +830,7 @@ class DedupSpec extends SparkSpec {
     Dedup.appendToGramIndex(batch, tmp, "doc_id", "text")
     assert(Dedup.indexGeneration(spark, tmp) == 2L)
     // same CAS on the signature index
-    val tmp2 = java.nio.file.Files
-      .createTempDirectory("graft-sigidx-cas").toString
+    val tmp2 = tempDir("graft-sigidx-cas").toString
     Dedup.saveSignatureIndex(corpus, tmp2, "doc_id", "text")
     Dedup.claimGenerationAt(spark, tmp2, 1L)
     intercept[IllegalStateException](
@@ -854,8 +847,7 @@ class DedupSpec extends SparkSpec {
     // leaves bucket rows whose replay re-appends both halves
     val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-sigidx-torn").toString
+    val tmp = tempDir("graft-sigidx-torn").toString
     Dedup.saveSignatureIndex(corpus, tmp, "doc_id", "text")
     val b1Text = "red orange yellow green blue indigo violet ultraviolet"
     val batch1 = Seq((101L, b1Text)).toDF("doc_id", "text")
@@ -890,8 +882,7 @@ class DedupSpec extends SparkSpec {
       (1L, "the quick brown fox jumps over the lazy dog again today"),
       (2L, "pack my box with five dozen liquor jugs right now ok"))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-gramidx-compact").toString
+    val tmp = tempDir("graft-gramidx-compact").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 8)
     // fragment: several small appends
     for (i <- 0 until 5) {
@@ -936,7 +927,7 @@ class DedupSpec extends SparkSpec {
       (1L, "the quick brown fox jumps over the lazy dog again today"),
       (2L, "pack my box with five dozen liquor jugs right now ok"))
       .toDF("doc_id", "text")
-    val tmp = Files.createTempDirectory("graft-gramidx-crash").toString
+    val tmp = tempDir("graft-gramidx-crash").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 8)
     Dedup.appendToGramIndex(Seq((100L, "novel passage with words " +
       "wa wb wc wd")).toDF("doc_id", "text"), tmp, "doc_id", "text")
@@ -992,8 +983,7 @@ class DedupSpec extends SparkSpec {
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (2L, "one two three four five six seven eight nine ten"))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-sigidx-compact").toString
+    val tmp = tempDir("graft-sigidx-compact").toString
     Dedup.saveSignatureIndex(corpus, tmp, "doc_id", "text")
     for (i <- 0 until 4) {
       val b = Seq((100L + i, s"fresh document $i carrying its own " +
@@ -1035,8 +1025,7 @@ class DedupSpec extends SparkSpec {
     // compacting under it would drop its rows (judge finding, r12)
     val corpus = Seq((1L, "the quick brown fox jumps over the lazy " +
       "dog again today")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-gramidx-quiet").toString
+    val tmp = tempDir("graft-gramidx-quiet").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 8)
     val gen = java.nio.file.Paths.get(tmp, "gen")
     java.nio.file.Files.createDirectories(gen)
@@ -1056,8 +1045,7 @@ class DedupSpec extends SparkSpec {
       "releasing their claim") {
     val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta eta " +
       "theta iota kappa")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-gramidx-marker").toString
+    val tmp = tempDir("graft-gramidx-marker").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 8)
     val gen = java.nio.file.Paths.get(tmp, "gen")
     java.nio.file.Files.createDirectories(gen)
@@ -1090,8 +1078,7 @@ class DedupSpec extends SparkSpec {
     // counter (a later append would re-claim 2)
     val corpus = Seq((1L, "the quick brown fox jumps over the lazy " +
       "dog again today")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-gramidx-postswap").toString
+    val tmp = tempDir("graft-gramidx-postswap").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 4)
     Dedup.appendToGramIndex(Seq((2L, "pack my box with five dozen " +
       "liquor jugs ok")).toDF("doc_id", "text"), tmp, "doc_id", "text")
@@ -1133,8 +1120,7 @@ class DedupSpec extends SparkSpec {
     // ClaimHistoryKeep scaladoc states the same assumption).
     val corpus = Seq((1L, "the quick brown fox jumps over the lazy " +
       "dog again today")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-gramidx-prune").toString
+    val tmp = tempDir("graft-gramidx-prune").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 8)
     val gen = java.nio.file.Paths.get(tmp, "gen")
     java.nio.file.Files.createDirectories(gen)
@@ -1168,8 +1154,7 @@ class DedupSpec extends SparkSpec {
       assert(e.getMessage.contains(s"index meta at $path/meta holds") &&
         e.getMessage.contains("`generation`"), e.getMessage)
     }
-    val gramIdx = java.nio.file.Files
-      .createTempDirectory("graft-gram-nogen").toString
+    val gramIdx = tempDir("graft-gram-nogen").toString
     Dedup.saveGramIndex(corpus, gramIdx, "text", minLen = 8, buckets = 8)
     Seq((8, 8)).toDF("min_len", "n_buckets").coalesce(1)
       .write.mode("overwrite").parquet(s"$gramIdx/meta")
@@ -1178,8 +1163,7 @@ class DedupSpec extends SparkSpec {
     refused(gramIdx)(Dedup.appendToGramIndex(batch, gramIdx, "doc_id",
       "text"))
     refused(gramIdx)(Dedup.indexGeneration(spark, gramIdx))
-    val sigIdx = java.nio.file.Files
-      .createTempDirectory("graft-sig-nogen").toString
+    val sigIdx = tempDir("graft-sig-nogen").toString
     Dedup.saveSignatureIndex(corpus, sigIdx, "doc_id", "text")
     Seq((3, 16, 4)).toDF("shingle_n", "bands", "rows_per_band")
       .coalesce(1).write.mode("overwrite").parquet(s"$sigIdx/meta")
@@ -1218,7 +1202,7 @@ class DedupSpec extends SparkSpec {
       assert(e.getMessage.contains(keys(1)), e.getMessage)
     } finally spark.conf.unset(keys(1))
     // the rollup GC floor fails the same way, before anything is written
-    val rp = java.nio.file.Files.createTempDirectory("graft-gc-conf")
+    val rp = tempDir("graft-gc-conf")
       .resolve("r").toString
     spark.conf.set(Graft.RollupGcMinAgeMs.key, "10m")
     try {

@@ -189,7 +189,7 @@ class EngineSpec extends SparkSpec {
   }
 
   test("write facade round-trips parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_write").toString
+    val dir = tempDir("graft_write").toString
     val out = s"$dir/people_out"
     people.filter(E.col("age") >= E.lit(24)).write(out)
     val back = spark.read.parquet(out)
@@ -322,7 +322,7 @@ class EngineSpec extends SparkSpec {
   }
 
   test("json and orc sources register and read back") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-src")
+    val tmp = tempDir("graft-src")
     val json = tmp.resolve("t.jsonl")
     java.nio.file.Files.writeString(json,
       """{"id":1,"name":"a"}

@@ -401,8 +401,7 @@ class GraphSpec extends SparkSpec {
 
   test("pageRank and bfsHops converge identically under reliable " +
       "checkpointing") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-graph-ckpt").toString
+    val dir = tempDir("graft-graph-ckpt").toString
     val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
       ("d", "a")).toDF("src", "dst")
     // the exact-integer rank loop makes equality BIT equality, so the

@@ -54,7 +54,7 @@ class HllSpec extends SparkSpec {
   }
 
   test("persisted sketch parquet merges with a fresh batch without rescanning") {
-    val dir = java.nio.file.Files.createTempDirectory("hll-sketch").toString
+    val dir = tempDir("hll-sketch").toString
     Hll.sketch((1 to 600).map(_.toLong).toDF("k"), "k", 6)
       .write.mode("overwrite").parquet(dir)
     val standing = spark.read.parquet(dir)

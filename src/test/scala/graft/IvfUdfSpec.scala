@@ -62,7 +62,7 @@ class IvfUdfSpec extends SparkSpec {
     val oneShot = Similarity.ivfTopK(emb, "vec_id", "embedding", query, 5,
       nClusters = 4, nProbe = 2, iters = 2).as[(Long, Double)].collect().toSeq
     val model = Ivf.index(emb, "vec_id", "embedding", nClusters = 4, iters = 2)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-rt").toString
+    val tmp = tempDir("graft-ivf-rt").toString
     Ivf.save(model, tmp)
     val loaded = Ivf.load(spark, tmp)
     // the quantizer survives the round-trip bit-exactly (float parquet)
@@ -78,7 +78,7 @@ class IvfUdfSpec extends SparkSpec {
     import graft.ops.Ivf
     val emb = clustered.toDF("vec_id", "embedding")
     val query = clustered.head._2
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-add").toString
+    val tmp = tempDir("graft-ivf-add").toString
     Ivf.save(Ivf.index(emb, "vec_id", "embedding", nClusters = 4, iters = 2), tmp)
     def files(): Set[String] = {
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp, "index"))
@@ -122,7 +122,7 @@ class IvfUdfSpec extends SparkSpec {
   test("batched probe equals per-query probes on a loaded index") {
     import graft.ops.Ivf
     val emb = clustered.toDF("vec_id", "embedding")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-batch").toString
+    val tmp = tempDir("graft-ivf-batch").toString
     Ivf.save(Ivf.index(emb, "vec_id", "embedding", nClusters = 4, iters = 2), tmp)
     val model = Ivf.load(spark, tmp)
     val queries = Seq(0L -> clustered.head._2, 1L -> clustered(13)._2,

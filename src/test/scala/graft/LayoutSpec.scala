@@ -15,7 +15,7 @@ class LayoutSpec extends SparkSpec {
   private lazy val src = spark.read.parquet(s"$sfDir/lineitem.parquet")
 
   private def clusteredPath(): String = {
-    val path = java.nio.file.Files.createTempDirectory("graft-layout-spec")
+    val path = tempDir("graft-layout-spec")
       .resolve("lineitem").toString
     Layout.writeClustered(src, path, 4, "l_shipdate")
     path
@@ -73,7 +73,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("z-order readback equals the source; schema untouched") {
-    val path = java.nio.file.Files.createTempDirectory("graft-zorder-spec")
+    val path = tempDir("graft-zorder-spec")
       .resolve("lineitem").toString
     Layout.writeZOrdered(src, path, 8, "l_orderkey", "l_partkey")
     val back = spark.read.parquet(path)
@@ -96,9 +96,9 @@ class LayoutSpec extends SparkSpec {
         .groupBy("f")
         .agg(min("v").as("lo"), max("v").as("hi"), count(lit(1)).as("n"))
         .select("lo", "hi", "n").as[(Long, Long, Long)].collect().toSet
-    val p1 = java.nio.file.Files.createTempDirectory("graft-zdet-spec")
+    val p1 = tempDir("graft-zdet-spec")
       .resolve("a").toString
-    val p2 = java.nio.file.Files.createTempDirectory("graft-zdet-spec")
+    val p2 = tempDir("graft-zdet-spec")
       .resolve("b").toString
     Layout.writeZOrdered(src, p1, 8, "l_orderkey", "l_partkey")
     // interleave unrelated jobs so the second write's RDD ids differ —
@@ -109,7 +109,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("z-order files cover small rectangles on BOTH dimensions") {
-    val path = java.nio.file.Files.createTempDirectory("graft-zorder-spec")
+    val path = tempDir("graft-zorder-spec")
       .resolve("lineitem").toString
     Layout.writeZOrdered(src, path, 8, "l_orderkey", "l_partkey")
     def spans(p: String, c: String): Seq[Long] =
@@ -132,14 +132,14 @@ class LayoutSpec extends SparkSpec {
     assert(mean(okSpans) < okGlobal * 0.8, s"orderkey spans $okSpans vs $okGlobal")
     assert(mean(pkSpans) < pkGlobal * 0.8, s"partkey spans $pkSpans vs $pkGlobal")
     // contrast: cluster on orderkey alone and partkey files stay full-span
-    val flat = java.nio.file.Files.createTempDirectory("graft-zorder-spec")
+    val flat = tempDir("graft-zorder-spec")
       .resolve("flat").toString
     Layout.writeClustered(src, flat, 8, "l_orderkey")
     assert(spans(flat, "l_partkey").exists(_ >= pkGlobal * 9 / 10))
   }
 
   test("compact merges a fragmented directory without changing the rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact-spec")
+    val dir = tempDir("graft-compact-spec")
     val fragged = dir.resolve("fragged").toString
     src.limit(5000).repartition(40).write.parquet(fragged)
     def nFiles(p: String) =
@@ -156,7 +156,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("3-dim z-order files cover small boxes on all three dimensions") {
-    val path = java.nio.file.Files.createTempDirectory("graft-zorder3-spec")
+    val path = tempDir("graft-zorder3-spec")
       .resolve("lineitem").toString
     Layout.writeZOrderedN(src, path, 8,
       Seq("l_orderkey", "l_partkey", "l_suppkey"))
@@ -181,7 +181,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("writeWithBloom writes a bloom filter for the named column only") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom-spec")
+    val dir = tempDir("graft-bloom-spec")
       .resolve("t").toString
     // a 1 KB dictionary page forces the encoder off the dictionary path
     // at this fixture's cardinality — parquet-mr only materializes a
@@ -213,7 +213,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("upsertPartitions replaces only the batch's partitions, idempotently") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert-spec")
+    val dir = tempDir("graft-upsert-spec")
       .resolve("t").toString
     val base = Seq((1, "a"), (2, "b"), (3, "a"), (4, "c"))
       .toDF("id", "part")
@@ -246,7 +246,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("snapshot commit: cross-table atomicity, torn writes invisible") {
-    val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
+    val root = tempDir("graft-snap").toString
     val a1 = Seq((1, "x")).toDF("id", "v")
     val b1 = Seq((1, 10L)).toDF("id", "n")
     assert(Layout.commitSnapshot(Map("a" -> a1, "b" -> b1), root) == 1L)
@@ -259,9 +259,9 @@ class LayoutSpec extends SparkSpec {
       .as[(Int, String)].collect().toSet == Set((1, "x"), (2, "y")))
     assert(Layout.readSnapshot(spark, root, "b")
       .as[(Int, Long)].collect().toSet == Set((2, 20L)))
-    // a torn v3 (one table's data lands, manifest never renames):
+    // a torn v3 (one table's data lands, the marker never does):
     // readers of BOTH tables stay on v2 — no cross-table mix
-    Seq((99, "torn")).toDF("id", "v").write.parquet(s"$root/a/v3")
+    Seq((99, "torn")).toDF("id", "v").write.parquet(s"$root/data_v3/a")
     assert(Layout.currentVersion(root) == 2L)
     assert(Layout.readSnapshot(spark, root, "a")
       .as[(Int, String)].collect().toSet == Set((1, "x"), (2, "y")))
@@ -276,35 +276,28 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("vacuumSnapshots: old history and torn orphans go, current survives") {
-    val root = java.nio.file.Files.createTempDirectory("graft-snap-gc").toString
+    val root = tempDir("graft-snap-gc").toString
     val t = Seq((1, "x")).toDF("id", "v")
     (1 to 4).foreach(_ => Layout.commitSnapshot(Map("a" -> t), root))
-    // a directory ABOVE the published version could be a torn orphan OR
-    // an in-flight commit — the default vacuum must leave it alone
-    // (deleting a racing commit's half-written version would corrupt
-    // the next publish), and the opt-in maintenance-window flag removes
-    // it (r11 self-review)
-    Seq((9, "torn")).toDF("id", "v").write.parquet(s"$root/a/v9")
+    // a directory ABOVE the committed version could be a torn orphan OR
+    // an in-flight commit — vacuum must leave it alone (deleting a
+    // racing commit's half-written version would corrupt its commit);
+    // the next commit sweeps it
+    Seq((9, "torn")).toDF("id", "v").write.parquet(s"$root/data_v9/a")
     Layout.vacuumSnapshots(root, keepLast = 2)
-    def dirs = {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.list(java.nio.file.Paths.get(s"$root/a"))
-      try s.iterator().asScala.map(_.getFileName.toString).toSet
-      finally s.close()
-    }
-    assert(dirs == Set("v3", "v4", "v9"), s"got $dirs")
-    Layout.vacuumSnapshots(root, keepLast = 2, dropTornAbove = true)
-    assert(dirs == Set("v3", "v4"), s"got $dirs")
-    // the published snapshot still reads
+    def dirs = new java.io.File(root).list().toSet
+    assert(dirs == Set("data_v3", "data_v4", "data_v9"), s"got $dirs")
+    // the committed snapshot still reads
     assert(Layout.readSnapshot(spark, root, "a").count() == 1L)
     assert(Layout.currentVersion(root) == 4L)
+    assert(Layout.commitSnapshot(Map("a" -> t), root) == 5L)
+    assert(dirs == Set("data_v3", "data_v4", "data_v5"), s"got $dirs")
     intercept[IllegalArgumentException](Layout.vacuumSnapshots(root, 0))
   }
 
   test("exportShards: consumer re-derives the manifest from the shards") {
     import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-export-spec").toString
+    val out = tempDir("graft-export-spec").toString
     val df = spark.range(0, 500).toDF("id")
     val manifest = Layout.exportShards(df, out, "id", nShards = 4)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1),
@@ -327,5 +320,43 @@ class LayoutSpec extends SparkSpec {
     assert(redo == manifest, "shard content must prove the manifest")
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(out, "_manifest.tsv")))
+  }
+
+  test("a snapshot at a file: URI commits under the URI's path") {
+    val root = tempDir("graft-snap-uri")
+    val uri = root.resolve("snap").toUri.toString
+    assert(uri.startsWith("file:/"))
+    val t = Seq((1, "x")).toDF("id", "v")
+    assert(Layout.commitSnapshot(Map("a" -> t), uri) == 1L)
+    assert(Layout.currentVersion(uri) == 1L)
+    assert(Layout.readSnapshot(spark, uri, "a")
+      .as[(Int, String)].collect().toSeq == Seq((1, "x")))
+    assert(root.resolve("snap/data_v1/_committed").toFile.exists())
+    assert(!new java.io.File("file:").exists(),
+      "no relative file: tree in the working directory")
+  }
+
+  test("exportShards at a file: URI writes its manifest under the URI's path") {
+    val root = tempDir("graft-export-uri")
+    val uri = root.resolve("out").toUri.toString
+    Layout.exportShards(spark.range(0, 50).toDF("id"), uri, "id", nShards = 2)
+    assert(root.resolve("out/_manifest.tsv").toFile.exists())
+    assert(!new java.io.File("file:").exists())
+  }
+
+  test("a snapshot root in the manifest layout is refused by path") {
+    val root = tempDir("graft-snap-old").toString
+    Seq((1, "x")).toDF("id", "v").write.parquet(s"$root/a/v1")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "manifest"),
+      "version\t1\na\tv1")
+    val refusals = Seq(
+      intercept[IllegalStateException](Layout.currentVersion(root)),
+      intercept[IllegalStateException](Layout.readSnapshot(spark, root, "a")),
+      intercept[IllegalStateException](
+        Layout.commitSnapshot(Map("a" -> spark.range(1).toDF("id")), root)))
+    refusals.foreach(e => assert(e.getMessage.contains(s"artifact at $root ") &&
+      e.getMessage.contains("`manifest`"), e.getMessage))
+    assert(new java.io.File(root).list().toSet == Set("a", "manifest"),
+      "a refused root is left untouched")
   }
 }

@@ -132,7 +132,7 @@ class PlanSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val q = emb.where(col("vec_id") === 0).select(col("embedding"))
       .head.getSeq[Float](0).toArray
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-plan").toString
+    val tmp = tempDir("graft-ivf-plan").toString
     Ivf.save(Ivf.index(emb, "vec_id", "embedding", nClusters = 4, iters = 1), tmp)
     val p = Ivf.probe(Ivf.load(spark, tmp), q, 5, 2)
       .queryExecution.explainString(FormattedMode)
@@ -547,8 +547,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     Graft.init(spark)
     val basePath = s"$sfDir/documents.parquet"
-    val roll = java.nio.file.Files
-      .createTempDirectory("graft-rollup-plan").toString
+    val roll = tempDir("graft-rollup-plan").toString
     graft.ops.Rollup.saveRollup(spark.read.parquet(basePath), roll,
       dims = Seq("lang", "source"), measures = Seq("n_chars"))
     graft.ops.Rollup.register(spark, basePath, roll)
@@ -583,8 +582,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     Graft.init(spark)
     val basePath = s"$sfDir/documents.parquet"
-    val roll = java.nio.file.Files
-      .createTempDirectory("graft-rollup-plan-avg").toString
+    val roll = tempDir("graft-rollup-plan-avg").toString
     graft.ops.Rollup.saveRollup(spark.read.parquet(basePath), roll,
       dims = Seq("lang", "source"), measures = Seq("n_chars"))
     graft.ops.Rollup.register(spark, basePath, roll)
@@ -617,8 +615,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     Graft.init(spark)
     val basePath = s"$sfDir/documents.parquet"
-    val roll = java.nio.file.Files
-      .createTempDirectory("graft-rollup-plan-dist").toString
+    val roll = tempDir("graft-rollup-plan-dist").toString
     graft.ops.Rollup.saveRollup(spark.read.parquet(basePath), roll,
       dims = Seq("lang", "source"), measures = Seq("n_chars"))
     graft.ops.Rollup.register(spark, basePath, roll)
@@ -664,8 +661,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     Graft.init(spark)
     val basePath = s"$sfDir/documents.parquet"
-    val roll = java.nio.file.Files
-      .createTempDirectory("graft-rollup-plan-star").toString
+    val roll = tempDir("graft-rollup-plan-star").toString
     graft.ops.Rollup.saveRollup(spark.read.parquet(basePath), roll,
       dims = Seq("lang", "source"), measures = Seq("n_chars"))
     graft.ops.Rollup.register(spark, basePath, roll)

@@ -62,7 +62,7 @@ class PqSpec extends SparkSpec {
     val direct = Pq.adcTopK(emb, "vec_id", "embedding", model, query, 5)
       .collect().map(_.toString).toSeq
     // persist codes (the 100 TB layout: codes hot, vectors cold)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pq").toString + "/codes"
+    val tmp = tempDir("graft-pq").toString + "/codes"
     Pq.encode(emb, "vec_id", "embedding", model).write.parquet(tmp)
     val stored = Pq.codesTopK(spark.read.parquet(tmp), "vec_id", model,
       query, 5).collect().map(_.toString).toSeq

@@ -153,7 +153,7 @@ class RetrievalSpec extends SparkSpec {
     val docs = Seq(
       (1L, "alpha beta gamma"), (2L, "alpha delta"), (3L, "beta gamma"),
       (4L, "alpha beta unrelated words here")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-invidx").toString
+    val tmp = tempDir("graft-invidx").toString
     Retrieval.buildIndex(docs, tmp, nBuckets = 16)
     val queries = Map(1L -> "alpha beta", 2L -> "gamma", 3L -> "absent")
     val viaIndex = Retrieval.searchIndex(spark, tmp, queries, nBuckets = 16)
@@ -170,7 +170,7 @@ class RetrievalSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"))
     // a rebuilt index with different bucketing answers identically
-    val tmp2 = java.nio.file.Files.createTempDirectory("graft-invidx2").toString
+    val tmp2 = tempDir("graft-invidx2").toString
     Retrieval.buildIndex(docs, tmp2, nBuckets = 3)
     assert(Retrieval.searchIndex(spark, tmp2, queries, nBuckets = 3)
       .as[(Long, Long)].collect().toSet == direct)
@@ -178,7 +178,7 @@ class RetrievalSpec extends SparkSpec {
 
   test("appendToIndex: increment lands without rewriting base files") {
     val base = Seq((1L, "alpha beta"), (2L, "alpha")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-invidx-app").toString
+    val tmp = tempDir("graft-invidx-app").toString
     Retrieval.buildIndex(base, tmp, nBuckets = 4)
     val before = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
     val baseFiles = try {
@@ -208,7 +208,7 @@ class RetrievalSpec extends SparkSpec {
 
   test("compactIndex: append-fragmented index answers identically, fewer files") {
     import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-invidx-cmp").toString
+    val tmp = tempDir("graft-invidx-cmp").toString
     Retrieval.buildIndex(Seq((1L, "alpha beta")).toDF("doc_id", "text"),
       tmp, nBuckets = 2)
     (2 to 9).foreach(i => Retrieval.appendToIndex(
@@ -232,8 +232,7 @@ class RetrievalSpec extends SparkSpec {
   test("searchIndex: duplicate postings never fake a conjunctive match; " +
       "compactIndex is re-runnable after a crashed swap") {
     import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-invidx-dup").toString
+    val tmp = tempDir("graft-invidx-dup").toString
     // doc 1 contains ONLY alpha; re-ingesting it duplicates its
     // (alpha, 1) posting — with row counting, 'alpha beta' would have
     // matched doc 1 (2 rows = n_need) despite beta never occurring
@@ -259,7 +258,7 @@ class RetrievalSpec extends SparkSpec {
   test("compactIndex and appendToIndex restore a swap that crashed " +
       "between its renames") {
     import java.nio.file.{Files, Paths}
-    val tmp = Files.createTempDirectory("graft-invidx-crash").toString
+    val tmp = tempDir("graft-invidx-crash").toString
     Retrieval.buildIndex(Seq((1L, "alpha beta"), (2L, "beta gamma"))
       .toDF("doc_id", "text"), tmp, nBuckets = 2)
     Retrieval.appendToIndex(Seq((3L, "alpha gamma")).toDF("doc_id", "text"),

@@ -36,7 +36,7 @@ class RollupSpec extends SparkSpec {
     * written to parquet so the rule sees a real file-source relation. */
   private lazy val (basePath, rollupPath): (String, String) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-spec")
+    val dir = tempDir("graft-rollup-spec")
     val base = dir.resolve("base").toString
     val roll = dir.resolve("roll").toString
     val df = Seq[(java.lang.Long, String, String, java.lang.Long, String)](
@@ -211,7 +211,7 @@ class RollupSpec extends SparkSpec {
     // here (every partial fits the mantissa), so parity is strict.
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-huge")
+    val dir = tempDir("graft-rollup-huge")
     val bp = dir.resolve("base").toString
     val v = 1L << 60
     ((1 to 5).map(_ => ("en", v)) ++ (1 to 5).map(_ => ("de", v)))
@@ -241,7 +241,7 @@ class RollupSpec extends SparkSpec {
     // unscaled total and the result tree re-scales it
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-decdim")
+    val dir = tempDir("graft-rollup-decdim")
     val bp = dir.resolve("base").toString
     Seq[(String, String)](("en", "1.25"), ("en", "1.25"), ("de", "2.50"),
       ("de", null), (null, "0.75"))
@@ -314,7 +314,7 @@ class RollupSpec extends SparkSpec {
     // re-aggregate the STALE rollup and freeze the summary forever
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-rebuild")
+    val dir = tempDir("graft-rollup-rebuild")
     val bp = dir.resolve("base").toString
     Seq(("en", 10L), ("de", 20L)).toDF("lang", "n")
       .write.mode("overwrite").parquet(bp)
@@ -381,7 +381,7 @@ class RollupSpec extends SparkSpec {
   test("a dims-only rollup (no measures) routes counts and dim min/max") {
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-dims")
+    val dir = tempDir("graft-rollup-dims")
     val bp = dir.resolve("base").toString
     Seq(("en", "web"), ("en", "web"), ("de", null), (null, "book"))
       .toDF("lang", "source").write.mode("overwrite").parquet(bp)
@@ -407,7 +407,7 @@ class RollupSpec extends SparkSpec {
     // against the grown base resumes routing with fresh values
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-fresh")
+    val dir = tempDir("graft-rollup-fresh")
     val bp = dir.resolve("base").toString
     Seq(("en", 10L), ("de", 20L)).toDF("lang", "n")
       .write.mode("overwrite").parquet(bp)
@@ -448,7 +448,7 @@ class RollupSpec extends SparkSpec {
     // listing — a NEW partition directory must trip it like any append
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-part")
+    val dir = tempDir("graft-rollup-part")
     val bp = dir.resolve("base").toString
     Seq(("en", "web", 10L), ("de", "web", 20L), ("en", "book", 30L))
       .toDF("lang", "source", "n")
@@ -476,7 +476,7 @@ class RollupSpec extends SparkSpec {
   test("refresh folds only appended files, re-registers, and is idempotent") {
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-refresh")
+    val dir = tempDir("graft-rollup-refresh")
     val bp = dir.resolve("base").toString
     Seq[(String, java.lang.Long)](("en", 10L), ("de", 20L), ("en", null))
       .toDF("lang", "n").coalesce(1).write.parquet(bp)
@@ -509,7 +509,7 @@ class RollupSpec extends SparkSpec {
   test("refresh recovers partition dims on a hive-partitioned base") {
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-refp")
+    val dir = tempDir("graft-rollup-refp")
     val bp = dir.resolve("base").toString
     Seq(("en", "web", 10L), ("de", "web", 20L))
       .toDF("lang", "source", "n")
@@ -535,7 +535,7 @@ class RollupSpec extends SparkSpec {
       "its crash window") {
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-refx")
+    val dir = tempDir("graft-rollup-refx")
     val bp = dir.resolve("base").toString
     Seq(("en", 10L)).toDF("lang", "n").coalesce(1).write.parquet(bp)
     Seq(("de", 20L)).toDF("lang", "n").coalesce(1)
@@ -567,7 +567,7 @@ class RollupSpec extends SparkSpec {
       .delete())
     val eOld = intercept[IllegalStateException](
       Rollup.refresh(spark, bp, rpOld, register = false))
-    assert(eOld.getMessage.contains(s"rollup at $rpOld ") &&
+    assert(eOld.getMessage.contains(s"artifact at $rpOld ") &&
       eOld.getMessage.contains("`data.old`"), eOld.getMessage)
     assert(new java.io.File(s"$rpOld/data.old").exists())
     // a covered file vanishes -> not append-only -> loud refusal
@@ -593,7 +593,7 @@ class RollupSpec extends SparkSpec {
     // is an optimization, never a failure mode (review finding, r13)
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-gone2")
+    val dir = tempDir("graft-rollup-gone2")
     val bp = dir.resolve("base").toString
     Seq(("en", 10L), ("de", 20L)).toDF("lang", "n").write.parquet(bp)
     val rp = dir.resolve("roll").toString
@@ -622,7 +622,7 @@ class RollupSpec extends SparkSpec {
   test("unregister works after the base files are deleted (ADVICE r13)") {
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-gone")
+    val dir = tempDir("graft-rollup-gone")
     val bp = dir.resolve("base").toString
     Seq(("en", 1L)).toDF("lang", "n").write.parquet(bp)
     val rp = dir.resolve("roll").toString
@@ -649,7 +649,7 @@ class RollupSpec extends SparkSpec {
     // materializing executedPlan below is the "query in flight" state.)
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-live")
+    val dir = tempDir("graft-rollup-live")
     val bp = dir.resolve("base").toString
     Seq(("en", 10L), ("de", 20L)).toDF("lang", "n")
       .coalesce(1).write.parquet(bp)
@@ -704,7 +704,7 @@ class RollupSpec extends SparkSpec {
     // conf) keeps any superseded version younger than the minimum age.
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-floor")
+    val dir = tempDir("graft-rollup-floor")
     val bp = dir.resolve("base").toString
     Seq(("en", 10L), ("de", 20L)).toDF("lang", "n")
       .coalesce(1).write.parquet(bp)
@@ -749,7 +749,7 @@ class RollupSpec extends SparkSpec {
     // path would GC versions its readers still hold. The sink's fence
     // file marks the artifact; batch writers must refuse.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-fence")
+    val dir = tempDir("graft-rollup-fence")
     val bp = dir.resolve("base").toString
     Seq(("en", 10L)).toDF("lang", "n").coalesce(1).write.parquet(bp)
     val rp = dir.resolve("roll").toString
@@ -785,7 +785,7 @@ class RollupSpec extends SparkSpec {
       "by the next writer (crash window)") {
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-crash")
+    val dir = tempDir("graft-rollup-crash")
     val bp = dir.resolve("base").toString
     Seq(("en", 10L), ("de", 20L)).toDF("lang", "n")
       .coalesce(1).write.parquet(bp)
@@ -818,7 +818,7 @@ class RollupSpec extends SparkSpec {
       "unversioned in-place root is refused by name") {
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-reb")
+    val dir = tempDir("graft-rollup-reb")
     val bp = dir.resolve("base").toString
     Seq(("en", 10L)).toDF("lang", "n").coalesce(1).write.parquet(bp)
     val rp = dir.resolve("roll").toString
@@ -864,7 +864,7 @@ class RollupSpec extends SparkSpec {
           intercept[IllegalStateException](Rollup.register(spark, bp,
             rpOld)))
         refusals.foreach(e => assert(
-          e.getMessage.contains(s"rollup at $rpOld ") &&
+          e.getMessage.contains(s"artifact at $rpOld ") &&
             e.getMessage.contains(s"`$name`") &&
             e.getMessage.contains("data_v<N>"), e.getMessage))
         assert(new java.io.File(s"$rpOld/$name").exists())
@@ -879,7 +879,7 @@ class RollupSpec extends SparkSpec {
       "(VERDICT r13 #5)") {
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-two")
+    val dir = tempDir("graft-rollup-two")
     val bp = dir.resolve("base").toString
     Seq(("en", "web", 10L), ("en", "book", 20L), ("de", "web", 30L))
       .toDF("lang", "source", "n").write.parquet(bp)
@@ -927,7 +927,7 @@ class RollupSpec extends SparkSpec {
     // rewrite must fall through to the base, never throw
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-drift")
+    val dir = tempDir("graft-rollup-drift")
     val bp = dir.resolve("base").toString
     Seq(("en", 10L, 1L), ("de", 20L, 2L)).toDF("lang", "n", "m")
       .write.parquet(bp)
@@ -1085,8 +1085,7 @@ class RollupSpec extends SparkSpec {
     // filter at plan time and the surviving dim side is deterministic
     // again (and then routing it is correct — the rule judges the
     // plan it actually receives)
-    val dimPq = java.nio.file.Files
-      .createTempDirectory("graft-star-dim").resolve("d").toString
+    val dimPq = tempDir("graft-star-dim").resolve("d").toString
     dimDf.write.parquet(dimPq)
     val dimFile = spark.read.parquet(dimPq)
     parity(routable = false)(b =>
@@ -1119,7 +1118,7 @@ class RollupSpec extends SparkSpec {
       "SMALLER artifact (VERDICT r14 #3)") {
     import spark.implicits._
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rollup-size")
+    val dir = tempDir("graft-rollup-size")
     val bp = dir.resolve("base").toString
     // ~2000 distinct sources make the fine (lang, src) artifact
     // clearly larger than the coarse (lang) one

@@ -72,7 +72,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("partitioned writes enable partition pruning at read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part").toString
     spark.read.parquet(s"$sfDir/events.parquet")
       .write.mode("overwrite").partitionBy("event_type").parquet(dir)
     // one directory per event_type

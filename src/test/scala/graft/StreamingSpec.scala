@@ -143,7 +143,7 @@ class StreamingSpec extends SparkSpec {
 
   test("file-source streaming reads the events fixture end-to-end") {
     // the file source wants a directory it can watch for new files
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream")
+    val dir = tempDir("graft-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       dir.resolve("events.parquet"))
@@ -222,10 +222,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-sink stream resumes from its checkpoint exactly once") {
-    import java.nio.file.Files
-    val src = Files.createTempDirectory("graft-ckpt-src").toString
-    val sink = Files.createTempDirectory("graft-ckpt-sink").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt-state").toString
+    val src = tempDir("graft-ckpt-src").toString
+    val sink = tempDir("graft-ckpt-sink").toString
+    val ckpt = tempDir("graft-ckpt-state").toString
     def start() = spark.readStream
       .schema("id BIGINT").parquet(src)
       .writeStream.format("parquet")
@@ -244,11 +243,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("upsert sink lands batch-aligned partitions effectively once across restart") {
-    import java.nio.file.Files
-    val src = Files.createTempDirectory("graft-upsink-src").toString
-    val table = Files.createTempDirectory("graft-upsink-tbl")
+    val src = tempDir("graft-upsink-src").toString
+    val table = tempDir("graft-upsink-tbl")
       .resolve("t").toString
-    val ckpt = Files.createTempDirectory("graft-upsink-ckpt").toString
+    val ckpt = tempDir("graft-upsink-ckpt").toString
     def start() = StreamOps.upsertSink(
       spark.readStream.schema("id BIGINT, part INT").parquet(src),
       table, Seq("part"), ckpt).start()
@@ -268,11 +266,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("cdc sink merges each micro-batch; restart re-merge is a no-op") {
-    import java.nio.file.Files
-    val src = Files.createTempDirectory("graft-cdc-src").toString
-    val table = Files.createTempDirectory("graft-cdc-tbl")
+    val src = tempDir("graft-cdc-src").toString
+    val table = tempDir("graft-cdc-tbl")
       .resolve("t").toString
-    val ckpt = Files.createTempDirectory("graft-cdc-ckpt").toString
+    val ckpt = tempDir("graft-cdc-ckpt").toString
     val schema = "k BIGINT, v STRING, op STRING, seq BIGINT"
     def start() = StreamOps.cdcSink(
       spark.readStream.schema(schema).parquet(src),
@@ -497,7 +494,7 @@ class StreamingSpec extends SparkSpec {
 
   test("rollup sink folds each batch once; replayed ids are fenced out") {
     implicit val sql = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-rollup")
+    val root = tempDir("graft-rollup")
     val path = root.resolve("agg").toString
     val mem = MemoryStream[Ev]
     val q = StreamOps.rollupSink(mem.toDF(), path, "event_type", "value",
@@ -538,7 +535,7 @@ class StreamingSpec extends SparkSpec {
   test("the snapshot sinks commit through the path's own filesystem: " +
       "file: URIs fold, read back and fence") {
     implicit val sql = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-uri-sinks")
+    val root = tempDir("graft-uri-sinks")
     def uri(name: String) = root.resolve(name).toUri.toString
     assert(uri("t").startsWith("file:/"))
     // cdcSink: the second fold merges onto the first one's snapshot
@@ -763,8 +760,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sql = spark.sqlContext
     import graft.ops.Dedup
     val corpus = Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-ingest-stream").toString
+    val tmp = tempDir("graft-ingest-stream").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 16)
     val passage = "s1 s2 s3 s4 s5 s6 s7 s8"
     val got = scala.collection.concurrent.TrieMap
@@ -772,8 +768,7 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String)]
     val q = StreamOps.substringDedupIngest(
         mem.toDF().select(col("_1").as("doc_id"), col("_2").as("text")),
-        tmp, checkpoint = java.nio.file.Files
-          .createTempDirectory("graft-ingest-ckpt").toString,
+        tmp, checkpoint = tempDir("graft-ingest-ckpt").toString,
         "doc_id", "text", minLen = 8) { (cleaned, _) =>
       cleaned.collect().foreach(r =>
         got.put(r.getLong(0), (r.getString(1), r.getLong(3))))
@@ -801,16 +796,14 @@ class StreamingSpec extends SparkSpec {
     val corpus = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-neardup-stream").toString
+    val tmp = tempDir("graft-neardup-stream").toString
     Dedup.saveSignatureIndex(corpus, tmp, "doc_id", "text")
     val novel = "red orange yellow green blue indigo violet ultraviolet"
     val got = scala.collection.mutable.Set.empty[Long]
     val mem = MemoryStream[(Long, String)]
     val q = StreamOps.nearDupIngest(
         mem.toDF().select(col("_1").as("doc_id"), col("_2").as("text")),
-        tmp, checkpoint = java.nio.file.Files
-          .createTempDirectory("graft-neardup-ckpt").toString,
+        tmp, checkpoint = tempDir("graft-neardup-ckpt").toString,
         "doc_id", "text", threshold = 0.5) { (accepted, _) =>
       got ++= accepted.collect().map(_.getLong(0))
     }.start()
@@ -839,8 +832,7 @@ class StreamingSpec extends SparkSpec {
     // batch's novel passage against its OWN appended grams and the text
     // would vanish from the corpus forever (r11 review finding)
     val corpus = Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-replay-gram").toString
+    val tmp = tempDir("graft-replay-gram").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 16)
     val passage = "r1 r2 r3 r4 r5 r6 r7 r8"
     val batch = Seq((101L, s"head $passage foot")).toDF("doc_id", "text")
@@ -874,8 +866,7 @@ class StreamingSpec extends SparkSpec {
     val corpus2 = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
       .toDF("doc_id", "text")
-    val tmp2 = java.nio.file.Files
-      .createTempDirectory("graft-replay-sig").toString
+    val tmp2 = tempDir("graft-replay-sig").toString
     Dedup.saveSignatureIndex(corpus2, tmp2, "doc_id", "text")
     val nd = Seq((301L, "one two three four five six seven eight"))
       .toDF("doc_id", "text")
@@ -897,8 +888,7 @@ class StreamingSpec extends SparkSpec {
     // would silently re-deliver the OLD stream's staged batch-0 output
     // (judge finding, r12)
     val corpus = Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-freshckpt-gram").toString
+    val tmp = tempDir("graft-freshckpt-gram").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 16)
     val passage = "p1 p2 p3 p4 p5 p6 p7 p8"
     // old stream's batch 0 carries the passage and appends it
@@ -930,8 +920,7 @@ class StreamingSpec extends SparkSpec {
       "window survives a long-running stream") {
     import graft.ops.Dedup
     val corpus = Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-stage-retention").toString
+    val tmp = tempDir("graft-stage-retention").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 16)
     // plant stage dirs deep in the past (b0, b1) and inside the window
     val stale = Seq(0L, 1L)
@@ -981,7 +970,7 @@ class StreamingSpec extends SparkSpec {
     // continuously fresh summary; between a file landing and its fold,
     // the freshness tripwire routes queries to the base instead
     Graft.init(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-routable-roll")
+    val dir = tempDir("graft-routable-roll")
     val basePath = dir.resolve("base").toString
     val rollPath = dir.resolve("roll").toString
     def land(rows: Seq[(String, java.lang.Long)]): Unit =
@@ -1050,7 +1039,7 @@ class StreamingSpec extends SparkSpec {
     val prev = spark.conf.getOption(
       "spark.sql.streaming.fileSource.log.compactInterval")
     spark.conf.set("spark.sql.streaming.fileSource.log.compactInterval", "2")
-    val dir = java.nio.file.Files.createTempDirectory("graft-roll-compact")
+    val dir = tempDir("graft-roll-compact")
     val basePath = dir.resolve("base").toString
     try {
       import spark.implicits._
@@ -1096,8 +1085,7 @@ class StreamingSpec extends SparkSpec {
     import graft.ops.Rollup
     // (a) a fresh-checkpoint stream (different run id) over a standing
     // artifact must fail LOUDLY, not misread its batches as replays
-    val p1 = java.nio.file.Files
-      .createTempDirectory("graft-roll-foreign1").toString
+    val p1 = tempDir("graft-roll-foreign1").toString
     assert(StreamOps.applyRoutableRollupBatch(p1,
       Seq(("en", 1L)).toDF("lang", "n"), 0L, Seq("lang"), Seq("n"),
       runId = "runA"))
@@ -1115,7 +1103,7 @@ class StreamingSpec extends SparkSpec {
       runId = "runA"))
     // (b) an unfenced pre-existing artifact (saveRollup-built) must
     // not be silently replaced by the first fold
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-roll-foreign2")
+    val dir2 = tempDir("graft-roll-foreign2")
     val bp = dir2.resolve("base").toString
     Seq(("en", 5L), ("de", 6L)).toDF("lang", "n")
       .write.mode("overwrite").parquet(bp)
@@ -1130,8 +1118,7 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(Rollup.currentDataPath(spark, p2))
       .agg(sum(col(Rollup.cntCol))).head.getLong(0) == 2L)
     // same guards on the (groupCol, n, total) sink
-    val p3 = java.nio.file.Files
-      .createTempDirectory("graft-roll-foreign3").toString
+    val p3 = tempDir("graft-roll-foreign3").toString
     assert(StreamOps.applyRollupBatch(p3,
       Seq(("a", 1.0)).toDF("k", "v"), 0L, "k", "v", runId = "runA"))
     val eC = intercept[IllegalStateException](
@@ -1144,8 +1131,7 @@ class StreamingSpec extends SparkSpec {
       "version is invisible and swept") {
     // a version directory written but never committed (no marker) must
     // stay invisible to resolution and be swept by the next fold
-    val p = java.nio.file.Files
-      .createTempDirectory("graft-roll-crash").toString
+    val p = tempDir("graft-roll-crash").toString
     assert(StreamOps.applyRoutableRollupBatch(p,
       Seq(("en", 10L), ("de", 20L)).toDF("lang", "n"), 0L,
       Seq("lang"), Seq("n"), runId = "r"))
@@ -1164,8 +1150,7 @@ class StreamingSpec extends SparkSpec {
     // the in-place layout (`data`, or either side of its rename swap)
     // with no committed version is refused by path, never read or swept
     for (name <- Seq("data", "data.old", "data.next")) {
-      val q = java.nio.file.Files
-        .createTempDirectory("graft-roll-inplace").toString
+      val q = tempDir("graft-roll-inplace").toString
       assert(StreamOps.applyRoutableRollupBatch(q,
         Seq(("en", 1L)).toDF("lang", "n"), 0L, Seq("lang"), Seq("n"),
         runId = "r"))
@@ -1177,7 +1162,7 @@ class StreamingSpec extends SparkSpec {
         StreamOps.applyRoutableRollupBatch(q,
           Seq(("de", 2L)).toDF("lang", "n"), 1L, Seq("lang"), Seq("n"),
           runId = "r"))
-      assert(e.getMessage.contains(s"rollup at $q ") &&
+      assert(e.getMessage.contains(s"artifact at $q ") &&
         e.getMessage.contains(s"`$name`") &&
         e.getMessage.contains("data_v<N>"), e.getMessage)
       assert(new java.io.File(s"$q/$name").exists(),
@@ -1193,8 +1178,7 @@ class StreamingSpec extends SparkSpec {
     // OWN grams whenever the append already ran — so it is refused
     import graft.ops.Dedup
     val corpus = Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-parquet-fp").toString
+    val tmp = tempDir("graft-parquet-fp").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 8)
     val batch = Seq((101L, "head s1 s2 s3 s4 s5 s6 s7 s8 foot"))
       .toDF("doc_id", "text")
@@ -1239,8 +1223,7 @@ class StreamingSpec extends SparkSpec {
       "and a full-text stage without cuts is refused by name") {
     import graft.ops.Dedup
     val corpus = Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-stage-v3").toString
+    val tmp = tempDir("graft-stage-v3").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 8)
     // one doc hit by the corpus passage, one untouched
     val batch = Seq(
@@ -1291,8 +1274,7 @@ class StreamingSpec extends SparkSpec {
     // refused), delivering each doc unchanged with nothing removed
     import graft.ops.Dedup
     val corpus = Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-stage-zero").toString
+    val tmp = tempDir("graft-stage-zero").toString
     Dedup.saveGramIndex(corpus, tmp, "text", minLen = 8, buckets = 8)
     val docs = Seq(
       (101L, "q1 q2 q3 q4 q5 q6 q7 q8 q9"),
@@ -1321,8 +1303,7 @@ class StreamingSpec extends SparkSpec {
     * share, and their batch: one doc the corpus passage hits, one that
     * repeats its own passage. */
   private def crashIndex(): String = {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-ingest-crash").toString
+    val tmp = tempDir("graft-ingest-crash").toString
     graft.ops.Dedup.saveGramIndex(
       Seq((1L, "c1 a b c d e f g h c2")).toDF("doc_id", "text"), tmp,
       "text", minLen = 8, buckets = 8)
@@ -1403,8 +1384,7 @@ class StreamingSpec extends SparkSpec {
 
   test("a fence must carry the stream's run id: a runId-less or bare-id " +
       "fence is refused by name") {
-    val p = java.nio.file.Files
-      .createTempDirectory("graft-fence-run").toString
+    val p = tempDir("graft-fence-run").toString
     // a runId-less direct call writes `<id>|` and can continue it
     assert(StreamOps.applyRoutableRollupBatch(p,
       Seq(("en", 1L)).toDF("lang", "n"), 0L, Seq("lang"), Seq("n"),
@@ -1442,8 +1422,7 @@ class StreamingSpec extends SparkSpec {
   test("an untagged processed-files snapshot is refused by name") {
     // the snapshot's one layout is `v2|count|bytes|hash`; an untagged
     // accumulation may mix fileStamp formats and could never route again
-    val p = java.nio.file.Files
-      .createTempDirectory("graft-snap-tag").toString
+    val p = tempDir("graft-snap-tag").toString
     assert(StreamOps.applyRoutableRollupBatch(p,
       Seq(("en", 1L)).toDF("lang", "n"), 0L, Seq("lang"), Seq("n"),
       runId = "r"))
@@ -1470,8 +1449,7 @@ class StreamingSpec extends SparkSpec {
     // so a dropped batch's files never enter it and routing never
     // resumes — that must be SAID once, while the fold (and the
     // answers) stay correct
-    val cp = java.nio.file.Files
-      .createTempDirectory("graft-badlog").toString
+    val cp = tempDir("graft-badlog").toString
     // an entry that EXISTS but cannot be opened as a file: a directory
     // where the per-batch log file should be — fs.open throws, the
     // benign no-log (memory stream) path is not taken
@@ -1481,8 +1459,7 @@ class StreamingSpec extends SparkSpec {
     assert(StreamOps.warnedOnce.contains(s"batch-files|$cp"),
       "the permanent routing loss must be warned about")
     // the genuinely-absent log (memory streams) stays silent
-    val cp2 = java.nio.file.Files
-      .createTempDirectory("graft-nolog").toString
+    val cp2 = tempDir("graft-nolog").toString
     assert(StreamOps.batchInputFiles(spark, cp2, 0L).isEmpty)
     assert(!StreamOps.warnedOnce.contains(s"batch-files|$cp2"),
       "no-log is the benign memory-stream case, not a degradation")
@@ -1494,13 +1471,11 @@ class StreamingSpec extends SparkSpec {
     // empty id into the fence compare, which then rejected the
     // stream's OWN artifact as foreign — a misleading hard failure.
     // Absent file: the documented pre-identity degradation
-    val cp = java.nio.file.Files
-      .createTempDirectory("graft-ident-absent").toString
+    val cp = tempDir("graft-ident-absent").toString
     assert(StreamOps.streamIdentity(spark, cp) == "")
     // present-but-unreadable (a directory where the file should be):
     // must THROW a clear diagnosis, not misattribute the artifact
-    val cp2 = java.nio.file.Files
-      .createTempDirectory("graft-ident-bad").toString
+    val cp2 = tempDir("graft-ident-bad").toString
     assert(new java.io.File(s"$cp2/metadata").mkdirs())
     val e = intercept[IllegalStateException](
       StreamOps.streamIdentity(spark, cp2))
@@ -1509,8 +1484,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("applyRoutableRollupBatch: replayed batch ids are fenced out") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-routable-fence").toString
+    val dir = tempDir("graft-routable-fence").toString
     val b0 = Seq(("en", 1L), ("de", 2L)).toDF("lang", "n")
     def cur() = currentDir(dir).getPath
     assert(StreamOps.applyRoutableRollupBatch(dir, b0, 0L,

@@ -190,8 +190,7 @@ class TextOpsSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq.toDF("doc_id", "text")
     val corpus = docs.where($"doc_id" >= 10).unionByName(
       eval.select(($"doc_id" + 100000L).as("doc_id"), $"text"))
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-sigidx-spec").toString
+    val idx = tempDir("graft-sigidx-spec").toString
     graft.ops.Dedup.saveSignatureIndex(corpus, idx, "doc_id", "text")
     val probe = graft.ops.TextOps.fuzzyContaminatedIdsIndexed(
       spark, idx, eval, "doc_id", "text", threshold = 1.0)
@@ -861,7 +860,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("BPE tokenizer round-trips through save/load (rank order preserved)") {
     val rules = Seq(("e", "r"), ("er", "s"), ("a", "b"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bpe").toString + "/rules"
+    val tmp = tempDir("graft-bpe").toString + "/rules"
     TextOps.saveBpe(rules, spark, tmp)
     assert(TextOps.loadBpe(spark, tmp) == rules)
     // the 4-column bpeMerges output written as-is also loads

@@ -124,7 +124,7 @@ class WarcSpec extends SparkSpec {
 
   test("the documented 100 TB path works: .warc files on disk land via " +
     "binaryFile and parse to records") {
-    val dir = java.nio.file.Files.createTempDirectory("warc-files")
+    val dir = tempDir("warc-files")
     java.nio.file.Files.write(dir.resolve("crawl-00000.warc"),
       build(("a", "doc one"), ("b", "doc two")))
     java.nio.file.Files.write(dir.resolve("crawl-00001.warc"),

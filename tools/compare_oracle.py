@@ -2,7 +2,8 @@
 """Local pre-check mimicking the driver's DuckDB-oracle compare:
 for each query with an oracle, load the Spark parquet result and the
 DuckDB result, sort columns by name, sort rows, compare values."""
-import duckdb, glob, json, math, os, sys
+import atexit, duckdb, glob, json, math, os, shutil, sys, tempfile
+import threading, time
 
 out_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/verify_sf001"
 sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
@@ -15,7 +16,39 @@ skip = set(filter(None, (n.strip() for n in
 only = set(filter(None, (n.strip() for n in
                          os.environ.get("ORACLE_ONLY", "").split(","))))
 
-con = duckdb.connect()
+# DuckDB spills into a scratch directory this tool deletes on exit,
+# capped so that an oracle outgrowing it ends as an ERR naming the cap
+# instead of filling the disk. DuckDB 1.0 enforces its own
+# max_temp_directory_size on some spills only (an unrolled-DP oracle
+# filled a 20 GB disk past it), so a watchdog thread interrupts the
+# running query once the directory passes the same cap.
+SPILL_CAP_GIB = 8
+spill_dir = tempfile.mkdtemp(prefix="compare-oracle-spill-")
+con = duckdb.connect(config={"temp_directory": spill_dir,
+                             "max_temp_directory_size": f"{SPILL_CAP_GIB}GiB"})
+spill_tripped = threading.Event()
+spill_done = threading.Event()
+
+def spill_bytes():
+    total = 0
+    for e in os.scandir(spill_dir):
+        try: total += e.stat().st_size
+        except FileNotFoundError: pass  # freed between listing and stat
+    return total
+
+def watch_spill():
+    while not spill_done.wait(0.5):
+        if spill_bytes() > SPILL_CAP_GIB << 30 and not spill_tripped.is_set():
+            spill_tripped.set(); con.interrupt()
+
+def drop_spill():
+    spill_done.set()
+    con.close()  # before the delete: DuckDB aborts at exit if its spill dir is gone
+    shutil.rmtree(spill_dir, ignore_errors=True)
+
+threading.Thread(target=watch_spill, daemon=True).start()
+atexit.register(drop_spill)
+
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
@@ -66,6 +99,7 @@ for name, sql in sorted(oracle.items()):
     if name in skip or (only and name not in only):
         if name in skip: print(f"SKIP {name}")
         continue
+    spill_tripped.clear()
     try:
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         spark_rel = con.sql(f"SELECT * FROM read_parquet({files!r})")
@@ -92,5 +126,8 @@ for name, sql in sorted(oracle.items()):
         else:
             print(f"OK   {name} ({len(s)} rows)"); n_ok += 1
     except Exception as e:
+        if spill_tripped.is_set():
+            e = (f"DuckDB spill passed the {SPILL_CAP_GIB} GiB "
+                 f"max_temp_directory_size cap; interrupted ({e})")
         print(f"ERR  {name}: {e}"); n_bad += 1
 print(f"\n{n_ok} ok, {n_bad} bad, {len(oracle)} total oracles")
