@@ -2577,13 +2577,14 @@ object SparkEntry {
         Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text", 3, 0.5))
     }),
 
-    // the O(log²)-round alternating large-star/small-star form
-    // (round 10) must land on the SAME clusters as min-label
-    // propagation — the oracle is the identical min-reachability CTE
+    // the same clusters through the reliable-checkpoint path (every
+    // round checkpointed to a scratch directory instead of executor
+    // blocks) — the oracle is the identical min-reachability CTE
     "q_dedup_clusters_star" -> ((s, dir) => {
       Graft.init(s)
-      Dedup.nearDupClustersStar(
-        Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text", 3, 0.5))
+      Dedup.nearDupClusters(
+        Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text", 3, 0.5),
+        checkpointDir = Some(scratchDir("graft-cc-ckpt").toString))
     }),
 
     // ---- LLM: leakage-free split (clusters held out atomically) -------
@@ -5351,9 +5352,9 @@ ORDER BY adc_dist, c.vec_id LIMIT $topk"""
   // ScalaTest against brute-force oracles instead.
   // -------------------------------------------------------------------
   /** Min-reachability clusters over the exact 3-gram Jaccard pair graph
-    * — shared verbatim by q_dedup_clusters (min-label propagation) and
-    * q_dedup_clusters_star (alternating star rounds): the two operators
-    * promise identical labels. */
+    * — shared verbatim by q_dedup_clusters (local checkpoints) and
+    * q_dedup_clusters_star (reliable checkpoints): the two truncation
+    * paths promise identical labels. */
   private val dedupClustersSql: String =
     """WITH RECURSIVE w AS (
       |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
@@ -7981,8 +7982,8 @@ ORDER BY adc_dist, c.vec_id LIMIT $topk"""
 
     "q_dedup_clusters" -> dedupClustersSql,
 
-    // identical oracle for the star form: the operator contract is
-    // "same clusters, different round law"
+    // identical oracle for the reliable-checkpoint run: the truncation
+    // path changes failure recovery, never the clusters
     "q_dedup_clusters_star" -> dedupClustersSql,
 
     // the q_dedup_clusters labeling + singleton coalesce + the stable

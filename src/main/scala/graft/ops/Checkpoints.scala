@@ -2,8 +2,10 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
-/** Shared materialization point for the iterative operators
-  * ([[Dedup.nearDupClusters]], [[Graph.pageRank]], [[Graph.bfsHops]]):
+/** Shared materialization point for the iterative operators (the
+  * connected-components loop [[Graph.minLabelComponents]] behind
+  * [[Dedup.nearDupClusters]] and [[Graph.connectedComponents]],
+  * [[Graph.pageRank]], [[Graph.bfsHops]]):
   * every round must truncate lineage (plans roughly double per
   * iteration otherwise — measured OOM merely stringifying one around
   * 30 rounds), and HOW it truncates is a deployment decision, not an

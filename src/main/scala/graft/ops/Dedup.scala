@@ -507,18 +507,8 @@ object Dedup {
     val dupPos = anchors.join(dupGrams, Seq("h"))
       .where(col("id") =!= col("first.id") || col("pos") =!= col("first.pos"))
       .select(col("id"), col("pos"))
-    exciseAtPositions(docs, dupPos, idCol, textCol, minLen)
-  }
-
-  /** Shared tail of the substring-dedup family: merge the duplicated
-    * positions' [pos, pos + minLen) windows into maximal disjoint
-    * intervals per doc (per-DOC windows — bounded by document length)
-    * and rewrite the text through the codegen'd two-pointer
-    * [[graft.functions.ExciseSpans]]. `dupPos` is (id, pos) with id =
-    * [[longId]] of `idCol`. */
-  private def exciseAtPositions(docs: DataFrame, dupPos: DataFrame,
-      idCol: String, textCol: String, minLen: Int): DataFrame =
     applyCuts(docs, mergedCuts(dupPos, minLen), idCol, textCol)
+  }
 
   /** The per-doc merged cut intervals of a (id, pos) duplicated-position
     * table: each position's [pos, pos+minLen) window, islands-merged
@@ -645,9 +635,11 @@ object Dedup {
   def exciseAgainstIndex(batch: DataFrame, path: String, idCol: String,
       textCol: String, minLen: Int = 8,
       maxBroadcastGrams: Long = 4000000L): DataFrame =
-    exciseAgainstIndexAnchored(batch,
-      batchAnchorTable(batch, idCol, textCol, minLen), path, idCol,
-      textCol, minLen, maxBroadcastGrams)
+    applyCuts(batch,
+      exciseCutsAgainstIndexAnchored(
+        batchAnchorTable(batch, idCol, textCol, minLen), path, minLen,
+        maxBroadcastGrams),
+      idCol, textCol)
 
   /** The batch's positional anchor table (id, pos, h), MATERIALIZED
     * once (eager localCheckpoint). Exchange reuse only shares the
@@ -678,28 +670,18 @@ object Dedup {
       None)
   }
 
-  /** [[exciseAgainstIndex]] over a pre-materialized
-    * [[batchAnchorTable]] — the ingest lifecycle
-    * ([[graft.streaming.StreamOps.substringDedupIngestBatch]]) builds
-    * the anchor table once and shares it with
+  /** The excise DECISION of [[exciseAgainstIndex]] over a
+    * pre-materialized [[batchAnchorTable]] — the merged per-doc cut
+    * table ((id, cuts, removed), [[mergedCuts]] shape) without the text
+    * rewrite, so the ingest lifecycle
+    * ([[graft.streaming.StreamOps.substringDedupIngestBatch]]) can stage
+    * the cut-sized decision instead of the batch-sized rewritten text
+    * and re-apply it deterministically on (re)delivery. The lifecycle
+    * builds the anchor table once and shares it with
     * [[appendToGramIndexAnchored]], so the batch text is anchored
     * exactly once per micro-batch. `anchorTable` MUST be built with
-    * this `minLen` over this `batch` (enforced for the index side by
-    * the meta check below). */
-  private[graft] def exciseAgainstIndexAnchored(batch: DataFrame,
-      anchorTable: DataFrame, path: String, idCol: String,
-      textCol: String, minLen: Int = 8,
-      maxBroadcastGrams: Long = 4000000L): DataFrame =
-    applyCuts(batch,
-      exciseCutsAgainstIndexAnchored(anchorTable, path, minLen,
-        maxBroadcastGrams),
-      idCol, textCol)
-
-  /** The excise DECISION of [[exciseAgainstIndexAnchored]] — the merged
-    * per-doc cut table ((id, cuts, removed), [[mergedCuts]] shape)
-    * without the text rewrite, so the ingest lifecycle can stage the
-    * cut-sized decision instead of the batch-sized rewritten text and
-    * re-apply it deterministically on (re)delivery. */
+    * this `minLen` (enforced for the index side by the meta check
+    * below). */
   private[graft] def exciseCutsAgainstIndexAnchored(
       anchorTable: DataFrame, path: String, minLen: Int = 8,
       maxBroadcastGrams: Long = 4000000L): DataFrame = {
@@ -1261,202 +1243,25 @@ object Dedup {
     * ((id_a, id_b) edges from any of the near-dup detectors), each node
     * labeled with the minimum doc id reachable from it — the cluster
     * representative to KEEP; every other member is the dedup drop set.
+    * Output (id, cluster_id).
     *
-    * Algorithm: iterative min-label propagation (the shuffle-based
-    * connected-components idiom): each materialized round applies the
-    * propagation step TWICE — hop 1 takes the min over neighbor labels,
-    * hop 2 repeats it on hop 1's result — and observes the changed-count
-    * of hop 2 only. If the SECOND application changed nothing, hop 1's
-    * output was already the fixed point (and hop 2 returned it
-    * unchanged), so the loop terminates without the naive scheme's extra
-    * confirmation round: a diameter-d component converges in
-    * ceil(d/2)+ rounds of jobs instead of d+1. What halves is the
-    * per-round fixed cost — one driver job, one checkpoint
-    * materialization, one AQE re-plan per TWO hops — which dominates for
-    * near-dup graphs (tiny components, label tables orders of magnitude
-    * under the corpus; measured 1.5 s → 0.7 s at sf0.1). The trade: hop
-    * 1's un-checkpointed output feeds hop 2 twice (probe + base), and
-    * AQE reuses only part of that subtree, so big graphs pay roughly one
-    * extra label-sized (node-count, never edge-count) merge join per
-    * round — measured a wash against the 1-hop loop at 4M symmetric
-    * edges / 500k nodes / diameter 11 (21.4 s vs 22.1 s) — while every
-    * round is still keyed shuffles only, never an all-pairs step. The
-    * driver-side work per round is ONE scalar (the changed-count), not
-    * data.
-    *
-    * The changed-count rides the SAME job that materializes the round:
-    * the round's result carries a per-row changed flag observed via
-    * [[org.apache.spark.sql.Observation]], and the eager localCheckpoint
-    * is a `withAction` (it posts the execution-end event observations
-    * listen for) — so convergence detection costs zero extra passes,
-    * where a separate next-vs-old join-and-count would re-shuffle the
-    * label table once per round. */
+    * The long-id wrapper of [[Graph.minLabelComponents]] (min-label
+    * propagation with hooking and shortcutting: two hops per
+    * materialized round, O(log n) rounds on a path). The near-dup graph of tiny components
+    * converges in round 1. No broadcast hint: AQE sizes the label joins
+    * itself. `checkpointDir` picks local (default) vs reliable lineage
+    * truncation for the mirrored edges and every round — see
+    * [[Checkpoints.materialize]]; pass a dir on a multi-node cluster. */
   def nearDupClusters(pairs: DataFrame, maxIters: Int = 20,
       checkpointDir: Option[String] = None): DataFrame = {
     val edges = pairs.select(col("id_a").cast("long").as("src"),
       col("id_b").cast("long").as("dst"))
-    // checkpoint (not persist): each round's plan references the
-    // previous round's twice, so lineage roughly DOUBLES per iteration —
-    // without truncation the plan tree is exponential in the iteration
-    // count (measured: OOM merely stringifying it around 30 rounds).
-    // `checkpointDir` picks local (default) vs reliable truncation — see
-    // Checkpoints.materialize; pass a dir on a multi-node cluster.
-    // (measured dead end: repartition(dst) before the checkpoint to
-    // pre-co-partition the per-round join — under AQE localCheckpoint's
-    // LogicalRDD comes back UnknownPartitioning(0), so the exchange is
-    // re-inserted every round anyway and the upfront shuffle is pure waste)
     val sym = Checkpoints.materialize(
       edges.union(edges.select(col("dst").as("src"), col("src").as("dst"))),
       checkpointDir)
-    // init labels are NOT checkpointed: the lineage is one distinct over
-    // the already-checkpointed sym (depth 1 — no exponential-plan risk),
-    // and skipping the eager materialization saves a whole driver job
-    // before the first round
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-    // one propagation hop: min over neighbor labels, kept only when it
-    // beats the node's own label; `_chg` marks rows hop actually improved.
-    // count(when(...)) (not sum) so an empty label table yields 0
-    def hop(l: DataFrame): DataFrame = {
-      val viaNeighbor = sym
-        .join(l.withColumnRenamed("id", "dst")
-          .withColumnRenamed("label", "nlabel")
-          .drop("_chg"), Seq("dst"))
-        .groupBy(col("src").as("id")).agg(min(col("nlabel")).as("nmin"))
-      l.drop("_chg").join(viaNeighbor, Seq("id"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("nmin"),
-          col("label"))).as("label"),
-          coalesce(col("nmin") < col("label"), lit(false)).as("_chg"))
-    }
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val obs = org.apache.spark.sql.Observation()
-      val next = Checkpoints.materialize(
-        hop(hop(labels))
-          .observe(obs, count(when(col("_chg"), lit(1))).as("changed")),
+    Graph.minLabelComponents(sym, maxIters, broadcastState = false,
         checkpointDir)
-        .drop("_chg")
-      // hop 2's changed-count: zero means the second application was an
-      // identity on hop 1's output — i.e. hop 1 had already reached the
-      // per-component minimum and `next` equals it
-      val changed = obs.get("changed").asInstanceOf[Long]
-      labels = next
-      converged = changed == 0
-      i += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"nearDupClusters did not converge in ${2 * maxIters} propagation " +
-        "steps — the pair graph has a component with a longer min-label " +
-        "path; raise maxIters, or use nearDupClustersStar (round count " +
-        "grows with log² of component size, not diameter)")
-    labels.withColumnRenamed("label", "cluster_id")
-  }
-
-  /** Transitive near-dup clusters via alternating large-star /
-    * small-star rounds (Kiveris et al. 2014, "Connected Components in
-    * MapReduce and Beyond") — same output contract as
-    * [[nearDupClusters]] (every node labeled with its component's
-    * minimum id), different convergence law: min-label propagation
-    * needs rounds ∝ component DIAMETER (a 10^6-node path graph would
-    * need 500k materialized rounds), while the star rounds contract
-    * every component to a depth-1 star in O(log² n) rounds regardless
-    * of shape — the safe choice when the pair graph's diameter is
-    * unknown (transitive chains of near-dups: A≈B≈C≈… can be long in
-    * templated/boilerplate corpora). Default stays [[nearDupClusters]]
-    * for the common near-dup case (tiny components, fewer and cheaper
-    * rounds — its per-round cost is one join of a NODE-sized label
-    * table with the edges; a star round rewrites the EDGE set twice,
-    * with two set-equality probes); this is the documented escape
-    * hatch, pointed at by the propagation loop's failure message.
-    *
-    * Per round: large-star connects every node's larger neighbors to
-    * the minimum of its closed neighborhood; small-star re-points its
-    * smaller neighbors (and itself) at that minimum. Both are one
-    * symmetrize + one (node)-keyed min aggregation + one keyed
-    * join-back over the CURRENT edge set — all keyed shuffles, never
-    * all-pairs, and the edge set only shrinks toward stars (one giant
-    * component's hub key skews its join; AQE's skew split handles the
-    * build-up rounds). Convergence is an exact set-equality probe per
-    * half-round (count compare + anti-join on the materialized table —
-    * no checksum collisions), so termination is structural: converged
-    * means the edge set IS a union of depth-1 stars centered at
-    * component minima, and labels read off it with no further pass.
-    * Determinism: every step is min/set algebra over node ids — no
-    * ordering, hashing, or float seams.
-    *
-    * `checkpointDir` behaves as in [[nearDupClusters]]
-    * ([[Checkpoints.materialize]]). */
-  def nearDupClustersStar(pairs: DataFrame, maxIters: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val edges0 = pairs.select(col("id_a").cast("long").as("src"),
-      col("id_b").cast("long").as("dst"))
-    // all ids keep a label even if their only pair is a self loop (the
-    // min-label form's behavior — parity pinned by spec)
-    val nodes = Checkpoints.materialize(
-      edges0.select(col("src").as("id"))
-        .union(edges0.select(col("dst").as("id"))).distinct(),
-      checkpointDir)
-    def symmetric(d: DataFrame): DataFrame =
-      d.select(col("src").as("u"), col("dst").as("v"))
-        .union(d.select(col("dst").as("u"), col("src").as("v")))
-    // each node's closed-neighborhood minimum; larger neighbors re-point
-    // at it
-    def largeStar(d: DataFrame): DataFrame = {
-      val s = symmetric(d)
-      val m = s.groupBy(col("u")).agg(min(col("v")).as("m0"))
-        .select(col("u"), least(col("m0"), col("u")).as("m"))
-      s.join(m, Seq("u"))
-        .where(col("v") > col("u"))
-        .select(col("v").as("src"), col("m").as("dst"))
-        .distinct()
-    }
-    // each node's smaller neighbors (and the node) re-point at their
-    // minimum; every undirected edge is seen exactly once, from its
-    // larger endpoint
-    def smallStar(d: DataFrame): DataFrame = {
-      val s = symmetric(d).where(col("v") < col("u"))
-      val m = s.groupBy(col("u")).agg(min(col("v")).as("m"))
-      s.join(m, Seq("u"))
-        .where(col("v") =!= col("m"))
-        .select(col("v").as("src"), col("m").as("dst"))
-        .union(m.select(col("u").as("src"), col("m").as("dst")))
-        .distinct()
-    }
-    // exact set equality of two DISTINCT materialized edge tables
-    def unchanged(next: DataFrame, nextN: Long, curN: Long,
-        cur: DataFrame): Boolean =
-      nextN == curN &&
-        next.join(cur, Seq("src", "dst"), "left_anti").limit(1).count() == 0
-    var e = Checkpoints.materialize(
-      edges0.where(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("src"),
-          greatest(col("src"), col("dst")).as("dst"))
-        .distinct(), checkpointDir)
-    var eN = e.count()
-    var converged = eN == 0
-    var i = 0
-    while (!converged && i < maxIters) {
-      val e1 = Checkpoints.materialize(largeStar(e), checkpointDir)
-      val e1N = e1.count()
-      val fixed1 = unchanged(e1, e1N, eN, e)
-      val e2 = Checkpoints.materialize(smallStar(e1), checkpointDir)
-      val e2N = e2.count()
-      val fixed2 = unchanged(e2, e2N, e1N, e1)
-      converged = fixed1 && fixed2
-      e = e2
-      eN = e2N
-      i += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"nearDupClustersStar did not converge in $maxIters rounds — " +
-        "that exceeds the O(log² n) bound for any realistic graph; " +
-        "raise maxIters")
-    // fixed point = stars (child -> component min); centers label
-    // themselves
-    nodes.join(e.select(col("src").as("id"), col("dst").as("_c")),
-        Seq("id"), "left")
-      .select(col("id"), coalesce(col("_c"), col("id")).as("cluster_id"))
+      .select(col("id"), col("label").as("cluster_id"))
   }
 
   /** All one-character-deletion variants of a string (SymSpell

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Sampling, TextOps}
+import graft.ops.{Dedup, Graph, Sampling, TextOps}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -13,6 +13,21 @@ class DedupSpec extends SparkSpec {
     (3L, "completely different content about spark query engines and distributed joins"),
     (4L, "another unrelated document mentioning aggregation shuffles and broadcast strategies"))
   private def docs = base.toDF("doc_id", "text")
+
+  /** Brute-force union-find: every node of `edges` mapped to the
+    * minimum id of its component. */
+  private def unionFindMin(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
 
   test("repeated spans find maximal shared blocks; df guard bounds candidates") {
     val corpus = Seq(
@@ -385,10 +400,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("clusters converge on long chains (multi-round propagation)") {
-    // a path graph is the worst case for min-label propagation: the min
-    // id travels one hop per step, so a length-d chain needs d steps —
-    // exercises several materialized rounds of the two-hop loop, at both
-    // parities (the even/odd step count hits the round boundary
+    // a path graph is the worst case for min-label propagation: without
+    // the shortcut the min id travels one hop per step — exercises
+    // several materialized rounds of the two-hop + shortcut loop, at
+    // both parities (the even/odd step count hits the round boundary
     // differently: an odd diameter finishes mid-round)
     for (n <- Seq(8, 9)) {
       val pairs = (0L until n.toLong).sliding(2).map { w =>
@@ -398,6 +413,8 @@ class DedupSpec extends SparkSpec {
       assert(r == (0L until n.toLong).map(_ -> 0L).toMap, s"chain n=$n")
     }
     // too-small maxIters must throw, not silently return partial labels
+    // (a 12-node path needs 3 rounds: hops reach 2 back, then 6, then
+    // the shortcut spans the rest)
     val chain = (0L until 12L).sliding(2).map(w => (w(0), w(1)))
       .toSeq.toDF("id_a", "id_b")
     intercept[IllegalStateException] {
@@ -408,37 +425,45 @@ class DedupSpec extends SparkSpec {
   test("clusters of an empty pair relation are empty, not an error") {
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.nearDupClusters(empty).count() == 0L)
-    assert(Dedup.nearDupClustersStar(empty).count() == 0L)
   }
 
-  test("star clustering handles a diameter > 40 chain the propagation " +
-      "loop rejects, in O(log² n) rounds") {
-    // a 120-node path graph: min-label propagation needs 119 hops, far
-    // past the default 2×20; the alternating star rounds contract it
-    // regardless of diameter
+  test("a 120-node chain converges within the default maxIters") {
+    // min-label propagation alone needs 119 hops here, far past the
+    // default 2×20; the shortcut roughly doubles the distance a label
+    // jumps each round, so a path converges in O(log n) rounds
     val chain = (0L until 120L).sliding(2).map(w => (w(1), w(0)))
       .toSeq.toDF("id_a", "id_b")
-    intercept[IllegalStateException] {
-      Dedup.nearDupClusters(chain)
-    }
-    val star = Dedup.nearDupClustersStar(chain)
-      .as[(Long, Long)].collect().toMap
-    assert(star == (0L until 120L).map(_ -> 0L).toMap)
+    val r = Dedup.nearDupClusters(chain).as[(Long, Long)].collect().toMap
+    assert(r == (0L until 120L).map(_ -> 0L).toMap)
+    // ids 0, 119, 118, …, 1 along the path: label 1 floods the path
+    // first, so 0 reaches the rest only through the hook (label 1
+    // adopts the 0 its nodes reached); the shortcut alone leaves it at
+    // two hops per round, ~60 rounds
+    val descending = (0L +: (119L to 1L by -1L)).sliding(2)
+      .map(w => (w(0), w(1))).toSeq.toDF("id_a", "id_b")
+    val d = Dedup.nearDupClusters(descending).as[(Long, Long)].collect().toMap
+    assert(d == (0L until 120L).map(_ -> 0L).toMap)
   }
 
-  test("star clustering equals min-label propagation on random graphs " +
-      "(property)") {
+  test("both CC wrappers match union-find on random graphs") {
+    // Dedup.nearDupClusters over long ids and Graph.connectedComponents
+    // over the same ids zero-padded to strings (so string order is id
+    // order) run the same loop; both must equal a brute-force union-find
     val rnd = new scala.util.Random(7)
     for (trial <- 1 to 4) {
       val n = 30 + trial * 10
-      val pairs = (1 to n).map { _ =>
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
-      }.toDF("id_a", "id_b")
-      val viaLabel = Dedup.nearDupClusters(pairs, maxIters = 40)
+      val edges = (1 to n).map(_ =>
+        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      val expect = unionFindMin(edges)
+      val viaLong = Dedup.nearDupClusters(edges.toDF("id_a", "id_b"))
         .as[(Long, Long)].collect().toMap
-      val viaStar = Dedup.nearDupClustersStar(pairs)
-        .as[(Long, Long)].collect().toMap
-      assert(viaStar == viaLabel, s"trial $trial")
+      assert(viaLong == expect, s"trial $trial (long ids)")
+      val viaString = Graph.connectedComponents(
+          edges.map { case (a, b) => (f"$a%04d", f"$b%04d") }
+            .toDF("src", "dst"), "src", "dst")
+        .as[(String, String)].collect()
+        .map { case (k, v) => k.toLong -> v.toLong }.toMap
+      assert(viaString == expect, s"trial $trial (string ids)")
     }
   }
 
@@ -452,10 +477,6 @@ class DedupSpec extends SparkSpec {
         checkpointDir = Some(dir))
       .as[(Long, Long)].collect().toMap
     assert(reliable == default)
-    val starReliable = Dedup.nearDupClustersStar(pairs,
-        checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
-    assert(starReliable == default)
     // the dir actually received checkpoint state (the reliable path ran)
     def filesUnder(p: java.io.File): Int =
       if (p.isDirectory) p.listFiles.map(filesUnder).sum else 1
@@ -478,17 +499,7 @@ class DedupSpec extends SparkSpec {
       val rnd = new scala.util.Random(seed)
       val edges = (1 to 40).map(_ =>
         (rnd.nextInt(30).toLong, 30L + rnd.nextInt(30)))
-      // brute-force union-find
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expect = parent.keys.map(x => x -> find(x)).toMap
+      val expect = unionFindMin(edges)
       val got = Dedup.nearDupClusters(edges.toDF("id_a", "id_b"), maxIters = 30)
         .as[(Long, Long)].collect().toMap
       assert(got == expect, s"seed=$seed")

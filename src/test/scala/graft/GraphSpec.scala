@@ -262,6 +262,17 @@ class GraphSpec extends SparkSpec {
     assert(cc.values.toSet == Set("n00") && cc.size == 11)
   }
 
+  test("a 1000-node string path converges within default maxIters") {
+    // zero-padded ids keep string order = path order, so the minimum
+    // sits at one end and has to travel the whole path, which plain
+    // min-label propagation would need ~500 two-hop rounds for
+    val path = (0 until 999).map(i => (f"n${i + 1}%04d", f"n$i%04d"))
+      .toDF("src", "dst")
+    val cc = Graph.connectedComponents(path, "src", "dst")
+      .as[(String, String)].collect().toMap
+    assert(cc.size == 1000 && cc.values.toSet == Set("n0000"))
+  }
+
   test("kCore peels below-k nodes until the stable core remains") {
     // K4 {a,b,c,d} with a pendant p off a: the 3-core is exactly the
     // K4 (within-core degree 3 each); p and its edge peel away
