@@ -39,9 +39,9 @@ object Graft {
     }
   }
 
-  /** Corpus size estimate (bytes) at or above which the exact-Jaccard
-    * confirm attach streams the corpus once and regroups by pair
-    * (`Dedup.pairExplodeAttach`). */
+  /** Corpus size estimate (bytes) at or above which the near-dup
+    * confirms' pair attach streams the corpus once and regroups by pair
+    * (`Dedup.attachPair`). */
   private[graft] val ConfirmExplodeMinBytes = LongSetting(
     "spark.graft.confirm.explodeMinBytes", 1L << 30, "a byte count")
 

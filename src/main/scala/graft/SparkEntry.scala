@@ -3167,8 +3167,7 @@ object SparkEntry {
       graft.ops.Dedup.saveSignatureIndex(corpus, tmp, "doc_id", "text",
         shingleN = 3, bands = 16, rowsPerBand = 4)
       TextOps.fuzzyContaminatedIdsIndexed(s, tmp, evalSet, "doc_id",
-        "text", shingleN = 3, bands = 16, rowsPerBand = 4,
-        threshold = 1.0)
+        "text", threshold = 1.0)
     }),
 
     // ---- LLM: corpus data card (per-source release manifest) ----------

@@ -37,38 +37,68 @@ object Dedup {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
   private val observeId = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Per-JVM cache of the gram index's IMMUTABLE meta row (min_len,
-    * n_buckets, release generation), keyed on the meta directory's
-    * listing signature (file names + mtimes + lengths). The meta is
-    * written once per release build and never rewritten — appends
-    * claim generations via `gen/` side files precisely so readers
-    * never see meta churn (ADVICE r11) — yet every excise probe AND
-    * every append paid a full Spark job (~0.12 s locally) re-reading
-    * the same one-row parquet: four such jobs per ingest micro-batch
-    * pair (measured, round 15). A rebuild at the same path writes new
+  /** Per-JVM cache of the gram and signature indexes' IMMUTABLE meta
+    * rows (build parameters and release generation), keyed on the meta
+    * directory's listing signature (file names + mtimes + lengths). The
+    * meta is written once per release build and never rewritten —
+    * appends claim generations via `gen/` side files precisely so
+    * readers never see meta churn (ADVICE r11) — yet every excise probe
+    * AND every append paid a full Spark job (~0.12 s locally)
+    * re-reading the same one-row parquet: four such jobs per ingest
+    * micro-batch pair (measured, round 15). A build seeds the cache
+    * with the row it wrote ([[writeIndexMeta]]), so its own first probe
+    * reads no parquet either. A rebuild at the same path writes new
     * UUID-named part files, so the signature changes and the cache
     * misses — the safe direction; nothing here caches query RESULTS,
     * only the artifact's build parameters. */
-  private val gramMetaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, (Int, Int, Long))]()
+  private val metaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.Row)]()
 
+  /** The meta directory's listing signature; None when it is absent. */
+  private def metaListing(spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[String] = {
+    val metaDir = new org.apache.hadoop.fs.Path(s"$path/meta")
+    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(metaDir)) None
+    else Some(fs.listStatus(metaDir).map(st =>
+        s"${st.getPath.getName}:${st.getModificationTime}:${st.getLen}")
+      .sorted.mkString("|"))
+  }
+
+  /** [[readIndexMeta]] through [[metaCache]]; an absent meta goes
+    * straight to its refusal. */
+  private def cachedIndexMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String): org.apache.spark.sql.Row =
+    metaListing(spark, path) match {
+      case Some(sig) =>
+        val cached = metaCache.get(path)
+        if (cached != null && cached._1 == sig) cached._2
+        else {
+          val meta = readIndexMeta(spark, path)
+          metaCache.put(path, (sig, meta))
+          meta
+        }
+      case None => readIndexMeta(spark, path)
+    }
+
+  /** Write an index build's one-row meta, drop the previous build's
+    * generation claims, and seed [[metaCache]] with the row written. */
+  private def writeIndexMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String, meta: DataFrame): Unit = {
+    meta.coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    resetGenerationClaims(spark, path)
+    // a local relation: head() runs no job
+    metaListing(spark, path).foreach(sig =>
+      metaCache.put(path, (sig, meta.head)))
+  }
+
+  /** A [[saveGramIndex]] build's (min_len, n_buckets, generation). */
   private[graft] def gramIndexMeta(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Int, Long) = {
-    val metaDir = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sig = fs.listStatus(metaDir).map(st =>
-        s"${st.getPath.getName}:${st.getModificationTime}:${st.getLen}")
-      .sorted.mkString("|")
-    val cached = gramMetaCache.get(path)
-    if (cached != null && cached._1 == sig) cached._2
-    else {
-      val meta = readIndexMeta(spark, path)
-      val v = (meta.getAs[Int]("min_len"), meta.getAs[Int]("n_buckets"),
-        meta.getAs[Long]("generation"))
-      gramMetaCache.put(path, (sig, v))
-      v
-    }
+    val meta = cachedIndexMeta(spark, path)
+    (meta.getAs[Int]("min_len"), meta.getAs[Int]("n_buckets"),
+      meta.getAs[Long]("generation"))
   }
 
   /** The near-dup detectors key their pair tables on a long id; a blind
@@ -165,11 +195,41 @@ object Dedup {
 
   /** LSH band keys: `bands` buckets, each hashing `rowsPerBand` adjacent
     * signature entries. Docs agreeing on ANY band become candidates. */
-  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+  private def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
     array((0 until bands).map { b =>
       val slots = (0 until rowsPerBand).map(j => sig.getItem(b * rowsPerBand + j))
       xxhash64((lit(b) +: slots): _*)
     }: _*)
+
+  /** The `(id, sh)` shingle-set table every MinHash and Jaccard operator
+    * starts from: `sh` is the sorted-distinct 64-bit word-shingle hash
+    * set of `textCol` (the fused codegen'd
+    * [[graft.functions.ShingleHash64]] — cheap enough to RECOMPUTE on
+    * every use instead of caching a corpus-sized shingle table, which at
+    * 100 TB is not an option anyway). */
+  private[ops] def shingleSets(df: DataFrame, id: Column, textCol: String,
+      shingleN: Int): DataFrame =
+    df.select(id.as("id"), graft.functions.ShingleExprs
+      .shingleHash64(col(textCol), shingleN).as("sh"))
+
+  /** The MinHash LSH bucket table of a [[shingleSets]] table:
+    * `(id, <carry>, bucket)`, one row per band. The format is persisted
+    * by [[saveSignatureIndex]], so every index build and every probe goes
+    * through here. The signature is materialized in its OWN projection:
+    * bandKeys reads the sig attribute per getItem, where the inline form
+    * re-evaluated the whole k-perm minhash_sig once PER ELEMENT ACCESS
+    * inside the Generate (no subexpression elimination there — measured
+    * ~k x the signature cost; CollapseProject keeps non-cheap
+    * multiply-referenced aliases materialized, so the boundary survives
+    * optimization). */
+  private[ops] def minhashBuckets(sets: DataFrame, bands: Int,
+      rowsPerBand: Int, carry: String*): DataFrame = {
+    val kept = ("id" +: carry).map(col)
+    sets.select(kept :+ graft.functions.ShingleExprs.minhashSig64(col("sh"),
+        bands * rowsPerBand).as("_sig"): _*)
+      .select(kept :+
+        explode(bandKeys(col("_sig"), bands, rowsPerBand)).as("bucket"): _*)
+  }
 
   /** MinHash+LSH near-duplicate pairs with an exact-Jaccard confirm pass.
     *
@@ -186,27 +246,11 @@ object Dedup {
     require(shingleN >= 1 && bands >= 1 && rowsPerBand >= 1,
       "shingleN/bands/rowsPerBand must be positive")
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
-    // shingling + signatures are fused codegen'd expressions
-    // (graft.functions.{ShingleHash64, MinHashSig}) — cheap enough to
-    // RECOMPUTE on every use instead of caching a corpus-sized shingle
-    // table (which at 100 TB is not an option anyway)
-    import graft.functions.ShingleExprs._
-    val sets = docs.select(longId(docs, idCol).as("id"),
-      shingleHash64(col(textCol), shingleN).as("sh"))
+    val sets = shingleSets(docs, longId(docs, idCol), textCol, shingleN)
     // the bucket table is both sides of the self-join; both sides are the
     // SAME deterministic subplan exchanged on the same key, so ReuseExchange
     // materializes it once (no persist — see the cache-ownership header)
-    // signature materialized in its OWN projection: bandKeys reads the
-    // sig attribute per getItem, where the inline form re-evaluated the
-    // whole k-perm minhash_sig once PER ELEMENT ACCESS inside the
-    // Generate (no subexpression elimination there — measured ~k x the
-    // signature cost; CollapseProject keeps non-cheap multiply-referenced
-    // aliases materialized, so the boundary survives optimization)
-    val buckets = sets
-      .select(col("id"), minhashSig64(col("sh"),
-        bands * rowsPerBand).as("_sig"))
-      .select(col("id"),
-        explode(bandKeys(col("_sig"), bands, rowsPerBand)).as("bucket"))
+    val buckets = minhashBuckets(sets, bands, rowsPerBand)
     val cand = buckets.as("a").join(buckets.as("b"), Seq("bucket"))
       .where(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
@@ -236,7 +280,6 @@ object Dedup {
     require(shingleN >= 1, "shingleN must be positive")
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     import org.apache.spark.sql.expressions.Window
-    import graft.functions.ShingleExprs._
     // Prefix length is |A| - ceil(t|A|) + 1 ≈ (1-t)|A| + 1, so LOW
     // thresholds index most of every document and the candidate join can
     // dominate the whole pipeline (measured: t=0.3 indexes ~70% of each
@@ -248,11 +291,9 @@ object Dedup {
       s"jaccardPairs threshold=$threshold indexes ~${math.round((1 - threshold) * 100)}% " +
         "of each doc's tokens as join prefix; candidate generation may dominate. " +
         "Consider minhashNearDups for low-threshold near-dup detection.")
-    // shingles as 64-bit hashes from one fused codegen'd expression
-    // (cheap to recompute -> no corpus-sized cache; 8-byte join keys;
-    // a collision at ~2^-64/pair is irrelevant to intersection counts)
-    val sets = docs.select(longId(docs, idCol).as("id"),
-      shingleHash64(col(textCol), shingleN).as("sh"))
+    // shingles as 64-bit hashes (8-byte join keys; a collision at
+    // ~2^-64/pair is irrelevant to intersection counts)
+    val sets = shingleSets(docs, longId(docs, idCol), textCol, shingleN)
     // The explicit tok exchange shared by the document-frequency
     // aggregate and the prefix join-back (the r11 shared-exchange rule)
     // is size-gated like the confirm attach (round 16): at small scale
@@ -585,9 +626,8 @@ object Dedup {
     // max present directory under-counts when a bucket is empty);
     // generation 0 = a fresh release build, bumped by every
     // [[appendToGramIndex]]
-    Seq((minLen, buckets, 0L)).toDF("min_len", "n_buckets", "generation")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    resetGenerationClaims(spark, path)
+    writeIndexMeta(spark, path,
+      Seq((minLen, buckets, 0L)).toDF("min_len", "n_buckets", "generation"))
   }
 
   /** A fresh release build resets the append-claim side files — the
@@ -1313,30 +1353,7 @@ object Dedup {
       .where(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    // size-gated attach (see pairExplodeAttach): small string tables use
-    // two broadcast join-backs, large ones one stream + pair regroup
-    val attached =
-      if (pairExplodeAttach(base))
-        cand
-          .select(struct(col("id_a"), col("id_b")).as("p"))
-          .select(col("p"), explode(array(col("p.id_a"), col("p.id_b"))).as("id"))
-          .join(base, Seq("id"))
-          .groupBy(col("p"))
-          .agg(
-            first(when(col("id") === col("p.id_a"), col("s")),
-              ignoreNulls = true).as("s_a"),
-            first(when(col("id") === col("p.id_b"), col("s")),
-              ignoreNulls = true).as("s_b"))
-          .where(col("s_a").isNotNull && col("s_b").isNotNull)
-          .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-            col("s_a"), col("s_b"))
-      else
-        cand
-          .join(base.select(col("id").as("id_a"), col("s").as("s_a")),
-            Seq("id_a"))
-          .join(base.select(col("id").as("id_b"), col("s").as("s_b")),
-            Seq("id_b"))
-    attached
+    attachPair(cand, base, "id_a", "id_b", "s")
       // bounded confirm: the threshold form runs the banded O(k·L) DP
       // and returns -1 past the bound — computed once per candidate,
       // then filtered on the column (a filter-then-reproject would pay
@@ -1364,9 +1381,6 @@ object Dedup {
     docs.join(dropped, longId(docs, idCol) === col("__rep_drop"), "left_anti")
   }
 
-  /** Shared exact-Jaccard confirm pass: re-attach shingle sets to candidate
-    * id-pairs (two id-keyed joins — cheap, hits only candidates) and keep
-    * pairs at or above the threshold. */
   /** Self-evaluating MinHash recall — the near-dup counterpart of
     * [[graft.ops.Similarity.annRecall]]: ground truth from the EXACT
     * prefix-filtered Jaccard join, probabilistic candidates from the
@@ -1400,24 +1414,18 @@ object Dedup {
   def saveSignatureIndex(docs: DataFrame, path: String, idCol: String,
       textCol: String, shingleN: Int = 3, bands: Int = 16,
       rowsPerBand: Int = 4): Unit = {
-    import graft.functions.ShingleExprs._
     val spark = docs.sparkSession
     import spark.implicits._
-    val sets = docs.select(longId(docs, idCol).as("id"),
-      shingleHash64(col(textCol), shingleN).as("sh"))
+    val sets = shingleSets(docs, longId(docs, idCol), textCol, shingleN)
     sets.write.mode("overwrite").parquet(s"$path/sets")
-    sets.select(col("id"), minhashSig64(col("sh"),
-        bands * rowsPerBand).as("_sig"))
-      .select(col("id"),
-        explode(bandKeys(col("_sig"), bands, rowsPerBand)).as("bucket"))
+    minhashBuckets(sets, bands, rowsPerBand)
       .write.mode("overwrite").parquet(s"$path/buckets")
-    // signature parameters recorded so appends can never drift from the
-    // build (bucket keys embed the band structure — a mismatch finds
-    // nothing, silently); generation 0 = fresh release build
-    Seq((shingleN, bands, rowsPerBand, 0L))
-      .toDF("shingle_n", "bands", "rows_per_band", "generation")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    resetGenerationClaims(spark, path)
+    // signature parameters recorded so probes and appends can never
+    // drift from the build (bucket keys embed the band structure — a
+    // mismatch finds nothing, silently; see [[signatureIndexMeta]]);
+    // generation 0 = fresh release build
+    writeIndexMeta(spark, path, Seq((shingleN, bands, rowsPerBand, 0L))
+      .toDF("shingle_n", "bands", "rows_per_band", "generation"))
   }
 
   /** Grow a [[saveSignatureIndex]] corpus with an ACCEPTED ingest
@@ -1452,16 +1460,13 @@ object Dedup {
     * one id anti-join, two appends, no standing file rewritten. */
   def appendToSignatureIndex(batch: DataFrame, path: String, idCol: String,
       textCol: String): Unit = {
-    import graft.functions.ShingleExprs._
     val spark = batch.sparkSession
-    val meta = readIndexMeta(spark, path)
-    val shingleN = meta.getAs[Int]("shingle_n")
-    val bands = meta.getAs[Int]("bands")
-    val rowsPerBand = meta.getAs[Int]("rows_per_band")
+    val (shingleN, bands, rowsPerBand, generation) =
+      signatureIndexMeta(spark, path)
     // claim BEFORE any data write (the single-writer CAS); the
     // in-flight-compaction abort and history prune share the claim's
     // one directory listing, and the generation rides the meta row above
-    val claimed = claimWrite(spark, path, meta.getAs[Long]("generation"),
+    val claimed = claimWrite(spark, path, generation,
       failOnCompaction = true)
     val existing = readIndexDir(spark, path, "sets").select(col("id"))
     // materialize the novel slice BEFORE appending to the directory its
@@ -1469,13 +1474,9 @@ object Dedup {
     val novel = Checkpoints.materialize(
       batch.select(longId(batch, idCol).as("id"), col(textCol).as("_text"))
         .join(existing, Seq("id"), "left_anti"), None)
-    val sets = novel.select(col("id"),
-      shingleHash64(col("_text"), shingleN).as("sh"))
+    val sets = shingleSets(novel, col("id"), "_text", shingleN)
     // buckets FIRST: the torn-write recovery key is the sets id column
-    sets.select(col("id"), minhashSig64(col("sh"),
-        bands * rowsPerBand).as("_sig"))
-      .select(col("id"),
-        explode(bandKeys(col("_sig"), bands, rowsPerBand)).as("bucket"))
+    minhashBuckets(sets, bands, rowsPerBand)
       .write.mode("append").parquet(s"$path/buckets")
     sets.write.mode("append").parquet(s"$path/sets")
     markGenerationDone(spark, path, claimed)
@@ -1500,28 +1501,37 @@ object Dedup {
     meta
   }
 
+  /** A [[saveSignatureIndex]] build's recorded parameters and release
+    * generation: (shingleN, bands, rowsPerBand, generation). Every probe
+    * and append reads its signature parameters here, never from its
+    * caller — bucket keys embed the band structure, so a parameter that
+    * differed from the build would find nothing, silently. */
+  private[graft] def signatureIndexMeta(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String): (Int, Int, Int, Long) = {
+    val meta = cachedIndexMeta(spark, path)
+    (meta.getAs[Int]("shingle_n"), meta.getAs[Int]("bands"),
+      meta.getAs[Int]("rows_per_band"), meta.getAs[Long]("generation"))
+  }
+
   /** Near-dups of a NEW batch against a [[saveSignatureIndex]] corpus:
     * batch signatures join the saved bucket table band-wise (the only
     * corpus-sized side is the bucket index, keyed on the band bucket),
     * then candidates confirm with the exact Jaccard over the saved
     * shingle sets — same recall guarantee as [[minhashNearDups]], with
-    * the standing corpus's TEXT never read. Signature parameters must
-    * match the ones the index was built with (a mismatch simply finds
-    * nothing — bucket strings embed the band structure). Batch ids must
+    * the standing corpus's TEXT never read. The signature parameters
+    * (shingleN, bands, rowsPerBand) come from the index's own meta
+    * ([[signatureIndexMeta]]), so the batch is bucket-compatible with
+    * the build by construction. Batch ids must
     * be disjoint from corpus ids (the confirm re-attaches sets BY id; a
     * collision would cross-wire them). Output:
     * (batch_id, corpus_id, jaccard). */
   def incrementalNearDups(batch: DataFrame, path: String, idCol: String,
-      textCol: String, shingleN: Int = 3, bands: Int = 16,
-      rowsPerBand: Int = 4, threshold: Double = 0.5): DataFrame = {
-    import graft.functions.ShingleExprs._
+      textCol: String, threshold: Double = 0.5): DataFrame = {
     val spark = batch.sparkSession
-    val bSets = batch.select(longId(batch, idCol).as("id"),
-      shingleHash64(col(textCol), shingleN).as("sh"))
-    val bBuckets = bSets.select(col("id"), minhashSig64(col("sh"),
-        bands * rowsPerBand).as("_sig"))
-      .select(col("id"),
-        explode(bandKeys(col("_sig"), bands, rowsPerBand)).as("bucket"))
+    val (shingleN, bands, rowsPerBand, _) = signatureIndexMeta(spark, path)
+    val bSets = shingleSets(batch, longId(batch, idCol), textCol, shingleN)
+    val bBuckets = minhashBuckets(bSets, bands, rowsPerBand)
     val saved = readIndexDir(spark, path, "buckets")
     val cand = bBuckets.as("b").join(saved.as("c"), Seq("bucket"))
       .select(col("b.id").as("id_a"), col("c.id").as("id_b"))
@@ -1532,12 +1542,18 @@ object Dedup {
         col("jaccard"))
   }
 
-  /** Attach-strategy gate shared by the exact confirms ([[confirmJaccard]],
-    * [[editDistancePairs]], [[graft.ops.Similarity]]'s vector attach).
-    * Two ways to re-attach per-id payloads to a DISTINCT candidate-pair
-    * table, with opposite cost shapes (round-16 driver-measured):
+  /** Attach both members' payloads to a DISTINCT pair table — the one
+    * size-gated attach behind every exact confirm ([[confirmJaccard]],
+    * [[editDistancePairs]], [[graft.ops.Similarity]]'s cosine confirms).
+    * `base` holds `(id, <payload>)` with unique ids, and `left ≠ right`
+    * in every pair. Returns `(left, right, <payload>_a, <payload>_b)`;
+    * both branches drop a pair whose side is missing from `base` (inner
+    * joins in one, the null filter in the other).
     *
-    *  - TWO JOIN-BACKS (pairs ⋈ corpus on id_a, then on id_b): the pair
+    * Two ways to re-attach per-id payloads to a DISTINCT candidate-pair
+    * table, with opposite cost shapes (measured in round 16):
+    *
+    *  - TWO JOIN-BACKS (pairs ⋈ corpus on left, then on right): the pair
     *    side broadcasts, so NO payload ever crosses an exchange — but the
     *    corpus build (scan + fused shingle/vector pass) streams once per
     *    join. Cheap while the corpus is small; at 100 TB it is two full
@@ -1545,11 +1561,15 @@ object Dedup {
     *    planner degrades it to two corpus-sized shuffles keyed on id.
     *  - PAIR-EXPLODE (explode each pair to its member ids, join the
     *    corpus ONCE, regroup by pair): one corpus stream, but the regroup
-    *    shuffles full payloads once per pair membership, and at small
-    *    scale the planner inverts the build side — it broadcasts the
-    *    CORPUS under the exploded pairs (round-15 plan dump: the whole
-    *    shingle build collected into a BroadcastExchange), which is what
-    *    regressed four headline queries ~40% at sf0.1.
+    *    shuffles full payloads once per pair membership (a candidate-
+    *    bounded exchange: density the PPJoin prefix / LSH band filters
+    *    bound by construction), and at small scale the planner inverts
+    *    the build side — it broadcasts the CORPUS under the exploded
+    *    pairs (round-15 plan dump: the whole shingle build collected into
+    *    a BroadcastExchange), which is what regressed four headline
+    *    queries ~40% at sf0.1. `first(when)` in the regroup is
+    *    deterministic: ids are unique and left ≠ right, so exactly one
+    *    non-null row exists per side of each pair.
     *
     * Gate on the corpus subtree's size estimate (for file sources this
     * is the scan's real file bytes scaled by projection — reliable,
@@ -1560,8 +1580,32 @@ object Dedup {
     * the same query flips strategy as its input grows — and tunable via
     * spark.graft.confirm.explodeMinBytes (bytes; local default keeps
     * every test SF in the two-join regime, see OPTIMIZATION_r16.md). */
-  private[graft] def pairExplodeAttach(corpus: DataFrame): Boolean =
-    corpusExceeds(corpus, graft.Graft.ConfirmExplodeMinBytes)
+  private[ops] def attachPair(pairs: DataFrame, base: DataFrame,
+      left: String, right: String, payload: String): DataFrame = {
+    val (pa, pb) = (s"${payload}_a", s"${payload}_b")
+    if (corpusExceeds(base, graft.Graft.ConfirmExplodeMinBytes))
+      pairs
+        .select(struct(col(left), col(right)).as("p"))
+        .select(col("p"),
+          explode(array(col(s"p.$left"), col(s"p.$right"))).as("id"))
+        .join(base, Seq("id"))
+        .groupBy(col("p"))
+        .agg(
+          first(when(col("id") === col(s"p.$left"), col(payload)),
+            ignoreNulls = true).as(pa),
+          first(when(col("id") === col(s"p.$right"), col(payload)),
+            ignoreNulls = true).as(pb))
+        .where(col(pa).isNotNull && col(pb).isNotNull)
+        .select(col(s"p.$left").as(left), col(s"p.$right").as(right),
+          col(pa), col(pb))
+    else
+      pairs
+        .join(base.select(col("id").as(left), col(payload).as(pa)),
+          Seq(left))
+        .join(base.select(col("id").as(right), col(payload).as(pb)),
+          Seq(right))
+        .select(col(left), col(right), col(pa), col(pb))
+  }
 
   /** True when `corpus`'s optimizer size estimate reaches the byte
     * threshold `minBytes` sets — the shared plan-time predicate behind
@@ -1573,41 +1617,12 @@ object Dedup {
       minBytes.get(corpus.sparkSession)
 
   /** Exact-Jaccard confirm of a DISTINCT candidate-pair table (every
-    * caller distincts — the pair-explode regroup relies on it). The
-    * attach strategy is size-gated, see [[pairExplodeAttach]]: small
-    * corpora use two broadcast join-backs (zero payload shuffle), large
-    * corpora one corpus stream + a candidate-bounded pair regroup (a
-    * doc's set moves once per pair it appears in — density the PPJoin
-    * prefix / LSH band filters bound by construction). `first(when)` in
-    * the explode branch is deterministic: ids are unique per caller
-    * contract and id_a ≠ id_b, so exactly one non-null row exists per
-    * side of each pair. Both branches drop a pair whose side is missing
-    * from `sets` (inner joins there, the null filter here). */
+    * caller distincts — the pair-explode regroup relies on it): the
+    * shingle sets re-attach through [[attachPair]], and pairs at or
+    * above the threshold stay. */
   private def confirmJaccard(cand: DataFrame, sets: DataFrame,
-      threshold: Double): DataFrame = {
-    val attached =
-      if (pairExplodeAttach(sets))
-        cand
-          .select(struct(col("id_a"), col("id_b")).as("p"))
-          .select(col("p"),
-            explode(array(col("p.id_a"), col("p.id_b"))).as("id"))
-          .join(sets, Seq("id"))
-          .groupBy(col("p"))
-          .agg(
-            first(when(col("id") === col("p.id_a"), col("sh")),
-              ignoreNulls = true).as("sh_a"),
-            first(when(col("id") === col("p.id_b"), col("sh")),
-              ignoreNulls = true).as("sh_b"))
-          .where(col("sh_a").isNotNull && col("sh_b").isNotNull)
-          .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-            col("sh_a"), col("sh_b"))
-      else
-        cand
-          .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")),
-            Seq("id_a"))
-          .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")),
-            Seq("id_b"))
-    attached
+      threshold: Double): DataFrame =
+    attachPair(cand, sets, "id_a", "id_b", "sh")
       // sorted-distinct hash sets -> allocation-free merge count
       // (functions.SortedIntersectCount == size(array_intersect) here)
       .withColumn("inter", graft.functions.ShingleExprs
@@ -1616,5 +1631,4 @@ object Dedup {
         (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
       .where(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-  }
 }

@@ -402,15 +402,34 @@ object Similarity {
   def cosineNearDups(emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.9, bands: Int = 8, rowsPerBand: Int = 8,
       dim: Int = -1, seed: Long = 42L): DataFrame = {
+    val (base, keyed) = bandedVectors("cosineNearDups", emb, idCol, vecCol,
+      bands, rowsPerBand, dim, seed)
+    val cand = keyed.as("a").join(keyed.as("b"), Seq("band", "key"))
+      .where(col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .distinct()
+    Dedup.attachPair(cand, base, "id_a", "id_b", "v")
+      .withColumn("cosine", VectorExprs.cosineSim(col("v_a"), col("v_b")))
+      .where(col("cosine") >= threshold)
+      .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
+  }
+
+  /** The banded-vector prefix [[cosineNearDups]] and [[knnJoin]] share:
+    * the resolved dimension (`dim`, or the first non-null vector's), the
+    * `(id, v)` base table with NULL embeddings excluded up front (same
+    * reasoning as the dim inference: they can't be near anything, and
+    * bandKeys fail-fasts on NULL dots by design), the resolved
+    * granularity ([[resolveGranularity]]) and the `(id, band, key)`
+    * sign-LSH bucket table. `caller` names the operator in the error. */
+  private def bandedVectors(caller: String, emb: DataFrame, idCol: String,
+      vecCol: String, bands: Int, rowsPerBand: Int, dim: Int,
+      seed: Long): (DataFrame, DataFrame) = {
     val d =
       if (dim > 0) dim
       else emb.where(col(vecCol).isNotNull).select(size(col(vecCol)))
         .head(1).headOption.map(_.getInt(0)).getOrElse(
           throw new IllegalArgumentException(
-            s"cosineNearDups: no non-null $vecCol to infer dimension from"))
-    // NULL embeddings are excluded up front (same reasoning as the dim
-    // inference above): they can't be near anything, and bandKeys
-    // fail-fasts on NULL dots by design
+            s"$caller: no non-null $vecCol to infer dimension from"))
     val base = emb.where(col(vecCol).isNotNull)
       .select(Dedup.longId(emb, idCol).as("id"), col(vecCol).as("v"))
     val (b, r) = resolveGranularity(base, bands, rowsPerBand)
@@ -418,49 +437,8 @@ object Similarity {
     val keyed = base.select(col("id"),
       explode(bandKeys(col("v"), planes, b, r)).as("bk"))
       .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val cand = keyed.as("a").join(keyed.as("b"), Seq("band", "key"))
-      .where(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    attachPairVectors(cand, base, "id_a", "id_b")
-      .withColumn("cosine", VectorExprs.cosineSim(col("v_a"), col("v_b")))
-      .where(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
+    (base, keyed)
   }
-
-  /** Attach both members' vectors to a DISTINCT pair table. Size-gated
-    * like the Jaccard confirm (see [[Dedup.pairExplodeAttach]]): a small
-    * embedding table re-attaches through two broadcast join-backs (the
-    * pair side broadcasts — zero vector ever crosses an exchange); a
-    * large one streams ONCE through a pair-explode + regroup, whose
-    * exchange is candidate-bounded (a vector moves once per pair it
-    * appears in — the band-occupancy bound). `first(when)` is
-    * deterministic: ids are unique per the embedding contract and
-    * left ≠ right in every caller. Returns
-    * (leftName, rightName, v_a, v_b). */
-  private def attachPairVectors(pairs: DataFrame, base: DataFrame,
-      leftName: String, rightName: String): DataFrame =
-    if (Dedup.pairExplodeAttach(base))
-      pairs
-        .select(struct(col(leftName).as("l"), col(rightName).as("r")).as("p"))
-        .select(col("p"), explode(array(col("p.l"), col("p.r"))).as("id"))
-        .join(base, Seq("id"))
-        .groupBy(col("p"))
-        .agg(
-          first(when(col("id") === col("p.l"), col("v")),
-            ignoreNulls = true).as("v_a"),
-          first(when(col("id") === col("p.r"), col("v")),
-            ignoreNulls = true).as("v_b"))
-        .where(col("v_a").isNotNull && col("v_b").isNotNull)
-        .select(col("p.l").as(leftName), col("p.r").as(rightName),
-          col("v_a"), col("v_b"))
-    else
-      pairs
-        .join(base.select(col("id").as(leftName), col("v").as("v_a")),
-          Seq(leftName))
-        .join(base.select(col("id").as(rightName), col("v").as("v_b")),
-          Seq(rightName))
-        .select(col(leftName), col(rightName), col("v_a"), col("v_b"))
 
   /** k-nearest-neighbor self-join: for EVERY document, its top-k most
     * cosine-similar neighbors — the retrieval / clustering / hard-negative
@@ -478,26 +456,15 @@ object Similarity {
       bands: Int = 8, rowsPerBand: Int = 8, dim: Int = -1,
       seed: Long = 42L): DataFrame = {
     require(k > 0, "k must be positive")
-    val d =
-      if (dim > 0) dim
-      else emb.where(col(vecCol).isNotNull).select(size(col(vecCol)))
-        .head(1).headOption.map(_.getInt(0)).getOrElse(
-          throw new IllegalArgumentException(
-            s"knnJoin: no non-null $vecCol to infer dimension from"))
-    val base = emb.where(col(vecCol).isNotNull)
-      .select(Dedup.longId(emb, idCol).as("id"), col(vecCol).as("v"))
-    val (b, r) = resolveGranularity(base, bands, rowsPerBand)
-    val planes = hyperplanes(b * r, d, seed)
-    val keyed = base.select(col("id"),
-      explode(bandKeys(col("v"), planes, b, r)).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
+    val (base, keyed) = bandedVectors("knnJoin", emb, idCol, vecCol, bands,
+      rowsPerBand, dim, seed)
     val cand = keyed.as("a").join(keyed.as("b"), Seq("band", "key"))
       .where(col("a.id") =!= col("b.id"))
       .select(col("a.id").as("qid"), col("b.id").as("nid"))
       .distinct()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cosine").desc, col("nid").asc)
-    attachPairVectors(cand, base, "qid", "nid")
+    Dedup.attachPair(cand, base, "qid", "nid", "v")
       .withColumn("cosine", VectorExprs.cosineSim(col("v_a"), col("v_b")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)

@@ -313,14 +313,8 @@ object TextOps {
     require(shingleN >= 1 && bands >= 1 && rowsPerBand >= 1,
       "shingleN/bands/rowsPerBand must be positive")
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
-    import graft.functions.ShingleExprs._
-    def sets(df: DataFrame) = df.select(col(idCol).as("id"),
-      shingleHash64(col(textCol), shingleN).as("sh"))
-    def buckets(df: DataFrame) = sets(df)
-      .select(col("id"), minhashSig64(col("sh"),
-        bands * rowsPerBand).as("_sig"))
-      .select(col("id"), explode(Dedup.bandKeys(col("_sig"),
-        bands, rowsPerBand)).as("bucket"))
+    def sets(df: DataFrame) =
+      Dedup.shingleSets(df, col(idCol), textCol, shingleN)
     // the corpus-side shingle sets RIDE the candidate join instead of
     // being recomputed for the confirm: the bucket join is a broadcast
     // hash join (eval side is human-sized), so carrying `sh` is
@@ -329,19 +323,28 @@ object TextOps {
     // replaces shuffled the entire corpus sets table on cid and paid
     // the corpus tokenize+shingle a second time (measured: 6 scans at
     // this query's fixture, 4 after).
-    val cand = sets(corpus)
-      .select(col("id"), col("sh"), minhashSig64(col("sh"),
-        bands * rowsPerBand).as("_sig"))
-      .select(col("id"), col("sh"), explode(Dedup.bandKeys(col("_sig"),
-        bands, rowsPerBand)).as("bucket"))
+    val cand = Dedup.minhashBuckets(sets(corpus), bands, rowsPerBand, "sh")
       .as("c")
-      .join(broadcast(buckets(evalSet).as("e")), Seq("bucket"))
+      .join(broadcast(Dedup.minhashBuckets(sets(evalSet), bands,
+        rowsPerBand).as("e")), Seq("bucket"))
       .select(col("c.id").as("cid"), col("c.sh").as("sh_c"),
         col("e.id").as("eid"))
       .groupBy(col("cid"), col("eid"))
       .agg(any_value(col("sh_c")).as("sh_c")) // identical within a pair
+    bestEvalMatch(cand, sets(evalSet), threshold, idCol)
+  }
+
+  /** The exact confirm both fuzzy-decontamination probes end with:
+    * `cand` holds (cid, eid, sh_c) candidates, the eval side's
+    * `(id, sh)` sets broadcast in by eid, and every corpus doc at or
+    * above the threshold keeps its BEST eval match — highest exact
+    * `jaccard_micros` = 1000000·|∩| div |∪| (an exact integer), smallest
+    * eval id on ties. Output: (`idOut`, matched_eval_id,
+    * jaccard_micros). */
+  private def bestEvalMatch(cand: DataFrame, evalSets: DataFrame,
+      threshold: Double, idOut: String): DataFrame =
     cand
-      .join(broadcast(sets(evalSet)
+      .join(broadcast(evalSets
         .select(col("id").as("eid"), col("sh").as("sh_e"))), Seq("eid"))
       .withColumn("inter", graft.functions.ShingleExprs
         .sortedIntersectCount(col("sh_c"), col("sh_e")).cast("long"))
@@ -355,9 +358,8 @@ object TextOps {
         org.apache.spark.sql.expressions.Window.partitionBy(col("cid"))
           .orderBy(col("jaccard_micros").desc, col("eid"))))
       .where(col("rn") === 1)
-      .select(col("cid").as(idCol), col("eid").as("matched_eval_id"),
+      .select(col("cid").as(idOut), col("eid").as("matched_eval_id"),
         col("jaccard_micros"))
-  }
 
   /** [[fuzzyContaminatedIds]] against a PERSISTED signature index
     * ([[Dedup.saveSignatureIndex]]): the probe path reads the saved
@@ -371,50 +373,27 @@ object TextOps {
     * candidate ids back to the saved sets.
     *
     * Contract mirrors [[Dedup.incrementalNearDups]]: shingleN / bands /
-    * rowsPerBand must match the values the index was built with (a
-    * mismatch finds nothing — bucket hashes embed the band structure),
-    * and eval ids need not be disjoint from corpus ids (the two sides
-    * never mix id namespaces). Output schema = [[fuzzyContaminatedIds]]
-    * with the saved index's `id` as `corpus_id`. */
+    * rowsPerBand come from the index's own meta
+    * ([[Dedup.signatureIndexMeta]]), so the eval signatures are
+    * bucket-compatible with the build by construction, and eval ids
+    * need not be disjoint from corpus ids (the two sides never mix id
+    * namespaces). Output schema = [[fuzzyContaminatedIds]] with the
+    * saved index's `id` as `corpus_id`. */
   def fuzzyContaminatedIdsIndexed(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, evalSet: DataFrame, idCol: String,
-      textCol: String, shingleN: Int = 3, bands: Int = 16,
-      rowsPerBand: Int = 4, threshold: Double = 0.8): DataFrame = {
-    require(shingleN >= 1 && bands >= 1 && rowsPerBand >= 1,
-      "shingleN/bands/rowsPerBand must be positive")
+      textCol: String, threshold: Double = 0.8): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
-    import graft.functions.ShingleExprs._
-    def sets(df: DataFrame) = df.select(col(idCol).as("id"),
-      shingleHash64(col(textCol), shingleN).as("sh"))
-    def buckets(df: DataFrame) = sets(df)
-      .select(col("id"), minhashSig64(col("sh"),
-        bands * rowsPerBand).as("_sig"))
-      .select(col("id"), explode(Dedup.bandKeys(col("_sig"),
-        bands, rowsPerBand)).as("bucket"))
+    val (shingleN, bands, rowsPerBand, _) =
+      Dedup.signatureIndexMeta(spark, indexPath)
+    val evalSets = Dedup.shingleSets(evalSet, col(idCol), textCol, shingleN)
     val cand = Dedup.readIndexDir(spark, indexPath, "buckets")
       .select(col("id").as("cid"), col("bucket"))
-      .join(broadcast(buckets(evalSet)
+      .join(broadcast(Dedup.minhashBuckets(evalSets, bands, rowsPerBand)
         .select(col("id").as("eid"), col("bucket"))), Seq("bucket"))
       .select(col("cid"), col("eid")).distinct()
-    cand
       .join(Dedup.readIndexDir(spark, indexPath, "sets")
         .select(col("id").as("cid"), col("sh").as("sh_c")), Seq("cid"))
-      .join(broadcast(sets(evalSet)
-        .select(col("id").as("eid"), col("sh").as("sh_e"))), Seq("eid"))
-      .withColumn("inter", graft.functions.ShingleExprs
-        .sortedIntersectCount(col("sh_c"), col("sh_e")).cast("long"))
-      .withColumn("uni",
-        size(col("sh_c")) + size(col("sh_e")) - col("inter"))
-      .withColumn("jaccard_micros",
-        when(col("uni") > 0, expr("(1000000L * inter) div uni"))
-          .otherwise(lit(0L)))
-      .where(col("jaccard_micros") >= (threshold * 1000000).round)
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("cid"))
-          .orderBy(col("jaccard_micros").desc, col("eid"))))
-      .where(col("rn") === 1)
-      .select(col("cid").as("corpus_id"), col("eid").as("matched_eval_id"),
-        col("jaccard_micros"))
+    bestEvalMatch(cand, evalSets, threshold, "corpus_id")
   }
 
   // --------------------------------------------------------------------

@@ -1210,7 +1210,9 @@ object StreamOps extends org.apache.spark.internal.Logging {
     * ids. Make the sink idempotent by `idCol`. Ids must be globally
     * unique across the stream and the corpus (the
     * [[graft.ops.Dedup.incrementalNearDups]] rule). Signature
-    * parameters are read from the INDEX's own meta, so they can never
+    * parameters — for the corpus probe, the within-batch pass and the
+    * append alike — are read from the INDEX's own meta
+    * ([[graft.ops.Dedup.signatureIndexMeta]]), so they can never
     * silently mismatch the build (a caller-supplied band structure
     * that differed would find zero candidates and admit everything).
     * Single-writer: one ingest stream per index. */
@@ -1237,14 +1239,12 @@ object StreamOps extends org.apache.spark.internal.Logging {
       (sink: (DataFrame, Long) => Unit): Unit = {
     import graft.ops.Dedup
     val spark = batch.sparkSession
-    val meta = Dedup.readIndexMeta(spark, indexPath)
-    val shingleN = meta.getAs[Int]("shingle_n")
-    val bands = meta.getAs[Int]("bands")
-    val rowsPerBand = meta.getAs[Int]("rows_per_band")
+    val (shingleN, bands, rowsPerBand, _) =
+      Dedup.signatureIndexMeta(spark, indexPath)
     val accepted = stagedBatchResult(batch, idCol, textCol, indexPath,
         batchId, runId) {
       val corpusHits = Dedup.incrementalNearDups(batch, indexPath, idCol,
-          textCol, shingleN, bands, rowsPerBand, threshold)
+          textCol, threshold)
         .where(col("batch_id") =!= col("corpus_id"))
         .select(col("batch_id").as("_dup")).distinct()
       val noCorpusDup = batch.join(corpusHits,

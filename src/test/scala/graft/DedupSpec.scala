@@ -1225,4 +1225,66 @@ class DedupSpec extends SparkSpec {
     } finally spark.conf.unset(Graft.RollupGcMinAgeMs.key)
     assert(!new java.io.File(rp).exists(), "a refused setting writes nothing")
   }
+
+  test("signature-index probes read shingleN/bands/rowsPerBand from " +
+      "the index meta") {
+    // built with non-default parameters: a probe that used its own
+    // defaults (3, 16, 4) would compute incompatible buckets and find
+    // nothing
+    val words = (1 to 20).map(i => s"w$i")
+    val corpus = Seq((1L, words.mkString(" ")),
+      (2L, "completely different content about spark physical planning"))
+      .toDF("doc_id", "text")
+    val nearCopy = (words.init :+ "changed").mkString(" ")
+    val batch = Seq((101L, nearCopy)).toDF("doc_id", "text")
+    val tmp = tempDir("graft-sigidx-params").toString
+    Dedup.saveSignatureIndex(corpus, tmp, "doc_id", "text",
+      shingleN = 2, bands = 8, rowsPerBand = 2)
+    val inc = Dedup.incrementalNearDups(batch, tmp, "doc_id", "text")
+      .as[(Long, Long, Double)].collect().toSeq
+    assert(inc == Seq((101L, 1L, 0.9)), s"got $inc") // 18 / 20 2-shingles
+    val fuzzy = TextOps.fuzzyContaminatedIdsIndexed(spark, tmp, batch,
+        "doc_id", "text")
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(fuzzy == Seq((1L, 101L, 900000L)), s"got $fuzzy")
+  }
+
+  test("the pair-explode attach returns the default attach's rows for " +
+      "every near-dup confirm") {
+    val names = Seq((1L, "jonathan"), (2L, "jonathon"), (3L, "jon"),
+      (4L, "jonh"), (5L, "maria")).toDF("id", "name")
+    val vecs = (0 until 6).map { i =>
+      val r = new scala.util.Random(i / 2)
+      (i.toLong, Array.fill(8)(r.nextFloat() - 0.5f)
+        .map(_ * (1.0f + i % 2)))
+    }.toDF("vec_id", "embedding")
+    val tmp = tempDir("graft-sigidx-explode").toString
+    Dedup.saveSignatureIndex(docs, tmp, "doc_id", "text")
+    val batch = docs.select(($"doc_id" + 100L).as("doc_id"), $"text")
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "jaccardPairs" -> (() =>
+        Dedup.jaccardPairs(docs, "doc_id", "text", threshold = 0.5)),
+      "minhashNearDups" -> (() =>
+        Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.5)),
+      "incrementalNearDups" -> (() =>
+        Dedup.incrementalNearDups(batch, tmp, "doc_id", "text")),
+      "editDistancePairs" -> (() =>
+        Dedup.editDistancePairs(names, "id", "name", 2)),
+      "cosineNearDups" -> (() => graft.ops.Similarity.cosineNearDups(
+        vecs, "vec_id", "embedding", 0.99)),
+      "knnJoin" -> (() => graft.ops.Similarity.knnJoin(
+        vecs, "vec_id", "embedding", k = 2)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
+    val byDefault = ops.map { case (_, op) => rows(op()) }
+    val key = Graft.ConfirmExplodeMinBytes.key
+    spark.conf.set(key, "0")
+    try ops.zip(byDefault).foreach { case ((name, op), want) =>
+      val df = op()
+      assert(df.queryExecution.optimizedPlan.toString.contains("first("),
+        s"$name did not take the pair-explode attach")
+      assert(want.nonEmpty, s"$name: empty fixture result")
+      assert(rows(df) == want, s"$name: ${rows(df)} vs $want")
+    } finally spark.conf.unset(key)
+  }
 }
