@@ -102,6 +102,9 @@ for name, sql in sorted(oracle.items()):
     spill_tripped.clear()
     try:
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
+        if not files:
+            print(f"ERR  {name}: no Spark output under {out_dir}/{name}")
+            n_bad += 1; continue
         spark_rel = con.sql(f"SELECT * FROM read_parquet({files!r})")
         duck_rel = con.sql(sql)
         scols = sorted(spark_rel.columns); dcols = sorted(duck_rel.columns)
