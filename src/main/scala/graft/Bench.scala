@@ -88,7 +88,7 @@ object Bench {
     // standing grams) and the codegen'd integer-Viterbi unigram encode
     "q_substring_dedup_indexed", "q_unigram_encode",
     // round 13 (VERDICT r12 #7): the materialized-rollup ROUTED read —
-    // rollup built once per JVM (SparkEntry.rollupCache), each run
+    // rollup built once per JVM (ScaleQueries.rollupCache), each run
     // registers, routes (plan-checked), executes, unregisters; a
     // routing-overhead or rollup-read regression now shows in
     // BENCH_r{N}.json instead of being invisible
@@ -168,13 +168,14 @@ object Bench {
     warmup(spark, sfDir)
 
     val results = headline.map { name =>
-      val samples = (1 to runs).map { _ =>
+      val samples = (1 to runs).flatMap { _ =>
         // lookup inside the try: one stale headline name must cost one
         // entry, not the whole round's benchmark output
-        timed(spark)(SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.toRdd.count())
+        try Some(queryRun(spark, name, sfDir))
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}"); None }
       }
-      Entry(name, samples.collect { case (t, true) => t })
+      Entry(name, samples)
     }
     val all = results ++ streamingEntries(spark, sfDir, runs)
     // a crashed query records -1 (NOT its near-zero elapsed time) and is
@@ -237,17 +238,23 @@ object Bench {
     if (failed.nonEmpty) sys.exit(1)
   }
 
-  /** One measurement: the elapsed seconds and whether `body` completed. */
-  private def timed(spark: SparkSession)(body: => Unit): (Double, Boolean) = {
+  /** One timed run of the registered query `name`, the measurement
+    * Bench, BenchOne, AbGate and ScalingCurve share: the seconds to
+    * build its frame and force it through `toRdd.count()`. A failure
+    * propagates. */
+  private[graft] def queryRun(spark: SparkSession, name: String,
+      sfDir: String): Double =
+    timed(spark)(SparkEntry.queries(name)(spark, sfDir)
+      .queryExecution.toRdd.count())
+
+  /** One measurement: the elapsed seconds of `body`. */
+  private def timed(spark: SparkSession)(body: => Unit): Double = {
     // every measurement starts from an empty SQL cache: caching is part
     // of a query's OWN cost, not a subsidy it leaves for its successors
     spark.catalog.clearCache()
     val t0 = System.nanoTime()
-    val ok =
-      try { body; true }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] failed: ${e.getMessage}"); false }
-    ((System.nanoTime() - t0) / 1e9, ok)
+    body
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** One streaming run's own temp tree and memory-sink view name. */
@@ -262,27 +269,27 @@ object Bench {
   private[graft] def streamEntry(spark: SparkSession, name: String, runs: Int)(
       setup: StreamRun => () => DataStreamWriter[_])(
       check: StreamRun => Unit): Entry = {
-    val samples = (1 to runs).map { i =>
+    val samples = (1 to runs).flatMap { i =>
       try {
         val run = StreamRun(Files.createTempDirectory(s"graft-bench-$name-$i"),
           s"bench_${name}_$i")
         try {
           val query = setup(run)
-          timed(spark) {
+          Some(timed(spark) {
             val q = query().start()
             try q.processAllAvailable() finally q.stop()
             check(run)
-          }
+          })
         } finally {
           spark.catalog.dropTempView(run.view)
           FileUtils.deleteQuietly(run.dir.toFile)
         }
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        (-1.0, false)
+        None
       }
     }
-    Entry(name, samples.collect { case (t, true) => t })
+    Entry(name, samples)
   }
 
   /** The four streaming entries: real Structured Streaming file sources. */

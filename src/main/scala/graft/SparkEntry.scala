@@ -1,17 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.engine.{Catalog, Frame, JoinType, Raw}
-import graft.engine.{Exprs => E}
-import graft.ops.{AsOfJoin, Dedup, Ivf, Multimodal, Pq, Similarity, TextOps}
+import graft.queries.Query
 
 /** Driver contract — every operator from SURVEY.md §2 (parity surface) plus
   * the LLM-data-pipeline extension operators, each as a named query with a
-  * DuckDB-equivalent oracle where SQL-expressible.
+  * DuckDB-equivalent oracle. The queries live in `graft.queries`, one
+  * file per family, each a [[graft.queries.Query]] record holding its
+  * frame and its oracle side by side; the two maps here are derived once
+  * from that registry.
   *
   * Float-safety convention for oracle parity: per-row double arithmetic is
   * bit-exact across engines (same IEEE ops), so it is emitted raw; multi-row
@@ -21,10 +19,13 @@ import graft.ops.{AsOfJoin, Dedup, Ivf, Multimodal, Pq, Similarity, TextOps}
   */
 object SparkEntry {
 
-  /** Parquet table loader (fresh plan per call, so self-joins get distinct
-    * attribute ids). */
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** Every query's frame builder, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Query.all.map(q => q.name -> q.build).toMap
+
+  /** Every query's DuckDB oracle text, by name; reading it renders all. */
+  lazy val oracleSql: Map[String, String] =
+    Query.all.map(q => q.name -> q.oracle).toMap
 
   /** A fresh directory for a query's artifacts, under one per-JVM root
     * a shutdown hook deletes. The tree lives until JVM exit, not until
@@ -40,10699 +41,10 @@ object SparkEntry {
     root
   }
 
-  /** Planted token blocks for q_repeated_spans: shared verbatim between
-    * the Spark plant and the DuckDB oracle so both engines see the same
-    * partial-overlap pairs. */
-  private val spanBlock12: String = (1 to 12).map(i => s"aq$i").mkString(" ")
-  private val spanBlock8: String = (1 to 8).map(i => s"bq$i").mkString(" ")
-
-  /** One gram index per (corpus dir, JVM) for q_substring_dedup_indexed:
-    * the standing index is a build-once release artifact, so repeat
-    * bench runs measure the probe, not the build. */
-  private val gramIdxCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** One saved rollup per (corpus dir, JVM) for the q_rollup_* family —
-    * a build-once release artifact like the gram index, so repeat bench
-    * runs measure the ROUTED read, not the rollup build. */
-  private val rollupCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** The q_rollup_* family's shared artifact: (lang, source) dims with
-    * the n_chars measure over `documents` — ONE definition, so the
-    * three queries can never silently build divergent artifacts under
-    * the same cache key. */
-  private def rollupFor(s: SparkSession, dir: String): String =
-    rollupCache.getOrElseUpdate(dir, {
-      val p = scratchDir("graft-rollup-q").toString
-      graft.ops.Rollup.saveRollup(
-        s.read.parquet(s"$dir/documents.parquet"), p,
-        dims = Seq("lang", "source"), measures = Seq("n_chars"))
-      p
-    })
-
-  /** q_rollup_star's dim-table fixture, once per (corpus dir, JVM):
-    * one row per distinct documents.source with deterministic derived
-    * attributes, persisted as parquet so the routed star plan provably
-    * reads rollup + dim table ONLY — the oracle re-derives the same
-    * dim table from `documents` in a CTE. */
-  private val starDimCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** private[graft]: DumpPlans and PlanSpec pin the routed star plan
-    * against THIS fixture rather than re-deriving their own (one
-    * definition — the oracle CTE must mirror it exactly, and a copy
-    * that drifted would break q_rollup_star's hash parity silently). */
-  private[graft] def starDimFor(s: SparkSession, dir: String): String =
-    starDimCache.getOrElseUpdate(dir, {
-      val p = scratchDir("graft-rollup-dim").toString
-      s.read.parquet(s"$dir/documents.parquet")
-        .select(col("source")).distinct()
-        .select(col("source").as("src"),
-          when(col("source").isin("src0", "src1"), "low")
-            .otherwise("high").as("tier"),
-          length(col("source")).cast("int").as("src_len"))
-        .coalesce(1).write.mode("overwrite").parquet(p)
-      p
-    })
-
-  /** q_rollup_refresh's fixture, once per (corpus dir, JVM): a private
-    * copy of `documents` as the base, a rollup built on it, and then
-    * an APPEND of the doc_id%7==0 slice (ids shifted) — so the rollup
-    * is one refresh behind its base, exactly the nightly-ingest shape
-    * [[graft.ops.Rollup.refresh]] exists for. */
-  private val refreshCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
-  private def refreshFixtureFor(s: SparkSession, dir: String)
-      : (String, String) =
-    refreshCache.getOrElseUpdate(dir, {
-      // the copy drops `text` (~95% of the bytes — the rollup and the
-      // oracle use only the dims + n_chars)
-      val root = scratchDir("graft-rollup-refresh-q")
-      val bp = root.resolve("base").toString
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "lang", "source", "n_chars")
-      docs.write.parquet(bp)
-      val rp = root.resolve("roll").toString
-      graft.ops.Rollup.saveRollup(s.read.parquet(bp), rp,
-        dims = Seq("lang", "source"), measures = Seq("n_chars"))
-      docs.where(pmod(col("doc_id"), lit(7)) === 0)
-        .select((col("doc_id") + 10000000L).as("doc_id"),
-          col("lang"), col("source"), col("n_chars"))
-        .write.mode("append").parquet(bp)
-      (bp, rp)
-    })
-
-  /** All file-relation scan roots of the optimized plan — a star plan
-    * carries several relations (rollup + dim table), so the contract
-    * checks walk them ALL (the r14 collectFirst judged only whichever
-    * relation the traversal met first). */
-  private def planScanRoots(q: org.apache.spark.sql.DataFrame): Seq[String] =
-    q.queryExecution.optimizedPlan.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(_.toString).mkString(",")
-          case _ => ""
-        }
-    }
-
-  /** Plan contract check shared by the q_rollup_* family: true when the
-    * optimized plan reads the rollup artifact (the routed plan), false
-    * when it still reads only the base. Checked on the exact plan that
-    * will execute, while the registration is live. */
-  private def readsRollupPlan(q: org.apache.spark.sql.DataFrame,
-      roll: String): Boolean = planScanRoots(q).exists(_.contains(roll))
-
-  /** True when the optimized plan still scans the base — the star
-    * entry's stronger contract is readsRollupPlan && !scansBasePlan:
-    * rollup + dim table only, the fact corpus never read. */
-  private def scansBasePlan(q: org.apache.spark.sql.DataFrame,
-      basePath: String): Boolean =
-    planScanRoots(q).exists(_.contains(basePath))
-
-  /** Planted unigram piece vocabulary for q_unigram_encode, shared
-    * verbatim between the Spark encode and the DuckDB Viterbi replay:
-    * every character the corpus + planted docs use EXCEPT z/x (those
-    * exercise `<unk>`), plus multi-char pieces engineering a whole-word
-    * win ('scan' beats [sc,an]), and an exact tie on 'abcd'
-    * ([ab,cd] = [abc,d] = −16M with equal token counts — the
-    * lexicographic tie-break must pick [ab,cd] on BOTH engines). */
-  private val unigramVocab: Seq[(String, Long)] =
-    "abcdefghijklmnopqrstuvwy".map(c => c.toString -> -15000000L) ++ Seq(
-      "sc" -> -10000000L, "an" -> -10000000L, "scan" -> -6000000L,
-      "jo" -> -7000000L, "in" -> -7000000L,
-      "the" -> -6000000L, "query" -> -6000000L, "er" -> -9000000L,
-      "ab" -> -8000000L, "cd" -> -8000000L, "abc" -> -1000000L)
-
-  /** Shared oracle CTE block mirroring Dedup.repeatedSpans (df<=64
-    * guard, gaps-and-islands over (pair, offset)) on the planted
-    * corpus — ends with a `spans` CTE used by q_repeated_spans and the
-    * q_dup_fraction composition. The oracle keeps md5-string anchors
-    * while the Spark side uses the fused 64-bit ShingleAnchors chain:
-    * anchors are pure EQUALITY keys that never reach output, so any
-    * injective-on-word-tuples hash yields identical rows. */
-  private def spanCtes: String =
-    s"""WITH docs2 AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES
-       |    (100001, '$spanBlock12 tail1 tail2'),
-       |    (100002, 'lead1 lead2 $spanBlock12'),
-       |    (100003, '$spanBlock8 end1'),
-       |    (100004, 'pre1 $spanBlock8')) v(doc_id, text)),
-       |tok AS (
-       |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ws
-       |  FROM docs2),
-       |anch AS (
-       |  SELECT doc_id, unnest(
-       |    [{'pos': i, 'h': md5(array_to_string(ws[i:i+7], ' '))}
-       |     FOR i IN generate_series(1, len(ws) - 7)]) AS u
-       |  FROM tok WHERE len(ws) >= 8),
-       |a AS (SELECT doc_id, u.pos AS pos, u.h AS h FROM anch),
-       |g AS (
-       |  SELECT * FROM (
-       |    SELECT a.*, count(*) OVER (PARTITION BY h) AS df_h FROM a)
-       |  WHERE df_h <= 64),
-       |cand AS (
-       |  SELECT x.doc_id AS da, y.doc_id AS db, x.pos AS pa, y.pos AS pb
-       |  FROM g x JOIN g y ON x.h = y.h AND x.doc_id < y.doc_id),
-       |runs AS (
-       |  SELECT da, db, pa - pb AS d, pa,
-       |    pa - row_number() OVER (
-       |      PARTITION BY da, db, pa - pb ORDER BY pa) AS grp
-       |  FROM cand),
-       |spans AS (
-       |  SELECT da AS doc_a, db AS doc_b,
-       |    CAST(min(pa) AS BIGINT) AS start_a,
-       |    CAST(min(pa) - d AS BIGINT) AS start_b,
-       |    CAST(max(pa) - min(pa) + 8 AS BIGINT) AS span_len
-       |  FROM runs GROUP BY da, db, d, grp)""".stripMargin
-
-  /** DuckDB replay of Graph.pageRank on the undirected supplier<->
-    * customer graph: the 5 iterations unrolled as chained CTE stages,
-    * in the op's FIXED-POINT integer arithmetic — BIGINT nano-scale
-    * ranks, truncating `(rank_n * 85) // (odeg * 100)` contributions
-    * (`//` floors, `div` truncates: identical on the all-positive
-    * ranks), exact BIGINT sums, one final divide to double. No float
-    * appears inside the loop on either engine, so there is nothing to
-    * round differently (a double→DECIMAL contribution variant measured
-    * 473/16k rows off by 1e-8 at sf0.1). Graph CTEs are MATERIALIZED:
-    * each stage re-references e/od/nodes, and inlining them per stage
-    * would re-run the base join five times. */
-  private def pageRankSql(iterations: Int, weighted: Boolean): String = {
-    val contrib =
-      if (weighted) "(r.pr_n * 85 * e.w) // (od.wsum * 100)"
-      else "(r.pr_n * 85) // (od.odeg * 100)"
-    val stages = (1 to iterations).map { k =>
-      s"""r$k AS (
-         |  SELECT n.node,
-         |    150000000 + coalesce(s.csum, 0) AS pr_n
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS node,
-         |      CAST(sum($contrib) AS BIGINT) AS csum
-         |    FROM e JOIN r${k - 1} r ON e.src = r.node
-         |    JOIN od ON e.src = od.src
-         |    GROUP BY e.dst) s ON n.node = s.node)""".stripMargin
-    }.mkString(",\n")
-    val graph =
-      if (weighted)
-        s"""pr_pairs AS MATERIALIZED (
-           |  SELECT 's:' || CAST(l_suppkey AS VARCHAR) AS a,
-           |    'c:' || CAST(o_custkey AS VARCHAR) AS b,
-           |    CAST(count(DISTINCT l_orderkey) AS BIGINT) AS w
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           |  GROUP BY 1, 2),
-           |e AS MATERIALIZED (
-           |  SELECT a AS src, b AS dst, w FROM pr_pairs
-           |  UNION ALL SELECT b, a, w FROM pr_pairs),
-           |od AS MATERIALIZED (
-           |  SELECT src, CAST(sum(w) AS BIGINT) AS wsum FROM e
-           |  GROUP BY src)""".stripMargin
-      else
-        s"""pr_pairs AS MATERIALIZED (
-           |  SELECT DISTINCT 's:' || CAST(l_suppkey AS VARCHAR) AS a,
-           |    'c:' || CAST(o_custkey AS VARCHAR) AS b
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-           |e AS MATERIALIZED (
-           |  SELECT a AS src, b AS dst FROM pr_pairs
-           |  UNION SELECT b, a FROM pr_pairs),
-           |od AS MATERIALIZED (
-           |  SELECT src, count(*) AS odeg FROM e GROUP BY src)""".stripMargin
-    s"""WITH $graph,
-       |nodes AS MATERIALIZED (
-       |  SELECT DISTINCT src AS node FROM e
-       |  UNION SELECT DISTINCT dst FROM e),
-       |r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS pr_n FROM nodes),
-       |$stages
-       |SELECT node, CAST(pr_n AS DOUBLE) / 1000000000.0 AS pr
-       |FROM r$iterations""".stripMargin
-  }
-
-  private val PageRankSql: String = pageRankSql(5, weighted = false)
-  private val PageRankWeightedSql: String = pageRankSql(5, weighted = true)
-
-  /** Personalized (TrustRank) variant: the unrolled stages re-base each
-    * node at its OWN `base_n` — `(seedShare * 15) // 100` on seeds, 0
-    * elsewhere — instead of the uniform 0.15; `r0` starts as the seed
-    * indicator vector scaled to `1e9 // |S|`. Same fixed-point BIGINT
-    * discipline as [[pageRankSql]]. */
-  private def personalizedPageRankSql(iterations: Int): String = {
-    val stages = (1 to iterations).map { k =>
-      s"""r$k AS (
-         |  SELECT n.node, n.base_n + coalesce(s.csum, 0) AS pr_n
-         |  FROM nodesb n LEFT JOIN (
-         |    SELECT e.dst AS node,
-         |      CAST(sum((r.pr_n * 85) // (od.odeg * 100)) AS BIGINT) AS csum
-         |    FROM e JOIN r${k - 1} r ON e.src = r.node
-         |    JOIN od ON e.src = od.src
-         |    GROUP BY e.dst) s ON n.node = s.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH pr_pairs AS MATERIALIZED (
-       |  SELECT DISTINCT 's:' || CAST(l_suppkey AS VARCHAR) AS a,
-       |    'c:' || CAST(o_custkey AS VARCHAR) AS b
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-       |e AS MATERIALIZED (
-       |  SELECT a AS src, b AS dst FROM pr_pairs
-       |  UNION SELECT b, a FROM pr_pairs),
-       |od AS MATERIALIZED (
-       |  SELECT src, count(*) AS odeg FROM e GROUP BY src),
-       |nodes AS MATERIALIZED (
-       |  SELECT DISTINCT src AS node FROM e
-       |  UNION SELECT DISTINCT dst FROM e),
-       |seeds AS MATERIALIZED (
-       |  SELECT DISTINCT 's:' || CAST(s_suppkey AS VARCHAR) AS node
-       |  FROM supplier WHERE s_nationkey < 5),
-       |sn AS (SELECT CAST(count(*) AS BIGINT) AS ns FROM seeds),
-       |nodesb AS MATERIALIZED (
-       |  SELECT n.node,
-       |    CASE WHEN s.node IS NULL THEN CAST(0 AS BIGINT)
-       |         ELSE ((1000000000 // sn.ns) * 15) // 100 END AS base_n,
-       |    CASE WHEN s.node IS NULL THEN CAST(0 AS BIGINT)
-       |         ELSE 1000000000 // sn.ns END AS pr_n
-       |  FROM nodes n LEFT JOIN seeds s ON n.node = s.node CROSS JOIN sn),
-       |r0 AS (SELECT node, pr_n FROM nodesb),
-       |$stages
-       |SELECT node, CAST(pr_n AS DOUBLE) / 1000000000.0 AS pr
-       |FROM r$iterations""".stripMargin
-  }
-
-  private val PageRankPersonalizedSql: String = personalizedPageRankSql(5)
-
-  /** Unrolled synchronous label propagation: stage k picks each node's
-    * (count DESC, label ASC) argmax over in-neighbor labels from stage
-    * k-1, keeping the old label when no messages arrive. Stages are
-    * MATERIALIZED — each is referenced twice by its successor (message
-    * source and fallback), so inlining would double the work per
-    * round. No arithmetic anywhere: cross-engine exactness is the
-    * total order alone. */
-  private def labelPropagationSql(iterations: Int): String = {
-    val stages = (1 to iterations).map { k =>
-      s"""l$k AS MATERIALIZED (
-         |  SELECT p.node, coalesce(w.lab, p.lab) AS lab
-         |  FROM l${k - 1} p LEFT JOIN (
-         |    SELECT dst AS node, lab FROM (
-         |      SELECT dst, lab, row_number() OVER (PARTITION BY dst
-         |          ORDER BY c DESC, lab ASC) AS rn
-         |      FROM (SELECT e.dst, r.lab, count(*) AS c
-         |        FROM e JOIN l${k - 1} r ON e.src = r.node
-         |        GROUP BY e.dst, r.lab) g) t
-         |    WHERE rn = 1) w ON p.node = w.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH sp AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sup
-       |  FROM lineitem WHERE l_quantity > 45),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT CAST(x.sup AS VARCHAR) AS src,
-       |    CAST(y.sup AS VARCHAR) AS dst
-       |  FROM sp x JOIN sp y ON x.ok = y.ok AND x.sup <> y.sup),
-       |nodes AS MATERIALIZED (
-       |  SELECT DISTINCT src AS node FROM e
-       |  UNION SELECT DISTINCT dst FROM e),
-       |l0 AS (SELECT node, node AS lab FROM nodes),
-       |$stages
-       |SELECT node, lab FROM l$iterations""".stripMargin
-  }
-
-  private val CommunitiesSql: String = labelPropagationSql(5)
-
-  /** Unrolled k-core peeling: stage j keeps nodes whose degree in the
-    * stage-(j-1) survivor subgraph is ≥ k. The k-core is a unique
-    * fixpoint (peel order can't change it), so the oracle just needs
-    * ENOUGH stages to stabilize — the deepest cascade measured on the
-    * fixture co-supplier graph is 8 rounds (k=18 empties sf0.1); 10
-    * stages leave slack, and a too-shallow unroll would surface as a
-    * hash mismatch, not a silent pass. */
-  private def kCoreSql(k: Int, stages: Int): String = {
-    val rounds = (1 to stages).map { j =>
-      s"""c$j AS MATERIALIZED (
-         |  SELECT src AS node FROM e
-         |  WHERE src IN (SELECT node FROM c${j - 1})
-         |    AND dst IN (SELECT node FROM c${j - 1})
-         |  GROUP BY src HAVING count(*) >= $k)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH sp AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sup
-       |  FROM lineitem WHERE l_quantity > 45),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT CAST(x.sup AS VARCHAR) AS src,
-       |    CAST(y.sup AS VARCHAR) AS dst
-       |  FROM sp x JOIN sp y ON x.ok = y.ok AND x.sup <> y.sup),
-       |c0 AS (SELECT DISTINCT src AS node FROM e),
-       |$rounds
-       |SELECT src AS node, CAST(count(*) AS BIGINT) AS core_degree
-       |FROM e
-       |WHERE src IN (SELECT node FROM c$stages)
-       |  AND dst IN (SELECT node FROM c$stages)
-       |GROUP BY src""".stripMargin
-  }
-
-  private val KCoreSql: String = kCoreSql(15, 10)
-
-  /** Exact decimal-accumulated sum of a 2-decimal double column. */
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(18, 2))).cast("double")
-
-  /** Exact decimal sum for computed products (price*(1-disc) has <= 4
-    * decimal digits; 8 gives slack). */
-  private def dsum8(c: Column): Column =
-    sum(c.cast(DecimalType(28, 8))).cast("double")
-
-  /** Exact DECIMAL(28,8) sum rounded to `scale` IN DECIMAL, then cast.
-    * The rounding must happen before the cast: a cents value's integer
-    * representation stays below 2^53, so both engines' decimal->double
-    * conversions reduce to one correctly-rounded IEEE division and agree
-    * bit-for-bit — whereas casting the scale-8 sum first double-rounds
-    * and measurably diverges by 1 ulp across engines at sf >= 0.1
-    * (DuckDB float-divides its int128; Spark casts the exact decimal). */
-  private def dsum8r(c: Column, scale: Int = 2): Column =
-    round(sum(c.cast(DecimalType(28, 8))), scale).cast("double")
-
-  /** Epoch-microseconds LONG for the events `ts` column under EITHER
-    * fixture representation the driver has shipped: parquet
-    * TIMESTAMP(NANOS) read as a nanos LONG (spark.sql.legacy.parquet
-    * .nanosAsLong — rounds <= 6), or TIMESTAMP(MICROS) read as a
-    * timestamp (round-7 regeneration; NTZ when the file is not
-    * UTC-adjusted). Integer `div` keeps full precision (a double
-    * division would lose bits above 2^53); the NTZ->LTZ cast is an
-    * identity wall-clock mapping under the UTC session timezone, so
-    * unix_micros here equals DuckDB's epoch_us(ts) on the same file. */
-  private def tsUsLong(df: DataFrame): Column =
-    graft.ops.TimeSeries.epochMicros(df, "ts")
-
-  /** events with ts normalized — expose both an epoch-seconds long and a
-    * microsecond timestamp, whatever physical form `ts` arrived in. */
-  private def events(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").withColumn("__ts_us", tsUsLong(t(s, dir, "events")))
-      .withColumn("ts_sec", expr("__ts_us div 1000000"))
-      .withColumn("ts_us", timestamp_micros(col("__ts_us")))
-      .drop("__ts_us")
-
-  /** events with ts_us as a PLAIN LONG of epoch-micros (not a timestamp)
-    * — the form the as-of join and funnel order by; one definition so no
-    * query silently shadows the timestamp column with a long. */
-  private def eventsUsLong(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
-    raw.withColumn("ts_us", tsUsLong(raw))
-  }
-
-  /** Customers as deterministic integer micro-degree points for the geo
-    * family: md5-derived uniform (x, y), the cross-engine bucketOf
-    * convention widened to 12 hex digits (48 bits, exact in BIGINT). */
-  private def geoPoints(s: SparkSession, dir: String): DataFrame = {
-    def axis(tag: String, mod: Long) =
-      conv(substring(md5(concat(col("c_custkey").cast("string"),
-        lit(":" + tag)).cast("binary")), 1, 12), 16, 10)
-        .cast("long") % mod
-    t(s, dir, "customer").select(col("c_custkey").as("pid"),
-      axis("x", 360000000L).as("x"), axis("y", 180000000L).as("y"))
-  }
-
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. The corpus
     * curation pipeline exercises the engine end-to-end: quality scoring
     * (expression layer) -> exact similarity join (codegen'd shingles,
     * prefix-filtered index) -> anti-join -> aggregation. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_corpus_curate")(spark, "/root/testdata/sf0.001")
-
-  // -------------------------------------------------------------------
-  // Queries. Names are stable across rounds; each parity query routes
-  // through the engine surface (Catalog/Frame/Exprs) it demonstrates.
-  // -------------------------------------------------------------------
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map[String, (SparkSession, String) => DataFrame](
-
-    // ---- §2.1 Scan ----------------------------------------------------
-    "q_scan" -> ((s, dir) => {
-      val c = new Catalog(s).addParquetTable("region", s"$dir/region.parquet")
-      c.table("region").df
-    }),
-
-    // ---- §2.1 Scan→Selection→Projection (the canonical pipeline) ------
-    "q_filter_project" -> ((s, dir) => {
-      Frame(t(s, dir, "lineitem"))
-        .filter(E.col("l_quantity") >= E.lit(45.0) &&
-          (E.col("l_returnflag") === E.lit("R")))
-        .project(E.col("l_orderkey"), E.col("l_linenumber"),
-          E.col("l_quantity"), E.col("l_extendedprice"))
-        .df
-    }),
-
-    // ---- §2.1 Projection with computed expression ---------------------
-    "q_projection" -> ((s, dir) => {
-      Frame(t(s, dir, "lineitem"))
-        .project(E.col("l_orderkey"), E.col("l_linenumber"),
-          (E.col("l_extendedprice") * (E.lit(1.0) - E.col("l_discount")))
-            .as("revenue"))
-        .df
-    }),
-
-    // ---- §2.2 all 13 binary ops (comparison, boolean, arithmetic) -----
-    "q_binary_ops" -> ((s, dir) => {
-      Frame(t(s, dir, "lineitem"))
-        .filter(E.col("l_orderkey") <= E.lit(1000L))
-        .project(
-          E.col("l_orderkey"), E.col("l_linenumber"),
-          (E.col("l_returnflag") === E.lit("R")).as("c_eq"),
-          (E.col("l_linestatus") =!= E.lit("F")).as("c_neq"),
-          (E.col("l_quantity") > E.lit(30.0)).as("c_gt"),
-          (E.col("l_quantity") >= E.lit(30.0)).as("c_gte"),
-          (E.col("l_quantity") < E.lit(10.0)).as("c_lt"),
-          (E.col("l_quantity") <= E.lit(10.0)).as("c_lte"),
-          ((E.col("l_quantity") > E.lit(30.0) &&
-            (E.col("l_discount") < E.lit(0.05))) ||
-            (E.col("l_tax") > E.lit(0.05))).as("c_bool"),
-          (E.col("l_quantity") + E.col("l_tax")).as("a_add"),
-          (E.col("l_extendedprice") - E.lit(100.0)).as("a_sub"),
-          (E.col("l_extendedprice") * E.col("l_discount")).as("a_mul"),
-          (E.col("l_extendedprice") / E.col("l_quantity")).as("a_div"),
-          (E.col("l_partkey") % E.lit(7L)).as("a_mod"))
-        .df
-    }),
-
-    // ---- §2.2 scalar fns CONCAT/SUBSTRING/ABS/SQRT/POWER --------------
-    "q_scalar_fns" -> ((s, dir) => {
-      Frame(t(s, dir, "part"))
-        .project(E.col("p_partkey"),
-          E.concat(E.col("p_brand"), E.lit("_"), E.col("p_type")).as("brand_type"),
-          E.substring(E.col("p_name"), E.lit(3), E.lit(10)).as("name_sub"),
-          E.abs(E.col("p_retailprice") - E.lit(1500.0)).as("price_dev"),
-          E.sqrt(E.col("p_size")).as("size_sqrt"),
-          E.power(E.col("p_size"), E.lit(2)).as("size_sq"))
-        .df
-    }),
-
-    // ---- §2.1+2.3 grouped aggregation, all 5 agg fns (TPC-H Q1 shape) -
-    "q_agg_grouped" -> ((s, dir) => {
-      Frame(t(s, dir, "lineitem")).aggregate(
-        Seq(E.col("l_returnflag"), E.col("l_linestatus")),
-        Seq(
-          Raw(sum(col("l_quantity")).as("sum_qty"), "sum_qty"),
-          Raw(dsum(col("l_extendedprice")).as("sum_base"), "sum_base"),
-          Raw(dsum8r(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("sum_disc_price"), "sum_disc_price"),
-          Raw((sum(col("l_quantity")) / count(lit(1))).as("avg_qty"), "avg_qty"),
-          Raw(min(col("l_extendedprice")).as("min_price"), "min_price"),
-          Raw(max(col("l_extendedprice")).as("max_price"), "max_price"),
-          Raw(count(lit(1)).as("count_order"), "count_order"))).df
-    }),
-
-    // ---- §2.3 global aggregate ----------------------------------------
-    "q_agg_global" -> ((s, dir) => {
-      Frame(t(s, dir, "orders")).aggregate(Seq.empty,
-        Seq(
-          Raw(dsum(col("o_totalprice")).as("sum_price"), "sum_price"),
-          Raw(min(col("o_totalprice")).as("min_price"), "min_price"),
-          Raw(max(col("o_totalprice")).as("max_price"), "max_price"),
-          Raw((dsum(col("o_totalprice")) / count(col("o_totalprice")))
-            .as("avg_price"), "avg_price"),
-          Raw(count(lit(1)).as("n_orders"), "n_orders"))).df
-    }),
-
-    // ---- §2.3 group-by-computed-expression (ref aggr/mod.rs:264-296) --
-    "q_agg_expr" -> ((s, dir) => {
-      Frame(t(s, dir, "lineitem")).aggregate(
-        Seq((E.col("l_quantity") <= E.lit(25.0)).as("small_qty")),
-        Seq(Raw(count(lit(1)).as("n"), "n"),
-          Raw(sum(col("l_quantity")).as("sum_qty"), "sum_qty"))).df
-    }),
-
-    // ---- §2.1 joins: inner through two dimensions (broadcast at scale) -
-    "q_join_inner" -> ((s, dir) => {
-      Frame(t(s, dir, "customer"))
-        .join(Frame(t(s, dir, "nation")), Seq(("c_nationkey", "n_nationkey")))
-        .join(Frame(t(s, dir, "region")), Seq(("n_regionkey", "r_regionkey")))
-        .aggregate(Seq(E.col("r_name"), E.col("n_name")),
-          Seq(Raw(count(lit(1)).as("n_cust"), "n_cust"),
-            Raw(dsum(col("c_acctbal")).as("sum_bal"), "sum_bal"))).df
-    }),
-
-    // ---- §2.1 left outer join -----------------------------------------
-    "q_join_left" -> ((s, dir) => {
-      Frame(t(s, dir, "customer"))
-        .join(Frame(t(s, dir, "orders")), Seq(("c_custkey", "o_custkey")),
-          JoinType.Left)
-        .aggregate(Seq(E.col("c_custkey")),
-          Seq(Raw(count(col("o_orderkey")).as("n_orders"), "n_orders"))).df
-    }),
-
-    // ---- §2.1 right outer join ----------------------------------------
-    "q_join_right" -> ((s, dir) => {
-      Frame(t(s, dir, "orders"))
-        .join(Frame(t(s, dir, "customer")), Seq(("o_custkey", "c_custkey")),
-          JoinType.Right)
-        .aggregate(Seq(E.col("c_mktsegment")),
-          Seq(Raw(count(col("o_orderkey")).as("n_orders"), "n_orders"),
-            Raw(count(lit(1)).as("n_rows"), "n_rows"))).df
-    }),
-
-    // ---- §2.1 multi-key equi-join (ref nested_loop_join.rs:201-248) ---
-    "q_join_multikey" -> ((s, dir) => {
-      val a = Frame(t(s, dir, "lineitem"))
-      val b = Frame(t(s, dir, "lineitem"))
-      a.join(b, Seq(("l_orderkey", "l_orderkey"), ("l_linenumber", "l_linenumber")))
-        .df.agg(count(lit(1)).as("n"),
-          sum(a.df("l_quantity") * b.df("l_quantity")).as("sum_qq"))
-    }),
-
-    // ---- extension: left semi join (EXISTS) — customers with orders ---
-    "q_join_semi" -> ((s, dir) => {
-      Frame(t(s, dir, "customer"))
-        .join(Frame(t(s, dir, "orders")), Seq(("c_custkey", "o_custkey")),
-          JoinType.Semi)
-        .aggregate(Seq(E.col("c_mktsegment")),
-          Seq(Raw(count(lit(1)).as("n_cust"), "n_cust"))).df
-    }),
-
-    // ---- extension: left anti join (NOT EXISTS) — order-less customers
-    "q_join_anti" -> ((s, dir) => {
-      Frame(t(s, dir, "customer"))
-        .join(Frame(t(s, dir, "orders")), Seq(("c_custkey", "o_custkey")),
-          JoinType.Anti)
-        .aggregate(Seq(E.col("c_mktsegment")),
-          Seq(Raw(count(lit(1)).as("n_cust"), "n_cust"))).df
-    }),
-
-    // ---- extension: full outer join — both sides filtered so both
-    // null-extension directions are actually exercised ------------------
-    "q_join_full" -> ((s, dir) => {
-      val c = t(s, dir, "customer").where(col("c_custkey") <= 900)
-      val o = t(s, dir, "orders").where(col("o_custkey") >= 800)
-      Frame(c).join(Frame(o), Seq(("c_custkey", "o_custkey")), JoinType.FullOuter)
-        .aggregate(Seq.empty,
-          Seq(Raw(count(lit(1)).as("n_rows"), "n_rows"),
-            Raw(count(col("c_custkey")).as("n_left"), "n_left"),
-            Raw(count(col("o_orderkey")).as("n_right"), "n_right"),
-            Raw(count(when(col("c_custkey").isNull, lit(1))).as("n_left_null"),
-              "n_left_null"))).df
-    }),
-
-    // ---- §2.4 catalog + CSV source (ref catalog.rs + csv_table.rs) ----
-    "q_csv_catalog" -> ((s, _) => {
-      val c = new Catalog(s)
-        .addCsvTable("people", "/root/repo/src/test/resources/data/people.csv")
-      c.table("people")
-        .filter(E.col("age") >= E.lit(24))
-        .project(E.col("name"), E.col("score"))
-        .df
-    }),
-
-    // line-oriented text source: one row per line, zero parsing — the
-    // rawest corpus ingest format (WET extracts, one-doc-per-line
-    // dumps); downstream expressions do the splitting, as they should
-    // at 100 TB (Catalog.addTextTable)
-    "q_text_source" -> ((s, _) => {
-      val c = new Catalog(s)
-        .addTextTable("corpus_raw", "/root/repo/src/test/resources/data/corpus.txt")
-      c.table("corpus_raw").df
-        .select(col("value"), length(col("value")).cast("long").as("n_chars"),
-          TextOps.nTokens(col("value")).cast("long").as("n_tokens"))
-    }),
-
-    // WARC crawl ingest, end-to-end: build spec-shaped WARC records from
-    // the documents table, concatenate them into per-bucket "files"
-    // (records in doc_id order, a deliberately TRUNCATED half-record
-    // planted at the tail of file 0), byte-walk the files back into
-    // records with the Content-Length-framed parser, and prove every
-    // document survived bit-exact (body md5 vs the oracle's md5 of the
-    // source text). The truncated plant must vanish; bodies containing
-    // "\r\n\r\n" would survive too (WarcSpec) because framing is by
-    // length, not delimiter. sources/Warc.scala documents the 100 TB
-    // shape (one ~1 GB file per row via binaryFile, flatMap to records).
-    "q_warc_ingest" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val uri = concat(lit("https://"), lower(col("source")),
-        lit(".example.com/doc/"), col("doc_id").cast("string"))
-      val recs = docs.select((col("doc_id") % 20).as("file_id"), col("doc_id"),
-        graft.sources.Warc.record(lit("response"),
-          concat(lit("urn:graft:doc:"), col("doc_id").cast("string")),
-          uri, col("text")).as("rec"))
-      val files = recs.groupBy("file_id")
-        .agg(concat_ws("", transform(
-          array_sort(collect_list(struct(col("doc_id"), col("rec")))),
-          x => x.getField("rec"))).as("blob"))
-        .withColumn("blob", when(col("file_id") === 0,
-          concat(col("blob"),
-            lit("WARC/1.0\r\nWARC-Type: response\r\nContent-Le")))
-          .otherwise(col("blob")))
-        .select(col("file_id"), col("blob").cast("binary").as("payload"))
-      graft.sources.Warc.parse(files, "file_id", "payload")
-        .where(col("rec_type") === "response")
-        .select(
-          regexp_extract(col("record_id"), "urn:graft:doc:(\\d+)", 1)
-            .cast("long").as("doc_id"),
-          col("target_uri"), col("content_length"),
-          md5(col("body").cast("binary")).as("body_md5"))
-    }),
-
-    // the .warc.gz sibling of q_warc_ingest — the format crawls
-    // actually ship (Common Crawl): each record its own gzip member,
-    // members concatenated per file; a garbage compressed tail is
-    // planted on file 0 and must not cost the good members. Oracle
-    // identical to q_warc_ingest's: every document recovered with
-    // exact byte length and md5-identical body
-    "q_warc_gzip" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val uri = concat(lit("https://"), lower(col("source")),
-        lit(".example.com/doc/"), col("doc_id").cast("string"))
-      val recs = docs.select((col("doc_id") % 20).as("file_id"),
-        col("doc_id"),
-        graft.sources.Warc.record(lit("response"),
-          concat(lit("urn:graft:doc:"), col("doc_id").cast("string")),
-          uri, col("text")).as("rec"))
-      val files = graft.sources.Warc
-        .gzipFiles(recs, "file_id", "rec", "doc_id")
-        .withColumn("payload", when(col("file_id") === 0,
-          concat(col("payload"),
-            lit("not a gzip member".getBytes("US-ASCII"))))
-          .otherwise(col("payload")))
-      graft.sources.Warc.parseGzip(files, "file_id", "payload")
-        .where(col("rec_type") === "response")
-        .select(
-          regexp_extract(col("record_id"), "urn:graft:doc:(\\d+)", 1)
-            .cast("long").as("doc_id"),
-          col("target_uri"), col("content_length"),
-          md5(col("body").cast("binary")).as("body_md5"))
-    }),
-
-    // dirty-ingestion contract: enforced schema + DROPMALFORMED skips
-    // the three broken lines in the fixture, keeps the five clean rows
-    "q_json_malformed" -> ((s, _) =>
-      new Catalog(s).addJsonTableStrict("docs_dirty",
-          "/root/repo/src/test/resources/data/docs_malformed.jsonl",
-          "id BIGINT, text STRING, lang STRING")
-        .table("docs_dirty").df
-        .select(col("id"), col("text"), col("lang"))),
-
-    // JSON source parity: write nation as JSON lines, read it back
-    // through the catalog's JSON source (schema inferred), and the
-    // round-trip must equal the parquet original
-    "q_json_roundtrip" -> ((s, dir) => {
-      val path = "/tmp/graft_rt/nation_json"
-      t(s, dir, "nation").write.mode("overwrite").json(path)
-      new Catalog(s).addJsonTable("nation_json_rt", path)
-        .table("nation_json_rt").df
-        .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-    }),
-
-    // ORC source parity, same round-trip shape
-    "q_orc_roundtrip" -> ((s, dir) => {
-      val path = "/tmp/graft_rt/nation_orc"
-      t(s, dir, "nation").write.mode("overwrite").orc(path)
-      new Catalog(s).addOrcTable("nation_orc_rt", path)
-        .table("nation_orc_rt").df
-        .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-    }),
-
-    // ---- SQL frontend over registered catalog views -------------------
-    "q_sql_frontend" -> ((s, dir) => {
-      Catalog.forTestdata(s, dir)
-      s.sql("""SELECT o_orderpriority, count(*) AS n FROM orders
-               WHERE o_totalprice > 100000 GROUP BY o_orderpriority""")
-    }),
-
-    // ---- SQL frontend portability: the ORACLE TEXT runs verbatim ------
-    // Every TPC-H oracle string is written in the ANSI subset BOTH
-    // engines parse, so each runs as (a) a spark.sql query here, (b) the
-    // DuckDB oracle, and (c) semantically the Frame-built q_tpch_qN —
-    // one query text, two engines, three routes, one answer. The full
-    // 22-entry batch (q_sql_tpch_q1..q22) is generated and appended
-    // after this map literal — see sqlTpchPortability below.
-
-    // ---- extension: sort + limit (top-k) ------------------------------
-    "q_sort_limit" -> ((s, dir) => {
-      Frame(t(s, dir, "orders"))
-        .project(E.col("o_orderkey"), E.col("o_custkey"), E.col("o_totalprice"))
-        .sort((E.col("o_totalprice"), false), (E.col("o_orderkey"), true))
-        .limit(10).df
-    }),
-
-    // ---- extension: distinct ------------------------------------------
-    "q_distinct" -> ((s, dir) => {
-      Frame(t(s, dir, "lineitem"))
-        .project(E.col("l_returnflag"), E.col("l_linestatus"))
-        .distinct().df
-    }),
-
-    // ---- extension: union (set semantics) -----------------------------
-    "q_union" -> ((s, dir) => {
-      Frame(t(s, dir, "customer")).project(E.col("c_nationkey").as("nationkey"))
-        .union(Frame(t(s, dir, "supplier")).project(E.col("s_nationkey").as("nationkey")))
-        .distinct().df
-    }),
-
-    // ---- extension: window functions (shared ANSI SQL both engines) ---
-    "q_window" -> ((s, dir) => {
-      Catalog.forTestdata(s, dir)
-      s.sql(WindowSql)
-    }),
-
-    // ---- extension: HAVING (post-aggregation filter) ------------------
-    "q_having" -> ((s, dir) => {
-      Frame(t(s, dir, "lineitem"))
-        .aggregate(Seq(E.col("l_partkey")),
-          Seq(Raw(count(lit(1)).as("n"), "n"),
-            Raw(max(col("l_quantity")).as("max_qty"), "max_qty")))
-        .filter(E.col("n") >= E.lit(35L)).df
-    }),
-
-    // ---- extension: event-time tumbling-window aggregation ------------
-    "q_events_hourly" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(date_trunc("hour", col("ts_us")).cast("string").as("hour"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-    }),
-
-    // ---- extension: sliding event-time windows (1h size, 30m slide) ---
-    "q_events_sliding" -> ((s, dir) =>
-      events(s, dir)
-        .groupBy(window(col("ts_us"), "1 hour", "30 minutes").as("w"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("w.start").cast("string").as("win_start"),
-          col("event_type"), col("n"))),
-
-    // ---- extension: exact ROC AUC (Mann-Whitney, tie-corrected) -------
-    // does the stopword-ratio score separate en from non-en? the decile
-    // lift's single-number companion: all-integer doubled tie-averaged
-    // ranks, one truncating micros divide (ops/Profile.aucExact)
-    "q_auc" -> ((s, dir) => {
-      val ws = split(trim(lower(col("text"))), "\\s+")
-      val scored = t(s, dir, "documents")
-        .withColumn("__ns", size(filter(ws,
-          w => w.isin("the", "a", "and", "of", "to"))).cast("long"))
-        .withColumn("__nt", greatest(size(ws), lit(1)).cast("long"))
-        .withColumn("score_micros", expr("(1000000L * __ns) div __nt"))
-        .select(col("score_micros"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("y"))
-      graft.ops.Profile.aucExact(scored, "score_micros", "y")
-    }),
-
-    // ---- extension: decile lift / calibration table -------------------
-    // the model-eval companion of the quality-score family: docs bucketed
-    // into exact score deciles (binByQuantile over the integer-micros
-    // stopword-ratio score), then per decile the en-label positive rate
-    // in exact micros — the lift/calibration table that says whether a
-    // filter score actually orders the label
-    "q_decile_lift" -> ((s, dir) => {
-      val ws = split(trim(lower(col("text"))), "\\s+")
-      val scored = t(s, dir, "documents")
-        .withColumn("__ns", size(filter(ws,
-          w => w.isin("the", "a", "and", "of", "to"))).cast("long"))
-        .withColumn("__nt", greatest(size(ws), lit(1)).cast("long"))
-        .withColumn("score_micros", expr("(1000000L * __ns) div __nt"))
-        .select(col("doc_id"), col("score_micros"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("y"))
-      val bins = graft.ops.Profile.binByQuantile(scored, "doc_id",
-        "score_micros", nBins = 10, scale = 0)
-      bins.join(scored, Seq("doc_id"))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"))
-        .withColumn("pos_rate_micros", expr("(1000000L * n_pos) div n"))
-    }),
-
-    // ---- extension: row-level z-score standardization -----------------
-    // every event's value scaled against its type's own exact integer
-    // moments, cancellation-free form — the distance-model featurization
-    // transform (ops/Profile.standardize)
-    "q_standardize" -> ((s, dir) =>
-      graft.ops.Profile.standardize(t(s, dir, "events"),
-        "event_id", "event_type", "value")),
-
-    // ---- extension: join preflight (exact output-cardinality report) --
-    // would lineitem JOIN orders explode? state the inner-join output
-    // size EXACTLY from the two key-count tables before shipping the
-    // join; the hottest key and its product say whether to salt
-    // (ops/Profile.joinPreflight)
-    "q_join_preflight" -> ((s, dir) =>
-      graft.ops.Profile.joinPreflight(
-        t(s, dir, "lineitem"), "l_orderkey",
-        t(s, dir, "orders"), "o_orderkey")),
-
-    // ---- extension: per-key lag-k autocorrelation ---------------------
-    // is the value series self-similar one step back? exact BIGINT
-    // moments over (u, lag(u)) pairs on the (sec, event_id) total order,
-    // fixed IEEE Pearson chain (ops/TimeSeries.autocorr)
-    "q_autocorr" -> ((s, dir) =>
-      graft.ops.TimeSeries.autocorr(events(s, dir), "event_type",
-        Seq(col("ts_sec"), col("event_id")), "value", lagK = 1)),
-
-    // ---- extension: per-key dyadic EWMA (exact smoothing gauge) -------
-    // alpha=1/2 EWMA over each event type's trailing 16 values with
-    // normalized power-of-two weights — all BIGINT (quantized cents,
-    // shifts, one truncating micros divide), so the smoothed series is
-    // bit-identical on any engine (ops/TimeSeries.ewmaDyadic)
-    "q_ewma" -> ((s, dir) =>
-      graft.ops.TimeSeries.ewmaDyadic(
-        events(s, dir).where(col("event_id") < 5000),
-        "event_type", Seq(col("ts_sec"), col("event_id")),
-        "value", lookback = 16)
-        .select(col("event_type"), col("event_id"),
-          col("value_unit"), col("ewma_unit_micros"))),
-
-    // ---- extension: period-over-period share shift --------------------
-    // which event type drove the mix change between the first and second
-    // half of the time range (split at the integer midpoint of
-    // min/max epoch secs — engine-portable); shares in exact micros
-    // (ops/Profile.shareShift)
-    "q_share_shift" -> ((s, dir) => {
-      val e = events(s, dir).select(col("event_type"), col("ts_sec"))
-      val bounds = e.agg(min(col("ts_sec")).as("lo"), max(col("ts_sec")).as("hi"))
-      val tagged = e.crossJoin(broadcast(bounds)) // 1-row scalar attach
-      graft.ops.Profile.shareShift(tagged, "event_type",
-        tagged("ts_sec") * 2 >= tagged("lo") + tagged("hi"))
-    }),
-
-    // ---- extension: sliding-window EXACT distinct users ---------------
-    // trailing 3h distinct-user counts per hourly slide — the rolling
-    // "active users" gauge. window() replicates each event into its 3
-    // covering windows (cost = span/slide, here 3x) and countDistinct is
-    // exact per window; at wider spans the approximate swap is
-    // approx_count_distinct under the same grouping (q_approx_sketches
-    // pins that path's error bounds)
-    "q_sliding_distinct" -> ((s, dir) =>
-      events(s, dir)
-        .groupBy(window(col("ts_us"), "3 hours", "1 hour").as("w"))
-        .agg(countDistinct(col("user_id")).as("n_users"),
-          count(lit(1)).as("n_events"))
-        .select(col("w.start").cast("string").as("win_start"),
-          col("n_users"), col("n_events"))),
-
-    // ---- extension: sessionization via window fns (lag + running sum) -
-    "q_sessionize" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(col("sec"), col("event_id"))
-      events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts_sec").as("sec"))
-        .withColumn("brk",
-          when(col("sec") - lag(col("sec"), 1).over(w) > 1800L, 1L).otherwise(0L))
-        .withColumn("sess_id", sum(col("brk"))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("user_id"), col("sess_id"))
-        .agg(count(lit(1)).as("n_events"))
-    }),
-
-    // ---- extension: set ops INTERSECT / EXCEPT ------------------------
-    "q_intersect" -> ((s, dir) => {
-      Frame(t(s, dir, "customer")).project(E.col("c_nationkey").as("nationkey"))
-        .intersect(Frame(t(s, dir, "supplier")).project(E.col("s_nationkey").as("nationkey"))).df
-    }),
-
-    "q_except" -> ((s, dir) => {
-      Frame(t(s, dir, "customer")).project(E.col("c_nationkey").as("nationkey"))
-        .except(Frame(t(s, dir, "supplier")).project(E.col("s_nationkey").as("nationkey"))).df
-    }),
-
-    // ---- extension: stable k-fold cross-validation assignment ---------
-    // md5(doc_id:seed) mod 5 folds over documents, reported as per-fold
-    // counts + char sums (ops/Sampling.kFold — the stableSplit
-    // convention widened to k buckets; folds survive any engine/retry)
-    "q_kfold" -> ((s, dir) => {
-      graft.ops.Sampling.kFold(t(s, dir, "documents"), "doc_id", 5)
-        .groupBy(col("fold"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("n_chars")).cast("long").as("sum_chars"))
-    }),
-
-    // ---- extension: bootstrap CI for a mean (Poissonized resampling) --
-    // 200 deterministic replicates in one pass (explode by B, exact
-    // integer sums per replicate, order-statistic quantiles over the
-    // B replicate means); md5-seeded Poisson(1) weights from literal
-    // CDF constants so both engines draw identically
-    "q_bootstrap_ci" -> ((s, dir) =>
-      graft.ops.Profile.bootstrapMeanCi(t(s, dir, "documents"),
-        "doc_id", "n_chars", 200, "boot")),
-
-    // ---- extension: A/B comparison report (Welch's t) -----------------
-    // click vs purchase value per user segment: exact decimal moment
-    // sums on one (group, variant) aggregation, fixed IEEE t statistic
-    // (ops/Profile.abCompare)
-    "q_ab_test" -> ((s, dir) => {
-      graft.ops.Profile.abCompare(
-        t(s, dir, "events").withColumn("segment",
-          (col("user_id") % 5).cast("int")),
-        "segment", "event_type", "value", "click", "purchase")
-    }),
-
-    // ---- extension: per-group closed-form OLS trend -------------------
-    // price regressed on quantity per return flag: five decimal moment
-    // sums on one group-keyed shuffle, fixed IEEE closed form over the
-    // exact sums (ops/Profile.groupRegression — the covarianceMatrix
-    // exactness rule, group-wise)
-    "q_group_regression" -> ((s, dir) =>
-      graft.ops.Profile.groupRegression(t(s, dir, "lineitem"),
-        "l_returnflag", "l_quantity", "l_extendedprice")),
-
-    // ---- extension: deterministic per-group MODE ----------------------
-    // most frequent l_quantity per return flag — built-in mode() is
-    // tie-arbitrary on BOTH engines, so this is the tie-safe form:
-    // count per (group, value), rank on (count DESC, value ASC)
-    "q_group_mode" -> ((s, dir) => {
-      val counts = t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_quantity"))
-        .agg(count(lit(1)).as("n"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("l_returnflag"))
-        .orderBy(col("n").desc, col("l_quantity"))
-      counts.withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select(col("l_returnflag"), col("l_quantity").as("mode_qty"),
-          col("n"))
-    }),
-
-    // ---- extension: bag-semantics set ops (EXCEPT/INTERSECT ALL) ------
-    // multiset difference/intersection of per-nation rows: occurrence
-    // counts matter (min(m,n) / max(m-n,0)), which Spark plans as one
-    // count-compare aggregate, never a join explosion
-    "q_except_all" -> ((s, dir) => {
-      Frame(t(s, dir, "customer")).project(E.col("c_nationkey").as("nationkey"))
-        .exceptAll(Frame(t(s, dir, "supplier"))
-          .project(E.col("s_nationkey").as("nationkey"))).df
-    }),
-    "q_intersect_all" -> ((s, dir) => {
-      Frame(t(s, dir, "customer")).project(E.col("c_nationkey").as("nationkey"))
-        .intersectAll(Frame(t(s, dir, "supplier"))
-          .project(E.col("s_nationkey").as("nationkey"))).df
-    }),
-
-    // ---- extension: CASE WHEN / NULLIF / COALESCE ---------------------
-    "q_case_null" -> ((s, dir) =>
-      t(s, dir, "lineitem").where(col("l_orderkey") <= 500)
-        .selectExpr("l_orderkey", "l_linenumber",
-          "CASE WHEN l_quantity > 40 THEN 'high' WHEN l_quantity > 20 THEN 'mid' ELSE 'low' END AS qty_band",
-          "coalesce(nullif(l_returnflag, 'N'), 'none') AS flag_or_none",
-          "(l_discount = 0) AS no_disc")),
-
-    // ---- extension: date/time part extraction -------------------------
-    "q_date_parts" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), year(col("o_orderdate")).as("y"),
-          month(col("o_orderdate")).as("m"),
-          dayofmonth(col("o_orderdate")).as("d"))),
-
-    // ---- extension: exact DISTINCT aggregates -------------------------
-    "q_count_distinct" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(
-        countDistinct(col("l_partkey")).as("n_parts"),
-        countDistinct(col("l_suppkey")).as("n_supps"),
-        count(lit(1)).as("n_rows"))),
-
-    // ---- extension: ROLLUP subtotals ----------------------------------
-    "q_rollup" -> ((s, dir) => {
-      Frame(t(s, dir, "customer"))
-        .join(Frame(t(s, dir, "nation")), Seq(("c_nationkey", "n_nationkey")))
-        .join(Frame(t(s, dir, "region")), Seq(("n_regionkey", "r_regionkey")))
-        .rollup(Seq(E.col("r_name"), E.col("n_name")),
-          Seq(Raw(count(lit(1)).as("n_cust"), "n_cust"))).df
-    }),
-
-    // ---- composite showpiece: TPC-H Q3 shape (3-way join + agg + topk) -
-    "q_tpch_q3" -> ((s, dir) => {
-      Frame(t(s, dir, "customer"))
-        .filter(E.col("c_mktsegment") === E.lit("BUILDING"))
-        .join(Frame(t(s, dir, "orders")), Seq(("c_custkey", "o_custkey")))
-        .filter(Raw(col("o_orderdate") < lit("1998-06-01"), "cond"))
-        .join(Frame(t(s, dir, "lineitem")), Seq(("o_orderkey", "l_orderkey")))
-        .filter(Raw(col("l_shipdate") > lit("1998-06-01"), "cond"))
-        .aggregate(Seq(E.col("l_orderkey")),
-          Seq(Raw(dsum8r(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("revenue"), "revenue")))
-        .sort((E.col("revenue"), false), (E.col("l_orderkey"), true))
-        .limit(10).df
-    }),
-
-    // ---- composite: TPC-H Q10 shape (returned-item revenue by customer) -
-    "q_tpch_q10" -> ((s, dir) => {
-      Frame(t(s, dir, "customer"))
-        .join(Frame(t(s, dir, "orders")), Seq(("c_custkey", "o_custkey")))
-        .join(Frame(t(s, dir, "lineitem")), Seq(("o_orderkey", "l_orderkey")))
-        .filter(Raw(col("l_returnflag") === "R", "l_returnflag = 'R'"))
-        .join(Frame(t(s, dir, "nation")), Seq(("c_nationkey", "n_nationkey")))
-        .aggregate(Seq(E.col("c_custkey"), E.col("c_name"), E.col("n_name")),
-          Seq(Raw(dsum8r(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("revenue"), "revenue")))
-        .sort((E.col("revenue"), false), (E.col("c_custkey"), true))
-        .limit(20).df
-    }),
-
-    // ---- composite: TPC-H Q18 shape (large-volume orders) --------------
-    // groupBy + HAVING subquery joined back — the "big order" cut
-    "q_tpch_q18" -> ((s, dir) => {
-      val big = Frame(t(s, dir, "lineitem"))
-        .aggregate(Seq(E.col("l_orderkey")),
-          Seq(Raw(dsum(col("l_quantity")).as("sum_qty"), "sum_qty")))
-        .filter(Raw(col("sum_qty") > 250, "sum_qty > 250"))
-      Frame(t(s, dir, "customer"))
-        .join(Frame(t(s, dir, "orders")), Seq(("c_custkey", "o_custkey")))
-        .join(big, Seq(("o_orderkey", "l_orderkey")))
-        .project(E.col("c_name"), E.col("o_orderkey"), E.col("sum_qty"))
-        .sort((E.col("sum_qty"), false), (E.col("o_orderkey"), true))
-        .limit(20).df
-    }),
-
-    // ---- composite: TPC-H Q7 shape (volume shipping between nation
-    // pairs) — the dual-dimension join: nation enters TWICE under
-    // different roles, pre-projected to distinct names, plus a
-    // disjunctive pair filter and a group-by-expression on the year
-    "q_tpch_q7" -> ((s, dir) => {
-      val custNation = Frame(t(s, dir, "nation").select(
-        col("n_nationkey").as("cnk"), col("n_name").as("cust_nation")))
-      val suppNation = Frame(t(s, dir, "nation").select(
-        col("n_nationkey").as("snk"), col("n_name").as("supp_nation")))
-      Frame(t(s, dir, "lineitem"))
-        .join(Frame(t(s, dir, "orders")), Seq(("l_orderkey", "o_orderkey")))
-        .join(Frame(t(s, dir, "customer")), Seq(("o_custkey", "c_custkey")))
-        .join(Frame(t(s, dir, "supplier")), Seq(("l_suppkey", "s_suppkey")))
-        .join(custNation, Seq(("c_nationkey", "cnk")))
-        .join(suppNation, Seq(("s_nationkey", "snk")))
-        .filter(Raw(
-          (col("cust_nation") === "NATION_1" && col("supp_nation") === "NATION_2") ||
-          (col("cust_nation") === "NATION_2" && col("supp_nation") === "NATION_1"),
-          "nation pair"))
-        .aggregate(Seq(E.col("supp_nation"), E.col("cust_nation"),
-            Raw(year(col("l_shipdate")).cast("long").as("l_year"), "l_year")),
-          Seq(Raw(dsum8r(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("revenue"), "revenue")))
-        .df
-    }),
-
-    // ---- composite: TPC-H Q8 shape (market share): one nation's share
-    // of a region's revenue for one part type, by year — conditional
-    // aggregation divided by the total
-    "q_tpch_q8" -> ((s, dir) => {
-      val suppNation = Frame(t(s, dir, "nation").select(
-        col("n_nationkey").as("snk"), col("n_name").as("supp_nation")))
-      val vol = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      Frame(t(s, dir, "lineitem"))
-        .join(Frame(t(s, dir, "part")), Seq(("l_partkey", "p_partkey")))
-        .filter(Raw(col("p_type") === "STANDARD", "type"))
-        .join(Frame(t(s, dir, "orders")), Seq(("l_orderkey", "o_orderkey")))
-        .join(Frame(t(s, dir, "customer")), Seq(("o_custkey", "c_custkey")))
-        .join(Frame(t(s, dir, "nation")), Seq(("c_nationkey", "n_nationkey")))
-        .join(Frame(t(s, dir, "region")), Seq(("n_regionkey", "r_regionkey")))
-        .filter(Raw(col("r_name") === "ASIA", "asia"))
-        .join(Frame(t(s, dir, "supplier")), Seq(("l_suppkey", "s_suppkey")))
-        .join(suppNation, Seq(("s_nationkey", "snk")))
-        .aggregate(Seq(Raw(year(col("o_orderdate")).cast("long")
-            .as("o_year"), "o_year")),
-          Seq(Raw(round(dsum8(when(col("supp_nation") === "NATION_3", vol)
-              .otherwise(lit(0.0))) / dsum8(vol), 6).as("mkt_share"),
-            "mkt_share")))
-        .df
-    }),
-
-    // ---- composite: TPC-H Q19 shape (disjunction of conjunctive bands)
-    // — an OR of brand/size/quantity envelopes over the part join; the
-    // partial predicates still push into both scans
-    "q_tpch_q19" -> ((s, dir) =>
-      Frame(t(s, dir, "lineitem"))
-        .join(Frame(t(s, dir, "part")), Seq(("l_partkey", "p_partkey")))
-        .filter(Raw(
-          (col("p_brand") === "Brand#1" &&
-            col("p_size").between(1, 15) &&
-            col("l_quantity") >= 1 && col("l_quantity") <= 30) ||
-          (col("p_brand") === "Brand#2" &&
-            col("p_size").between(10, 30) &&
-            col("l_quantity") >= 10 && col("l_quantity") <= 40),
-          "q19 bands"))
-        .aggregate(Seq.empty,
-          Seq(Raw(dsum8r(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-              .as("revenue"), "revenue"),
-            Raw(count(lit(1)).as("n_items"), "n_items")))
-        .df),
-
-    // ---- composite: TPC-H Q22 shape (scalar subquery + anti join) ----
-    // above-average-balance customers who never placed an URGENT order,
-    // by nation: the global average enters as a broadcast 1-row cross
-    // join, the "never placed" as an anti join (every sf0.01 customer
-    // has SOME order, so the classic never-ordered cut would be empty)
-    "q_tpch_q22" -> ((s, dir) => {
-      val avgBal = Frame(t(s, dir, "customer"))
-        .filter(Raw(col("c_acctbal") > 0.0, "positive"))
-        .aggregate(Seq.empty, Seq(Raw(
-          (dsum(col("c_acctbal")) / count(lit(1))).as("avg_bal"),
-          "avg_bal")))
-      Frame(t(s, dir, "customer"))
-        .joinOn(avgBal, Raw(lit(true), "cross"))
-        .filter(Raw(col("c_acctbal") > col("avg_bal"), "rich"))
-        .join(Frame(t(s, dir, "orders"))
-            .filter(Raw(col("o_orderpriority") === "1-URGENT", "urgent")),
-          Seq(("c_custkey", "o_custkey")), JoinType.Anti)
-        .join(Frame(t(s, dir, "nation")), Seq(("c_nationkey", "n_nationkey")))
-        .aggregate(Seq(E.col("n_name")),
-          Seq(Raw(count(lit(1)).as("n_cust"), "n_cust"),
-            Raw(dsum(col("c_acctbal")).as("total_bal"), "total_bal")))
-        .df
-    }),
-
-    // ---- composite: TPC-H Q4 shape (correlated EXISTS -> semi join) ----
-    // orders with at least one late-shipping lineitem (shipped > 10 days
-    // after the order date) counted by priority: the EXISTS decorrelates
-    // to a LEFT SEMI theta-join — Catalyst hashes on the orderkey equality
-    // and keeps the date range as a residual, and the right side never
-    // materializes into the output
-    "q_tpch_q4" -> ((s, dir) =>
-      Frame(t(s, dir, "orders"))
-        .joinOn(Frame(t(s, dir, "lineitem")
-            .select(col("l_orderkey"), col("l_shipdate"))),
-          Raw(col("o_orderkey") === col("l_orderkey") &&
-            col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 10 DAYS"),
-            "late_exists"), JoinType.Semi)
-        .aggregate(Seq(E.col("o_orderpriority")),
-          Seq(Raw(count(lit(1)).as("order_count"), "order_count"))).df),
-
-    // ---- composite: TPC-H Q17 shape (scalar subquery -> two-pass agg) --
-    // "small-quantity" line items: quantity below 20% of the part's own
-    // average. The correlated scalar subquery decorrelates into a per-part
-    // aggregate joined back (broadcast at this SF, shuffled hash at 100 TB
-    // — both sides key on partkey). The predicate q < 0.2 * sum/cnt runs
-    // as q * cnt * 5 < sum in exact decimals, so both engines compare
-    // identically with no float-division drift.
-    "q_tpch_q17" -> ((s, dir) => {
-      val partAvg = Frame(t(s, dir, "lineitem"))
-        .aggregate(Seq(E.col("l_partkey")),
-          Seq(Raw(count(lit(1)).as("cnt"), "cnt"),
-            Raw(sum(col("l_quantity").cast(DecimalType(18, 2)))
-              .as("sum_qty"), "sum_qty")))
-        .project(Raw(col("l_partkey").as("pa_partkey"), "pa_partkey"),
-          E.col("cnt"), E.col("sum_qty"))
-      Frame(t(s, dir, "lineitem"))
-        .join(Frame(t(s, dir, "part")), Seq(("l_partkey", "p_partkey")))
-        .join(partAvg, Seq(("l_partkey", "pa_partkey")))
-        .filter(Raw(col("l_quantity").cast(DecimalType(18, 2)) * col("cnt") * 5 <
-          col("sum_qty"), "below_fifth_of_avg"))
-        .aggregate(Seq(E.col("p_brand")),
-          Seq(Raw(count(lit(1)).as("n_small"), "n_small"),
-            Raw(dsum(col("l_extendedprice")).as("sum_extended"), "sum_extended"))).df
-    }),
-
-    // ---- composite: TPC-H Q5 shape (6-table join, local-supplier rule) -
-    "q_tpch_q5" -> ((s, dir) => {
-      Frame(t(s, dir, "customer"))
-        .join(Frame(t(s, dir, "orders")), Seq(("c_custkey", "o_custkey")))
-        .join(Frame(t(s, dir, "lineitem")), Seq(("o_orderkey", "l_orderkey")))
-        .join(Frame(t(s, dir, "supplier")), Seq(("l_suppkey", "s_suppkey")))
-        .filter(Raw(col("c_nationkey") === col("s_nationkey"), "local"))
-        .join(Frame(t(s, dir, "nation")), Seq(("s_nationkey", "n_nationkey")))
-        .join(Frame(t(s, dir, "region")), Seq(("n_regionkey", "r_regionkey")))
-        .filter(Raw(col("r_name") === lit("ASIA"), "asia"))
-        .aggregate(Seq(E.col("n_name")),
-          Seq(Raw(dsum8r(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("revenue"), "revenue"),
-            Raw(count(lit(1)).as("n_items"), "n_items")))
-        .df
-    }),
-
-    // ---- composite: TPC-H Q6 shape (pure filter + conditional sum),
-    // expressed on the engine surface like Q3/Q5 ----------------------
-    "q_tpch_q6" -> ((s, dir) =>
-      Frame(t(s, dir, "lineitem"))
-        .filter(Raw(col("l_shipdate") >= lit("1996-01-01") &&
-          col("l_shipdate") < lit("1997-01-01") &&
-          col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-          col("l_quantity") < 24, "q6_range"))
-        .aggregate(Seq.empty,
-          Seq(Raw(dsum8r(col("l_extendedprice") * col("l_discount"))
-            .as("revenue"), "revenue"),
-            Raw(count(lit(1)).as("n"), "n"))).df),
-
-    // ---- composite: TPC-H Q14 shape (join + conditional revenue share) -
-    "q_tpch_q14" -> ((s, dir) => {
-      val disc = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      Frame(t(s, dir, "lineitem"))
-        .filter(Raw(col("l_shipdate") >= lit("1996-03-01") &&
-          col("l_shipdate") < lit("1996-04-01"), "q14_month"))
-        .join(Frame(t(s, dir, "part")), Seq(("l_partkey", "p_partkey")))
-        .aggregate(Seq.empty,
-          Seq(Raw(round(lit(100.0) *
-            dsum8r(when(col("p_type") === "PROMO", disc).otherwise(lit(0.0))) /
-            dsum8r(disc), 4).as("promo_pct"), "promo_pct"),
-            Raw(count(lit(1)).as("n"), "n"))).df
-    }),
-
-    // ---- composite: TPC-H Q1 shape (pricing summary report) -----------
-    // the canonical wide aggregate: 4 decimal-accumulated sums, 3
-    // averages (exact-sum / count — one IEEE division, bit-exact on
-    // both engines), one count, grouped on two low-cardinality keys.
-    // Map-side partial agg reduces 600 k rows to 6 groups before the
-    // (tiny) shuffle — the shape survives 100 TB unchanged.
-    "q_tpch_q1" -> ((s, dir) => {
-      val disc = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      Frame(t(s, dir, "lineitem"))
-        .filter(Raw(col("l_shipdate") <= lit("1998-09-01"), "cutoff"))
-        .aggregate(Seq(E.col("l_returnflag"), E.col("l_linestatus")),
-          Seq(Raw(dsum(col("l_quantity")).as("sum_qty"), "sum_qty"),
-            Raw(dsum(col("l_extendedprice")).as("sum_base_price"), "sum_base_price"),
-            Raw(dsum8r(disc).as("sum_disc_price"), "sum_disc_price"),
-            Raw(dsum8r(disc * (lit(1.0) + col("l_tax"))).as("sum_charge"), "sum_charge"),
-            Raw((dsum(col("l_quantity")) / count(lit(1))).as("avg_qty"), "avg_qty"),
-            Raw((dsum(col("l_extendedprice")) / count(lit(1))).as("avg_price"), "avg_price"),
-            Raw((dsum(col("l_discount")) / count(lit(1))).as("avg_disc"), "avg_disc"),
-            Raw(count(lit(1)).as("count_order"), "count_order")))
-        .df
-    }),
-
-    // ---- composite: TPC-H Q2 shape (min-cost supplier per part) --------
-    // the fixtures have no partsupp, so the part<->supplier relation is
-    // derived from lineitem (distinct pairs — the natural stand-in); the
-    // correlated MIN subquery decorrelates into a per-part aggregate
-    // joined back, exactly like Q17's per-part average
-    "q_tpch_q2" -> ((s, dir) => {
-      val link = Frame(t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct())
-      val suppEur = Frame(t(s, dir, "supplier"))
-        .join(Frame(t(s, dir, "nation")), Seq(("s_nationkey", "n_nationkey")))
-        .join(Frame(t(s, dir, "region")), Seq(("n_regionkey", "r_regionkey")))
-        .filter(Raw(col("r_name") === "EUROPE", "europe"))
-      val cand = Frame(t(s, dir, "part"))
-        .filter(Raw(col("p_size").between(10, 20) &&
-          col("p_type") === "STANDARD", "part cut"))
-        .join(link, Seq(("p_partkey", "l_partkey")))
-        .join(suppEur, Seq(("l_suppkey", "s_suppkey")))
-      val minBal = cand
-        .aggregate(Seq(Raw(col("p_partkey").as("mb_partkey"), "mb_partkey")),
-          Seq(Raw(min(col("s_acctbal")).as("min_bal"), "min_bal")))
-      cand.join(minBal, Seq(("p_partkey", "mb_partkey")))
-        .filter(Raw(col("s_acctbal") === col("min_bal"), "is_min"))
-        .project(E.col("s_acctbal"), E.col("s_name"), E.col("n_name"),
-          E.col("p_partkey"), E.col("p_brand"), E.col("l_suppkey"))
-        .sort((E.col("s_acctbal"), false), (E.col("p_partkey"), true),
-          (E.col("l_suppkey"), true))
-        .limit(20).df
-    }),
-
-    // ---- composite: TPC-H Q9 shape (product-type profit by nation/year)
-    // — no partsupp supplycost in the fixtures, so cost is modeled as
-    // 10% of retail price x quantity; amount stays per-row double (both
-    // engines run the identical IEEE expression) and the SUM goes
-    // through the exact decimal accumulator
-    "q_tpch_q9" -> ((s, dir) => {
-      val amount = col("l_extendedprice") * (lit(1.0) - col("l_discount")) -
-        lit(0.1) * col("p_retailprice") * col("l_quantity")
-      Frame(t(s, dir, "lineitem"))
-        .join(Frame(t(s, dir, "part")), Seq(("l_partkey", "p_partkey")))
-        .filter(Raw(col("p_name").contains("red"), "name cut"))
-        .join(Frame(t(s, dir, "supplier")), Seq(("l_suppkey", "s_suppkey")))
-        .join(Frame(t(s, dir, "orders")), Seq(("l_orderkey", "o_orderkey")))
-        .join(Frame(t(s, dir, "nation")), Seq(("s_nationkey", "n_nationkey")))
-        .aggregate(Seq(E.col("n_name"),
-            Raw(year(col("o_orderdate")).cast("long").as("o_year"), "o_year")),
-          Seq(Raw(dsum8r(amount).as("sum_profit"), "sum_profit")))
-        .df
-    }),
-
-    // ---- composite: TPC-H Q11 shape (important stock: HAVING vs a
-    // scalar fraction of the global total) — per-part value within one
-    // nation, kept when above 0.2% of that nation's total; the scalar
-    // enters as a broadcast 1-row cross join
-    "q_tpch_q11" -> ((s, dir) => {
-      val disc = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      val base = Frame(t(s, dir, "lineitem"))
-        .join(Frame(t(s, dir, "supplier")), Seq(("l_suppkey", "s_suppkey")))
-        .join(Frame(t(s, dir, "nation")), Seq(("s_nationkey", "n_nationkey")))
-        .filter(Raw(col("n_name") === "NATION_1", "nation cut"))
-      val perPart = base.aggregate(Seq(E.col("l_partkey")),
-        Seq(Raw(dsum8r(disc).as("part_value"), "part_value")))
-      val total = base.aggregate(Seq.empty,
-        Seq(Raw((dsum8r(disc) * lit(0.002)).as("threshold"), "threshold")))
-      perPart.joinOn(total, Raw(lit(true), "cross"))
-        .filter(Raw(col("part_value") > col("threshold"), "important"))
-        .project(E.col("l_partkey"), E.col("part_value"))
-        .sort((E.col("part_value"), false), (E.col("l_partkey"), true))
-        .limit(50).df
-    }),
-
-    // ---- composite: TPC-H Q12 shape (late-shipment priority split) -----
-    // CASE-aggregation over a join with a date-arithmetic residual: the
-    // fixtures lack l_shipmode/commitdate, so the mode group is the
-    // returnflag and "late" is shipped >15 days after the order date
-    "q_tpch_q12" -> ((s, dir) =>
-      Frame(t(s, dir, "orders"))
-        .join(Frame(t(s, dir, "lineitem")), Seq(("o_orderkey", "l_orderkey")))
-        .filter(Raw(col("l_shipdate") >
-          col("o_orderdate") + expr("INTERVAL 15 DAYS"), "late"))
-        .aggregate(Seq(E.col("l_returnflag")),
-          Seq(Raw(sum(when(col("o_orderpriority") === "1-URGENT" ||
-                col("o_orderpriority") === "2-HIGH", 1L).otherwise(0L))
-              .as("high_line_count"), "high_line_count"),
-            Raw(sum(when(col("o_orderpriority") =!= "1-URGENT" &&
-                col("o_orderpriority") =!= "2-HIGH", 1L).otherwise(0L))
-              .as("low_line_count"), "low_line_count")))
-        .df),
-
-    // ---- composite: TPC-H Q13 shape (customer order-count distribution)
-    // — the double-aggregate: LEFT join keeps order-less customers (the
-    // filtered right side makes some), count per customer, then the
-    // distribution of those counts. Pure counts — exactness is free.
-    "q_tpch_q13" -> ((s, dir) => {
-      val perCust = Frame(t(s, dir, "customer"))
-        .join(Frame(t(s, dir, "orders"))
-            .filter(Raw(col("o_orderpriority") =!= "1-URGENT", "not urgent")),
-          Seq(("c_custkey", "o_custkey")), JoinType.Left)
-        .aggregate(Seq(E.col("c_custkey")),
-          Seq(Raw(count(col("o_orderkey")).as("c_count"), "c_count")))
-      perCust.aggregate(Seq(E.col("c_count")),
-          Seq(Raw(count(lit(1)).as("custdist"), "custdist")))
-        .sort((E.col("custdist"), false), (E.col("c_count"), false))
-        .df
-    }),
-
-    // ---- composite: TPC-H Q15 shape (top supplier by quarterly revenue)
-    // — a MAX scalar subquery over an aggregate, joined back by exact
-    // equality (both sides are the same rounded-decimal double, so the
-    // comparison is bit-exact on both engines)
-    "q_tpch_q15" -> ((s, dir) => {
-      val rev = Frame(t(s, dir, "lineitem"))
-        .filter(Raw(col("l_shipdate") >= lit("1996-01-01") &&
-          col("l_shipdate") < lit("1996-04-01"), "quarter"))
-        .aggregate(Seq(E.col("l_suppkey")),
-          Seq(Raw(dsum8r(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("total_revenue"), "total_revenue")))
-      val mx = rev.aggregate(Seq.empty,
-        Seq(Raw(max(col("total_revenue")).as("max_rev"), "max_rev")))
-      Frame(t(s, dir, "supplier"))
-        .join(rev, Seq(("s_suppkey", "l_suppkey")))
-        .joinOn(mx, Raw(lit(true), "cross"))
-        .filter(Raw(col("total_revenue") === col("max_rev"), "is max"))
-        .project(E.col("s_suppkey"), E.col("s_name"), E.col("total_revenue"))
-        .sort((E.col("s_suppkey"), true))
-        .df
-    }),
-
-    // ---- composite: TPC-H Q16 shape (supplier count by part attrs,
-    // minus excluded suppliers) — the NOT IN decorrelates to an anti
-    // join; the part<->supplier relation again derives from lineitem,
-    // and "complaint" suppliers are the negative-balance ones
-    "q_tpch_q16" -> ((s, dir) => {
-      val link = Frame(t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct())
-      val bad = Frame(t(s, dir, "supplier")
-        .filter(col("s_acctbal") < 0.0)
-        .select(col("s_suppkey").as("bad_suppkey")))
-      Frame(t(s, dir, "part"))
-        .filter(Raw(col("p_brand") =!= "Brand#1" &&
-          col("p_size").between(1, 25), "part cut"))
-        .join(link, Seq(("p_partkey", "l_partkey")))
-        .join(bad, Seq(("l_suppkey", "bad_suppkey")), JoinType.Anti)
-        .aggregate(Seq(E.col("p_brand"), E.col("p_type"), E.col("p_size")),
-          Seq(Raw(countDistinct(col("l_suppkey")).as("supplier_cnt"),
-            "supplier_cnt")))
-        .df
-    }),
-
-    // ---- composite: TPC-H Q20 shape (nested-IN chain -> semi joins) ----
-    // suppliers in one nation who shipped a meaningful volume of the
-    // selected parts in one year: part-IN and supplier-IN both run as
-    // LEFT SEMI hash joins, the heavy-shipper cut as a HAVING
-    "q_tpch_q20" -> ((s, dir) => {
-      val redParts = Frame(t(s, dir, "part")
-        .filter(col("p_name").startsWith("red"))
-        .select(col("p_partkey")))
-      val heavy = Frame(t(s, dir, "lineitem"))
-        .filter(Raw(year(col("l_shipdate")) === 1996, "year cut"))
-        .join(redParts, Seq(("l_partkey", "p_partkey")), JoinType.Semi)
-        .aggregate(Seq(E.col("l_suppkey")),
-          Seq(Raw(dsum(col("l_quantity")).as("ship_qty"), "ship_qty")))
-        .filter(Raw(col("ship_qty") > 50.0, "heavy"))
-      Frame(t(s, dir, "supplier"))
-        .join(heavy, Seq(("s_suppkey", "l_suppkey")), JoinType.Semi)
-        .join(Frame(t(s, dir, "nation")), Seq(("s_nationkey", "n_nationkey")))
-        .filter(Raw(col("n_name") === "NATION_2", "nation cut"))
-        .project(E.col("s_suppkey"), E.col("s_name"))
-        .sort((E.col("s_suppkey"), true))
-        .df
-    }),
-
-    // ---- composite: TPC-H Q21 shape (EXISTS + NOT EXISTS on the same
-    // table under different predicates) — suppliers who were the sole
-    // late shipper on a finished multi-supplier order: the EXISTS is a
-    // LEFT SEMI theta-join, the NOT EXISTS a LEFT ANTI, both hashed on
-    // the orderkey equality with the supplier inequality as residual.
-    // "Late" is shipped >20 days after the order date (the fixtures
-    // carry no commit/receipt dates).
-    "q_tpch_q21" -> ((s, dir) => {
-      val late = col("l_shipdate") >
-        col("o_orderdate") + expr("INTERVAL 20 DAYS")
-      // round 15: the late-on-F lineitem ⋈ orders subtree is consumed
-      // TWICE (the probe side and the NOT-EXISTS side) — previously as
-      // two separate scans+joins. One explicit l_orderkey exchange lets
-      // both consumers reuse a single build (the r11 shared-exchange
-      // rule): lineitem is scanned twice total (late-F + the EXISTS
-      // side) instead of three times, orders once instead of twice,
-      // and the anti join's two sides sort over the SAME exchange.
-      // Projected to the two columns every consumer needs before the
-      // exchange (guide §2.3 — project before the exchange).
-      val lateF = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .where(col("o_orderstatus") === "F" && late)
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .repartition(col("l_orderkey"))
-      val l1 = Frame(lateF)
-      val others = Frame(t(s, dir, "lineitem").select(
-        col("l_orderkey").as("o2_orderkey"), col("l_suppkey").as("o2_suppkey")))
-      val lateOthers = Frame(lateF
-        .select(col("l_orderkey").as("o3_orderkey"),
-          col("l_suppkey").as("o3_suppkey")))
-      l1.joinOn(others, Raw(col("l_orderkey") === col("o2_orderkey") &&
-          col("l_suppkey") =!= col("o2_suppkey"), "other supplier"),
-          JoinType.Semi)
-        .joinOn(lateOthers, Raw(col("l_orderkey") === col("o3_orderkey") &&
-          col("l_suppkey") =!= col("o3_suppkey"), "no other late"),
-          JoinType.Anti)
-        .join(Frame(t(s, dir, "supplier")), Seq(("l_suppkey", "s_suppkey")))
-        .join(Frame(t(s, dir, "nation")), Seq(("s_nationkey", "n_nationkey")))
-        .filter(Raw(col("n_name") === "NATION_1", "nation cut"))
-        .aggregate(Seq(E.col("s_name")),
-          Seq(Raw(count(lit(1)).as("numwait"), "numwait")))
-        .sort((E.col("numwait"), false), (E.col("s_name"), true))
-        .limit(20).df
-    }),
-
-    // ---- extension: mergeable HLL sketch infrastructure (ops/Hll) -----
-    // unlike approx_count_distinct (one query, opaque), these sketches
-    // are m-row register TABLES: persist to parquet, merge any union of
-    // partitions by register-max, estimate without rescanning — the
-    // sketch-once/merge-many pattern incremental distinct counting
-    // needs at 100 TB. md5-hashed and integer-exact, so the estimate is
-    // the same double on every engine (the oracle restates all of it)
-    "q_hll_distinct" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      graft.ops.Hll.distinctEstimate(o, "o_custkey", 6)
-        .crossJoin(o.agg(countDistinct(col("o_custkey")).as("exact_n")))
-    }),
-
-    // merge-invariance under measurement: sketch two disjoint halves,
-    // register-max them, and the estimate must equal the whole-table
-    // sketch bit-for-bit
-    "q_hll_merge" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val even = graft.ops.Hll.sketch(
-        o.where(col("o_orderkey") % 2 === 0), "o_custkey", 6)
-      val odd = graft.ops.Hll.sketch(
-        o.where(col("o_orderkey") % 2 === 1), "o_custkey", 6)
-      val merged = graft.ops.Hll.estimate(graft.ops.Hll.merge(even, odd), 6)
-        .select(col("est_n").as("est_merged"))
-      val whole = graft.ops.Hll.estimate(
-          graft.ops.Hll.sketch(o, "o_custkey", 6), 6)
-        .select(col("est_n").as("est_whole"))
-      merged.crossJoin(whole)
-        .withColumn("agree", col("est_merged") === col("est_whole"))
-    }),
-
-    // per-group sketches: distinct customers per order priority — the
-    // grouped rollup shape (distinct users per source per day)
-    "q_hll_by_priority" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      graft.ops.Hll.estimateBy(graft.ops.Hll.sketchBy(
-          o, "o_orderpriority", "o_custkey", 6), "o_orderpriority", 6)
-        .join(o.groupBy(col("o_orderpriority"))
-          .agg(countDistinct(col("o_custkey")).as("exact_n")),
-          Seq("o_orderpriority"))
-    }),
-
-    // ---- extension: mergeable bottom-k (KMV) sketches (ops/Kmv) -------
-    // the mergeable SAMPLE next to HLL's registers: k smallest md5
-    // hashes estimate distinct counts (k=256 -> ~6% rel err) and the
-    // same order statistic over a unique id is a deterministic uniform
-    // row sample; everything k-bounded after one corpus pass
-    "q_kmv_distinct" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      graft.ops.Kmv.estimate(graft.ops.Kmv.sketch(o, "o_custkey", 256), 256)
-        .crossJoin(o.agg(countDistinct(col("o_custkey")).as("exact_n")))
-    }),
-
-    // merge-invariance is EXACT for bottom-k (a lattice, like HLL's
-    // register max): the merged halves equal the whole-table sketch row
-    // for row, so the estimates must agree bit for bit
-    "q_kmv_merge" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val even = graft.ops.Kmv.sketch(
-        o.where(col("o_orderkey") % 2 === 0), "o_custkey", 256)
-      val odd = graft.ops.Kmv.sketch(
-        o.where(col("o_orderkey") % 2 === 1), "o_custkey", 256)
-      val merged = graft.ops.Kmv.estimate(
-          graft.ops.Kmv.merge(256, even, odd), 256)
-        .select(col("est_n").as("est_merged"))
-      val whole = graft.ops.Kmv.estimate(
-          graft.ops.Kmv.sketch(o, "o_custkey", 256), 256)
-        .select(col("est_n").as("est_whole"))
-      merged.crossJoin(whole)
-        .withColumn("agree", col("est_merged") === col("est_whole"))
-    }),
-
-    // per-group sketches: distinct customers per order priority — the
-    // grouped rollup shape, mirroring q_hll_by_priority so the two
-    // sketch families are comparable on the same question
-    "q_kmv_by_priority" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      graft.ops.Kmv.estimateBy(graft.ops.Kmv.sketchBy(
-          o, "o_orderpriority", "o_custkey", 128), "o_orderpriority", 128)
-        .join(o.groupBy(col("o_orderpriority"))
-          .agg(countDistinct(col("o_custkey")).as("exact_n")),
-          Seq("o_orderpriority"))
-    }),
-
-    // KMV set algebra (Beyer et al. 2007): the bottom-k of A UNION B is
-    // a uniform union sample, so the fraction present in BOTH sketches
-    // estimates Jaccard and scales the union estimate down to the
-    // intersection — "how many urgent-priority customers also order
-    // high-priority", answered from two k-row sketches
-    "q_kmv_setops" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val a = graft.ops.Kmv.sketch(
-        o.where(col("o_orderpriority") === "1-URGENT"), "o_custkey", 256)
-      val b = graft.ops.Kmv.sketch(
-        o.where(col("o_orderpriority") === "2-HIGH"), "o_custkey", 256)
-      graft.ops.Kmv.setEstimates(a, b, 256)
-    }),
-
-    // the grouped form: per-priority customer overlap between the even
-    // and odd order-key halves — two sketchBy tables in, one overlap
-    // row per group out, everything groups x k-bounded
-    "q_kmv_setops_by" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val a = graft.ops.Kmv.sketchBy(
-        o.where(col("o_orderkey") % 2 === 0), "o_orderpriority",
-        "o_custkey", 128)
-      val b = graft.ops.Kmv.sketchBy(
-        o.where(col("o_orderkey") % 2 === 1), "o_orderpriority",
-        "o_custkey", 128)
-      graft.ops.Kmv.setEstimatesBy(a, b, "o_orderpriority", 128)
-    }),
-
-    // grouped containment — per-priority coverage of the even order-key
-    // half's customers by the odd half's, one k-bounded row per group
-    "q_kmv_containment_by" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val a = graft.ops.Kmv.sketchBy(
-        o.where(col("o_orderkey") % 2 === 0), "o_orderpriority",
-        "o_custkey", 128)
-      val b = graft.ops.Kmv.sketchBy(
-        o.where(col("o_orderkey") % 2 === 1), "o_orderpriority",
-        "o_custkey", 128)
-      graft.ops.Kmv.containmentBy(a, b, "o_orderpriority", 128)
-    }),
-
-    // KMV containment — the decontamination direction of set algebra:
-    // urgent-priority customers are a LITERAL subset of all customers,
-    // so containment(A in B) reads exactly 1.0 (every sampled A member
-    // is a B member — no sampling error on a true subset), while the
-    // reverse direction estimates |A|/|B| from the union sample
-    "q_kmv_containment" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val a = graft.ops.Kmv.sketch(
-        o.where(col("o_orderpriority") === "1-URGENT"), "o_custkey", 256)
-      val b = graft.ops.Kmv.sketch(o, "o_custkey", 256)
-      graft.ops.Kmv.containment(a, b, 256)
-    }),
-
-    // deterministic per-group cap — "at most k docs per domain/source",
-    // the Gopher/C4-style frequency cap: survivors are the k smallest
-    // id-hashes per group, stable across runs/engines/retries (a random
-    // cap would churn the training set every rebuild)
-    "q_domain_cap" -> ((s, dir) =>
-      graft.ops.Kmv.rowSampleBy(t(s, dir, "documents"),
-          "source", "doc_id", 10)
-        .select(col("doc_id"), col("source"))),
-
-    // per-source length quantiles from the capped sample — the grouped
-    // drift-monitoring readout (one row per source, k-bounded collects)
-    "q_kmv_quantiles_by" -> ((s, dir) =>
-      graft.ops.Kmv.quantilesBy(
-        graft.ops.Kmv.rowSampleBy(t(s, dir, "documents"),
-          "source", "doc_id", 10),
-        "source", "n_chars", Seq(50, 90))),
-
-    // one-pass approximate quantiles from the deterministic bottom-k
-    // row sample: integer-rank extraction, every output a value the
-    // table actually contains — nothing for engines to interpolate
-    "q_kmv_quantiles" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      graft.ops.Kmv.sampleQuantiles(
-        graft.ops.Kmv.rowSample(o, "o_orderkey", 1024, "o_totalprice"),
-        "o_totalprice", Seq(25, 50, 75, 95))
-    }),
-
-    // the STREAMING grouped quantile sample in batch degrade mode
-    // (mapGroupsWithState with empty initial state — one batch): the
-    // same bits as rowSampleBy → quantilesBy by the parity contract,
-    // which the oracle restates in SQL (values ride as doubles — the
-    // stream's value type)
-    "q_kmv_quantiles_stream" -> ((s, dir) =>
-      graft.streaming.StreamOps.kmvQuantiles(
-          t(s, dir, "documents"), "source", "doc_id", "n_chars",
-          Seq(50, 90), k = 10)
-        .toDF()
-        .select(col("group").as("source"),
-          expr("try_element_at(qs, 1)").as("p50"),
-          expr("try_element_at(qs, 2)").as("p90"),
-          col("n_sample"))),
-
-    // ---- extension: approximate sketches within pinned tolerance ------
-    // HLL++ distinct and quantile-sketch median, each checked against its
-    // exact counterpart IN the query; the oracle pins the exact values
-    // and `true` for the tolerance flags, so the driver verifies both
-    // that the sketches run and that their error stays in budget
-    // (HLL default rsd 0.05 -> 0.15 is a 3-sigma bound).
-    "q_approx_sketches" -> ((s, dir) =>
-      t(s, dir, "orders").agg(
-          approx_count_distinct(col("o_custkey")).as("apx_d"),
-          countDistinct(col("o_custkey")).as("exact_d"),
-          expr("approx_percentile(o_totalprice, 0.5, 1000)").as("apx_m"),
-          expr("percentile(o_totalprice, 0.5)").as("exact_m"))
-        .select(col("exact_d").as("exact_distinct"),
-          (abs(col("apx_d") - col("exact_d")) <=
-            col("exact_d") * 0.15).as("distinct_ok"),
-          round(col("exact_m"), 2).as("exact_median"),
-          (abs(col("apx_m") - col("exact_m")) <=
-            col("exact_m") * 0.05).as("median_ok"))),
-
-    // ---- extension: sequential funnel (view -> signup -> purchase) ----
-    // per-user stage times chained by strict ordering; each stage is a
-    // keyed agg + broadcast-able join on user_id — no window needed
-    "q_funnel" -> ((s, dir) => {
-      val ev = eventsUsLong(s, dir)
-        .select(col("user_id"), col("event_type"), col("ts_us"))
-      val v = ev.where(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts_us").as("t0"))
-      val sg = ev.where(col("event_type") === "signup")
-        .join(v, Seq("user_id")).where(col("ts_us") > col("t0"))
-        .groupBy("user_id").agg(min("ts_us").as("t1"))
-      val p = ev.where(col("event_type") === "purchase")
-        .join(sg, Seq("user_id")).where(col("ts_us") > col("t1"))
-        .groupBy("user_id").agg(min("ts_us").as("t2"))
-      v.agg(count(lit(1)).as("n_view"))
-        .crossJoin(sg.agg(count(lit(1)).as("n_signup_after_view")))
-        .crossJoin(p.agg(count(lit(1)).as("n_purchase_after_signup")))
-    }),
-
-    // ---- extension: funnel latency percentiles ------------------------
-    // how long does view -> signup take? per-user first-signup-after-
-    // first-view deltas in whole seconds, then exact p50/p90 over the
-    // converting users via the integer-CDF order statistic — the funnel
-    // counting query's time-dimension companion, composed from the same
-    // stage chain + Profile.exactPercentiles (no interpolation seam)
-    "q_funnel_latency" -> ((s, dir) => {
-      val ev = eventsUsLong(s, dir)
-        .select(col("user_id"), col("event_type"), col("ts_us"))
-      val v = ev.where(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts_us").as("t0"))
-      val sg = ev.where(col("event_type") === "signup")
-        .join(v, Seq("user_id")).where(col("ts_us") > col("t0"))
-        .groupBy("user_id").agg(min("ts_us").as("t1"))
-      val lat = sg.join(v, Seq("user_id"))
-        .select(expr("(t1 - t0) div 1000000").as("delta_sec"),
-          lit("all").as("cohort"))
-      graft.ops.Profile.exactPercentiles(lat, "cohort", "delta_sec",
-        Seq(50, 90), scale = 0)
-    }),
-
-    // ---- extension: time-series resample + forward-fill ---------------
-    // per-user hourly grid from first to last active hour; gap hours
-    // carry the latest earlier hourly sum (decimal-exact), event counts
-    // coalesce to zero — the feature-pipeline regularization step
-    "q_resample_ffill" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("user_id"), col("ts_sec"), col("value"))
-      graft.ops.TimeSeries.resampleFfill(ev, "user_id",
-          expr("ts_sec div 3600"),
-          aggs = Seq(count(lit(1)).as("n_events"), dsum(col("value")).as("v")),
-          fillCols = Seq("v"))
-        .select(col("user_id"), col("bucket"),
-          coalesce(col("n_events"), lit(0L)).as("n_events"),
-          col("v").as("v_ffill"))
-    }),
-
-    // ---- extension: cohort retention matrix ---------------------------
-    // hourly cohorts over events: first-active hour per user, then how
-    // many of each cohort remain active k hours later — the product-
-    // analytics staple (two keyed aggs + one entity join; output is
-    // bounded by #buckets^2 regardless of row count)
-    "q_cohort_retention" -> ((s, dir) =>
-      graft.ops.TimeSeries.cohortRetention(events(s, dir), "user_id",
-        expr("ts_sec div 3600"))),
-
-    // ---- extension: rolling z-score outlier detection -----------------
-    // each event's value scored against its user's 20 preceding values
-    // (frame excludes the current row so an outlier can't mask itself);
-    // decimal-accumulated frame moments keep the score cross-engine
-    // bit-exact
-    "q_rolling_zscore" -> ((s, dir) =>
-      graft.ops.TimeSeries.rollingZscore(
-        events(s, dir).select(col("user_id"), col("event_id"),
-          col("ts_sec").as("sec"), col("value")),
-        "user_id", Seq(col("sec"), col("event_id")), "value",
-        lookback = 20, minPeriods = 10)),
-
-    // ---- extension: PageRank over the transaction graph ---------------
-    // undirected supplier<->customer co-transaction graph (both edge
-    // directions), 5 join+aggregate iterations in fixed-point BIGINT
-    // nano-units (truncating integer division per edge, exact integer
-    // sums) — bit-identical across engines AND partitionings
-    "q_pagerank" -> ((s, dir) => {
-      // dedup BEFORE mirroring (half the distinct width) and BEFORE
-      // stringification (the distinct shuffles 16-byte int pairs, not
-      // concatenated strings); the mirrored union is then distinct by
-      // construction — the s:/c: prefixes make the two directions
-      // disjoint — so the op can skip its own parallel-edge collapse
-      val pairs = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_suppkey").as("sk"), col("o_custkey").as("ck"))
-        .distinct()
-        .select(concat(lit("s:"), col("sk")).as("a"),
-          concat(lit("c:"), col("ck")).as("b"))
-      val edges = pairs.unionByName(
-        pairs.select(col("b").as("a"), col("a").as("b")))
-      graft.ops.Graph.pageRank(edges, "a", "b", iterations = 5,
-        assumeDistinct = true)
-    }),
-
-    // ---- extension: multi-source BFS (blast radius) -------------------
-    // min hop count from the nation-0 suppliers over the mirrored
-    // supplier<->customer graph, capped at 3 hops: frontier expansion
-    // with broadcast state, edges never shuffle (ops/Graph.bfsHops).
-    // Pure set membership + integer levels — nothing to round
-    "q_bfs_hops" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_suppkey").as("sk"), col("o_custkey").as("ck"))
-        .distinct()
-        .select(concat(lit("s:"), col("sk")).as("a"),
-          concat(lit("c:"), col("ck")).as("b"))
-      val edges = pairs.unionByName(
-        pairs.select(col("b").as("a"), col("a").as("b")))
-      val seeds = t(s, dir, "supplier").where(col("s_nationkey") === 0)
-        .select(concat(lit("s:"), col("s_suppkey")).as("seed"))
-      graft.ops.Graph.bfsHops(edges, "a", "b", seeds, "seed", maxHops = 3)
-    }),
-
-    // ---- extension: bounded weighted shortest paths -------------------
-    // cheapest ≤2-hop route from the nation-0 suppliers over the
-    // weighted supplier<->customer graph (weight = distinct shared
-    // orders): fixed-round Bellman-Ford relaxation, exact BIGINT sums
-    // (ops/Graph.shortestPaths)
-    "q_shortest_paths" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_suppkey").as("sk"), col("o_custkey").as("ck"))
-        .agg(countDistinct(col("l_orderkey")).as("w"))
-        .select(concat(lit("s:"), col("sk")).as("a"),
-          concat(lit("c:"), col("ck")).as("b"), col("w"))
-      val edges = pairs.unionByName(
-        pairs.select(col("b").as("a"), col("a").as("b"), col("w")))
-      val seeds = t(s, dir, "supplier").where(col("s_nationkey") === 0)
-        .select(concat(lit("s:"), col("s_suppkey")).as("seed"))
-      graft.ops.Graph.shortestPaths(edges, "a", "b", "w", seeds, "seed",
-        maxHops = 2)
-    }),
-
-    // ---- extension: WEIGHTED PageRank ---------------------------------
-    // same graph, edges weighted by the number of distinct shared
-    // orders; rank splits across out-edges in weight proportion — the
-    // whole loop stays in exact fixed-point integers because the
-    // weights are integral
-    "q_pagerank_weighted" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_suppkey").as("sk"), col("o_custkey").as("ck"))
-        .agg(countDistinct(col("l_orderkey")).as("w"))
-        .select(concat(lit("s:"), col("sk")).as("a"),
-          concat(lit("c:"), col("ck")).as("b"), col("w"))
-      val edges = pairs.unionByName(
-        pairs.select(col("b").as("a"), col("a").as("b"), col("w")))
-      graft.ops.Graph.pageRank(edges, "a", "b", iterations = 5,
-        assumeDistinct = true, weightCol = Some("w"))
-    }),
-
-    // ---- extension: personalized PageRank (TrustRank) -----------------
-    // teleport mass lands only on trusted seed suppliers (nations 0-4);
-    // rank then measures proximity-to-trust — the corpus-curation prior
-    // for separating reputable sources from spam farms
-    "q_pagerank_personalized" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_suppkey").as("sk"), col("o_custkey").as("ck"))
-        .distinct()
-        .select(concat(lit("s:"), col("sk")).as("a"),
-          concat(lit("c:"), col("ck")).as("b"))
-      val edges = pairs.unionByName(
-        pairs.select(col("b").as("a"), col("a").as("b")))
-      val seeds = t(s, dir, "supplier").where(col("s_nationkey") < 5)
-        .select(concat(lit("s:"), col("s_suppkey")).as("node"))
-      graft.ops.Graph.personalizedPageRank(edges, "a", "b",
-        seeds, "node", iterations = 5, assumeDistinct = true)
-    }),
-
-    // ---- extension: communities (label propagation) -------------------
-    // synchronous LPA with the (count DESC, label ASC) deterministic
-    // tie-break over the co-supplier graph — which suppliers cluster
-    // into the same dense co-occurrence neighborhood
-    "q_communities" -> ((s, dir) => {
-      val sp = t(s, dir, "lineitem").where(col("l_quantity") > 45)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sup"))
-        .distinct()
-      val pairs = sp.as("x")
-        .join(sp.as("y"),
-          col("x.ok") === col("y.ok") && col("x.sup") =!= col("y.sup"))
-        .select(col("x.sup").as("sa"), col("y.sup").as("sb"))
-      graft.ops.Graph.labelPropagation(pairs, "sa", "sb", iterations = 5)
-    }),
-
-    // ---- extension: connected components (generic graph) --------------
-    // min-label propagation with convergence probe over the co-supplier
-    // graph — which suppliers are transitively connected at all (the
-    // coarse partition label propagation refines into communities)
-    "q_graph_components" -> ((s, dir) => {
-      val sp = t(s, dir, "lineitem").where(col("l_quantity") > 45)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sup"))
-        .distinct()
-      val pairs = sp.as("x")
-        .join(sp.as("y"),
-          col("x.ok") === col("y.ok") && col("x.sup") =!= col("y.sup"))
-        .select(col("x.sup").as("sa"), col("y.sup").as("sb"))
-      graft.ops.Graph.connectedComponents(pairs, "sa", "sb")
-    }),
-
-    // ---- extension: k-core decomposition ------------------------------
-    // peel-to-stability on the co-supplier graph at k=15: the dense
-    // co-occurrence core (82/100 suppliers at sf0.01, 952/1000 at
-    // sf0.1) that pendant edges can't fake their way into
-    "q_kcore" -> ((s, dir) => {
-      val sp = t(s, dir, "lineitem").where(col("l_quantity") > 45)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sup"))
-        .distinct()
-      val pairs = sp.as("x")
-        .join(sp.as("y"),
-          col("x.ok") === col("y.ok") && col("x.sup") =!= col("y.sup"))
-        .select(col("x.sup").as("sa"), col("y.sup").as("sb"))
-      graft.ops.Graph.kCore(pairs, "sa", "sb", k = 15)
-    }),
-
-    // ---- extension: triangle counting ---------------------------------
-    // co-supplier graph (suppliers sharing a high-quantity order),
-    // degree-oriented wedge join — the orientation bounds wedge work by
-    // arboricity, so a hub generates no wedges
-    "q_triangles" -> ((s, dir) => {
-      val sp = t(s, dir, "lineitem").where(col("l_quantity") > 45)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey").as("s"))
-        .distinct()
-      val pairs = sp.as("x")
-        .join(sp.as("y"),
-          col("x.ok") === col("y.ok") && col("x.s") =!= col("y.s"))
-        .select(col("x.s").as("sa"), col("y.s").as("sb"))
-      graft.ops.Graph.triangleCount(pairs, "sa", "sb")
-    }),
-
-    // ---- extension: link prediction (common neighbors + RA index) -----
-    // distance-2 non-edges of the co-supplier graph, scored by shared-
-    // neighbor count and the fixed-point Resource-Allocation index
-    "q_link_predict" -> ((s, dir) => {
-      val sp = t(s, dir, "lineitem").where(col("l_quantity") > 45)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey").as("s"))
-        .distinct()
-      val pairs = sp.as("x")
-        .join(sp.as("y"),
-          col("x.ok") === col("y.ok") && col("x.s") =!= col("y.s"))
-        .select(col("x.s").cast("string").as("sa"),
-          col("y.s").cast("string").as("sb"))
-      graft.ops.Graph.linkPredictions(pairs, "sa", "sb")
-    }),
-
-    // ---- extension: graph degree table --------------------------------
-    // directed supplier->customer edges; out/in/total degree per node
-    "q_graph_degrees" -> ((s, dir) =>
-      graft.ops.Graph.degrees(
-        t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-          .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .select(concat(lit("s:"), col("l_suppkey")).as("a"),
-            concat(lit("c:"), col("o_custkey")).as("b")),
-        "a", "b")),
-
-    // ---- extension: as-of join (latest right row at or before left ts) -
-    "q_asof_join" -> ((s, dir) => {
-      // microsecond epoch on both sides: DuckDB timestamps are us-precision
-      val ev = eventsUsLong(s, dir)
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_us"), col("value"))
-      // right side pre-deduped to one row per (user, time), keeping the
-      // max click_id — identical to the engine's max-payload-struct
-      // tie-break (click_us == ts_us), and it removes DuckDB ASOF JOIN's
-      // arbitrary-row choice on exact time ties, so the oracle compare
-      // cannot flake if the fixture ever holds two clicks at one instant
-      val clicks = ev.where(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts_us"))
-        .agg(max(col("event_id")).as("click_id"))
-        .select(col("user_id"), col("ts_us"), col("click_id"),
-          col("ts_us").as("click_us"))
-      Frame(purchases).asOf(Frame(clicks), "user_id", "ts_us",
-        Seq("click_id", "click_us")).df
-    }),
-
-    // same as-of join through the TIME-RANGE SALTED path (skew defense:
-    // each user's window split across 8 time buckets + carry pre-pass) —
-    // byte-identical result, so it shares q_asof_join's oracle SQL
-    "q_asof_salted" -> ((s, dir) => {
-      val ev = eventsUsLong(s, dir)
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_us"), col("value"))
-      val clicks = ev.where(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts_us"))
-        .agg(max(col("event_id")).as("click_id"))
-        .select(col("user_id"), col("ts_us"), col("click_id"),
-          col("ts_us").as("click_us"))
-      Frame(purchases).asOf(Frame(clicks), "user_id", "ts_us",
-        Seq("click_id", "click_us"), saltBuckets = 8).df
-    }),
-
-    // forward direction: each purchase takes the EARLIEST click at or
-    // after it (next-touch attribution), same shuffle cost as backward
-    "q_asof_forward" -> ((s, dir) => {
-      val ev = eventsUsLong(s, dir)
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_us"), col("value"))
-      val clicks = ev.where(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts_us"))
-        .agg(max(col("event_id")).as("click_id"))
-        .select(col("user_id"), col("ts_us"), col("click_id"),
-          col("ts_us").as("click_us"))
-      Frame(purchases).asOf(Frame(clicks), "user_id", "ts_us",
-        Seq("click_id", "click_us"), direction = "forward").df
-    }),
-
-    // tolerance band: a backward match older than 2 days nulls out (the
-    // left row survives) — pandas merge_asof tolerance semantics
-    "q_asof_tolerance" -> ((s, dir) => {
-      val ev = eventsUsLong(s, dir)
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_us"), col("value"))
-      val clicks = ev.where(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts_us"))
-        .agg(max(col("event_id")).as("click_id"))
-        .select(col("user_id"), col("ts_us"), col("click_id"),
-          col("ts_us").as("click_us"))
-      Frame(purchases).asOf(Frame(clicks), "user_id", "ts_us",
-        Seq("click_id", "click_us"), tolerance = Some(172800000000L)).df
-    }),
-
-    // ---- extension: point-in-interval range join (attribution shape) --
-    // every click within one day AFTER a purchase by the same user; the
-    // range dimension is bin-sharded so candidates come from an equi-join
-    // on (user, day-bin), never a per-key cross product (ops/RangeJoin)
-    "q_range_join" -> ((s, dir) => {
-      val ev = eventsUsLong(s, dir)
-      val day = 86400000000L // one day of microseconds
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts_us").as("p_start"), (col("ts_us") + day).as("p_end"))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts_us"))
-      Frame(clicks).rangeJoin(Frame(purchases), "user_id", "ts_us",
-          "p_user", "p_start", "p_end", binWidth = day)
-        .df.select(col("user_id"), col("purchase_id"), col("click_id"))
-    }),
-
-    // ---- extension: analytic window frames (rank, lag, running sum) ---
-    "q_window_frames" -> ((s, dir) => {
-      Catalog.forTestdata(s, dir)
-      s.sql(WindowFramesSql)
-    }),
-
-    // ---- extension: string function family ----------------------------
-    "q_string_fns" -> ((s, dir) =>
-      t(s, dir, "part").where(col("p_partkey") <= 500)
-        .select(col("p_partkey"),
-          upper(col("p_brand")).as("up"),
-          lower(col("p_type")).as("lo"),
-          length(col("p_name")).as("len"),
-          trim(col("p_name")).as("tr"),
-          lpad(col("p_brand"), 12, "_").as("pad"),
-          regexp_replace(col("p_type"), "[aeiou]", "").as("novowel"),
-          split(col("p_type"), " ").getItem(0).as("first_word"))),
-
-    // ---- extension: array / higher-order functions --------------------
-    "q_array_fns" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .withColumn("ws", array_sort(array_distinct(split(col("text"), " "))))
-        .select(col("doc_id"),
-          size(col("ws")).as("n_distinct"),
-          array_contains(col("ws"), "spark").as("has_spark"),
-          // raw array columns stay internal: the driver's comparator can only
-          // hash scalar cells, so the slice is surfaced via array_join only
-          // (array values are asserted in TextOpsSpec).
-          array_join(slice(col("ws"), 1, 3), "|").as("first3_str"))),
-
-    // ---- extension: exact percentiles (distributed sort-based) --------
-    "q_percentile" -> ((s, dir) =>
-      t(s, dir, "orders").agg(
-        round(expr("percentile(o_totalprice, 0.5)"), 2).as("med"),
-        round(expr("percentile(o_totalprice, 0.9)"), 2).as("p90"),
-        round(expr("percentile(o_totalprice, 0.25)"), 2).as("q1"))),
-
-    // ---- extension: JSON column extraction ----------------------------
-    "q_json_extract" -> ((s, dir) =>
-      t(s, dir, "events").where(col("event_id") <= 2000)
-        .select(col("event_id"),
-          get_json_object(col("props"), "$.k").cast("int").as("k"),
-          (get_json_object(col("props"), "$.k").cast("int") % 10).as("k_mod"))),
-
-    // ---- extension: salted aggregation (skew-safe, result-identical) --
-    "q_salted_agg" -> ((s, dir) =>
-      graft.ops.Skew.saltedSumCount(
-        t(s, dir, "events").select(col("event_type"),
-          col("value").cast(DecimalType(18, 2)).as("v")),
-        "event_type", "v", saltBuckets = 16)
-        .select(col("event_type"), col("sum_v").cast("double").as("sum_v"),
-          col("n"), col("min_v").cast("double").as("min_v"),
-          col("max_v").cast("double").as("max_v"))),
-
-    // ---- scale mechanics: salted join, hash-equal to the plain join ----
-    // (salting replicates the small side across buckets and spreads the
-    // big side; row multiplicity — and hence any aggregate over the
-    // result — is EXACTLY that of the unsalted join)
-    "q_salted_join" -> ((s, dir) =>
-      graft.ops.Skew.saltedJoin(
-          t(s, dir, "orders"), t(s, dir, "customer"),
-          "o_custkey", "c_custkey", saltBuckets = 16)
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"),
-          dsum(col("o_totalprice")).as("sum_price"))),
-
-    // ---- scale mechanics: bucketed co-located join --------------------
-    // both sides pre-bucketed on the join key (the "delete the per-query
-    // shuffle" pattern for repeated fact joins at 100 TB); the result is
-    // the plain join's, which is what the oracle states. The bucketed
-    // tables are (re)written into the session warehouse per run and
-    // dropped after — ScaleOpsSpec separately asserts the no-Exchange
-    // plan property.
-    "q_bucketed_join" -> ((s, dir) => {
-      val cat = new Catalog(s)
-      cat.addBucketedTable("g_cust_b", t(s, dir, "customer"), "c_custkey", 4)
-      cat.addBucketedTable("g_ord_b", t(s, dir, "orders"), "o_custkey", 4)
-      val j = cat.table("g_cust_b")
-        .join(cat.table("g_ord_b"), Seq(("c_custkey", "o_custkey")))
-      Frame(j.df).aggregate(
-        Seq(E.col("c_mktsegment")),
-        Seq(E.count(E.lit(1)).as("n"),
-          Raw(dsum(col("o_totalprice")).as("sum_price"), "sum_price"))).df
-    }),
-
-    // ---- scale mechanics: clustered write -> stat-pruned scan ----------
-    // lineitem rewritten range-clustered on l_shipdate (Layout
-    // .writeClustered), then read back with a one-month predicate: the
-    // filter reaches the new scan as PushedFilters and, because each file
-    // covers a narrow disjoint shipdate range, parquet min/max stats skip
-    // all but ~1/12 of the bytes (LayoutSpec pins both properties). The
-    // layout changes the physical plan, never the answer — the oracle is
-    // the same filter over the unclustered source.
-    "q_layout_scan" -> ((s, dir) => {
-      val path = scratchDir("graft-layout")
-        .resolve("lineitem_by_shipdate").toString
-      graft.ops.Layout.writeClustered(t(s, dir, "lineitem"), path, 12, "l_shipdate")
-      s.read.parquet(path)
-        .where(col("l_shipdate") >= lit("1996-03-01") &&
-          col("l_shipdate") < lit("1996-04-01"))
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-    }),
-
-    // ---- scale mechanics: bloom-filtered write -> point-lookup scan ---
-    // lineitem rewritten (unsorted) with a bloom filter on l_partkey:
-    // the equality probe skips row groups whose bloom excludes the key —
-    // pruning that min/max stats cannot give on unclustered data. Same
-    // answer as the plain source (the oracle). At this SF the column
-    // stays dictionary-encoded so parquet-mr serves the probe from the
-    // (exact) dictionary instead of materializing the bloom — the bloom
-    // path itself is pinned at overflow cardinality in LayoutSpec.
-    "q_bloom_scan" -> ((s, dir) => {
-      val path = scratchDir("graft-bloom")
-        .resolve("lineitem_bloom").toString
-      graft.ops.Layout.writeWithBloom(t(s, dir, "lineitem"), path,
-        Seq("l_partkey"), expectedNdv = 300000L)
-      s.read.parquet(path)
-        .where(col("l_partkey") === 1234L)
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-    }),
-
-    // ---- scale mechanics: idempotent partition-level re-ingest --------
-    // orders lands hive-partitioned on a 5-way bucket; the bkt=2 slice
-    // then re-lands with corrected prices via dynamic partition
-    // overwrite — run TWICE to pin idempotence. The read-back must show
-    // exactly the corrected bkt=2 rows and untouched others (per-row
-    // double add, bit-exact on both engines).
-    "q_upsert_partitions" -> ((s, dir) => {
-      val path = scratchDir("graft-upsert")
-        .resolve("orders_by_bkt").toString
-      val base = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"),
-          (col("o_orderkey") % 5).cast("int").as("bkt"))
-      base.write.mode("overwrite").partitionBy("bkt").parquet(path)
-      val fixed = base.where(col("bkt") === 2)
-        .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
-      graft.ops.Layout.upsertPartitions(fixed, path, Seq("bkt"))
-      graft.ops.Layout.upsertPartitions(fixed, path, Seq("bkt"))
-      s.read.parquet(path)
-        .select(col("o_orderkey"), col("o_totalprice"), col("bkt"))
-    }),
-
-    // ---- scale mechanics: row-level CDC MERGE (upsert + delete) -------
-    // the events stream read as a change log on user profiles: base =
-    // the pre-cutoff state (latest early change per user, deletes
-    // dropped), then the post-cutoff log MERGEs in — latest-wins per
-    // user on the (ts_us, event_id) total order, 'error' rows delete.
-    // One key-keyed shuffle of the log + one anti join on the base
-    // (ops/Cdc.applyChanges); no floating-point arithmetic anywhere
-    "q_cdc_apply" -> ((s, dir) => {
-      val cutoff = 1704672000000000L // 2024-01-08 in epoch micros
-      val ch = eventsUsLong(s, dir)
-        .select(col("user_id"), col("event_type"), col("value"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("ts_us"), col("event_id"))
-      val base = graft.ops.Cdc
-        .latestPerKey(ch.where(col("ts_us") < cutoff),
-          Seq("user_id"), Seq("ts_us", "event_id"))
-        .where(col("op") =!= "D")
-        .select(col("user_id"), col("event_type"), col("value"))
-      graft.ops.Cdc.applyChanges(base,
-        ch.where(col("ts_us") >= cutoff),
-        Seq("user_id"), Seq("ts_us", "event_id"))
-    }),
-
-    // ---- scale mechanics: SCD-type-2 validity history ------------------
-    // the same change log folded into interval form: one row per change
-    // with [valid_from, valid_to) on the (ts_us, event_id) order, the
-    // open interval flagged is_current, 'error' (delete) rows closing
-    // their predecessor without opening an interval (ops/Cdc.scd2)
-    "q_scd2" -> ((s, dir) => {
-      val ch = eventsUsLong(s, dir).where(col("user_id") < 50)
-        .select(col("user_id"), col("value"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("ts_us"), col("event_id"))
-      graft.ops.Cdc.scd2(ch, Seq("user_id"), "ts_us", Seq("event_id"))
-        .select(col("user_id"), col("value"), col("valid_from"),
-          col("valid_to"), col("is_current"))
-    }),
-
-    // ---- scale mechanics: point-in-time join against an SCD2 dim ------
-    // purchase facts look up the profile version valid AT the purchase
-    // time in the q_scd2 history: key equi-join with the interval
-    // containment as a hash-join residual — never a time-axis product
-    // (ops/Cdc.pointInTime). A purchase matches its own change's
-    // version (valid_from inclusive); 'error' deletes leave a gap, so
-    // purchases inside a deleted span keep NULL dim columns (LEFT join)
-    "q_scd2_join" -> ((s, dir) => {
-      val ch = eventsUsLong(s, dir).where(col("user_id") < 50)
-        .select(col("user_id"), col("value"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("ts_us"), col("event_id"))
-      val dim = graft.ops.Cdc.scd2(ch, Seq("user_id"), "ts_us", Seq("event_id"))
-        .select(col("user_id"), col("value").as("dim_value"),
-          col("valid_from"), col("valid_to"))
-      val facts = eventsUsLong(s, dir)
-        .where(col("user_id") < 50 && col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_us"))
-      graft.ops.Cdc.pointInTime(facts, dim, Seq("user_id"), "ts_us")
-        .select(col("event_id"), col("user_id"), col("ts_us"),
-          col("dim_value"), col("valid_from"))
-    }),
-
-    // ---- scale mechanics: snapshot diff (what did the load do) --------
-    // the pre-cutoff profile state vs the state after the full log
-    // merges in: one FULL OUTER key-keyed join classifies every user as
-    // added / removed / changed / unchanged (ops/Cdc.snapshotDiff) —
-    // null-safe payload compare, the new side DERIVED from the old one
-    // (the self-join lineage case the op renames its way out of)
-    "q_snapshot_diff" -> ((s, dir) => {
-      val cutoff = 1704672000000000L // 2024-01-08 in epoch micros
-      val ch = eventsUsLong(s, dir)
-        .select(col("user_id"), col("event_type"), col("value"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("ts_us"), col("event_id"))
-      val before = graft.ops.Cdc
-        .latestPerKey(ch.where(col("ts_us") < cutoff),
-          Seq("user_id"), Seq("ts_us", "event_id"))
-        .where(col("op") =!= "D")
-        .select(col("user_id"), col("event_type"), col("value"))
-      val after = graft.ops.Cdc.applyChanges(before,
-        ch.where(col("ts_us") >= cutoff),
-        Seq("user_id"), Seq("ts_us", "event_id"))
-      graft.ops.Cdc.snapshotDiff(before, after, Seq("user_id"))
-    }),
-
-    // ---- scale mechanics: incremental aggregate maintenance (IVM) -----
-    // a materialized per-event-type (count, exact-decimal sum) aggregate
-    // of the pre-cutoff state is maintained under the post-cutoff log
-    // WITHOUT re-aggregating the base: old rows of changed keys leave
-    // their groups, surviving latest rows enter theirs, and the delta
-    // merges into the materialized table (ops/Cdc.incrementalAgg). The
-    // oracle recomputes from scratch on the merged snapshot — the
-    // maintained table must match it bit-for-bit
-    "q_incr_agg" -> ((s, dir) => {
-      val cutoff = 1704672000000000L
-      val ch = eventsUsLong(s, dir)
-        .select(col("user_id"), col("event_type"), col("value"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("ts_us"), col("event_id"))
-      val before = graft.ops.Cdc
-        .latestPerKey(ch.where(col("ts_us") < cutoff),
-          Seq("user_id"), Seq("ts_us", "event_id"))
-        .where(col("op") =!= "D")
-        .select(col("user_id"), col("event_type"), col("value"))
-      val baseAgg = before.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 6))).as("total"))
-      graft.ops.Cdc.incrementalAgg(before, baseAgg,
-          ch.where(col("ts_us") >= cutoff),
-          Seq("user_id"), "event_type", "value", Seq("ts_us", "event_id"))
-        .select(col("event_type"), col("n"),
-          col("total").cast("double").as("total"))
-    }),
-
-    // ---- scale mechanics: schema-evolution read (mergeSchema) ---------
-    // two parquet generations of the same table — the later one gained
-    // o_custkey — read as ONE table with per-file schema merging; the
-    // legacy generation surfaces NULL for the new column, and the
-    // aggregate proves no row was dropped or duplicated across the
-    // schema seam. The real-world shape of a 100 TB table whose
-    // producer added a column mid-history
-    "q_schema_evolution" -> ((s, dir) => {
-      val path = scratchDir("graft-evol")
-        .resolve("orders_evol").toString
-      val o = t(s, dir, "orders")
-      o.where(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .write.mode("overwrite").parquet(s"$path/gen=1")
-      o.where(col("o_orderkey") % 2 === 1)
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_custkey"))
-        .write.mode("overwrite").parquet(s"$path/gen=2")
-      s.read.option("mergeSchema", "true").parquet(path)
-        .groupBy(col("o_custkey").isNull.as("legacy_rows"))
-        .agg(count(lit(1)).as("n"),
-          dsum(col("o_totalprice")).as("sum_price"))
-    }),
-
-    // ---- scale mechanics: z-ordered write -> 2-D stat-pruned scan -----
-    // lineitem rewritten z-ordered on (l_orderkey, l_partkey): each file
-    // covers a small rectangle of the key plane, so a predicate on BOTH
-    // dimensions skips most files via parquet min/max stats — pruning a
-    // single-column sort can only give one of them (LayoutSpec pins the
-    // per-file rectangle claim). Same answer as the unclustered source.
-    "q_zorder_scan" -> ((s, dir) => {
-      val path = scratchDir("graft-zorder")
-        .resolve("lineitem_z").toString
-      graft.ops.Layout.writeZOrdered(t(s, dir, "lineitem"), path, 16,
-        "l_orderkey", "l_partkey")
-      s.read.parquet(path)
-        .where(col("l_orderkey") < 3000 && col("l_partkey") < 500)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-    }),
-
-    // ---- LLM: embedding-space health report ---------------------------
-    // per label: cluster size and mean cosine of members to their own
-    // centroid, in fully quantized integer arithmetic (ops/Similarity
-    // .labelCentroidReport — micros elements, exact BIGINT dots/norms,
-    // one IEEE chain per vector)
-    "q_label_centroids" -> ((s, dir) =>
-      graft.ops.Similarity.labelCentroidReport(t(s, dir, "embeddings"),
-        "vec_id", "embedding", "label", dim = 64)),
-
-    // ---- LLM: kNN classification eval (embedding quality harness) -----
-    // the first 200 vectors classified by the majority label of their
-    // 10 nearest corpus neighbors, reported as a confusion matrix
-    // (ops/Similarity.knnClassify — broadcast eval, one corpus scan,
-    // micros-quantized rank order shared with the oracle)
-    "q_knn_confusion" -> ((s, dir) => {
-      Graft.init(s)
-      val emb = t(s, dir, "embeddings")
-      graft.ops.Similarity.knnClassify(emb,
-        emb.where(col("vec_id") < 200), "vec_id", "embedding", "label",
-        k = 10)
-    }),
-
-    // ---- extension: next-bucket trend forecast ------------------------
-    // per event type: regress the daily value total on the day index
-    // (ops/Profile.groupRegression) and extrapolate one bucket past
-    // the last observed day. The daily totals enter the regression as
-    // exact MICROS LONGs: a 6-decimal double total would hit the
-    // double->DECIMAL cast seam inside the moment sums (Spark rounds
-    // the shortest repr, DuckDB the binary value — caught live at
-    // sf0.1), while integer y keeps every moment product exactly
-    // representable; one final divide returns to value units
-    "q_trend_forecast" -> ((s, dir) => {
-      val daily = eventsUsLong(s, dir)
-        .withColumn("day", expr("ts_us div 86400000000"))
-        .groupBy(col("event_type"), col("day"))
-        .agg(round(sum(col("value").cast(DecimalType(18, 6))) * 1000, 0)
-          .cast("long").as("total_milli"))
-      // ALL-INTEGER moment regression: x (day) and y (milli total) are
-      // BIGINTs, so every moment sum and the closed-form numerators
-      // stay exact — the float form diverged cross-engine because
-      // DuckDB float-divides its decimal int128 on the way to double
-      // (1 ulp), and the sxy - sx*sy/n cancellation amplified that
-      // ulp ~1e4x (caught live at sf0.01). BIGINT->double casts are
-      // correctly rounded on every engine, so the final divides agree
-      // bitwise. slope = (n*sxy - sx*sy) / (n*sxx - sx^2);
-      // intercept = (sy*den - sx*nums) / (n*den)
-      val agged = daily.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("day")).as("sx"),
-          sum(col("total_milli")).as("sy"),
-          sum(col("day") * col("day")).as("sxx"),
-          sum(col("day") * col("total_milli")).as("sxy"),
-          max(col("day")).as("last_day"))
-      val den = col("n") * col("sxx") - col("sx") * col("sx")
-      val nums = col("n") * col("sxy") - col("sx") * col("sy")
-      val numi = col("sy") * den - col("sx") * nums
-      val slopeD = nums.cast("double") / den.cast("double")
-      val interceptD = numi.cast("double") / (col("n") * den).cast("double")
-      agged.where(den > 0)
-        .select(col("event_type"), col("n"),
-          round(slopeD / 1000.0, 6).as("slope"),
-          round(interceptD / 1000.0, 6).as("intercept"),
-          col("last_day"),
-          round((slopeD * (col("last_day") + 1).cast("double")
-            + interceptD) / 1000.0, 6).as("forecast"))
-    }),
-
-    // ---- extension: growth accounting (DAU decomposition) -------------
-    // per activity day: active users decomposed into new / retained /
-    // resurrected, churn balanced against the preceding day
-    // (ops/TimeSeries.growthAccounting); day = epoch-micros div 1 day
-    "q_growth_accounting" -> ((s, dir) => {
-      graft.ops.TimeSeries.growthAccounting(
-        eventsUsLong(s, dir)
-          .withColumn("day", expr("ts_us div 86400000000")),
-        "user_id", "day")
-    }),
-
-    // ---- extension: event-flow transition matrix ----------------------
-    // adjacent (from, to) event-type counts over each user's timeline
-    // (ops/TimeSeries.transitions) — the Markov flow matrix behind
-    // funnel diagrams; (ts_us, event_id) total order
-    "q_event_transitions" -> ((s, dir) => {
-      graft.ops.TimeSeries.transitions(eventsUsLong(s, dir),
-        "user_id", "ts_us", "event_type", tieCols = Seq("event_id"))
-    }),
-
-    // ---- extension: pre-conversion paths ------------------------------
-    // the 3-step event paths immediately preceding each purchase,
-    // counted corpus-wide (ops/TimeSeries.pathsBefore) — '>'-joined
-    // sortable strings per the comparator convention
-    "q_conversion_paths" -> ((s, dir) => {
-      graft.ops.TimeSeries.pathsBefore(eventsUsLong(s, dir),
-        "user_id", "ts_us", "event_type", target = "purchase",
-        depth = 3, tieCols = Seq("event_id"))
-    }),
-
-    // ---- extension: per-key time-weighted average (gauge metric) ------
-    // each user's value as a step function over their event timeline:
-    // exact BIGINT cents x floored-seconds weighting, two final IEEE
-    // divisions (ops/TimeSeries.timeWeightedAvg); (ts_us, event_id)
-    // is the total order the zero-length-slot rule needs
-    "q_time_weighted_avg" -> ((s, dir) => {
-      graft.ops.TimeSeries.timeWeightedAvg(eventsUsLong(s, dir),
-        "user_id", "ts_us", "value", tieCols = Seq("event_id"))
-    }),
-
-    // ---- extension: per-key interval coalescing (gaps-and-islands) ----
-    // each user's 1-day purchase-attribution windows flattened into
-    // maximal disjoint coverage spans (ops/TimeSeries.mergeIntervals) —
-    // touching windows merge under half-open semantics; one key-keyed
-    // shuffle feeds both windows and the closing aggregation
-    "q_interval_merge" -> ((s, dir) => {
-      val day = 86400000000L
-      val iv = eventsUsLong(s, dir)
-        .where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts_us").as("s_us"),
-          (col("ts_us") + day).as("e_us"))
-      graft.ops.TimeSeries.mergeIntervals(iv, "user_id", "s_us", "e_us")
-    }),
-
-    // ---- extension: interval-overlap join (both sides are ranges) -----
-    // pairs of purchase attribution windows by the same user that overlap
-    // in time: both interval sets bin-shard and each overlapping pair
-    // matches exactly once, in the bin of the later start (ops/RangeJoin
-    // .intervalOverlap). a_id < b_id keeps one row per unordered pair.
-    "q_interval_overlap" -> ((s, dir) => {
-      val ev = eventsUsLong(s, dir)
-      val day = 86400000000L
-      def windows(idName: String, keyName: String, sName: String, eName: String) =
-        ev.where(col("event_type") === "purchase")
-          .select(col("event_id").as(idName), col("user_id").as(keyName),
-            col("ts_us").as(sName), (col("ts_us") + day).as(eName))
-      Frame(windows("a_id", "a_user", "a_start", "a_end"))
-        .intervalOverlap(Frame(windows("b_id", "b_user", "b_start", "b_end")),
-          "a_user", "a_start", "a_end", "b_user", "b_start", "b_end",
-          binWidth = day)
-        .df.where(col("a_id") < col("b_id"))
-        .select(col("a_user").as("user_id"), col("a_id"), col("b_id"))
-    }),
-
-    // ---- extension: deterministic training-order shuffle --------------
-    // every document gets a reproducible epoch position from md5(id, seed)
-    // — same permutation on any engine, any retry (ops/Sampling
-    // .shuffleDeterministic); the oracle recomputes it as a row_number
-    // over the same md5 ordering
-    "q_corpus_shuffle" -> ((s, dir) =>
-      graft.ops.Sampling.shuffleDeterministic(
-          t(s, dir, "documents").select(col("doc_id")), "doc_id", seed = 42L)
-        .select(col("doc_id"), col("shuffle_pos"))),
-
-    // ---- extension: CUBE (all grouping-set combinations) --------------
-    // routed through the engine surface (Frame.cube, rollup's sibling)
-    "q_cube" -> ((s, dir) =>
-      Frame(t(s, dir, "lineitem"))
-        .cube(Seq(E.col("l_returnflag"), E.col("l_linestatus")),
-          Seq(Raw(count(lit(1)).as("n"), "n"),
-            Raw(sum(col("l_quantity")).as("sum_qty"), "sum_qty"))).df),
-
-    // ---- extension: GROUPING SETS (explicit grouping combinations) ----
-    // the general form under rollup/cube: exactly the listed sets, on the
-    // engine surface (Frame.groupingSets)
-    "q_grouping_sets" -> ((s, dir) =>
-      Frame(t(s, dir, "lineitem"))
-        .groupingSets(
-          Seq(Seq(E.col("l_returnflag"), E.col("l_linestatus")),
-            Seq(E.col("l_returnflag")), Seq.empty),
-          Seq(E.col("l_returnflag"), E.col("l_linestatus")),
-          Seq(Raw(count(lit(1)).as("n"), "n"),
-            Raw(dsum(col("l_quantity")).as("sum_qty"), "sum_qty"))).df),
-
-    // ---- extension: pivot (wide aggregation, engine surface) ----------
-    // the Raw (unaliased) agg keeps Spark's bare pivot column names F/O
-    "q_pivot" -> ((s, dir) =>
-      Frame(t(s, dir, "lineitem"))
-        .pivot(Seq(E.col("l_returnflag")), "l_linestatus", Seq("F", "O"),
-          Seq(Raw(sum(col("l_quantity")), "sum_qty"))).df),
-
-    // ---- extension: explode with position (engine surface) ------------
-    "q_explode" -> ((s, dir) =>
-      Frame(t(s, dir, "documents"))
-        .filter(Raw(col("doc_id") < 50, "doc_id < 50"))
-        .explode(Raw(split(col("text"), " "), "words"), "pos0", "word",
-          Seq(E.col("doc_id")))
-        .project(E.col("doc_id"),
-          Raw(col("pos0").cast("long").as("pos"), "pos"), E.col("word")).df),
-
-    // ---- extension: min_by / max_by (deterministic composite key) -----
-    "q_minmax_by" -> ((s, dir) => {
-      val key = round(col("o_totalprice") * 100).cast("long") * 1000000L +
-        col("o_orderkey")
-      t(s, dir, "orders").groupBy(col("o_orderpriority"))
-        .agg(max_by(col("o_orderkey"), key).as("top_order"),
-          min_by(col("o_orderkey"), key).as("bottom_order"))
-    }),
-
-    // ---- LLM flagship: end-to-end corpus curation ---------------------
-    // quality-filter -> near-dup removal (keep lowest id of each pair)
-    // -> per-source stats: the composed pipeline a 100 TB pre-training
-    // corpus actually runs, as ONE declarative plan.
-    "q_corpus_curate" -> ((s, dir) => {
-      Graft.init(s)
-      val docs = t(s, dir, "documents")
-      val quality = TextOps.qualitySignals(docs)
-        .select(col("doc_id"), col("source"), col("n_tokens"), col("quality_ok"))
-      val dupIds = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5)
-        .select(col("id_b").as("doc_id")).distinct()
-      // the whole flagship goes through the engine surface: filter ->
-      // anti-join (JoinType.Anti, Spark left_anti) -> grouped aggregate
-      Frame(quality)
-        .filter(Raw(col("quality_ok"), "quality_ok"))
-        .join(Frame(dupIds), Seq("doc_id" -> "doc_id"), JoinType.Anti)
-        .aggregate(
-          Seq(E.col("source")),
-          Seq(E.count(E.lit(1)).as("n_docs"),
-            E.sum(E.col("n_tokens")).as("sum_tokens")))
-        .df
-    }),
-
-    // ---- LLM: transitive near-dup clusters (connected components) -----
-    "q_dedup_clusters" -> ((s, dir) => {
-      Graft.init(s)
-      Dedup.nearDupClusters(
-        Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text", 3, 0.5))
-    }),
-
-    // the same clusters through the reliable-checkpoint path (every
-    // round checkpointed to a scratch directory instead of executor
-    // blocks) — the oracle is the identical min-reachability CTE
-    "q_dedup_clusters_star" -> ((s, dir) => {
-      Graft.init(s)
-      Dedup.nearDupClusters(
-        Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text", 3, 0.5),
-        checkpointDir = Some(scratchDir("graft-cc-ckpt").toString))
-    }),
-
-    // ---- LLM: leakage-free split (clusters held out atomically) -------
-    // near-dup clusters bucket as UNITS, so a document can't train
-    // while its near-copy evaluates; docs in no pair are singletons.
-    // The grouped output states the invariant the oracle re-derives:
-    // per-split cluster counts sum to the total cluster count
-    "q_leakage_split" -> ((s, dir) => {
-      Graft.init(s)
-      val docs = t(s, dir, "documents")
-      val clusters = Dedup.nearDupClusters(
-        Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5))
-      graft.ops.Sampling.leakageFreeSplit(docs, "doc_id", clusters, 80)
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("cluster_id")).as("n_clusters"),
-          sum(col("n_chars")).as("sum_chars"))
-    }),
-
-    // ---- LLM: edit-distance fuzzy join (SymSpell deletion buckets) ----
-    // supplier names differ in single digits, so the ed<=1 pair set is
-    // dense and the full cross-join oracle is exact at this SF; the
-    // engine path never cross-joins (variant-keyed equi-join + confirm)
-    "q_editdist_pairs" -> ((s, dir) =>
-      Dedup.editDistancePairs(t(s, dir, "supplier"), "s_suppkey", "s_name",
-        maxDist = 1)),
-
-    // ---- LLM: end-to-end fuzzy entity resolution ----------------------
-    // edit-distance pair graph -> connected clusters -> min-id canonical
-    // entity per cluster: the composition a master-data pipeline runs.
-    // The oracle walks the same ed<=1 graph with a recursive CTE.
-    "q_entity_resolution" -> ((s, dir) => {
-      val supp = t(s, dir, "supplier")
-      Dedup.representatives(supp,
-          Dedup.editDistancePairs(supp, "s_suppkey", "s_name", 1),
-          "s_suppkey")
-        .select(col("s_suppkey"), col("s_name"))
-    }),
-
-    // ---- LLM: cluster-representative dedup (the final corpus) ---------
-    // near-dup clusters collapse to their min-id representative; rows in
-    // no pair survive untouched — the end-to-end "dedup this corpus"
-    "q_dedup_reps" -> ((s, dir) => {
-      Graft.init(s)
-      val docs = t(s, dir, "documents")
-      Dedup.representatives(docs,
-          Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5), "doc_id")
-        .select(col("doc_id"), col("source"))
-    }),
-
-    // ---- LLM: weighted sampling (Efraimidis–Spirakis priorities) ------
-    // longer documents win proportionally more often; the md5-derived
-    // uniform, the priority formula and the 9-dp rounding are mirrored
-    // in SQL, and the id tie-break makes the top-k a total order
-    "q_weighted_sample" -> ((s, dir) =>
-      graft.ops.Sampling.weightedSample(t(s, dir, "documents"),
-          "text", "doc_id", length(col("text")), k = 50)
-        .select(col("doc_id"), col("priority"))),
-
-    // ---- LLM: per-source weighted sampling (stratified selection) -----
-    "q_weighted_by_source" -> ((s, dir) =>
-      graft.ops.Sampling.weightedSampleByGroup(t(s, dir, "documents"),
-          "text", "doc_id", "source", length(col("text")), k = 10)
-        .select(col("source"), col("doc_id"), col("priority"))),
-
-    // ---- LLM: stable content-keyed train/test split -------------------
-    "q_stable_split" -> ((s, dir) =>
-      graft.ops.Sampling.stableSplit(t(s, dir, "documents"), "text", 80)
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))),
-
-    // ---- LLM: stratified sampling (per-source mixing weights) ---------
-    "q_stratified" -> ((s, dir) =>
-      graft.ops.Sampling.stratifiedSample(t(s, dir, "documents"),
-          "source", "text",
-          Map("src0" -> 0, "src1" -> 25, "src2" -> 50), defaultPct = 100)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))),
-
-    // ---- extension: outer explode (NULL collections keep their row) ---
-    "q_explode_outer" -> ((s, dir) => {
-      val base = Frame(t(s, dir, "documents")
-        .where(col("doc_id") < 100)
-        .select(col("doc_id"),
-          when(col("doc_id") % 10 === 0, lit(null))
-            .otherwise(split(col("text"), " ")).as("toks")))
-      base.explodeOuter(E.col("toks"), "pos", "tok", Seq(E.col("doc_id"))).df
-    }),
-
-    // ---- extension: null-safe equality join (<=> / IS NOT DISTINCT) ---
-    // nullable keys synthesized from orders: a hashed join on <=> where
-    // NULL keys match each other exactly once per pair — the join-key
-    // form SQL engines need when key columns are nullable
-    "q_nullsafe_eq" -> ((s, dir) => {
-      def keyed(limit: Int, ka: String) = Frame(t(s, dir, "orders")
-        .where(col("o_orderkey") <= limit)
-        .select(col("o_orderkey").as(s"${ka}_id"),
-          when(col("o_orderkey") % 7 === 0, lit(null))
-            .otherwise(col("o_custkey")).as(ka)))
-      keyed(200, "ka").joinOn(keyed(300, "kb"),
-          E.col("ka") <=> E.col("kb"))
-        .aggregate(Seq.empty,
-          Seq(Raw(count(lit(1)).as("n_pairs"), "n_pairs"),
-            Raw(sum(when(col("ka").isNull, 1L).otherwise(0L))
-              .as("n_null_pairs"), "n_null_pairs")))
-        .df
-    }),
-
-    // ---- extension: exact one-pass covariance/correlation matrix ------
-    // moment sums in DECIMAL(38,8) (exact for the 2-decimal fixtures),
-    // final arithmetic a fixed IEEE sequence mirrored by the oracle —
-    // unlike covar_pop/corr built-ins, reproducible across engines
-    "q_covariance" -> ((s, dir) =>
-      graft.ops.Profile.covarianceMatrix(t(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount"))),
-
-    // ---- extension: equi-width histogram (densified, fixed bounds) ----
-    "q_histogram" -> ((s, dir) =>
-      graft.ops.Profile.histogram(t(s, dir, "orders"), "o_totalprice",
-        nBins = 20, lo = 0.0, hi = 600000.0)),
-
-    // ---- LLM: ingestion profiling (per-column quality summary) --------
-    // exactDistinct so the oracle can mirror; long/string columns only
-    // (double min/max stringification differs across engines)
-    "q_profile" -> ((s, dir) =>
-      Frame(t(s, dir, "documents"))
-        .profile(Seq("doc_id", "lang", "source", "n_chars"),
-          exactDistinct = true).df),
-
-    // ---- extension: join-key skew diagnostics -------------------------
-    // the pre-shuffle measurement that decides hash vs salted vs
-    // broadcast: l_orderkey (mild skew), l_suppkey (balanced),
-    // l_returnflag (3 keys, catastrophic if hash-partitioned)
-    "q_skew_report" -> ((s, dir) =>
-      graft.ops.Profile.skewReport(t(s, dir, "lineitem"),
-        Seq("l_orderkey", "l_suppkey", "l_returnflag"))),
-
-    // ---- LLM: incremental dedup (new crawl batch vs standing corpus) --
-    // docs < 250 play yesterday's corpus (kept only as fingerprints);
-    // the new batch is docs >= 250 plus planted re-ids of docs 0-9,
-    // which the anti-join must eliminate as already-seen
-    "q_dedup_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val seen = docs.where(col("doc_id") < 250)
-        .select(Dedup.fingerprintOf(col("text")).as("fp"))
-      val newBatch = docs.where(col("doc_id") >= 250)
-        .select(col("doc_id"), col("text"))
-        .unionByName(docs.where(col("doc_id") < 10)
-          .select((col("doc_id") + 100000).as("doc_id"), col("text")))
-      Frame(newBatch).newUnseen(Frame(seen), "text", "doc_id")
-        .df.select(col("doc_id"), col("n_copies"))
-    }),
-
-    // ---- LLM: per-source quantile curation (keep each source's top
-    // half by length) — percent_rank over a tie-free order, the
-    // distribution-aware cut that absolute thresholds can't express
-    "q_quality_quantile" -> ((s, dir) =>
-      Frame(t(s, dir, "documents").select(col("doc_id"), col("source"),
-          col("n_chars")))
-        .window(Seq(E.col("source")),
-          Seq((E.col("n_chars"), true), (E.col("doc_id"), true)),
-          Seq(("percent_rank", E.lit(1), "pr")))
-        .filter(Raw(col("pr") >= 0.5, "top half"))
-        .project(E.col("doc_id"), E.col("source"), E.col("n_chars")).df),
-
-    // ---- LLM: source-weighted mixture to a token budget ---------------
-    // 40k-char budget at 50/25/12.5/12.5 over four sources: src0 upsamples
-    // to ~2.5 epochs, src2/src3 downsample to ~0.65, the rest drop out
-    "q_mixture" -> ((s, dir) =>
-      Frame(t(s, dir, "documents").select(col("doc_id"), col("source"),
-          col("n_chars")))
-        .mixtureToBudget("source", "doc_id", "n_chars",
-          Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.125,
-            "src3" -> 0.125),
-          budgetTokens = 40000L).df),
-
-    // ---- LLM: exact dedup (group on full key) -------------------------
-    "q_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(t(s, dir, "documents"), "text", "doc_id")
-        .select(col("doc_id"), col("n_copies"))),
-
-    // ---- LLM: exact dedup by 128-bit fingerprint (scale form) ---------
-    "q_dedup_md5" -> ((s, dir) =>
-      Dedup.exactByFingerprint(t(s, dir, "documents"), "text", "doc_id")),
-
-    // ---- LLM: exact n-gram Jaccard set-similarity join ----------------
-    // threshold 0.3 is the STRESS entry (the prefix filter keeps ~70% of
-    // each doc's tokens, so candidates swell — exact but expensive);
-    // the 0.5 variant below is the bench headline
-    "q_jaccard_pairs" -> ((s, dir) => {
-      Graft.init(s)
-      Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-        shingleN = 3, threshold = 0.3)
-    }),
-
-    "q_jaccard_pairs05" -> ((s, dir) => {
-      Graft.init(s)
-      Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-        shingleN = 3, threshold = 0.5)
-    }),
-
-    // ---- LLM: MinHash+LSH near-dup (banded, exact-confirmed) ----------
-    // Planted-truth oracle (same trick as q_cosine_neardups): exact copies
-    // of docs 0..24 are unioned in at id+100000. At threshold 1.0 the
-    // exact-Jaccard confirm admits only set-identical pairs; the fixture
-    // has NO natural identical-shingle-set pair (verified: max natural
-    // 3-gram Jaccard is 0.989 < 1), and an identical doc is guaranteed LSH
-    // recall (identical signature -> same bucket in every band). Output is
-    // therefore exactly the 25 planted pairs — closed-form oracle below.
-    // The corpus-vs-batch output filter keeps the oracle sound even at
-    // SFs whose natural corpus contains identical-set pairs (sf0.1 has
-    // 8, all with both endpoints >= 179 — no doc_id < 25 involved, so
-    // batch pairs remain exactly the planted ones). Natural-corpus
-    // thresholds (0.5) are exercised in DedupSpec's recall-vs-exact
-    // tests.
-    "q_minhash_lsh" -> ((s, dir) => {
-      Graft.init(s)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val planted = docs.where(col("doc_id") < 25)
-        .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
-      Dedup.minhashNearDups(docs.unionByName(planted), "doc_id", "text",
-        shingleN = 3, bands = 16, rowsPerBand = 4, threshold = 1.0)
-        .where(col("id_a") < 100000L && col("id_b") >= 100000L)
-    }),
-
-    // ---- LLM: tokenizer fertility report (chars per token by source) --
-    // the metric a tokenizer release ships with: how many characters
-    // one token buys, per corpus source — high fertility on a source
-    // means the vocabulary serves it poorly (more tokens per text,
-    // higher training cost). Encode with the 8-merge BPE, aggregate
-    // exact integers, one integer division per source; the oracle
-    // replays training AND encoding in SQL and aggregates identically
-    "q_bpe_fertility" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = TextOps.bpeMerges(docs, numMerges = 8)
-        .orderBy("merge_rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      graft.Graft.init(s)
-      TextOps.bpeEncodeFast(docs, merges)
-        .join(docs.select(col("doc_id"), col("source"), col("n_chars")),
-          Seq("doc_id"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).cast("long").as("sum_chars"),
-          sum(col("n_tokens")).cast("long").as("sum_tokens"))
-        .withColumn("chars_per_token_micros",
-          expr("(1000000 * sum_chars) div sum_tokens"))
-    }),
-
-    // ---- LLM: dedup savings ranking (where dedup effort pays) ---------
-    // per exact-dup group: copies and bytes reclaimed by keeping one;
-    // top-20 by (bytes_saved desc, fp) — the triage list an engineer
-    // reads before spending cluster time on near-dup passes. Planted
-    // mirror copies of docs < 30 guarantee non-trivial groups
-    "q_dedup_savings" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val dup = docs.where(col("doc_id") < 30)
-        .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
-      docs.unionByName(dup)
-        .groupBy(md5(col("text").cast("binary")).as("fp"))
-        .agg(min(col("doc_id")).as("keep_id"),
-          count(lit(1)).as("n_copies"),
-          ((count(lit(1)) - 1) * first(octet_length(col("text"))))
-            .as("bytes_saved"))
-        .where(col("n_copies") >= 2)
-        .orderBy(col("bytes_saved").desc, col("fp"))
-        .limit(20)
-    }),
-
-    // ---- LLM: preference-pair bootstrap (DPO data from heuristics) ----
-    // within each source, pair the i-th most stopword-fluent doc with
-    // the i-th least (exact integer score: 1e6 * |stopwords ∩ distinct
-    // words| div |distinct words|), halves never overlapping, zero-gap
-    // pairs dropped (Sampling.preferencePairs)
-    "q_preference_pairs" -> ((s, dir) => {
-      val allStop = lit(TextOps.stopwords.values.flatten.toArray.distinct)
-      val dw = array_distinct(TextOps.words(col("text")))
-      val score = expr("1000000 * nInter div nDw")
-      val scored = t(s, dir, "documents")
-        .withColumn("nInter", size(array_intersect(dw, allStop)).cast("long"))
-        .withColumn("nDw", greatest(size(dw), lit(1)).cast("long"))
-        .select(col("source"), col("doc_id"), score.as("score_micros"))
-      graft.ops.Sampling.preferencePairs(scored, "source", "doc_id",
-        "score_micros", k = 3)
-    }),
-
-    // ---- LLM: NSP pair construction (BERT preprocessing, with MLM) ----
-    // positives = adjacent in-doc sentence pairs (per-row, no join);
-    // negatives = last sentence vs the id+1 doc's first sentence — a
-    // deterministic KEYED cross-document pick (a "random doc" would
-    // need a single-partition global index or RNG state; refused).
-    // Planted multi-sentence docs guarantee positives exist
-    "q_nsp_pairs" -> ((s, dir) => {
-      import s.implicits._
-      val planted = Seq(
-        (1000001L, "First things first. Then the middle part. Finally the end."),
-        (1000002L, "Lead sentence here. Trailing sentence there."))
-        .toDF("doc_id", "text")
-      TextOps.nspPairs(t(s, dir, "documents")
-        .select(col("doc_id"), col("text")).unionByName(planted))
-    }),
-
-    // ---- LLM: FIM transform (fill-in-the-middle, PSM order) -----------
-    // the code-model preprocessing: deterministic cut points from two
-    // md5 draws, <PRE> prefix <SUF> suffix <MID> middle serialization;
-    // docs under 3 tokens pass through (TextOps.fimTransform)
-    "q_fim_transform" -> ((s, dir) =>
-      TextOps.fimTransform(t(s, dir, "documents"))),
-
-    // ---- LLM: BERT-style MLM masking (80/10/10) -----------------------
-    // the masked-LM sibling of q_span_corrupt: select 15% of positions,
-    // 80% -> [MASK], 10% -> random top-1000 vocab token, 10% unchanged;
-    // labels carry the originals. Three independent md5 draws keyed on
-    // (doc, position, role) make every choice replayable
-    "q_mlm_mask" -> ((s, dir) =>
-      TextOps.mlmMask(t(s, dir, "documents"), "doc_id", "text",
-        selectPermille = 150, vocabSize = 1000)),
-
-    // ---- LLM: T5-style span corruption (denoising preprocessing) ------
-    // deterministic position masking (md5 draw per (doc, position)),
-    // adjacent masks merge to spans, exact T5 serialization:
-    // input replaces spans with <extra_id_K>, target lists each
-    // sentinel plus its hidden tokens (TextOps.spanCorrupt); the
-    // oracle replays the definition with order-free prefix counts
-    "q_span_corrupt" -> ((s, dir) =>
-      TextOps.spanCorrupt(t(s, dir, "documents"),
-        "doc_id", "text", maskPermille = 150)),
-
-    // ---- LLM: dedup provenance (license/source mixing report) ---------
-    // keep-min dedup must not DISCARD the other sources a kept doc
-    // arrived under (their obligations travel with it); planted
-    // mirror-source copies of docs < 30 plus any natural cross-source
-    // exact dups, replayed identically (Dedup.provenance)
-    "q_dedup_provenance" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("text"), col("source"))
-      val mirrored = docs.where(col("doc_id") < 30)
-        .select((col("doc_id") + 100000L).as("doc_id"), col("text"),
-          lit("mirror-src").as("source"))
-      Dedup.provenance(docs.unionByName(mirrored),
-        "text", "doc_id", "source")
-    }),
-
-    // ---- LLM: sentence-aware chunking (the RAG chunker proper) --------
-    // greedy-fill sentences into <=24-token chunks, never splitting a
-    // sentence; planted multi-sentence docs exercise the boundary math
-    // while the whole corpus rides along. The oracle replays sentence
-    // split AND the greedy fold (struct-accumulator list_reduce with
-    // the list_prepend seed trick) — TextOps.chunkBySentences
-    "q_chunk_sentences" -> ((s, dir) => {
-      import s.implicits._
-      val planted = Seq(
-        (1000001L, "S1 a b c. S2 d e f. S3 g h. S4 i."),
-        (1000002L, "Tiny. Also tiny."),
-        (1000003L, "One very long single sentence that cannot be split " +
-          "even though it blows straight through the token budget " +
-          "because sentence integrity outranks the cap. Short tail."))
-        .toDF("doc_id", "text")
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("text")).unionByName(planted)
-      TextOps.chunkBySentences(docs, "doc_id", "text", maxTokens = 24)
-    }),
-
-    // ---- LLM: sentence segmentation (RAG/chunking pre-step) -----------
-    // protect-split-restore (no lookbehind — RE2, the oracle's regex
-    // subset, has none): abbreviation periods are shielded, the text
-    // splits on terminator runs, placeholders restore. Planted cases
-    // exercise abbreviations, terminator runs, and the no-terminator
-    // doc; the whole corpus rides along (TextOps.sentences)
-    "q_sentence_split" -> ((s, dir) => {
-      import s.implicits._
-      val planted = Seq(
-        (1000001L, "Dr. Smith went home. Then he slept! Did he? Yes."),
-        (1000002L, "One sentence with no terminator"),
-        (1000003L, "e.g. this stays whole. But this is new."),
-        (1000004L, "Multiple!!! Terminators?? One. Two."))
-        .toDF("doc_id", "text")
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("text")).unionByName(planted)
-      val sents = TextOps.sentences(col("text"))
-      docs.select(col("doc_id"), size(sents).as("n_sentences"),
-        array_join(sents, "|").as("sentences_joined"))
-    }),
-
-    // ---- LLM: trainer-facing sharded export with verifiable manifest --
-    // the "pack and ship" step: md5-bucket shard assignment plus an
-    // order-free exact digest per shard that any engine can recompute
-    // to prove it holds the same rows — no reliance on parquet bytes
-    // (never byte-stable). The oracle recomputes the whole manifest
-    "q_export_shards" -> ((s, dir) => {
-      val tmp = scratchDir("graft-export-q").toString
-      graft.ops.Layout.exportShards(
-        t(s, dir, "documents"), tmp, "doc_id", nShards = 8)
-    }),
-
-    // ---- LLM: encoding-damage repair (UTF-8-as-Latin-1 mojibake) ------
-    // the classic web-corpus cleaning pass: re-encode/decode reverses
-    // the damage exactly, guarded so it only fires when provably right
-    // (Latin-1 range + marker + valid-UTF-8 roundtrip that shortens).
-    // Planted cases cover repair, pass-through, invalid-marker, and
-    // out-of-range texts; the oracle lists the expected outputs from
-    // the construction (TextOps.fixMojibake)
-    "q_mojibake" -> ((s, dir) => {
-      import s.implicits._
-      val cases = Seq(
-        (1L, "caf\u00c3\u00a9 corner"),            // cafAY -> cafe
-        (2L, "plain ascii text"),                   // untouched
-        (3L, "a\u00e2\u0080\u0099s quote"),        // a's curly quote
-        (4L, "x \u00c3"),                           // invalid UTF-8: untouched
-        (5L, "\u65e5\u672c \u00c3\u00a9"))         // CJK present: untouched
-        .toDF("case_id", "text")
-      cases.select(col("case_id"),
-        TextOps.fixMojibake(col("text")).as("fixed"))
-    }),
-
-    // ---- extension: exact two-sample KS drift statistic ---------------
-    // the binning-free companion of q_drift_psi: D = max |CDF_a - CDF_b|
-    // over the merged n_chars domain, all-integer (cum*n cross products
-    // over the common denominator), single-digit sources vs the rest
-    "q_ks_drift" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ops.Profile.ksStatistic(
-        docs.where(length(col("source")) === 4),
-        docs.where(length(col("source")) > 4), "n_chars")
-    }),
-
-    // ---- LLM: late-interaction (ColBERT-style) MaxSim retrieval -------
-    // token-level matching: score = Σ over query tokens of max over doc
-    // tokens of cos(v(qt), v(dt)); probe = the first 4 tokens of doc 0.
-    // Vectors are the md5-derived stub (featurizeStub convention — a
-    // real encoder slots into the same column); the interaction
-    // algebra (broadcast query tokens, micros-quantized cosines, exact
-    // BIGINT max/Σ, windowed top-k) is the real contract and the
-    // oracle replays ALL of it
-    "q_maxsim" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val probe = docs.where(col("doc_id") === 0)
-        .select(explode(slice(split(trim(lower(col("text"))), "\\s+"),
-          1, 4)).as("qtok"))
-        .select(lit(1L).as("query_id"), col("qtok"))
-      graft.ops.Retrieval.maxSimTopK(docs, probe, "doc_id", "text",
-        "query_id", "qtok", dim = 8, k = 10)
-    }),
-
-    // ---- LLM: the Common-Crawl-shaped pipeline, end to end ------------
-    // html pages → WARC records → per-record gzip members → parse →
-    // magic-byte sniff (must say text/html) → boilerplate-stripping
-    // extraction → per-doc stats. The compressed container transport in
-    // the middle must not perturb extraction by one byte: the oracle
-    // replays build+extract directly and never sees a container
-    "q_cc_pipeline" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val recs = docs.select((col("doc_id") % 20).as("file_id"),
-        col("doc_id"),
-        graft.sources.Warc.record(lit("response"),
-          concat(lit("urn:graft:doc:"), col("doc_id").cast("string")),
-          concat(lit("https://"), lower(col("source")),
-            lit(".example.com/doc/"), col("doc_id").cast("string")),
-          plantedHtml).as("rec"))
-      val files = graft.sources.Warc
-        .gzipFiles(recs, "file_id", "rec", "doc_id")
-      val parsed = graft.sources.Warc
-        .parseGzip(files, "file_id", "payload")
-        .where(col("rec_type") === "response")
-        .withColumn("sniffed",
-          Multimodal.sniffKind(col("body").cast("binary")))
-        .where(col("sniffed") === "text/html")
-        .withColumn("doc_id",
-          regexp_extract(col("record_id"), "urn:graft:doc:(\\d+)", 1)
-            .cast("long"))
-      graft.ops.Html.extract(parsed, "doc_id", "body")
-        .select(col("doc_id"), col("n_links"), col("n_chars_clean"))
-    }),
-
-    // ---- LLM: robots.txt crawl admission (frontier gate) --------------
-    // per-host robots.txt (planted: an evilbot group that must be
-    // ignored, a * group disallowing /cat1/ with a longer Allow carving
-    // /cat1/page3 back out, an empty Disallow that must drop out, and
-    // ONE host with no robots at all -> crawl-by-default). Group
-    // scoping, longest-prefix precedence, and allow-beats-disallow ties
-    // are additionally pinned in RobotsSpec; the oracle replays the
-    // expected verdicts from the plant's construction
-    "q_robots_filter" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val urls = docs.select(col("doc_id"),
-        concat(lower(col("source")), lit(".example.com")).as("host"),
-        concat(lit("/cat"), (col("doc_id") % 3).cast("string"),
-          lit("/page"), (col("doc_id") % 5).cast("string")).as("path"))
-      val robots = docs.select(lower(col("source")).as("src")).distinct()
-        .where(col("src") =!= "src4")
-        .select(concat(col("src"), lit(".example.com")).as("host"),
-          lit("# crawl policy\nUser-agent: evilbot\nDisallow: /\n\n" +
-            "User-agent: *\nDisallow: /cat1/\nAllow: /cat1/page3\n" +
-            "Disallow:\nDisallow: /private\n").as("txt"))
-      val rules = graft.ops.Robots.parseRobots(robots, "host", "txt")
-      graft.ops.Robots.filterAllowed(urls, rules, "host", "path", "doc_id")
-        .select(col("doc_id"), col("host"), col("path"), col("allowed"))
-    }),
-
-    // ---- LLM: crawl frontier (sitemap discovery → robots admission → --
-    // politeness). The composed fetch-schedule table: per-host sitemap
-    // <loc> extraction (entity unescape + whitespace trim exercised),
-    // robots path gating, and Crawl-delay politeness (the evilbot
-    // group's delay 99 must be ignored; the robots-less host falls to
-    // the caller default). One row per discovered URL.
-    "q_crawl_frontier" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val hosts = docs.select(lower(col("source")).as("src")).distinct()
-        .select(concat(col("src"), lit(".example.com")).as("host"),
-          col("src"))
-      val robots = hosts.where(col("src") =!= "src4")
-        .select(col("host"),
-          lit("User-agent: evilbot\nDisallow: /\nCrawl-delay: 99\n\n" +
-            "User-agent: *\nDisallow: /cat1/\nAllow: /cat1/page3\n" +
-            "Crawl-delay: 2\n").as("txt"))
-      val sitemap = hosts.select(col("host"), concat(
-        lit("<?xml version=\"1.0\"?><urlset><url><loc>https://"),
-        col("host"), lit("/cat0/page0</loc></url><url><loc> https://"),
-        col("host"), lit("/cat1/page1 </loc></url><url><loc>https://"),
-        col("host"), lit("/cat1/page3</loc></url><url><loc>https://"),
-        col("host"), lit("/q?a=1&amp;b=2</loc></url></urlset>"))
-        .as("xml"))
-      val urls = graft.ops.Robots.sitemapUrls(sitemap, "host", "xml")
-        .withColumn("path", regexp_replace(col("url"), "^https://[^/]+", ""))
-      val rules = graft.ops.Robots.parseRobots(robots, "host", "txt")
-      val delays = graft.ops.Robots.crawlDelays(robots, "host", "txt")
-      graft.ops.Robots.filterAllowed(urls, rules, "host", "path", "url")
-        .join(delays, Seq("host"), "left")
-        .select(col("host"), col("path"), col("allowed"),
-          coalesce(col("crawl_delay_s"), lit(1L)).as("crawl_delay_s"))
-    }),
-
-    // ---- LLM: politeness-scheduled fetch plan -------------------------
-    // the frontier composition's last step: allowed URLs line up per
-    // host (URL total order) and each gets a fetch offset of
-    // slot * crawl_delay_s — policy turned into a schedule. One
-    // host-keyed window over the admitted frontier
-    "q_fetch_schedule" -> ((s, dir) => {
-      val frontier = queries("q_crawl_frontier")(s, dir)
-        .where(col("allowed"))
-      frontier.withColumn("slot",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("host")).orderBy(col("path"))) - 1)
-        .select(col("host"), col("path"),
-          (col("slot") * col("crawl_delay_s")).as("fetch_offset_s"))
-    }),
-
-    // ---- LLM: FUZZY decontamination (MinHash LSH vs the eval set) -----
-    // catches paraphrased/edited benchmark leakage that q_decontam's
-    // exact 8-gram pass misses. Constructive oracle at threshold 1.0
-    // (planted exact copies of the eval docs — every band matches BY
-    // CONSTRUCTION, the same convention as q_minhash_lsh); the fuzzy
-    // sub-1.0 path is pinned on hand-made near-copies in TextOpsSpec
-    "q_decontam_fuzzy" -> ((s, dir) => {
-      Graft.init(s)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val evalSet = docs.where(col("doc_id") < 20)
-      val corpus = docs.where(col("doc_id") >= 20).unionByName(
-        evalSet.select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-      TextOps.fuzzyContaminatedIds(corpus, evalSet, "doc_id", "text",
-        shingleN = 3, bands = 16, rowsPerBand = 4, threshold = 1.0)
-    }),
-
-    // ---- LLM: fuzzy decontamination off a PERSISTED signature index ---
-    // the standing-corpus shape (VERDICT r8 ask #7): the corpus
-    // signatures are built ONCE (Dedup.saveSignatureIndex, temp dir —
-    // the q_ann_ivf convention) and the probe never re-reads corpus
-    // text; the planted oracle is q_decontam_fuzzy's, id-for-id, since
-    // the index path computes the identical signatures
-    "q_decontam_fuzzy_indexed" -> ((s, dir) => {
-      Graft.init(s)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val evalSet = docs.where(col("doc_id") < 20)
-      val corpus = docs.where(col("doc_id") >= 20).unionByName(
-        evalSet.select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-      val tmp = scratchDir("graft-sigidx-q").toString
-      graft.ops.Dedup.saveSignatureIndex(corpus, tmp, "doc_id", "text",
-        shingleN = 3, bands = 16, rowsPerBand = 4)
-      TextOps.fuzzyContaminatedIdsIndexed(s, tmp, evalSet, "doc_id",
-        "text", threshold = 1.0)
-    }),
-
-    // ---- LLM: corpus data card (per-source release manifest) ----------
-    // the summary table a corpus release ships with: per source, doc and
-    // token counts, char volume, dominant language (deterministic
-    // (count, lang) argmax), and corpus share in exact micros — one
-    // grouped aggregation plus a 1-row totals attach
-    "q_data_card" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .withColumn("__nt", TextOps.nTokens(col("text")))
-      val per = d.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("__nt")).as("n_tokens"),
-          sum(col("n_chars")).as("n_chars"))
-      val perLang = d.groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("c"))
-      val topLang = perLang
-        .withColumn("__rn", row_number().over(Window
-          .partitionBy(col("source"))
-          .orderBy(col("c").desc, col("lang"))))
-        .where(col("__rn") === 1)
-        .select(col("source"), col("lang").as("top_lang"))
-      per.join(topLang, Seq("source"))
-        .crossJoin(broadcast(d.agg(count(lit(1)).as("__tot"))))
-        .withColumn("share_micros", expr("(1000000L * n_docs) div __tot"))
-        .drop("__tot")
-    }),
-
-    // ---- LLM: ingestion rate limiting (max N docs per source-hour) ----
-    // deterministic throttle: within each (source, hour) cell keep the
-    // first N docs by (doc_id) total order — the crawler backpressure
-    // rule stated as a window, reproducible on any engine. Fixture docs
-    // have no timestamps, so the hour derives from doc_id (stated in
-    // the oracle identically); caps bind naturally at sf0.01
-    "q_rate_limit" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .withColumn("hour", (col("doc_id") % 7).cast("long"))
-        .withColumn("__rn", row_number().over(Window
-          .partitionBy(col("source"), col("hour"))
-          .orderBy(col("doc_id"))))
-        .where(col("__rn") <= 2)
-        .select(col("source"), col("hour"), col("doc_id"))),
-
-    // ---- scale mechanics: atomic multi-table snapshot commit ----------
-    // marker-committed versioned writes: v1 lands a stale slice, v2
-    // the full aggregate, then a FAILED v3 (table data written, no
-    // `_committed` marker). The read resolves the highest committed
-    // version and must see exactly v2 — the oracle states v2's
-    // content, so a torn read of v1 or v3 fails the hash
-    // (ops/Layout.commitSnapshot/readSnapshot)
-    "q_snapshot_commit" -> ((s, dir) => {
-      val tmp = scratchDir("graft-snap-q").toString
-      val li = t(s, dir, "lineitem")
-      graft.ops.Layout.commitSnapshot(Map(
-        "rf" -> li.where(col("l_orderkey") <= 100)
-          .groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))), tmp)
-      graft.ops.Layout.commitSnapshot(Map(
-        "rf" -> li.groupBy(col("l_returnflag"))
-          .agg(count(lit(1)).as("n"))), tmp)
-      li.limit(1).write.parquet(s"$tmp/data_v3/rf") // torn, uncommitted
-      graft.ops.Layout.readSnapshot(s, tmp, "rf")
-    }),
-
-    // ---- LLM: MinHash recall harness (self-evaluating) ----------------
-    // ground truth = exact prefix-filtered Jaccard, candidates = banded
-    // MinHash, both at threshold 1.0 over the corpus + 25 planted exact
-    // copies: identical signatures make recall provably 1.0, so the
-    // closed form pins the whole measurement chain
-    // (ops/Dedup.minhashRecall)
-    "q_lsh_recall" -> ((s, dir) => {
-      Graft.init(s)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val planted = docs.where(col("doc_id") < 25)
-        .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
-      Dedup.minhashRecall(docs.unionByName(planted), "doc_id", "text",
-        threshold = 1.0)
-    }),
-
-    // ---- LLM: incremental NEAR-dup vs a persisted signature index -----
-    // the daily-crawl pattern at 100 TB: the standing corpus's MinHash
-    // buckets + shingle sets persist once (saveSignatureIndex); a new
-    // batch joins the bucket table and confirms exact Jaccard against
-    // the saved sets — corpus text never re-read. Planted exact copies
-    // (docs 0..24 at id+500000) with threshold 1.0 give the same
-    // planted-truth closed form as q_minhash_lsh
-    // (ops/Dedup.incrementalNearDups)
-    "q_dedup_incr_near" -> ((s, dir) => {
-      Graft.init(s)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val tmp = scratchDir("graft-sigidx-q").toString
-      Dedup.saveSignatureIndex(docs, tmp, "doc_id", "text")
-      val batch = docs.where(col("doc_id") < 25)
-        .select((col("doc_id") + 500000L).as("doc_id"), col("text"))
-      Dedup.incrementalNearDups(batch, tmp, "doc_id", "text",
-        threshold = 1.0)
-    }),
-
-    // ---- LLM: SimHash near-dup (exact for hamming<=k by pigeonhole) ---
-    // Incremental-batch framing with a planted-truth oracle: a "new batch"
-    // of exact copies (docs 0..24, id+100000) is deduped against the
-    // corpus at hamming 0; only corpus-vs-batch pairs are reported. An
-    // exact copy has an identical simhash, and no natural doc shares a
-    // simhash with any doc id < 25 (verified with tools/FixtureStats,
-    // since deleted, source at commit aaa65ea, at
-    // BOTH verify-able SFs: sf0.01's natural hamming-0 pairs have
-    // endpoints >= 58, sf0.1's >= 179) -> output is exactly the 25
-    // planted pairs. Natural-corpus hamming<=3 is exercised in DedupSpec.
-    "q_simhash_pairs" -> ((s, dir) => {
-      Graft.init(s)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val batch = docs.where(col("doc_id") < 25)
-        .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
-      Dedup.simhashNearDups(docs.unionByName(batch), "doc_id", "text",
-        maxHamming = 0)
-        .where(col("id_a") < 100000L && col("id_b") >= 100000L)
-    }),
-
-    // ---- LLM: token counting ------------------------------------------
-    "q_text_stats" -> ((s, dir) =>
-      TextOps.tokenCounts(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_tokens_ws"), col("n_tokens_re"))),
-
-    // ---- LLM: overlapping token-window chunking -----------------------
-    "q_chunk_docs" -> ((s, dir) =>
-      TextOps.chunkDocs(t(s, dir, "documents").where(col("doc_id") < 100),
-          "doc_id", "text", chunkSize = 20, overlap = 5)
-        .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
-          col("chunk_text"), col("n_tokens").cast("long").as("n_tokens"))),
-
-    // ---- LLM: line-level corpus dedup (C4/CCNet boilerplate removal) --
-    // the fixture has no newlines, so first reflow each doc into 3-word
-    // lines (deterministic, SQL-mirrorable), then drop every line present
-    // in more than 2 distinct documents and reassemble the survivors
-    "q_dedup_lines" -> ((s, dir) => {
-      val ws = split(col("text"), " ")
-      val nLines = ceil(size(ws) / 3.0).cast("int")
-      val reflowed = t(s, dir, "documents").select(col("doc_id"),
-        array_join(transform(sequence(lit(1), nLines),
-          i => array_join(slice(ws, (i - lit(1)) * 3 + 1, lit(3)), " ")), "\n")
-          .as("text"))
-      Frame(reflowed).dedupLines("doc_id", "text", maxDf = 2).df
-    }),
-
-    // ---- LLM: per-shard greedy sequence packing -----------------------
-    "q_pack_sequences" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .withColumn("n_tokens", TextOps.nTokens(col("text")))
-      TextOps.packSequences(docs, "doc_id", "n_tokens", "source",
-          capacity = 512)
-        .groupBy(col("source"), col("pack_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("sum_tokens"))
-    }),
-
-    // ---- LLM: quality scoring -----------------------------------------
-    "q_quality" -> ((s, dir) =>
-      TextOps.qualitySignals(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_tokens"), col("mean_word_len"),
-          col("punct_ratio"), col("stopword_ratio"), col("quality_ok"))),
-
-    // ---- LLM: intra-doc repetition (duplicate 3-gram fraction) --------
-    "q_repetition" -> ((s, dir) =>
-      TextOps.repetitionSignals(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_grams").cast("long").as("n_grams"),
-          round(col("dup_gram_frac"), 6).as("dup_gram_frac"))),
-
-    // ---- LLM: group-wise top-k (keep best N per source) ---------------
-    // "keep the k longest docs per domain" — the per-stratum curation
-    // cut, expressed entirely on the engine surface (Frame.window +
-    // filter). Deterministic order: (n_tokens desc, doc_id asc).
-    "q_topk_per_group" -> ((s, dir) => {
-      val q = TextOps.qualitySignals(t(s, dir, "documents"))
-        .select(col("doc_id"), col("source"),
-          col("n_tokens").cast("long").as("n_tokens"))
-      Frame(q).window(Seq(E.col("source")),
-          Seq((E.col("n_tokens"), false), (E.col("doc_id"), true)),
-          Seq(("row_number", E.lit(1), "rn")))
-        .filter(Raw(col("rn") <= 3, "rn <= 3"))
-        .project(E.col("source"), E.col("doc_id"), E.col("n_tokens"),
-          Raw(col("rn").cast("long").as("rn"), "rn")).df
-    }),
-
-    // ---- analytic distribution functions on the Frame surface ---------
-    // ntile/percent_rank/cume_dist over a TIE-FREE order (totalprice,
-    // orderkey): a tied order would make ntile engine-arbitrary
-    "q_window_analytics" -> ((s, dir) =>
-      Frame(t(s, dir, "orders").where(col("o_orderkey") < 2000)
-          .select(col("o_orderkey"), col("o_orderpriority"),
-            col("o_totalprice")))
-        .window(Seq(E.col("o_orderpriority")),
-          Seq((E.col("o_totalprice"), true), (E.col("o_orderkey"), true)),
-          Seq(("ntile", E.lit(4), "tile4"),
-            ("percent_rank", E.lit(1), "pct_rank"),
-            ("cume_dist", E.lit(1), "cume")))
-        .project(E.col("o_orderkey"), E.col("o_orderpriority"),
-          Raw(col("tile4").cast("long").as("tile4"), "tile4"),
-          E.col("pct_rank"), E.col("cume")).df),
-
-    // ---- LLM: language ID (stopword-overlap heuristic) ----------------
-    "q_lang_id" -> ((s, dir) =>
-      TextOps.langId(t(s, dir, "documents"))
-        .groupBy(col("lang_pred")).agg(count(lit(1)).as("n"))),
-
-    // ---- LLM: document fingerprinting (rolling hash + winnowing) ------
-    // registered on the cross-engine md5 word hash at window=7 so the
-    // full pipeline carries a rows+schema+hash oracle (r6 verdict #3:
-    // zero no_oracle rows); the xxhash64 production default
-    // (TextOps.fingerprints) has no DuckDB counterpart by construction
-    // and stays pinned by TextOpsSpec (determinism + shift/permutation
-    // properties). window=7 deliberately differs from q_fingerprint_md5's
-    // window=5 so the two rows exercise distinct shingle widths.
-    "q_fingerprint" -> ((s, dir) =>
-      TextOps.fingerprintsMd5(t(s, dir, "documents"), window = 7)
-        .select(col("doc_id"), col("fp_rolling"), col("fp_winnow"))),
-
-    // ---- LLM: fingerprinting, oracle-checkable md5 variant ------------
-    // same rolling/winnow algorithms as q_fingerprint with an md5-based
-    // word hash both engines can compute — the algorithm itself gets a
-    // full rows+schema+hash oracle (q_fingerprint stays the fast
-    // xxhash64 path, rows-only)
-    "q_fingerprint_md5" -> ((s, dir) =>
-      TextOps.fingerprintsMd5(t(s, dir, "documents"))
-        .select(col("doc_id"), col("fp_rolling"), col("fp_winnow"))),
-
-    // ---- LLM: PII redaction (emails / IPv4 / digit runs) --------------
-    // The fixture text is synthetic and PII-free, so the query first
-    // plants deterministic PII per doc (email + ip + account number
-    // derived from doc_id — reproducible in SQL on both engines), then
-    // redacts: the oracle checks real substitutions, not a no-op.
-    // ---- LLM: privacy / governance audits (ops/Privacy.scala) ---------
-    // k-anonymity over (nation, segment) quasi-identifiers: one
-    // hash-agg, one row per equivalence class, violation = class < k
-    "q_k_anonymity" -> ((s, dir) =>
-      graft.ops.Privacy.kAnonymityAudit(t(s, dir, "customer"),
-          Seq("c_nationkey", "c_mktsegment"), 10)
-        .select(col("c_nationkey"), col("c_mktsegment"), col("n"),
-          col("violating"))),
-
-    // l-diversity with account-balance band as the sensitive attribute:
-    // catches the homogeneity attack k-anonymity misses
-    "q_l_diversity" -> ((s, dir) =>
-      graft.ops.Privacy.lDiversityAudit(
-          t(s, dir, "customer").withColumn("bal_band",
-            floor(col("c_acctbal") / 2000).cast("long")),
-          Seq("c_nationkey", "c_mktsegment"), "bal_band", 3)
-        .select(col("c_nationkey"), col("c_mktsegment"), col("n"),
-          col("n_sensitive"), col("violating"))),
-
-    // cell suppression to the k target: quasi columns nulled in small
-    // classes, every row survives — unordered window, one shuffle
-    "q_k_suppress" -> ((s, dir) =>
-      graft.ops.Privacy.suppressToKAnonymity(t(s, dir, "customer")
-          .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment")),
-          Seq("c_nationkey", "c_mktsegment"), 10)),
-
-    // differentially-private count release: discrete-Laplace noise from
-    // md5-seeded geometric pairs — deterministic per (group, seed), so
-    // retries republish identical values and the oracle can restate it
-    "q_dp_counts" -> ((s, dir) =>
-      graft.ops.Privacy.dpNoisyCounts(t(s, dir, "orders"),
-        "o_orderpriority", 0.5, "graft-r7")),
-
-    // ---- LLM: cross-source quantile normalization --------------------
-    // each source's n_chars distribution maps onto the pooled one via a
-    // 16-bin equi-depth reference — all-integer rank arithmetic (the
-    // interpolation-free quantile convention), so scorers with
-    // arbitrary scales become comparable by rank
-    "q_quantile_normalize" -> ((s, dir) =>
-      graft.ops.Profile.quantileNormalize(t(s, dir, "documents"),
-        "doc_id", "source", "n_chars", 16)),
-
-    // ---- LLM: Luhn-validated card detection --------------------------
-    // a 16-digit run planted per doc (validity falls out of the digits,
-    // neither engine knows it a priori — both run the same checksum);
-    // candidates gate on run length 13-19 with no lookarounds, so the
-    // RE2-based oracle regexp agrees with Spark's
-    "q_pii_luhn" -> ((s, dir) =>
-      TextOps.detectCards(t(s, dir, "documents")
-        .select(col("doc_id"), concat(col("text"), lit(" card "),
-          lpad((col("doc_id") * 7919 % 10000000000L).cast("string"),
-            16, "4")).as("text")))),
-
-    "q_pii_redact" -> ((s, dir) => {
-      val withPii = t(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id"), concat(col("text"),
-          lit(" contact user"), col("doc_id"), lit("@example.com from 10.0.0."),
-          col("doc_id") % 256, lit(" id 1234567890")).as("text"))
-      TextOps.redactPii(withPii) // counts cast long: DuckDB len() is BIGINT
-        .select(col("doc_id"), col("n_emails").cast("long").as("n_emails"),
-          col("n_ipv4").cast("long").as("n_ipv4"),
-          col("n_digit_runs").cast("long").as("n_digit_runs"),
-          col("text_redacted"))
-    }),
-
-    // ---- LLM: Unicode normalization + canonical cleaning --------------
-    // planted NFD sequences (combining marks) exercise the non-ASCII
-    // path of the codegen'd unicode_normalize; the corpus rows take the
-    // ASCII identity fast path
-    "q_normalize" -> ((s, dir) => {
-      import s.implicits._
-      val planted = Seq(
-        (100001L, "cafe\u0301  du   monde"),
-        (100002L, "A\u030Angstro\u0308m UNITS"),
-        (100003L, "  already clean  ")).toDF("doc_id", "text")
-      t(s, dir, "documents").where(col("doc_id") < 50)
-        .select(col("doc_id"), col("text")).unionByName(planted)
-        .select(col("doc_id"), TextOps.normalizeText(col("text"))
-          .as("text_norm"))
-    }),
-
-    // ---- LLM: benchmark decontamination (n-gram overlap vs eval set) --
-    // docs 0..19 play the eval benchmark; planted copies of them at
-    // id+100000 guarantee non-trivial hits, and any NATURAL corpus doc
-    // sharing an 8-gram with the eval docs is flagged too — the oracle
-    // runs the identical construction, so no closed form is needed.
-    "q_decontam" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val evalSet = docs.where(col("doc_id") < 20)
-      val corpus = docs.where(col("doc_id") >= 20).unionByName(
-        evalSet.select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-      TextOps.contaminatedIds(corpus, evalSet, "doc_id", "text", 8)
-    }),
-
-    // ---- LLM: cross-source duplication matrix -------------------------
-    // distinct shared content fingerprints per source pair — "does this
-    // source add anything beyond what's already ingested"; planted
-    // mirror docs guarantee hits alongside any natural cross-source
-    // dups (Dedup.crossSourceDuplication)
-    "q_cross_source_dups" -> ((s, dir) => {
-      import s.implicits._
-      val planted = Seq(
-        (600001L, "mirrored page body one", "srcM1"),
-        (600002L, "mirrored page body one", "srcM2"),
-        (600003L, "mirrored page body two", "srcM1"),
-        (600004L, "mirrored page body two", "srcM2"),
-        (600005L, "mirrored page body one", "srcM3"))
-        .toDF("doc_id", "text", "source")
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("text"), col("source"))
-        .unionByName(planted)
-      Dedup.crossSourceDuplication(docs, "source", "text")
-    }),
-
-    // ---- LLM: per-document novelty vs arrival order -------------------
-    // fraction of each doc's distinct 8-grams FIRST seen in that doc
-    // (min doc id = arrival); boilerplate scores ~0, new text ~1 — the
-    // marginal-value signal dataset-ordering experiments plot
-    // (TextOps.noveltyScores)
-    "q_novelty" -> ((s, dir) =>
-      TextOps.noveltyScores(t(s, dir, "documents"), "doc_id", "text", 8)),
-
-    // ---- engine: materialized-rollup routing (custom optimizer rule) -
-    // the query names the BASE path; plans.RollupRouting swaps the scan
-    // for the saved rollup (one row per (lang, source)) — dim filter,
-    // subset grouping, count/sum/min/max/count(col) all re-aggregated
-    // from stored partials. The oracle aggregates the base directly, so
-    // the hash compare proves routed == direct. Rollup built once per
-    // (corpus dir, JVM) — a release artifact, like the gram index; the
-    // executed plan is forced while registered, then the registration
-    // is dropped so no other query's documents aggregate can route
-    "q_rollup_route" -> ((s, dir) => {
-      graft.Graft.init(s)
-      val basePath = s"$dir/documents.parquet"
-      val roll = rollupFor(s, dir)
-      graft.ops.Rollup.register(s, basePath, roll)
-      try {
-        val q = s.read.parquet(basePath)
-          .where(col("source") =!= "src0")
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum("n_chars").as("sum_chars"),
-            min("n_chars").as("min_chars"),
-            max("n_chars").as("max_chars"),
-            count(col("source")).as("n_sources"))
-        // contract-check the swap on the plan that will run
-        require(readsRollupPlan(q, roll),
-          "q_rollup_route did not route through the rollup")
-        // EXECUTE the routed plan while the registration is live and
-        // return its result as a local relation: the driver wraps the
-        // returned frame in a NEW QueryExecution (coalesce + write),
-        // which would re-optimize AFTER the finally-unregister and
-        // silently hash-compare the direct scan — proving nothing
-        // about the routed read. The collect is dim-cardinality-
-        // bounded (one row per lang, ≤ a handful) by construction.
-        s.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
-      } finally graft.ops.Rollup.unregister(s, basePath)
-    }),
-
-    // ---- engine: AVG routed from the rollup's stored sum+count pair -
-    // (VERDICT r12 #2: saveRollup always persists sum__m AND cnt__m,
-    // so Average re-aggregates exactly — the r12 exclusion was wrong).
-    // Routed result = exact long re-sum / count; the oracle aggregates
-    // the base, so the hash compare proves routed ≡ direct. Same
-    // register/execute/unregister discipline as q_rollup_route
-    "q_rollup_avg" -> ((s, dir) => {
-      graft.Graft.init(s)
-      val basePath = s"$dir/documents.parquet"
-      val roll = rollupFor(s, dir)
-      graft.ops.Rollup.register(s, basePath, roll)
-      try {
-        val q = s.read.parquet(basePath)
-          .groupBy("lang")
-          .agg(avg("n_chars").as("avg_chars"),
-            count(col("n_chars")).as("n_docs"),
-            sum("n_chars").as("sum_chars"))
-        require(readsRollupPlan(q, roll),
-          "q_rollup_avg did not route through the rollup")
-        s.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
-      } finally graft.ops.Rollup.unregister(s, basePath)
-    }),
-
-    // ---- engine: dim-EXPRESSION grouping routed (VERDICT r12 #5) ----
-    // GROUP BY upper(lang): any deterministic expression whose leaves
-    // are all rollup dims re-evaluates over the rollup's dim columns —
-    // coarser grouping re-aggregates exactly. PullOutGroupingExpressions
-    // has already rewritten the shape into a computed-column Project by
-    // the time the rule runs; the routed plan proves the alias-inlining
-    // path end-to-end
-    "q_rollup_expr" -> ((s, dir) => {
-      graft.Graft.init(s)
-      val basePath = s"$dir/documents.parquet"
-      val roll = rollupFor(s, dir)
-      graft.ops.Rollup.register(s, basePath, roll)
-      try {
-        val q = s.read.parquet(basePath)
-          .where(col("source") =!= "src0")
-          .groupBy(upper(col("lang")).as("lang_u"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum("n_chars").as("sum_chars"),
-            avg("n_chars").as("avg_chars"))
-        require(readsRollupPlan(q, roll),
-          "q_rollup_expr did not route through the rollup")
-        s.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
-      } finally graft.ops.Rollup.unregister(s, basePath)
-    }),
-
-    // ---- engine: COUNT(DISTINCT dim) + MIN/MAX over dim expressions --
-    // routed (VERDICT r13 #3): the rollup rows ARE the distinct dim
-    // combinations, so a distinct-dim count re-derives from them
-    // exactly, and f(dims) extrema re-derive because f is constant per
-    // combination; one routed aggregate mixes the distinct count with
-    // dim-expression extrema and a measure re-sum. Same
-    // register/plan-check/execute/unregister discipline as the family
-    "q_rollup_distinct" -> ((s, dir) => {
-      graft.Graft.init(s)
-      val basePath = s"$dir/documents.parquet"
-      val roll = rollupFor(s, dir)
-      graft.ops.Rollup.register(s, basePath, roll)
-      try {
-        val q = s.read.parquet(basePath)
-          .groupBy("lang")
-          .agg(countDistinct(col("source")).as("n_sources_d"),
-            min(upper(col("source"))).as("min_source_u"),
-            max(length(col("source"))).cast("long").as("max_source_len"),
-            sum("n_chars").as("sum_chars"),
-            count(lit(1)).as("n_docs"))
-        require(readsRollupPlan(q, roll),
-          "q_rollup_distinct did not route through the rollup")
-        s.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
-      } finally graft.ops.Rollup.unregister(s, basePath)
-    }),
-
-    // ---- engine: conditional counts / integral dim-expression SUM+AVG
-    // routed via the cnt-weighted re-sum (round 14): f(dims) is
-    // constant per combination, so sum(f) re-derives as sum(f * cnt) —
-    // the everyday dashboard shape sum(CASE WHEN dim.. THEN 1 END).
-    // Same register/plan-check/execute/unregister discipline
-    "q_rollup_condsum" -> ((s, dir) => {
-      graft.Graft.init(s)
-      val basePath = s"$dir/documents.parquet"
-      val roll = rollupFor(s, dir)
-      graft.ops.Rollup.register(s, basePath, roll)
-      try {
-        val q = s.read.parquet(basePath)
-          .groupBy("lang")
-          .agg(
-            sum(when(col("source") === "src0", 1L).otherwise(0L))
-              .as("n_src0"),
-            sum(length(col("source"))).cast("long").as("sum_srclen"),
-            avg(length(col("source"))).as("avg_srclen"),
-            count(lit(1)).as("n_docs"))
-        require(readsRollupPlan(q, roll),
-          "q_rollup_condsum did not route through the rollup")
-        s.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
-      } finally graft.ops.Rollup.unregister(s, basePath)
-    }),
-
-    // ---- engine: STAR-SCHEMA routing (round 15) ----------------------
-    // the single most common real dashboard shape: aggregate above
-    // fact JOIN dim_table ON fact.dim_key = dim.pk, grouped/filtered
-    // by dim-TABLE attributes. The router swaps ONLY the fact side for
-    // the rollup (the joined rollup is itself a valid rollup of the
-    // joined base — see RollupRouting's summary-preservation note);
-    // plan contract: rollup + dim table scanned, base NEVER. The
-    // oracle re-derives the dim table from documents in a CTE and
-    // aggregates the base join directly
-    "q_rollup_star" -> ((s, dir) => {
-      graft.Graft.init(s)
-      val basePath = s"$dir/documents.parquet"
-      val roll = rollupFor(s, dir)
-      val dim = s.read.parquet(starDimFor(s, dir))
-      graft.ops.Rollup.register(s, basePath, roll)
-      try {
-        val q = s.read.parquet(basePath)
-          .join(dim, col("source") === col("src"))
-          .where(col("tier") === "high")
-          .groupBy("tier", "lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum("n_chars").as("sum_chars"),
-            avg("n_chars").as("avg_chars"),
-            max("n_chars").as("max_chars"),
-            sum(col("src_len")).cast("long").as("sum_srclen"))
-        require(readsRollupPlan(q, roll),
-          "q_rollup_star did not route through the rollup")
-        require(!scansBasePlan(q, basePath),
-          "q_rollup_star must not scan the base corpus")
-        s.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
-      } finally graft.ops.Rollup.unregister(s, basePath)
-    }),
-
-    // ---- engine: SUM/AVG(DISTINCT dim expression) routed (round 15) --
-    // the last everyday aggregate shape: DISTINCT sums/averages over a
-    // dim expression re-derive from the rollup rows DIRECTLY (they are
-    // the distinct dim combinations — no weighting; multiplicity never
-    // matters to DISTINCT). One distinct set only, so the plan
-    // survives RewriteDistinctAggregates to the one-distinct physical
-    // path. Same register/plan-check/execute/unregister discipline
-    "q_rollup_sumdistinct" -> ((s, dir) => {
-      graft.Graft.init(s)
-      val basePath = s"$dir/documents.parquet"
-      val roll = rollupFor(s, dir)
-      graft.ops.Rollup.register(s, basePath, roll)
-      try {
-        val q = s.read.parquet(basePath)
-          .groupBy("lang")
-          .agg(
-            expr("sum(DISTINCT length(source))").cast("long")
-              .as("sum_srclen_d"),
-            expr("avg(DISTINCT length(source))").as("avg_srclen_d"),
-            expr("count(DISTINCT length(source))").as("n_srclen_d"),
-            sum("n_chars").as("sum_chars"),
-            count(lit(1)).as("n_docs"))
-        require(readsRollupPlan(q, roll),
-          "q_rollup_sumdistinct did not route through the rollup")
-        s.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
-      } finally graft.ops.Rollup.unregister(s, basePath)
-    }),
-
-    // ---- engine: INCREMENTAL rollup refresh (batch IVM) --------------
-    // the base (a private documents copy) grew by an appended slice
-    // after the rollup's build; Rollup.refresh re-aggregates ONLY the
-    // new files, merges the delta into the artifact, and re-registers —
-    // the routed read then matches the oracle, which aggregates
-    // documents ∪ the same slice directly. Repeat runs hit the
-    // no-new-files path (refresh returns 0) and still route
-    "q_rollup_refresh" -> ((s, dir) => {
-      graft.Graft.init(s)
-      val (bp, roll) = refreshFixtureFor(s, dir)
-      graft.ops.Rollup.refresh(s, bp, roll, register = true)
-      try {
-        val q = s.read.parquet(bp)
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum("n_chars").as("sum_chars"),
-            avg("n_chars").as("avg_chars"),
-            max("n_chars").as("max_chars"))
-        require(readsRollupPlan(q, roll),
-          "q_rollup_refresh did not route through the refreshed rollup")
-        s.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
-      } finally graft.ops.Rollup.unregister(s, bp)
-    }),
-
-    // ---- LLM: streaming decontamination gate (batch-parity surface) ---
-    // the stateless per-document admission check a continuously-fed
-    // corpus runs: distinct-8-gram hits against a broadcast eval set,
-    // one row per document either way (StreamOps.decontamGate — the
-    // same op drives a real stream in StreamingSpec; here the oracle
-    // replays the gram construction on the batch frame)
-    "q_decontam_gate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val evalSet = docs.where(col("doc_id") < 20)
-      val corpus = docs.where(col("doc_id") >= 20).unionByName(
-        evalSet.select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-      graft.streaming.StreamOps.decontamGate(corpus, evalSet)
-        .select(col("doc_id"), col("n_hits"), col("contaminated"))
-    }),
-
-    // ---- LLM: leakage-free train/eval split (composed pipeline) -------
-    // stable content-keyed 90/10 split, then 8-gram decontamination of
-    // the train side against the held-out eval side: a train doc
-    // sharing any 8-gram with eval is QUARANTINED, not shipped — the
-    // split you actually run before a training job. Composition of
-    // Sampling.stableSplit + TextOps.contaminatedIds, one disposition
-    // row per document
-    "q_train_eval_split" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val tagged = graft.ops.Sampling.stableSplit(docs, "text", 90)
-      val contaminated = TextOps.contaminatedIds(
-          tagged.where(col("split") === "train"),
-          tagged.where(col("split") === "test"), "doc_id", "text", 8)
-        .select(col("doc_id"), lit(true).as("contam"))
-      tagged.join(contaminated, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("split") === "test", "eval")
-            .when(col("contam").isNotNull, "quarantined")
-            .otherwise("train").as("disposition"))
-    }),
-
-    // ---- LLM: blocklist policy filter ---------------------------------
-    // banned-phrase annotation: the term table broadcasts as one sorted
-    // array and matching is a per-row codegen'd array filter — no
-    // shuffle, linear in corpus size
-    "q_blocklist" -> ((s, dir) => {
-      import s.implicits._
-      val terms = Seq("slow scan", "big table", "hash merge",
-        "stream batch", "forbidden phrase").toDF("term")
-      TextOps.blocklist(t(s, dir, "documents"), terms)
-    }),
-
-    // the same policy filter through the Aho-Corasick automaton — the
-    // documented scale path when the blocklist outgrows the per-term
-    // contains scan; same output columns, same oracle, one text pass
-    // per document regardless of term count
-    "q_blocklist_ac" -> ((s, dir) => {
-      import s.implicits._
-      val terms = Seq("slow scan", "big table", "hash merge",
-        "stream batch", "forbidden phrase").toDF("term")
-      TextOps.blocklistAC(t(s, dir, "documents"), terms)
-    }),
-
-    // ---- LLM: vocabulary extraction (token -> tf / doc frequency) -----
-    // top slice by (tf desc, token) for a deterministic result set
-    "q_vocab" -> ((s, dir) =>
-      TextOps.vocabulary(t(s, dir, "documents"))
-        .orderBy(col("tf").desc, col("token")).limit(100)),
-
-    // ---- LLM: count-min sketch point frequencies ----------------------
-    // the sketch-infrastructure trio's third leg (HLL distinct, MG
-    // top-k, CMS any-key frequency): token counts estimated from a
-    // 4x1024 cell table, probed for the exact top-20 — one-sided
-    // guarantee est >= exact pinned in the output. All-BIGINT on md5
-    // cells, so the oracle restates it without float concerns
-    "q_cms_freq" -> ((s, dir) => {
-      val toks = t(s, dir, "documents").select(
-        explode(TextOps.words(lower(col("text")))).as("token"))
-      val sk = graft.ops.Freq.cmsSketch(toks, "token", 1024, 4)
-      val top = toks.groupBy(col("token")).agg(count(lit(1)).as("exact_n"))
-        .orderBy(col("exact_n").desc, col("token")).limit(20)
-      graft.ops.Freq.cmsEstimate(sk, top.select(col("token")),
-          "token", 1024, 4)
-        .join(top, Seq("token"))
-        .select(col("token"), col("exact_n"), col("est").as("est_n"),
-          (col("est") >= col("exact_n")).as("bounded"))
-    }),
-
-    // ---- LLM: CMS join-size preflight ---------------------------------
-    // the inner-product estimator: price |orders ⋈ customer| from two
-    // 4x1024 sketches — the sketch-based sibling of q_join_preflight's
-    // exact key-domain costing; one-sided (est >= truth), all BIGINT
-    "q_cms_join_size" -> ((s, dir) => {
-      val est = graft.ops.Freq.cmsJoinSize(
-        graft.ops.Freq.cmsSketch(t(s, dir, "orders")
-          .select(col("o_custkey").as("v")), "v", 1024, 4),
-        graft.ops.Freq.cmsSketch(t(s, dir, "customer")
-          .select(col("c_custkey").as("v")), "v", 1024, 4))
-      val exact = t(s, dir, "orders")
-        .join(t(s, dir, "customer"),
-          col("o_custkey") === col("c_custkey"))
-        .agg(count(lit(1)).as("exact_join_rows"))
-      est.crossJoin(exact)
-        .withColumn("bounded",
-          col("est_join_rows") >= col("exact_join_rows"))
-    }),
-
-    // ---- LLM: Zipf's-law fit (corpus-health power-law exponent) -------
-    // OLS of ln(tf) on ln(rank) over the top-1000 tokens: natural text
-    // sits near slope -1, templated corpora flatten. Quantized logs +
-    // DECIMAL moment sums make the fitted doubles engine-exact
-    "q_zipf_fit" -> ((s, dir) =>
-      graft.ops.Freq.zipfFit(
-        TextOps.vocabulary(t(s, dir, "documents"))
-          .select(col("token"), col("tf")),
-        "token", "tf", 1000)),
-
-    // ---- LLM: per-source Zipf fit (templated-source triage) -----------
-    // one slope per source from a group-KEYED rank window — no
-    // single-partition stage anywhere, fully parallel at any source count
-    "q_zipf_by_source" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val counts = docs.select(col("source"),
-          explode(TextOps.words(lower(col("text")))).as("token"))
-        .groupBy(col("source"), col("token"))
-        .agg(count(lit(1)).as("tf"))
-      graft.ops.Freq.zipfFitBy(counts, "source", "token", "tf", 500)
-    }),
-
-    // ---- LLM: Heaps'-law fit (vocabulary growth exponent) -------------
-    // V(n) ~ K n^beta over the corpus in doc order: one exact-integer
-    // point per document, same quantized OLS as the Zipf fit
-    "q_heaps_fit" -> ((s, dir) =>
-      graft.ops.Freq.heapsFit(t(s, dir, "documents"))),
-
-    // ---- LLM: per-source Heaps fit (duplicate-heavy-source triage) ----
-    // one vocabulary-growth exponent per source, every window keyed on
-    // the source — the grouped twin of q_heaps_fit
-    "q_heaps_by_source" -> ((s, dir) =>
-      graft.ops.Freq.heapsFitBy(t(s, dir, "documents"), "source")),
-
-    // ---- LLM: BPE tokenizer training (iterative pair merges) ----------
-    // the first learned merge rule is SQL-expressible (one weighted
-    // adjacent-character-pair count over the word-frequency table +
-    // deterministic argmax), so it carries the oracle; the multi-merge
-    // path is pinned by q_bpe_merges (rows-only, double-run determinism)
-    // and TextOpsSpec's reference-implementation comparison
-    "q_bpe_first" -> ((s, dir) =>
-      TextOps.bpeMerges(t(s, dir, "documents"), numMerges = 1)),
-
-    "q_bpe_merges" -> ((s, dir) =>
-      TextOps.bpeMerges(t(s, dir, "documents"), numMerges = 8)),
-
-    // apply half of the tokenizer: train 8 rules, replay them over the
-    // corpus. The token array is emitted as a '|'-joined scalar plus its
-    // length — an array<string> column crashes the driver comparator's
-    // pandas sort (CORRECTNESS_r06: "unhashable type: numpy.ndarray"),
-    // and the joined form carries strictly the same information. The
-    // DuckDB oracle replays training AND encoding (bpeOracleCtes).
-    "q_bpe_encode" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = TextOps.bpeMerges(docs, numMerges = 8)
-        .orderBy("merge_rank").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      // production path: the single codegen'd bpe_encode expression
-      // (fold-equivalence pinned in TextOpsSpec; the oracle below replays
-      // training+encode independently in DuckDB, so this row verifies the
-      // expression end-to-end)
-      graft.Graft.init(s)
-      TextOps.bpeEncodeFast(docs, merges)
-        .select(col("doc_id"),
-          array_join(col("tokens"), "|").as("tokens_joined"),
-          col("n_tokens"))
-    }),
-
-    // ---- LLM: unigram-LM (SentencePiece-style) Viterbi encode ----------
-    // the second production subword family next to BPE: segmentation
-    // maximizes summed integer micro-log-probs (ties: fewer tokens, then
-    // UTF-8-lex token sequence), so the DuckDB oracle can replay the DP
-    // EXACTLY as unrolled per-position stages. The vocabulary here is
-    // PLANTED (shared verbatim with the oracle): it exercises a
-    // whole-word piece beating its bigrams ('scan'), an engineered
-    // exact-score tie ('abcd': [ab,cd] vs [abc,d], lex pick), and <unk>
-    // on characters outside the inventory ('zx'). Training itself is
-    // driver-side (unigramPieces — the bpeMerges collect contract) and
-    // is pinned by TextOpsSpec's brute-force Viterbi parity instead of
-    // an oracle (soft scores from ln() would put floats inside the DP
-    // on the SQL side; the planted-vocab DP keeps the oracle integer).
-    "q_unigram_encode" -> ((s, dir) => {
-      import s.implicits._
-      val planted = Seq(
-        (300001L, "scanjoin thequery zx"),
-        (300002L, "abcd scan order"),
-        (300003L, "customer merge vector tablesort"))
-        .toDF("doc_id", "text")
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .where(col("text").isNotNull && trim(col("text")) =!= "")
-        .unionByName(planted)
-      graft.Graft.init(s)
-      TextOps.unigramEncodeFast(docs, unigramVocab, "doc_id", "text")
-        .select(col("doc_id"),
-          array_join(col("tokens"), "|").as("tokens_joined"),
-          col("n_tokens"))
-    }),
-
-    // ---- LLM: unigram LM quality score (model-based filter slot) ------
-    // per-doc mean token log-prob under the corpus's own unigram model;
-    // log-probs quantized to 1e-6 and folded in token order so both
-    // engines produce the identical double (TextOps.lmScore)
-    "q_lm_score" -> ((s, dir) =>
-      TextOps.lmScore(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_tokens"), col("mean_logp"))),
-
-    // ---- LLM: TF-IDF top-5 keywords per document ----------------------
-    // idf quantized to 1e-6 before the single tf·idf multiply (lmScore
-    // determinism contract); ties break on token ascending
-    "q_tfidf" -> ((s, dir) =>
-      TextOps.tfidfTopTerms(t(s, dir, "documents"), k = 5)),
-
-    // ---- LLM: bigram LM score with stupid backoff (CCNet-style --------
-    // perplexity filter): position 1 scores ln(c(w1)/T), later positions
-    // ln(cb/c1) for seen bigrams else ln(0.4*c(w)/T); every log-prob
-    // quantized to integer micros and BIGINT-summed (TextOps.bigramLmScore)
-    "q_bigram_lm" -> ((s, dir) =>
-      TextOps.bigramLmScore(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_tokens"), col("mean_logp"))),
-
-    // ---- LLM: bigram LM scored against a SEPARATE model corpus --------
-    // (the real CCNet shape: train on the reference slice, score
-    // everything) — model = the src0 slice only, so unseen bigrams take
-    // the 0.4-weighted unigram backoff and model-OOV words the count
-    // floor of 1; quantization contract identical to q_bigram_lm
-    "q_bigram_lm_oov" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      TextOps.bigramLmScore(docs,
-          model = docs.where(col("source") === "src0"))
-        .select(col("doc_id"), col("n_tokens"), col("mean_logp"))
-    }),
-
-    // ---- LLM: hard-negative mining (contrastive training data) --------
-    // per anchor (ids 0..4), the 3 most-similar corpus vectors BELOW
-    // the 0.95 near-dup ceiling: the planted exact copies (+100000, 2x
-    // scaled — cosine 1.0) and the anchor itself are excluded by the
-    // ceiling alone, so the winners are the top NATURAL neighbors —
-    // informative negatives, not disguised positives
-    "q_hard_negatives" -> ((s, dir) => {
-      Graft.init(s)
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val planted = emb.where(col("vec_id") < 50)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("embedding"), x => (x * lit(2.0f)).cast("float"))
-            .as("embedding"))
-      val anchors = emb.where(col("vec_id") < 5)
-        .select(col("vec_id").as("anchor_id"), col("embedding").as("avec"))
-      Similarity.hardNegatives(emb.unionByName(planted), "vec_id",
-        "embedding", anchors, "anchor_id", "avec", k = 3, dupCeiling = 0.95)
-    }),
-
-    // ---- LLM: CCNet perplexity buckets (head / middle / tail) ----------
-    // per-language ntile(3) over the bigram-LM score (q_bigram_lm's
-    // exact construction): head = most-fluent third under the corpus's
-    // own LM — the CCNet bucketing that decides what gets kept,
-    // LM-filtered, or dropped; ordering is total (mean_logp, doc_id)
-    "q_ccnet_buckets" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val scored = TextOps.bigramLmScore(docs)
-        .select(col("doc_id"), col("mean_logp"))
-      val w = Window.partitionBy(col("lang"))
-        .orderBy(col("mean_logp").desc, col("doc_id"))
-      docs.select(col("doc_id"), col("lang")).join(scored, Seq("doc_id"))
-        .withColumn("nt", ntile(3).over(w))
-        .select(col("doc_id"), col("lang"),
-          when(col("nt") === 1, "head").when(col("nt") === 2, "middle")
-            .otherwise("tail").as("bucket"))
-    }),
-
-    // ---- LLM: trained linear quality classifier (fastText-style) ------
-    // full-batch GD inside the engine: 5 rounds of one corpus-wide
-    // aggregate each (gradients sum in exact micros), rational sigmoid
-    // (no libm), then a pure per-row scoring pass; label = lang == 'en',
-    // features = capped length, capped token count, stopword ratio
-    // (ops/Classifier.train/score — oracle replays all 5 rounds)
-    "q_quality_classifier" -> ((s, dir) => {
-      Graft.init(s)
-      val docs = t(s, dir, "documents")
-      // word + stopword counts in one fused byte scan (the interpreted
-      // split + filter(isin) lambda ran on every GD pass); counts are
-      // exact byte-compares, so features are bit-identical to the
-      // split/size/filter formulation the oracle replays
-      val st = graft.functions.TextExprs.wordStopStats(
-        trim(lower(col("text"))), Seq("the", "a", "and", "of", "to"))
-      val nWords = st.getField("n_words")
-      val feats = Seq(
-        least(col("n_chars"), lit(2000L)).cast("double") / lit(2000.0),
-        least(nWords, lit(400)).cast("double") / lit(400.0),
-        st.getField("n_stop").cast("double")
-          / greatest(nWords, lit(1)).cast("double"))
-      val y = when(col("lang") === "en", lit(1.0)).otherwise(lit(0.0))
-      val model = graft.ops.Classifier.train(docs, feats, y,
-        iterations = 5, lr = 1.0)
-      graft.ops.Classifier.score(docs, feats, model)
-        .select(col("doc_id"), col("score"), col("pred"))
-    }),
-
-    // ---- LLM: DSIR importance resampling (Xie et al. 2023) ------------
-    // hashed unigram+bigram bucket distributions (1024 md5 buckets,
-    // add-one smoothing): target = the English slice, raw = the whole
-    // corpus; every raw doc scored by its exact-integer-summed log
-    // importance ratio, top-100 kept (Sampling.importanceResample)
-    "q_dsir" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ops.Sampling.importanceResample(docs,
-        docs.where(col("lang") === "en"), nBuckets = 1024, k = 100)
-    }),
-
-    // ---- LLM: BM25 keyword retrieval (top-10 docs per query) ----------
-    // three fixed keyword queries over the documents corpus; idf
-    // quantized to 1e-6, per-term contributions quantized to integer
-    // micros and BIGINT-summed (exact), ties break on doc_id — the
-    // score is bit-identical on any engine (ops/Retrieval.bm25TopK)
-    "q_bm25" -> ((s, dir) => {
-      import s.implicits._
-      val qs = Seq(
-        (1L, "vector hash join"), (2L, "slow scan filter"),
-        (3L, "customer order stream")).toDF("query_id", "qtext")
-      graft.ops.Retrieval.bm25TopK(t(s, dir, "documents"), qs, k = 10)
-    }),
-
-    // ---- scale mechanics: IVM for NON-invertible aggregates -----------
-    // maintained per-type (count, min, max) under the same change log:
-    // deletes can't be subtracted from a min, so affected groups
-    // recompute from the merged snapshot while untouched groups pass
-    // through from the materialized aggregate (ops/Cdc.incrementalMinMax)
-    "q_incr_minmax" -> ((s, dir) => {
-      val cutoff = 1704672000000000L
-      val ch = eventsUsLong(s, dir)
-        .select(col("user_id"), col("event_type"), col("value"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("ts_us"), col("event_id"))
-      val before = graft.ops.Cdc
-        .latestPerKey(ch.where(col("ts_us") < cutoff),
-          Seq("user_id"), Seq("ts_us", "event_id"))
-        .where(col("op") =!= "D")
-        .select(col("user_id"), col("event_type"), col("value"))
-      val baseAgg = before.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), min(col("value")).as("lo"),
-          max(col("value")).as("hi"))
-      graft.ops.Cdc.incrementalMinMax(before, baseAgg,
-        ch.where(col("ts_us") >= cutoff),
-        Seq("user_id"), "event_type", "value", Seq("ts_us", "event_id"))
-    }),
-
-    // ---- extension: weighted exact percentiles ------------------------
-    // price percentiles weighted by units shipped, per return flag —
-    // the pre-aggregated-data form of the integer-CDF order statistic
-    // (ops/Profile.exactPercentilesWeighted); l_quantity is integral
-    "q_weighted_percentiles" -> ((s, dir) =>
-      graft.ops.Profile.exactPercentilesWeighted(t(s, dir, "lineitem"),
-        "l_returnflag", "l_extendedprice", "l_quantity", Seq(50, 95))),
-
-    // ---- extension: winsorized robust mean ----------------------------
-    // per-event-type mean of value clamped into its exact-CDF p5/p95
-    // band — integer end to end, two final IEEE divides
-    // (ops/Profile.winsorizedMean)
-    "q_winsorized_mean" -> ((s, dir) =>
-      graft.ops.Profile.winsorizedMean(t(s, dir, "events"),
-        "event_type", "value")),
-
-    // ---- extension: robust outliers via median/MAD --------------------
-    // per-event-type count of values with |x - median| * 10 > 30 * MAD:
-    // two integer-CDF median picks + one exact BIGINT inequality, no
-    // float anywhere (ops/Profile.madOutliers)
-    "q_mad_outliers" -> ((s, dir) =>
-      graft.ops.Profile.madOutliers(t(s, dir, "events"),
-        "event_type", "value", kTenths = 30)),
-
-    // ---- extension: diversity-balanced embedding sample ---------------
-    // at most 4 vectors per sign-orthant of the first 6 embedding dims
-    // (axis-aligned LSH — sign tests on stored values, zero float
-    // arithmetic, so the whole selection replays in SQL), md5(id:seed)
-    // priority within a bucket (ops/Sampling.diverseSample)
-    "q_diverse_sample" -> ((s, dir) =>
-      graft.ops.Sampling.diverseSample(t(s, dir, "embeddings"),
-        "vec_id", "embedding", signDims = 6, perBucket = 4)),
-
-    // ---- extension: exact per-group percentiles (no interpolation) ----
-    // p25/p50/p75/p90 of value per event type as LOWER order statistics
-    // at rank ceil(n*p/100) over the integer CDF — actual data values,
-    // no float seam on either engine (ops/Profile.exactPercentiles)
-    "q_group_percentiles" -> ((s, dir) =>
-      graft.ops.Profile.exactPercentiles(t(s, dir, "events"),
-        "event_type", "value", Seq(25, 50, 75, 90))),
-
-    // ---- extension: per-row DQ annotation (the gate form) -------------
-    // every event annotated with the rules it fails, '|'-joined in
-    // declaration order, '' = clean (ops/Dq.annotate — the same
-    // expression the streaming dqGate runs per micro-batch; pure
-    // per-row codegen, pipelines in the scan)
-    "q_dq_annotate" -> ((s, dir) => {
-      graft.ops.Dq.annotate(eventsUsLong(s, dir),
-          Seq(
-            "value_range" -> (col("value") < 0.0 || col("value") > 400.0),
-            "type_domain" -> !col("event_type").isin(
-              "click", "view", "purchase", "signup"),
-            "user_known" -> (col("user_id") >= 100)))
-        .select(col("event_id"), col("violations"))
-    }),
-
-    // ---- extension: equi-depth (quantile) histogram -------------------
-    // 20 ~equal-population buckets over l_extendedprice WITHOUT
-    // quantile interpolation: bins from an exact integer CDF over the
-    // distinct cent-value domain (ops/Profile.histogramEqDepth) — every
-    // output column integer-derived, nothing for engines to round
-    "q_histogram_eqdepth" -> ((s, dir) =>
-      graft.ops.Profile.histogramEqDepth(
-        t(s, dir, "lineitem"), "l_extendedprice", nBins = 20)),
-
-    // ---- extension: data-quality expectations report ------------------
-    // five named rules over lineitem in three passes TOTAL: all row
-    // rules (null / range / domain) fold into ONE full-scan aggregate,
-    // the uniqueness rule is one keyed agg (and FIRES on this data —
-    // (l_orderkey, l_linenumber) is not unique in the fixture), the
-    // FK rule is one anti join (ops/Dq.report)
-    "q_dq_checks" -> ((s, dir) => {
-      graft.ops.Dq.report(t(s, dir, "lineitem"),
-        rowRules = Seq(
-          "not_null:l_orderkey" -> col("l_orderkey").isNull,
-          "range:l_quantity:1-45" ->
-            (col("l_quantity") < 1.0 || col("l_quantity") > 45.0),
-          "range:l_discount:0-0.08" ->
-            (col("l_discount") < 0.0 || col("l_discount") > 0.08),
-          "domain:l_returnflag" ->
-            !col("l_returnflag").isin("A", "N", "R")),
-        uniqueRules = Seq(graft.ops.Dq.UniqueRule(
-          "unique:l_orderkey+l_linenumber",
-          Seq("l_orderkey", "l_linenumber"))),
-        refRules = Seq(graft.ops.Dq.RefRule(
-          "ref:l_orderkey->orders", Seq("l_orderkey"),
-          t(s, dir, "orders"), Seq("o_orderkey"))))
-    }),
-
-    // ---- extension: planar radius self-join (spatial blocking) --------
-    // all customer-point pairs within 2e6 micro-degrees: home-cell vs
-    // exploded 3x3 neighborhood equi-join, exact BIGINT squared metric
-    // (ops/Geo.radiusPairs — never a cross join). Points are md5-derived
-    // micro-degree coordinates, reproduced coordinate-for-coordinate by
-    // the oracle's brute-force quadratic
-    "q_geo_radius" -> ((s, dir) => {
-      graft.ops.Geo.radiusPairs(geoPoints(s, dir), "pid", "x", "y",
-        2000000L)
-    }),
-
-    // ---- extension: nearest-neighbor-within-radius (closest store) ----
-    // rank-1 neighbor per anchor over the radius pairs, both
-    // orientations ranked, ties on (dist2, neighbor id)
-    "q_geo_nearest" -> ((s, dir) => {
-      graft.ops.Geo.nearestWithin(geoPoints(s, dir), "pid", "x", "y",
-        5000000L)
-    }),
-
-    // ---- LLM: exact phrase search (quoted-query primitive) ------------
-    // docs containing each phrase as CONSECUTIVE tokens: map-side
-    // bigram candidates against the broadcast phrase bigrams, then an
-    // exact substring confirm over candidate docs only (ops/Retrieval
-    // .phraseSearch). The oracle skips the pruning and states the
-    // final semantics directly — proving the index loses nothing
-    "q_phrase_search" -> ((s, dir) => {
-      import s.implicits._
-      val ps = Seq(
-        (1L, "hash join"), (2L, "slow scan"),
-        (3L, "customer order stream")).toDF("query_id", "phrase")
-      graft.ops.Retrieval.phraseSearch(t(s, dir, "documents"), ps)
-    }),
-
-    // ---- LLM: boolean AND retrieval (exact conjunctive match set) -----
-    // the docs containing EVERY term of each query: corpus explodes to
-    // distinct (doc, term), broadcast query-term join kills non-query
-    // terms map-side, conjunction = matched-count == distinct-term
-    // count (ops/Retrieval.booleanSearch). The 4-term query and the
-    // query with a term the corpus lacks pin both pruning directions
-    "q_bool_search" -> ((s, dir) => {
-      import s.implicits._
-      val qs = Seq(
-        (1L, "vector hash join"), (2L, "merge stream window filter"),
-        (3L, "customer zzz-absent-term")).toDF("query_id", "qtext")
-      graft.ops.Retrieval.booleanSearch(t(s, dir, "documents"), qs)
-    }),
-
-    // ---- LLM: source vocabulary overlap matrix ------------------------
-    // pairwise distinct-term Jaccard between the 20 fixture sources —
-    // term-keyed pair join bounded by |vocab| x C(20,2), exact micros
-    // (ops/TextOps.sourceOverlap)
-    "q_source_overlap" -> ((s, dir) =>
-      TextOps.sourceOverlap(t(s, dir, "documents"), "source")),
-
-    // ---- LLM: distinctive vocabulary between corpus slices ------------
-    // Fightin'-Words log-odds z with add-one prior: which terms mark the
-    // en slice against the rest — quantized lns, exact BIGINT counts,
-    // top-40 by (z desc, term) (ops/TextOps.distinctiveTerms)
-    "q_distinctive_terms" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      TextOps.distinctiveTerms(docs.where(col("lang") === "en"),
-        docs.where(col("lang") =!= "en"), k = 40)
-    }),
-
-    // ---- LLM: persisted inverted index -> bucket-pruned search --------
-    // build the bucketed postings index (parquet partitionBy on
-    // crc32(term) % 64), then run conjunctive search THROUGH the index:
-    // only the query terms' partition directories are read (pruning
-    // pinned in RetrievalSpec). The oracle states boolean-search
-    // semantics with NO index — an index that loses a posting fails the
-    // hash (ops/Retrieval.buildIndex/searchIndex)
-    "q_index_search" -> ((s, dir) => {
-      val tmp = scratchDir("graft-invidx-q").toString
-      graft.ops.Retrieval.buildIndex(t(s, dir, "documents"), tmp)
-      graft.ops.Retrieval.searchIndex(s, tmp, Map(
-        1L -> "vector hash join", 2L -> "merge stream window filter",
-        3L -> "customer zzz-absent-term"))
-    }),
-
-    // ---- quality: PSI drift report (distribution-shift monitor) -------
-    // per-bin Population Stability Index of the purchase slice vs all
-    // other event types over value in [0, 500), 20 bins; quantized ln
-    "q_drift_psi" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      graft.ops.Profile.driftReport(
-        e.where(col("event_type") =!= "purchase"),
-        e.where(col("event_type") === "purchase"),
-        "value", nBins = 20, lo = 0.0, hi = 500.0)
-    }),
-
-    // ---- LLM: exact repeated-substring spans (suffix-array-style ------
-    // dedup, Lee et al. 2022): maximal shared token spans >= 8 across
-    // doc pairs, anchored on md5 shingles with a df<=64 guard; two
-    // planted partial-overlap pairs (ids >= 100000) give closed-form
-    // truths (12-token block at offsets 1/3; 8-token block at 1/2)
-    "q_repeated_spans" -> ((s, dir) => {
-      import s.implicits._
-      val planted = Seq(
-        (100001L, s"$spanBlock12 tail1 tail2"),
-        (100002L, s"lead1 lead2 $spanBlock12"),
-        (100003L, s"$spanBlock8 end1"),
-        (100004L, s"pre1 $spanBlock8")).toDF("doc_id", "text")
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .unionByName(planted)
-      Dedup.repeatedSpans(docs, "doc_id", "text",
-        minLen = 8, maxShingleDf = 64)
-    }),
-
-    // ---- LLM: duplicated-content fraction per document ----------------
-    // the actionable composition over q_repeated_spans: coverage-merged
-    // duplicated token intervals / nTokens, on the same planted corpus
-    "q_dup_fraction" -> ((s, dir) => {
-      import s.implicits._
-      val planted = Seq(
-        (100001L, s"$spanBlock12 tail1 tail2"),
-        (100002L, s"lead1 lead2 $spanBlock12"),
-        (100003L, s"$spanBlock8 end1"),
-        (100004L, s"pre1 $spanBlock8")).toDF("doc_id", "text")
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .unionByName(planted)
-      Dedup.duplicatedTokenStats(docs, "doc_id", "text",
-        minLen = 8, maxShingleDf = 64)
-    }),
-
-    // ---- LLM: corpus-global exact-substring dedup (REWRITE) ------------
-    // the Lee et al. curation op itself: every duplicated >= 8-token
-    // window excised from all but its globally-first occurrence, text
-    // emitted rewritten; planted docs give closed-form truths (200002
-    // loses the 12-block, 200003 loses its WITHIN-doc second 8-block,
-    // 200001 keeps everything as the first occurrence)
-    "q_substring_dedup" -> ((s, dir) => {
-      import s.implicits._
-      val planted = Seq(
-        (200001L, s"$spanBlock12 tail1 tail2"),
-        (200002L, s"lead1 lead2 $spanBlock12"),
-        (200003L, s"solo1 $spanBlock8 mid1 $spanBlock8 solo2"))
-        .toDF("doc_id", "text")
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .unionByName(planted)
-      Dedup.exactSubstringDedup(docs, "doc_id", "text", minLen = 8)
-    }),
-
-    // ---- LLM: incremental substring dedup vs a persisted gram index ---
-    // the ingest form: the standing corpus (doc_id >= 20, plus a planted
-    // doc holding the 8-block) is indexed ONCE (distinct gram hashes,
-    // bucket-partitioned parquet); the batch (doc_id < 20 + planted)
-    // rewrites against it — corpus grams always win (400101 loses its
-    // copy even though it is the batch's first), batch-internal repeats
-    // keep their first occurrence (400102), untouched docs pass through
-    "q_substring_dedup_indexed" -> ((s, dir) => {
-      import s.implicits._
-      graft.Graft.init(s)
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = d.where(col("doc_id") >= 20)
-        .unionByName(Seq((400001L, s"$spanBlock8 corpustail"))
-          .toDF("doc_id", "text"))
-      val batch = d.where(col("doc_id") < 20)
-        .unionByName(Seq(
-          (400101L, s"batchlead $spanBlock8 batchtail"),
-          (400102L, s"x1 $spanBlock12 mid $spanBlock12 x2"),
-          (400103L, "totally fresh words nothing shared here at all ok"))
-          .toDF("doc_id", "text"))
-      // the standing index is a persisted artifact by design — built
-      // ONCE per (corpus, JVM) and reused, so the bench's repeat runs
-      // measure the PROBE path (what an ingest batch actually pays),
-      // not a per-measurement rebuild of the corpus release artifact
-      val tmp = gramIdxCache.getOrElseUpdate(dir, {
-        val p = scratchDir("graft-gramidx-q").toString
-        Dedup.saveGramIndex(corpus, p, "text", minLen = 8, buckets = 64)
-        p
-      })
-      Dedup.exciseAgainstIndex(batch, tmp, "doc_id", "text", minLen = 8)
-    }),
-
-    // ---- LLM: PMI collocations (phrase mining, word2phrase step) ------
-    // top-20 bigrams by pointwise mutual information among those seen
-    // >= 5 times; ln quantized to 1e-6, ties break on the bigram string
-    "q_collocations" -> ((s, dir) =>
-      TextOps.collocations(t(s, dir, "documents"), minCount = 5, k = 20)),
-
-    // ---- semi-structured: JSON property extraction + rollup -----------
-    // the raw-log ingestion shape: pull a typed field out of a JSON
-    // payload column (codegen'd get_json_object — no UDF, no parse to an
-    // intermediate struct) and aggregate it; map-side extraction
-    // pipelines inside the scan stage, one event_type-keyed shuffle
-    "q_json_props" -> ((s, dir) => {
-      val k = get_json_object(col("props"), "$.k").cast("long")
-      t(s, dir, "events")
-        .select(col("event_type"), k.as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-    }),
-
-    // ---- LLM: int8 quantization error bounds (all-double mirror) ------
-    // the oracle recomputes quantize→dequantize in DOUBLE arithmetic on
-    // both engines (float→double casts are exact, round() ties-away on
-    // both), pinning scale and the max reconstruction error per vector
-    "q_embed_quant" -> ((s, dir) => {
-      val v = col("embedding")
-      val scale = array_max(transform(v, x => abs(x.cast("double")))) / lit(127d)
-      val deq = transform(v, x => round(x.cast("double") / scale) * scale)
-      val err = array_max(zip_with(v, deq,
-        (x, d) => abs(x.cast("double") - d)))
-      t(s, dir, "embeddings").select(col("vec_id"),
-        round(scale, 6).as("scale"), round(err, 6).as("max_err"))
-    }),
-
-    // ---- LLM: JL random projection (embedding storage reduction) ------
-    // 64 floats -> 16 exact BIGINT components via the md5-derived ±1
-    // sign matrix (Similarity.randomProject); the oracle rebuilds the
-    // matrix from the same md5 formula and replays the integer algebra,
-    // so the row is bit-exact by construction. Joined to a sortable
-    // scalar for the comparator (the dedupLines pattern).
-    "q_random_project" -> ((s, dir) =>
-      Similarity.randomProject(t(s, dir, "embeddings"),
-          "vec_id", "embedding", inDim = 64, outDim = 16)
-        .select(col("vec_id"),
-          array_join(col("proj"), "|").as("proj_joined"))),
-
-    // ---- LLM: tokenization against a top-1000 vocabulary --------------
-    // tokens outside the top-1000 (by tf, token-tiebroken) map to -1
-    // (OOV); output is scalar columns only (ids as a joined string — the
-    // driver comparator can't hash array cells)
-    "q_tokenize" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val vocab = TextOps.vocabulary(docs)
-        .orderBy(col("tf").desc, col("token")).limit(1000)
-      TextOps.tokenizeWithVocab(docs, vocab)
-        .select(col("doc_id"),
-          size(col("token_ids")).cast("long").as("n_ids"),
-          size(filter(col("token_ids"), i => i === -1)).cast("long").as("n_oov"),
-          array_join(transform(col("token_ids"), _.cast("string")), " ")
-            .as("ids_str"))
-    }),
-
-    // ---- LLM: embedding L2 norms (codegen'd self-dot, map-only) -------
-    "q_embed_norm" -> ((s, dir) => {
-      Graft.init(s)
-      t(s, dir, "embeddings").select(col("vec_id"),
-        round(sqrt(graft.functions.VectorExprs.dot(col("embedding"),
-          col("embedding"))), 4).as("l2_norm"))
-    }),
-
-    // ---- LLM: cosine scoring against a query vector (exact, codegen'd) -
-    "q_ann_cosine" -> ((s, dir) => {
-      Graft.init(s)
-      val emb = t(s, dir, "embeddings")
-      val q = queryVec(emb)
-      emb.where(col("vec_id") < 200)
-        .select(col("vec_id"),
-          round(graft.functions.VectorExprs.cosineSim(col("embedding"),
-            typedLit(q)), 4).as("cosine"))
-    }),
-
-    // ---- LLM: brute-force exact top-k ANN -----------------------------
-    "q_ann_topk" -> ((s, dir) => {
-      Graft.init(s)
-      val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(emb, "vec_id", "embedding", queryVec(emb), 10)
-        .select(col("vec_id"), round(col("cosine"), 4).as("cosine"))
-    }),
-
-    // ---- LLM: LSH-bucketed approximate top-k ANN (the scale path) -----
-    // Planted-truth oracle (VERDICT r3 ask #3, pattern of
-    // q_cosine_neardups): EXACT copies of the probe vector are planted at
-    // ids 100000..100009. An identical vector has identical hyperplane
-    // sign bits, so every planted copy lands in each of the probe's exact
-    // buckets — recall is guaranteed, not probabilistic. 11 vectors then
-    // score cosine 1.0 (the probe itself + 10 copies) and no natural
-    // vector reaches 1.0 (max natural pairwise cosine in the fixture is
-    // ~0.51), so top-10 by (cosine desc, id asc) is closed-form:
-    // vec_id 0, then 100000..100008.
-    "q_ann_lsh" -> ((s, dir) => {
-      Graft.init(s)
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val q = queryVec(emb)
-      val planted = emb.where(col("vec_id") < 10)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          typedLit(q).as("embedding"))
-      Similarity.lshTopK(emb.unionByName(planted), "vec_id", "embedding", q, 10)
-        .select(col("vec_id"), round(col("cosine"), 4).as("cosine"))
-    }),
-
-    // ---- LLM: IVF ANN (k-means coarse quantizer + probe-limited scan) -
-    // Routed through the PERSISTENT index lifecycle (Ivf.index -> save
-    // partitioned-by-cluster -> load -> probe), so the verified path is
-    // the one a real user runs and the probe partition-prunes instead of
-    // recomputing assignments (VERDICT r3 ask #2). Same planted-truth
-    // oracle as q_ann_lsh: identical copies share the probe's cluster by
-    // construction (identical argmax input), recall is guaranteed, and
-    // the top-10 is the same closed form.
-    "q_ann_ivf" -> ((s, dir) => {
-      Graft.init(s)
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val q = queryVec(emb)
-      val planted = emb.where(col("vec_id") < 10)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          typedLit(q).as("embedding"))
-      val tmp = scratchDir("graft-ivf-q").toString
-      Ivf.save(Ivf.index(emb.unionByName(planted), "vec_id", "embedding"), tmp)
-      Ivf.probe(Ivf.load(s, tmp), q, 10)
-        .select(col("vec_id"), round(col("cosine"), 4).as("cosine"))
-    }),
-
-    // ---- LLM: embedding near-dup pairs (banded sign-LSH + confirm) ----
-    // The fixture corpus has no natural near-dups (max pairwise cosine
-    // 0.51), so the query plants one duplicate per vec_id < 50 — a 2x
-    // scaled copy, which preserves direction exactly: cosine 1.0,
-    // identical sign bits on every hyperplane, hence guaranteed LSH
-    // recall. Expected output is exactly those 50 pairs (oracle below).
-    "q_cosine_neardups" -> ((s, dir) => {
-      Graft.init(s)
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val planted = emb.where(col("vec_id") < 50)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("embedding"), x => (x * lit(2.0f)).cast("float"))
-            .as("embedding"))
-      Similarity.cosineNearDups(emb.unionByName(planted), "vec_id",
-        "embedding", threshold = 0.9)
-    }),
-
-    // ---- LLM: k-nearest-neighbor join (top-k similar per document) ----
-    // same planted direction-preserving copies as q_cosine_neardups:
-    // each planted probe's rank-1 neighbor is its original at cosine 1.0
-    // (identical sign bits => in-bucket; natural cosines max ~0.51)
-    "q_knn" -> ((s, dir) => {
-      Graft.init(s)
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val planted = emb.where(col("vec_id") < 50)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("embedding"), x => (x * lit(2.0f)).cast("float"))
-            .as("embedding"))
-      Similarity.knnJoin(emb.unionByName(planted), "vec_id", "embedding",
-          k = 1)
-        .where(col("qid") >= 100000L)
-        .select(col("qid"), col("nid"), col("cosine"),
-          col("rank").as("nn_rank"))
-    }),
-
-    // ---- LLM: SemDeDup-style semantic dedup (keep-first selection) ----
-    // planted scaled copies (ids >= 100000) sit at cosine 1.0 from their
-    // originals (identical sign bits => guaranteed candidate recall);
-    // keep-first drops every planted copy (its original has the smaller
-    // id) and no organic row (max natural pairwise cosine ~0.51 < 0.9),
-    // so the survivor set is closed-form: exactly the original corpus
-    "q_semantic_dedup" -> ((s, dir) => {
-      Graft.init(s)
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val planted = emb.where(col("vec_id") < 50)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("embedding"), x => (x * lit(2.0f)).cast("float"))
-            .as("embedding"))
-      Similarity.semanticDedup(emb.unionByName(planted), "vec_id",
-          "embedding", threshold = 0.9)
-        .select(col("vec_id"))
-    }),
-
-    // ---- LLM: semantic dedup, SELF-SIZED LSH granularity --------------
-    // the same planted corpus through rowsPerBand = -1 (round 9): one
-    // corpus count() picks r = ceil(log2(2n)) and bands = r. The
-    // survivor set is granularity-INDEPENDENT (exact copies share every
-    // band at any r; no organic pair reaches 0.9), so this shares
-    // q_semantic_dedup's closed-form oracle — what it adds is coverage
-    // of the auto path end-to-end, and a scaling-curve row that stays
-    // near-linear where the fixed default grows ~9x per decade
-    "q_semantic_dedup_auto" -> ((s, dir) => {
-      Graft.init(s)
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val planted = emb.where(col("vec_id") < 50)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("embedding"), x => (x * lit(2.0f)).cast("float"))
-            .as("embedding"))
-      Similarity.semanticDedup(emb.unionByName(planted), "vec_id",
-          "embedding", threshold = 0.9, rowsPerBand = -1)
-        .select(col("vec_id"))
-    }),
-
-    // ---- LLM: ANN recall harness (self-evaluating) --------------------
-    // 10 exact copies of the probe planted at ids >= 100000: the exact
-    // top-10 is the probe + 9 copies at cosine 1.0, every copy shares
-    // every LSH band and lands in the probe's IVF cluster, so both
-    // measured recalls are provably 1.0 — the oracle pins the closed
-    // form while the measurement machinery runs for real
-    "q_ann_recall" -> ((s, dir) => {
-      Graft.init(s)
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val q = queryVec(emb)
-      val planted = emb.where(col("vec_id") < 10)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          typedLit(q).as("embedding"))
-      Similarity.annRecall(emb.unionByName(planted), "vec_id", "embedding",
-        q, k = 10)
-    }),
-
-    // ---- LLM: product quantization + asymmetric-distance top-k --------
-    // encode (per-subspace argmin over a planted codebook) + ADC scan,
-    // the memory-bound ANN path: codes are m small ints per vector, the
-    // query scores rows via LUT lookups without touching raw vectors.
-    // The codebook is the deterministic dyadic formula both engines
-    // state independently (Pq.plantedModel / pqAdcSql); the trained-
-    // codebook path (Pq.train) is pinned in PqSpec.
-    "q_pq_adc" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Pq.adcTopK(emb, "vec_id", "embedding",
-        Pq.plantedModel(64, 4, 4), queryVec(emb), 10)
-    }),
-
-    // ---- LLM: multimodal metadata over a binary payload column --------
-    "q_multimodal_meta" -> ((s, dir) =>
-      Multimodal.mediaFromDocs(t(s, dir, "documents"))
-        .select(col("media_id"), col("kind"), col("meta.n_bytes").as("n_bytes"),
-          col("meta.format").as("format"),
-          md5(col("payload")).as("payload_md5"))),
-
-    // ---- LLM: multimodal frame sampling (binary slicing, codegen) -----
-    "q_multimodal_frames" -> ((s, dir) =>
-      Multimodal.frameSample(
-        Multimodal.mediaFromDocs(t(s, dir, "documents")), 64, 16)
-        .select(col("media_id"), col("kind"), col("n_frames"))),
-
-    // ---- LLM: stubbed decode / feature extraction (mapPartitions) -----
-    // The actual mapPartitions byte loop is what executes here; the
-    // oracle recomputes the expected bytes in SQL via ascii() — valid
-    // because the fixture text is pure ASCII (byte == code point,
-    // verified at both SFs), while the engine path handles arbitrary
-    // binary. byte_mean is one exact-int division on both engines.
-    "q_multimodal_decode" -> ((s, dir) =>
-      Multimodal.decodeStub(Multimodal.mediaFromDocs(t(s, dir, "documents")))
-        .select(col("media_id"), col("n_bytes").cast("long").as("n_bytes"),
-          col("byte_mean"))),
-
-    // ---- LLM: REAL image decode (pure-JVM P6 PPM codec) ---------------
-    // Spark builds actual PPM binaries (header + raster, pixel i =
-    // (id*7 + i*13) % 256) and DECODES them — header parse and pixel
-    // sums run over the real payload bytes in the per-partition codec
-    // slot; the oracle recomputes the channel means from the closed form
-    // without ever constructing the bytes. This is the decode path made
-    // real (r6 verdict residual #1), not a stub comparison.
-    // ---- LLM: content-type sniffing over a mixed crawl dump -----------
-    // four payload families planted by doc_id%4 (real PPM bytes, real
-    // RIFF/WAVE bytes, HTML markup, plain text), then classified from
-    // magic bytes alone — the routing step before the codec paths. The
-    // oracle replays the plant rule; byte-level edge cases (truncated
-    // magics, WAVE tag at the wrong offset, NULL) are pinned in
-    // MultimodalSpec
-    "q_multimodal_sniff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val ppm = Multimodal.plantedPpm(docs.where(col("doc_id") % 5 === 0))
-        .select(col("media_id"), col("payload"))
-      val wav = Multimodal.plantedWav(docs.where(col("doc_id") % 5 === 1))
-        .select(col("media_id"), col("payload"))
-      val y4m = Multimodal.plantedY4m(docs.where(col("doc_id") % 5 === 2))
-        .select(col("media_id"), col("payload"))
-      val html = docs.where(col("doc_id") % 5 === 3)
-        .select(col("doc_id").cast("long").as("media_id"),
-          concat(lit("<html><body>"), col("text"), lit("</body></html>"))
-            .cast("binary").as("payload"))
-      val txt = docs.where(col("doc_id") % 5 === 4)
-        .select(col("doc_id").cast("long").as("media_id"),
-          col("text").cast("binary").as("payload"))
-      ppm.unionByName(wav).unionByName(y4m).unionByName(html)
-        .unionByName(txt)
-        .select(col("media_id"),
-          Multimodal.sniffKind(col("payload")).as("sniffed"))
-    }),
-
-    "q_multimodal_ppm" -> ((s, dir) =>
-      Multimodal.decodeImages(Multimodal.plantedPpm(t(s, dir, "documents")))
-        .select(col("media_id"), col("width"), col("height"),
-          col("n_bytes").cast("long").as("n_bytes"),
-          col("mean_r"), col("mean_g"), col("mean_b"))),
-
-    // ---- LLM: sniff-routed decode over a MIXED dump -------------------
-    // five planted families in one table, one per-partition pass:
-    // magic bytes route each payload to its parser (PPM / PCM16 / y4m),
-    // text families pass through with kind only — the unified nullable
-    // schema a real crawl dump lands in
-    "q_multimodal_auto" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val ppm = Multimodal.plantedPpm(docs.where(col("doc_id") % 5 === 0))
-        .select(col("media_id"), col("payload"))
-      val wav = Multimodal.plantedWav(docs.where(col("doc_id") % 5 === 1))
-        .select(col("media_id"), col("payload"))
-      val y4m = Multimodal.plantedY4m(docs.where(col("doc_id") % 5 === 2))
-        .select(col("media_id"), col("payload"))
-      val html = docs.where(col("doc_id") % 5 === 3)
-        .select(col("doc_id").cast("long").as("media_id"),
-          concat(lit("<html><body>"), col("text"), lit("</body></html>"))
-            .cast("binary").as("payload"))
-      val txt = docs.where(col("doc_id") % 5 === 4)
-        .select(col("doc_id").cast("long").as("media_id"),
-          col("text").cast("binary").as("payload"))
-      Multimodal.decodeAuto(ppm.unionByName(wav).unionByName(y4m)
-          .unionByName(html).unionByName(txt))
-        .select(col("media_id"), col("sniffed"),
-          col("n_bytes").cast("long").as("n_bytes"),
-          col("width"), col("height"), col("mean_r"), col("mean_g"),
-          col("mean_b"), col("sample_rate"), col("channels"),
-          col("n_frames"), col("duration_ms"), col("peak"), col("rms"),
-          col("luma_mean"))
-    }),
-
-    // ---- LLM: REAL audio decode (RIFF/WAVE PCM16 chunk walk) ----------
-    // the WAV sibling of q_multimodal_ppm: planted PCM16 clips are
-    // actually parsed — chunk walk, fmt block, sample streaming — while
-    // the oracle recomputes peak/RMS/duration from the plant's closed
-    // form without ever seeing a byte
-    "q_multimodal_wav" -> ((s, dir) =>
-      Multimodal.decodeAudio(Multimodal.plantedWav(t(s, dir, "documents")))
-        .select(col("media_id"), col("sample_rate"), col("channels"),
-          col("n_frames"), col("duration_ms"), col("peak"), col("rms"),
-          col("n_bytes").cast("long").as("n_bytes"))),
-
-    // ---- LLM: REAL image resize (decode -> subsample -> re-encode) ----
-    // the resized payload is a VALID PPM decoded again by the same
-    // parser; the oracle recomputes the nearest-neighbor-sampled pixel
-    // grid in closed form — the full decode/transform/encode loop runs
-    // on real bytes
-    "q_multimodal_resize" -> ((s, dir) =>
-      Multimodal.decodeImages(Multimodal.resizeImages(
-          Multimodal.plantedPpm(t(s, dir, "documents")), 2))
-        .select(col("media_id"), col("width"), col("height"),
-          col("n_bytes").cast("long").as("n_bytes"),
-          col("mean_r"), col("mean_g"), col("mean_b"))),
-
-    // ---- LLM: REAL video decode (YUV4MPEG2 container walk) ------------
-    // the y4m sibling of q_multimodal_ppm/_wav completing the
-    // image/audio/video real-codec trio: planted mono clips are actually
-    // parsed — stream header, FRAME-delimited planes, per-frame luma
-    // streaming — while the oracle recomputes dimension/fps/luma stats
-    // from the plant's closed form without ever seeing a byte
-    "q_multimodal_y4m" -> ((s, dir) =>
-      Multimodal.decodeVideo(Multimodal.plantedY4m(t(s, dir, "documents")))
-        .select(col("media_id"), col("width"), col("height"),
-          col("fps_num"), col("fps_den"), col("n_frames"),
-          col("duration_ms"), col("luma_peak"), col("luma_mean"),
-          col("n_bytes").cast("long").as("n_bytes"))),
-
-    // ---- LLM: REAL keyframe extraction (every-Nth-frame sampling) -----
-    // the decoded-frames replacement for the q_multimodal_frames byte
-    // stub: one row per sampled frame with that frame's luma stats —
-    // flatMap streams frames off the payload, so a long clip never
-    // materializes more than one frame's stats at a time
-    "q_multimodal_keyframes" -> ((s, dir) =>
-      Multimodal.sampleVideoFrames(
-          Multimodal.plantedY4m(t(s, dir, "documents")), 2)
-        .select(col("media_id"), col("frame_idx"), col("width"),
-          col("height"), col("luma_sum"), col("luma_peak"))),
-
-    // ---- extension: exact heavy hitters via a Misra-Gries sketch ------
-    // candidates from ONE bounded-summary pass (a mergeable MG typed
-    // Aggregator — per-partition buffers of <= k counters, union-merged),
-    // then an exact count confirm over candidates only: nothing
-    // distinct-value-sized ever crosses the wire, unlike the q_vocab
-    // full GROUP BY. The oracle states the exact final semantics with NO
-    // sketch — a candidate-set miss would fail the hash compare, so the
-    // MG guarantee itself is under oracle test. Frequency floor is the
-    // exact rational 2/1000 of all tokens (BIGINT threshold arithmetic
-    // on both engines — a float phi would diverge at ulp scale).
-    // (ops/Freq.heavyHitters)
-    "q_heavy_hitters" -> ((s, dir) =>
-      graft.ops.Freq.heavyHitters(
-        t(s, dir, "documents")
-          .select(explode(TextOps.words(lower(col("text")))).as("token")),
-        "token", num = 2, den = 1000)
-        .orderBy(col("cnt").desc, col("token"))),
-
-    // ---- extension: row-level quantile binning (featurization) --------
-    // every event's value bucketized into its exact equi-depth decile
-    // under the integer-CDF rule shared with q_histogram_eqdepth — the
-    // no-interpolation bucketize-by-quantile feature transform
-    // (ops/Profile.binByQuantile)
-    "q_quantile_bins" -> ((s, dir) =>
-      graft.ops.Profile.binByQuantile(
-        t(s, dir, "events").where(col("event_id") < 3000),
-        "event_id", "value", nBins = 10)),
-
-    // ---- LLM: site link graph from HTML -------------------------------
-    // href extraction (regexp_extract_all) + target-keyed in-degree
-    // aggregation over the same planted HTML shell as q_html_extract:
-    // /next/0..9 each referenced by its doc_id%10 class, /rel by the
-    // doc_id%3=0 class (ops/Html.linkGraph)
-    "q_link_graph" -> ((s, dir) =>
-      graft.ops.Html.linkGraph(
-        t(s, dir, "documents").select(col("doc_id"), plantedHtml.as("html")),
-        "doc_id", "html")),
-
-    // ---- LLM: hybrid retrieval via reciprocal rank fusion -------------
-    // BM25 top-20 (lexical) fused with cosine-to-probe top-20 (dense,
-    // embeddings keyed 1:1 with doc ids in the fixture) by RRF — ranks
-    // only, exact integer micros, so the fusion stage has zero float.
-    // The semantic rank orders by the 4dp-rounded cosine with an id
-    // tie-break (the q_ann_cosine determinism contract)
-    // (ops/Retrieval.rrfFuse)
-    "q_rrf_hybrid" -> ((s, dir) => {
-      import s.implicits._
-      Graft.init(s)
-      val qs = Seq((0L, "vector hash join")).toDF("query_id", "qtext")
-      val lexical = graft.ops.Retrieval
-        .bm25TopK(t(s, dir, "documents"), qs, k = 20)
-        .select(col("query_id"), col("doc_id"), col("rank"))
-      val emb = t(s, dir, "embeddings")
-      val probe = queryVec(emb)
-      val wsem = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("doc_id"))
-      val semantic = emb
-        .select(lit(0L).as("query_id"), col("vec_id").as("doc_id"),
-          round(graft.functions.VectorExprs.cosineSim(col("embedding"),
-            typedLit(probe)), 4).as("cosine"))
-        .withColumn("rank", row_number().over(wsem))
-        .where(col("rank") <= 20)
-        .select(col("query_id"), col("doc_id"), col("rank"))
-      graft.ops.Retrieval.rrfFuse(Seq(lexical, semantic),
-        "query_id", "doc_id", "rank", k0 = 60, topK = 10)
-    }),
-
-    // ---- extension: ordered string aggregation (LISTAGG parity) -------
-    // collect_list is ORDER-NONDETERMINISTIC under partitioning; the
-    // deterministic form sorts inside the aggregate (array_sort) before
-    // joining — the engine-portable equivalent of LISTAGG ... WITHIN
-    // GROUP (ORDER BY) / string_agg(ORDER BY)
-    "q_listagg" -> ((s, dir) =>
-      t(s, dir, "nation")
-        .join(t(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(array_join(array_sort(collect_list(col("n_name"))), "|")
-            .as("nations"),
-          count(lit(1)).as("n_nations"))),
-
-    // ---- extension: market-basket co-occurrence lift ------------------
-    // bought-together parts per order with exact fixed-point lift; the
-    // per-basket self-join is bounded by the basket-size cap (oversized
-    // baskets drop whole — at sf0.01 that's real: orders run up to 13
-    // distinct parts vs the cap of 5) (ops/Baskets.liftPairs)
-    "q_basket_lift" -> ((s, dir) =>
-      graft.ops.Baskets.liftPairs(t(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey", maxBasketSize = 5, minPairCount = 2)),
-
-    // ---- LLM: HTML -> training-text extraction ------------------------
-    // the crawl-to-corpus step (C4/CCNet): drop script/style whole, strip
-    // tags, decode the high-volume entities, collapse whitespace — all
-    // per-row codegen'd string expressions in the RE2-safe subset. The
-    // fixture is plain text, so the query wraps each doc in a deterministic
-    // HTML shell (title, tracker script, style block, anchors varying by
-    // doc, entity-bearing footer) and the oracle replays the identical
-    // chain on the identical plant (ops/Html.extract)
-    "q_html_extract" -> ((s, dir) =>
-      graft.ops.Html.extract(
-        t(s, dir, "documents").select(col("doc_id"), plantedHtml.as("html")),
-        "doc_id", "html")),
-
-    // ---- LLM: temperature-based language rebalancing ------------------
-    // the XLM-R multilingual sampling rule: keep language l with
-    // p ∝ c_l^0.5 / c_l toward a 50% overall target, flattening the en-
-    // heavy fixture (en 218 of 500) so low-resource langs keep share.
-    // alpha fixed at the exactly-reproducible sqrt point; W folded in
-    // sorted-group order; md5-bucket keep — the oracle recomputes the
-    // identical probabilities and selection (ops/Sampling.temperatureSample)
-    "q_temperature_sample" -> ((s, dir) =>
-      graft.ops.Sampling.temperatureSample(t(s, dir, "documents"),
-        "lang", "doc_id", alphaHalves = 1, targetNum = 1, targetDen = 2)
-        .select(col("doc_id"), col("lang"))),
-
-    // ---- LLM: URL canonicalization (pre-content web dedup key) --------
-    // The fixture has no URL column, so the query plants one per doc with
-    // deliberate variance the canonicalizer must collapse: scheme/host
-    // case flips and an explicit :443 by doc parity, per-doc utm/gclid
-    // tracking params and fragments. Pure per-row regexp chain (RE2-safe
-    // subset), no UDF — the oracle replays the identical chain in DuckDB
-    // (ops/Urls.canonicalize)
-    "q_url_canonical" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), plantedUrl.as("url"))
-        .select(col("doc_id"), col("url"),
-          graft.ops.Urls.canonicalize(col("url")).as("canonical_url"))),
-
-    // ---- LLM: URL-level dedup (cheapest web dedup pass) ---------------
-    // group by canonical form, keep-min id + duplicate count: the 500
-    // planted URLs (x2 case/port/tracking variants by construction)
-    // collapse to the (source, cat, page) key space
-    // (ops/Urls.urlDedup)
-    "q_url_dedup" -> ((s, dir) =>
-      graft.ops.Urls.urlDedup(
-        t(s, dir, "documents").select(col("doc_id"), plantedUrl.as("url")),
-        "url", "doc_id")),
-
-    // ---- LLM: cross-host mirror detection -----------------------------
-    // every doc serves from its own source host; every doc_id%4==0 doc
-    // ALSO serves from mirror.example.org — those (plus any natural
-    // exact-text dups that happen to span hosts, replayed identically
-    // by the oracle) are the mirrored set; payload never shuffles,
-    // only 16-byte fingerprints (ops/Urls.mirrorReport)
-    "q_mirror_report" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val own = docs.select(
-        concat(lower(col("source")), lit(".example.com")).as("host"),
-        col("text"))
-      val mirrored = docs.where(col("doc_id") % 4 === 0)
-        .select(lit("mirror.example.org").as("host"), col("text"))
-      graft.ops.Urls.mirrorReport(own.unionByName(mirrored),
-        "host", "text")
-    }),
-
-    // ---- LLM: recrawl scheduling from observed change rates -----------
-    // planted fetch history: 6 fetches per URL whose content version
-    // advances every p = 1 + doc_id%4 fetches, so n_changes =
-    // floor(5/p) in closed form — Spark counts TRANSITIONS through the
-    // lag window over real fingerprints while the oracle never builds
-    // one (ops/Urls.recrawlPriorities)
-    "q_recrawl_priority" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val history = docs
-        .select(col("doc_id").as("url_id"), col("text"),
-          explode(sequence(lit(0), lit(5))).as("fetch_no"))
-        .select(col("url_id"), col("fetch_no"),
-          md5(concat(col("text"), lit(":v"),
-            expr("fetch_no div (1 + url_id % 4)").cast("string"))
-            .cast("binary")).as("content_fp"))
-      graft.ops.Urls.recrawlPriorities(history,
-        "url_id", "fetch_no", "content_fp")
-    }),
-
-    // ---- LLM: multimodal featurize -> similarity score, oracle-checked -
-    // The md5-derived stub embedding is reproducible in SQL, so the whole
-    // payload -> feature vector -> cosine-vs-probe path gets a DuckDB
-    // oracle. Components stay DOUBLE here (bit-parity with the oracle's
-    // arithmetic, left-assoc sums both sides); the array<float> variant
-    // of the same stub (Multimodal.featurizeStub) feeds the ANN ops and
-    // is covered in MultimodalSpec.
-    "q_multimodal_embed" -> ((s, dir) => {
-      val m = Multimodal.mediaFromDocs(t(s, dir, "documents"))
-      val es = (0 until 8).map(i => Multimodal.embedComponent(col("payload"), i))
-      val sumv = es.reduce(_ + _)
-      val sumsq = es.map(e => e * e).reduce(_ + _)
-      m.select(col("media_id"), col("kind"),
-        round(sumv / (sqrt(sumsq) * lit(math.sqrt(8.0))), 4).as("probe_cos"))
-    })) ++ sqlTpchPortability
-
-  /** Whole-suite one-text-three-routes portability (closes the r6
-    * verdict's "SQL-portability breadth" residual in the correctness
-    * artifact itself): all 22 TPC-H oracle strings run VERBATIM through
-    * spark.sql as registered queries, and the driver then runs the very
-    * same text in DuckDB as each row's oracle. SqlPortabilitySpec
-    * additionally pins text-vs-Frame result equality for every query,
-    * so text, Frame plan, and both engines agree on one answer. */
-  private lazy val sqlTpchPortability
-      : Map[String, (SparkSession, String) => DataFrame] =
-    (1 to 22).map { n =>
-      s"q_sql_tpch_q$n" -> ((s: SparkSession, dir: String) => {
-        Catalog.forTestdata(s, dir)
-        s.sql(oracleSql(s"q_sql_tpch_q$n"))
-      })
-    }.toMap
-
-  /** Planted per-doc URL for the q_url_* queries: scheme/host case and an
-    * explicit :443 flip by doc parity (so two raw FORMS of every logical
-    * URL exist), per-doc tracking params and fragment (so stripping is
-    * observable). Mirrored verbatim in the DuckDB oracles. */
-  private def plantedUrl: Column = concat(
-    when(col("doc_id") % 2 === 0, "HTTPS://").otherwise("https://"),
-    upper(col("source")), lit(".Example.COM"),
-    when(col("doc_id") % 2 === 0, ":443").otherwise(""),
-    lit("/cat"), (col("doc_id") % 3).cast("string"),
-    lit("/page"), (col("doc_id") % 5).cast("string"),
-    lit("/?utm_source=feed&utm_campaign=c"), (col("doc_id") % 4).cast("string"),
-    lit("&id="), (col("doc_id") % 5).cast("string"),
-    lit("&gclid=g"), (col("doc_id") % 2).cast("string"),
-    lit("#sec"), (col("doc_id") % 6).cast("string"))
-
-  /** Planted per-doc HTML shell for q_html_extract: title, a tracker
-    * script and style block (must vanish whole), 1-2 anchors varying by
-    * doc, an entity-bearing footer. Mirrored verbatim in the oracle. */
-  private def plantedHtml: Column = concat(
-    lit("<html><head><title>Doc "), col("doc_id").cast("string"),
-    lit("</title><script type=\"text/javascript\">var t = "),
-    (col("doc_id") % 97).cast("string"),
-    lit(";</script><style>.c{color:red}</style></head><body><h1>Doc "),
-    col("doc_id").cast("string"), lit("</h1><p>"), col("text"),
-    lit("</p><a href=\"/next/"), (col("doc_id") % 10).cast("string"),
-    lit("\">next page</a>"),
-    when(col("doc_id") % 3 === 0, "<a href=\"/rel\">related</a>")
-      .otherwise(""),
-    lit("<div class=\"footer\">&copy; 2026 &amp; co &#39;ok&#39;" +
-      "</div></body></html>"))
-
-  /** Driver-side fetch of the probe vector (vec_id=0) — a 1-row lookup,
-    * the documented pattern for parameterizing an ANN probe. */
-  private def queryVec(emb: DataFrame): Array[Float] =
-    emb.where(col("vec_id") === 0).select(col("embedding"))
-      .head.getSeq[Float](0).toArray
-
-  /** TPC-H Q3 shape in the ANSI subset BOTH engines parse: the Frame
-    * query q_tpch_q3 compiles to this semantics, q_sql_tpch_q3 runs
-    * this very string through spark.sql, and the driver runs it in
-    * DuckDB as the oracle for both — one query text, three routes, one
-    * answer. */
-  /** Q10/Q18 in the shared ANSI subset (same one-text-three-routes
-    * contract as TpchQ3Sql). */
-  private val TpchQ10Sql: String =
-    """SELECT c_custkey, c_name, n_name,
-      |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,8))), 2) AS DOUBLE) AS revenue
-      |FROM customer
-      |JOIN orders ON c_custkey = o_custkey
-      |JOIN lineitem ON o_orderkey = l_orderkey
-      |JOIN nation ON c_nationkey = n_nationkey
-      |WHERE l_returnflag = 'R'
-      |GROUP BY c_custkey, c_name, n_name
-      |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin
-
-  private val TpchQ18Sql: String =
-    """WITH big AS (
-      |  SELECT l_orderkey,
-      |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-      |  FROM lineitem GROUP BY l_orderkey
-      |  HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 250)
-      |SELECT c_name, o_orderkey, sum_qty
-      |FROM customer
-      |JOIN orders ON c_custkey = o_custkey
-      |JOIN big ON o_orderkey = l_orderkey
-      |ORDER BY sum_qty DESC, o_orderkey LIMIT 20""".stripMargin
-
-  private val TpchQ3Sql: String =
-    """SELECT l_orderkey,
-      |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,8))), 2) AS DOUBLE) AS revenue
-      |FROM customer
-      |JOIN orders ON c_custkey = o_custkey
-      |JOIN lineitem ON o_orderkey = l_orderkey
-      |WHERE c_mktsegment = 'BUILDING'
-      |  AND o_orderdate < '1998-06-01'
-      |  AND l_shipdate > '1998-06-01'
-      |GROUP BY l_orderkey
-      |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin
-
-  /** TPC-H Q1 pricing summary, dialect-clean shared text (same
-    * one-text-two-engines contract as [[TpchQ3Sql]]). */
-  private val TpchQ1Sql: String =
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-      |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-      |    AS DECIMAL(28,8))), 2) AS DOUBLE) AS sum_disc_price,
-      |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
-      |    AS DECIMAL(28,8))), 2) AS DOUBLE) AS sum_charge,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_price,
-      |  CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_disc,
-      |  count(*) AS count_order
-      |FROM lineitem
-      |WHERE l_shipdate <= '1998-09-01'
-      |GROUP BY l_returnflag, l_linestatus""".stripMargin
-
-  /** TPC-H Q6 forecast-revenue-change, dialect-clean shared text. */
-  private val TpchQ6Sql: String =
-    """SELECT CAST(round(sum(CAST(l_extendedprice * l_discount
-      |    AS DECIMAL(28,8))), 2) AS DOUBLE) AS revenue,
-      |  count(*) AS n
-      |FROM lineitem
-      |WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
-      |  AND l_discount >= 0.05 AND l_discount <= 0.07
-      |  AND l_quantity < 24""".stripMargin
-
-  /** TPC-H Q12 shipping-priority counts, dialect-clean shared text
-    * (INTERVAL arithmetic and ordinal GROUP BY parse identically in
-    * Spark and DuckDB). */
-  private val TpchQ12Sql: String =
-    """SELECT l_returnflag,
-      |  CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
-      |    OR o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS high_line_count,
-      |  CAST(sum(CASE WHEN o_orderpriority <> '1-URGENT'
-      |    AND o_orderpriority <> '2-HIGH' THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS low_line_count
-      |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |WHERE l_shipdate > o_orderdate + INTERVAL 15 DAY
-      |GROUP BY 1""".stripMargin
-
-  /** Analytic window frames: rank + lag + running sum, shared SQL. */
-  private val WindowFramesSql: String =
-    """SELECT o_custkey, o_orderkey,
-      |  rank() OVER w AS rk,
-      |  dense_rank() OVER w AS drk,
-      |  lag(o_orderkey) OVER w AS prev_order,
-      |  sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-      |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::DOUBLE AS running_spend
-      |FROM orders
-      |WHERE o_custkey <= 100
-      |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin
-
-  /** ANSI SQL shared verbatim between Spark and the DuckDB oracle. */
-  private val WindowSql: String =
-    """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-      |  SELECT o_custkey, o_orderkey, o_totalprice,
-      |         row_number() OVER (PARTITION BY o_custkey
-      |                            ORDER BY o_totalprice DESC, o_orderkey) AS rn
-      |  FROM orders) ranked
-      |WHERE rn <= 2""".stripMargin
-
-  /** DuckDB replay of [[graft.ops.TextOps.bpeMerges]]'s training loop,
-    * unrolled to `n` explicit CTE stages (the loop count is a compile-time
-    * constant of the registered query, so unrolling is exact, not an
-    * approximation). Words are carried as separator-framed symbol strings
-    * ` sym  sym ` because SQL `replace()` is
-    * exactly the greedy left-to-right non-overlapping single-rule merge
-    * the Scala fold implements: the DOUBLE separator between symbols lets
-    * a match consume one trailing separator and still leave the next
-    * occurrence matchable ("abab" under a+b must merge BOTH pairs), while
-    * the frame prevents false matches where one symbol merely ends/starts
-    * with the rule's characters ("xa","b" must NOT match a+b). Every CTE
-    * is MATERIALIZED: each stage is referenced twice (pair counts + next
-    * vocab), so un-materialized inlining would re-derive the whole prefix
-    * chain exponentially. Verified bit-exact vs the Spark run at sf0.01. */
-  private def bpeTrainCtes(n: Int): String = {
-    val sb = new StringBuilder(
-      """w AS MATERIALIZED (
-        |  SELECT word, count(*) AS cnt FROM (
-        |    SELECT unnest(string_split_regex(trim(text), '\s+')) AS word
-        |    FROM documents WHERE trim(coalesce(text, '')) <> '')
-        |  WHERE word <> '' GROUP BY word),
-        |v0 AS MATERIALIZED (
-        |  SELECT chr(31) || array_to_string(string_split(word, ''),
-        |    chr(31) || chr(31)) || chr(31) AS s, cnt FROM w)""".stripMargin)
-    for (k <- 0 until n) sb ++= s""",
-p$k AS MATERIALIZED (
-  SELECT x.a[i] AS l, x.a[i + 1] AS r, CAST(sum(x.cnt) AS BIGINT) AS pair_count
-  FROM (SELECT string_split(trim(s, chr(31)), chr(31) || chr(31)) AS a, cnt
-        FROM v$k) AS x,
-    unnest(generate_series(1, len(x.a) - 1)) AS t(i)
-  GROUP BY 1, 2),
-r${k + 1} AS MATERIALIZED (SELECT l, r, pair_count FROM p$k
-  WHERE pair_count >= 2 ORDER BY pair_count DESC, l, r LIMIT 1),
-v${k + 1} AS MATERIALIZED (
-  SELECT replace(s,
-      chr(31) || (SELECT l FROM r${k + 1}) || chr(31) || chr(31) || (SELECT r FROM r${k + 1}) || chr(31),
-      chr(31) || (SELECT l FROM r${k + 1}) || (SELECT r FROM r${k + 1}) || chr(31)) AS s,
-    cnt
-  FROM v$k)"""
-    sb.toString
-  }
-
-  /** DuckDB replay of [[graft.ops.Classifier]] training: `iters`
-    * unrolled gradient-descent rounds (one CTE pair per round — micros
-    * gradient sums, then the re-quantized weight row), followed by the
-    * per-row scoring select. Mirrors the Scala expression trees
-    * token-for-token: rational sigmoid, left-associated margin, 1e-6
-    * quantization points. */
-  private def qualityClassifierSql(iters: Int): String = {
-    val sb = new StringBuilder
-    sb ++= """WITH f AS (
-  SELECT doc_id,
-    CAST(least(n_chars, 2000) AS DOUBLE) / 2000.0 AS x1,
-    CAST(least(len(ws), 400) AS DOUBLE) / 400.0 AS x2,
-    CAST(len(list_filter(ws, w -> w IN ('the','a','and','of','to')))
-      AS DOUBLE) / CAST(greatest(len(ws), 1) AS DOUBLE) AS x3,
-    CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y
-  FROM (SELECT doc_id, lang, n_chars,
-        string_split_regex(trim(lower(text)), '\s+') AS ws
-        FROM documents)),
-c AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM f),
-w0 AS (SELECT 0.0 AS b, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3)"""
-    for (k <- 1 to iters) {
-      sb ++= s""",
-g$k AS (
-  SELECT
-    sum(CAST(round((sig - y) * 1.0 * 1000000.0, 0) AS BIGINT)) AS gb,
-    sum(CAST(round((sig - y) * x1 * 1000000.0, 0) AS BIGINT)) AS ga,
-    sum(CAST(round((sig - y) * x2 * 1000000.0, 0) AS BIGINT)) AS gc,
-    sum(CAST(round((sig - y) * x3 * 1000000.0, 0) AS BIGINT)) AS gd
-  FROM (
-    SELECT y, x1, x2, x3, 0.5 + 0.5 * (z / (1.0 + abs(z))) AS sig
-    FROM (SELECT f.*, ((b + w1 * x1) + w2 * x2) + w3 * x3 AS z
-          FROM f CROSS JOIN w${k - 1}) zt) st),
-w$k AS (
-  SELECT
-    round(b - 1.0 * ((CAST(gb AS DOUBLE) / 1000000.0) / n), 6) AS b,
-    round(w1 - 1.0 * ((CAST(ga AS DOUBLE) / 1000000.0) / n), 6) AS w1,
-    round(w2 - 1.0 * ((CAST(gc AS DOUBLE) / 1000000.0) / n), 6) AS w2,
-    round(w3 - 1.0 * ((CAST(gd AS DOUBLE) / 1000000.0) / n), 6) AS w3
-  FROM w${k - 1} CROSS JOIN g$k CROSS JOIN c)"""
-    }
-    sb ++= s"""
-SELECT doc_id, round(0.5 + 0.5 * (z / (1.0 + abs(z))), 6) AS score,
-  (round(0.5 + 0.5 * (z / (1.0 + abs(z))), 6) >= 0.5) AS pred
-FROM (SELECT doc_id, ((b + w1 * x1) + w2 * x2) + w3 * x3 AS z
-      FROM f CROSS JOIN w$iters) zt"""
-    sb.toString
-  }
-
-  /** The learned-rules result set over [[bpeTrainCtes]]'s r1..rn. */
-  private def bpeMergesSql(n: Int): String =
-    "WITH " + bpeTrainCtes(n) + "\nSELECT * FROM (" +
-      (1 to n).map(k =>
-        s"""SELECT CAST($k AS BIGINT) AS merge_rank, l AS "left", r AS "right", pair_count FROM r$k""")
-        .mkString("\nUNION ALL ") + ")"
-
-  /** Training + encoding: replay the n learned rules over every word of
-    * every document with the same framed-replace trick, then flatten to
-    * the per-document token sequence. */
-  /** Per-source fertility over the same replayed encoder as
-    * [[bpeEncodeSql]]: exact integer char/token totals, one integer
-    * division per source. */
-  private def bpeFertilitySql(n: Int): String = {
-    val replay = (1 to n).foldLeft(
-      "chr(31) || array_to_string(string_split(w, ''), chr(31) || chr(31)) || chr(31)") {
-      (e, k) =>
-        s"replace($e, chr(31) || u.l$k || chr(31) || chr(31) || u.q$k || chr(31), " +
-          s"chr(31) || u.l$k || u.q$k || chr(31))"
-    }
-    val ruleCols = (1 to n).map(k =>
-      s"(SELECT l FROM r$k) AS l$k, (SELECT r FROM r$k) AS q$k").mkString(", ")
-    "WITH " + bpeTrainCtes(n) + s""",
-u AS MATERIALIZED (SELECT $ruleCols),
-d AS (
-  SELECT doc_id, source, n_chars,
-    string_split_regex(trim(text), '\\s+') AS ws FROM documents),
-e AS (
-  SELECT d.doc_id, d.source, d.n_chars, flatten(list_transform(d.ws, w ->
-    string_split(trim($replay, chr(31)), chr(31) || chr(31)))) AS toks
-  FROM d, u)
-SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-  CAST(sum(len(toks)) AS BIGINT) AS sum_tokens,
-  (1000000 * CAST(sum(n_chars) AS BIGINT))
-    // CAST(sum(len(toks)) AS BIGINT) AS chars_per_token_micros
-FROM e GROUP BY source"""
-  }
-
-  /** DuckDB replay of the unigram Viterbi encode over the PLANTED
-    * vocabulary: the DP unrolls as one chained CTE per code-point
-    * position (d1..dMaxWordLen), each taking the per-word best of the
-    * ≤ maxPieceLen piece-extension candidates plus the always-available
-    * `<unk>` single-character candidate, ordered exactly as the
-    * expression's comparator: summed integer score desc, token count
-    * asc, then the chr(31)-joined token path asc (binary string order
-    * on both engines — chr(31) sits below every printable byte, so
-    * path order IS token-list order). The objective is integer-only,
-    * so nothing float-ordered crosses the replay. */
-  private def unigramEncodeSql(maxWordLen: Int, maxPieceLen: Int): String = {
-    val vocabValues = unigramVocab
-      .map { case (p, sc) => s"('$p', CAST($sc AS BIGINT))" }
-      .mkString(", ")
-    val stages = (1 to maxWordLen).map { i =>
-      val cands = (1 to math.min(maxPieceLen, i)).map { l =>
-        s"""    SELECT d.w, d.sc + v.s AS sc, d.nt + 1 AS nt,
-           |      CASE WHEN d.path = '' THEN v.piece
-           |        ELSE d.path || chr(31) || v.piece END AS path
-           |    FROM d${i - l} d JOIN v
-           |      ON substring(d.w, ${i - l + 1}, $l) = v.piece
-           |    WHERE len(d.w) >= $i""".stripMargin
-      } :+
-        s"""    SELECT d.w, d.sc - 50000000 AS sc, d.nt + 1 AS nt,
-           |      CASE WHEN d.path = '' THEN '<unk>'
-           |        ELSE d.path || chr(31) || '<unk>' END AS path
-           |    FROM d${i - 1} d WHERE len(d.w) >= $i""".stripMargin
-      s"""d$i AS (
-         |  SELECT w, sc, nt, path FROM (
-         |${cands.mkString("\n    UNION ALL\n")}) c
-         |  QUALIFY row_number() OVER (PARTITION BY w
-         |    ORDER BY sc DESC, nt ASC, path ASC) = 1)""".stripMargin
-    }.mkString(",\n")
-    val finals = (1 to maxWordLen)
-      .map(i => s"SELECT * FROM d$i WHERE len(w) = $i")
-      .mkString(" UNION ALL ")
-    s"""WITH docs2 AS (
-       |  SELECT doc_id, text FROM documents
-       |  WHERE text IS NOT NULL AND trim(text) <> ''
-       |  UNION ALL SELECT * FROM (VALUES
-       |    (300001, 'scanjoin thequery zx'),
-       |    (300002, 'abcd scan order'),
-       |    (300003, 'customer merge vector tablesort')) t(doc_id, text)),
-       |v(piece, s) AS (SELECT * FROM (VALUES $vocabValues)),
-       |tok AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws
-       |  FROM docs2),
-       |wq AS (SELECT DISTINCT unnest(ws) AS w FROM tok),
-       |d0 AS (SELECT w, CAST(0 AS BIGINT) AS sc, 0 AS nt, '' AS path
-       |  FROM wq),
-       |$stages,
-       |seg AS (
-       |  SELECT w, nt, replace(path, chr(31), '|') AS tp
-       |  FROM ($finals)),
-       |wx AS (
-       |  SELECT doc_id, u.i AS i, u.w AS w FROM (
-       |    SELECT doc_id, unnest([{'i': i, 'w': ws[i]}
-       |      FOR i IN generate_series(1, len(ws))]) AS u
-       |    FROM tok)),
-       |j AS (SELECT wx.doc_id, wx.i, s.tp, s.nt
-       |  FROM wx JOIN seg s ON wx.w = s.w)
-       |SELECT doc_id,
-       |  string_agg(tp, '|' ORDER BY i) AS tokens_joined,
-       |  CAST(sum(nt) AS BIGINT) AS n_tokens
-       |FROM j GROUP BY doc_id""".stripMargin
-  }
-
-  private def bpeEncodeSql(n: Int): String = {
-    val replay = (1 to n).foldLeft(
-      "chr(31) || array_to_string(string_split(w, ''), chr(31) || chr(31)) || chr(31)") {
-      (e, k) =>
-        s"replace($e, chr(31) || u.l$k || chr(31) || chr(31) || u.q$k || chr(31), " +
-          s"chr(31) || u.l$k || u.q$k || chr(31))"
-    }
-    val ruleCols = (1 to n).map(k =>
-      s"(SELECT l FROM r$k) AS l$k, (SELECT r FROM r$k) AS q$k").mkString(", ")
-    "WITH " + bpeTrainCtes(n) + s""",
-u AS MATERIALIZED (SELECT $ruleCols),
-d AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws FROM documents),
-e AS (
-  SELECT d.doc_id, flatten(list_transform(d.ws, w ->
-    string_split(trim($replay, chr(31)), chr(31) || chr(31)))) AS toks
-  FROM d, u)
-SELECT doc_id, array_to_string(toks, '|') AS tokens_joined,
-  CAST(len(toks) AS BIGINT) AS n_tokens
-FROM e"""
-  }
-
-  /** DuckDB replay of [[graft.ops.Pq]]'s planted-codebook encode + ADC:
-    * the codebook VALUES are the same dyadic formula `plantedModel`
-    * states ((j*31 + i*17 + d*7) % 19 - 9) / 16 — exact in decimal text,
-    * binary doubles and parquet floats alike — and every fold runs in
-    * the shared list_reduce(list_prepend(0.0, …)) element order, so
-    * distances match bit for bit. The LUT is the vec_id=0 row of the
-    * same dists relation, exactly as the engine's driver-side lut
-    * mirrors its own subDists fold. */
-  private def pqAdcSql(dim: Int, m: Int, k: Int, topk: Int): String = {
-    val dsub = dim / m
-    val cbRows = (for (j <- 0 until m; i <- 0 until k) yield {
-      // Locale.ROOT: the f"" interpolator uses the JVM default locale,
-      // and a comma-decimal locale would corrupt the SQL list literals
-      val vals = (0 until dsub)
-        .map(d => String.format(java.util.Locale.ROOT, "%.4f",
-          Double.box(((j * 31 + i * 17 + d * 7) % 19 - 9) / 16.0)))
-        .mkString(", ")
-      s"($j, $i, [$vals])"
-    }).mkString(",\n    ")
-    s"""WITH cb(j, i, c) AS (VALUES
-    $cbRows),
-e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings),
-dists AS MATERIALIZED (
-  SELECT e.vec_id, cb.j, cb.i,
-    list_reduce(list_prepend(0.0,
-      [(e.v[cb.j * $dsub + d] - cb.c[d]) * (e.v[cb.j * $dsub + d] - cb.c[d])
-       FOR d IN generate_series(1, $dsub)]),
-      (acc, x) -> acc + x) AS dist
-  FROM e, cb),
-codes AS (
-  SELECT vec_id, j, i AS code FROM (
-    SELECT vec_id, j, i,
-      row_number() OVER (PARTITION BY vec_id, j ORDER BY dist, i) AS rn
-    FROM dists) WHERE rn = 1),
-lut AS (SELECT j, i, dist FROM dists WHERE vec_id = 0)
-SELECT c.vec_id,
-  array_to_string(list(c.code ORDER BY c.j), '|') AS codes_joined,
-  list_reduce(list_prepend(0.0, list(l.dist ORDER BY c.j)),
-    (acc, x) -> acc + x) AS adc_dist
-FROM codes c JOIN lut l ON c.j = l.j AND c.code = l.i
-GROUP BY c.vec_id
-ORDER BY adc_dist, c.vec_id LIMIT $topk"""
-  }
-
-  // -------------------------------------------------------------------
-  // DuckDB oracles. Column names/aliases match the Spark results exactly
-  // (driver compares after sorting columns by name). Queries whose
-  // semantics DuckDB cannot replicate (xxhash64/simhash/LSH internals)
-  // are omitted -> rows-only check; their correctness is asserted in
-  // ScalaTest against brute-force oracles instead.
-  // -------------------------------------------------------------------
-  /** Min-reachability clusters over the exact 3-gram Jaccard pair graph
-    * — shared verbatim by q_dedup_clusters (local checkpoints) and
-    * q_dedup_clusters_star (reliable checkpoints): the two truncation
-    * paths promise identical labels. */
-  private val dedupClustersSql: String =
-    """WITH RECURSIVE w AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-      |  FROM documents),
-      |sh AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-      |         ELSE list_distinct([array_to_string(ws[i:i+2], ' ')
-      |                             for i in range(1, len(ws) - 1)])
-      |    END AS s
-      |  FROM w),
-      |p AS (
-      |  SELECT a.doc_id AS ia, b.doc_id AS ib
-      |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      |  WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-      |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5),
-      |e AS (SELECT ia AS src, ib AS dst FROM p
-      |      UNION ALL SELECT ib, ia FROM p),
-      |reach(id, r) AS (
-      |  SELECT DISTINCT src, src FROM e
-      |  UNION
-      |  SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id)
-      |SELECT id, min(r) AS cluster_id FROM reach GROUP BY id""".stripMargin
-
-  def oracleSql: Map[String, String] = oracleSqlBase ++
-    // the q_sql_tpch_* portability rows share the q_tpch_* oracle text
-    // verbatim (one text, two engines — see sqlTpchPortability)
-    (1 to 22).map(n => s"q_sql_tpch_q$n" -> oracleSqlBase(s"q_tpch_q$n"))
-
-  /** Shared DuckDB replay of plantedHtml + Html.extract (the u and
-    * s1..s4 CTEs) — used by the q_html_extract oracle and the
-    * q_cc_pipeline composition oracle. Ends with s4(doc_id, html,
-    * text_clean). */
-  private val HtmlReplayCtes: String =
-    """WITH u AS (
-        |  SELECT doc_id,
-        |    '<html><head><title>Doc ' || doc_id
-        |    || '</title><script type="text/javascript">var t = '
-        |    || (doc_id % 97)
-        |    || ';</script><style>.c{color:red}</style></head><body><h1>Doc '
-        |    || doc_id || '</h1><p>' || text
-        |    || '</p><a href="/next/' || (doc_id % 10) || '">next page</a>'
-        |    || (CASE WHEN doc_id % 3 = 0
-        |         THEN '<a href="/rel">related</a>' ELSE '' END)
-        |    || '<div class="footer">&copy; 2026 &amp; co &#39;ok&#39;'
-        |    || '</div></body></html>' AS html
-        |  FROM documents),
-        |s1 AS (SELECT doc_id, html, regexp_replace(regexp_replace(
-        |    regexp_replace(html, '(?i)<head[ >][\s\S]*?</head>', ' ', 'g'),
-        |    '(?i)<script[^>]*>[\s\S]*?</script>', ' ', 'g'),
-        |    '(?i)<style[^>]*>[\s\S]*?</style>', ' ', 'g') AS nos FROM u),
-        |s2 AS (SELECT doc_id, html,
-        |    regexp_replace(nos, '<[^>]*>', ' ', 'g') AS notags FROM s1),
-        |s3 AS (SELECT doc_id, html,
-        |    replace(replace(replace(replace(replace(replace(notags,
-        |      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        |      '&nbsp;', ' '), '&amp;', '&') AS dec FROM s2),
-        |s4 AS (SELECT doc_id, html,
-        |    trim(regexp_replace(dec, '\s+', ' ', 'g')) AS text_clean
-        |  FROM s3)""".stripMargin + "\n"
-
-  private lazy val oracleSqlBase: Map[String, String] = Map(
-    "q_scan" -> "SELECT r_regionkey, r_name FROM region",
-
-    "q_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-        |FROM lineitem WHERE l_quantity >= 45 AND l_returnflag = 'R'""".stripMargin,
-
-    "q_projection" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  l_extendedprice * (1 - l_discount) AS revenue FROM lineitem""".stripMargin,
-
-    "q_binary_ops" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  l_returnflag = 'R' AS c_eq,
-        |  l_linestatus != 'F' AS c_neq,
-        |  l_quantity > 30 AS c_gt,
-        |  l_quantity >= 30 AS c_gte,
-        |  l_quantity < 10 AS c_lt,
-        |  l_quantity <= 10 AS c_lte,
-        |  (l_quantity > 30 AND l_discount < 0.05) OR l_tax > 0.05 AS c_bool,
-        |  l_quantity + l_tax AS a_add,
-        |  l_extendedprice - 100.0 AS a_sub,
-        |  l_extendedprice * l_discount AS a_mul,
-        |  l_extendedprice / l_quantity AS a_div,
-        |  l_partkey % 7 AS a_mod
-        |FROM lineitem WHERE l_orderkey <= 1000""".stripMargin,
-
-    "q_scalar_fns" ->
-      """SELECT p_partkey,
-        |  concat(p_brand, '_', p_type) AS brand_type,
-        |  substring(p_name, 3, 10) AS name_sub,
-        |  abs(p_retailprice - 1500.0) AS price_dev,
-        |  sqrt(p_size) AS size_sqrt,
-        |  power(p_size, 2) AS size_sq
-        |FROM part""".stripMargin,
-
-    "q_agg_grouped" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(l_quantity) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base,
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,8))), 2) AS DOUBLE) AS sum_disc_price,
-        |  sum(l_quantity) / count(*) AS avg_qty,
-        |  min(l_extendedprice) AS min_price,
-        |  max(l_extendedprice) AS max_price,
-        |  count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_agg_global" ->
-      """SELECT
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |  min(o_totalprice) AS min_price,
-        |  max(o_totalprice) AS max_price,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(o_totalprice) AS avg_price,
-        |  count(*) AS n_orders
-        |FROM orders""".stripMargin,
-
-    "q_agg_expr" ->
-      """SELECT l_quantity <= 25 AS small_qty, count(*) AS n,
-        |  sum(l_quantity) AS sum_qty
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q_join_inner" ->
-      """SELECT r_name, n_name, count(*) AS n_cust,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-
-    "q_join_left" ->
-      """SELECT c_custkey, count(o_orderkey) AS n_orders
-        |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey""".stripMargin,
-
-    "q_join_right" ->
-      """SELECT c_mktsegment, count(o_orderkey) AS n_orders, count(*) AS n_rows
-        |FROM orders RIGHT JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "q_join_multikey" ->
-      """SELECT count(*) AS n, sum(a.l_quantity * b.l_quantity) AS sum_qq
-        |FROM lineitem a JOIN lineitem b
-        |  ON a.l_orderkey = b.l_orderkey AND a.l_linenumber = b.l_linenumber""".stripMargin,
-
-    "q_join_semi" ->
-      """SELECT c_mktsegment, count(*) AS n_cust FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "q_join_anti" ->
-      """SELECT c_mktsegment, count(*) AS n_cust FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "q_join_full" ->
-      """SELECT count(*) AS n_rows, count(c_custkey) AS n_left,
-        |  count(o_orderkey) AS n_right,
-        |  count(CASE WHEN c_custkey IS NULL THEN 1 END) AS n_left_null
-        |FROM (SELECT * FROM customer WHERE c_custkey <= 900) c
-        |FULL OUTER JOIN (SELECT * FROM orders WHERE o_custkey >= 800) o
-        |  ON c_custkey = o_custkey""".stripMargin,
-
-    "q_csv_catalog" ->
-      """SELECT name, score
-        |FROM read_csv_auto('/root/repo/src/test/resources/data/people.csv')
-        |WHERE age >= 24""".stripMargin,
-
-    // raw line reader via read_text + newline split (read_csv would
-    // try to PARSE the quotes/tabs the format promises not to touch);
-    // the trailing-newline artifact is the one empty element filtered
-    // replays the construction: the parser must recover every document
-    // from the concatenated WARC blobs with the declared byte length and
-    // a bit-exact body (md5 over the same UTF-8 bytes both engines);
-    // the truncated tail plant appears in no row on either side
-    "q_warc_ingest" ->
-      """SELECT doc_id,
-        |  'https://' || lower(source) || '.example.com/doc/' || doc_id
-        |    AS target_uri,
-        |  CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS content_length,
-        |  md5(text) AS body_md5
-        |FROM documents""".stripMargin,
-
-    // the compressed roundtrip recovers the identical set (the garbage
-    // member tail must cost nothing)
-    "q_warc_gzip" ->
-      """SELECT doc_id,
-        |  'https://' || lower(source) || '.example.com/doc/' || doc_id
-        |    AS target_uri,
-        |  CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS content_length,
-        |  md5(text) AS body_md5
-        |FROM documents""".stripMargin,
-
-    "q_text_source" ->
-      """WITH l AS (
-        |  SELECT unnest(string_split(content, chr(10))) AS value
-        |  FROM read_text('/root/repo/src/test/resources/data/corpus.txt'))
-        |SELECT value, CAST(length(value) AS BIGINT) AS n_chars,
-        |  CAST(CASE WHEN trim(value) = '' THEN 0
-        |       ELSE len(string_split_regex(trim(value), '\s+')) END
-        |    AS BIGINT) AS n_tokens
-        |FROM l WHERE value <> ''""".stripMargin,
-
-    // DuckDB's ignore_errors nulls unparseable lines instead of
-    // dropping them — filter to mirror Spark's DROPMALFORMED
-    "q_json_malformed" ->
-      """SELECT id, text, lang FROM read_json(
-        |  '/root/repo/src/test/resources/data/docs_malformed.jsonl',
-        |  format = 'newline_delimited',
-        |  columns = {'id': 'BIGINT', 'text': 'VARCHAR', 'lang': 'VARCHAR'},
-        |  ignore_errors = true)
-        |WHERE id IS NOT NULL""".stripMargin,
-
-    // the round-trips must reproduce the parquet original exactly
-    "q_json_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation",
-    "q_orc_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation",
-
-    "q_sql_frontend" ->
-      """SELECT o_orderpriority, count(*) AS n FROM orders
-        |WHERE o_totalprice > 100000 GROUP BY o_orderpriority""".stripMargin,
-
-    "q_sort_limit" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q_distinct" ->
-      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
-
-    "q_union" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |UNION
-        |SELECT s_nationkey AS nationkey FROM supplier""".stripMargin,
-
-    "q_window" -> WindowSql,
-
-    "q_having" ->
-      """SELECT l_partkey, count(*) AS n, max(l_quantity) AS max_qty
-        |FROM lineitem GROUP BY l_partkey HAVING count(*) >= 35""".stripMargin,
-
-    "q_events_hourly" ->
-      """SELECT CAST(date_trunc('hour', ts) AS VARCHAR) AS hour, event_type,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q_events_sliding" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800 AS b
-        |  FROM events),
-        |x AS (
-        |  SELECT event_type, unnest([b, b - 1800]) AS ws FROM e)
-        |SELECT CAST(make_timestamp(ws * 1000000) AS VARCHAR) AS win_start,
-        |  event_type, count(*) AS n
-        |FROM x GROUP BY 1, 2""".stripMargin,
-
-    // mirrors Profile.aucExact: same integer score, same doubled
-    // tie-averaged rank construction
-    "q_auc" ->
-      """WITH s AS (
-        |  SELECT (1000000 * len(list_filter(
-        |       string_split_regex(trim(lower(text)), '\s+'),
-        |       x -> x IN ('the', 'a', 'and', 'of', 'to'))))
-        |    // greatest(len(string_split_regex(trim(lower(text)), '\s+')), 1)
-        |      AS sc,
-        |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        |  FROM documents),
-        |g AS (
-        |  SELECT sc, CAST(count(*) AS BIGINT) AS m,
-        |    CAST(sum(y) AS BIGINT) AS m_pos
-        |  FROM s GROUP BY 1),
-        |c AS (
-        |  SELECT *, coalesce(sum(m) OVER (ORDER BY sc
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum_before
-        |  FROM g),
-        |f AS (
-        |  SELECT CAST(sum(m_pos) AS BIGINT) AS n_pos,
-        |    CAST(sum(m) - sum(m_pos) AS BIGINT) AS n_neg,
-        |    CAST(sum(m_pos * (2 * cum_before + m + 1)) AS BIGINT) AS r2
-        |  FROM c)
-        |SELECT n_pos, n_neg,
-        |  CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL
-        |       ELSE (1000000 * (r2 - n_pos * (n_pos + 1)))
-        |            // (2 * n_pos * n_neg) END AS auc_micros
-        |FROM f""".stripMargin,
-
-    // mirrors q_decile_lift: same integer score, same CDF bin rule
-    "q_decile_lift" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    (1000000 * len(list_filter(
-        |       string_split_regex(trim(lower(text)), '\s+'),
-        |       x -> x IN ('the', 'a', 'and', 'of', 'to'))))
-        |    // greatest(len(string_split_regex(trim(lower(text)), '\s+')), 1)
-        |      AS score_micros,
-        |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        |  FROM documents),
-        |c AS (SELECT score_micros AS u, count(*) AS n_v FROM s GROUP BY 1),
-        |b AS (
-        |  SELECT u, coalesce(sum(n_v) OVER (ORDER BY u
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum_before,
-        |    sum(n_v) OVER () AS n_total
-        |  FROM c),
-        |m AS (SELECT u,
-        |  CAST(least(9, cum_before * 10 // n_total) AS BIGINT) AS bin
-        |  FROM b)
-        |SELECT m.bin, count(*) AS n, CAST(sum(s.y) AS BIGINT) AS n_pos,
-        |  (1000000 * CAST(sum(s.y) AS BIGINT)) // count(*) AS pos_rate_micros
-        |FROM s JOIN m ON s.score_micros = m.u
-        |GROUP BY m.bin""".stripMargin,
-
-    // mirrors Profile.standardize: same exact integer moments, same
-    // cancellation-free z chain (one divide, one sqrt per row)
-    "q_standardize" ->
-      """WITH r AS (
-        |  SELECT event_id, event_type,
-        |    CAST(round(CAST(value AS DECIMAL(18,2)) * 100, 0) AS BIGINT)
-        |      AS value_unit
-        |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)),
-        |m AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(value_unit) AS BIGINT) AS s1,
-        |    CAST(sum(value_unit * value_unit) AS BIGINT) AS s2
-        |  FROM r GROUP BY 1)
-        |SELECT r.event_id, r.event_type, r.value_unit,
-        |  CASE WHEN n * s2 - s1 * s1 = 0 THEN NULL
-        |       ELSE CAST(r.value_unit * n - s1 AS DOUBLE)
-        |            / sqrt(CAST(n * s2 - s1 * s1 AS DOUBLE)) END AS z
-        |FROM r JOIN m USING (event_type)""".stripMargin,
-
-    // mirrors Profile.joinPreflight: same non-null-key universes, same
-    // (product, string-key) tie order for the hot key
-    "q_join_preflight" ->
-      """WITH cl AS (
-        |  SELECT CAST(l_orderkey AS VARCHAR) AS k, count(*) AS cl
-        |  FROM lineitem WHERE l_orderkey IS NOT NULL GROUP BY 1),
-        |cr AS (
-        |  SELECT CAST(o_orderkey AS VARCHAR) AS k, count(*) AS cr
-        |  FROM orders WHERE o_orderkey IS NOT NULL GROUP BY 1),
-        |j AS (
-        |  SELECT coalesce(cl.k, cr.k) AS k, cl.cl, cr.cr, cl.cl * cr.cr AS prod
-        |  FROM cl FULL OUTER JOIN cr ON cl.k = cr.k)
-        |SELECT
-        |  CAST(sum(coalesce(cl, 0)) AS BIGINT) AS n_left,
-        |  CAST(sum(coalesce(cr, 0)) AS BIGINT) AS n_right,
-        |  count(cl) AS left_keys, count(cr) AS right_keys,
-        |  count(prod) AS matched_keys,
-        |  CAST(coalesce(sum(prod), 0) AS BIGINT) AS est_rows,
-        |  max(prod) AS max_key_product,
-        |  (SELECT k FROM j WHERE prod IS NOT NULL
-        |   ORDER BY prod DESC, k DESC LIMIT 1) AS hot_key
-        |FROM j""".stripMargin,
-
-    // mirrors TimeSeries.autocorr: same lag pairing on the same total
-    // order, same exact moments, same IEEE Pearson token sequence
-    "q_autocorr" ->
-      """WITH e AS (
-        |  SELECT event_type, event_id,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-        |    CAST(round(CAST(value AS DECIMAL(18,2)) * 100, 0) AS BIGINT)
-        |      AS u
-        |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)),
-        |p AS (
-        |  SELECT event_type, u,
-        |    lag(u, 1) OVER (PARTITION BY event_type
-        |      ORDER BY sec, event_id) AS v
-        |  FROM e),
-        |m AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_pairs,
-        |    CAST(sum(u) AS BIGINT) AS su, CAST(sum(v) AS BIGINT) AS sv,
-        |    CAST(sum(u * v) AS BIGINT) AS suv,
-        |    CAST(sum(u * u) AS BIGINT) AS su2,
-        |    CAST(sum(v * v) AS BIGINT) AS sv2
-        |  FROM p WHERE v IS NOT NULL GROUP BY 1)
-        |SELECT event_type, n_pairs,
-        |  CASE WHEN n_pairs * su2 - su * su = 0
-        |         OR n_pairs * sv2 - sv * sv = 0 THEN NULL
-        |       ELSE CAST(n_pairs * suv - su * sv AS DOUBLE)
-        |            / (sqrt(CAST(n_pairs * su2 - su * su AS DOUBLE))
-        |               * sqrt(CAST(n_pairs * sv2 - sv * sv AS DOUBLE)))
-        |  END AS autocorr
-        |FROM m""".stripMargin,
-
-    // mirrors TimeSeries.ewmaDyadic: same trailing-16 frame list, same
-    // dyadic weights (1-based list -> 1 << (i-1); Spark's 0-based
-    // transform index -> 1 << i), same truncating micros divide
-    "q_ewma" ->
-      """WITH e AS (
-        |  SELECT event_type, event_id,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-        |    CAST(round(CAST(value AS DECIMAL(18,2)) * 100, 0) AS BIGINT)
-        |      AS value_unit
-        |  FROM events
-        |  WHERE event_id < 5000 AND value IS NOT NULL AND NOT isnan(value)),
-        |w AS (
-        |  SELECT event_type, event_id, value_unit,
-        |    list(value_unit) OVER (PARTITION BY event_type
-        |      ORDER BY sec, event_id
-        |      ROWS BETWEEN 15 PRECEDING AND CURRENT ROW) AS l
-        |  FROM e)
-        |SELECT event_type, event_id, value_unit,
-        |  CAST((1000000 * list_sum(
-        |     [l[i] * (1 << (i - 1)) FOR i IN generate_series(1, len(l))]))
-        |    // ((1 << len(l)) - 1) AS BIGINT) AS ewma_unit_micros
-        |FROM w""".stripMargin,
-
-    // mirrors Profile.shareShift on the same midpoint split
-    "q_share_shift" ->
-      """WITH e AS (
-        |  SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) AS sec
-        |  FROM events),
-        |b AS (SELECT min(sec) AS lo, max(sec) AS hi FROM e),
-        |t AS (SELECT event_type, (sec * 2 >= lo + hi) AS is_b
-        |      FROM e CROSS JOIN b),
-        |g AS (
-        |  SELECT event_type,
-        |    CAST(sum(CASE WHEN is_b THEN 0 ELSE 1 END) AS BIGINT) AS cnt_a,
-        |    CAST(sum(CASE WHEN is_b THEN 1 ELSE 0 END) AS BIGINT) AS cnt_b
-        |  FROM t GROUP BY 1),
-        |w AS (
-        |  SELECT *, sum(cnt_a) OVER () AS tot_a, sum(cnt_b) OVER () AS tot_b
-        |  FROM g)
-        |SELECT event_type, cnt_a, cnt_b,
-        |  CAST(CASE WHEN tot_a = 0 THEN NULL
-        |       ELSE 1000000 * cnt_a // tot_a END AS BIGINT) AS share_a_micros,
-        |  CAST(CASE WHEN tot_b = 0 THEN NULL
-        |       ELSE 1000000 * cnt_b // tot_b END AS BIGINT) AS share_b_micros,
-        |  CAST((CASE WHEN tot_b = 0 THEN NULL
-        |        ELSE 1000000 * cnt_b // tot_b END)
-        |  - (CASE WHEN tot_a = 0 THEN NULL
-        |          ELSE 1000000 * cnt_a // tot_a END) AS BIGINT) AS delta_micros
-        |FROM w""".stripMargin,
-
-    // sliding-window replication stated directly: an event in hour b is
-    // inside the 3h windows starting b, b-1h, b-2h
-    "q_sliding_distinct" ->
-      """WITH e AS (
-        |  SELECT user_id,
-        |    CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 AS b
-        |  FROM events),
-        |x AS (
-        |  SELECT user_id, unnest([b, b - 3600, b - 7200]) AS ws FROM e)
-        |SELECT CAST(make_timestamp(ws * 1000000) AS VARCHAR) AS win_start,
-        |  count(DISTINCT user_id) AS n_users, count(*) AS n_events
-        |FROM x GROUP BY 1""".stripMargin,
-
-    "q_sessionize" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec
-        |  FROM events),
-        |g AS (
-        |  SELECT user_id, sec, event_id,
-        |    CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id
-        |                                   ORDER BY sec, event_id) > 1800
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM e),
-        |s AS (
-        |  SELECT user_id,
-        |    CAST(SUM(brk) OVER (PARTITION BY user_id ORDER BY sec, event_id
-        |                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |         AS BIGINT) AS sess_id
-        |  FROM g)
-        |SELECT user_id, sess_id, count(*) AS n_events
-        |FROM s GROUP BY user_id, sess_id""".stripMargin,
-
-    "q_window_frames" -> WindowFramesSql,
-
-    "q_string_fns" ->
-      """SELECT p_partkey,
-        |  upper(p_brand) AS up,
-        |  lower(p_type) AS lo,
-        |  length(p_name) AS len,
-        |  trim(p_name) AS tr,
-        |  lpad(p_brand, 12, '_') AS pad,
-        |  regexp_replace(p_type, '[aeiou]', '', 'g') AS novowel,
-        |  string_split(p_type, ' ')[1] AS first_word
-        |FROM part WHERE p_partkey <= 500""".stripMargin,
-
-    "q_array_fns" ->
-      """SELECT doc_id,
-        |  len(list_sort(list_distinct(string_split(text, ' ')))) AS n_distinct,
-        |  list_contains(list_sort(list_distinct(string_split(text, ' '))), 'spark') AS has_spark,
-        |  array_to_string(list_sort(list_distinct(string_split(text, ' ')))[1:3], '|') AS first3_str
-        |FROM documents""".stripMargin,
-
-    "q_percentile" ->
-      """SELECT round(quantile_cont(o_totalprice, 0.5), 2) AS med,
-        |  round(quantile_cont(o_totalprice, 0.9), 2) AS p90,
-        |  round(quantile_cont(o_totalprice, 0.25), 2) AS q1
-        |FROM orders""".stripMargin,
-
-    "q_intersect" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |INTERSECT
-        |SELECT s_nationkey AS nationkey FROM supplier""".stripMargin,
-
-    "q_except" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |EXCEPT
-        |SELECT s_nationkey AS nationkey FROM supplier""".stripMargin,
-
-    // mirrors Sampling.kFold's md5 bucket construction
-    "q_kfold" ->
-      """WITH b AS (
-        |  SELECT n_chars,
-        |    CAST(CAST(('0x' || substring(md5(doc_id::VARCHAR || ':42'),
-        |      1, 12)) AS BIGINT) % 5 AS INT) AS fold
-        |  FROM documents)
-        |SELECT fold, count(*) AS n, CAST(sum(n_chars) AS BIGINT)
-        |  AS sum_chars
-        |FROM b GROUP BY 1""".stripMargin,
-
-    // the bootstrap restated: same md5 uniform, same literal Poisson(1)
-    // CDF chain, exact BIGINT weighted sums per replicate, order
-    // statistics at ranks 5 and 195 of the 200 replicate means
-    "q_bootstrap_ci" ->
-      """WITH rep AS (
-        |  SELECT doc_id, n_chars, i AS rep,
-        |    (CAST(('0x' || substring(md5(doc_id || ':' || i || ':boot'),
-        |      1, 8)) AS BIGINT) + 0.5) / 4294967296.0 AS u
-        |  FROM documents, unnest(generate_series(0, 199)) AS t(i)),
-        |w AS (
-        |  SELECT rep, n_chars,
-        |    CASE WHEN u < 0.36787944117144233 THEN 0
-        |         WHEN u < 0.7357588823428847 THEN 1
-        |         WHEN u < 0.9196986029286058 THEN 2
-        |         WHEN u < 0.9810118431238463 THEN 3
-        |         WHEN u < 0.9963401531726563 THEN 4
-        |         WHEN u < 0.9994058151824183 THEN 5
-        |         WHEN u < 0.999916758850712 THEN 6
-        |         WHEN u < 0.9999897508033253 THEN 7
-        |         WHEN u < 0.999998874797402 THEN 8
-        |         WHEN u < 0.9999998885745216 THEN 9
-        |         ELSE 10 END AS w
-        |  FROM rep),
-        |m AS (
-        |  SELECT rep, CAST(sum(w * n_chars) AS DOUBLE) / sum(w) AS mean_rep
-        |  FROM w GROUP BY rep HAVING sum(w) > 0),
-        |r AS (
-        |  SELECT mean_rep, row_number() OVER (ORDER BY mean_rep, rep) AS rn,
-        |    count(*) OVER () AS n_eff
-        |  FROM m),
-        |f AS (
-        |  SELECT CAST(sum(n_chars) AS DOUBLE) / count(*) AS mean_full
-        |  FROM documents)
-        |SELECT f.mean_full,
-        |  (SELECT mean_rep FROM r WHERE rn = 5) AS ci_lo,
-        |  (SELECT mean_rep FROM r WHERE rn = 195) AS ci_hi,
-        |  (SELECT CAST(any_value(n_eff) AS BIGINT) FROM r) AS n_replicates
-        |FROM f""".stripMargin,
-
-    // mirrors Profile.abCompare: identical decimal moment sums and the
-    // identical Welch expression tree
-    "q_ab_test" ->
-      """WITH e AS (
-        |  SELECT CAST(user_id % 5 AS INT) AS segment, event_type, value
-        |  FROM events WHERE event_type IN ('click', 'purchase')
-        |    AND value IS NOT NULL AND NOT isnan(value)),
-        |a AS (
-        |  SELECT segment,
-        |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS n_a,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      AS n_b,
-        |    CAST(sum(CAST(CASE WHEN event_type = 'click' THEN value
-        |      ELSE 0.0 END AS DECIMAL(38,8))) AS DOUBLE) AS sa,
-        |    CAST(sum(CAST(CASE WHEN event_type = 'purchase' THEN value
-        |      ELSE 0.0 END AS DECIMAL(38,8))) AS DOUBLE) AS sb,
-        |    CAST(sum(CAST(CASE WHEN event_type = 'click'
-        |      THEN value * value ELSE 0.0 END AS DECIMAL(38,8)))
-        |      AS DOUBLE) AS ssa,
-        |    CAST(sum(CAST(CASE WHEN event_type = 'purchase'
-        |      THEN value * value ELSE 0.0 END AS DECIMAL(38,8)))
-        |      AS DOUBLE) AS ssb
-        |  FROM e GROUP BY 1),
-        |f AS (
-        |  SELECT *, CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb
-        |  FROM a WHERE n_a > 1 AND n_b > 1),
-        |g AS (
-        |  SELECT segment, n_a, n_b, sa / na AS ma, sb / nb AS mb,
-        |    (ssa - sa * sa / na) / (na - 1.0) / na
-        |      + (ssb - sb * sb / nb) / (nb - 1.0) / nb AS se2,
-        |    na, nb
-        |  FROM f)
-        |SELECT segment, CAST(n_a AS BIGINT) AS n_a,
-        |  CAST(n_b AS BIGINT) AS n_b,
-        |  round(ma, 6) AS mean_a, round(mb, 6) AS mean_b,
-        |  round(mb - ma, 6) AS diff,
-        |  CASE WHEN se2 > 0.0 THEN round((mb - ma) / sqrt(se2), 6) END
-        |    AS t
-        |FROM g""".stripMargin,
-
-    // mirrors Profile.groupRegression: identical decimal moment sums
-    // and the identical closed-form expression tree over them
-    "q_group_regression" ->
-      """WITH a AS (
-        |  SELECT l_returnflag, count(*) AS n,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(38,8))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(38,8))) AS DOUBLE)
-        |      AS sy,
-        |    CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(38,8)))
-        |      AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(l_extendedprice * l_extendedprice
-        |      AS DECIMAL(38,8))) AS DOUBLE) AS syy,
-        |    CAST(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(38,8)))
-        |      AS DOUBLE) AS sxy
-        |  FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-        |  GROUP BY 1),
-        |f AS (
-        |  SELECT l_returnflag, n,
-        |    sxx - sx * sx / CAST(n AS DOUBLE) AS ssx,
-        |    syy - sy * sy / CAST(n AS DOUBLE) AS ssy,
-        |    sxy - sx * sy / CAST(n AS DOUBLE) AS sxy_c,
-        |    sx, sy
-        |  FROM a)
-        |SELECT l_returnflag, n,
-        |  CASE WHEN ssx > 0.0 THEN round(sxy_c / ssx, 9) END AS slope,
-        |  CASE WHEN ssx > 0.0 THEN
-        |    round((sy - (sxy_c / ssx) * sx) / CAST(n AS DOUBLE), 9)
-        |  END AS intercept,
-        |  CASE WHEN ssx > 0.0 AND ssy > 0.0 THEN
-        |    round(sxy_c * sxy_c / (ssx * ssy), 9) END AS r2
-        |FROM f""".stripMargin,
-
-    "q_group_mode" ->
-      """SELECT l_returnflag, l_quantity AS mode_qty, n FROM (
-        |  SELECT l_returnflag, l_quantity, count(*) AS n,
-        |    row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY count(*) DESC, l_quantity) AS rn
-        |  FROM lineitem GROUP BY 1, 2)
-        |WHERE rn = 1""".stripMargin,
-
-    "q_except_all" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |EXCEPT ALL
-        |SELECT s_nationkey AS nationkey FROM supplier""".stripMargin,
-
-    "q_intersect_all" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |INTERSECT ALL
-        |SELECT s_nationkey AS nationkey FROM supplier""".stripMargin,
-
-    "q_case_null" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CASE WHEN l_quantity > 40 THEN 'high'
-        |       WHEN l_quantity > 20 THEN 'mid' ELSE 'low' END AS qty_band,
-        |  coalesce(nullif(l_returnflag, 'N'), 'none') AS flag_or_none,
-        |  (l_discount = 0) AS no_disc
-        |FROM lineitem WHERE l_orderkey <= 500""".stripMargin,
-
-    "q_date_parts" ->
-      """SELECT o_orderkey, year(o_orderdate) AS y, month(o_orderdate) AS m,
-        |  day(o_orderdate) AS d FROM orders""".stripMargin,
-
-    "q_count_distinct" ->
-      """SELECT count(DISTINCT l_partkey) AS n_parts,
-        |  count(DISTINCT l_suppkey) AS n_supps, count(*) AS n_rows
-        |FROM lineitem""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT r_name, n_name, count(*) AS n_cust
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP(r_name, n_name)""".stripMargin,
-
-    "q_tpch_q3" -> TpchQ3Sql,
-
-    "q_tpch_q10" -> TpchQ10Sql,
-
-    "q_tpch_q18" -> TpchQ18Sql,
-
-    "q_tpch_q7" ->
-      """SELECT n2.n_name AS supp_nation, n1.n_name AS cust_nation,
-        |  year(l_shipdate) AS l_year,
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(28,8))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "q_tpch_q8" ->
-      """SELECT year(o_orderdate) AS o_year,
-        |  round(CAST(sum(CAST(CASE WHEN n2.n_name = 'NATION_3'
-        |      THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END
-        |      AS DECIMAL(28,8))) AS DOUBLE)
-        |    / CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-        |      AS DECIMAL(28,8))) AS DOUBLE), 6) AS mkt_share
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |JOIN region ON n1.n_regionkey = r_regionkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |WHERE p_type = 'STANDARD' AND r_name = 'ASIA'
-        |GROUP BY 1""".stripMargin,
-
-    "q_tpch_q19" ->
-      """SELECT
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(28,8))), 2) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity >= 1 AND l_quantity <= 30)
-        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30
-        |       AND l_quantity >= 10 AND l_quantity <= 40)""".stripMargin,
-
-    "q_tpch_q22" ->
-      """WITH a AS (
-        |  SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-        |           / count(*) AS avg_bal
-        |  FROM customer WHERE c_acctbal > 0),
-        |r AS (
-        |  SELECT c_custkey, c_nationkey, c_acctbal FROM customer, a
-        |  WHERE c_acctbal > a.avg_bal
-        |    AND c_custkey NOT IN (SELECT o_custkey FROM orders
-        |                          WHERE o_orderpriority = '1-URGENT'))
-        |SELECT n_name, count(*) AS n_cust,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-        |FROM r JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-
-    "q_tpch_q5" ->
-      """SELECT n_name,
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,8))), 2) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE c_nationkey = s_nationkey AND r_name = 'ASIA'
-        |GROUP BY n_name""".stripMargin,
-
-    "q_tpch_q6" -> TpchQ6Sql,
-
-    "q_tpch_q14" ->
-      """SELECT round(100.0 *
-        |    CAST(round(sum(CAST(CASE WHEN p_type = 'PROMO'
-        |        THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END
-        |      AS DECIMAL(28,8))), 2) AS DOUBLE) /
-        |    CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |      AS DECIMAL(28,8))), 2) AS DOUBLE), 4) AS promo_pct,
-        |  count(*) AS n
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= '1996-03-01' AND l_shipdate < '1996-04-01'""".stripMargin,
-
-    "q_tpch_q4" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND l_shipdate > o_orderdate + INTERVAL 10 DAY)
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "q_tpch_q17" ->
-      """WITH pa AS (
-        |  SELECT l_partkey AS pa_partkey, count(*) AS cnt,
-        |         sum(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty
-        |  FROM lineitem GROUP BY l_partkey)
-        |SELECT p_brand, count(*) AS n_small,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_extended
-        |FROM lineitem
-        |JOIN part ON p_partkey = l_partkey
-        |JOIN pa ON pa_partkey = l_partkey
-        |WHERE CAST(l_quantity AS DECIMAL(18,2)) * cnt * 5 < sum_qty
-        |GROUP BY p_brand""".stripMargin,
-
-    "q_tpch_q1" -> TpchQ1Sql,
-
-    "q_tpch_q2" ->
-      """WITH link AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-        |cand AS (
-        |  SELECT p_partkey, p_brand, s_acctbal, s_name, n_name, l_suppkey
-        |  FROM part
-        |  JOIN link ON p_partkey = l_partkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  WHERE p_size BETWEEN 10 AND 20 AND p_type = 'STANDARD'
-        |    AND r_name = 'EUROPE'),
-        |mb AS (SELECT p_partkey AS mb_partkey, min(s_acctbal) AS min_bal
-        |       FROM cand GROUP BY 1)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, p_brand, l_suppkey
-        |FROM cand JOIN mb ON p_partkey = mb_partkey
-        |WHERE s_acctbal = min_bal
-        |ORDER BY s_acctbal DESC, p_partkey, l_suppkey LIMIT 20""".stripMargin,
-
-    "q_tpch_q9" ->
-      """SELECT n_name, year(o_orderdate) AS o_year,
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |      - 0.1 * p_retailprice * l_quantity
-        |    AS DECIMAL(28,8))), 2) AS DOUBLE) AS sum_profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE p_name LIKE '%red%'
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q_tpch_q11" ->
-      """WITH base AS (
-        |  SELECT l_partkey, l_extendedprice * (1 - l_discount) AS disc
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE n_name = 'NATION_1'),
-        |pp AS (
-        |  SELECT l_partkey, CAST(round(sum(CAST(disc AS DECIMAL(28,8))), 2)
-        |    AS DOUBLE) AS part_value
-        |  FROM base GROUP BY 1),
-        |tot AS (
-        |  SELECT CAST(round(sum(CAST(disc AS DECIMAL(28,8))), 2) AS DOUBLE)
-        |    * 0.002 AS threshold
-        |  FROM base)
-        |SELECT l_partkey, part_value FROM pp CROSS JOIN tot
-        |WHERE part_value > threshold
-        |ORDER BY part_value DESC, l_partkey LIMIT 50""".stripMargin,
-
-    "q_tpch_q12" -> TpchQ12Sql,
-
-    "q_tpch_q13" ->
-      """WITH pc AS (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer
-        |  LEFT JOIN (SELECT * FROM orders WHERE o_orderpriority <> '1-URGENT') o
-        |    ON c_custkey = o_custkey
-        |  GROUP BY 1)
-        |SELECT c_count, count(*) AS custdist
-        |FROM pc GROUP BY 1
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q_tpch_q15" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |    CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |      AS DECIMAL(28,8))), 2) AS DOUBLE) AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1996-04-01'
-        |  GROUP BY 1),
-        |mx AS (SELECT max(total_revenue) AS max_rev FROM rev)
-        |SELECT s_suppkey, s_name, total_revenue
-        |FROM supplier
-        |JOIN rev ON s_suppkey = l_suppkey
-        |CROSS JOIN mx
-        |WHERE total_revenue = max_rev
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q_tpch_q16" ->
-      """WITH link AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
-        |SELECT p_brand, p_type, p_size,
-        |  count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM part JOIN link ON p_partkey = l_partkey
-        |WHERE p_brand <> 'Brand#1' AND p_size BETWEEN 1 AND 25
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-        |                        WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "q_tpch_q20" ->
-      """WITH heavy AS (
-        |  SELECT l_suppkey
-        |  FROM lineitem
-        |  WHERE year(l_shipdate) = 1996
-        |    AND l_partkey IN (SELECT p_partkey FROM part
-        |                      WHERE p_name LIKE 'red%')
-        |  GROUP BY l_suppkey
-        |  HAVING CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 50.0)
-        |SELECT s_suppkey, s_name
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |WHERE n_name = 'NATION_2'
-        |  AND s_suppkey IN (SELECT l_suppkey FROM heavy)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q_tpch_q21" ->
-      """WITH l1 AS (
-        |  SELECT l_orderkey, l_suppkey
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F'
-        |    AND l_shipdate > o_orderdate + INTERVAL 20 DAY)
-        |SELECT s_name, count(*) AS numwait
-        |FROM l1
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE n_name = 'NATION_1'
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM l1 l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey)
-        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
-
-    // the HLL construction restated end to end: 60-bit md5 hash, bucket
-    // = h mod 64, rho = 55 - bitlength(h div 64) via bin(), registers =
-    // per-bucket max, harmonic sum as an EXACT bigint scaled by 2^55.
-    // Float parity: the alpha factor goes through CAST(0.709 AS DOUBLE)
-    // before any multiply (DuckDB's bare 0.709 is DECIMAL — multiplying
-    // in decimal then converting would land one ulp off Spark's
-    // double-from-the-start chain); every multiplier after it (64, 64,
-    // 2^55) is a power-of-two-times-exact value, so the numerator is
-    // exact in both engines and the one division is correctly rounded
-    "q_hll_distinct" ->
-      """WITH h AS (
-        |  SELECT CAST(('0x' || substring(md5(CAST(o_custkey AS VARCHAR)
-        |    || ':hll'), 1, 15)) AS BIGINT) AS hv
-        |  FROM orders),
-        |rho AS (
-        |  SELECT CAST(hv % 64 AS INT) AS bucket,
-        |    CASE WHEN hv // 64 = 0 THEN 55
-        |         ELSE 55 - length(bin(hv // 64)) END AS rho
-        |  FROM h),
-        |reg AS (SELECT bucket, max(rho) AS reg FROM rho GROUP BY bucket),
-        |agg AS (
-        |  SELECT sum(1::BIGINT << (55 - reg)) AS s_scaled,
-        |    count(*) AS n_present
-        |  FROM reg)
-        |SELECT
-        |  CASE WHEN CAST(0.709 AS DOUBLE) * 64 * 64 * 36028797018963968.0
-        |         / (s_scaled + (64 - n_present) * (1::BIGINT << 55)) <= 160.0
-        |       AND 64 - n_present > 0
-        |    THEN 64.0 * ln(64.0 / (64 - n_present))
-        |    ELSE CAST(0.709 AS DOUBLE) * 64 * 64 * 36028797018963968.0
-        |         / (s_scaled + (64 - n_present) * (1::BIGINT << 55))
-        |  END AS est_n,
-        |  CAST(n_present AS INT) AS n_buckets,
-        |  (SELECT count(DISTINCT o_custkey) FROM orders) AS exact_n
-        |FROM agg""".stripMargin,
-
-    // merging disjoint halves IS the whole-table sketch (same rows, max
-    // is associative), so one estimate serves both columns
-    "q_hll_merge" ->
-      """WITH h AS (
-        |  SELECT CAST(('0x' || substring(md5(CAST(o_custkey AS VARCHAR)
-        |    || ':hll'), 1, 15)) AS BIGINT) AS hv
-        |  FROM orders),
-        |rho AS (
-        |  SELECT CAST(hv % 64 AS INT) AS bucket,
-        |    CASE WHEN hv // 64 = 0 THEN 55
-        |         ELSE 55 - length(bin(hv // 64)) END AS rho
-        |  FROM h),
-        |reg AS (SELECT bucket, max(rho) AS reg FROM rho GROUP BY bucket),
-        |agg AS (
-        |  SELECT sum(1::BIGINT << (55 - reg)) AS s_scaled,
-        |    count(*) AS n_present
-        |  FROM reg),
-        |est AS (
-        |  SELECT
-        |    CASE WHEN CAST(0.709 AS DOUBLE) * 64 * 64 * 36028797018963968.0
-        |           / (s_scaled + (64 - n_present) * (1::BIGINT << 55)) <= 160.0
-        |         AND 64 - n_present > 0
-        |      THEN 64.0 * ln(64.0 / (64 - n_present))
-        |      ELSE CAST(0.709 AS DOUBLE) * 64 * 64 * 36028797018963968.0
-        |           / (s_scaled + (64 - n_present) * (1::BIGINT << 55))
-        |    END AS e
-        |  FROM agg)
-        |SELECT e AS est_merged, e AS est_whole, true AS agree FROM est""".stripMargin,
-
-    "q_hll_by_priority" ->
-      """WITH h AS (
-        |  SELECT o_orderpriority,
-        |    CAST(('0x' || substring(md5(CAST(o_custkey AS VARCHAR)
-        |      || ':hll'), 1, 15)) AS BIGINT) AS hv
-        |  FROM orders),
-        |rho AS (
-        |  SELECT o_orderpriority, CAST(hv % 64 AS INT) AS bucket,
-        |    CASE WHEN hv // 64 = 0 THEN 55
-        |         ELSE 55 - length(bin(hv // 64)) END AS rho
-        |  FROM h),
-        |reg AS (
-        |  SELECT o_orderpriority, bucket, max(rho) AS reg
-        |  FROM rho GROUP BY 1, 2),
-        |agg AS (
-        |  SELECT o_orderpriority, sum(1::BIGINT << (55 - reg)) AS s_scaled,
-        |    count(*) AS n_present
-        |  FROM reg GROUP BY 1),
-        |ex AS (
-        |  SELECT o_orderpriority, count(DISTINCT o_custkey) AS exact_n
-        |  FROM orders GROUP BY 1)
-        |SELECT agg.o_orderpriority,
-        |  CASE WHEN CAST(0.709 AS DOUBLE) * 64 * 64 * 36028797018963968.0
-        |         / (s_scaled + (64 - n_present) * (1::BIGINT << 55)) <= 160.0
-        |       AND 64 - n_present > 0
-        |    THEN 64.0 * ln(64.0 / (64 - n_present))
-        |    ELSE CAST(0.709 AS DOUBLE) * 64 * 64 * 36028797018963968.0
-        |         / (s_scaled + (64 - n_present) * (1::BIGINT << 55))
-        |  END AS est_n,
-        |  ex.exact_n
-        |FROM agg JOIN ex USING (o_orderpriority)""".stripMargin,
-
-    // KMV oracles restate the bottom-k construction: same 60-bit md5
-    // hash, same order statistic, same single float division (2^60 and
-    // k-1 both CAST AS DOUBLE — bare decimal literals are DECIMAL in
-    // DuckDB and multiply 1 ulp off)
-    "q_kmv_distinct" ->
-      """WITH s AS (
-        |  SELECT DISTINCT CAST(('0x' || substring(md5(
-        |      CAST(o_custkey AS VARCHAR) || ':kmv'), 1, 15)) AS BIGINT) AS h
-        |  FROM orders WHERE o_custkey IS NOT NULL
-        |  ORDER BY 1 LIMIT 256),
-        |a AS (SELECT count(*) AS n_sample, max(h) AS h_max FROM s)
-        |SELECT
-        |  CASE WHEN n_sample < 256 THEN CAST(n_sample AS DOUBLE)
-        |    ELSE CAST(255 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-        |         / CAST(h_max AS DOUBLE) END AS est_n,
-        |  CAST(n_sample AS INT) AS n_sample,
-        |  (SELECT count(DISTINCT o_custkey) FROM orders) AS exact_n
-        |FROM a""".stripMargin,
-
-    // merging disjoint halves IS the whole-table bottom-k (a lattice),
-    // so one estimate serves both columns
-    "q_kmv_merge" ->
-      """WITH s AS (
-        |  SELECT DISTINCT CAST(('0x' || substring(md5(
-        |      CAST(o_custkey AS VARCHAR) || ':kmv'), 1, 15)) AS BIGINT) AS h
-        |  FROM orders WHERE o_custkey IS NOT NULL
-        |  ORDER BY 1 LIMIT 256),
-        |a AS (SELECT count(*) AS n_sample, max(h) AS h_max FROM s),
-        |est AS (
-        |  SELECT CASE WHEN n_sample < 256 THEN CAST(n_sample AS DOUBLE)
-        |    ELSE CAST(255 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-        |         / CAST(h_max AS DOUBLE) END AS e
-        |  FROM a)
-        |SELECT e AS est_merged, e AS est_whole, true AS agree FROM est""".stripMargin,
-
-    "q_kmv_by_priority" ->
-      """WITH h AS (
-        |  SELECT DISTINCT o_orderpriority,
-        |    CAST(('0x' || substring(md5(
-        |      CAST(o_custkey AS VARCHAR) || ':kmv'), 1, 15)) AS BIGINT) AS h
-        |  FROM orders WHERE o_custkey IS NOT NULL),
-        |s AS (
-        |  SELECT o_orderpriority, h,
-        |    row_number() OVER (PARTITION BY o_orderpriority ORDER BY h) AS rn
-        |  FROM h),
-        |a AS (
-        |  SELECT o_orderpriority, count(*) AS n_sample, max(h) AS h_max
-        |  FROM s WHERE rn <= 128 GROUP BY 1),
-        |ex AS (
-        |  SELECT o_orderpriority, count(DISTINCT o_custkey) AS exact_n
-        |  FROM orders GROUP BY 1)
-        |SELECT a.o_orderpriority,
-        |  CASE WHEN n_sample < 128 THEN CAST(n_sample AS DOUBLE)
-        |    ELSE CAST(127 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-        |         / CAST(h_max AS DOUBLE) END AS est_n,
-        |  CAST(n_sample AS INT) AS n_sample,
-        |  ex.exact_n
-        |FROM a JOIN ex USING (o_orderpriority)""".stripMargin,
-
-    // mirrors Kmv.setEstimates: bottom-256 of each side, bottom-256 of
-    // the union, membership flags, rho computed BEFORE the multiply
-    // (same float-op order as the engine)
-    "q_kmv_setops" ->
-      """WITH ha AS (
-        |  SELECT DISTINCT CAST(('0x' || substring(md5(
-        |      CAST(o_custkey AS VARCHAR) || ':kmv'), 1, 15)) AS BIGINT) AS h
-        |  FROM orders
-        |  WHERE o_custkey IS NOT NULL AND o_orderpriority = '1-URGENT'
-        |  ORDER BY 1 LIMIT 256),
-        |hb AS (
-        |  SELECT DISTINCT CAST(('0x' || substring(md5(
-        |      CAST(o_custkey AS VARCHAR) || ':kmv'), 1, 15)) AS BIGINT) AS h
-        |  FROM orders
-        |  WHERE o_custkey IS NOT NULL AND o_orderpriority = '2-HIGH'
-        |  ORDER BY 1 LIMIT 256),
-        |m AS (
-        |  SELECT DISTINCT h FROM (
-        |    SELECT h FROM ha UNION ALL SELECT h FROM hb)
-        |  ORDER BY 1 LIMIT 256),
-        |f AS (
-        |  SELECT h, h IN (SELECT h FROM ha) AS ia,
-        |    h IN (SELECT h FROM hb) AS ib FROM m),
-        |a AS (
-        |  SELECT count(*) AS n, max(h) AS hm,
-        |    CAST(sum(CASE WHEN ia AND ib THEN 1 ELSE 0 END) AS BIGINT) AS nb
-        |  FROM f)
-        |SELECT
-        |  CASE WHEN n < 256 THEN CAST(n AS DOUBLE)
-        |    ELSE CAST(255 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-        |         / CAST(hm AS DOUBLE) END AS est_union,
-        |  CASE WHEN n > 0 THEN CAST(nb AS DOUBLE) / CAST(n AS DOUBLE)
-        |    ELSE 0.0 END AS jaccard_est,
-        |  (CASE WHEN n > 0 THEN CAST(nb AS DOUBLE) / CAST(n AS DOUBLE)
-        |    ELSE 0.0 END) *
-        |  (CASE WHEN n < 256 THEN CAST(n AS DOUBLE)
-        |    ELSE CAST(255 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-        |         / CAST(hm AS DOUBLE) END) AS est_intersection,
-        |  CAST(n AS INT) AS n_sample, nb AS n_both
-        |FROM a""".stripMargin,
-
-    // mirrors Kmv.setEstimatesBy on the even/odd order-key halves:
-    // per-group rank <= 128 replaces each bottom-k, including the
-    // union's re-take
-    "q_kmv_setops_by" ->
-      """WITH base AS (
-        |  SELECT o_orderpriority, o_orderkey % 2 AS half,
-        |    CAST(('0x' || substring(md5(
-        |      CAST(o_custkey AS VARCHAR) || ':kmv'), 1, 15)) AS BIGINT) AS h
-        |  FROM orders WHERE o_custkey IS NOT NULL),
-        |ha AS (
-        |  SELECT o_orderpriority, h FROM (
-        |    SELECT DISTINCT o_orderpriority, h FROM base WHERE half = 0)
-        |  QUALIFY row_number() OVER (
-        |    PARTITION BY o_orderpriority ORDER BY h) <= 128),
-        |hb AS (
-        |  SELECT o_orderpriority, h FROM (
-        |    SELECT DISTINCT o_orderpriority, h FROM base WHERE half = 1)
-        |  QUALIFY row_number() OVER (
-        |    PARTITION BY o_orderpriority ORDER BY h) <= 128),
-        |m AS (
-        |  SELECT o_orderpriority, h FROM (
-        |    SELECT DISTINCT o_orderpriority, h FROM (
-        |      SELECT * FROM ha UNION ALL SELECT * FROM hb))
-        |  QUALIFY row_number() OVER (
-        |    PARTITION BY o_orderpriority ORDER BY h) <= 128),
-        |f AS (
-        |  SELECT m.o_orderpriority, m.h,
-        |    EXISTS (SELECT 1 FROM ha WHERE ha.o_orderpriority =
-        |      m.o_orderpriority AND ha.h = m.h) AS ia,
-        |    EXISTS (SELECT 1 FROM hb WHERE hb.o_orderpriority =
-        |      m.o_orderpriority AND hb.h = m.h) AS ib
-        |  FROM m),
-        |a AS (
-        |  SELECT o_orderpriority, count(*) AS n, max(h) AS hm,
-        |    CAST(sum(CASE WHEN ia AND ib THEN 1 ELSE 0 END) AS BIGINT) AS nb
-        |  FROM f GROUP BY 1)
-        |SELECT o_orderpriority,
-        |  CASE WHEN n < 128 THEN CAST(n AS DOUBLE)
-        |    ELSE CAST(127 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-        |         / CAST(hm AS DOUBLE) END AS est_union,
-        |  CASE WHEN n > 0 THEN CAST(nb AS DOUBLE) / CAST(n AS DOUBLE)
-        |    ELSE 0.0 END AS jaccard_est,
-        |  (CASE WHEN n > 0 THEN CAST(nb AS DOUBLE) / CAST(n AS DOUBLE)
-        |    ELSE 0.0 END) *
-        |  (CASE WHEN n < 128 THEN CAST(n AS DOUBLE)
-        |    ELSE CAST(127 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-        |         / CAST(hm AS DOUBLE) END) AS est_intersection,
-        |  CAST(n AS INT) AS n_sample, nb AS n_both
-        |FROM a""".stripMargin,
-
-    // mirrors Kmv.containmentBy on the even/odd halves: the setops_by
-    // construction with per-input member counts instead of the union
-    // estimator
-    "q_kmv_containment_by" ->
-      """WITH base AS (
-        |  SELECT o_orderpriority, o_orderkey % 2 AS half,
-        |    CAST(('0x' || substring(md5(
-        |      CAST(o_custkey AS VARCHAR) || ':kmv'), 1, 15)) AS BIGINT) AS h
-        |  FROM orders WHERE o_custkey IS NOT NULL),
-        |ha AS (
-        |  SELECT o_orderpriority, h FROM (
-        |    SELECT DISTINCT o_orderpriority, h FROM base WHERE half = 0)
-        |  QUALIFY row_number() OVER (
-        |    PARTITION BY o_orderpriority ORDER BY h) <= 128),
-        |hb AS (
-        |  SELECT o_orderpriority, h FROM (
-        |    SELECT DISTINCT o_orderpriority, h FROM base WHERE half = 1)
-        |  QUALIFY row_number() OVER (
-        |    PARTITION BY o_orderpriority ORDER BY h) <= 128),
-        |m AS (
-        |  SELECT o_orderpriority, h FROM (
-        |    SELECT DISTINCT o_orderpriority, h FROM (
-        |      SELECT * FROM ha UNION ALL SELECT * FROM hb))
-        |  QUALIFY row_number() OVER (
-        |    PARTITION BY o_orderpriority ORDER BY h) <= 128),
-        |f AS (
-        |  SELECT m.o_orderpriority, m.h,
-        |    EXISTS (SELECT 1 FROM ha WHERE ha.o_orderpriority =
-        |      m.o_orderpriority AND ha.h = m.h) AS ia,
-        |    EXISTS (SELECT 1 FROM hb WHERE hb.o_orderpriority =
-        |      m.o_orderpriority AND hb.h = m.h) AS ib
-        |  FROM m),
-        |a AS (
-        |  SELECT o_orderpriority,
-        |    CAST(sum(CASE WHEN ia THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |    CAST(sum(CASE WHEN ib THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-        |    CAST(sum(CASE WHEN ia AND ib THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS nboth
-        |  FROM f GROUP BY 1)
-        |SELECT o_orderpriority,
-        |  CASE WHEN na > 0 THEN CAST(nboth AS DOUBLE) / CAST(na AS DOUBLE)
-        |    ELSE 0.0 END AS containment_a_in_b,
-        |  CASE WHEN nb > 0 THEN CAST(nboth AS DOUBLE) / CAST(nb AS DOUBLE)
-        |    ELSE 0.0 END AS containment_b_in_a,
-        |  na AS n_a, nb AS n_b, nboth AS n_both
-        |FROM a""".stripMargin,
-
-    // mirrors Kmv.containment: union bottom-k sample, per-input member
-    // counts, one division per emitted ratio
-    "q_kmv_containment" ->
-      """WITH ha AS (
-        |  SELECT DISTINCT CAST(('0x' || substring(md5(
-        |      CAST(o_custkey AS VARCHAR) || ':kmv'), 1, 15)) AS BIGINT) AS h
-        |  FROM orders
-        |  WHERE o_custkey IS NOT NULL AND o_orderpriority = '1-URGENT'
-        |  ORDER BY 1 LIMIT 256),
-        |hb AS (
-        |  SELECT DISTINCT CAST(('0x' || substring(md5(
-        |      CAST(o_custkey AS VARCHAR) || ':kmv'), 1, 15)) AS BIGINT) AS h
-        |  FROM orders WHERE o_custkey IS NOT NULL
-        |  ORDER BY 1 LIMIT 256),
-        |m AS (
-        |  SELECT DISTINCT h FROM (
-        |    SELECT h FROM ha UNION ALL SELECT h FROM hb)
-        |  ORDER BY 1 LIMIT 256),
-        |f AS (
-        |  SELECT h, h IN (SELECT h FROM ha) AS ia,
-        |    h IN (SELECT h FROM hb) AS ib FROM m),
-        |a AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN ia THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |    CAST(sum(CASE WHEN ib THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-        |    CAST(sum(CASE WHEN ia AND ib THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS nboth
-        |  FROM f)
-        |SELECT
-        |  CASE WHEN na > 0 THEN CAST(nboth AS DOUBLE) / CAST(na AS DOUBLE)
-        |    ELSE 0.0 END AS containment_a_in_b,
-        |  CASE WHEN nb > 0 THEN CAST(nboth AS DOUBLE) / CAST(nb AS DOUBLE)
-        |    ELSE 0.0 END AS containment_b_in_a,
-        |  na AS n_a, nb AS n_b, nboth AS n_both
-        |FROM a""".stripMargin,
-
-    "q_domain_cap" ->
-      """WITH h AS (
-        |  SELECT doc_id, source,
-        |    CAST(('0x' || substring(md5(
-        |      CAST(doc_id AS VARCHAR) || ':kmv'), 1, 15)) AS BIGINT) AS h
-        |  FROM documents WHERE doc_id IS NOT NULL),
-        |r AS (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-        |  FROM h)
-        |SELECT doc_id, source FROM r WHERE rn <= 10""".stripMargin,
-
-    "q_kmv_quantiles_by" ->
-      """WITH h AS (
-        |  SELECT doc_id, source, n_chars,
-        |    CAST(('0x' || substring(md5(
-        |      CAST(doc_id AS VARCHAR) || ':kmv'), 1, 15)) AS BIGINT) AS h
-        |  FROM documents WHERE doc_id IS NOT NULL),
-        |capped AS (
-        |  SELECT source, n_chars FROM (
-        |    SELECT source, n_chars,
-        |      row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-        |    FROM h) WHERE rn <= 10),
-        |r AS (
-        |  SELECT source, n_chars AS v,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars) AS rn,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM capped WHERE n_chars IS NOT NULL)
-        |SELECT source,
-        |  max(CASE WHEN rn = (50 * n + 99) // 100 THEN v END) AS p50,
-        |  max(CASE WHEN rn = (90 * n + 99) // 100 THEN v END) AS p90,
-        |  CAST(max(n) AS INT) AS n_sample
-        |FROM r GROUP BY source""".stripMargin,
-
-    // same construction as q_kmv_quantiles_by, values as DOUBLE — the
-    // streaming twin's value type (its parity contract says batch
-    // degrade mode = this pipeline, bit for bit)
-    "q_kmv_quantiles_stream" ->
-      """WITH h AS (
-        |  SELECT doc_id, source, n_chars,
-        |    CAST(('0x' || substring(md5(
-        |      CAST(doc_id AS VARCHAR) || ':kmv'), 1, 15)) AS BIGINT) AS h
-        |  FROM documents WHERE doc_id IS NOT NULL),
-        |capped AS (
-        |  SELECT source, n_chars FROM (
-        |    SELECT source, n_chars,
-        |      row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-        |    FROM h) WHERE rn <= 10),
-        |r AS (
-        |  SELECT source, CAST(n_chars AS DOUBLE) AS v,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars) AS rn,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM capped WHERE n_chars IS NOT NULL)
-        |SELECT source,
-        |  max(CASE WHEN rn = (50 * n + 99) // 100 THEN v END) AS p50,
-        |  max(CASE WHEN rn = (90 * n + 99) // 100 THEN v END) AS p90,
-        |  CAST(max(n) AS INT) AS n_sample
-        |FROM r GROUP BY source""".stripMargin,
-
-    "q_kmv_quantiles" ->
-      """WITH s AS (
-        |  SELECT CAST(('0x' || substring(md5(
-        |      CAST(o_orderkey AS VARCHAR) || ':kmv'), 1, 15)) AS BIGINT) AS h,
-        |    o_totalprice
-        |  FROM orders WHERE o_orderkey IS NOT NULL
-        |  ORDER BY h LIMIT 1024),
-        |r AS (
-        |  SELECT o_totalprice AS v,
-        |    row_number() OVER (ORDER BY o_totalprice) AS rn,
-        |    count(*) OVER () AS n
-        |  FROM s WHERE o_totalprice IS NOT NULL)
-        |SELECT
-        |  max(CASE WHEN rn = (25 * n + 99) // 100 THEN v END) AS p25,
-        |  max(CASE WHEN rn = (50 * n + 99) // 100 THEN v END) AS p50,
-        |  max(CASE WHEN rn = (75 * n + 99) // 100 THEN v END) AS p75,
-        |  max(CASE WHEN rn = (95 * n + 99) // 100 THEN v END) AS p95,
-        |  CAST(max(n) AS INT) AS n_sample
-        |FROM r""".stripMargin,
-
-    "q_approx_sketches" ->
-      """SELECT count(DISTINCT o_custkey) AS exact_distinct,
-        |  true AS distinct_ok,
-        |  round(quantile_cont(o_totalprice, 0.5), 2) AS exact_median,
-        |  true AS median_ok
-        |FROM orders""".stripMargin,
-
-    "q_funnel" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        |v AS (
-        |  SELECT user_id, min(ts_us) AS t0 FROM e
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |sg AS (
-        |  SELECT e.user_id, min(ts_us) AS t1 FROM e JOIN v USING (user_id)
-        |  WHERE event_type = 'signup' AND ts_us > t0 GROUP BY e.user_id),
-        |p AS (
-        |  SELECT e.user_id, min(ts_us) AS t2 FROM e JOIN sg USING (user_id)
-        |  WHERE event_type = 'purchase' AND ts_us > t1 GROUP BY e.user_id)
-        |SELECT (SELECT count(*) FROM v) AS n_view,
-        |       (SELECT count(*) FROM sg) AS n_signup_after_view,
-        |       (SELECT count(*) FROM p) AS n_purchase_after_signup""".stripMargin,
-
-    // mirrors the q_funnel stage chain + the exactPercentiles CDF pick
-    // over the per-user conversion deltas (integer seconds, scale 0)
-    "q_funnel_latency" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        |v AS (
-        |  SELECT user_id, min(ts_us) AS t0 FROM e
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |sg AS (
-        |  SELECT e.user_id, min(ts_us) AS t1 FROM e JOIN v USING (user_id)
-        |  WHERE event_type = 'signup' AND ts_us > t0 GROUP BY e.user_id),
-        |lat AS (
-        |  SELECT (t1 - t0) // 1000000 AS u FROM sg JOIN v USING (user_id)),
-        |c AS (SELECT u, count(*) AS n_v FROM lat GROUP BY u),
-        |b AS (
-        |  SELECT *, coalesce(sum(n_v) OVER (ORDER BY u
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum_before,
-        |    sum(n_v) OVER () AS n_total
-        |  FROM c),
-        |x AS (SELECT b.*, p FROM b CROSS JOIN (SELECT unnest([50, 90]) AS p))
-        |SELECT 'all' AS cohort, CAST(p AS INT) AS p, u AS value_unit,
-        |  CAST(n_total AS BIGINT) AS n_total
-        |FROM x
-        |WHERE cum_before < (n_total * p + 99) // 100
-        |  AND (n_total * p + 99) // 100 <= cum_before + n_v""".stripMargin,
-
-    "q_resample_ffill" ->
-      """WITH hr AS (
-        |  SELECT user_id, CAST(floor(epoch(ts) / 3600) AS BIGINT) AS bucket,
-        |    count(*) AS n_events,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1, 2),
-        |bounds AS (SELECT user_id, min(bucket) AS b0, max(bucket) AS b1
-        |           FROM hr GROUP BY 1),
-        |grid AS (SELECT user_id, unnest(generate_series(b0, b1)) AS bucket
-        |         FROM bounds),
-        |j AS (
-        |  SELECT g.user_id, g.bucket,
-        |    coalesce(hr.n_events, 0) AS n_events, hr.v
-        |  FROM grid g LEFT JOIN hr
-        |    ON g.user_id = hr.user_id AND g.bucket = hr.bucket)
-        |SELECT user_id, bucket, n_events,
-        |  last_value(v IGNORE NULLS) OVER (PARTITION BY user_id
-        |    ORDER BY bucket
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_ffill
-        |FROM j""".stripMargin,
-
-    // mirrors TimeSeries.cohortRetention at hourly resolution: distinct
-    // (user, hour) activity, min-hour cohorts, (cohort, period) counts,
-    // cohort size = the period-0 count via first_value
-    "q_cohort_retention" ->
-      """WITH a AS (
-        |  SELECT DISTINCT user_id AS entity,
-        |    (CAST(floor(epoch(ts)) AS BIGINT) // 3600) AS bucket
-        |  FROM events WHERE user_id IS NOT NULL),
-        |c AS (SELECT entity, min(bucket) AS cohort FROM a GROUP BY entity),
-        |m AS (
-        |  SELECT cohort, bucket - cohort AS period, count(*) AS n_active
-        |  FROM a JOIN c USING (entity) GROUP BY 1, 2)
-        |SELECT cohort, period, n_active,
-        |  first_value(n_active) OVER (PARTITION BY cohort ORDER BY period
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cohort_size,
-        |  round(CAST(n_active AS DOUBLE) /
-        |    CAST(first_value(n_active) OVER (PARTITION BY cohort
-        |      ORDER BY period
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE),
-        |    6) AS retention
-        |FROM m""".stripMargin,
-
-    // mirrors TimeSeries.rollingZscore: decimal frame moments over the
-    // 20-preceding-rows frame, then the identical double mean/var/z
-    // token sequence; zero-variance history yields NULL z
-    "q_rolling_zscore" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-        |    value
-        |  FROM events),
-        |w AS (
-        |  SELECT user_id, event_id, sec, value,
-        |    count(value) OVER fr AS n_hist,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2))) OVER fr AS DOUBLE) AS s,
-        |    CAST(sum(CAST(value * value AS DECIMAL(28,8))) OVER fr AS DOUBLE)
-        |      AS s2
-        |  FROM e
-        |  WINDOW fr AS (PARTITION BY user_id ORDER BY sec, event_id
-        |    ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)),
-        |z AS (
-        |  SELECT user_id, event_id, sec, value, n_hist,
-        |    round(s / n_hist, 6) AS mean_hist,
-        |    CASE WHEN greatest(s2 / n_hist - (s / n_hist) * (s / n_hist),
-        |        0.0) > 0.0
-        |      THEN round((value - s / n_hist) /
-        |        sqrt(greatest(s2 / n_hist - (s / n_hist) * (s / n_hist),
-        |          0.0)), 6)
-        |      END AS z
-        |  FROM w WHERE n_hist >= 10)
-        |SELECT user_id, event_id, sec, value, n_hist, mean_hist, z,
-        |  coalesce(abs(z) > 3.0, false) AS is_outlier
-        |FROM z""".stripMargin,
-
-    // mirrors Graph.pageRank on the undirected supplier<->customer
-    // graph: 5 unrolled iterations in fixed-point BIGINT nano-units —
-    // no float inside the loop on either engine (see pageRankSql)
-    "q_pagerank" -> PageRankSql,
-
-    // mirrors Graph.shortestPaths: depth-capped recursive relaxation,
-    // min(dist) per node over the enumerated path sums — parallel
-    // edges pre-collapsed to their lightest, as in the op
-    "q_shortest_paths" ->
-      """WITH RECURSIVE sp_pairs AS MATERIALIZED (
-        |  SELECT 's:' || CAST(l_suppkey AS VARCHAR) AS a,
-        |    'c:' || CAST(o_custkey AS VARCHAR) AS b,
-        |    CAST(count(DISTINCT l_orderkey) AS BIGINT) AS w
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  GROUP BY 1, 2),
-        |e0 AS (
-        |  SELECT a AS src, b AS dst, w FROM sp_pairs
-        |  UNION ALL SELECT b, a, w FROM sp_pairs),
-        |e AS MATERIALIZED (
-        |  SELECT src, dst, min(w) AS w FROM e0 GROUP BY 1, 2),
-        |seeds AS (
-        |  SELECT DISTINCT 's:' || CAST(s_suppkey AS VARCHAR) AS node
-        |  FROM supplier WHERE s_nationkey = 0),
-        |d AS (
-        |  SELECT node, CAST(0 AS BIGINT) AS dist, 0 AS depth FROM seeds
-        |  UNION
-        |  SELECT e.dst, d.dist + e.w, d.depth + 1
-        |  FROM d JOIN e ON e.src = d.node
-        |  WHERE d.depth < 2)
-        |SELECT node, min(dist) AS dist FROM d GROUP BY node""".stripMargin,
-
-    // mirrors Graph.bfsHops as a bounded recursive CTE: UNION-dedup'd
-    // (node, hops) pairs expand until the 3-hop cap, min(hops) per node
-    // is exactly the frontier BFS's first-touch level
-    "q_bfs_hops" ->
-      """WITH RECURSIVE pr_pairs AS MATERIALIZED (
-        |  SELECT DISTINCT 's:' || CAST(l_suppkey AS VARCHAR) AS a,
-        |    'c:' || CAST(o_custkey AS VARCHAR) AS b
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |e AS MATERIALIZED (
-        |  SELECT a AS src, b AS dst FROM pr_pairs
-        |  UNION SELECT b, a FROM pr_pairs),
-        |seeds AS (
-        |  SELECT DISTINCT 's:' || CAST(s_suppkey AS VARCHAR) AS node
-        |  FROM supplier WHERE s_nationkey = 0),
-        |d AS (
-        |  SELECT node, 0 AS hops FROM seeds
-        |  UNION
-        |  SELECT e.dst, d.hops + 1 FROM d JOIN e ON e.src = d.node
-        |  WHERE d.hops < 3)
-        |SELECT node, CAST(min(hops) AS INT) AS hops
-        |FROM d GROUP BY node""".stripMargin,
-
-    // weighted variant: same unrolled fixed-point stages with
-    // (pr_n * 85 * w) // (wsum * 100) contributions
-    "q_pagerank_weighted" -> PageRankWeightedSql,
-
-    // personalized variant: per-node base_n (seed share vs 0) and a
-    // seed-indicator r0 replace the uniform constants
-    "q_pagerank_personalized" -> PageRankPersonalizedSql,
-
-    // synchronous LPA unrolled; determinism rests on the total-order
-    // tie-break, not on any arithmetic convention
-    "q_communities" -> CommunitiesSql,
-
-    // the k-core is a unique fixpoint: 10 unrolled peel stages (≥ the
-    // deepest measured cascade) reach it without mirroring the engine's
-    // adaptive round count
-    "q_kcore" -> KCoreSql,
-
-    // components are a graph INVARIANT: the oracle takes the true
-    // reachability fixpoint via a recursive CTE — no need to mirror the
-    // engine's round count
-    "q_graph_components" ->
-      """WITH RECURSIVE sp AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sup
-        |  FROM lineitem WHERE l_quantity > 45),
-        |e AS (
-        |  SELECT DISTINCT CAST(x.sup AS VARCHAR) AS src,
-        |    CAST(y.sup AS VARCHAR) AS dst
-        |  FROM sp x JOIN sp y ON x.ok = y.ok AND x.sup <> y.sup),
-        |reach(node, r) AS (
-        |  SELECT DISTINCT src, src FROM e
-        |  UNION
-        |  SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.node)
-        |SELECT node, min(r) AS component FROM reach GROUP BY node""".stripMargin,
-
-    // triangle count is a graph INVARIANT — the oracle counts the same
-    // set with the classic ordered 3-way self-join, no need to mirror
-    // the engine's degree-oriented wedge internals
-    "q_triangles" ->
-      """WITH sp AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_suppkey AS s
-        |  FROM lineitem WHERE l_quantity > 45),
-        |und AS (
-        |  SELECT DISTINCT least(x.s, y.s) AS a, greatest(x.s, y.s) AS b
-        |  FROM sp x JOIN sp y ON x.ok = y.ok AND x.s <> y.s)
-        |SELECT CAST(count(*) AS BIGINT) AS n_triangles
-        |FROM und e1
-        |JOIN und e2 ON e2.a = e1.a AND e2.b > e1.b
-        |JOIN und e3 ON e3.a = e1.b AND e3.b = e2.b""".stripMargin,
-
-    // mirrors Graph.linkPredictions: string-canonical undirected edges,
-    // center-keyed wedges, fixed-point RA accumulation (1e9 // d), and
-    // the existing-edge anti join
-    "q_link_predict" ->
-      """WITH sp AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_suppkey AS s
-        |  FROM lineitem WHERE l_quantity > 45),
-        |und AS (
-        |  SELECT DISTINCT
-        |    least(CAST(x.s AS VARCHAR), CAST(y.s AS VARCHAR)) AS a,
-        |    greatest(CAST(x.s AS VARCHAR), CAST(y.s AS VARCHAR)) AS b
-        |  FROM sp x JOIN sp y ON x.ok = y.ok AND x.s <> y.s),
-        |adj AS (
-        |  SELECT a AS n, b AS nb FROM und
-        |  UNION ALL SELECT b, a FROM und),
-        |deg AS (SELECT n, count(*) AS d FROM adj GROUP BY n),
-        |ctr AS (
-        |  SELECT adj.n, adj.nb, deg.d FROM adj JOIN deg ON adj.n = deg.n
-        |  WHERE deg.d <= 100000),
-        |w AS (
-        |  SELECT x.nb AS n1, y.nb AS n2, x.d AS d
-        |  FROM ctr x JOIN ctr y ON x.n = y.n AND x.nb < y.nb),
-        |s AS (
-        |  SELECT n1, n2, CAST(count(*) AS BIGINT) AS common_neighbors,
-        |    CAST(sum(1000000000 // d) AS BIGINT) AS ra_n
-        |  FROM w GROUP BY n1, n2),
-        |p AS (
-        |  SELECT s.* FROM s LEFT JOIN und
-        |    ON s.n1 = und.a AND s.n2 = und.b
-        |  WHERE und.a IS NULL)
-        |SELECT n1, n2, common_neighbors,
-        |  CAST(ra_n AS DOUBLE) / 1000000000.0 AS ra_score
-        |FROM p""".stripMargin,
-
-    // mirrors Graph.degrees on the directed supplier->customer edges
-    "q_graph_degrees" ->
-      """WITH e AS (
-        |  SELECT DISTINCT 's:' || CAST(l_suppkey AS VARCHAR) AS src,
-        |    'c:' || CAST(o_custkey AS VARCHAR) AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |o AS (SELECT src AS node, count(*) AS out_degree FROM e GROUP BY 1),
-        |i AS (SELECT dst AS node, count(*) AS in_degree FROM e GROUP BY 1)
-        |SELECT coalesce(o.node, i.node) AS node,
-        |  coalesce(out_degree, 0) AS out_degree,
-        |  coalesce(in_degree, 0) AS in_degree,
-        |  coalesce(out_degree, 0) + coalesce(in_degree, 0) AS degree
-        |FROM o FULL OUTER JOIN i ON o.node = i.node""".stripMargin,
-
-    "q_asof_join" ->
-      """WITH p AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us,
-        |         max(event_id) AS click_id, epoch_us(ts) AS click_us
-        |  FROM events WHERE event_type = 'click'
-        |  GROUP BY user_id, epoch_us(ts))
-        |SELECT p.event_id, p.user_id, p.ts_us, p.value,
-        |       c.click_id AS asof_click_id, c.click_us AS asof_click_us
-        |FROM p ASOF LEFT JOIN c
-        |  ON p.user_id = c.user_id AND p.ts_us >= c.ts_us""".stripMargin,
-
-    // the salted path must produce the identical result — same oracle
-    "q_asof_salted" ->
-      """WITH p AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us,
-        |         max(event_id) AS click_id, epoch_us(ts) AS click_us
-        |  FROM events WHERE event_type = 'click'
-        |  GROUP BY user_id, epoch_us(ts))
-        |SELECT p.event_id, p.user_id, p.ts_us, p.value,
-        |       c.click_id AS asof_click_id, c.click_us AS asof_click_us
-        |FROM p ASOF LEFT JOIN c
-        |  ON p.user_id = c.user_id AND p.ts_us >= c.ts_us""".stripMargin,
-
-    "q_asof_forward" ->
-      """WITH p AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us,
-        |         max(event_id) AS click_id, epoch_us(ts) AS click_us
-        |  FROM events WHERE event_type = 'click'
-        |  GROUP BY user_id, epoch_us(ts))
-        |SELECT p.event_id, p.user_id, p.ts_us, p.value,
-        |       c.click_id AS asof_click_id, c.click_us AS asof_click_us
-        |FROM p ASOF LEFT JOIN c
-        |  ON p.user_id = c.user_id AND p.ts_us <= c.ts_us""".stripMargin,
-
-    // DuckDB ASOF has no tolerance — post-filter the matched distance
-    "q_asof_tolerance" ->
-      """WITH p AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us,
-        |         max(event_id) AS click_id, epoch_us(ts) AS click_us
-        |  FROM events WHERE event_type = 'click'
-        |  GROUP BY user_id, epoch_us(ts)),
-        |m AS (
-        |  SELECT p.event_id, p.user_id, p.ts_us, p.value,
-        |         c.click_id, c.click_us, c.ts_us AS c_ts
-        |  FROM p ASOF LEFT JOIN c
-        |    ON p.user_id = c.user_id AND p.ts_us >= c.ts_us)
-        |SELECT event_id, user_id, ts_us, value,
-        |  CASE WHEN ts_us - c_ts <= 172800000000 THEN click_id END
-        |    AS asof_click_id,
-        |  CASE WHEN ts_us - c_ts <= 172800000000 THEN click_us END
-        |    AS asof_click_us
-        |FROM m""".stripMargin,
-
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |  sum(l_quantity) AS sum_qty
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-        |                        (l_returnflag), ())""".stripMargin,
-
-    "q_range_join" ->
-      """WITH iv AS (
-        |  SELECT event_id AS purchase_id, user_id,
-        |         ts AS s, ts + INTERVAL 1 DAY AS e
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT event_id AS click_id, user_id, ts
-        |  FROM events WHERE event_type = 'click')
-        |SELECT c.user_id AS user_id, iv.purchase_id, c.click_id
-        |FROM c JOIN iv ON c.user_id = iv.user_id
-        |  AND c.ts >= iv.s AND c.ts < iv.e""".stripMargin,
-
-    "q_pivot" ->
-      """SELECT l_returnflag,
-        |  sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END) AS F,
-        |  sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END) AS O
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q_explode" ->
-      """SELECT doc_id, u['pos'] AS pos, u['word'] AS word FROM (
-        |  SELECT doc_id,
-        |    unnest([{'pos': i-1, 'word': s[i]} for i in range(1, len(s)+1)]) AS u
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS s
-        |        FROM documents WHERE doc_id < 50) t)""".stripMargin,
-
-    "q_minmax_by" ->
-      """SELECT o_orderpriority,
-        |  arg_max(o_orderkey,
-        |    CAST(round(o_totalprice*100) AS BIGINT)*1000000 + o_orderkey) AS top_order,
-        |  arg_min(o_orderkey,
-        |    CAST(round(o_totalprice*100) AS BIGINT)*1000000 + o_orderkey) AS bottom_order
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-
-    "q_json_extract" ->
-      """SELECT event_id,
-        |  CAST(json_extract_string(props, '$.k') AS INTEGER) AS k,
-        |  CAST(json_extract_string(props, '$.k') AS INTEGER) % 10 AS k_mod
-        |FROM events WHERE event_id <= 2000""".stripMargin,
-
-    "q_salted_agg" ->
-      """SELECT event_type,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v,
-        |  count(*) AS n,
-        |  CAST(min(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS min_v,
-        |  CAST(max(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS max_v
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "q_salted_join" ->
-      """SELECT c_mktsegment, count(*) AS n,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    // bucketing changes the physical plan, never the answer
-    "q_bucketed_join" ->
-      """SELECT c_mktsegment, count(*) AS n,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    // layout changes the physical plan, never the answer
-    "q_bloom_scan" ->
-      """SELECT count(*) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem WHERE l_partkey = 1234""".stripMargin,
-
-    // the upserted table: bkt=2 carries the corrected price, every other
-    // partition the original
-    "q_upsert_partitions" ->
-      """SELECT o_orderkey,
-        |  CASE WHEN o_orderkey % 5 = 2 THEN o_totalprice + 1000.0
-        |       ELSE o_totalprice END AS o_totalprice,
-        |  CAST(o_orderkey % 5 AS INTEGER) AS bkt
-        |FROM orders""".stripMargin,
-
-    // mirrors Cdc.applyChanges over the event change log: latest-wins
-    // per user on (ts_us, event_id) DESC, 'error' => delete; base =
-    // pre-cutoff fold, then the post-cutoff log merges in
-    "q_cdc_apply" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-        |    epoch_us(ts) AS ts_us, event_id
-        |  FROM events),
-        |base AS (
-        |  SELECT user_id, event_type, value FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY user_id
-        |        ORDER BY ts_us DESC, event_id DESC) AS rn
-        |    FROM ch WHERE ts_us < 1704672000000000)
-        |  WHERE rn = 1 AND op <> 'D'),
-        |latest AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY user_id
-        |        ORDER BY ts_us DESC, event_id DESC) AS rn
-        |    FROM ch WHERE ts_us >= 1704672000000000)
-        |  WHERE rn = 1)
-        |SELECT b.user_id, b.event_type, b.value FROM base b
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM latest l WHERE l.user_id = b.user_id)
-        |UNION ALL
-        |SELECT user_id, event_type, value FROM latest
-        |WHERE op <> 'D'""".stripMargin,
-
-    // mirrors Cdc.scd2: per-key lead() on (ts_us, event_id) gives the
-    // exclusive valid_to; delete rows close their predecessor but emit
-    // no interval of their own
-    "q_scd2" ->
-      """WITH ch AS (
-        |  SELECT user_id, value,
-        |    CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-        |    epoch_us(ts) AS ts_us, event_id
-        |  FROM events WHERE user_id < 50),
-        |h AS (
-        |  SELECT *, ts_us AS valid_from,
-        |    lead(ts_us) OVER (PARTITION BY user_id
-        |      ORDER BY ts_us, event_id) AS valid_to
-        |  FROM ch)
-        |SELECT user_id, value, valid_from, valid_to,
-        |  (valid_to IS NULL) AS is_current
-        |FROM h WHERE op <> 'D'""".stripMargin,
-
-    // mirrors Cdc.pointInTime over the q_scd2 history: LEFT join on the
-    // key with interval containment (valid_from inclusive, valid_to
-    // exclusive, NULL = open); purchases inside a delete gap keep NULLs
-    "q_scd2_join" ->
-      """WITH ch AS (
-        |  SELECT user_id, value,
-        |    CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-        |    epoch_us(ts) AS ts_us, event_id
-        |  FROM events WHERE user_id < 50),
-        |h AS (
-        |  SELECT *, ts_us AS valid_from,
-        |    lead(ts_us) OVER (PARTITION BY user_id
-        |      ORDER BY ts_us, event_id) AS valid_to
-        |  FROM ch),
-        |dim AS (
-        |  SELECT user_id, value AS dim_value, valid_from, valid_to
-        |  FROM h WHERE op <> 'D'),
-        |f AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |  FROM events WHERE user_id < 50 AND event_type = 'purchase')
-        |SELECT f.event_id, f.user_id, f.ts_us, d.dim_value, d.valid_from
-        |FROM f LEFT JOIN dim d ON f.user_id = d.user_id
-        |  AND f.ts_us >= d.valid_from
-        |  AND (d.valid_to IS NULL OR f.ts_us < d.valid_to)""".stripMargin,
-
-    // mirrors Cdc.snapshotDiff of the q_cdc_apply before/after states:
-    // FULL OUTER key join, per-column null-safe payload compare
-    "q_snapshot_diff" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-        |    epoch_us(ts) AS ts_us, event_id
-        |  FROM events),
-        |bef AS (
-        |  SELECT user_id, event_type, value FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY user_id
-        |        ORDER BY ts_us DESC, event_id DESC) AS rn
-        |    FROM ch WHERE ts_us < 1704672000000000)
-        |  WHERE rn = 1 AND op <> 'D'),
-        |latest AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY user_id
-        |        ORDER BY ts_us DESC, event_id DESC) AS rn
-        |    FROM ch WHERE ts_us >= 1704672000000000)
-        |  WHERE rn = 1),
-        |aft AS (
-        |  SELECT b.user_id, b.event_type, b.value FROM bef b
-        |  WHERE NOT EXISTS (
-        |    SELECT 1 FROM latest l WHERE l.user_id = b.user_id)
-        |  UNION ALL
-        |  SELECT user_id, event_type, value FROM latest
-        |  WHERE op <> 'D')
-        |SELECT coalesce(n.user_id, o.user_id) AS user_id,
-        |  CASE WHEN o.user_id IS NULL THEN 'added'
-        |       WHEN n.user_id IS NULL THEN 'removed'
-        |       WHEN o.event_type IS NOT DISTINCT FROM n.event_type
-        |        AND o.value IS NOT DISTINCT FROM n.value THEN 'unchanged'
-        |       ELSE 'changed' END AS status
-        |FROM bef o FULL OUTER JOIN aft n ON o.user_id = n.user_id""".stripMargin,
-
-    // full recompute the maintained aggregate must equal bit-for-bit:
-    // merge the log into the snapshot (q_cdc_apply construction), then
-    // aggregate from scratch with the same DECIMAL(18,6) per-row cast
-    "q_incr_agg" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-        |    epoch_us(ts) AS ts_us, event_id
-        |  FROM events),
-        |bef AS (
-        |  SELECT user_id, event_type, value FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY user_id
-        |        ORDER BY ts_us DESC, event_id DESC) AS rn
-        |    FROM ch WHERE ts_us < 1704672000000000)
-        |  WHERE rn = 1 AND op <> 'D'),
-        |latest AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY user_id
-        |        ORDER BY ts_us DESC, event_id DESC) AS rn
-        |    FROM ch WHERE ts_us >= 1704672000000000)
-        |  WHERE rn = 1),
-        |aft AS (
-        |  SELECT b.user_id, b.event_type, b.value FROM bef b
-        |  WHERE NOT EXISTS (
-        |    SELECT 1 FROM latest l WHERE l.user_id = b.user_id)
-        |  UNION ALL
-        |  SELECT user_id, event_type, value FROM latest
-        |  WHERE op <> 'D')
-        |SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM aft GROUP BY event_type""".stripMargin,
-
-    // full recompute oracle for the non-invertible IVM: grouped
-    // (count, min, max) of the merged snapshot
-    "q_incr_minmax" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-        |    epoch_us(ts) AS ts_us, event_id
-        |  FROM events),
-        |bef AS (
-        |  SELECT user_id, event_type, value FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY user_id
-        |        ORDER BY ts_us DESC, event_id DESC) AS rn
-        |    FROM ch WHERE ts_us < 1704672000000000)
-        |  WHERE rn = 1 AND op <> 'D'),
-        |latest AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY user_id
-        |        ORDER BY ts_us DESC, event_id DESC) AS rn
-        |    FROM ch WHERE ts_us >= 1704672000000000)
-        |  WHERE rn = 1),
-        |aft AS (
-        |  SELECT b.user_id, b.event_type, b.value FROM bef b
-        |  WHERE NOT EXISTS (
-        |    SELECT 1 FROM latest l WHERE l.user_id = b.user_id)
-        |  UNION ALL
-        |  SELECT user_id, event_type, value FROM latest
-        |  WHERE op <> 'D')
-        |SELECT event_type, count(*) AS n,
-        |  min(value) AS lo, max(value) AS hi
-        |FROM aft GROUP BY event_type""".stripMargin,
-
-    "q_layout_scan" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |WHERE l_shipdate >= '1996-03-01' AND l_shipdate < '1996-04-01'
-        |GROUP BY l_returnflag""".stripMargin,
-
-    // the evolution split recomputed from the source: even keys are the
-    // legacy (no-custkey) generation
-    "q_schema_evolution" ->
-      """SELECT (o_orderkey % 2 = 0) AS legacy_rows, count(*) AS n,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "q_zorder_scan" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |WHERE l_orderkey < 3000 AND l_partkey < 500
-        |GROUP BY l_returnflag""".stripMargin,
-
-    // mirrors Profile.exactPercentilesWeighted: cumulative WEIGHTS in
-    // the CDF, weighted rank ceil(W*p/100)
-    "q_weighted_percentiles" ->
-      """WITH c AS (
-        |  SELECT l_returnflag AS g,
-        |    CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100, 0)
-        |      AS BIGINT) AS u,
-        |    CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS n_v
-        |  FROM lineitem GROUP BY 1, 2),
-        |b AS (
-        |  SELECT *, coalesce(sum(n_v) OVER (PARTITION BY g ORDER BY u
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum_before,
-        |    sum(n_v) OVER (PARTITION BY g) AS n_total
-        |  FROM c),
-        |e AS (
-        |  SELECT b.*, p FROM b
-        |  CROSS JOIN (SELECT unnest([50, 95]) AS p))
-        |SELECT g AS l_returnflag, CAST(p AS INT) AS p, u AS value_unit,
-        |  CAST(n_total AS BIGINT) AS total_weight
-        |FROM e
-        |WHERE cum_before < (n_total * p + 99) // 100
-        |  AND (n_total * p + 99) // 100 <= cum_before + n_v""".stripMargin,
-
-    // mirrors Profile.winsorizedMean: the q_group_percentiles CDF pick
-    // at p5/p95, clamp, exact integer mean
-    "q_winsorized_mean" ->
-      """WITH c AS (
-        |  SELECT event_type AS g,
-        |    CAST(round(CAST(value AS DECIMAL(18,2)) * 100, 0) AS BIGINT)
-        |      AS u, count(*) AS n_v
-        |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT *, coalesce(sum(n_v) OVER (PARTITION BY g ORDER BY u
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum_before,
-        |    sum(n_v) OVER (PARTITION BY g) AS n_total
-        |  FROM c),
-        |e AS (
-        |  SELECT b.*, p FROM b CROSS JOIN (SELECT unnest([5, 95]) AS p)),
-        |pk AS (
-        |  SELECT g, p, u FROM e
-        |  WHERE cum_before < (n_total * p + 99) // 100
-        |    AND (n_total * p + 99) // 100 <= cum_before + n_v),
-        |bounds AS (
-        |  SELECT g, min(CASE WHEN p = 5 THEN u END) AS lo_unit,
-        |    min(CASE WHEN p = 95 THEN u END) AS hi_unit
-        |  FROM pk GROUP BY 1),
-        |rows_u AS (
-        |  SELECT event_type AS g,
-        |    CAST(round(CAST(value AS DECIMAL(18,2)) * 100, 0) AS BIGINT)
-        |      AS u
-        |  FROM events)
-        |SELECT r.g AS event_type, count(*) AS n,
-        |  min(lo_unit) AS lo_unit, min(hi_unit) AS hi_unit,
-        |  CAST(sum(least(greatest(r.u, lo_unit), hi_unit)) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE) / 100.0 AS winsorized_mean
-        |FROM rows_u r JOIN bounds USING (g) GROUP BY 1""".stripMargin,
-
-    // mirrors Profile.madOutliers: the same two integer-CDF lower-median
-    // picks and the tenths-scaled BIGINT outlier inequality
-    "q_mad_outliers" ->
-      """WITH gu AS (
-        |  SELECT event_type AS g,
-        |    CAST(round(CAST(value AS DECIMAL(18,2)) * 100, 0) AS BIGINT)
-        |      AS u
-        |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)),
-        |c1 AS (SELECT g, u, count(*) AS n_v FROM gu GROUP BY 1, 2),
-        |b1 AS (
-        |  SELECT *, coalesce(sum(n_v) OVER (PARTITION BY g ORDER BY u
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum_before,
-        |    sum(n_v) OVER (PARTITION BY g) AS n_total
-        |  FROM c1),
-        |med AS (
-        |  SELECT g, u AS m FROM b1
-        |  WHERE cum_before < (n_total + 1) // 2
-        |    AND (n_total + 1) // 2 <= cum_before + n_v),
-        |dev AS (
-        |  SELECT gu.g, abs(gu.u - med.m) AS du, med.m
-        |  FROM gu JOIN med USING (g)),
-        |c2 AS (SELECT g, du, count(*) AS n_v FROM dev GROUP BY 1, 2),
-        |b2 AS (
-        |  SELECT *, coalesce(sum(n_v) OVER (PARTITION BY g ORDER BY du
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum_before,
-        |    sum(n_v) OVER (PARTITION BY g) AS n_total
-        |  FROM c2),
-        |mad AS (
-        |  SELECT g, du AS mad FROM b2
-        |  WHERE cum_before < (n_total + 1) // 2
-        |    AND (n_total + 1) // 2 <= cum_before + n_v)
-        |SELECT dev.g AS event_type, count(*) AS n,
-        |  CAST(min(dev.m) AS BIGINT) AS median_unit,
-        |  CAST(min(mad.mad) AS BIGINT) AS mad_unit,
-        |  CAST(sum(CASE WHEN dev.du * 10 > mad.mad * 30 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_outliers
-        |FROM dev JOIN mad USING (g) GROUP BY 1""".stripMargin,
-
-    // mirrors Sampling.diverseSample: same sign-orthant key from the
-    // stored floats (1-indexed arrays in DuckDB), same md5 priority
-    "q_diverse_sample" ->
-      """WITH b AS (
-        |  SELECT vec_id,
-        |    CAST((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
-        |       + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)
-        |       + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END)
-        |       + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END)
-        |       + (CASE WHEN embedding[5] > 0 THEN 16 ELSE 0 END)
-        |       + (CASE WHEN embedding[6] > 0 THEN 32 ELSE 0 END)
-        |      AS BIGINT) AS bucket,
-        |    md5(vec_id::VARCHAR || ':42') AS pri
-        |  FROM embeddings
-        |  WHERE embedding IS NOT NULL AND len(embedding) >= 6)
-        |SELECT vec_id, bucket FROM b
-        |QUALIFY row_number() OVER (
-        |  PARTITION BY bucket ORDER BY pri, vec_id) <= 4""".stripMargin,
-
-    // mirrors Profile.exactPercentiles: per-group integer CDF, lower
-    // order statistic at rank ceil(n*p/100) = (n*p + 99) // 100
-    "q_group_percentiles" ->
-      """WITH c AS (
-        |  SELECT event_type AS g,
-        |    CAST(round(CAST(value AS DECIMAL(18,2)) * 100, 0) AS BIGINT)
-        |      AS u, count(*) AS n_v
-        |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT *, coalesce(sum(n_v) OVER (PARTITION BY g ORDER BY u
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum_before,
-        |    sum(n_v) OVER (PARTITION BY g) AS n_total
-        |  FROM c),
-        |e AS (
-        |  SELECT b.*, p FROM b
-        |  CROSS JOIN (SELECT unnest([25, 50, 75, 90]) AS p))
-        |SELECT g AS event_type, CAST(p AS INT) AS p, u AS value_unit,
-        |  CAST(n_total AS BIGINT) AS n_total
-        |FROM e
-        |WHERE cum_before < (n_total * p + 99) // 100
-        |  AND (n_total * p + 99) // 100 <= cum_before + n_v""".stripMargin,
-
-    // mirrors Dq.annotate: concat_ws skips the NULL marks of passing
-    // rules on both engines, so the joined string is the violation
-    // list in declaration order
-    "q_dq_annotate" ->
-      """SELECT event_id, concat_ws('|',
-        |  CASE WHEN value < 0.0 OR value > 400.0 THEN 'value_range' END,
-        |  CASE WHEN event_type NOT IN ('click', 'view', 'purchase',
-        |    'signup') THEN 'type_domain' END,
-        |  CASE WHEN user_id >= 100 THEN 'user_known' END) AS violations
-        |FROM events""".stripMargin,
-
-    // mirrors Profile.histogramEqDepth: exact integer CDF over distinct
-    // cent values, floor-div bin assignment (all-positive, so DuckDB's
-    // flooring // equals Spark's truncating div)
-    "q_histogram_eqdepth" ->
-      """WITH c AS (
-        |  SELECT CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100, 0)
-        |    AS BIGINT) AS u, count(*) AS n_v
-        |  FROM lineitem GROUP BY 1),
-        |b AS (
-        |  SELECT u, n_v,
-        |    coalesce(sum(n_v) OVER (ORDER BY u
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum_before,
-        |    sum(n_v) OVER () AS n_total
-        |  FROM c)
-        |SELECT CAST(least(19, cum_before * 20 // n_total) AS BIGINT) AS bin,
-        |  CAST(sum(n_v) AS BIGINT) AS n,
-        |  min(u) AS lo_unit, max(u) AS hi_unit,
-        |  CAST(sum(u * n_v) AS BIGINT) AS sum_unit
-        |FROM b GROUP BY 1""".stripMargin,
-
-    // mirrors Dq.report rule for rule: conditional sums for the row
-    // rules, sum(cnt-1) for uniqueness, NOT EXISTS on non-NULL keys
-    // for referential integrity
-    "q_dq_checks" ->
-      """SELECT 'not_null:l_orderkey' AS rule,
-        |  CAST(sum(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS violations FROM lineitem
-        |UNION ALL
-        |SELECT 'range:l_quantity:1-45',
-        |  CAST(sum(CASE WHEN l_quantity < 1.0 OR l_quantity > 45.0
-        |    THEN 1 ELSE 0 END) AS BIGINT) FROM lineitem
-        |UNION ALL
-        |SELECT 'range:l_discount:0-0.08',
-        |  CAST(sum(CASE WHEN l_discount < 0.0 OR l_discount > 0.08
-        |    THEN 1 ELSE 0 END) AS BIGINT) FROM lineitem
-        |UNION ALL
-        |SELECT 'domain:l_returnflag',
-        |  CAST(sum(CASE WHEN l_returnflag NOT IN ('A', 'N', 'R')
-        |    THEN 1 ELSE 0 END) AS BIGINT) FROM lineitem
-        |UNION ALL
-        |SELECT 'unique:l_orderkey+l_linenumber',
-        |  (SELECT CAST(coalesce(sum(c - 1), 0) AS BIGINT) FROM (
-        |    SELECT count(*) AS c FROM lineitem
-        |    GROUP BY l_orderkey, l_linenumber))
-        |UNION ALL
-        |SELECT 'ref:l_orderkey->orders',
-        |  (SELECT count(*) FROM lineitem l
-        |   WHERE l_orderkey IS NOT NULL AND NOT EXISTS (
-        |     SELECT 1 FROM orders o
-        |     WHERE o.o_orderkey = l.l_orderkey))""".stripMargin,
-
-    // brute-force quadratic over the same md5-derived points — the
-    // cell-bucketed join must reproduce it pair-for-pair; the squared
-    // metric is exact BIGINT on both engines
-    "q_geo_radius" ->
-      """WITH p AS (
-        |  SELECT c_custkey AS pid,
-        |    CAST(('0x' || substring(md5(c_custkey::VARCHAR || ':x'), 1, 12))
-        |      AS BIGINT) % 360000000 AS x,
-        |    CAST(('0x' || substring(md5(c_custkey::VARCHAR || ':y'), 1, 12))
-        |      AS BIGINT) % 180000000 AS y
-        |  FROM customer)
-        |SELECT a.pid AS a_id, b.pid AS b_id,
-        |  (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
-        |FROM p a JOIN p b ON a.pid < b.pid
-        |WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-        |  <= 4000000000000""".stripMargin,
-
-    "q_geo_nearest" ->
-      """WITH p AS (
-        |  SELECT c_custkey AS pid,
-        |    CAST(('0x' || substring(md5(c_custkey::VARCHAR || ':x'), 1, 12))
-        |      AS BIGINT) % 360000000 AS x,
-        |    CAST(('0x' || substring(md5(c_custkey::VARCHAR || ':y'), 1, 12))
-        |      AS BIGINT) % 180000000 AS y
-        |  FROM customer),
-        |pairs AS (
-        |  SELECT a.pid AS a_id, b.pid AS b_id,
-        |    (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
-        |  FROM p a JOIN p b ON a.pid < b.pid
-        |  WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-        |    <= 25000000000000),
-        |two_way AS (
-        |  SELECT a_id AS id, b_id AS nn_id, dist2 FROM pairs
-        |  UNION ALL
-        |  SELECT b_id AS id, a_id AS nn_id, dist2 FROM pairs)
-        |SELECT id, nn_id, dist2 FROM two_way
-        |QUALIFY row_number() OVER (
-        |  PARTITION BY id ORDER BY dist2, nn_id) = 1""".stripMargin,
-
-    // mirrors q_trend_forecast: the q_group_regression moment tree over
-    // exact MICROS-integer daily totals (every product exactly
-    // representable — no double->DECIMAL cast seam), then the same
-    // extrapolation + unit-restoring divides
-    "q_trend_forecast" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(round(sum(CAST(value AS DECIMAL(18,6))) * 1000, 0)
-        |      AS BIGINT) AS total_milli
-        |  FROM events GROUP BY 1, 2),
-        |a AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(day) AS BIGINT) AS sx,
-        |    CAST(sum(total_milli) AS BIGINT) AS sy,
-        |    CAST(sum(day * day) AS BIGINT) AS sxx,
-        |    CAST(sum(day * total_milli) AS BIGINT) AS sxy,
-        |    max(day) AS last_day
-        |  FROM daily GROUP BY 1),
-        |f AS (
-        |  SELECT event_type, n, last_day,
-        |    n * sxx - sx * sx AS den,
-        |    n * sxy - sx * sy AS nums, sx, sy
-        |  FROM a),
-        |g AS (
-        |  SELECT event_type, n, last_day,
-        |    CAST(nums AS DOUBLE) / CAST(den AS DOUBLE) AS slope_m,
-        |    CAST(sy * den - sx * nums AS DOUBLE)
-        |      / CAST(n * den AS DOUBLE) AS intercept_m
-        |  FROM f WHERE den > 0)
-        |SELECT event_type, n,
-        |  round(slope_m / 1000.0, 6) AS slope,
-        |  round(intercept_m / 1000.0, 6) AS intercept,
-        |  last_day,
-        |  round((slope_m * CAST(last_day + 1 AS DOUBLE) + intercept_m)
-        |    / 1000.0, 6) AS forecast
-        |FROM g""".stripMargin,
-
-    // mirrors Similarity.labelCentroidReport: same micros quantization,
-    // exact integer dots/norms, same IEEE cosine chain and final mean
-    "q_label_centroids" ->
-      """WITH base AS (
-        |  SELECT vec_id, label,
-        |    [CAST(round(CAST(x AS DOUBLE) * 1000000.0, 0) AS BIGINT)
-        |      FOR x IN embedding] AS v
-        |  FROM embeddings
-        |  WHERE embedding IS NOT NULL AND len(embedding) = 64),
-        |comp AS (
-        |  SELECT label, d, CAST(sum(v[d]) AS BIGINT) AS sx
-        |  FROM base, unnest(generate_series(1, 64)) AS t(d)
-        |  GROUP BY 1, 2),
-        |cent AS (
-        |  SELECT label, list(sx ORDER BY d) AS cs FROM comp GROUP BY 1),
-        |j AS (
-        |  SELECT b.vec_id, b.label,
-        |    CAST(list_sum([b.v[i] * c.cs[i]
-        |      FOR i IN generate_series(1, 64)]) AS BIGINT) AS dot,
-        |    CAST(list_sum([b.v[i] * b.v[i]
-        |      FOR i IN generate_series(1, 64)]) AS BIGINT) AS nv,
-        |    CAST(list_sum([c.cs[i] * c.cs[i]
-        |      FOR i IN generate_series(1, 64)]) AS BIGINT) AS nc
-        |  FROM base b JOIN cent c USING (label)),
-        |cm AS (
-        |  SELECT label, CAST(round(CAST(dot AS DOUBLE)
-        |    / sqrt(CAST(nv AS DOUBLE) * CAST(nc AS DOUBLE))
-        |    * 1000000.0, 0) AS BIGINT) AS cos_micros
-        |  FROM j)
-        |SELECT label, count(*) AS n,
-        |  CAST(sum(cos_micros) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-        |    / 1000000.0 AS mean_cos_to_centroid
-        |FROM cm GROUP BY 1""".stripMargin,
-
-    // mirrors Similarity.knnClassify: same micros-quantized rank order,
-    // same (count DESC, label ASC) vote tie-break
-    "q_knn_confusion" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, embedding AS qv, label AS ql
-        |  FROM embeddings WHERE vec_id < 200),
-        |s AS (
-        |  SELECT q.qid, q.ql, e.vec_id AS nid, e.label AS nl,
-        |    CAST(round(list_cosine_similarity(
-        |      CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[]))
-        |      * 1000000.0, 0) AS BIGINT) AS cos_micros
-        |  FROM embeddings e JOIN q ON e.vec_id <> q.qid),
-        |top AS (
-        |  SELECT * FROM s QUALIFY row_number() OVER (
-        |    PARTITION BY qid ORDER BY cos_micros DESC, nid) <= 10),
-        |votes AS (
-        |  SELECT qid, ql, nl, count(*) AS v FROM top GROUP BY 1, 2, 3),
-        |pred AS (
-        |  SELECT * FROM votes QUALIFY row_number() OVER (
-        |    PARTITION BY qid ORDER BY v DESC, nl) = 1)
-        |SELECT ql AS label_actual, nl AS label_predicted, count(*) AS n
-        |FROM pred GROUP BY 1, 2""".stripMargin,
-
-    // mirrors TimeSeries.growthAccounting: distinct (user, day), lag
-    // per user, bucket-level self-join for the churn balance
-    "q_growth_accounting" ->
-      """WITH act AS (
-        |  SELECT DISTINCT user_id AS e, epoch_us(ts) // 86400000000 AS b
-        |  FROM events),
-        |fl AS (
-        |  SELECT *, lag(b) OVER (PARTITION BY e ORDER BY b) AS prev
-        |  FROM act),
-        |per AS (
-        |  SELECT b, count(*) AS n_active,
-        |    sum(CASE WHEN prev IS NULL THEN 1 ELSE 0 END) AS n_new,
-        |    sum(CASE WHEN prev = b - 1 THEN 1 ELSE 0 END) AS n_retained,
-        |    sum(CASE WHEN prev IS NOT NULL AND prev < b - 1
-        |      THEN 1 ELSE 0 END) AS n_resurrected
-        |  FROM fl GROUP BY 1)
-        |SELECT p.b AS bucket, CAST(p.n_active AS BIGINT) AS n_active,
-        |  CAST(p.n_new AS BIGINT) AS n_new,
-        |  CAST(p.n_retained AS BIGINT) AS n_retained,
-        |  CAST(p.n_resurrected AS BIGINT) AS n_resurrected,
-        |  CAST(coalesce(q.n_active, 0) - p.n_retained AS BIGINT)
-        |    AS n_churned
-        |FROM per p LEFT JOIN per q ON q.b = p.b - 1""".stripMargin,
-
-    // mirrors TimeSeries.transitions: lead() adjacency on the same
-    // total order
-    "q_event_transitions" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts), event_id) AS to_state
-        |  FROM events)
-        |SELECT event_type AS from_state, to_state, count(*) AS n
-        |FROM e WHERE to_state IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
-
-    // mirrors TimeSeries.pathsBefore: the 3-lag chain, concat_ws
-    // dropping the NULLs of short histories on both engines
-    "q_conversion_paths" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type,
-        |    concat_ws('>',
-        |      lag(event_type, 3) OVER w, lag(event_type, 2) OVER w,
-        |      lag(event_type, 1) OVER w) AS path
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id
-        |    ORDER BY epoch_us(ts), event_id))
-        |SELECT path, count(*) AS n
-        |FROM e WHERE event_type = 'purchase' AND path <> ''
-        |GROUP BY 1""".stripMargin,
-
-    // mirrors TimeSeries.timeWeightedAvg: same cents/seconds fixed
-    // point, same (ts_us, event_id) total order, same division order
-    "q_time_weighted_avg" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id, value
-        |  FROM events),
-        |stepped AS (
-        |  SELECT user_id, value,
-        |    (lead(ts_us) OVER (PARTITION BY user_id
-        |       ORDER BY ts_us, event_id) - ts_us) // 1000000 AS dur_s
-        |  FROM e),
-        |q AS (
-        |  SELECT user_id,
-        |    CAST(round(CAST(value AS DECIMAL(18,2)) * 100, 0) AS BIGINT)
-        |      AS v_cents, dur_s
-        |  FROM stepped WHERE dur_s IS NOT NULL)
-        |SELECT user_id, count(*) AS n_steps,
-        |  CAST(sum(dur_s) AS BIGINT) AS sum_dur_s,
-        |  CAST(sum(v_cents * dur_s) AS DOUBLE)
-        |    / CAST(sum(dur_s) AS DOUBLE) / 100.0 AS twa
-        |FROM q GROUP BY user_id
-        |HAVING sum(dur_s) > 0""".stripMargin,
-
-    // mirrors TimeSeries.mergeIntervals: running-max island detection,
-    // tie-order-insensitive under duplicate intervals
-    "q_interval_merge" ->
-      """WITH iv AS (
-        |  SELECT user_id, epoch_us(ts) AS s_us,
-        |    epoch_us(ts) + 86400000000 AS e_us
-        |  FROM events WHERE event_type = 'purchase'),
-        |o AS (
-        |  SELECT *, max(e_us) OVER (PARTITION BY user_id
-        |      ORDER BY s_us, e_us
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |    AS prev_max
-        |  FROM iv),
-        |fl AS (
-        |  SELECT *, CASE WHEN prev_max IS NULL OR s_us > prev_max
-        |    THEN 1 ELSE 0 END AS new_island
-        |  FROM o),
-        |isl AS (
-        |  SELECT *, sum(new_island) OVER (PARTITION BY user_id
-        |      ORDER BY s_us, e_us
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS island
-        |  FROM fl)
-        |SELECT user_id, min(s_us) AS start, max(e_us) AS "end",
-        |  count(*) AS n_merged
-        |FROM isl GROUP BY user_id, island""".stripMargin,
-
-    "q_interval_overlap" ->
-      """WITH w AS (
-        |  SELECT event_id AS id, user_id, ts AS s, ts + INTERVAL 1 DAY AS e
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT a.user_id AS user_id, a.id AS a_id, b.id AS b_id
-        |FROM w a JOIN w b ON a.user_id = b.user_id
-        |  AND a.s < b.e AND b.s < a.e AND a.id < b.id""".stripMargin,
-
-    "q_corpus_shuffle" ->
-      """SELECT doc_id,
-        |  row_number() OVER (ORDER BY md5(doc_id::VARCHAR || ':42'), doc_id) - 1
-        |    AS shuffle_pos
-        |FROM documents""".stripMargin,
-
-    "q_corpus_curate" ->
-      """WITH w AS (
-        |  SELECT doc_id, source, length(text) AS n_chars,
-        |         string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents),
-        |q AS (
-        |  SELECT doc_id, source, len(ws) AS n_tokens,
-        |    len(ws) >= 5 AND len(ws) <= 100000
-        |      AND (n_chars - (len(ws) - 1)) * 1.0 / greatest(len(ws), 1) >= 2
-        |      AND (n_chars - (len(ws) - 1)) * 1.0 / greatest(len(ws), 1) <= 20 AS ok
-        |  FROM w),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-        |         ELSE list_distinct([array_to_string(ws[i:i+2], ' ')
-        |                             for i in range(1, len(ws) - 1)])
-        |    END AS s
-        |  FROM w),
-        |p AS (
-        |  SELECT b.doc_id AS id_b FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5)
-        |SELECT source, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-        |FROM q WHERE ok AND doc_id NOT IN (SELECT id_b FROM p)
-        |GROUP BY source""".stripMargin,
-
-    "q_weighted_by_source" ->
-      """WITH p AS (
-        |  SELECT source, doc_id,
-        |    round(pow((CAST(('0x' || substring(md5(text), 1, 8)) AS BIGINT)
-        |        + 1.0) / 4294967297.0,
-        |      1.0 / length(text)), 9) AS priority
-        |  FROM documents),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY source
-        |    ORDER BY priority DESC, doc_id) AS pick
-        |  FROM p)
-        |SELECT source, doc_id, priority FROM r WHERE pick <= 10""".stripMargin,
-
-    "q_weighted_sample" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    round(pow((CAST(('0x' || substring(md5(text), 1, 8)) AS BIGINT)
-        |        + 1.0) / 4294967297.0,
-        |      1.0 / length(text)), 9) AS priority
-        |  FROM documents)
-        |SELECT doc_id, priority FROM p
-        |ORDER BY priority DESC, doc_id LIMIT 50""".stripMargin,
-
-    "q_stable_split" ->
-      """WITH b AS (
-        |  SELECT n_chars,
-        |    CAST(('0x' || substring(md5(text), 1, 8)) AS BIGINT) % 100 AS bkt
-        |  FROM documents)
-        |SELECT CASE WHEN bkt < 80 THEN 'train' ELSE 'test' END AS split,
-        |  count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM b GROUP BY 1""".stripMargin,
-
-    "q_stratified" ->
-      """WITH b AS (
-        |  SELECT source, n_chars,
-        |    CAST(('0x' || substring(md5(text), 1, 8)) AS BIGINT) % 100 AS bkt,
-        |    CASE source WHEN 'src0' THEN 0 WHEN 'src1' THEN 25
-        |                WHEN 'src2' THEN 50 ELSE 100 END AS pct
-        |  FROM documents)
-        |SELECT source, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM b WHERE bkt < pct GROUP BY source""".stripMargin,
-
-    "q_explode_outer" ->
-      """WITH t AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 10 = 0 THEN NULL
-        |                      ELSE string_split(text, ' ') END AS toks
-        |  FROM documents WHERE doc_id < 100)
-        |SELECT doc_id, CAST(i - 1 AS INTEGER) AS pos, toks[i] AS tok
-        |FROM t, unnest(generate_series(1, len(toks))) AS s(i)
-        |UNION ALL
-        |SELECT doc_id, CAST(NULL AS INTEGER), NULL FROM t
-        |WHERE toks IS NULL""".stripMargin,
-
-    "q_nullsafe_eq" ->
-      """WITH a AS (
-        |  SELECT o_orderkey AS ka_id,
-        |    CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END AS ka
-        |  FROM orders WHERE o_orderkey <= 200),
-        |b AS (
-        |  SELECT o_orderkey AS kb_id,
-        |    CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END AS kb
-        |  FROM orders WHERE o_orderkey <= 300)
-        |SELECT count(*) AS n_pairs,
-        |  CAST(sum(CASE WHEN ka IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_null_pairs
-        |FROM a JOIN b ON ka IS NOT DISTINCT FROM kb""".stripMargin,
-
-    // bin arithmetic mirrors Profile.histogram: floor((x-lo)/w) clamped
-    // into [0, nBins), all bins densified via a generated grid
-    "q_histogram" ->
-      """WITH c AS (
-        |  SELECT least(greatest(CAST(floor((o_totalprice - 0.0) / 30000.0)
-        |      AS BIGINT), 0), 19) AS bin, count(*) AS n
-        |  FROM orders
-        |  WHERE o_totalprice IS NOT NULL AND NOT isnan(o_totalprice)
-        |  GROUP BY 1),
-        |g AS (SELECT unnest(generate_series(0, 19)) AS bin)
-        |SELECT g.bin, coalesce(c.n, 0) AS n,
-        |  0.0 + CAST(g.bin AS DOUBLE) * 30000.0 AS bin_lo
-        |FROM g LEFT JOIN c ON g.bin = c.bin""".stripMargin,
-
-    // the moment sums and final arithmetic mirror Profile.covarianceMatrix
-    // operation-for-operation: decimal-exact sums, then the identical
-    // IEEE sequence cov = sp/n - (sa/n)(sb/n),
-    // corr = cov / (sqrt(va) * sqrt(vb))
-    "q_covariance" ->
-      """WITH s AS (
-        |  SELECT count(*) AS n,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(38,8))) AS DOUBLE) AS s_q,
-        |    CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(38,8))) AS DOUBLE) AS ss_q,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(38,8))) AS DOUBLE) AS s_e,
-        |    CAST(sum(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,8))) AS DOUBLE) AS ss_e,
-        |    CAST(sum(CAST(l_discount AS DECIMAL(38,8))) AS DOUBLE) AS s_d,
-        |    CAST(sum(CAST(l_discount * l_discount AS DECIMAL(38,8))) AS DOUBLE) AS ss_d,
-        |    CAST(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(38,8))) AS DOUBLE) AS sp_qe,
-        |    CAST(sum(CAST(l_quantity * l_discount AS DECIMAL(38,8))) AS DOUBLE) AS sp_qd,
-        |    CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(38,8))) AS DOUBLE) AS sp_ed
-        |  FROM lineitem),
-        |f AS (SELECT *, CAST(n AS DOUBLE) AS nd FROM s)
-        |SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b, n,
-        |  round(sp_qe / nd - (s_q / nd) * (s_e / nd), 9) AS cov,
-        |  round((sp_qe / nd - (s_q / nd) * (s_e / nd)) /
-        |    (sqrt(ss_q / nd - (s_q / nd) * (s_q / nd)) *
-        |     sqrt(ss_e / nd - (s_e / nd) * (s_e / nd))), 12) AS corr
-        |FROM f
-        |UNION ALL
-        |SELECT 'l_quantity', 'l_discount', n,
-        |  round(sp_qd / nd - (s_q / nd) * (s_d / nd), 9),
-        |  round((sp_qd / nd - (s_q / nd) * (s_d / nd)) /
-        |    (sqrt(ss_q / nd - (s_q / nd) * (s_q / nd)) *
-        |     sqrt(ss_d / nd - (s_d / nd) * (s_d / nd))), 12)
-        |FROM f
-        |UNION ALL
-        |SELECT 'l_extendedprice', 'l_discount', n,
-        |  round(sp_ed / nd - (s_e / nd) * (s_d / nd), 9),
-        |  round((sp_ed / nd - (s_e / nd) * (s_d / nd)) /
-        |    (sqrt(ss_e / nd - (s_e / nd) * (s_e / nd)) *
-        |     sqrt(ss_d / nd - (s_d / nd) * (s_d / nd))), 12)
-        |FROM f""".stripMargin,
-
-    // per-key-column blocks over the same grouped counts the engine
-    // aggregates; integer '/' is float division in both engines, so the
-    // skew-ratio arithmetic matches token for token
-    "q_skew_report" ->
-      """WITH c1 AS (SELECT CAST(l_orderkey AS VARCHAR) AS key, count(*) AS cnt
-        |            FROM lineitem GROUP BY 1),
-        |c2 AS (SELECT CAST(l_suppkey AS VARCHAR) AS key, count(*) AS cnt
-        |       FROM lineitem GROUP BY 1),
-        |c3 AS (SELECT CAST(l_returnflag AS VARCHAR) AS key, count(*) AS cnt
-        |       FROM lineitem GROUP BY 1)
-        |SELECT 'l_orderkey' AS key_col, CAST(sum(cnt) AS BIGINT) AS n_rows,
-        |  count(*) AS n_keys, CAST(max(cnt) AS BIGINT) AS max_key_rows,
-        |  (SELECT key FROM c1 ORDER BY cnt DESC, key NULLS FIRST LIMIT 1) AS top_key,
-        |  round(max(cnt) / (CAST(sum(cnt) AS BIGINT) / count(*)), 6) AS skew_ratio,
-        |  round(max(cnt) / CAST(sum(cnt) AS BIGINT), 6) AS top_share,
-        |  round(quantile_cont(cnt, 0.5), 6) AS p50_key_rows,
-        |  round(quantile_cont(cnt, 0.99), 6) AS p99_key_rows
-        |FROM c1
-        |UNION ALL
-        |SELECT 'l_suppkey', CAST(sum(cnt) AS BIGINT), count(*),
-        |  CAST(max(cnt) AS BIGINT),
-        |  (SELECT key FROM c2 ORDER BY cnt DESC, key NULLS FIRST LIMIT 1),
-        |  round(max(cnt) / (CAST(sum(cnt) AS BIGINT) / count(*)), 6),
-        |  round(max(cnt) / CAST(sum(cnt) AS BIGINT), 6),
-        |  round(quantile_cont(cnt, 0.5), 6), round(quantile_cont(cnt, 0.99), 6)
-        |FROM c2
-        |UNION ALL
-        |SELECT 'l_returnflag', CAST(sum(cnt) AS BIGINT), count(*),
-        |  CAST(max(cnt) AS BIGINT),
-        |  (SELECT key FROM c3 ORDER BY cnt DESC, key NULLS FIRST LIMIT 1),
-        |  round(max(cnt) / (CAST(sum(cnt) AS BIGINT) / count(*)), 6),
-        |  round(max(cnt) / CAST(sum(cnt) AS BIGINT), 6),
-        |  round(quantile_cont(cnt, 0.5), 6), round(quantile_cont(cnt, 0.99), 6)
-        |FROM c3""".stripMargin,
-
-    "q_profile" ->
-      """SELECT 'doc_id' AS col_name, count(*) AS n_rows,
-        |  count(*) - count(doc_id) AS n_null,
-        |  count(DISTINCT doc_id) AS n_distinct,
-        |  CAST(min(doc_id) AS VARCHAR) AS min_s,
-        |  CAST(max(doc_id) AS VARCHAR) AS max_s FROM documents
-        |UNION ALL
-        |SELECT 'lang', count(*), count(*) - count(lang),
-        |  count(DISTINCT lang), min(lang), max(lang) FROM documents
-        |UNION ALL
-        |SELECT 'source', count(*), count(*) - count(source),
-        |  count(DISTINCT source), min(source), max(source) FROM documents
-        |UNION ALL
-        |SELECT 'n_chars', count(*), count(*) - count(n_chars),
-        |  count(DISTINCT n_chars), CAST(min(n_chars) AS VARCHAR),
-        |  CAST(max(n_chars) AS VARCHAR) FROM documents""".stripMargin,
-
-    "q_dedup_incremental" ->
-      """WITH seen AS (
-        |  SELECT md5(text) AS fp FROM documents WHERE doc_id < 250),
-        |newb AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id >= 250
-        |  UNION ALL
-        |  SELECT doc_id + 100000, text FROM documents WHERE doc_id < 10),
-        |unseen AS (
-        |  SELECT md5(text) AS fp, doc_id FROM newb
-        |  WHERE md5(text) NOT IN (SELECT fp FROM seen))
-        |SELECT min(doc_id) AS doc_id, count(*) AS n_copies
-        |FROM unseen GROUP BY fp""".stripMargin,
-
-    "q_quality_quantile" ->
-      """SELECT doc_id, source, n_chars FROM (
-        |  SELECT doc_id, source, n_chars,
-        |    percent_rank() OVER (PARTITION BY source
-        |      ORDER BY n_chars, doc_id) AS pr
-        |  FROM documents) WHERE pr >= 0.5""".stripMargin,
-
-    // weights sum to exactly 1.0 in double, so the engine's w/Σw and this
-    // literal wt agree bit-for-bit; per-row double math is cross-engine
-    // exact (see the dsum note)
-    "q_mixture" ->
-      """WITH w(source, wt) AS (VALUES
-        |  ('src0', 0.5), ('src1', 0.25), ('src2', 0.125), ('src3', 0.125)),
-        |tot AS (SELECT source, sum(n_chars) AS t FROM documents
-        |        GROUP BY source),
-        |f AS (SELECT tot.source,
-        |        CAST(40000 AS DOUBLE) * CAST(wt AS DOUBLE)
-        |          / CAST(t AS DOUBLE) AS f
-        |      FROM tot JOIN w USING (source))
-        |SELECT doc_id, source, n_chars, n_copies FROM (
-        |  SELECT d.doc_id, d.source, d.n_chars,
-        |    CAST(floor(f) + CASE WHEN
-        |      CAST('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)
-        |        || ':mix'), 1, 8) AS BIGINT) % 10000
-        |        < (f - floor(f)) * 10000 THEN 1 ELSE 0 END AS BIGINT)
-        |      AS n_copies
-        |  FROM documents d JOIN f USING (source))
-        |WHERE n_copies > 0""".stripMargin,
-
-    "q_dedup_clusters" -> dedupClustersSql,
-
-    // identical oracle for the reliable-checkpoint run: the truncation
-    // path changes failure recovery, never the clusters
-    "q_dedup_clusters_star" -> dedupClustersSql,
-
-    // the q_dedup_clusters labeling + singleton coalesce + the stable
-    // md5 cluster bucket, aggregated per split
-    "q_leakage_split" ->
-      """WITH RECURSIVE w AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-        |         ELSE list_distinct([array_to_string(ws[i:i+2], ' ')
-        |                             for i in range(1, len(ws) - 1)])
-        |    END AS s
-        |  FROM w),
-        |p AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5),
-        |e AS (SELECT ia AS src, ib AS dst FROM p
-        |      UNION ALL SELECT ib, ia FROM p),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT src, src FROM e
-        |  UNION
-        |  SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id),
-        |lab AS (SELECT id, min(r) AS cl FROM reach GROUP BY id),
-        |f AS (
-        |  SELECT d.doc_id, d.n_chars,
-        |    coalesce(lab.cl, d.doc_id) AS cluster_id
-        |  FROM documents d LEFT JOIN lab ON lab.id = d.doc_id),
-        |s AS (
-        |  SELECT cluster_id, n_chars,
-        |    CASE WHEN CAST(('0x' || substring(md5(cluster_id || ':leak'),
-        |      1, 8)) AS BIGINT) % 100 < 80 THEN 'train' ELSE 'test'
-        |    END AS split
-        |  FROM f)
-        |SELECT split, count(*) AS n_docs,
-        |  count(DISTINCT cluster_id) AS n_clusters,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM s GROUP BY 1""".stripMargin,
-
-    "q_editdist_pairs" ->
-      """SELECT a.s_suppkey AS id_a, b.s_suppkey AS id_b,
-        |  CAST(levenshtein(a.s_name, b.s_name) AS BIGINT) AS dist
-        |FROM supplier a JOIN supplier b ON a.s_suppkey < b.s_suppkey
-        |WHERE levenshtein(a.s_name, b.s_name) <= 1""".stripMargin,
-
-    // survivors of the ed<=1 graph: rows that are their own reachability
-    // min (or in no pair) — the canonical entities
-    "q_entity_resolution" ->
-      """WITH RECURSIVE p AS (
-        |  SELECT a.s_suppkey AS ia, b.s_suppkey AS ib
-        |  FROM supplier a JOIN supplier b ON a.s_suppkey < b.s_suppkey
-        |  WHERE levenshtein(a.s_name, b.s_name) <= 1),
-        |e AS (SELECT ia AS src, ib AS dst FROM p
-        |      UNION ALL SELECT ib, ia FROM p),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT src, src FROM e
-        |  UNION
-        |  SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id),
-        |lab AS (SELECT id, min(r) AS cl FROM reach GROUP BY id)
-        |SELECT s_suppkey, s_name FROM supplier
-        |WHERE s_suppkey NOT IN (SELECT id FROM lab WHERE cl <> id)""".stripMargin,
-
-    // same pair graph + reachability as q_dedup_clusters; survivors are
-    // rows that are their own cluster min (or in no pair at all)
-    "q_dedup_reps" ->
-      """WITH RECURSIVE w AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-        |         ELSE list_distinct([array_to_string(ws[i:i+2], ' ')
-        |                             for i in range(1, len(ws) - 1)])
-        |    END AS s
-        |  FROM w),
-        |p AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5),
-        |e AS (SELECT ia AS src, ib AS dst FROM p
-        |      UNION ALL SELECT ib, ia FROM p),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT src, src FROM e
-        |  UNION
-        |  SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id),
-        |lab AS (SELECT id, min(r) AS cl FROM reach GROUP BY id)
-        |SELECT doc_id, source FROM documents
-        |WHERE doc_id NOT IN (SELECT id FROM lab WHERE cl <> id)""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT min(doc_id) AS doc_id, count(*) AS n_copies
-        |FROM documents GROUP BY text""".stripMargin,
-
-    "q_dedup_md5" ->
-      """SELECT md5(text) AS fp, min(doc_id) AS doc_id, count(*) AS n_copies
-        |FROM documents GROUP BY md5(text)""".stripMargin,
-
-    "q_jaccard_pairs" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-        |         ELSE list_distinct([array_to_string(ws[i:i+2], ' ')
-        |                             for i in range(1, len(ws) - 1)])
-        |    END AS s
-        |  FROM w),
-        |p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    len(list_intersect(a.s, b.s)) AS inter,
-        |    len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS uni
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, round(inter * 1.0 / uni, 4) AS jaccard
-        |FROM p WHERE inter * 1.0 / uni >= 0.3""".stripMargin,
-
-    "q_jaccard_pairs05" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-        |         ELSE list_distinct([array_to_string(ws[i:i+2], ' ')
-        |                             for i in range(1, len(ws) - 1)])
-        |    END AS s
-        |  FROM w),
-        |p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    len(list_intersect(a.s, b.s)) AS inter,
-        |    len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS uni
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, round(inter * 1.0 / uni, 4) AS jaccard
-        |FROM p WHERE inter * 1.0 / uni >= 0.5""".stripMargin,
-
-    // planted-truth closed forms (see the query comments): the only
-    // qualifying pairs are the 25 planted exact copies
-    // COMPUTED set-equality join, not the planted constant: at
-    // threshold 1.0 the exact-Jaccard confirm makes the op's output
-    // precisely "natural doc whose shingle SET equals a planted
-    // (doc_id < 25) copy's" — so the oracle stays right even if a
-    // future fixture regeneration gives some doc < 25 a natural
-    // duplicate elsewhere in the corpus (the q_lsh_recall lesson)
-    "q_minhash_lsh" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-        |         ELSE list_distinct([array_to_string(ws[i:i+2], ' ')
-        |                             for i in range(1, len(ws) - 1)])
-        |    END AS s
-        |  FROM w),
-        |k AS (SELECT doc_id,
-        |        array_to_string(list_sort(s), chr(31)) AS key FROM sh)
-        |SELECT a.doc_id AS id_a, b.doc_id + 100000 AS id_b, 1.0 AS jaccard
-        |FROM k a JOIN k b
-        |  ON a.key = b.key AND b.doc_id < 25
-        |  AND a.doc_id < 100000""".stripMargin,
-
-    // stays the planted constant (unlike q_minhash_lsh): hamming-0
-    // simhash equality can't be restated in DuckDB — the 64-bit token
-    // hash is XXH64, which DuckDB lacks. A fixture regeneration that
-    // gives a doc < 25 a natural exact duplicate would surface here as
-    // a red row in the sf0.1 sweep; update the constant then.
-    "q_simhash_pairs" ->
-      """SELECT doc_id AS id_a, doc_id + 100000 AS id_b, 0 AS hamming
-        |FROM documents WHERE doc_id < 25""".stripMargin,
-
-    // identical grouping; first(octet_length) is constant within an
-    // exact-dup group so any_value replays it
-    "q_dedup_savings" ->
-      """WITH pages AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, text FROM documents WHERE doc_id < 30),
-        |g AS (
-        |  SELECT md5(text) AS fp, min(doc_id) AS keep_id,
-        |    CAST(count(*) AS BIGINT) AS n_copies,
-        |    CAST((count(*) - 1) * any_value(octet_length(CAST(text AS BLOB)))
-        |      AS BIGINT) AS bytes_saved
-        |  FROM pages GROUP BY md5(text))
-        |SELECT * FROM g WHERE n_copies >= 2
-        |ORDER BY bytes_saved DESC, fp LIMIT 20""".stripMargin,
-
-    // same integer score and windows; halves capped at n div 2, equal
-    // scores dropped
-    "q_preference_pairs" ->
-      """WITH w AS (
-        |  SELECT doc_id, source,
-        |    list_distinct(string_split_regex(trim(text), '\s+')) AS dw
-        |  FROM documents),
-        |s AS (SELECT doc_id, source,
-        |  1000000 * CAST(len(list_intersect(dw, ['the','of','and','to','in','is','it','you','that','was','for','on','are','with','as','at','this','der','die','das','und','ist','ich','nicht','mit','ein','eine','zu','den','von','sie','auch','le','la','les','de','et','un','une','est','pour','que','dans','qui','pas','sur','avec','el','los','las','y','una','es','por','en','no','se','del','con','的','是','不','了','在','人','有','我','他','这'])) AS BIGINT)
-        |    // CAST(greatest(len(dw), 1) AS BIGINT) AS score_micros
-        |  FROM w),
-        |r AS (SELECT *,
-        |  row_number() OVER (PARTITION BY source
-        |    ORDER BY score_micros DESC, doc_id) AS rb,
-        |  row_number() OVER (PARTITION BY source
-        |    ORDER BY score_micros ASC, doc_id DESC) AS rw,
-        |  count(*) OVER (PARTITION BY source) // 2 AS half
-        |  FROM s)
-        |SELECT b.source, CAST(b.rb AS INT) AS pair_rank,
-        |  b.doc_id AS chosen_id, b.score_micros AS chosen_score,
-        |  q.doc_id AS rejected_id, q.score_micros AS rejected_score
-        |FROM (SELECT * FROM r WHERE rb <= 3 AND rb <= half) b
-        |JOIN (SELECT * FROM r WHERE rw <= 3 AND rw <= half) q
-        |  ON b.source = q.source AND b.rb = q.rw
-        |WHERE b.score_micros > q.score_micros""".stripMargin,
-
-    // sentence replay + the same adjacent/neighbor constructions
-    "q_nsp_pairs" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT * FROM (VALUES
-        |    (CAST(1000001 AS BIGINT),
-        |     'First things first. Then the middle part. Finally the end.'),
-        |    (1000002, 'Lead sentence here. Trailing sentence there.'))
-        |    AS t(doc_id, text)),
-        |p AS (SELECT doc_id, regexp_replace(text,
-        |  '(Mr|Mrs|Ms|Dr|Prof|St|vs|etc|e\.g|i\.e|No)\.',
-        |  '\1' || chr(1), 'g') AS pt FROM d),
-        |sp AS (SELECT doc_id, list_filter(list_transform(
-        |    string_split_regex(pt, '[.!?]+(\s+|$)'),
-        |    s -> trim(replace(s, chr(1), '.'))), s -> s <> '') AS sents
-        |  FROM p),
-        |nz AS (SELECT doc_id, sents FROM sp WHERE len(sents) > 0),
-        |pos AS (SELECT doc_id, unnest(
-        |    [{'pid': i - 1, 'a': sents[i], 'b': sents[i + 1]}
-        |     FOR i IN generate_series(1, len(sents) - 1)]) AS u
-        |  FROM nz WHERE len(sents) >= 2)
-        |SELECT doc_id, CAST(u.pid AS INT) AS pair_id, u.a AS sent_a,
-        |  u.b AS sent_b, true AS is_next FROM pos
-        |UNION ALL
-        |SELECT a.doc_id, CAST(-1 AS INT), a.sents[len(a.sents)],
-        |  b.sents[1], false
-        |FROM nz a JOIN nz b ON b.doc_id = a.doc_id + 1""".stripMargin,
-
-    // same two draws, order-normalized; inclusive list slices with the
-    // empty-slice coalesce (DuckDB NULL-on-empty join seam)
-    "q_fim_transform" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(coalesce(text, '')) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS tk
-        |  FROM documents),
-        |x AS (SELECT doc_id, tk, len(tk) AS n,
-        |  CAST((('0x' || substring(md5(doc_id || ':fim1'), 1, 8))::BIGINT
-        |    % (len(tk) + 1)) AS INT) AS a,
-        |  CAST((('0x' || substring(md5(doc_id || ':fim2'), 1, 8))::BIGINT
-        |    % (len(tk) + 1)) AS INT) AS b
-        |  FROM tk),
-        |y AS (SELECT doc_id, tk, n,
-        |    least(a, b) AS c1, greatest(a, b) AS c2 FROM x)
-        |SELECT doc_id, CAST(n AS INT) AS n_tokens,
-        |  n >= 3 AS fim_applied,
-        |  CASE WHEN n < 3 THEN coalesce(array_to_string(tk, ' '), '')
-        |  ELSE concat_ws(' ', '<PRE>',
-        |    coalesce(array_to_string(tk[1:c1], ' '), ''),
-        |    '<SUF>', coalesce(array_to_string(tk[c2+1:n], ' '), ''),
-        |    '<MID>', coalesce(array_to_string(tk[c1+1:c2], ' '), ''))
-        |  END AS fim_joined
-        |FROM y""".stripMargin,
-
-    // vocabulary replay (top-1000 by (tf desc, token), then lexsorted
-    // array) + the same three per-position draws
-    "q_mlm_mask" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents),
-        |top AS (SELECT token FROM (
-        |    SELECT token, count(*) AS tf FROM tok GROUP BY token)
-        |  ORDER BY tf DESC, token LIMIT 1000),
-        |va AS (SELECT list_sort(list(token)) AS va FROM top),
-        |tk AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(coalesce(text, '')) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(lower(text)), '\s+') END AS tk
-        |  FROM documents),
-        |x AS (SELECT doc_id, tk, len(tk) AS n, va FROM tk CROSS JOIN va),
-        |y AS (SELECT doc_id, tk, n, va,
-        |  [ (('0x' || substring(md5(doc_id || ':' || CAST(i - 1 AS VARCHAR)
-        |      || ':m'), 1, 8))::BIGINT % 1000) < 150
-        |    FOR i IN generate_series(1, n) ] AS sel
-        |  FROM x)
-        |SELECT doc_id, CAST(n AS INT) AS n_tokens,
-        |  CAST(len(list_filter(sel, v -> v)) AS INT) AS n_selected,
-        |  coalesce(array_to_string(
-        |    [ CASE WHEN NOT sel[i] THEN tk[i]
-        |        WHEN (('0x' || substring(md5(doc_id || ':'
-        |            || CAST(i - 1 AS VARCHAR) || ':r'), 1, 8))::BIGINT % 10)
-        |          <= 7 THEN '[MASK]'
-        |        WHEN (('0x' || substring(md5(doc_id || ':'
-        |            || CAST(i - 1 AS VARCHAR) || ':r'), 1, 8))::BIGINT % 10)
-        |          = 8 THEN va[CAST((('0x' || substring(md5(doc_id || ':'
-        |            || CAST(i - 1 AS VARCHAR) || ':v'), 1, 8))::BIGINT
-        |            % len(va)) AS INT) + 1]
-        |        ELSE tk[i] END
-        |      FOR i IN generate_series(1, n) ], ' '), '') AS masked_joined,
-        |  coalesce(array_to_string(
-        |    [ tk[i] FOR i IN generate_series(1, n) IF sel[i] ], ' '), '')
-        |    AS labels_joined
-        |FROM y""".stripMargin,
-
-    // same masking definition, span ids via prefix run-start counts
-    // (order-free — no fold needed relationally)
-    "q_span_corrupt" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(coalesce(text, '')) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS tk
-        |  FROM documents),
-        |m AS (SELECT doc_id, tk, len(tk) AS n,
-        |  [ (('0x' || substring(md5(doc_id || ':' || CAST(i - 1 AS VARCHAR)),
-        |      1, 8))::BIGINT % 1000) < 150
-        |    FOR i IN generate_series(1, len(tk)) ] AS mk
-        |  FROM tk),
-        |ids AS (SELECT doc_id, tk, n, mk,
-        |  [ CASE WHEN mk[i]
-        |      THEN len(list_filter(generate_series(1, i),
-        |             j -> mk[j] AND (j = 1 OR NOT mk[j - 1]))) - 1
-        |      ELSE -1 END
-        |    FOR i IN generate_series(1, n) ] AS ids
-        |  FROM m),
-        |fin AS (SELECT doc_id, tk, n, ids,
-        |    coalesce(list_max(ids) + 1, 0) AS ns FROM ids)
-        |SELECT doc_id, CAST(n AS INT) AS n_tokens,
-        |  CAST(len(list_filter(ids, c -> c >= 0)) AS INT) AS n_masked,
-        |  CAST(greatest(ns, 0) AS INT) AS n_spans,
-        |  coalesce(array_to_string(list_filter(
-        |    [ CASE WHEN ids[i] >= 0 AND (i = 1 OR ids[i - 1] <> ids[i])
-        |        THEN '<extra_id_' || ids[i] || '>'
-        |        WHEN ids[i] < 0 THEN tk[i] END
-        |      FOR i IN generate_series(1, n) ], s -> s IS NOT NULL), ' '),
-        |    '') AS input_joined,
-        |  CASE WHEN ns <= 0 THEN '' ELSE array_to_string(
-        |    [ '<extra_id_' || k || '> ' || array_to_string(
-        |        [ tk[i] FOR i IN generate_series(1, n) IF ids[i] = k ], ' ')
-        |      FOR k IN generate_series(0, ns - 1) ], ' ') END
-        |    AS target_joined
-        |FROM fin""".stripMargin,
-
-    // same grouped aggregation over md5(text) with the planted
-    // mirror-source copies; attrs as the sorted-distinct joined scalar
-    "q_dedup_provenance" ->
-      """WITH pages AS (
-        |  SELECT doc_id, text, source FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, text, 'mirror-src'
-        |  FROM documents WHERE doc_id < 30)
-        |SELECT md5(text) AS fp, min(doc_id) AS doc_id,
-        |  CAST(count(*) AS BIGINT) AS n_copies,
-        |  CAST(count(DISTINCT source) AS INT) AS n_attrs,
-        |  array_to_string(list_sort(list_distinct(list(source))), '|')
-        |    AS attrs
-        |FROM pages GROUP BY md5(text)""".stripMargin,
-
-    // sentence split replay + the same greedy fold as a RECURSIVE CTE
-    // over the sentence index (one assignment row per sentence — a
-    // struct-with-list accumulator through list_reduce silently drops
-    // the list in DuckDB 1.0, so the fold is unrolled relationally);
-    // per-chunk assembly is a grouped string_agg in sentence order
-    "q_chunk_sentences" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT * FROM (VALUES
-        |    (CAST(1000001 AS BIGINT), 'S1 a b c. S2 d e f. S3 g h. S4 i.'),
-        |    (1000002, 'Tiny. Also tiny.'),
-        |    (1000003, 'One very long single sentence that cannot be split even though it blows straight through the token budget because sentence integrity outranks the cap. Short tail.'))
-        |    AS t(doc_id, text)),
-        |p AS (SELECT doc_id, regexp_replace(text,
-        |  '(Mr|Mrs|Ms|Dr|Prof|St|vs|etc|e\.g|i\.e|No)\.',
-        |  '\1' || chr(1), 'g') AS pt FROM d),
-        |sp AS (SELECT doc_id, list_filter(list_transform(
-        |    string_split_regex(pt, '[.!?]+(\s+|$)'),
-        |    s -> trim(replace(s, chr(1), '.'))), s -> s <> '') AS sents
-        |  FROM p),
-        |tc AS (SELECT doc_id, sents, list_transform(sents,
-        |    s -> CASE WHEN trim(s) = '' THEN 0
-        |              ELSE len(string_split_regex(trim(s), '\s+')) END)
-        |    AS counts
-        |  FROM sp WHERE len(sents) > 0),
-        |r AS (
-        |  SELECT doc_id, 1 AS i, 0 AS idx, counts[1] AS used FROM tc
-        |  UNION ALL
-        |  SELECT r.doc_id, r.i + 1,
-        |    CASE WHEN r.used + tc.counts[r.i + 1] > 24 AND r.used > 0
-        |         THEN r.idx + 1 ELSE r.idx END,
-        |    CASE WHEN r.used + tc.counts[r.i + 1] > 24 AND r.used > 0
-        |         THEN tc.counts[r.i + 1]
-        |         ELSE r.used + tc.counts[r.i + 1] END
-        |  FROM r JOIN tc USING (doc_id) WHERE r.i < len(tc.counts))
-        |SELECT r.doc_id, CAST(r.idx AS INT) AS chunk_id,
-        |  CAST(count(*) AS INT) AS n_sentences,
-        |  CAST(sum(tc.counts[r.i]) AS INT) AS n_tokens,
-        |  string_agg(tc.sents[r.i], '|' ORDER BY r.i) AS chunk_joined
-        |FROM r JOIN tc USING (doc_id)
-        |GROUP BY r.doc_id, r.idx""".stripMargin,
-
-    // same protect-split-restore chain in RE2: group shield via \1 ||
-    // chr(1), terminator-run split, placeholder restore, empty filter
-    "q_sentence_split" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT * FROM (VALUES
-        |    (CAST(1000001 AS BIGINT),
-        |     'Dr. Smith went home. Then he slept! Did he? Yes.'),
-        |    (1000002, 'One sentence with no terminator'),
-        |    (1000003, 'e.g. this stays whole. But this is new.'),
-        |    (1000004, 'Multiple!!! Terminators?? One. Two.'))
-        |    AS t(doc_id, text)),
-        |p AS (SELECT doc_id, regexp_replace(text,
-        |  '(Mr|Mrs|Ms|Dr|Prof|St|vs|etc|e\.g|i\.e|No)\.',
-        |  '\1' || chr(1), 'g') AS pt FROM d),
-        |sp AS (SELECT doc_id, list_filter(list_transform(
-        |    string_split_regex(pt, '[.!?]+(\s+|$)'),
-        |    s -> trim(replace(s, chr(1), '.'))), s -> s <> '') AS sents
-        |  FROM p)
-        |SELECT doc_id, CAST(len(sents) AS INT) AS n_sentences,
-        |  coalesce(array_to_string(sents, '|'), '') AS sentences_joined
-        |FROM sp""".stripMargin,
-
-    // recomputes shard assignment and the order-free two-limb digest
-    // sums from the same md5 prefixes — parquet bytes never enter the
-    // contract, and the limbs stay plain BIGINT (no HUGEINT/DECIMAL)
-    "q_export_shards" ->
-      """WITH d AS (
-        |  SELECT CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
-        |    1, 12))::BIGINT AS BIGINT) AS dg
-        |  FROM documents)
-        |SELECT dg % 8 AS shard, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(dg // 16777216) AS BIGINT) AS digest_hi,
-        |  CAST(sum(dg % 16777216) AS BIGINT) AS digest_lo
-        |FROM d GROUP BY 1""".stripMargin,
-
-    // expected outputs from the plant's construction: chr() codepoints
-    // keep the oracle ASCII-clean
-    "q_mojibake" ->
-      """SELECT * FROM (VALUES
-        |  (CAST(1 AS BIGINT), 'caf' || chr(233) || ' corner'),
-        |  (2, 'plain ascii text'),
-        |  (3, 'a' || chr(8217) || 's quote'),
-        |  (4, 'x ' || chr(195)),
-        |  (5, chr(26085) || chr(26412) || ' ' || chr(195) || chr(169))
-        |) AS t(case_id, fixed)""".stripMargin,
-
-    // identical integer algebra: per-value counts, one cumulative
-    // window, cross-product diffs, min-value argmax tie-break
-    "q_ks_drift" ->
-      """WITH c AS (
-        |  SELECT n_chars AS v,
-        |    CAST(sum(CASE WHEN length(source) = 4 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS ca,
-        |    CAST(sum(CASE WHEN length(source) > 4 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS cb
-        |  FROM documents WHERE n_chars IS NOT NULL GROUP BY n_chars),
-        |cum AS (
-        |  SELECT v, sum(ca) OVER w AS cuma, sum(cb) OVER w AS cumb,
-        |    sum(ca) OVER () AS na, sum(cb) OVER () AS nb
-        |  FROM c WINDOW w AS (ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |d AS (SELECT v, na, nb,
-        |        abs(cuma * nb - cumb * na) AS dd FROM cum),
-        |m AS (SELECT max(dd) AS dmax FROM d)
-        |SELECT CAST(any_value(na) AS BIGINT) AS n_a,
-        |  CAST(any_value(nb) AS BIGINT) AS n_b,
-        |  (1000000 * CAST(any_value(dmax) AS BIGINT))
-        |    // (CAST(any_value(na) AS BIGINT)
-        |        * CAST(any_value(nb) AS BIGINT)) AS ks_micros,
-        |  CAST(min(v) AS BIGINT) AS ks_at
-        |FROM d, m WHERE d.dd = m.dmax""".stripMargin,
-
-    // full replay of the late-interaction pipeline: same md5 stub
-    // vectors, same left-assoc 8-component IEEE chains, same micros
-    // quantization, exact integer max/sum, same (score desc, doc_id)
-    // top-k order
-    "q_maxsim" ->
-      """WITH qt AS (
-        |  SELECT DISTINCT CAST(1 AS BIGINT) AS query_id, t AS qtok FROM (
-        |    SELECT unnest(list_slice(
-        |      string_split_regex(trim(lower(text)), '\s+'), 1, 4)) AS t
-        |    FROM documents WHERE doc_id = 0) s),
-        |dt AS (
-        |  SELECT DISTINCT doc_id, dtok FROM (
-        |    SELECT doc_id,
-        |      unnest(string_split_regex(trim(lower(text)), '\s+')) AS dtok
-        |    FROM documents) s WHERE dtok <> ''),
-        |vq AS (SELECT query_id, qtok,
-        |  [ ((('0x' || substring(md5(qtok || ':' || CAST(i AS VARCHAR)), 1, 8))
-        |      ::BIGINT % 1000)) / 999.0 FOR i IN range(0, 8)] AS v
-        |  FROM qt),
-        |vd AS (SELECT doc_id, dtok,
-        |  [ ((('0x' || substring(md5(dtok || ':' || CAST(i AS VARCHAR)), 1, 8))
-        |      ::BIGINT % 1000)) / 999.0 FOR i IN range(0, 8)] AS v
-        |  FROM dt),
-        |pc AS (
-        |  SELECT vq.query_id, vq.qtok, vd.doc_id,
-        |    CAST(round((vq.v[1]*vd.v[1] + vq.v[2]*vd.v[2] + vq.v[3]*vd.v[3] + vq.v[4]*vd.v[4] + vq.v[5]*vd.v[5] + vq.v[6]*vd.v[6] + vq.v[7]*vd.v[7] + vq.v[8]*vd.v[8]) /
-        |      (sqrt(vq.v[1]*vq.v[1] + vq.v[2]*vq.v[2] + vq.v[3]*vq.v[3] + vq.v[4]*vq.v[4] + vq.v[5]*vq.v[5] + vq.v[6]*vq.v[6] + vq.v[7]*vq.v[7] + vq.v[8]*vq.v[8]) * sqrt(vd.v[1]*vd.v[1] + vd.v[2]*vd.v[2] + vd.v[3]*vd.v[3] + vd.v[4]*vd.v[4] + vd.v[5]*vd.v[5] + vd.v[6]*vd.v[6] + vd.v[7]*vd.v[7] + vd.v[8]*vd.v[8])) * 1000000.0, 0) AS BIGINT) AS cm
-        |  FROM vd CROSS JOIN vq
-        |  WHERE (vq.v[1]*vq.v[1] + vq.v[2]*vq.v[2] + vq.v[3]*vq.v[3] + vq.v[4]*vq.v[4] + vq.v[5]*vq.v[5] + vq.v[6]*vq.v[6] + vq.v[7]*vq.v[7] + vq.v[8]*vq.v[8]) > 0 AND (vd.v[1]*vd.v[1] + vd.v[2]*vd.v[2] + vd.v[3]*vd.v[3] + vd.v[4]*vd.v[4] + vd.v[5]*vd.v[5] + vd.v[6]*vd.v[6] + vd.v[7]*vd.v[7] + vd.v[8]*vd.v[8]) > 0),
-        |ms AS (SELECT query_id, qtok, doc_id, max(cm) AS maxsim
-        |       FROM pc GROUP BY 1, 2, 3),
-        |sc AS (SELECT query_id, doc_id, CAST(sum(maxsim) AS BIGINT)
-        |         AS score_micros
-        |       FROM ms GROUP BY 1, 2)
-        |SELECT query_id, doc_id, score_micros, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY score_micros DESC, doc_id) AS rank FROM sc)
-        |WHERE rank <= 10""".stripMargin,
-
-    // the plant's verdict table: src4 has no robots (crawl-by-default
-    // true); on every other host only /cat1/* paths are gated, with
-    // the longer Allow carving /cat1/page3 back out
-    "q_robots_filter" ->
-      """SELECT doc_id,
-        |  lower(source) || '.example.com' AS host,
-        |  '/cat' || (doc_id % 3) || '/page' || (doc_id % 5) AS path,
-        |  CASE WHEN lower(source) = 'src4' THEN true
-        |       WHEN doc_id % 3 = 1 THEN doc_id % 5 = 3
-        |       ELSE true END AS allowed
-        |FROM documents""".stripMargin,
-
-    // replays the frontier verdicts, then the per-host slot arithmetic
-    // on the same (host, path) total order
-    "q_fetch_schedule" ->
-      """WITH h AS (SELECT DISTINCT lower(source) AS src FROM documents),
-        |p AS (SELECT * FROM (VALUES
-        |  ('/cat0/page0', true), ('/cat1/page1', false),
-        |  ('/cat1/page3', true), ('/q?a=1&b=2', true))
-        |  AS t(path, allowed_rule)),
-        |f AS (
-        |  SELECT src || '.example.com' AS host, path,
-        |    CASE WHEN src = 'src4' THEN true ELSE allowed_rule END
-        |      AS allowed,
-        |    CAST(CASE WHEN src = 'src4' THEN 1 ELSE 2 END AS BIGINT)
-        |      AS crawl_delay_s
-        |  FROM h CROSS JOIN p)
-        |SELECT host, path,
-        |  (row_number() OVER (PARTITION BY host ORDER BY path) - 1)
-        |    * crawl_delay_s AS fetch_offset_s
-        |FROM f WHERE allowed""".stripMargin,
-
-    // the plant's expected frontier: 4 sitemap URLs per host (the
-    // entity-escaped one unescapes to '&'), /cat1/page1 gated
-    // everywhere robots exist, delay 2 from the * group (never the
-    // evilbot 99), default 1 on the robots-less host
-    "q_crawl_frontier" ->
-      """WITH h AS (SELECT DISTINCT lower(source) AS src FROM documents),
-        |p AS (SELECT * FROM (VALUES
-        |  ('/cat0/page0', true), ('/cat1/page1', false),
-        |  ('/cat1/page3', true), ('/q?a=1&b=2', true))
-        |  AS t(path, allowed_rule))
-        |SELECT src || '.example.com' AS host, path,
-        |  CASE WHEN src = 'src4' THEN true ELSE allowed_rule END AS allowed,
-        |  CAST(CASE WHEN src = 'src4' THEN 1 ELSE 2 END AS BIGINT)
-        |    AS crawl_delay_s
-        |FROM h CROSS JOIN p""".stripMargin,
-
-    // the planted exact copies are the contaminated set: identical
-    // shingle sets → every band matches and Jaccard is exactly 1
-    "q_decontam_fuzzy" ->
-      """SELECT doc_id + 100000 AS doc_id, doc_id AS matched_eval_id,
-        |  CAST(1000000 AS BIGINT) AS jaccard_micros
-        |FROM documents WHERE doc_id < 20""".stripMargin,
-
-    // identical planted truth through the persisted-index probe path
-    "q_decontam_fuzzy_indexed" ->
-      """SELECT doc_id + 100000 AS corpus_id, doc_id AS matched_eval_id,
-        |  CAST(1000000 AS BIGINT) AS jaccard_micros
-        |FROM documents WHERE doc_id < 20""".stripMargin,
-
-    // mirrors q_data_card: nTokens' empty-doc-is-zero convention, the
-    // (count desc, lang) dominant-language total order, micros share
-    "q_data_card" ->
-      """WITH d AS (
-        |  SELECT source, lang, n_chars,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END
-        |      AS n_tokens
-        |  FROM documents),
-        |per AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-        |    CAST(sum(n_chars) AS BIGINT) AS n_chars
-        |  FROM d GROUP BY 1),
-        |pl AS (SELECT source, lang, count(*) AS c FROM d GROUP BY 1, 2),
-        |tl AS (
-        |  SELECT source, lang AS top_lang FROM (
-        |    SELECT source, lang, row_number() OVER (PARTITION BY source
-        |      ORDER BY c DESC, lang) AS rn FROM pl)
-        |  WHERE rn = 1),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS t FROM d)
-        |SELECT per.source, per.n_docs, per.n_tokens, per.n_chars,
-        |  tl.top_lang, (1000000 * per.n_docs) // tot.t AS share_micros
-        |FROM per JOIN tl USING (source) CROSS JOIN tot""".stripMargin,
-
-    // mirrors q_rate_limit's window cap on the same derived hour
-    "q_rate_limit" ->
-      """SELECT source, hour, doc_id FROM (
-        |  SELECT source, doc_id % 7 AS hour, doc_id,
-        |    row_number() OVER (PARTITION BY source, doc_id % 7
-        |      ORDER BY doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn <= 2""".stripMargin,
-
-    // the committed (v2) snapshot's content, stated directly: a reader
-    // that saw the v1 slice or the torn v3 directory would hash-fail
-    "q_snapshot_commit" ->
-      """SELECT l_returnflag, count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    // planted-truth closed form: 25 exact-copy pairs are the only
-    // Jaccard-1.0 pairs, and identical signatures guarantee the banded
-    // path finds all of them
-    // COMPUTED, not the planted constant: at sf0.1 the corpus has
-    // natural exact-text duplicates beyond the 25 planted copies (33
-    // total pairs — caught by the round-8 full sf0.1 sweep). At
-    // threshold 1.0 "exact pair" = identical shingle SETS, so the
-    // count is sum of C(n,2) over equal-set groups — no O(n^2) join;
-    // n_found = n_exact by construction (identical sets share every
-    // band, and the confirm is the same Jaccard), which is the whole
-    // point the recall harness demonstrates
-    "q_lsh_recall" ->
-      """WITH pages AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, text FROM documents WHERE doc_id < 25),
-        |w AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM pages),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-        |         ELSE list_distinct([array_to_string(ws[i:i+2], ' ')
-        |                             for i in range(1, len(ws) - 1)])
-        |    END AS s
-        |  FROM w),
-        |g AS (SELECT count(*) AS n FROM sh
-        |      GROUP BY array_to_string(list_sort(s), chr(31))),
-        |e AS (SELECT CAST(coalesce(sum(n * (n - 1) // 2), 0) AS BIGINT)
-        |        AS n_exact FROM g)
-        |SELECT n_exact, n_exact AS n_found,
-        |  CASE WHEN n_exact = 0 THEN NULL
-        |       ELSE CAST(1000000 AS BIGINT) END AS recall_micros
-        |FROM e""".stripMargin,
-
-    // COMPUTED set-equality join (same robustness argument as
-    // q_minhash_lsh): the batch copy of doc b matches EVERY corpus doc
-    // whose shingle set equals b's, not only b itself
-    "q_dedup_incr_near" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
-        |         ELSE list_distinct([array_to_string(ws[i:i+2], ' ')
-        |                             for i in range(1, len(ws) - 1)])
-        |    END AS s
-        |  FROM w),
-        |k AS (SELECT doc_id,
-        |        array_to_string(list_sort(s), chr(31)) AS key FROM sh)
-        |SELECT b.doc_id + 500000 AS batch_id, a.doc_id AS corpus_id,
-        |  1.0 AS jaccard
-        |FROM k a JOIN k b ON a.key = b.key AND b.doc_id < 25""".stripMargin,
-
-    "q_text_stats" ->
-      """SELECT doc_id,
-        |  (length(text) - length(replace(text, ' ', ''))) + 1 AS n_tokens_ws,
-        |  len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]')) AS n_tokens_re
-        |FROM documents""".stripMargin,
-
-    // chunking: DuckDB list slices are 1-based inclusive, so
-    // ws[i*15+1 : i*15+20] is exactly Spark's slice(ws, i*15+1, 20)
-    "q_dedup_lines" ->
-      """WITH ws AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |lines AS (
-        |  SELECT doc_id, i AS pos,
-        |         array_to_string(w[(i-1)*3+1 : i*3], ' ') AS line
-        |  FROM ws, LATERAL (SELECT unnest(generate_series(
-        |    1, CAST(ceil(len(w)/3.0) AS BIGINT))) AS i) g),
-        |freq AS (
-        |  SELECT line FROM lines
-        |  GROUP BY line HAVING count(DISTINCT doc_id) > 2)
-        |SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text
-        |FROM lines WHERE line NOT IN (SELECT line FROM freq)
-        |GROUP BY doc_id""".stripMargin,
-
-    "q_chunk_docs" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents WHERE doc_id < 100),
-        |c AS (
-        |  SELECT doc_id, len(ws) AS n,
-        |    unnest([{'cid': i,
-        |             'txt': array_to_string(ws[i*15+1 : i*15+20], ' ')}
-        |            for i in range(0, (greatest(len(ws) - 6, 0) // 15) + 1)]) AS u
-        |  FROM w)
-        |SELECT doc_id, u['cid'] AS chunk_id, u['txt'] AS chunk_text,
-        |  CASE WHEN u['txt'] = '' THEN 0
-        |       ELSE least(20, n - u['cid'] * 15) END AS n_tokens
-        |FROM c""".stripMargin,
-
-    "q_pack_sequences" ->
-      """WITH w AS (
-        |  SELECT doc_id, source,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens
-        |  FROM documents),
-        |p AS (
-        |  SELECT source, doc_id, n_tokens,
-        |    CAST(floor((sum(n_tokens) OVER (PARTITION BY source
-        |        ORDER BY doc_id, n_tokens
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      - n_tokens) / 512) AS BIGINT) AS pack_id
-        |  FROM w)
-        |SELECT source, pack_id, count(*) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-        |FROM p GROUP BY source, pack_id""".stripMargin,
-
-    "q_quality" ->
-      """WITH w AS (
-        |  SELECT doc_id, length(text) AS n_chars,
-        |    string_split_regex(trim(text), '\s+') AS ws,
-        |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct
-        |  FROM documents)
-        |SELECT doc_id,
-        |  len(ws) AS n_tokens,
-        |  (n_chars - (len(ws) - 1)) * 1.0 / greatest(len(ws), 1) AS mean_word_len,
-        |  punct * 1.0 / greatest(n_chars, 1) AS punct_ratio,
-        |  len(list_intersect(list_distinct(ws), ['the','of','and','to','in','is','it','you','that','was','for','on','are','with','as','at','this','der','die','das','und','ist','ich','nicht','mit','ein','eine','zu','den','von','sie','auch','le','la','les','de','et','un','une','est','pour','que','dans','qui','pas','sur','avec','el','los','las','y','una','es','por','en','no','se','del','con','的','是','不','了','在','人','有','我','他','这'])) * 1.0
-        |    / greatest(len(list_distinct(ws)), 1) AS stopword_ratio,
-        |  len(ws) >= 5 AND len(ws) <= 100000
-        |    AND (n_chars - (len(ws) - 1)) * 1.0 / greatest(len(ws), 1) >= 2
-        |    AND (n_chars - (len(ws) - 1)) * 1.0 / greatest(len(ws), 1) <= 20 AS quality_ok
-        |FROM w""".stripMargin,
-
-    // lang-ID argmax mirrored via fixed-width score-string encoding:
-    // greatest() over printf('%014.9f', score) || lang reproduces Spark's
-    // struct(score, lang) max ordering including the tie-break on lang.
-    "q_lang_id" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    list_distinct(string_split_regex(trim(lower(text)), '\s+')) AS dw
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, greatest(
-        |    printf('%014.9f', len(list_intersect(dw, ['the','of','and','to','in','is','it','you','that','was','for','on','are','with','as','at','this'])) * 1.0 / greatest(len(dw),1)) || 'en',
-        |    printf('%014.9f', len(list_intersect(dw, ['der','die','das','und','ist','ich','nicht','mit','ein','eine','zu','den','von','sie','auch'])) * 1.0 / greatest(len(dw),1)) || 'de',
-        |    printf('%014.9f', len(list_intersect(dw, ['le','la','les','de','et','un','une','est','pour','que','dans','qui','pas','sur','avec'])) * 1.0 / greatest(len(dw),1)) || 'fr',
-        |    printf('%014.9f', len(list_intersect(dw, ['el','los','las','de','y','un','una','es','por','que','en','no','se','del','con'])) * 1.0 / greatest(len(dw),1)) || 'es',
-        |    printf('%014.9f', len(list_intersect(dw, ['的','是','不','了','在','人','有','我','他','这'])) * 1.0 / greatest(len(dw),1)) || 'zh') AS key
-        |  FROM w)
-        |SELECT substr(key, 15) AS lang_pred, count(*) AS n
-        |FROM s GROUP BY 1""".stripMargin,
-
-    // list_prepend(0, ...) gives DuckDB's fold the same 0 seed as Spark's
-    // aggregate(); the 5-word shingles mirror TextOps.wordShingles
-    "q_fingerprint_md5" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, ws,
-        |    CASE WHEN len(ws) - 4 <= 0 THEN [array_to_string(ws, ' ')]
-        |         ELSE [array_to_string(ws[i:i+4], ' ')
-        |               FOR i IN generate_series(1, len(ws) - 4)] END AS grams
-        |  FROM tok)
-        |SELECT doc_id,
-        |  list_reduce(list_prepend(0, list_transform(ws,
-        |      w -> CAST(('0x' || substring(md5(w), 1, 8)) AS BIGINT))),
-        |    (acc, h) -> (acc * 1000003 + h) % 2147483647) AS fp_rolling,
-        |  list_min(list_transform(grams,
-        |    g -> CAST(('0x' || substring(md5(g), 1, 8)) AS BIGINT))) AS fp_winnow
-        |FROM g""".stripMargin,
-
-    // same construction at window=7 (7-word shingles: inclusive slice
-    // ws[i:i+6], short docs contribute their whole text as one gram)
-    "q_fingerprint" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, ws,
-        |    CASE WHEN len(ws) - 6 <= 0 THEN [array_to_string(ws, ' ')]
-        |         ELSE [array_to_string(ws[i:i+6], ' ')
-        |               FOR i IN generate_series(1, len(ws) - 6)] END AS grams
-        |  FROM tok)
-        |SELECT doc_id,
-        |  list_reduce(list_prepend(0, list_transform(ws,
-        |      w -> CAST(('0x' || substring(md5(w), 1, 8)) AS BIGINT))),
-        |    (acc, h) -> (acc * 1000003 + h) % 2147483647) AS fp_rolling,
-        |  list_min(list_transform(grams,
-        |    g -> CAST(('0x' || substring(md5(g), 1, 8)) AS BIGINT))) AS fp_winnow
-        |FROM g""".stripMargin,
-
-    "q_k_anonymity" ->
-      """SELECT c_nationkey, c_mktsegment, count(*) AS n,
-        |  count(*) < 10 AS violating
-        |FROM customer GROUP BY 1, 2""".stripMargin,
-
-    "q_l_diversity" ->
-      """WITH b AS (
-        |  SELECT c_nationkey, c_mktsegment,
-        |    CAST(floor(c_acctbal / 2000) AS BIGINT) AS bal_band
-        |  FROM customer)
-        |SELECT c_nationkey, c_mktsegment, count(*) AS n,
-        |  count(DISTINCT bal_band) AS n_sensitive,
-        |  count(DISTINCT bal_band) < 3 AS violating
-        |FROM b GROUP BY 1, 2""".stripMargin,
-
-    "q_k_suppress" ->
-      """WITH sized AS (
-        |  SELECT c_custkey, c_nationkey, c_mktsegment,
-        |    count(*) OVER (PARTITION BY c_nationkey, c_mktsegment) AS cn
-        |  FROM customer)
-        |SELECT c_custkey,
-        |  CASE WHEN cn < 10 THEN NULL ELSE c_nationkey END AS c_nationkey,
-        |  CASE WHEN cn < 10 THEN NULL ELSE c_mktsegment END AS c_mktsegment
-        |FROM sized""".stripMargin,
-
-    // the discrete-Laplace release restated: u = (md5-head32 + 0.5)/2^32,
-    // geometric = floor(ln(u) / -epsilon), noise = g1 - g2; ln(p) is
-    // written -0.5 directly (p = e^-0.5) so neither engine computes an
-    // exp/ln roundtrip
-    "q_dp_counts" ->
-      """WITH g AS (
-        |  SELECT o_orderpriority, count(*) AS exact_n
-        |  FROM orders GROUP BY 1),
-        |u AS (
-        |  SELECT o_orderpriority, exact_n,
-        |    (CAST(('0x' || substring(md5('v:' || o_orderpriority
-        |      || 'graft-r7:g1'),
-        |      1, 8)) AS BIGINT) + 0.5) / 4294967296.0 AS u1,
-        |    (CAST(('0x' || substring(md5('v:' || o_orderpriority
-        |      || 'graft-r7:g2'),
-        |      1, 8)) AS BIGINT) + 0.5) / 4294967296.0 AS u2
-        |  FROM g)
-        |SELECT o_orderpriority, exact_n,
-        |  exact_n + CAST(floor(ln(u1) / -0.5) AS BIGINT)
-        |          - CAST(floor(ln(u2) / -0.5) AS BIGINT) AS noisy_n
-        |FROM u""".stripMargin,
-
-    // the normalization restated: domain CDF -> per-domain-row covered
-    // bin range -> boundary table; per-source integer rank -> bin ->
-    // boundary join. Integer div throughout, no interpolation
-    "q_quantile_normalize" ->
-      """WITH dom AS (
-        |  SELECT n_chars AS v, count(*) AS cnt FROM documents GROUP BY 1),
-        |cdf AS (
-        |  SELECT v, cnt, sum(cnt) OVER (ORDER BY v) AS cum,
-        |    sum(cnt) OVER () AS n
-        |  FROM dom),
-        |bounds AS (
-        |  SELECT k, v AS normalized
-        |  FROM (SELECT v,
-        |          CAST((cum - cnt) * 16 // n + 1 AS BIGINT) AS k_lo,
-        |          CAST(cum * 16 // n AS BIGINT) AS k_hi
-        |        FROM cdf),
-        |    unnest(generate_series(k_lo, k_hi)) AS t(k)),
-        |grp AS (
-        |  SELECT doc_id, source, n_chars,
-        |    row_number() OVER (PARTITION BY source
-        |                       ORDER BY n_chars, doc_id) AS r,
-        |    count(*) OVER (PARTITION BY source) AS ng
-        |  FROM documents)
-        |SELECT g.doc_id, g.source, g.n_chars,
-        |  (g.r * 16 + g.ng - 1) // g.ng AS q_bin,
-        |  b.normalized
-        |FROM grp g JOIN bounds b ON b.k = (g.r * 16 + g.ng - 1) // g.ng""".stripMargin,
-
-    // the Luhn fold restated as a DuckDB list comprehension over the
-    // reversed digit string — same per-position doubling, same mod-10
-    "q_pii_luhn" ->
-      """WITH d AS (
-        |  SELECT doc_id, text || ' card ' ||
-        |    lpad(CAST(doc_id * 7919 % 10000000000 AS VARCHAR), 16, '4')
-        |    AS text
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_extract_all(text, '\d+'),
-        |      x -> length(x) BETWEEN 13 AND 19) AS cands
-        |  FROM d),
-        |v AS (
-        |  SELECT doc_id, cands,
-        |    list_filter(cands, cc -> list_sum(
-        |      [CASE WHEN i % 2 = 0 THEN
-        |         CASE WHEN (ascii(reverse(cc)[i]) - 48) * 2 > 9
-        |              THEN (ascii(reverse(cc)[i]) - 48) * 2 - 9
-        |              ELSE (ascii(reverse(cc)[i]) - 48) * 2 END
-        |       ELSE ascii(reverse(cc)[i]) - 48 END
-        |       FOR i IN generate_series(1, length(cc))]) % 10 = 0) AS valid
-        |  FROM c)
-        |SELECT doc_id, CAST(len(cands) AS BIGINT) AS n_candidates,
-        |  CAST(len(valid) AS BIGINT) AS n_luhn_valid,
-        |  coalesce(array_to_string(valid, ','), '') AS valid_numbers
-        |FROM v""".stripMargin,
-
-    "q_pii_redact" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    text || ' contact user' || doc_id || '@example.com from 10.0.0.'
-        |      || (doc_id % 256) || ' id 1234567890' AS text
-        |  FROM documents WHERE doc_id < 200)
-        |SELECT doc_id,
-        |  len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-        |  len(regexp_extract_all(text, '\b([0-9]{1,3}\.){3}[0-9]{1,3}\b')) AS n_ipv4,
-        |  len(regexp_extract_all(text, '\b[0-9]{9,}\b')) AS n_digit_runs,
-        |  regexp_replace(regexp_replace(regexp_replace(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b([0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g'),
-        |    '\b[0-9]{9,}\b', '<NUM>', 'g') AS text_redacted
-        |FROM d""".stripMargin,
-
-    // chr(769)=U+0301 combining acute, chr(778)=U+030A ring,
-    // chr(776)=U+0308 diaeresis — the same decomposed sequences the
-    // Spark side plants; nfc_normalize is DuckDB's NFC
-    "q_normalize" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 50
-        |  UNION ALL SELECT 100001, 'cafe' || chr(769) || '  du   monde'
-        |  UNION ALL SELECT 100002,
-        |    'A' || chr(778) || 'ngstro' || chr(776) || 'm UNITS'
-        |  UNION ALL SELECT 100003, '  already clean  ')
-        |SELECT doc_id,
-        |  lower(trim(regexp_replace(nfc_normalize(text), '\s+', ' ', 'g')))
-        |    AS text_norm
-        |FROM d""".stripMargin,
-
-    // mirrors TextOps.wordShingles exactly: docs of <= n-1 words
-    // contribute their whole text as one shingle; DuckDB's 1-based
-    // INCLUSIVE slice ws[i:i+7] is Spark's slice(ws, i, 8)
-    // left join on containment, '|'-joined sorted matches as the
-    // sortable scalar
-    "q_blocklist" ->
-      """WITH terms(term) AS (VALUES ('slow scan'), ('big table'),
-        |  ('hash merge'), ('stream batch'), ('forbidden phrase'))
-        |SELECT d.doc_id,
-        |  coalesce(string_agg(t.term, '|' ORDER BY t.term), '')
-        |    AS matched_terms,
-        |  CAST(count(t.term) AS INT) AS n_matched,
-        |  count(t.term) > 0 AS blocked
-        |FROM documents d LEFT JOIN terms t
-        |  ON contains(lower(d.text), t.term)
-        |GROUP BY d.doc_id""".stripMargin,
-
-    // identical semantics, automaton-matched on the Spark side
-    "q_blocklist_ac" ->
-      """WITH terms(term) AS (VALUES ('slow scan'), ('big table'),
-        |  ('hash merge'), ('stream batch'), ('forbidden phrase'))
-        |SELECT d.doc_id,
-        |  coalesce(string_agg(t.term, '|' ORDER BY t.term), '')
-        |    AS matched_terms,
-        |  CAST(count(t.term) AS INT) AS n_matched,
-        |  count(t.term) > 0 AS blocked
-        |FROM documents d LEFT JOIN terms t
-        |  ON contains(lower(d.text), t.term)
-        |GROUP BY d.doc_id""".stripMargin,
-
-    "q_decontam" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, unnest(
-        |    CASE WHEN len(ws) - 7 <= 0 THEN [array_to_string(ws, ' ')]
-        |         ELSE [array_to_string(ws[i:i+7], ' ')
-        |               FOR i IN generate_series(1, len(ws) - 7)] END) AS g
-        |  FROM tok),
-        |ev AS (SELECT DISTINCT g FROM g WHERE doc_id < 20),
-        |corpus AS (
-        |  SELECT doc_id, g FROM g WHERE doc_id >= 20
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, g FROM g WHERE doc_id < 20)
-        |SELECT DISTINCT c.doc_id FROM corpus c JOIN ev USING (g)""".stripMargin,
-
-    // mirrors Dedup.crossSourceDuplication (md5 equality classes match
-    // Spark's binary-cast md5 on UTF-8 text; fp never reaches output)
-    "q_cross_source_dups" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text, source FROM documents
-        |  UNION ALL SELECT * FROM (VALUES
-        |    (600001, 'mirrored page body one', 'srcM1'),
-        |    (600002, 'mirrored page body one', 'srcM2'),
-        |    (600003, 'mirrored page body two', 'srcM1'),
-        |    (600004, 'mirrored page body two', 'srcM2'),
-        |    (600005, 'mirrored page body one', 'srcM3'))
-        |      AS p(doc_id, text, source)),
-        |f AS (
-        |  SELECT DISTINCT md5(text) AS fp, source AS src FROM all_docs
-        |  WHERE text IS NOT NULL AND source IS NOT NULL)
-        |SELECT a.src AS source_a, b.src AS source_b,
-        |  CAST(count(*) AS BIGINT) AS n_shared_fingerprints
-        |FROM f a JOIN f b USING (fp)
-        |WHERE a.src < b.src
-        |GROUP BY 1, 2""".stripMargin,
-
-    // aggregates the BASE table directly — the Spark side answers from
-    // the saved rollup via the RollupRouting optimizer rule, so the
-    // hash compare proves the routed plan is exactly the direct answer
-    "q_rollup_route" ->
-      """SELECT lang,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(min(n_chars) AS BIGINT) AS min_chars,
-        |  CAST(max(n_chars) AS BIGINT) AS max_chars,
-        |  CAST(count(source) AS BIGINT) AS n_sources
-        |FROM documents WHERE source <> 'src0'
-        |GROUP BY lang""".stripMargin,
-
-    // AVG routed from the rollup's stored sum+count pair: routed value
-    // is exact-long-sum / count in double — bit-identical to the
-    // oracle's (every partial sum of ~1k-char counts is exactly
-    // representable far below 2^53, so accumulation order is moot)
-    "q_rollup_avg" ->
-      """SELECT lang,
-        |  avg(n_chars) AS avg_chars,
-        |  CAST(count(n_chars) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    // dim-expression grouping routed: GROUP BY upper(lang) over the
-    // (lang, source) rollup — the oracle aggregates the base with the
-    // same expression, proving coarser-than-dims re-aggregation exact
-    "q_rollup_expr" ->
-      """SELECT upper(lang) AS lang_u,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  avg(n_chars) AS avg_chars
-        |FROM documents WHERE source <> 'src0'
-        |GROUP BY 1""".stripMargin,
-
-    // COUNT(DISTINCT dim) + dim-expression extrema routed: the oracle
-    // aggregates the base directly; the hash match proves the
-    // rollup-row re-derivation (distinct dims ARE rollup rows; f(dims)
-    // extrema ignore multiplicity) exact
-    "q_rollup_distinct" ->
-      """SELECT lang,
-        |  CAST(count(DISTINCT source) AS BIGINT) AS n_sources_d,
-        |  min(upper(source)) AS min_source_u,
-        |  CAST(max(length(source)) AS BIGINT) AS max_source_len,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(count(*) AS BIGINT) AS n_docs
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    // conditional-count + integral dim-expression SUM/AVG routed via
-    // the cnt-weighted re-sum: the oracle aggregates the base; exact
-    // long sums (and an integral avg whose sums sit far below 2^53)
-    // make the hash compare strict
-    "q_rollup_condsum" ->
-      """SELECT lang,
-        |  CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS n_src0,
-        |  CAST(sum(length(source)) AS BIGINT) AS sum_srclen,
-        |  avg(length(source)) AS avg_srclen,
-        |  CAST(count(*) AS BIGINT) AS n_docs
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    // star-schema routing: the oracle re-derives the dim table from
-    // documents (same deterministic attrs the Spark fixture persisted)
-    // and aggregates the base join directly; the Spark side answered
-    // from rollup ⋈ dim with the base never scanned (plan-checked), so
-    // the hash match proves the joined-rollup re-aggregation exact
-    "q_rollup_star" ->
-      """WITH dim AS (
-        |  SELECT source AS src,
-        |    CASE WHEN source IN ('src0','src1') THEN 'low'
-        |         ELSE 'high' END AS tier,
-        |    length(source) AS src_len
-        |  FROM (SELECT DISTINCT source FROM documents))
-        |SELECT tier, lang,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  avg(n_chars) AS avg_chars,
-        |  CAST(max(n_chars) AS BIGINT) AS max_chars,
-        |  CAST(sum(src_len) AS BIGINT) AS sum_srclen
-        |FROM documents JOIN dim ON documents.source = dim.src
-        |WHERE tier = 'high'
-        |GROUP BY tier, lang""".stripMargin,
-
-    // SUM/AVG/COUNT(DISTINCT dim expression) routed from the rollup
-    // rows directly (they ARE the distinct dim combinations); the
-    // oracle aggregates the base — distinct srclen values are small
-    // ints, so the distinct avg is exact in double on both engines
-    "q_rollup_sumdistinct" ->
-      """SELECT lang,
-        |  CAST(sum(DISTINCT length(source)) AS BIGINT) AS sum_srclen_d,
-        |  avg(DISTINCT length(source)) AS avg_srclen_d,
-        |  CAST(count(DISTINCT length(source)) AS BIGINT) AS n_srclen_d,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(count(*) AS BIGINT) AS n_docs
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    // incremental refresh: the Spark base is documents PLUS an appended
-    // doc_id%7==0 slice, folded into the rollup by Rollup.refresh from
-    // the new files only; the oracle replays the same union directly —
-    // a hash match proves delta-fold ≡ full rescan
-    "q_rollup_refresh" ->
-      """SELECT lang,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  avg(n_chars) AS avg_chars,
-        |  CAST(max(n_chars) AS BIGINT) AS max_chars
-        |FROM (
-        |  SELECT lang, n_chars FROM documents
-        |  UNION ALL
-        |  SELECT lang, n_chars FROM documents WHERE doc_id % 7 = 0)
-        |GROUP BY lang""".stripMargin,
-
-    // mirrors TextOps.noveltyScores: distinct 8-grams per doc, first
-    // occurrence by min doc id, one double division per row
-    "q_novelty" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents WHERE doc_id IS NOT NULL),
-        |g0 AS (
-        |  SELECT doc_id, unnest(
-        |    CASE WHEN len(ws) - 7 <= 0 THEN [array_to_string(ws, ' ')]
-        |         ELSE [array_to_string(ws[i:i+7], ' ')
-        |               FOR i IN generate_series(1, len(ws) - 7)] END) AS g
-        |  FROM tok),
-        |g AS (SELECT DISTINCT doc_id, g FROM g0),
-        |f AS (SELECT g, min(doc_id) AS first_id FROM g GROUP BY 1)
-        |SELECT g.doc_id,
-        |  CAST(count(*) AS BIGINT) AS n_grams,
-        |  CAST(sum(CASE WHEN f.first_id = g.doc_id THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_novel,
-        |  CAST(sum(CASE WHEN f.first_id = g.doc_id THEN 1 ELSE 0 END)
-        |      AS DOUBLE) / CAST(count(*) AS DOUBLE) AS novelty
-        |FROM g JOIN f USING (g)
-        |GROUP BY g.doc_id""".stripMargin,
-
-    // gate parity: same gram construction as q_decontam, but per-doc
-    // DISTINCT matched-gram counts with zero-hit docs kept
-    "q_decontam_gate" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, unnest(
-        |    CASE WHEN len(ws) - 7 <= 0 THEN [array_to_string(ws, ' ')]
-        |         ELSE [array_to_string(ws[i:i+7], ' ')
-        |               FOR i IN generate_series(1, len(ws) - 7)] END) AS g
-        |  FROM tok),
-        |ev AS (SELECT DISTINCT g FROM g WHERE doc_id < 20),
-        |corpus AS (
-        |  SELECT doc_id, g FROM g WHERE doc_id >= 20
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, g FROM g WHERE doc_id < 20)
-        |SELECT c.doc_id,
-        |  count(DISTINCT ev.g) AS n_hits,
-        |  count(DISTINCT ev.g) > 0 AS contaminated
-        |FROM corpus c LEFT JOIN ev ON c.g = ev.g
-        |GROUP BY c.doc_id""".stripMargin,
-
-    // 3-gram construction mirrors TextOps.wordShingles (see q_decontam)
-    "q_repetition" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(ws) - 2 <= 0 THEN [array_to_string(ws, ' ')]
-        |         ELSE [array_to_string(ws[i:i+2], ' ')
-        |               FOR i IN generate_series(1, len(ws) - 2)] END AS grams
-        |  FROM tok)
-        |SELECT doc_id, CAST(len(grams) AS BIGINT) AS n_grams,
-        |  round((len(grams) - len(list_distinct(grams))) * 1.0
-        |    / greatest(len(grams), 1), 6) AS dup_gram_frac
-        |FROM g""".stripMargin,
-
-    "q_topk_per_group" ->
-      """WITH q AS (
-        |  SELECT doc_id, source,
-        |    len(string_split_regex(trim(text), '\s+')) AS n_tokens
-        |  FROM documents)
-        |SELECT source, doc_id, n_tokens, rn FROM (
-        |  SELECT source, doc_id, n_tokens,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY n_tokens DESC, doc_id) AS rn
-        |  FROM q) WHERE rn <= 3""".stripMargin,
-
-    "q_window_analytics" ->
-      """SELECT o_orderkey, o_orderpriority,
-        |  CAST(ntile(4) OVER w AS BIGINT) AS tile4,
-        |  percent_rank() OVER w AS pct_rank,
-        |  cume_dist() OVER w AS cume
-        |FROM orders WHERE o_orderkey < 2000
-        |WINDOW w AS (PARTITION BY o_orderpriority
-        |             ORDER BY o_totalprice, o_orderkey)""".stripMargin,
-
-    // BPE merge #1: the arg-max weighted adjacent character pair over the
-    // word-frequency table, tie-broken (count desc, left, right) exactly
-    // as the engine pins it
-    "q_bpe_first" ->
-      """WITH w AS (
-        |  SELECT word, count(*) AS cnt FROM (
-        |    SELECT unnest(string_split_regex(trim(text), '\s+')) AS word
-        |    FROM documents WHERE trim(coalesce(text, '')) <> '')
-        |  WHERE word <> '' GROUP BY word),
-        |p AS (
-        |  SELECT substring(word, i, 1) AS l, substring(word, i + 1, 1) AS r,
-        |    CAST(sum(cnt) AS BIGINT) AS pair_count
-        |  FROM w, unnest(generate_series(1, length(word) - 1)) AS t(i)
-        |  GROUP BY 1, 2)
-        |SELECT CAST(1 AS BIGINT) AS merge_rank, l AS "left", r AS "right",
-        |  pair_count
-        |FROM p WHERE pair_count >= 2
-        |ORDER BY pair_count DESC, l, r LIMIT 1""".stripMargin,
-
-    // full 8-round training replay (unrolled CTE stages; framed-replace
-    // merge — see bpeTrainCtes) and the trained tokenizer applied to the
-    // corpus: the two queries the r6 verdict flagged as oracle-less
-    "q_bpe_merges" -> bpeMergesSql(8),
-    "q_bpe_encode" -> bpeEncodeSql(8),
-    "q_bpe_fertility" -> bpeFertilitySql(8),
-
-    // mirrors TextOps.unigramEncodeFast on the planted vocabulary: the
-    // Viterbi DP unrolled per position; 9 covers the longest word
-    // ('tablesort'), 5 the longest piece ('query')
-    "q_unigram_encode" -> unigramEncodeSql(9, 5),
-
-    "q_vocab" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents)
-        |SELECT token, count(*) AS tf, count(DISTINCT doc_id) AS df_docs
-        |FROM t GROUP BY token ORDER BY tf DESC, token LIMIT 100""".stripMargin,
-
-    // the CMS construction restated: cell = md5(token ':cms' i) mod
-    // 1024 per hash row i, sketch = per-cell counts, estimate = min
-    // over the probe's cells with empty cells as 0
-    "q_cms_freq" ->
-      """WITH tok AS (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents),
-        |cells AS (
-        |  SELECT i, CAST(CAST(('0x' || substring(md5(token || ':cms' || i),
-        |    1, 15)) AS BIGINT) % 1024 AS INT) AS c
-        |  FROM tok, unnest(generate_series(0, 3)) AS t(i)),
-        |sk AS (SELECT i AS r, c, count(*) AS cnt FROM cells GROUP BY 1, 2),
-        |ex AS (
-        |  SELECT token, count(*) AS exact_n FROM tok GROUP BY 1
-        |  ORDER BY exact_n DESC, token LIMIT 20),
-        |pe AS (
-        |  SELECT ex.token, ex.exact_n, i,
-        |    CAST(CAST(('0x' || substring(md5(ex.token || ':cms' || i),
-        |      1, 15)) AS BIGINT) % 1024 AS INT) AS c
-        |  FROM ex, unnest(generate_series(0, 3)) AS t(i)),
-        |est AS (
-        |  SELECT pe.token, pe.exact_n, min(coalesce(sk.cnt, 0)) AS est_n
-        |  FROM pe LEFT JOIN sk ON sk.r = pe.i AND sk.c = pe.c
-        |  GROUP BY 1, 2)
-        |SELECT token, exact_n, est_n, est_n >= exact_n AS bounded
-        |FROM est""".stripMargin,
-
-    // both sketches rebuilt cell-for-cell, inner product per hash row,
-    // min over the 4 rows (rows with no shared cells contribute 0)
-    "q_cms_join_size" ->
-      """WITH sa AS (
-        |  SELECT i AS r,
-        |    CAST(CAST(('0x' || substring(md5(o_custkey || ':cms' || i),
-        |      1, 15)) AS BIGINT) % 1024 AS INT) AS c,
-        |    count(*) AS cnt
-        |  FROM orders, unnest(generate_series(0, 3)) AS t(i)
-        |  GROUP BY 1, 2),
-        |sb AS (
-        |  SELECT i AS r,
-        |    CAST(CAST(('0x' || substring(md5(c_custkey || ':cms' || i),
-        |      1, 15)) AS BIGINT) % 1024 AS INT) AS c,
-        |    count(*) AS cnt
-        |  FROM customer, unnest(generate_series(0, 3)) AS t(i)
-        |  GROUP BY 1, 2),
-        |ip AS (
-        |  SELECT sa.r, sum(sa.cnt * sb.cnt) AS ip
-        |  FROM sa JOIN sb ON sa.r = sb.r AND sa.c = sb.c
-        |  GROUP BY 1),
-        |est AS (
-        |  SELECT CAST(least(min(coalesce(ip.ip, 0)),
-        |    9223372036854775807) AS BIGINT) AS est_join_rows
-        |  FROM (SELECT DISTINCT r FROM sa) d LEFT JOIN ip USING (r)),
-        |ex AS (
-        |  SELECT count(*) AS exact_join_rows
-        |  FROM orders JOIN customer ON o_custkey = c_custkey)
-        |SELECT est.est_join_rows, ex.exact_join_rows,
-        |  est.est_join_rows >= ex.exact_join_rows AS bounded
-        |FROM est, ex""".stripMargin,
-
-    // the Zipf fit restated: same tokenizer as q_vocab, rank ties break
-    // on the token, ln quantized to 9 decimals, moments summed in
-    // DECIMAL(38,9) (exact for 9-decimal values), and the closed-form
-    // OLS written with the same association order as the Spark side
-    "q_zipf_fit" ->
-      """WITH t AS (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents),
-        |tf AS (SELECT token, count(*) AS tf FROM t GROUP BY token),
-        |top AS (SELECT token, tf FROM tf ORDER BY tf DESC, token LIMIT 1000),
-        |rk AS (
-        |  SELECT tf, row_number() OVER (ORDER BY tf DESC, token) AS rank
-        |  FROM top),
-        |q AS (
-        |  SELECT round(ln(CAST(rank AS DOUBLE)), 9) AS x,
-        |    round(ln(CAST(tf AS DOUBLE)), 9) AS y
-        |  FROM rk),
-        |s AS (
-        |  SELECT count(*) AS n,
-        |    CAST(sum(CAST(x AS DECIMAL(38,9))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(y AS DECIMAL(38,9))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(round(x * x, 9) AS DECIMAL(38,9))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(round(x * y, 9) AS DECIMAL(38,9))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(round(y * y, 9) AS DECIMAL(38,9))) AS DOUBLE) AS syy
-        |  FROM q),
-        |f AS (
-        |  SELECT n, n * sxy - sx * sy AS a, n * sxx - sx * sx AS b,
-        |    n * syy - sy * sy AS c, sx, sy
-        |  FROM s)
-        |SELECT n, a / b AS slope,
-        |  (sy - a / b * sx) / n AS intercept,
-        |  a * a / (b * c) AS r2
-        |FROM f""".stripMargin,
-
-    // per-source ranks partition the window by source; otherwise the
-    // q_zipf_fit recipe verbatim
-    "q_zipf_by_source" ->
-      """WITH t AS (
-        |  SELECT source,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents),
-        |tf AS (SELECT source, token, count(*) AS tf FROM t GROUP BY 1, 2),
-        |rk AS (
-        |  SELECT source, tf, row_number() OVER (PARTITION BY source
-        |    ORDER BY tf DESC, token) AS rank
-        |  FROM tf
-        |  QUALIFY rank <= 500),
-        |q AS (
-        |  SELECT source, round(ln(CAST(rank AS DOUBLE)), 9) AS x,
-        |    round(ln(CAST(tf AS DOUBLE)), 9) AS y
-        |  FROM rk),
-        |s AS (
-        |  SELECT source, count(*) AS n,
-        |    CAST(sum(CAST(x AS DECIMAL(38,9))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(y AS DECIMAL(38,9))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(round(x * x, 9) AS DECIMAL(38,9))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(round(x * y, 9) AS DECIMAL(38,9))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(round(y * y, 9) AS DECIMAL(38,9))) AS DOUBLE) AS syy
-        |  FROM q GROUP BY 1),
-        |f AS (
-        |  SELECT source, n, n * sxy - sx * sy AS a, n * sxx - sx * sx AS b,
-        |    n * syy - sy * sy AS c
-        |  FROM s)
-        |SELECT source, n, a / b AS slope, a * a / (b * c) AS r2
-        |FROM f""".stripMargin,
-
-    // the grouped Heaps fit: the q_heaps_fit construction with every
-    // aggregate and window additionally keyed on source
-    "q_heaps_by_source" ->
-      """WITH tok AS (
-        |  SELECT source, doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents),
-        |per_doc AS (
-        |  SELECT source, doc_id, count(*) AS ntok
-        |  FROM tok GROUP BY 1, 2),
-        |newv AS (
-        |  SELECT source, d AS doc_id, count(*) AS vnew
-        |  FROM (SELECT source, min(doc_id) AS d FROM tok
-        |        GROUP BY source, token)
-        |  GROUP BY 1, 2),
-        |pts AS (
-        |  SELECT p.source,
-        |    sum(p.ntok) OVER (PARTITION BY p.source
-        |                      ORDER BY p.doc_id) AS xn,
-        |    sum(coalesce(v.vnew, 0)) OVER (PARTITION BY p.source
-        |                                   ORDER BY p.doc_id) AS yv
-        |  FROM per_doc p LEFT JOIN newv v USING (source, doc_id)),
-        |q AS (
-        |  SELECT source, round(ln(CAST(xn AS DOUBLE)), 9) AS x,
-        |    round(ln(CAST(yv AS DOUBLE)), 9) AS y
-        |  FROM pts),
-        |s AS (
-        |  SELECT source, count(*) AS n,
-        |    CAST(sum(CAST(x AS DECIMAL(38,9))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(y AS DECIMAL(38,9))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(round(x * x, 9) AS DECIMAL(38,9))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(round(x * y, 9) AS DECIMAL(38,9))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(round(y * y, 9) AS DECIMAL(38,9))) AS DOUBLE) AS syy
-        |  FROM q GROUP BY 1),
-        |f AS (
-        |  SELECT source, n, n * sxy - sx * sy AS a, n * sxx - sx * sx AS b,
-        |    n * syy - sy * sy AS c
-        |  FROM s)
-        |SELECT source, n, a / b AS slope, a * a / (b * c) AS r2
-        |FROM f""".stripMargin,
-
-    // the Heaps fit restated: cumulative tokens and cumulative
-    // first-occurrence counts per doc (both exact integers), then the
-    // same quantized OLS as q_zipf_fit
-    "q_heaps_fit" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents),
-        |per_doc AS (SELECT doc_id, count(*) AS ntok FROM tok GROUP BY 1),
-        |newv AS (
-        |  SELECT d AS doc_id, count(*) AS vnew
-        |  FROM (SELECT min(doc_id) AS d FROM tok GROUP BY token)
-        |  GROUP BY 1),
-        |pts AS (
-        |  SELECT sum(p.ntok) OVER (ORDER BY p.doc_id) AS xn,
-        |    sum(coalesce(v.vnew, 0)) OVER (ORDER BY p.doc_id) AS yv
-        |  FROM per_doc p LEFT JOIN newv v USING (doc_id)),
-        |q AS (
-        |  SELECT round(ln(CAST(xn AS DOUBLE)), 9) AS x,
-        |    round(ln(CAST(yv AS DOUBLE)), 9) AS y
-        |  FROM pts),
-        |s AS (
-        |  SELECT count(*) AS n,
-        |    CAST(sum(CAST(x AS DECIMAL(38,9))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(y AS DECIMAL(38,9))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(round(x * x, 9) AS DECIMAL(38,9))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(round(x * y, 9) AS DECIMAL(38,9))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(round(y * y, 9) AS DECIMAL(38,9))) AS DOUBLE) AS syy
-        |  FROM q),
-        |f AS (
-        |  SELECT n, n * sxy - sx * sy AS a, n * sxx - sx * sx AS b,
-        |    n * syy - sy * sy AS c, sx, sy
-        |  FROM s)
-        |SELECT n, a / b AS slope,
-        |  (sy - a / b * sx) / n AS intercept,
-        |  a * a / (b * c) AS r2
-        |FROM f""".stripMargin,
-
-    // mirrors TextOps.lmScore exactly: quantized per-token ln, ordered
-    // list fold (list_prepend seed trick, as in q_fingerprint_md5)
-    "q_lm_score" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |e AS (
-        |  SELECT doc_id, unnest(
-        |    [{'i': i, 'token': ws[i]} FOR i IN generate_series(1, len(ws))]) AS u
-        |  FROM tok),
-        |v AS (
-        |  SELECT u.token AS token, count(*) AS tf FROM e GROUP BY u.token),
-        |t AS (SELECT sum(tf) AS total FROM v),
-        |lp AS (
-        |  SELECT token, round(ln(CAST(tf AS DOUBLE) / CAST(total AS DOUBLE)), 6)
-        |    AS logp
-        |  FROM v, t),
-        |d AS (
-        |  SELECT e.doc_id, list(lp.logp ORDER BY e.u.i) AS lps
-        |  FROM e JOIN lp ON e.u.token = lp.token GROUP BY e.doc_id)
-        |SELECT doc_id, CAST(len(lps) AS BIGINT) AS n_tokens,
-        |  list_reduce(list_prepend(0.0, lps), (a, x) -> a + x) / len(lps)
-        |    AS mean_logp
-        |FROM d""".stripMargin,
-
-    // mirrors TextOps.tfidfTopTerms: idf quantized to 1e-6 before the
-    // single tf·idf multiply, rank ties broken on token ascending
-    "q_tfidf" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df_docs FROM tf GROUP BY token),
-        |n AS (SELECT count(*) AS n_docs FROM documents),
-        |idf AS (
-        |  SELECT token,
-        |    round(ln(CAST(n_docs AS DOUBLE) / CAST(df_docs AS DOUBLE)), 6)
-        |      AS idf
-        |  FROM df, n),
-        |s AS (
-        |  SELECT tf.doc_id, tf.token, tf.tf,
-        |    round(CAST(tf.tf AS DOUBLE) * idf.idf, 6) AS tfidf
-        |  FROM tf JOIN idf USING (token)),
-        |r AS (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY doc_id ORDER BY tfidf DESC, token) AS rk
-        |  FROM s)
-        |SELECT doc_id, token, tf, tfidf FROM r WHERE rk <= 5""".stripMargin,
-
-    // mirrors TextOps.bigramLmScore: map-side slice+zip bigrams, micros
-    // quantization per position, exact integer sum, backoff 0.4
-    "q_bigram_lm" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(ws) AS w FROM base),
-        |uni AS (SELECT w, count(*) AS cu FROM tok GROUP BY w),
-        |tot AS (SELECT sum(cu) AS t FROM uni),
-        |pairs AS (
-        |  SELECT doc_id, p[1] AS w1, p[2] AS w2 FROM (
-        |    SELECT doc_id,
-        |      unnest(list_zip(ws[1:len(ws)-1], ws[2:])) AS p
-        |    FROM base WHERE len(ws) >= 2)),
-        |big AS (SELECT w1, w2, count(*) AS cb FROM pairs GROUP BY 1, 2),
-        |first AS (
-        |  SELECT doc_id, CAST(round(ln(CAST(cu AS DOUBLE)
-        |      / CAST(t AS DOUBLE)) * 1000000.0, 0) AS BIGINT) AS m
-        |  FROM (SELECT doc_id, ws[1] AS w FROM base WHERE len(ws) >= 1)
-        |  JOIN uni USING (w) CROSS JOIN tot),
-        |rest AS (
-        |  SELECT p.doc_id,
-        |    CASE WHEN b.cb IS NOT NULL THEN
-        |      CAST(round(ln(CAST(b.cb AS DOUBLE) / CAST(u1.cu AS DOUBLE))
-        |        * 1000000.0, 0) AS BIGINT)
-        |    ELSE
-        |      CAST(round(ln(0.4 * (CAST(u2.cu AS DOUBLE)
-        |        / CAST(t AS DOUBLE))) * 1000000.0, 0) AS BIGINT)
-        |    END AS m
-        |  FROM pairs p
-        |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
-        |  JOIN uni u1 ON p.w1 = u1.w
-        |  JOIN uni u2 ON p.w2 = u2.w
-        |  CROSS JOIN tot),
-        |s AS (SELECT * FROM first UNION ALL SELECT * FROM rest)
-        |SELECT doc_id, count(*) AS n_tokens,
-        |  (CAST(sum(m) AS DOUBLE) / 1000000.0) / CAST(count(*) AS DOUBLE)
-        |    AS mean_logp
-        |FROM s GROUP BY doc_id""".stripMargin,
-
-    // mirrors TextOps.bigramLmScore with model = the src0 slice: left
-    // joins against the model counts, count floor greatest(coalesce(c,0),1)
-    // for model-OOV words, 0.4 backoff for unseen bigrams
-    "q_bigram_lm_oov" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |mbase AS (
-        |  SELECT string_split_regex(trim(lower(text)), '\s+') AS ws
-        |  FROM documents WHERE source = 'src0'),
-        |uni AS (
-        |  SELECT w, count(*) AS cu FROM (SELECT unnest(ws) AS w FROM mbase)
-        |  GROUP BY w),
-        |tot AS (SELECT sum(cu) AS t FROM uni),
-        |big AS (
-        |  SELECT w1, w2, count(*) AS cb FROM (
-        |    SELECT p[1] AS w1, p[2] AS w2 FROM (
-        |      SELECT unnest(list_zip(ws[1:len(ws)-1], ws[2:])) AS p
-        |      FROM mbase WHERE len(ws) >= 2))
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_id, p[1] AS w1, p[2] AS w2 FROM (
-        |    SELECT doc_id,
-        |      unnest(list_zip(ws[1:len(ws)-1], ws[2:])) AS p
-        |    FROM base WHERE len(ws) >= 2)),
-        |first AS (
-        |  SELECT doc_id, CAST(round(ln(
-        |      CAST(greatest(coalesce(cu, 0), 1) AS DOUBLE)
-        |      / CAST(t AS DOUBLE)) * 1000000.0, 0) AS BIGINT) AS m
-        |  FROM (SELECT doc_id, ws[1] AS w FROM base WHERE len(ws) >= 1)
-        |  LEFT JOIN uni USING (w) CROSS JOIN tot),
-        |rest AS (
-        |  SELECT p.doc_id,
-        |    CASE WHEN b.cb IS NOT NULL THEN
-        |      CAST(round(ln(CAST(b.cb AS DOUBLE) / CAST(u1.cu AS DOUBLE))
-        |        * 1000000.0, 0) AS BIGINT)
-        |    ELSE
-        |      CAST(round(ln(0.4 * (CAST(greatest(coalesce(u2.cu, 0), 1)
-        |        AS DOUBLE) / CAST(t AS DOUBLE))) * 1000000.0, 0) AS BIGINT)
-        |    END AS m
-        |  FROM pairs p
-        |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
-        |  LEFT JOIN uni u1 ON p.w1 = u1.w
-        |  LEFT JOIN uni u2 ON p.w2 = u2.w
-        |  CROSS JOIN tot),
-        |s AS (SELECT * FROM first UNION ALL SELECT * FROM rest)
-        |SELECT doc_id, count(*) AS n_tokens,
-        |  (CAST(sum(m) AS DOUBLE) / 1000000.0) / CAST(count(*) AS DOUBLE)
-        |    AS mean_logp
-        |FROM s GROUP BY doc_id""".stripMargin,
-
-    // replays Classifier.train's 5 GD rounds + the scoring pass (see
-    // qualityClassifierSql)
-    "q_quality_classifier" -> qualityClassifierSql(5),
-
-    // mirrors q_train_eval_split: the md5 bucket split (stableSplit) +
-    // the q_decontam 8-gram construction, dispositions per doc
-    "q_train_eval_split" ->
-      """WITH tagged AS (
-        |  SELECT doc_id, text,
-        |    CASE WHEN CAST(('0x' || substring(md5(text), 1, 8)) AS BIGINT)
-        |        % 100 < 90 THEN 'train' ELSE 'test' END AS split
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, split,
-        |    string_split_regex(trim(text), '\s+') AS ws
-        |  FROM tagged),
-        |g AS (
-        |  SELECT doc_id, split, unnest(
-        |    CASE WHEN len(ws) - 7 <= 0 THEN [array_to_string(ws, ' ')]
-        |         ELSE [array_to_string(ws[i:i+7], ' ')
-        |               FOR i IN generate_series(1, len(ws) - 7)] END) AS g
-        |  FROM tok),
-        |ev AS (SELECT DISTINCT g FROM g WHERE split = 'test'),
-        |contam AS (
-        |  SELECT DISTINCT doc_id FROM g
-        |  WHERE split = 'train' AND g IN (SELECT g FROM ev))
-        |SELECT doc_id,
-        |  CASE WHEN split = 'test' THEN 'eval'
-        |       WHEN doc_id IN (SELECT doc_id FROM contam)
-        |         THEN 'quarantined'
-        |       ELSE 'train' END AS disposition
-        |FROM tagged""".stripMargin,
-
-    // mirrors Similarity.hardNegatives over the planted corpus: brute
-    // cosine per (anchor, vector), ceiling filter, per-anchor top-3
-    "q_hard_negatives" ->
-      """WITH planted AS (
-        |  SELECT vec_id + 100000 AS vec_id,
-        |    list_transform(embedding, x -> CAST(x * 2.0 AS FLOAT))
-        |      AS embedding
-        |  FROM embeddings WHERE vec_id < 50),
-        |corpus AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL SELECT * FROM planted),
-        |a AS (
-        |  SELECT vec_id AS anchor_id, embedding AS avec
-        |  FROM embeddings WHERE vec_id < 5),
-        |s AS (
-        |  SELECT a.anchor_id, c.vec_id,
-        |    list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-        |                           CAST(a.avec AS DOUBLE[])) AS cos_raw
-        |  FROM corpus c CROSS JOIN a),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY anchor_id
-        |      ORDER BY cos_raw DESC, vec_id) AS rank
-        |  FROM s WHERE cos_raw < 0.95)
-        |SELECT anchor_id, vec_id, round(cos_raw, 4) AS cosine, rank
-        |FROM r WHERE rank <= 3""".stripMargin,
-
-    // q_bigram_lm's exact scoring construction + per-language ntile(3)
-    // on the (mean_logp DESC, doc_id) total order
-    "q_ccnet_buckets" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(ws) AS w FROM base),
-        |uni AS (SELECT w, count(*) AS cu FROM tok GROUP BY w),
-        |tot AS (SELECT sum(cu) AS t FROM uni),
-        |pairs AS (
-        |  SELECT doc_id, p[1] AS w1, p[2] AS w2 FROM (
-        |    SELECT doc_id,
-        |      unnest(list_zip(ws[1:len(ws)-1], ws[2:])) AS p
-        |    FROM base WHERE len(ws) >= 2)),
-        |big AS (SELECT w1, w2, count(*) AS cb FROM pairs GROUP BY 1, 2),
-        |first AS (
-        |  SELECT doc_id, CAST(round(ln(CAST(cu AS DOUBLE)
-        |      / CAST(t AS DOUBLE)) * 1000000.0, 0) AS BIGINT) AS m
-        |  FROM (SELECT doc_id, ws[1] AS w FROM base WHERE len(ws) >= 1)
-        |  JOIN uni USING (w) CROSS JOIN tot),
-        |rest AS (
-        |  SELECT p.doc_id,
-        |    CASE WHEN b.cb IS NOT NULL THEN
-        |      CAST(round(ln(CAST(b.cb AS DOUBLE) / CAST(u1.cu AS DOUBLE))
-        |        * 1000000.0, 0) AS BIGINT)
-        |    ELSE
-        |      CAST(round(ln(0.4 * (CAST(u2.cu AS DOUBLE)
-        |        / CAST(t AS DOUBLE))) * 1000000.0, 0) AS BIGINT)
-        |    END AS m
-        |  FROM pairs p
-        |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
-        |  JOIN uni u1 ON p.w1 = u1.w
-        |  JOIN uni u2 ON p.w2 = u2.w
-        |  CROSS JOIN tot),
-        |sm AS (SELECT * FROM first UNION ALL SELECT * FROM rest),
-        |scored AS (
-        |  SELECT doc_id,
-        |    (CAST(sum(m) AS DOUBLE) / 1000000.0) / CAST(count(*) AS DOUBLE)
-        |      AS mean_logp
-        |  FROM sm GROUP BY doc_id),
-        |nt AS (
-        |  SELECT d.doc_id, d.lang,
-        |    ntile(3) OVER (PARTITION BY d.lang
-        |      ORDER BY s.mean_logp DESC, d.doc_id) AS nt
-        |  FROM documents d JOIN scored s USING (doc_id))
-        |SELECT doc_id, lang,
-        |  CASE nt WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END
-        |    AS bucket
-        |FROM nt""".stripMargin,
-
-    // mirrors Sampling.importanceWeights: md5 feature buckets, add-one
-    // smoothing over 1024 buckets, per-bucket micros-quantized log
-    // difference, exact BIGINT per-doc sum, top-100 on (logw, doc_id)
-    "q_dsir" ->
-      """WITH base AS (
-        |  SELECT doc_id, lang,
-        |    string_split_regex(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id, lang, unnest(list_concat(ws,
-        |    list_transform(list_zip(ws[1:len(ws)-1], ws[2:]),
-        |      p -> p[1] || ' ' || p[2]))) AS f
-        |  FROM base),
-        |fb AS (
-        |  SELECT doc_id, lang,
-        |    CAST(('0x' || substring(md5(f), 1, 8)) AS BIGINT) % 1024
-        |      AS bucket
-        |  FROM f),
-        |tgt AS (SELECT bucket, count(*) AS ct FROM fb WHERE lang = 'en'
-        |        GROUP BY 1),
-        |rawc AS (SELECT bucket, count(*) AS cr FROM fb GROUP BY 1),
-        |tts AS (SELECT sum(ct) AS tt FROM tgt),
-        |trs AS (SELECT sum(cr) AS tr FROM rawc),
-        |m AS (
-        |  SELECT fb.doc_id,
-        |    CAST(round(ln((CAST(coalesce(ct, 0) AS DOUBLE) + 1.0)
-        |      / CAST(tt + 1024 AS DOUBLE)) * 1000000.0, 0) AS BIGINT)
-        |  - CAST(round(ln((CAST(cr AS DOUBLE) + 1.0)
-        |      / CAST(tr + 1024 AS DOUBLE)) * 1000000.0, 0) AS BIGINT) AS m
-        |  FROM fb LEFT JOIN tgt USING (bucket) JOIN rawc USING (bucket)
-        |  CROSS JOIN tts CROSS JOIN trs),
-        |d AS (SELECT doc_id, sum(m) AS sm FROM m GROUP BY 1)
-        |SELECT doc_id, CAST(sm AS DOUBLE) / 1000000.0 AS logw
-        |FROM d ORDER BY sm DESC, doc_id LIMIT 100""".stripMargin,
-
-    // mirrors Retrieval.bm25TopK token-for-token: Lucene-form idf
-    // quantized to 1e-6, one fixed-shape double expression per matched
-    // term quantized to integer micros, exact BIGINT sum, ties on doc_id
-    "q_bm25" ->
-      """WITH q(query_id, qtext) AS (VALUES
-        |    (CAST(1 AS BIGINT), 'vector hash join'),
-        |    (CAST(2 AS BIGINT), 'slow scan filter'),
-        |    (CAST(3 AS BIGINT), 'customer order stream')),
-        |tok AS (
-        |  SELECT doc_id,
-        |    len(string_split_regex(trim(lower(text)), '\s+')) AS dl,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, dl, term, count(*) AS tf FROM tok GROUP BY 1, 2, 3),
-        |dfw AS (
-        |  SELECT *, count(*) OVER (PARTITION BY term) AS df_docs FROM tf),
-        |stats AS (
-        |  SELECT count(DISTINCT doc_id) AS n_docs, sum(tf) AS total_tokens
-        |  FROM dfw),
-        |qt AS (
-        |  SELECT DISTINCT query_id,
-        |    unnest(string_split_regex(trim(lower(qtext)), '\s+')) AS term
-        |  FROM q),
-        |s AS (
-        |  SELECT qt.query_id, dfw.doc_id,
-        |    sum(CAST(round(
-        |      round(ln((CAST(n_docs AS DOUBLE) - CAST(df_docs AS DOUBLE)
-        |          + 0.5) / (CAST(df_docs AS DOUBLE) + 0.5) + 1.0), 6)
-        |      * (CAST(tf AS DOUBLE) * 2.2
-        |         / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75
-        |            * (CAST(dl AS DOUBLE) / (CAST(total_tokens AS DOUBLE)
-        |               / CAST(n_docs AS DOUBLE))))))
-        |      * 1000000.0, 0) AS BIGINT)) AS score_micros
-        |  FROM dfw CROSS JOIN stats JOIN qt USING (term)
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY score_micros DESC, doc_id)
-        |    AS rank FROM s)
-        |SELECT query_id, doc_id,
-        |  CAST(score_micros AS DOUBLE) / 1000000.0 AS score, rank
-        |FROM r WHERE rank <= 10""".stripMargin,
-
-    // states phraseSearch's FINAL semantics directly (consecutive-token
-    // containment over the normalized token stream) with no bigram
-    // pruning — a candidate the index missed would fail this oracle
-    "q_phrase_search" ->
-      """WITH q(query_id, phrase) AS (VALUES
-        |    (CAST(1 AS BIGINT), 'hash join'),
-        |    (CAST(2 AS BIGINT), 'slow scan'),
-        |    (CAST(3 AS BIGINT), 'customer order stream'))
-        |SELECT q.query_id, d.doc_id
-        |FROM documents d CROSS JOIN q
-        |WHERE contains(
-        |  ' ' || array_to_string(
-        |    string_split_regex(trim(lower(d.text)), '\s+'), ' ') || ' ',
-        |  ' ' || trim(lower(q.phrase)) || ' ')""".stripMargin,
-
-    // mirrors Retrieval.booleanSearch: distinct doc terms join the
-    // distinct query terms, docs whose matched-term count equals the
-    // query's term count qualify
-    "q_bool_search" ->
-      """WITH q(query_id, qtext) AS (VALUES
-        |    (CAST(1 AS BIGINT), 'vector hash join'),
-        |    (CAST(2 AS BIGINT), 'merge stream window filter'),
-        |    (CAST(3 AS BIGINT), 'customer zzz-absent-term')),
-        |dt AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |qt AS (
-        |  SELECT DISTINCT query_id,
-        |    unnest(string_split_regex(trim(lower(qtext)), '\s+')) AS term
-        |  FROM q),
-        |n AS (SELECT query_id, count(*) AS n_terms FROM qt GROUP BY 1)
-        |SELECT m.query_id, m.doc_id
-        |FROM (
-        |  SELECT qt.query_id, dt.doc_id, count(*) AS matched
-        |  FROM dt JOIN qt USING (term) GROUP BY 1, 2) m
-        |JOIN n USING (query_id)
-        |WHERE m.matched = n.n_terms""".stripMargin,
-
-    // mirrors TextOps.sourceOverlap: same distinct (source, term)
-    // universe, same truncating micros Jaccard
-    "q_source_overlap" ->
-      """WITH gt AS (
-        |  SELECT DISTINCT source AS g,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents WHERE source IS NOT NULL),
-        |sz AS (SELECT g, CAST(count(*) AS BIGINT) AS n FROM gt GROUP BY 1),
-        |pr AS (
-        |  SELECT x.g AS src_a, y.g AS src_b,
-        |    CAST(count(*) AS BIGINT) AS n_both
-        |  FROM gt x JOIN gt y ON x.term = y.term AND x.g < y.g
-        |  GROUP BY 1, 2)
-        |SELECT pr.src_a, pr.src_b, sa.n AS n_a, sb.n AS n_b, pr.n_both,
-        |  (1000000 * pr.n_both) // (sa.n + sb.n - pr.n_both)
-        |    AS jaccard_micros
-        |FROM pr
-        |JOIN sz sa ON pr.src_a = sa.g
-        |JOIN sz sb ON pr.src_b = sb.g""".stripMargin,
-
-    // mirrors TextOps.distinctiveTerms: same add-one log-odds, same
-    // 1e-6 ln quantization, same (z desc, term) total order
-    "q_distinctive_terms" ->
-      """WITH ta AS (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents WHERE lang = 'en'),
-        |tb AS (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents WHERE lang <> 'en'),
-        |ca AS (SELECT term, count(*) AS cnt_a FROM ta GROUP BY 1),
-        |cb AS (SELECT term, count(*) AS cnt_b FROM tb GROUP BY 1),
-        |j AS (
-        |  SELECT coalesce(ca.term, cb.term) AS term,
-        |    CAST(coalesce(cnt_a, 0) AS BIGINT) AS cnt_a,
-        |    CAST(coalesce(cnt_b, 0) AS BIGINT) AS cnt_b
-        |  FROM ca FULL OUTER JOIN cb ON ca.term = cb.term),
-        |tot AS (
-        |  SELECT CAST(sum(cnt_a) AS BIGINT) AS tot_a,
-        |    CAST(sum(cnt_b) AS BIGINT) AS tot_b,
-        |    CAST(count(*) AS BIGINT) AS v
-        |  FROM j),
-        |z AS (
-        |  SELECT term, cnt_a, cnt_b,
-        |    round((round(ln(CAST(cnt_a + 1 AS DOUBLE)
-        |        / CAST(tot_a + v - cnt_a - 1 AS DOUBLE)), 6)
-        |      - round(ln(CAST(cnt_b + 1 AS DOUBLE)
-        |        / CAST(tot_b + v - cnt_b - 1 AS DOUBLE)), 6))
-        |      / sqrt(1.0 / CAST(cnt_a + 1 AS DOUBLE)
-        |        + 1.0 / CAST(cnt_b + 1 AS DOUBLE)), 6) AS z_score
-        |  FROM j CROSS JOIN tot
-        |  WHERE cnt_a + cnt_b >= 5)
-        |SELECT term, cnt_a, cnt_b, z_score FROM z
-        |ORDER BY z_score DESC, term LIMIT 40""".stripMargin,
-
-    // index-free statement of q_index_search's final semantics: same
-    // query set as q_bool_search — a bucket-pruned read that lost a
-    // posting would fail this hash
-    "q_index_search" ->
-      """WITH q(query_id, qtext) AS (VALUES
-        |    (CAST(1 AS BIGINT), 'vector hash join'),
-        |    (CAST(2 AS BIGINT), 'merge stream window filter'),
-        |    (CAST(3 AS BIGINT), 'customer zzz-absent-term')),
-        |dt AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |qt AS (
-        |  SELECT DISTINCT query_id,
-        |    unnest(string_split_regex(trim(lower(qtext)), '\s+')) AS term
-        |  FROM q),
-        |n AS (SELECT query_id, count(*) AS n_terms FROM qt GROUP BY 1)
-        |SELECT m.query_id, m.doc_id
-        |FROM (
-        |  SELECT qt.query_id, dt.doc_id, count(*) AS matched
-        |  FROM dt JOIN qt USING (term) GROUP BY 1, 2) m
-        |JOIN n USING (query_id)
-        |WHERE m.matched = n.n_terms""".stripMargin,
-
-    // mirrors Profile.driftReport token-for-token: same clamped-bin
-    // expression as q_histogram, window-total shares, quantized ln
-    "q_drift_psi" ->
-      """WITH rb AS (
-        |  SELECT least(greatest(CAST(floor((CAST(value AS DOUBLE) - 0.0)
-        |      / 25.0) AS BIGINT), 0), 19) AS bin, count(*) AS n
-        |  FROM events
-        |  WHERE event_type <> 'purchase'
-        |    AND value IS NOT NULL AND NOT isnan(value)
-        |  GROUP BY 1),
-        |cb AS (
-        |  SELECT least(greatest(CAST(floor((CAST(value AS DOUBLE) - 0.0)
-        |      / 25.0) AS BIGINT), 0), 19) AS bin, count(*) AS n
-        |  FROM events
-        |  WHERE event_type = 'purchase'
-        |    AND value IS NOT NULL AND NOT isnan(value)
-        |  GROUP BY 1),
-        |grid AS (SELECT unnest(generate_series(0, 19)) AS bin),
-        |h AS (
-        |  SELECT g.bin, 0.0 + CAST(g.bin AS DOUBLE) * 25.0 AS bin_lo,
-        |    CAST(coalesce(rb.n, 0) AS BIGINT) AS n_ref,
-        |    CAST(coalesce(cb.n, 0) AS BIGINT) AS n_cur
-        |  FROM grid g
-        |  LEFT JOIN rb ON g.bin = rb.bin
-        |  LEFT JOIN cb ON g.bin = cb.bin),
-        |s AS (
-        |  SELECT *,
-        |    greatest(CAST(n_ref AS DOUBLE) /
-        |      CAST(sum(n_ref) OVER () AS DOUBLE), 1e-6) AS rs,
-        |    greatest(CAST(n_cur AS DOUBLE) /
-        |      CAST(sum(n_cur) OVER () AS DOUBLE), 1e-6) AS cs
-        |  FROM h)
-        |SELECT bin, bin_lo, n_ref, n_cur,
-        |  round((cs - rs) * round(ln(cs / rs), 6), 6) AS psi_contrib
-        |FROM s""".stripMargin,
-
-    // mirrors Dedup.repeatedSpans: md5 anchors, df<=64 guard,
-    // gaps-and-islands over (pair, offset); all-integer span arithmetic
-    "q_repeated_spans" ->
-      s"""$spanCtes
-        |SELECT doc_a, doc_b, start_a, start_b, span_len
-        |FROM spans""".stripMargin,
-
-    // mirrors Dedup.duplicatedTokenStats: both sides' span intervals per
-    // doc, coverage-merged (gaps-and-islands again), over nTokens
-    "q_dup_fraction" ->
-      s"""$spanCtes,
-        |iv AS (
-        |  SELECT doc_a AS id, start_a AS s, start_a + span_len AS e
-        |  FROM spans
-        |  UNION ALL
-        |  SELECT doc_b, start_b, start_b + span_len FROM spans),
-        |m AS (
-        |  SELECT id, s, e, max(e) OVER (
-        |    PARTITION BY id ORDER BY s, e
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe
-        |  FROM iv),
-        |isl AS (
-        |  SELECT id, s, e, sum(CASE WHEN pe IS NULL OR s > pe THEN 1
-        |    ELSE 0 END) OVER (
-        |    PARTITION BY id ORDER BY s, e
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-        |  FROM m),
-        |cov AS (
-        |  SELECT id, grp, max(e) - min(s) AS cov FROM isl GROUP BY id, grp),
-        |dup AS (SELECT id, sum(cov) AS dup_tokens FROM cov GROUP BY id),
-        |toks AS (
-        |  SELECT doc_id, CASE WHEN trim(coalesce(text, '')) = '' THEN 0
-        |    ELSE len(string_split_regex(trim(lower(text)), '\\s+')) END
-        |    AS n_tokens
-        |  FROM docs2)
-        |SELECT t.doc_id, CAST(t.n_tokens AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(d.dup_tokens, 0) AS BIGINT) AS dup_tokens,
-        |  CASE WHEN t.n_tokens > 0 THEN
-        |    round(CAST(coalesce(d.dup_tokens, 0) AS DOUBLE) /
-        |      CAST(t.n_tokens AS DOUBLE), 6) ELSE 0.0 END AS dup_fraction
-        |FROM toks t LEFT JOIN dup d ON t.doc_id = d.id""".stripMargin,
-
-    // mirrors Dedup.exactSubstringDedup: md5 string grams replace the
-    // 64-bit chain hashes (pure equality keys — identical classes whp),
-    // keep-first = row_number over (doc_id, pos) per gram, coverage =
-    // the distinct union of 8-token windows (equals the operator's
-    // merged-interval sum), rewrite = list comprehension over the
-    // ORIGINAL-case tokens; array_to_string([]) is NULL in DuckDB where
-    // the excise walker emits '' — coalesced
-    "q_substring_dedup" ->
-      s"""WITH docs2 AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT * FROM (VALUES
-        |    (200001, '$spanBlock12 tail1 tail2'),
-        |    (200002, 'lead1 lead2 $spanBlock12'),
-        |    (200003, 'solo1 $spanBlock8 mid1 $spanBlock8 solo2'))
-        |    v(doc_id, text)),
-        |tok AS (
-        |  SELECT doc_id, text,
-        |    string_split_regex(trim(lower(text)), '\\s+') AS ws,
-        |    string_split_regex(trim(text), '\\s+') AS wo
-        |  FROM docs2),
-        |anch AS (
-        |  SELECT doc_id, unnest(
-        |    [{'pos': i, 'h': md5(array_to_string(ws[i:i+7], ' '))}
-        |     FOR i IN generate_series(1, len(ws) - 7)]) AS u
-        |  FROM tok WHERE len(ws) >= 8),
-        |a AS (SELECT doc_id, u.pos AS pos, u.h AS h FROM anch),
-        |r AS (
-        |  SELECT doc_id, pos,
-        |    count(*) OVER (PARTITION BY h) AS n,
-        |    row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn
-        |  FROM a),
-        |dup AS (SELECT doc_id, pos FROM r WHERE n >= 2 AND rn > 1),
-        |cov AS (
-        |  SELECT DISTINCT doc_id, pos + d AS tp
-        |  FROM dup CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS d) g),
-        |cov2 AS (SELECT doc_id, list(tp) AS cl,
-        |    CAST(count(*) AS BIGINT) AS removed
-        |  FROM cov GROUP BY doc_id)
-        |SELECT t.doc_id,
-        |  CASE WHEN t.text IS NULL THEN NULL ELSE
-        |    coalesce(array_to_string(
-        |      [t.wo[i] FOR i IN generate_series(1, len(t.wo))
-        |       IF t.wo[i] <> '' AND NOT list_contains(coalesce(c.cl, []), i)],
-        |      ' '), '')
-        |  END AS text_dedup,
-        |  CASE WHEN t.text IS NULL OR trim(t.text) = '' THEN 0
-        |    ELSE CAST(len(t.wo) AS BIGINT) END AS n_tokens,
-        |  CAST(coalesce(c.removed, 0) AS BIGINT) AS removed_tokens
-        |FROM tok t LEFT JOIN cov2 c USING (doc_id)""".stripMargin,
-
-    // mirrors Dedup.exciseAgainstIndex: corpus gram inventory (distinct
-    // md5 grams of doc_id >= 20 + the planted corpus doc), batch anchors
-    // excised where the gram is indexed OR is a non-first occurrence
-    // within the batch — the same coverage-union tail as
-    // q_substring_dedup
-    "q_substring_dedup_indexed" ->
-      s"""WITH corpus AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id >= 20
-        |  UNION ALL SELECT * FROM (VALUES
-        |    (400001, '$spanBlock8 corpustail')) c(doc_id, text)),
-        |batch AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 20
-        |  UNION ALL SELECT * FROM (VALUES
-        |    (400101, 'batchlead $spanBlock8 batchtail'),
-        |    (400102, 'x1 $spanBlock12 mid $spanBlock12 x2'),
-        |    (400103, 'totally fresh words nothing shared here at all ok'))
-        |    b(doc_id, text)),
-        |ctok AS (
-        |  SELECT string_split_regex(trim(lower(text)), '\\s+') AS ws
-        |  FROM corpus WHERE text IS NOT NULL),
-        |cg AS (
-        |  SELECT DISTINCT unnest(
-        |    [md5(array_to_string(ws[i:i+7], ' '))
-        |     FOR i IN generate_series(1, len(ws) - 7)]) AS h
-        |  FROM ctok WHERE len(ws) >= 8),
-        |tok AS (
-        |  SELECT doc_id, text,
-        |    string_split_regex(trim(lower(text)), '\\s+') AS ws,
-        |    string_split_regex(trim(text), '\\s+') AS wo
-        |  FROM batch),
-        |anch AS (
-        |  SELECT doc_id, unnest(
-        |    [{'pos': i, 'h': md5(array_to_string(ws[i:i+7], ' '))}
-        |     FOR i IN generate_series(1, len(ws) - 7)]) AS u
-        |  FROM tok WHERE len(ws) >= 8),
-        |a AS (SELECT doc_id, u.pos AS pos, u.h AS h FROM anch),
-        |r AS (
-        |  SELECT doc_id, pos, h,
-        |    count(*) OVER (PARTITION BY h) AS n,
-        |    row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn
-        |  FROM a),
-        |dup AS (
-        |  SELECT doc_id, pos FROM r
-        |  WHERE h IN (SELECT h FROM cg) OR (n >= 2 AND rn > 1)),
-        |cov AS (
-        |  SELECT DISTINCT doc_id, pos + d AS tp
-        |  FROM dup CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS d) g),
-        |cov2 AS (SELECT doc_id, list(tp) AS cl,
-        |    CAST(count(*) AS BIGINT) AS removed
-        |  FROM cov GROUP BY doc_id)
-        |SELECT t.doc_id,
-        |  CASE WHEN t.text IS NULL THEN NULL ELSE
-        |    coalesce(array_to_string(
-        |      [t.wo[i] FOR i IN generate_series(1, len(t.wo))
-        |       IF t.wo[i] <> '' AND NOT list_contains(coalesce(c.cl, []), i)],
-        |      ' '), '')
-        |  END AS text_dedup,
-        |  CASE WHEN t.text IS NULL OR trim(t.text) = '' THEN 0
-        |    ELSE CAST(len(t.wo) AS BIGINT) END AS n_tokens,
-        |  CAST(coalesce(c.removed, 0) AS BIGINT) AS removed_tokens
-        |FROM tok t LEFT JOIN cov2 c USING (doc_id)""".stripMargin,
-
-    // mirrors TextOps.collocations: one tokenize, quantized ln, bigram
-    // tie-break; DuckDB list comprehension builds the bigram events
-    "q_collocations" ->
-      """WITH tok AS (
-        |  SELECT string_split_regex(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |uni AS (SELECT unnest(ws) AS tok FROM tok),
-        |ucnt AS (SELECT tok, count(*) AS c_tok FROM uni GROUP BY tok),
-        |big AS (
-        |  SELECT unnest([ws[i] || ' ' || ws[i+1]
-        |                 FOR i IN generate_series(1, len(ws) - 1)]) AS b
-        |  FROM tok WHERE len(ws) >= 2),
-        |bcnt AS (SELECT b, count(*) AS cnt FROM big GROUP BY b),
-        |tt AS (SELECT sum(c_tok) AS t_uni FROM ucnt),
-        |bt AS (SELECT sum(cnt) AS t_big FROM bcnt),
-        |j AS (
-        |  SELECT b.b AS bigram, b.cnt,
-        |    round(ln((CAST(b.cnt AS DOUBLE) / CAST(t_big AS DOUBLE)) /
-        |      ((CAST(ux.c_tok AS DOUBLE) / CAST(t_uni AS DOUBLE)) *
-        |       (CAST(uy.c_tok AS DOUBLE) / CAST(t_uni AS DOUBLE)))), 6)
-        |      AS pmi
-        |  FROM bcnt b, tt, bt
-        |  JOIN ucnt ux ON string_split(b.b, ' ')[1] = ux.tok
-        |  JOIN ucnt uy ON string_split(b.b, ' ')[2] = uy.tok
-        |  WHERE b.cnt >= 5)
-        |SELECT bigram, CAST(cnt AS BIGINT) AS cnt, pmi FROM j
-        |ORDER BY pmi DESC, bigram LIMIT 20""".stripMargin,
-
-    "q_json_props" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
-        |    AS BIGINT) AS sum_k,
-        |  min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-        |  max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "q_tokenize" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\s+') AS ws
-        |  FROM documents),
-        |v AS (
-        |  SELECT token, row_number() OVER (ORDER BY tf DESC, token) - 1 AS tok_id
-        |  FROM (
-        |    SELECT token, count(*) AS tf
-        |    FROM (SELECT unnest(ws) AS token FROM tok) GROUP BY token)
-        |  QUALIFY tok_id < 1000),
-        |e AS (
-        |  SELECT doc_id, unnest(
-        |    [{'i': i, 'token': ws[i]} FOR i IN generate_series(1, len(ws))]) AS u
-        |  FROM tok),
-        |j AS (
-        |  SELECT e.doc_id, e.u.i AS i, coalesce(v.tok_id, -1) AS tid
-        |  FROM e LEFT JOIN v ON e.u.token = v.token)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_ids,
-        |  CAST(count(*) FILTER (tid = -1) AS BIGINT) AS n_oov,
-        |  array_to_string(list(tid ORDER BY i), ' ') AS ids_str
-        |FROM j GROUP BY doc_id""".stripMargin,
-
-    // rebuilds the ±1 sign matrix from the identical md5 formula and
-    // replays the micros-quantized integer projection — exact BIGINTs,
-    // no float seam anywhere
-    "q_random_project" ->
-      """WITH s AS (
-        |  SELECT j.j, i.i,
-        |    CASE WHEN ('0x' || substring(md5('rp:' || j.j || ':' || i.i), 1, 8))
-        |              ::BIGINT % 2 = 0 THEN 1 ELSE -1 END AS sgn
-        |  FROM generate_series(0, 15) j(j), generate_series(0, 63) i(i)),
-        |e AS (
-        |  SELECT vec_id, i.i,
-        |    CAST(round(CAST(embedding[i.i + 1] AS DOUBLE) * 1000000.0, 0)
-        |      AS BIGINT) AS x
-        |  FROM embeddings, generate_series(0, 63) i(i)
-        |  WHERE embedding IS NOT NULL AND len(embedding) = 64),
-        |p AS (
-        |  SELECT vec_id, j, CAST(sum(sgn * x) AS BIGINT) AS pj
-        |  FROM e JOIN s USING (i) GROUP BY vec_id, j)
-        |SELECT vec_id,
-        |  string_agg(CAST(pj AS VARCHAR), '|' ORDER BY j) AS proj_joined
-        |FROM p GROUP BY vec_id""".stripMargin,
-
-    "q_embed_quant" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |s AS (
-        |  SELECT vec_id, v,
-        |    list_max(list_transform(v, x -> abs(x))) / 127 AS scale
-        |  FROM e)
-        |SELECT vec_id, round(scale, 6) AS scale,
-        |  round(list_max(list_transform(v,
-        |    x -> abs(x - round(x / scale) * scale))), 6) AS max_err
-        |FROM s""".stripMargin,
-
-    "q_embed_norm" ->
-      """SELECT vec_id,
-        |  round(sqrt(list_aggregate(
-        |    list_transform(CAST(embedding AS DOUBLE[]), x -> x*x), 'sum')), 4)
-        |    AS l2_norm
-        |FROM embeddings""".stripMargin,
-
-    "q_ann_cosine" ->
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id,
-        |  round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                               CAST(q.embedding AS DOUBLE[])), 4) AS cosine
-        |FROM embeddings e, q WHERE e.vec_id < 200""".stripMargin,
-
-    "q_ann_topk" ->
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id, round(cos_raw, 4) AS cosine FROM (
-        |  SELECT e.vec_id,
-        |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                           CAST(q.embedding AS DOUBLE[])) AS cos_raw
-        |  FROM embeddings e, q) t
-        |ORDER BY cos_raw DESC, vec_id LIMIT 10""".stripMargin,
-
-    // planted-truth closed forms (see the query comments): guaranteed-
-    // recall exact copies at 100000..100009 + the probe itself fill the
-    // top-10 at cosine 1.0, id-ascending
-    "q_ann_lsh" ->
-      """SELECT vec_id, 1.0 AS cosine FROM embeddings WHERE vec_id = 0
-        |UNION ALL
-        |SELECT vec_id + 100000 AS vec_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 9""".stripMargin,
-
-    "q_ann_ivf" ->
-      """SELECT vec_id, 1.0 AS cosine FROM embeddings WHERE vec_id = 0
-        |UNION ALL
-        |SELECT vec_id + 100000 AS vec_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 9""".stripMargin,
-
-    "q_cosine_neardups" ->
-      """SELECT vec_id AS id_a, vec_id + 100000 AS id_b, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 50""".stripMargin,
-
-    // keep-first semantic dedup over the same planted corpus: every
-    // planted copy (id >= 100000) is dropped against its original, no
-    // organic row has a neighbor above 0.9 — survivors = the corpus
-    "q_semantic_dedup" ->
-      """SELECT vec_id FROM embeddings""".stripMargin,
-
-    // granularity-independent planted truth (see the query comment)
-    "q_semantic_dedup_auto" ->
-      """SELECT vec_id FROM embeddings""".stripMargin,
-
-    // closed-form recall (see the query comment): both indexes find the
-    // full exact top-10
-    "q_ann_recall" ->
-      """SELECT CAST(10 AS BIGINT) AS k, CAST(10 AS BIGINT) AS n_exact,
-        |  1.0 AS lsh_recall, 1.0 AS ivf_recall""".stripMargin,
-
-    "q_knn" ->
-      """SELECT vec_id + 100000 AS qid, vec_id AS nid, 1.0 AS cosine,
-        |  CAST(1 AS BIGINT) AS nn_rank
-        |FROM embeddings WHERE vec_id < 50""".stripMargin,
-
-    "q_pq_adc" -> pqAdcSql(64, 4, 4, 10),
-
-    "q_multimodal_decode" ->
-      """SELECT doc_id AS media_id,
-        |  octet_length(CAST(text AS BLOB)) AS n_bytes,
-        |  list_sum([ascii(text[i]) FOR i IN generate_series(1, length(text))])
-        |    * 1.0 / greatest(length(text), 1) AS byte_mean
-        |FROM documents""".stripMargin,
-
-    // the planted-PPM closed form: pixel i of image id carries
-    // replays the plant rule (the %4 family assignment) without seeing
-    // a byte; the LIKE guard keeps the rare text that itself starts
-    // with '<' honest on both sides
-    "q_multimodal_sniff" ->
-      """SELECT doc_id AS media_id,
-        |  CASE doc_id % 5
-        |    WHEN 0 THEN 'image/ppm'
-        |    WHEN 1 THEN 'audio/wav'
-        |    WHEN 2 THEN 'video/y4m'
-        |    WHEN 3 THEN 'text/html'
-        |    ELSE CASE WHEN text LIKE '<%' THEN 'text/html'
-        |              ELSE 'application/octet-stream' END
-        |  END AS sniffed
-        |FROM documents""".stripMargin,
-
-    // (id*7 + i*13) % 256, channels interleave RGB, so each channel mean
-    // is an integer sum over generate_series divided by w*h — the oracle
-    // never builds the binary, while Spark decodes the real bytes
-    "q_multimodal_ppm" ->
-      """WITH d AS (
-        |  SELECT doc_id, 2 + doc_id % 3 AS w, 2 + doc_id % 2 AS h
-        |  FROM documents),
-        |px AS (
-        |  SELECT doc_id, w, h, (doc_id * 7 + i * 13) % 256 AS v, i % 3 AS ch
-        |  FROM d, unnest(generate_series(0, w * h * 3 - 1)) AS t(i))
-        |SELECT doc_id AS media_id,
-        |  CAST(any_value(w) AS INT) AS width,
-        |  CAST(any_value(h) AS INT) AS height,
-        |  CAST(length('P6' || chr(10) || any_value(w) || ' ' || any_value(h)
-        |    || chr(10) || '255' || chr(10))
-        |    + any_value(w) * any_value(h) * 3 AS BIGINT) AS n_bytes,
-        |  CAST(sum(v) FILTER (ch = 0) AS DOUBLE)
-        |    / (any_value(w) * any_value(h)) AS mean_r,
-        |  CAST(sum(v) FILTER (ch = 1) AS DOUBLE)
-        |    / (any_value(w) * any_value(h)) AS mean_g,
-        |  CAST(sum(v) FILTER (ch = 2) AS DOUBLE)
-        |    / (any_value(w) * any_value(h)) AS mean_b
-        |FROM px GROUP BY doc_id""".stripMargin,
-
-    // the mixed-dump auto-decode restated family by family (%5 routing):
-    // each format's closed form from its own plant rule, nulls where a
-    // family doesn't carry a field
-    "q_multimodal_auto" ->
-      """WITH base AS (
-        |  SELECT doc_id AS media_id, doc_id % 5 AS fam, text,
-        |    2 + doc_id % 3 AS w, 2 + doc_id % 2 AS h,
-        |    1 + doc_id % 2 AS ch, 50 + doc_id % 20 AS nfw,
-        |    3 + doc_id % 4 AS nfv
-        |  FROM documents),
-        |ppm AS (
-        |  SELECT media_id,
-        |    CAST(sum(v) FILTER (k = 0) AS DOUBLE) / (any_value(w) * any_value(h)) AS mean_r,
-        |    CAST(sum(v) FILTER (k = 1) AS DOUBLE) / (any_value(w) * any_value(h)) AS mean_g,
-        |    CAST(sum(v) FILTER (k = 2) AS DOUBLE) / (any_value(w) * any_value(h)) AS mean_b
-        |  FROM (SELECT media_id, w, h,
-        |          (media_id * 7 + i * 13) % 256 AS v, i % 3 AS k
-        |        FROM base, unnest(generate_series(0, w * h * 3 - 1)) AS t(i)
-        |        WHERE fam = 0)
-        |  GROUP BY media_id),
-        |wav AS (
-        |  SELECT media_id, CAST(max(abs(v)) AS INT) AS peak,
-        |    sqrt(CAST(sum(v * v) AS DOUBLE)
-        |      / (any_value(nfw) * any_value(ch))) AS rms
-        |  FROM (SELECT media_id, ch, nfw,
-        |          (media_id * 31 + i * 17) % 4001 - 2000 AS v
-        |        FROM base, unnest(generate_series(0, nfw * ch - 1)) AS t(i)
-        |        WHERE fam = 1)
-        |  GROUP BY media_id),
-        |y4m AS (
-        |  SELECT media_id, CAST(max(v) AS INT) AS peak,
-        |    CAST(sum(v) AS DOUBLE)
-        |      / (any_value(nfv) * any_value(w) * any_value(h)) AS luma_mean
-        |  FROM (SELECT media_id, w, h, nfv,
-        |          (media_id * 7 + f * 11 + i * 13) % 256 AS v
-        |        FROM base,
-        |          unnest(generate_series(0, nfv - 1)) AS tf(f),
-        |          unnest(generate_series(0, w * h - 1)) AS ti(i)
-        |        WHERE fam = 2)
-        |  GROUP BY media_id)
-        |SELECT b.media_id,
-        |  CASE b.fam WHEN 0 THEN 'image/ppm' WHEN 1 THEN 'audio/wav'
-        |    WHEN 2 THEN 'video/y4m' WHEN 3 THEN 'text/html'
-        |    ELSE CASE WHEN b.text LIKE '<%' THEN 'text/html'
-        |              ELSE 'application/octet-stream' END END AS sniffed,
-        |  CAST(CASE b.fam
-        |    WHEN 0 THEN length('P6' || chr(10) || b.w || ' ' || b.h
-        |      || chr(10) || '255' || chr(10)) + b.w * b.h * 3
-        |    WHEN 1 THEN 44 + b.nfw * b.ch * 2
-        |    WHEN 2 THEN length('YUV4MPEG2 W' || b.w || ' H' || b.h
-        |      || ' F25:1 Ip A1:1 Cmono') + 1 + b.nfv * (6 + b.w * b.h)
-        |    WHEN 3 THEN octet_length(CAST(b.text AS BLOB)) + 26
-        |    ELSE octet_length(CAST(b.text AS BLOB)) END AS BIGINT) AS n_bytes,
-        |  CAST(CASE WHEN b.fam IN (0, 2) THEN b.w END AS INT) AS width,
-        |  CAST(CASE WHEN b.fam IN (0, 2) THEN b.h END AS INT) AS height,
-        |  p.mean_r, p.mean_g, p.mean_b,
-        |  CAST(CASE WHEN b.fam = 1 THEN 8000 END AS INT) AS sample_rate,
-        |  CAST(CASE WHEN b.fam = 1 THEN b.ch END AS INT) AS channels,
-        |  CAST(CASE b.fam WHEN 1 THEN b.nfw WHEN 2 THEN b.nfv END
-        |    AS BIGINT) AS n_frames,
-        |  CAST(CASE b.fam WHEN 1 THEN b.nfw * 1000 // 8000
-        |    WHEN 2 THEN b.nfv * 40 END AS BIGINT) AS duration_ms,
-        |  CASE b.fam WHEN 1 THEN wv.peak WHEN 2 THEN yv.peak END AS peak,
-        |  wv.rms, yv.luma_mean
-        |FROM base b
-        |LEFT JOIN ppm p USING (media_id)
-        |LEFT JOIN wav wv USING (media_id)
-        |LEFT JOIN y4m yv USING (media_id)""".stripMargin,
-
-    // planted PCM16 stats in closed form: the oracle never sees a byte;
-    // the one float (RMS) is a per-row sqrt over exact integer sums, so
-    // IEEE correct rounding makes it bit-exact cross-engine
-    "q_multimodal_wav" ->
-      """WITH d AS (
-        |  SELECT doc_id, 1 + doc_id % 2 AS ch, 50 + doc_id % 20 AS nf
-        |  FROM documents),
-        |sm AS (
-        |  SELECT doc_id, ch, nf,
-        |    (doc_id * 31 + i * 17) % 4001 - 2000 AS v
-        |  FROM d, unnest(generate_series(0, nf * ch - 1)) AS t(i))
-        |SELECT doc_id AS media_id,
-        |  CAST(8000 AS INT) AS sample_rate,
-        |  CAST(any_value(ch) AS INT) AS channels,
-        |  CAST(any_value(nf) AS BIGINT) AS n_frames,
-        |  CAST(any_value(nf) * 1000 // 8000 AS BIGINT) AS duration_ms,
-        |  CAST(max(abs(v)) AS INT) AS peak,
-        |  sqrt(CAST(sum(v * v) AS DOUBLE)
-        |    / (any_value(nf) * any_value(ch))) AS rms,
-        |  CAST(44 + any_value(nf) * any_value(ch) * 2 AS BIGINT) AS n_bytes
-        |FROM sm GROUP BY doc_id""".stripMargin,
-
-    // nearest-neighbor downsample of the planted closed form: output
-    // pixel (x, y, ch) carries source index ((2y)*w + 2x)*3 + ch
-    "q_multimodal_resize" ->
-      """WITH d AS (
-        |  SELECT doc_id, 2 + doc_id % 3 AS w, 2 + doc_id % 2 AS h
-        |  FROM documents),
-        |dims AS (
-        |  SELECT doc_id, w, h, (w + 1) // 2 AS nw, (h + 1) // 2 AS nh
-        |  FROM d),
-        |px AS (
-        |  SELECT doc_id, nw, nh,
-        |    (doc_id * 7 + (((2 * y) * w + 2 * x) * 3 + ch) * 13) % 256 AS v,
-        |    ch
-        |  FROM dims,
-        |    unnest(generate_series(0, nh - 1)) AS ty(y),
-        |    unnest(generate_series(0, nw - 1)) AS tx(x),
-        |    unnest(generate_series(0, 2)) AS tc(ch))
-        |SELECT doc_id AS media_id,
-        |  CAST(any_value(nw) AS INT) AS width,
-        |  CAST(any_value(nh) AS INT) AS height,
-        |  CAST(length('P6' || chr(10) || any_value(nw) || ' ' || any_value(nh)
-        |    || chr(10) || '255' || chr(10))
-        |    + any_value(nw) * any_value(nh) * 3 AS BIGINT) AS n_bytes,
-        |  CAST(sum(v) FILTER (ch = 0) AS DOUBLE)
-        |    / (any_value(nw) * any_value(nh)) AS mean_r,
-        |  CAST(sum(v) FILTER (ch = 1) AS DOUBLE)
-        |    / (any_value(nw) * any_value(nh)) AS mean_g,
-        |  CAST(sum(v) FILTER (ch = 2) AS DOUBLE)
-        |    / (any_value(nw) * any_value(nh)) AS mean_b
-        |FROM px GROUP BY doc_id""".stripMargin,
-
-    // the planted-y4m closed form: frame f's luma byte i of clip id
-    // carries (id*7 + f*11 + i*13) % 256 over a (2+id%3)×(2+id%2) mono
-    // plane and 3+id%4 frames at 25 fps; n_bytes counts the textual
-    // stream header plus per-frame "FRAME\n" + w*h luma bytes — the
-    // oracle restates the plant, Spark parses the real container
-    "q_multimodal_y4m" ->
-      """WITH d AS (
-        |  SELECT doc_id, 2 + doc_id % 3 AS w, 2 + doc_id % 2 AS h,
-        |    3 + doc_id % 4 AS nf
-        |  FROM documents),
-        |px AS (
-        |  SELECT doc_id, w, h, nf,
-        |    (doc_id * 7 + f * 11 + i * 13) % 256 AS v
-        |  FROM d,
-        |    unnest(generate_series(0, nf - 1)) AS tf(f),
-        |    unnest(generate_series(0, w * h - 1)) AS ti(i))
-        |SELECT doc_id AS media_id,
-        |  CAST(any_value(w) AS INT) AS width,
-        |  CAST(any_value(h) AS INT) AS height,
-        |  CAST(25 AS INT) AS fps_num,
-        |  CAST(1 AS INT) AS fps_den,
-        |  CAST(any_value(nf) AS BIGINT) AS n_frames,
-        |  CAST(any_value(nf) * 40 AS BIGINT) AS duration_ms,
-        |  CAST(max(v) AS INT) AS luma_peak,
-        |  CAST(sum(v) AS DOUBLE)
-        |    / (any_value(nf) * any_value(w) * any_value(h)) AS luma_mean,
-        |  CAST(length('YUV4MPEG2 W' || any_value(w) || ' H' || any_value(h)
-        |    || ' F25:1 Ip A1:1 Cmono') + 1
-        |    + any_value(nf) * (6 + any_value(w) * any_value(h))
-        |    AS BIGINT) AS n_bytes
-        |FROM px GROUP BY doc_id""".stripMargin,
-
-    // every-2nd-frame keyframe sampling over the same plant: one row per
-    // kept frame with exact integer luma sum/peak
-    "q_multimodal_keyframes" ->
-      """WITH d AS (
-        |  SELECT doc_id, 2 + doc_id % 3 AS w, 2 + doc_id % 2 AS h,
-        |    3 + doc_id % 4 AS nf
-        |  FROM documents),
-        |px AS (
-        |  SELECT doc_id, w, h, f,
-        |    (doc_id * 7 + f * 11 + i * 13) % 256 AS v
-        |  FROM d,
-        |    unnest(generate_series(0, nf - 1)) AS tf(f),
-        |    unnest(generate_series(0, w * h - 1)) AS ti(i)
-        |  WHERE f % 2 = 0)
-        |SELECT doc_id AS media_id,
-        |  CAST(f AS INT) AS frame_idx,
-        |  CAST(any_value(w) AS INT) AS width,
-        |  CAST(any_value(h) AS INT) AS height,
-        |  CAST(sum(v) AS BIGINT) AS luma_sum,
-        |  CAST(max(v) AS INT) AS luma_peak
-        |FROM px GROUP BY doc_id, f""".stripMargin,
-
-    "q_multimodal_meta" ->
-      """SELECT doc_id AS media_id,
-        |  (['image','audio','video'])[(doc_id % 3) + 1] AS kind,
-        |  octet_length(CAST(text AS BLOB)) AS n_bytes,
-        |  substring(text, 1, 4) AS format,
-        |  md5(text) AS payload_md5
-        |FROM documents""".stripMargin,
-
-    // the md5-derived stub embedding, reproduced value-for-value; sums
-    // are written left-associative to match the engine's reduce order
-    // exact heavy-hitter semantics, sketch-free: the HAVING floor is the
-    // same integer threshold the Spark side computes from the sketch's n
-    "q_heavy_hitters" ->
-      """WITH tok AS (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents),
-        |n AS (SELECT count(*) AS n FROM tok)
-        |SELECT token, count(*) AS cnt
-        |FROM tok GROUP BY token
-        |HAVING count(*) >= (SELECT (2 * n + 999) // 1000 FROM n)""".stripMargin,
-
-    // mirrors Profile.binByQuantile: same quantized unit, same integer
-    // CDF, same bin rule
-    "q_quantile_bins" ->
-      """WITH e AS (
-        |  SELECT event_id,
-        |    CAST(round(CAST(value AS DECIMAL(18,2)) * 100, 0) AS BIGINT)
-        |      AS value_unit
-        |  FROM events
-        |  WHERE event_id < 3000 AND value IS NOT NULL AND NOT isnan(value)),
-        |c AS (SELECT value_unit AS u, count(*) AS n_v FROM e GROUP BY 1),
-        |b AS (
-        |  SELECT u, coalesce(sum(n_v) OVER (ORDER BY u
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum_before,
-        |    sum(n_v) OVER () AS n_total
-        |  FROM c),
-        |m AS (SELECT u,
-        |  CAST(least(9, cum_before * 10 // n_total) AS BIGINT) AS bin
-        |  FROM b)
-        |SELECT e.event_id, e.value_unit, m.bin
-        |FROM e JOIN m ON e.value_unit = m.u""".stripMargin,
-
-    // mirrors Html.linkGraph on the q_html_extract plant
-    "q_link_graph" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    '</p><a href="/next/' || (doc_id % 10) || '">next page</a>'
-        |    || (CASE WHEN doc_id % 3 = 0
-        |         THEN '<a href="/rel">related</a>' ELSE '' END) AS html
-        |  FROM documents),
-        |l AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(html,
-        |    '(?i)<a href="([^"]*)"', 1)) AS target
-        |  FROM u)
-        |SELECT target, count(*) AS n_refs,
-        |  count(DISTINCT doc_id) AS n_docs
-        |FROM l GROUP BY target""".stripMargin,
-
-    // mirrors the q_rrf_hybrid composition: the q_bm25 oracle CTEs at
-    // k=20 for the single query, the q_ann_cosine rounding contract for
-    // the dense rank, then pure-integer RRF
-    "q_rrf_hybrid" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    len(string_split_regex(trim(lower(text)), '\s+')) AS dl,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, dl, term, count(*) AS tf FROM tok GROUP BY 1, 2, 3),
-        |dfw AS (
-        |  SELECT *, count(*) OVER (PARTITION BY term) AS df_docs FROM tf),
-        |stats AS (
-        |  SELECT count(DISTINCT doc_id) AS n_docs, sum(tf) AS total_tokens
-        |  FROM dfw),
-        |qt AS (
-        |  SELECT DISTINCT unnest(['vector', 'hash', 'join']) AS term),
-        |s AS (
-        |  SELECT dfw.doc_id,
-        |    sum(CAST(round(
-        |      round(ln((CAST(n_docs AS DOUBLE) - CAST(df_docs AS DOUBLE)
-        |          + 0.5) / (CAST(df_docs AS DOUBLE) + 0.5) + 1.0), 6)
-        |      * (CAST(tf AS DOUBLE) * 2.2
-        |         / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75
-        |            * (CAST(dl AS DOUBLE) / (CAST(total_tokens AS DOUBLE)
-        |               / CAST(n_docs AS DOUBLE))))))
-        |      * 1000000.0, 0) AS BIGINT)) AS score_micros
-        |  FROM dfw CROSS JOIN stats JOIN qt USING (term)
-        |  GROUP BY 1),
-        |lex AS (
-        |  SELECT doc_id, rank FROM (
-        |    SELECT doc_id, row_number() OVER (
-        |      ORDER BY score_micros DESC, doc_id) AS rank FROM s)
-        |  WHERE rank <= 20),
-        |qv AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-        |sem AS (
-        |  SELECT doc_id, rank FROM (
-        |    SELECT e.vec_id AS doc_id, row_number() OVER (
-        |      ORDER BY round(list_cosine_similarity(
-        |        CAST(e.embedding AS DOUBLE[]),
-        |        CAST(qv.embedding AS DOUBLE[])), 4) DESC, e.vec_id) AS rank
-        |    FROM embeddings e, qv)
-        |  WHERE rank <= 20),
-        |fused AS (
-        |  SELECT doc_id,
-        |    CAST(sum(1000000 // (60 + rank)) AS BIGINT) AS rrf_micros,
-        |    count(*) AS n_lists
-        |  FROM (SELECT * FROM lex UNION ALL SELECT * FROM sem)
-        |  GROUP BY doc_id)
-        |SELECT CAST(0 AS BIGINT) AS query_id, doc_id, rrf_micros, n_lists,
-        |  rank FROM (
-        |  SELECT *, row_number() OVER (
-        |    ORDER BY rrf_micros DESC, doc_id) AS rank FROM fused)
-        |WHERE rank <= 10""".stripMargin,
-
-    "q_listagg" ->
-      """SELECT r_name, string_agg(n_name, '|' ORDER BY n_name) AS nations,
-        |  count(*) AS n_nations
-        |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name""".stripMargin,
-
-    // mirrors Baskets.liftPairs: same capped universe for pairs, support
-    // counts, and the basket total; same truncating fixed-point lift
-    "q_basket_lift" ->
-      """WITH it AS (
-        |  SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem
-        |  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
-        |sz AS (SELECT b, count(*) AS n FROM it GROUP BY b),
-        |ok AS (SELECT it.b, it.i FROM it JOIN sz USING (b) WHERE sz.n <= 5),
-        |nb AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS n_baskets FROM ok),
-        |sup AS (SELECT i, CAST(count(*) AS BIGINT) AS cnt FROM ok GROUP BY i),
-        |pr AS (
-        |  SELECT x.i AS item_a, y.i AS item_b,
-        |    CAST(count(*) AS BIGINT) AS pair_cnt
-        |  FROM ok x JOIN ok y ON x.b = y.b AND x.i < y.i
-        |  GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT pr.item_a, pr.item_b, pr.pair_cnt,
-        |  sa.cnt AS cnt_a, sb.cnt AS cnt_b,
-        |  (1000000 * nb.n_baskets * pr.pair_cnt) // (sa.cnt * sb.cnt)
-        |    AS lift_micros
-        |FROM pr
-        |JOIN sup sa ON pr.item_a = sa.i
-        |JOIN sup sb ON pr.item_b = sb.i
-        |CROSS JOIN nb""".stripMargin,
-
-    // mirrors Html.extract on the identical plant: same RE2-safe regex
-    // chain ('g' flags — Spark replaces all matches by default), same
-    // entity order (&amp; last), same whitespace collapse
-    "q_html_extract" ->
-      (HtmlReplayCtes +
-        """SELECT doc_id,
-          |  regexp_extract(html, '(?i)<title[^>]*>([^<]*)</title>', 1) AS title,
-          |  CAST(len(regexp_extract_all(html, '(?i)<a href')) AS BIGINT)
-          |    AS n_links,
-          |  text_clean,
-          |  CAST(length(text_clean) AS BIGINT) AS n_chars_clean
-          |FROM s4""".stripMargin),
-
-    // the WARC/gzip transport in the middle must not perturb
-    // extraction: same replay CTEs, stats-only projection
-    "q_cc_pipeline" ->
-      (HtmlReplayCtes +
-        """SELECT doc_id,
-          |  CAST(len(regexp_extract_all(html, '(?i)<a href')) AS BIGINT)
-          |    AS n_links,
-          |  CAST(length(text_clean) AS BIGINT) AS n_chars_clean
-          |FROM s4""".stripMargin),
-
-    // mirrors Sampling.temperatureSample: same sorted-order W fold
-    // (list_reduce = left-assoc IEEE adds), same probability arithmetic
-    // sequence, same md5 bucket selection
-    "q_temperature_sample" ->
-      """WITH c AS (
-        |  SELECT lang AS g, CAST(count(*) AS BIGINT) AS c
-        |  FROM documents WHERE lang IS NOT NULL GROUP BY 1),
-        |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM c),
-        |bigw AS (
-        |  SELECT list_reduce(
-        |    list_prepend(CAST(0.0 AS DOUBLE),
-        |      list(sqrt(CAST(c AS DOUBLE)) ORDER BY g)),
-        |    (acc, x) -> acc + x) AS w FROM c),
-        |p AS (
-        |  SELECT g, least(CAST(1.0 AS DOUBLE),
-        |    CAST((SELECT n * 1 // 2 FROM tot) AS DOUBLE)
-        |      * sqrt(CAST(c AS DOUBLE)) / (SELECT w FROM bigw)
-        |      / CAST(c AS DOUBLE)) AS p
-        |  FROM c)
-        |SELECT d.doc_id, d.lang
-        |FROM documents d JOIN p ON d.lang = p.g
-        |WHERE CAST('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)
-        |    || ':temp'), 1, 8) AS BIGINT) % 10000 < p.p * 10000""".stripMargin,
-
-    // mirrors Urls.canonicalize: same plant, same RE2-safe regexp chain
-    // (DuckDB regexp_replace needs the explicit 'g' flag where Spark's
-    // replaces all matches by default; \1 vs $1 is replacement syntax,
-    // same semantics)
-    "q_url_canonical" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://' ELSE 'https://' END)
-        |    || upper(source) || '.Example.COM'
-        |    || (CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE '' END)
-        |    || '/cat' || (doc_id % 3) || '/page' || (doc_id % 5)
-        |    || '/?utm_source=feed&utm_campaign=c' || (doc_id % 4)
-        |    || '&id=' || (doc_id % 5) || '&gclid=g' || (doc_id % 2)
-        |    || '#sec' || (doc_id % 6) AS url
-        |  FROM documents),
-        |s1 AS (SELECT doc_id, url,
-        |  regexp_replace(url, '#.*$', '') AS nofrag FROM u),
-        |s2 AS (SELECT doc_id, url,
-        |  lower(regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))
-        |    AS scheme,
-        |  regexp_replace(nofrag, '^[A-Za-z][A-Za-z0-9+.-]*://', '') AS rest
-        |  FROM s1),
-        |s3 AS (SELECT doc_id, url, scheme,
-        |  CASE WHEN scheme = 'http' THEN regexp_replace(
-        |      lower(regexp_extract(rest, '^([^/?#]*)', 1)), ':80$', '')
-        |    WHEN scheme = 'https' THEN regexp_replace(
-        |      lower(regexp_extract(rest, '^([^/?#]*)', 1)), ':443$', '')
-        |    ELSE lower(regexp_extract(rest, '^([^/?#]*)', 1)) END AS host,
-        |  regexp_replace(rest, '^[^/?#]*', '') AS pathq0 FROM s2),
-        |s4 AS (SELECT doc_id, url, scheme, host,
-        |  regexp_replace(pathq0,
-        |    '[?&](utm_[A-Za-z0-9_]+|gclid|fbclid)=[^&#]*', '', 'g') AS p1
-        |  FROM s3),
-        |s5 AS (SELECT doc_id, url, scheme, host,
-        |  regexp_replace(regexp_replace(
-        |    regexp_replace(p1, '^([^?&#]*)&', '\1?'),
-        |    '[?&]+$', ''), '/$', '') AS pathq FROM s4)
-        |SELECT doc_id, url, scheme || '://' || host || pathq AS canonical_url
-        |FROM s5""".stripMargin,
-
-    "q_url_dedup" ->
-      """WITH c AS (
-        |  -- independent CLOSED FORM of the canonical key (no regex
-        |  -- replay); the slash before '?' is the planted path's own
-        |  SELECT doc_id,
-        |    'https://' || lower(source) || '.example.com'
-        |    || '/cat' || (doc_id % 3) || '/page' || (doc_id % 5)
-        |    || '/?id=' || (doc_id % 5) AS canonical_url
-        |  FROM documents)
-        |SELECT canonical_url, min(doc_id) AS keep_id, count(*) AS n_dups
-        |FROM c GROUP BY canonical_url""".stripMargin,
-
-    // closed form of the plant: version advances every p fetches, so
-    // over fetches 1..5 there are floor(5/p) transitions; the rate is
-    // the same exact integer division both engines
-    "q_recrawl_priority" ->
-      """SELECT doc_id AS url_id, CAST(6 AS BIGINT) AS n_fetches,
-        |  CAST(5 // (1 + doc_id % 4) AS BIGINT) AS n_changes,
-        |  (1000000 * (5 // (1 + doc_id % 4))) // 5 AS change_rate_micros
-        |FROM documents""".stripMargin,
-
-    // replays the plant AND any natural cross-host exact-text dups:
-    // distinct (host, md5) first, then the >=2-host groups
-    "q_mirror_report" ->
-      """WITH pages AS (
-        |  SELECT lower(source) || '.example.com' AS host, text
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT 'mirror.example.org' AS host, text
-        |  FROM documents WHERE doc_id % 4 = 0),
-        |fp AS (SELECT DISTINCT host, md5(text) AS content_fp FROM pages)
-        |SELECT content_fp, CAST(count(*) AS BIGINT) AS n_hosts,
-        |  string_agg(host, '|' ORDER BY host) AS hosts
-        |FROM fp GROUP BY content_fp HAVING count(*) >= 2""".stripMargin,
-
-    "q_multimodal_embed" ->
-      """WITH m AS (
-        |  SELECT doc_id AS media_id,
-        |    (['image','audio','video'])[(doc_id % 3) + 1] AS kind,
-        |    [CAST((('0x' || substring(md5(text || CAST(i AS VARCHAR)), 1, 8))::BIGINT
-        |           % 1000) / 999.0 AS DOUBLE) for i in range(0, 8)] AS v
-        |  FROM documents)
-        |SELECT media_id, kind,
-        |  round((v[1]+v[2]+v[3]+v[4]+v[5]+v[6]+v[7]+v[8]) /
-        |        (sqrt(v[1]*v[1]+v[2]*v[2]+v[3]*v[3]+v[4]*v[4]
-        |              +v[5]*v[5]+v[6]*v[6]+v[7]*v[7]+v[8]*v[8])
-        |         * sqrt(8.0)), 4) AS probe_cos
-        |FROM m""".stripMargin,
-
-    "q_multimodal_frames" ->
-      """SELECT doc_id AS media_id,
-        |  (['image','audio','video'])[(doc_id % 3) + 1] AS kind,
-        |  CASE WHEN octet_length(CAST(text AS BLOB)) >= 64
-        |       THEN (octet_length(CAST(text AS BLOB)) - 64) // 16 + 1
-        |       ELSE 0 END AS n_frames
-        |FROM documents""".stripMargin)
 }

@@ -1,19 +1,25 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.queries.Query
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * oracle_quadratic.txt, the comma-separated names of the oracles that
+  * compare every document pair (the compare's skip list at sf0.1). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // local-iteration filter: comma-separated query names; unset (the
     // driver's invocation) runs everything
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, "SPARK_GRAFT_VERIFY_ONLY names unknown " +
+      s"queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
+    spark.sparkContext.setLogLevel("WARN")
+    new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -47,6 +53,8 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_quadratic.txt"),
+      Query.all.filter(_.quadratic).map(_.name).sorted.mkString(","))
     spark.stop()
   }
 }

@@ -3,10 +3,11 @@ package graft.tools
 /** Bracketed same-JVM A/B of a gated strategy conf:
   * AbGate <confKey> <valueA> <valueB> <query> [query...] — runs each
   * query alternately under valueA / valueB (3 rounds each, interleaved
-  * ABAB.. so JIT/heat drift brackets both arms), Bench measurement
-  * discipline (clearCache, toRdd.count()). Round 16: built for
-  * spark.graft.confirm.explodeMinBytes (0 = always pair-explode,
-  * default = two-join at test SFs), reusable for any plan-time conf. */
+  * ABAB.. so JIT/heat drift brackets both arms), each run Bench's own
+  * measurement (`Bench.queryRun`: clearCache, toRdd.count()). Round 16:
+  * built for spark.graft.confirm.explodeMinBytes (0 = always
+  * pair-explode, default = two-join at test SFs), reusable for any
+  * plan-time conf. */
 object AbGate {
   def main(args: Array[String]): Unit = {
     val key = args(0); val va = args(1); val vb = args(2)
@@ -17,20 +18,17 @@ object AbGate {
     spark.sparkContext.setLogLevel("WARN")
     graft.Bench.warmup(spark, sfDir)
     queries.foreach { q =>
-      // one untimed run per arm to JIT the query's own codepaths
+      // one discarded run per arm to JIT the query's own codepaths
       Seq(va, vb).foreach { v =>
         spark.conf.set(key, v)
-        graft.SparkEntry.queries(q)(spark, sfDir).queryExecution.toRdd.count()
+        graft.Bench.queryRun(spark, q, sfDir)
       }
       val times = collection.mutable.Map("A" -> List.empty[Double],
         "B" -> List.empty[Double])
       (1 to 3).foreach { _ =>
         Seq(("A", va), ("B", vb)).foreach { case (arm, v) =>
           spark.conf.set(key, v)
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          graft.SparkEntry.queries(q)(spark, sfDir).queryExecution.toRdd.count()
-          times(arm) = times(arm) :+ (System.nanoTime() - t0) / 1e9
+          times(arm) = times(arm) :+ graft.Bench.queryRun(spark, q, sfDir)
         }
       }
       def fmt(xs: List[Double]) =

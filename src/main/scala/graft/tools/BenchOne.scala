@@ -1,8 +1,9 @@
 package graft.tools
 
 /** Scratch timer for one registered query: BenchOne <name> [sfDir] [runs].
-  * Mirrors Bench's measurement discipline (clearCache before each run,
-  * toRdd.count() to defeat column pruning) so numbers are comparable. */
+  * Each run is Bench's own measurement (`Bench.queryRun`: clearCache
+  * before each run, toRdd.count() to defeat column pruning), so numbers
+  * are comparable. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -13,10 +14,8 @@ object BenchOne {
     spark.sparkContext.setLogLevel("WARN")
     graft.Bench.warmup(spark, sfDir)
     (1 to runs).foreach { i =>
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-      println(f"[benchone] $name run$i ${(System.nanoTime() - t0) / 1e9}%.2fs " +
+      val secs = graft.Bench.queryRun(spark, name, sfDir)
+      println(f"[benchone] $name run$i $secs%.2fs " +
         s"(cachedTables=${spark.sharedState.cacheManager.isEmpty})")
     }
     spark.stop()

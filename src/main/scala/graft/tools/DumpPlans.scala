@@ -140,7 +140,7 @@ object DumpPlans {
         // The dim table is q_rollup_star's OWN fixture (one
         // definition; the oracle CTE mirrors it)
         val dim = spark.read.parquet(
-          graft.SparkEntry.starDimFor(spark, dir))
+          graft.queries.ScaleQueries.starDimFor(spark, dir))
         val planS = spark.read.parquet(basePath)
           .join(dim, col("source") === col("src"))
           .where(col("tier") === "high")

@@ -93,12 +93,8 @@ object ScalingCurve {
       else sfs
     val rows = qset.map { q =>
       val times = sfset.map { sf =>
-        val samples = (1 to 3).map { _ =>
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          graft.SparkEntry.queries(q)(spark, sf).queryExecution.toRdd.count()
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
+        val samples = (1 to 3).map(_ => graft.Bench.queryRun(spark, q, sf))
+          .sorted
         samples(1)
       }
       (q, times)

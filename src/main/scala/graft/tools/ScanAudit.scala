@@ -15,8 +15,7 @@ object ScanAudit {
     val spark = graft.GraftSession.create("local[8]", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val (flags, given) = args.toSeq.partition(_ == "--plan")
-    val names = if (given.nonEmpty) given
-      else graft.Bench.headline.filterNot(_.startsWith("s_"))
+    val names = if (given.nonEmpty) given else graft.Bench.headline
     names.foreach { name =>
       try {
         val fin = finalPlan(graft.SparkEntry.queries(name)(spark, sf))

@@ -668,7 +668,7 @@ class PlanSpec extends SparkSpec {
     try {
       // q_rollup_star's own dim fixture — one definition, mirrored by
       // the DuckDB oracle CTE
-      val dim = spark.read.parquet(SparkEntry.starDimFor(spark, sfDir))
+      val dim = spark.read.parquet(graft.queries.ScaleQueries.starDimFor(spark, sfDir))
       val p = spark.read.parquet(basePath)
         .join(dim, col("source") === col("src"))
         .where(col("tier") === "high")

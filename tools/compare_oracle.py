@@ -2,7 +2,7 @@
 """Local pre-check mimicking the driver's DuckDB-oracle compare:
 for each query with an oracle, load the Spark parquet result and the
 DuckDB result, sort columns by name, sort rows, compare values."""
-import atexit, duckdb, glob, json, math, os, shutil, sys, tempfile
+import atexit, duckdb, glob, json, math, os, shutil, signal, sys, tempfile
 import threading, time
 
 out_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/verify_sf001"
@@ -48,6 +48,24 @@ def drop_spill():
 
 threading.Thread(target=watch_spill, daemon=True).start()
 atexit.register(drop_spill)
+# `timeout` stops a run with SIGTERM, whose default action kills the
+# process without running atexit handlers. A Python-level handler would
+# run only between bytecodes, which a DuckDB query can hold off for
+# minutes (con.interrupt() did not stop q_unigram_encode's oracle), so
+# the signal instead wakes a thread that removes the spill directory and
+# exits at once.
+wake_r, wake_w = os.pipe()
+os.set_blocking(wake_w, False)
+signal.set_wakeup_fd(wake_w)
+signal.signal(signal.SIGTERM, lambda signum, frame: None)
+
+def exit_on_signal():
+    signum = os.read(wake_r, 1)[0]
+    sys.stdout.flush()
+    shutil.rmtree(spill_dir, ignore_errors=True)
+    os._exit(128 + signum)
+
+threading.Thread(target=exit_on_signal, daemon=True).start()
 
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
