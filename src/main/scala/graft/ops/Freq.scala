@@ -241,29 +241,43 @@ object Freq {
     * zipfFit documents (9-decimal per-row logs, DECIMAL(38,9) moment
     * sums, fixed association order). Shared by [[zipfFit]] and
     * [[heapsFit]]. */
-  def powerLawFit(points: DataFrame, xCol: String, yCol: String): DataFrame = {
+  def powerLawFit(points: DataFrame, xCol: String, yCol: String): DataFrame =
+    powerLawFitOver(points, Nil, xCol, yCol)
+
+  /** Per-group quantized log–log OLS — the grouped twin of
+    * [[powerLawFit]], shared by [[zipfFitBy]] and [[heapsFitBy]]. */
+  def powerLawFitBy(points: DataFrame, groupCol: String, xCol: String,
+      yCol: String): DataFrame =
+    powerLawFitOver(points, Seq(groupCol), xCol, yCol).drop("intercept")
+
+  /** The one fit body: (keys..., n, slope, intercept, r2), one row per
+    * key. */
+  private def powerLawFitOver(points: DataFrame, keys: Seq[String],
+      xCol: String, yCol: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
+    val ks = keys.map(col)
     // non-positive x/y have no log: EXCLUDE the point entirely — the
     // sums already skipped NULL logs while count(*) still counted the
     // row, so n was inconsistent with the moments and the fit silently
     // biased (r11 self-review: a smoothing-zero count row was enough)
-    val q = points.select(
+    val q = points.select(ks ++ Seq(
         round(log(col(xCol).cast("double")), 9).as("x"),
-        round(log(col(yCol).cast("double")), 9).as("y"))
+        round(log(col(yCol).cast("double")), 9).as("y")): _*)
       .where(col("x").isNotNull && col("y").isNotNull)
     def dsum9(c: Column): Column =
       sum(c.cast(DecimalType(38, 9))).cast("double")
-    q.agg(count(lit(1)).as("n"),
+    q.groupBy(ks: _*)
+      .agg(count(lit(1)).as("n"),
         dsum9(col("x")).as("sx"), dsum9(col("y")).as("sy"),
         dsum9(round(col("x") * col("x"), 9)).as("sxx"),
         dsum9(round(col("x") * col("y"), 9)).as("sxy"),
         dsum9(round(col("y") * col("y"), 9)).as("syy"))
-      .select(col("n"),
+      .select(ks ++ Seq(col("n"),
         (col("n") * col("sxy") - col("sx") * col("sy")).as("a"),
         (col("n") * col("sxx") - col("sx") * col("sx")).as("b"),
         (col("n") * col("syy") - col("sy") * col("sy")).as("c"),
-        col("sx"), col("sy"))
-      .select(col("n"),
+        col("sx"), col("sy")): _*)
+      .select(ks ++ Seq(col("n"),
         // degenerate fits (zero x- or y-variance, e.g. a constant
         // vocabulary) yield NaN, not an ANSI divide-by-zero error; the
         // guards are inactive on any non-degenerate corpus so the
@@ -275,7 +289,7 @@ object Freq {
           .otherwise(lit(Double.NaN)).as("intercept"),
         when(col("b") * col("c") =!= 0.0,
             col("a") * col("a") / (col("b") * col("c")))
-          .otherwise(lit(Double.NaN)).as("r2"))
+          .otherwise(lit(Double.NaN)).as("r2")): _*)
   }
 
   /** Per-GROUP Zipf fit: one power-law slope per group (per source,
@@ -291,42 +305,11 @@ object Freq {
       countCol: String, topN: Int): DataFrame = {
     require(topN >= 3, "zipfFitBy: need at least 3 points")
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.DecimalType
     val w = Window.partitionBy(col(groupCol))
       .orderBy(col(countCol).desc, col(valueCol))
     val ranked = counts.withColumn("rank", row_number().over(w))
       .where(col("rank") <= topN)
     powerLawFitBy(ranked, groupCol, "rank", countCol)
-  }
-
-  /** Per-group quantized log–log OLS — the grouped twin of
-    * [[powerLawFit]], shared by [[zipfFitBy]] and [[heapsFitBy]]. */
-  def powerLawFitBy(points: DataFrame, groupCol: String, xCol: String,
-      yCol: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val q = points.select(col(groupCol),
-        round(log(col(xCol).cast("double")), 9).as("x"),
-        round(log(col(yCol).cast("double")), 9).as("y"))
-      // the powerLawFit n-consistency rule: no point without a log
-      .where(col("x").isNotNull && col("y").isNotNull)
-    def dsum9(c: Column): Column =
-      sum(c.cast(DecimalType(38, 9))).cast("double")
-    q.groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n"),
-        dsum9(col("x")).as("sx"), dsum9(col("y")).as("sy"),
-        dsum9(round(col("x") * col("x"), 9)).as("sxx"),
-        dsum9(round(col("x") * col("y"), 9)).as("sxy"),
-        dsum9(round(col("y") * col("y"), 9)).as("syy"))
-      .select(col(groupCol), col("n"),
-        (col("n") * col("sxy") - col("sx") * col("sy")).as("a"),
-        (col("n") * col("sxx") - col("sx") * col("sx")).as("b"),
-        (col("n") * col("syy") - col("sy") * col("sy")).as("c"))
-      .select(col(groupCol), col("n"),
-        when(col("b") =!= 0.0, col("a") / col("b"))
-          .otherwise(lit(Double.NaN)).as("slope"),
-        when(col("b") * col("c") =!= 0.0,
-            col("a") * col("a") / (col("b") * col("c")))
-          .otherwise(lit(Double.NaN)).as("r2"))
   }
 
   /** Per-group Heaps fit: one vocabulary-growth exponent per source —
@@ -337,24 +320,9 @@ object Freq {
     * `Window.partitionBy(group)` cannot survive). A source whose β sags
     * toward 0 is duplicate-heavy; toward 1, id/hash-heavy. */
   def heapsFitBy(docs: DataFrame, groupCol: String,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val toks = docs.select(col(groupCol), col(idCol).as("d"),
-      explode(TextOps.words(lower(col(textCol)))).as("token"))
-    val perDoc = toks.groupBy(col(groupCol), col("d"))
-      .agg(count(lit(1)).as("ntok"))
-    val newv = toks.groupBy(col(groupCol), col("token"))
-      .agg(min(col("d")).as("d"))
-      .groupBy(col(groupCol), col("d")).agg(count(lit(1)).as("vnew"))
-    val pts0 = perDoc.join(newv, Seq(groupCol, "d"), "left")
-      .select(col(groupCol), col("d"), col("ntok"),
-        coalesce(col("vnew"), lit(0L)).as("vnew"))
-    val pts = Profile.domainPrefix(pts0, "d", Seq("ntok", "vnew"),
-        groupCols = Seq(groupCol))
-      .select(col(groupCol),
-        (col("cum_ntok") + col("ntok")).as("n_tokens"),
-        (col("cum_vnew") + col("vnew")).as("n_vocab"))
-    powerLawFitBy(pts, groupCol, "n_tokens", "n_vocab")
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    powerLawFitBy(heapsPoints(docs, Seq(groupCol), idCol, textCol),
+      groupCol, "n_tokens", "n_vocab")
 
   /** Heaps'-law fit: vocabulary growth V(n) ≈ K·n^β over a corpus read
     * in document order — the companion diagnostic to [[zipfFit]]
@@ -379,18 +347,26 @@ object Freq {
     * so give a 100 TB corpus numeric doc ids, which every fixture and
     * real ingest pipeline already has.) */
   def heapsFit(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val toks = docs.select(col(idCol).as("d"),
-      explode(TextOps.words(lower(col(textCol)))).as("token"))
-    val perDoc = toks.groupBy(col("d")).agg(count(lit(1)).as("ntok"))
-    val newv = toks.groupBy(col("token")).agg(min(col("d")).as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("vnew"))
-    val pts0 = perDoc.join(newv, Seq("d"), "left")
-      .select(col("d"), col("ntok"),
-        coalesce(col("vnew"), lit(0L)).as("vnew"))
-    val pts = Profile.domainPrefix(pts0, "d", Seq("ntok", "vnew"))
-      .select((col("cum_ntok") + col("ntok")).as("n_tokens"),
-        (col("cum_vnew") + col("vnew")).as("n_vocab"))
-    powerLawFit(pts, "n_tokens", "n_vocab")
+      textCol: String = "text"): DataFrame =
+    powerLawFit(heapsPoints(docs, Nil, idCol, textCol), "n_tokens", "n_vocab")
+
+  /** The one Heaps point body: (keys..., n_tokens, n_vocab), one row
+    * per (key, document). */
+  private def heapsPoints(docs: DataFrame, keys: Seq[String], idCol: String,
+      textCol: String): DataFrame = {
+    val ks = keys.map(col)
+    val toks = docs.select(ks ++ Seq(col(idCol).as("d"),
+      explode(TextOps.words(lower(col(textCol)))).as("token")): _*)
+    val perDoc = toks.groupBy(ks :+ col("d"): _*)
+      .agg(count(lit(1)).as("ntok"))
+    val newv = toks.groupBy(ks :+ col("token"): _*)
+      .agg(min(col("d")).as("d"))
+      .groupBy(ks :+ col("d"): _*).agg(count(lit(1)).as("vnew"))
+    val pts0 = perDoc.join(newv, keys :+ "d", "left")
+      .select(ks ++ Seq(col("d"), col("ntok"),
+        coalesce(col("vnew"), lit(0L)).as("vnew")): _*)
+    Profile.domainPrefix(pts0, "d", Seq("ntok", "vnew"), groupCols = keys)
+      .select(ks ++ Seq((col("cum_ntok") + col("ntok")).as("n_tokens"),
+        (col("cum_vnew") + col("vnew")).as("n_vocab")): _*)
   }
 }

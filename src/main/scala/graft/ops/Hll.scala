@@ -29,10 +29,29 @@ import org.apache.spark.sql.functions._
   */
 object Hll {
 
-  /** 60-bit deterministic hash: first 15 md5 hex digits. */
-  private def hash60(key: Column): Column =
-    conv(substring(md5(concat(key.cast("string"), lit(":hll"))), 1, 15),
+  /** 60-bit deterministic hash of a salted key: the first 15 md5 hex
+    * digits of `key ++ salt` (15, so the ANSI long cast can't
+    * overflow). One form behind the registers here (salt ":hll"),
+    * [[Kmv]]'s bottom-k (":kmv") and [[Sampling]]'s selection
+    * priorities (":" + seed) — distinct salts keep the streams
+    * independent on the same key. */
+  private[graft] def hash60(key: Column, salt: String): Column =
+    conv(substring(md5(concat(key.cast("string"), lit(salt))), 1, 15),
       16, 10).cast("long")
+
+  private val md5Digest = new ThreadLocal[java.security.MessageDigest] {
+    override def initialValue(): java.security.MessageDigest =
+      java.security.MessageDigest.getInstance("MD5")
+  }
+
+  /** JVM twin of [[hash60]], bit for bit: the first 15 hex digits of
+    * the digest are its top 60 bits, so the first 8 bytes read
+    * big-endian and shifted right by 4 — no hex round trip, one digest
+    * per thread. */
+  private[graft] def jvmHash60(key: String, salt: String): Long =
+    java.nio.ByteBuffer.wrap(md5Digest.get
+      .digest((key + salt).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      .getLong >>> 4
 
   /** rho = leading-zero count within the (60-p)-bit suffix, plus one:
     * computed as width+1 - bitlength(w), with bitlength via the
@@ -45,31 +64,31 @@ object Hll {
   }
 
   /** Sketch a key column: ≤ 2^p register rows (bucket, reg). */
-  def sketch(df: DataFrame, keyCol: String, p: Int): DataFrame = {
+  def sketch(df: DataFrame, keyCol: String, p: Int): DataFrame =
+    sketchOver(df, Nil, keyCol, p)
+
+  /** Per-group sketches: (group, bucket, reg) — the shape for "distinct
+    * users per source over any date range" style rollups. */
+  def sketchBy(df: DataFrame, groupCol: String, keyCol: String, p: Int): DataFrame =
+    sketchOver(df, Seq(groupCol), keyCol, p)
+
+  /** The one sketch body: (keys..., bucket, reg) register rows; the
+    * global sketch is the grouped one over no key. */
+  private def sketchOver(df: DataFrame, keys: Seq[String], keyCol: String,
+      p: Int): DataFrame = {
     require(p >= 4 && p <= 16, "p must be in [4, 16]")
     val m = 1 << p
+    val ks = keys.map(col)
     // `div`, not `/`: Spark's / on longs is DOUBLE division, and a
     // 60-bit hash doesn't fit a double's 53-bit mantissa
     // null keys are not observations (approx_count_distinct semantics;
     // unguarded they'd mint a (null, null) register row that inflates
     // n_present at estimate time)
     df.where(col(keyCol).isNotNull)
-      .select(hash60(col(keyCol)).as("h"))
-      .select((col("h") % m).cast("int").as("bucket"),
-        rhoOf(expr(s"h div ${m}L"), p).cast("int").as("rho"))
-      .groupBy(col("bucket")).agg(max(col("rho")).as("reg"))
-  }
-
-  /** Per-group sketches: (group, bucket, reg) — the shape for "distinct
-    * users per source over any date range" style rollups. */
-  def sketchBy(df: DataFrame, groupCol: String, keyCol: String, p: Int): DataFrame = {
-    require(p >= 4 && p <= 16, "p must be in [4, 16]")
-    val m = 1 << p
-    df.where(col(keyCol).isNotNull)
-      .select(col(groupCol), hash60(col(keyCol)).as("h"))
-      .select(col(groupCol), (col("h") % m).cast("int").as("bucket"),
-        rhoOf(expr(s"h div ${m}L"), p).cast("int").as("rho"))
-      .groupBy(col(groupCol), col("bucket")).agg(max(col("rho")).as("reg"))
+      .select(ks :+ hash60(col(keyCol), ":hll").as("h"): _*)
+      .select(ks ++ Seq((col("h") % m).cast("int").as("bucket"),
+        rhoOf(expr(s"h div ${m}L"), p).cast("int").as("rho")): _*)
+      .groupBy(ks :+ col("bucket"): _*).agg(max(col("rho")).as("reg"))
   }
 
   /** Merge sketches built with the same p: register-wise max. Works on
@@ -80,6 +99,14 @@ object Hll {
     a.unionByName(b).groupBy(keyCols.map(col): _*)
       .agg(max(col("reg")).as("reg"))
 
+  /** The bias constant α_m of the HLL estimate (Flajolet 2007). */
+  private def alpha(m: Int): Double = m match {
+    case 16 => 0.673
+    case 32 => 0.697
+    case 64 => 0.709
+    case _  => 0.7213 / (1 + 1.079 / m)
+  }
+
   /** The HLL estimate over one register set, as a Column pair builder:
     * scaled harmonic sum (exact BIGINT) and present-bucket count feed
     * one closed-form double expression. */
@@ -87,15 +114,9 @@ object Hll {
       scaledSum: Column, nPresent: Column): Column = {
     val width = 60 - p
     val scale = width + 1                    // empty register ⇒ 2^scale
-    val alpha = m match {
-      case 16 => 0.673
-      case 32 => 0.697
-      case 64 => 0.709
-      case _  => 0.7213 / (1 + 1.079 / m)
-    }
     val v = lit(m) - nPresent                // empty buckets
     val s = scaledSum + v.cast("long") * lit(1L << scale)
-    val raw = lit(alpha) * m * m * lit(math.pow(2, scale)) / s
+    val raw = lit(alpha(m)) * m * m * lit(math.pow(2, scale)) / s
     // small-range (linear counting) correction; the large-range 32-bit
     // correction is unnecessary at a 60-bit hash
     when(raw <= 2.5 * m && v > 0,
@@ -104,32 +125,29 @@ object Hll {
 
   /** Estimate distinct count from a global sketch: one row,
     * (est_n double, n_buckets int). */
-  def estimate(sk: DataFrame, p: Int): DataFrame = {
-    val m = 1 << p
-    val scale = 60 - p + 1
-    // coalesce: on an EMPTY sketch sum() is null and the whole estimate
-    // chain would go null — with s_scaled=0 the v=m linear-counting
-    // branch fires and correctly yields est_n = 0.0
-    sk.agg(
-        coalesce(sum(expr(s"shiftleft(CAST(1 AS BIGINT), $scale - reg)")),
-          lit(0L)).as("s_scaled"),
-        count(lit(1)).cast("int").as("n_present"))
-      .select(estimateExpr(m, p, col("s_scaled"), col("n_present"))
-          .as("est_n"),
-        col("n_present").as("n_buckets"))
-  }
+  def estimate(sk: DataFrame, p: Int): DataFrame = estimateOver(sk, Nil, p)
 
   /** Estimate per group from a grouped sketch: (group, est_n). */
-  def estimateBy(sk: DataFrame, groupCol: String, p: Int): DataFrame = {
+  def estimateBy(sk: DataFrame, groupCol: String, p: Int): DataFrame =
+    estimateOver(sk, Seq(groupCol), p).drop("n_buckets")
+
+  /** The one estimate body: (keys..., est_n, n_buckets), one row per
+    * key. */
+  private def estimateOver(sk: DataFrame, keys: Seq[String], p: Int): DataFrame = {
     val m = 1 << p
     val scale = 60 - p + 1
-    sk.groupBy(col(groupCol))
+    val ks = keys.map(col)
+    // coalesce: on an EMPTY global sketch sum() is null and the whole
+    // estimate chain would go null — with s_scaled=0 the v=m
+    // linear-counting branch fires and correctly yields est_n = 0.0
+    sk.groupBy(ks: _*)
       .agg(
         coalesce(sum(expr(s"shiftleft(CAST(1 AS BIGINT), $scale - reg)")),
           lit(0L)).as("s_scaled"),
         count(lit(1)).cast("int").as("n_present"))
-      .select(col(groupCol),
-        estimateExpr(m, p, col("s_scaled"), col("n_present")).as("est_n"))
+      .select(ks ++ Seq(
+        estimateExpr(m, p, col("s_scaled"), col("n_present")).as("est_n"),
+        col("n_present").as("n_buckets")): _*)
   }
 
   /** One-shot convenience: sketch + estimate. */
@@ -147,10 +165,7 @@ object Hll {
 
   /** (bucket, rho) for one key — the JVM twin of the sketch columns. */
   private[graft] def bucketRho(key: String, p: Int): (Int, Int) = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest((key + ":hll").getBytes("UTF-8"))
-    val hex = d.take(8).map(b => f"${b & 0xFF}%02x").mkString.take(15)
-    val h = java.lang.Long.parseLong(hex, 16)
+    val h = jvmHash60(key, ":hll")
     val m = 1 << p
     val w = h / m
     val width = 60 - p
@@ -166,12 +181,6 @@ object Hll {
     val m = 1 << p
     require(regs.length == m, s"expected $m registers")
     val scale = 60 - p + 1
-    val alpha = m match {
-      case 16 => 0.673
-      case 32 => 0.697
-      case 64 => 0.709
-      case _  => 0.7213 / (1 + 1.079 / m)
-    }
     var sScaled = 0L; var nPresent = 0
     var i = 0
     while (i < m) {
@@ -180,7 +189,7 @@ object Hll {
     }
     val v = m - nPresent
     val s = sScaled + v.toLong * (1L << scale)
-    val raw = alpha * m * m * math.pow(2, scale) / s
+    val raw = alpha(m) * m * m * math.pow(2, scale) / s
     // StrictMath, not math.log: Spark's Log expression evaluates via
     // StrictMath, and the hardware-intrinsic Math.log differs by 1 ulp
     // on some inputs — enough to break exact stream/batch parity

@@ -39,11 +39,9 @@ object Kmv {
   /** The 60-bit hash space: hashes are uniform in [0, 2^60). */
   private val HashSpace = 1L << 60
 
-  /** 60-bit deterministic hash: first 15 md5 hex digits (salted so
-    * kmv streams never collide with the :hll ones on the same key). */
-  private[graft] def hash60(key: Column): Column =
-    conv(substring(md5(concat(key.cast("string"), lit(":kmv"))), 1, 15),
-      16, 10).cast("long")
+  /** 60-bit deterministic hash: [[Hll.hash60]] salted ":kmv", so kmv
+    * streams never collide with the :hll ones on the same key. */
+  private[graft] def hash60(key: Column): Column = Hll.hash60(key, ":kmv")
 
   /** Bottom-k distinct-count sketch of a key column: the k smallest
     * DISTINCT 60-bit hashes, one (h) row each (ascending). NULL keys
@@ -63,50 +61,8 @@ object Kmv {
     * global, grouped, and merge — the pre-aggregate `mapPartitions`
     * TreeSet pass this replaces duplicated the insert logic and broke
     * whole-stage codegen at its `.as[Long]` seam (VERDICT r10 #3). */
-  def sketch(df: DataFrame, keyCol: String, k: Int): DataFrame = {
-    require(k >= 2, s"k must be at least 2, got $k")
-    graft.Graft.init(df.sparkSession)
-    df.where(col(keyCol).isNotNull)
-      .select(hash60(col(keyCol)).as("h"))
-      .agg(graft.functions.SketchExprs.bottomK(col("h"), k).as("_hs"))
-      .select(explode(col("_hs")).as("h"))
-  }
-
-  /** Merge bottom-k sketches: union, then re-take the k smallest
-    * distinct hashes through the same [[graft.functions.BottomKLongs]]
-    * aggregate as [[sketch]]. EXACTLY the sketch of the unioned inputs
-    * (bottom-k is a lattice), so merge order and grouping never change
-    * the answer. Exactness requires `k` ≤ every input's own k (a
-    * bottom-16 of bottom-8s only knows 8 hashes per part); merging at
-    * the inputs' shared k — the normal sketch-per-day-then-merge use —
-    * always qualifies. */
-  def merge(k: Int, sketches: DataFrame*): DataFrame = {
-    require(sketches.nonEmpty, "merge needs at least one sketch")
-    graft.Graft.init(sketches.head.sparkSession)
-    sketches.reduce(_ unionByName _)
-      .agg(graft.functions.SketchExprs.bottomK(col("h"), k).as("_hs"))
-      .select(explode(col("_hs")).as("h"))
-  }
-
-  /** The estimator over (n_sample, h_max) aggregate columns — shared
-    * by [[estimate]] and [[estimateBy]]; see [[estimate]] for the
-    * formula's derivation. */
-  private def estExpr(k: Int): Column =
-    when(col("n_sample") < k, col("n_sample").cast("double"))
-      .otherwise(lit((k - 1).toDouble) * lit(HashSpace.toDouble)
-        / col("h_max").cast("double"))
-
-  /** KMV distinct estimate: with the k-th smallest distinct hash at
-    * h_k of a 2^60 space, est = (k-1) * 2^60 / h_k; when the sketch
-    * holds fewer than k hashes the count is exact (we saw every
-    * distinct value). Relative error ~ 1/sqrt(k-2). One float
-    * division, computed identically by the oracle. */
-  def estimate(sk: DataFrame, k: Int): DataFrame = {
-    require(k >= 2, s"k must be at least 2, got $k")
-    sk.agg(count(lit(1)).as("n_sample"), max(col("h")).as("h_max"))
-      .select(estExpr(k).as("est_n"),
-        col("n_sample").cast("int").as("n_sample"))
-  }
+  def sketch(df: DataFrame, keyCol: String, k: Int): DataFrame =
+    sketchOver(df, Nil, keyCol, k)
 
   /** Grouped bottom-k sketch: per group, the k smallest distinct
     * hashes — the per-source/per-day rollup form.
@@ -126,24 +82,73 @@ object Kmv {
     * groups-per-partition × k. One giant group never funnels through
     * one task either: every task contributes at most k hashes for it. */
   def sketchBy(df: DataFrame, groupCol: String, keyCol: String,
+      k: Int): DataFrame =
+    sketchOver(df, Seq(groupCol), keyCol, k)
+
+  /** The one sketch body: (keys..., h) rows, ≤ k per key. NULL keys
+    * are not observations (count-distinct semantics). */
+  private def sketchOver(df: DataFrame, keys: Seq[String], keyCol: String,
       k: Int): DataFrame = {
     require(k >= 2, s"k must be at least 2, got $k")
-    graft.Graft.init(df.sparkSession)
-    df.where(col(keyCol).isNotNull)
-      .select(col(groupCol), hash60(col(keyCol)).as("h"))
-      .groupBy(col(groupCol))
-      .agg(graft.functions.SketchExprs.bottomK(col("h"), k).as("_hs"))
-      .select(col(groupCol), explode(col("_hs")).as("h"))
+    retake(df.where(col(keyCol).isNotNull)
+      .select(keys.map(col) :+ hash60(col(keyCol)).as("h"): _*), keys, k)
   }
+
+  /** Merge bottom-k sketches: union, then re-take the k smallest
+    * distinct hashes through the same [[graft.functions.BottomKLongs]]
+    * aggregate as [[sketch]]. EXACTLY the sketch of the unioned inputs
+    * (bottom-k is a lattice), so merge order and grouping never change
+    * the answer. Exactness requires `k` ≤ every input's own k (a
+    * bottom-16 of bottom-8s only knows 8 hashes per part); merging at
+    * the inputs' shared k — the normal sketch-per-day-then-merge use —
+    * always qualifies. */
+  def merge(k: Int, sketches: DataFrame*): DataFrame = {
+    require(sketches.nonEmpty, "merge needs at least one sketch")
+    retake(sketches.reduce(_ unionByName _), Nil, k)
+  }
+
+  /** The one bottom-k selection behind [[sketch]], [[sketchBy]],
+    * [[merge]] and the set-operation readouts: per key, the k smallest
+    * distinct `h` through [[graft.functions.BottomKLongs]], exploded
+    * back to (keys..., h) rows. With no key it is a global (group-less)
+    * aggregation. */
+  private def retake(hs: DataFrame, keys: Seq[String], k: Int): DataFrame = {
+    graft.Graft.init(hs.sparkSession)
+    val ks = keys.map(col)
+    hs.groupBy(ks: _*)
+      .agg(graft.functions.SketchExprs.bottomK(col("h"), k).as("_hs"))
+      .select(ks :+ explode(col("_hs")).as("h"): _*)
+  }
+
+  /** The estimator over (n_sample, h_max) aggregate columns — shared
+    * by [[estimate]], [[estimateBy]] and the set-operation readouts;
+    * see [[estimate]] for the formula's derivation. */
+  private def estExpr(k: Int): Column =
+    when(col("n_sample") < k, col("n_sample").cast("double"))
+      .otherwise(lit((k - 1).toDouble) * lit(HashSpace.toDouble)
+        / col("h_max").cast("double"))
+
+  /** KMV distinct estimate: with the k-th smallest distinct hash at
+    * h_k of a 2^60 space, est = (k-1) * 2^60 / h_k; when the sketch
+    * holds fewer than k hashes the count is exact (we saw every
+    * distinct value). Relative error ~ 1/sqrt(k-2). One float
+    * division, computed identically by the oracle. */
+  def estimate(sk: DataFrame, k: Int): DataFrame = estimateOver(sk, Nil, k)
 
   /** Per-group KMV estimates from a [[sketchBy]] table: same estimator
     * as [[estimate]], one row per group. */
-  def estimateBy(sk: DataFrame, groupCol: String, k: Int): DataFrame = {
+  def estimateBy(sk: DataFrame, groupCol: String, k: Int): DataFrame =
+    estimateOver(sk, Seq(groupCol), k)
+
+  /** The one estimate body: (keys..., est_n, n_sample), one row per
+    * key. */
+  private def estimateOver(sk: DataFrame, keys: Seq[String], k: Int): DataFrame = {
     require(k >= 2, s"k must be at least 2, got $k")
-    sk.groupBy(col(groupCol))
+    val ks = keys.map(col)
+    sk.groupBy(ks: _*)
       .agg(count(lit(1)).as("n_sample"), max(col("h")).as("h_max"))
-      .select(col(groupCol), estExpr(k).as("est_n"),
-        col("n_sample").cast("int").as("n_sample"))
+      .select(ks ++ Seq(estExpr(k).as("est_n"),
+        col("n_sample").cast("int").as("n_sample")): _*)
   }
 
   /** KMV set-operation estimates between two sketches (Beyer et al.
@@ -161,27 +166,42 @@ object Kmv {
     * readout, same expression order as the oracle.
     *
     * Scale shape: inputs are already k-row sketches — everything here
-    * is k-bounded (union of 2k rows, two broadcast membership joins,
-    * one aggregate). The 100 TB corpora were paid for when the
-    * sketches were built, once each. */
-  def setEstimates(skA: DataFrame, skB: DataFrame, k: Int): DataFrame = {
-    require(k >= 2, s"k must be at least 2, got $k")
-    val m = merge(k, skA.select(col("h")), skB.select(col("h")))
-    val flagged = m
-      .join(broadcast(skA.select(col("h"), lit(1).as("_a"))), Seq("h"), "left")
-      .join(broadcast(skB.select(col("h"), lit(1).as("_b"))), Seq("h"), "left")
+    * is k-bounded (union of 2k rows, two membership joins, one
+    * aggregate). The 100 TB corpora were paid for when the sketches
+    * were built, once each. */
+  def setEstimates(skA: DataFrame, skB: DataFrame, k: Int): DataFrame =
+    setEstimatesOver(skA, skB, Nil, k)
+
+  /** Per-group [[setEstimates]] between two GROUPED sketch tables
+    * ([[sketchBy]] outputs): one row per group present in either input
+    * — per-language vocabulary overlap between two corpora, per-domain
+    * URL overlap between two crawls. A group absent from one side has
+    * n_both = 0 and jaccard_est = 0 (its union sample is the other
+    * side's sketch alone). Everything is (group, h)-keyed over
+    * groups×k-row tables; the per-group re-take runs through the same
+    * bounded [[graft.functions.BottomKLongs]] aggregate as
+    * [[sketchBy]]. */
+  def setEstimatesBy(skA: DataFrame, skB: DataFrame, groupCol: String,
+      k: Int): DataFrame =
+    setEstimatesOver(skA, skB, Seq(groupCol), k)
+
+  /** The one set-operation body: (keys..., est_union, jaccard_est,
+    * est_intersection, n_sample, n_both), one row per key. */
+  private def setEstimatesOver(skA: DataFrame, skB: DataFrame,
+      keys: Seq[String], k: Int): DataFrame = {
+    val ks = keys.map(col)
     val rho = when(col("n_sample") > 0,
       col("n_both").cast("double") / col("n_sample").cast("double"))
       .otherwise(lit(0.0))
-    flagged
+    flagged(skA, skB, keys, k).groupBy(ks: _*)
       .agg(count(lit(1)).as("n_sample"), max(col("h")).as("h_max"),
         sum(when(col("_a") === 1 && col("_b") === 1, 1L).otherwise(0L))
           .as("n_both"))
-      .select(estExpr(k).as("est_union"),
+      .select(ks ++ Seq(estExpr(k).as("est_union"),
         rho.as("jaccard_est"),
         (rho * estExpr(k)).as("est_intersection"),
         col("n_sample").cast("int").as("n_sample"),
-        col("n_both").cast("long").as("n_both"))
+        col("n_both").cast("long").as("n_both")): _*)
   }
 
   /** KMV containment estimates — the DECONTAMINATION direction of
@@ -198,28 +218,8 @@ object Kmv {
     * hashes. Determinism: integer counts, one division per emitted
     * ratio. Everything post-sketch is k-bounded, the [[setEstimates]]
     * shape. */
-  def containment(skA: DataFrame, skB: DataFrame, k: Int): DataFrame = {
-    require(k >= 2, s"k must be at least 2, got $k")
-    val m = merge(k, skA.select(col("h")), skB.select(col("h")))
-    val flagged = m
-      .join(broadcast(skA.select(col("h"), lit(1).as("_a"))), Seq("h"), "left")
-      .join(broadcast(skB.select(col("h"), lit(1).as("_b"))), Seq("h"), "left")
-    flagged
-      .agg(sum(when(col("_a") === 1, 1L).otherwise(0L)).as("n_a"),
-        sum(when(col("_b") === 1, 1L).otherwise(0L)).as("n_b"),
-        sum(when(col("_a") === 1 && col("_b") === 1, 1L).otherwise(0L))
-          .as("n_both"))
-      .select(
-        when(col("n_a") > 0, col("n_both").cast("double")
-          / col("n_a").cast("double")).otherwise(lit(0.0))
-          .as("containment_a_in_b"),
-        when(col("n_b") > 0, col("n_both").cast("double")
-          / col("n_b").cast("double")).otherwise(lit(0.0))
-          .as("containment_b_in_a"),
-        col("n_a").cast("long").as("n_a"),
-        col("n_b").cast("long").as("n_b"),
-        col("n_both").cast("long").as("n_both"))
-  }
+  def containment(skA: DataFrame, skB: DataFrame, k: Int): DataFrame =
+    containmentOver(skA, skB, Nil, k)
 
   /** Per-group [[containment]] between two GROUPED sketch tables
     * ([[sketchBy]] outputs) — per-language eval-in-corpus containment,
@@ -231,29 +231,20 @@ object Kmv {
     * the bounded [[graft.functions.BottomKLongs]] aggregate, and
     * everything is groups × k-bounded. */
   def containmentBy(skA: DataFrame, skB: DataFrame, groupCol: String,
-      k: Int): DataFrame = {
-    require(k >= 2, s"k must be at least 2, got $k")
-    graft.Graft.init(skA.sparkSession)
-    val union = skA.select(col(groupCol), col("h"))
-      .unionByName(skB.select(col(groupCol), col("h")))
-    val m = union.groupBy(col(groupCol))
-      .agg(graft.functions.SketchExprs.bottomK(col("h"), k).as("_hs"))
-      .select(col(groupCol), explode(col("_hs")).as("h"))
-    val flagged = m
-      .join(skA.select(col(groupCol).as("_ga"), col("h").as("_ha"),
-          lit(1).as("_a")),
-        col(groupCol) <=> col("_ga") && col("h") === col("_ha"), "left")
-      .drop("_ga", "_ha")
-      .join(skB.select(col(groupCol).as("_gb"), col("h").as("_hb"),
-          lit(1).as("_b")),
-        col(groupCol) <=> col("_gb") && col("h") === col("_hb"), "left")
-      .drop("_gb", "_hb")
-    flagged.groupBy(col(groupCol))
+      k: Int): DataFrame =
+    containmentOver(skA, skB, Seq(groupCol), k)
+
+  /** The one containment body: (keys..., containment_a_in_b,
+    * containment_b_in_a, n_a, n_b, n_both), one row per key. */
+  private def containmentOver(skA: DataFrame, skB: DataFrame,
+      keys: Seq[String], k: Int): DataFrame = {
+    val ks = keys.map(col)
+    flagged(skA, skB, keys, k).groupBy(ks: _*)
       .agg(sum(when(col("_a") === 1, 1L).otherwise(0L)).as("n_a"),
         sum(when(col("_b") === 1, 1L).otherwise(0L)).as("n_b"),
         sum(when(col("_a") === 1 && col("_b") === 1, 1L).otherwise(0L))
           .as("n_both"))
-      .select(col(groupCol),
+      .select(ks ++ Seq(
         when(col("n_a") > 0, col("n_both").cast("double")
           / col("n_a").cast("double")).otherwise(lit(0.0))
           .as("containment_a_in_b"),
@@ -262,51 +253,35 @@ object Kmv {
           .as("containment_b_in_a"),
         col("n_a").cast("long").as("n_a"),
         col("n_b").cast("long").as("n_b"),
-        col("n_both").cast("long").as("n_both"))
+        col("n_both").cast("long").as("n_both")): _*)
   }
 
-  /** Per-group [[setEstimates]] between two GROUPED sketch tables
-    * ([[sketchBy]] outputs): one row per group present in either input
-    * — per-language vocabulary overlap between two corpora, per-domain
-    * URL overlap between two crawls. A group absent from one side has
-    * n_both = 0 and jaccard_est = 0 (its union sample is the other
-    * side's sketch alone). Everything is (group, h)-keyed over
-    * groups×k-row tables; the per-group re-take runs through the same
-    * bounded [[graft.functions.BottomKLongs]] aggregate as
-    * [[sketchBy]]. */
-  def setEstimatesBy(skA: DataFrame, skB: DataFrame, groupCol: String,
+  /** The merged-and-flagged union sample both set-operation bodies
+    * read: per key, the k smallest hashes of A ∪ B ([[retake]] over the
+    * union — with no key, exactly [[merge]]), each flagged `_a` / `_b`
+    * (1 or NULL) by its membership in either input.
+    *
+    * The membership joins are NULL-SAFE on the keys (<=>): groupBy
+    * keeps a NULL group as a real group, so a plain equality here
+    * would silently zero n_both for it (ADVICE r10). They carry no
+    * join hint: both sides are k-bounded per key, and AQE plans them
+    * as broadcast hash joins from the sketches' sizes. */
+  private def flagged(skA: DataFrame, skB: DataFrame, keys: Seq[String],
       k: Int): DataFrame = {
     require(k >= 2, s"k must be at least 2, got $k")
-    graft.Graft.init(skA.sparkSession)
-    val union = skA.select(col(groupCol), col("h"))
-      .unionByName(skB.select(col(groupCol), col("h")))
-    val m = union.groupBy(col(groupCol))
-      .agg(graft.functions.SketchExprs.bottomK(col("h"), k).as("_hs"))
-      .select(col(groupCol), explode(col("_hs")).as("h"))
-    // membership joins are NULL-SAFE on the group key (<=>): groupBy
-    // keeps a NULL group as a real group, so a plain equality here
-    // would silently zero n_both for it (ADVICE r10)
-    val flagged = m
-      .join(skA.select(col(groupCol).as("_ga"), col("h").as("_ha"),
-          lit(1).as("_a")),
-        col(groupCol) <=> col("_ga") && col("h") === col("_ha"), "left")
-      .drop("_ga", "_ha")
-      .join(skB.select(col(groupCol).as("_gb"), col("h").as("_hb"),
-          lit(1).as("_b")),
-        col(groupCol) <=> col("_gb") && col("h") === col("_hb"), "left")
-      .drop("_gb", "_hb")
-    val rho = when(col("n_sample") > 0,
-      col("n_both").cast("double") / col("n_sample").cast("double"))
-      .otherwise(lit(0.0))
-    flagged.groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_sample"), max(col("h")).as("h_max"),
-        sum(when(col("_a") === 1 && col("_b") === 1, 1L).otherwise(0L))
-          .as("n_both"))
-      .select(col(groupCol), estExpr(k).as("est_union"),
-        rho.as("jaccard_est"),
-        (rho * estExpr(k)).as("est_intersection"),
-        col("n_sample").cast("int").as("n_sample"),
-        col("n_both").cast("long").as("n_both"))
+    val side = (sk: DataFrame) => sk.select(keys.map(col) :+ col("h"): _*)
+    val merged = retake(side(skA).unionByName(side(skB)), keys, k)
+    // one side's (keys, h) renamed apart, plus its flag column
+    def flag(m: DataFrame, sk: DataFrame, tag: String): DataFrame = {
+      val gs = keys.indices.map(i => s"_g$tag" + (if (i == 0) "" else i))
+      val on = keys.zip(gs).map { case (g, a) => col(g) <=> col(a) } :+
+        (col("h") === col(s"_h$tag"))
+      m.join(sk.select(keys.zip(gs).map { case (g, a) => col(g).as(a) } ++
+            Seq(col("h").as(s"_h$tag"), lit(1).as(s"_$tag")): _*),
+          on.reduce(_ && _), "left")
+        .drop(gs :+ s"_h$tag": _*)
+    }
+    flag(flag(merged, skA, "a"), skB, "b")
   }
 
   /** Deterministic uniform row sample: the k rows whose unique id
@@ -361,6 +336,18 @@ object Kmv {
       .select(df.columns.toSeq.map(col): _*)
   }
 
+  /** Integer-rank quantiles of `valueCol` from a bottom-k sample:
+    * percentile p (an integer percent) reads the sorted sample at rank
+    * ceil(p*n/100) = (p*n + 99) div 100 — lower-rank, no
+    * interpolation, so the extracted value is one of the sample's own
+    * (bit-exact cross-engine; the q_covariance lesson). NULL values
+    * are excluded. The collect is k-bounded by construction — one
+    * array row, the [[Profile]] bootstrap's size class — never
+    * data-proportional. */
+  def sampleQuantiles(sample: DataFrame, valueCol: String,
+      pcts: Seq[Int]): DataFrame =
+    quantilesOver(sample, Nil, valueCol, pcts)
+
   /** Per-group integer-rank quantiles from a grouped bottom-k sample
     * (the [[rowSampleBy]] output) — the per-source drift-monitoring
     * readout: one row per group, same lower-rank extraction as
@@ -368,16 +355,26 @@ object Kmv {
     * sample's construction — parameter-bounded, never
     * data-proportional. */
   def quantilesBy(sample: DataFrame, groupCol: String, valueCol: String,
-      pcts: Seq[Int]): DataFrame = {
+      pcts: Seq[Int]): DataFrame =
+    quantilesOver(sample, Seq(groupCol), valueCol, pcts)
+
+  /** The one quantile body: (keys..., p<pct>..., n_sample), one row per
+    * key. The `_n = 0` guard nulls the percentiles of an empty global
+    * sample (the one aggregate row with nothing collected); a group is
+    * never empty, so grouped it never fires. */
+  private def quantilesOver(sample: DataFrame, keys: Seq[String],
+      valueCol: String, pcts: Seq[Int]): DataFrame = {
     require(pcts.nonEmpty && pcts.forall(p => p >= 1 && p <= 100),
       s"percentiles must be integers in [1, 100], got $pcts")
+    val ks = keys.map(col)
     sample.where(col(valueCol).isNotNull)
-      .groupBy(col(groupCol))
+      .groupBy(ks: _*)
       .agg(sort_array(collect_list(col(valueCol))).as("_vs"),
         count(col(valueCol)).as("_n"))
-      .select(col(groupCol) +:
-        pcts.map(p => element_at(col("_vs"),
-          expr(s"CAST(($p * _n + 99) div 100 AS INT)")).as(s"p$p")) :+
+      .select(ks ++
+        pcts.map(p => when(col("_n") === 0, lit(null))
+          .otherwise(element_at(col("_vs"),
+            expr(s"CAST(($p * _n + 99) div 100 AS INT)"))).as(s"p$p")) :+
         col("_n").cast("int").as("n_sample"): _*)
   }
 
@@ -392,38 +389,11 @@ object Kmv {
   // --------------------------------------------------------------------
 
   /** 60-bit hash of one key — the JVM twin of [[hash60]]. */
-  private[graft] def jvmHash60(key: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest((key + ":kmv").getBytes("UTF-8"))
-    val hex = d.take(8).map(b => f"${b & 0xFF}%02x").mkString.take(15)
-    java.lang.Long.parseLong(hex, 16)
-  }
+  private[graft] def jvmHash60(key: String): Long = Hll.jvmHash60(key, ":kmv")
 
   /** Estimate from a sorted-ascending bottom-k hash array — the JVM
     * twin of [[estimate]], same arithmetic in the same order. */
   private[graft] def estimateJvm(hs: Array[Long], k: Int): Double =
     if (hs.length < k) hs.length.toDouble
     else (k - 1).toDouble * HashSpace.toDouble / hs(hs.length - 1).toDouble
-
-  /** Integer-rank quantiles of `valueCol` from a bottom-k sample:
-    * percentile p (an integer percent) reads the sorted sample at rank
-    * ceil(p*n/100) = (p*n + 99) div 100 — lower-rank, no
-    * interpolation, so the extracted value is one of the sample's own
-    * (bit-exact cross-engine; the q_covariance lesson). NULL values
-    * are excluded. The collect is k-bounded by construction — one
-    * array row, the [[Profile]] bootstrap's size class — never
-    * data-proportional. */
-  def sampleQuantiles(sample: DataFrame, valueCol: String,
-      pcts: Seq[Int]): DataFrame = {
-    require(pcts.nonEmpty && pcts.forall(p => p >= 1 && p <= 100),
-      s"percentiles must be integers in [1, 100], got $pcts")
-    val sorted = sample.where(col(valueCol).isNotNull)
-      .agg(sort_array(collect_list(col(valueCol))).as("_vs"),
-        count(col(valueCol)).as("_n"))
-    sorted.select(
-      pcts.map(p => when(col("_n") === 0, lit(null))
-        .otherwise(element_at(col("_vs"),
-          expr(s"CAST(($p * _n + 99) div 100 AS INT)"))).as(s"p$p")) :+
-        col("_n").cast("int").as("n_sample"): _*)
-  }
 }

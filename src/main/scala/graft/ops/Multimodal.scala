@@ -300,7 +300,22 @@ object Multimodal {
     * (id*7 + i*13) % 256 — a closed form BOTH engines can state, so the
     * DuckDB oracle recomputes the channel means without ever seeing the
     * bytes while Spark derives them by actually decoding the payload. */
-  def plantedPpm(ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
+  def plantedPpm(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    planted(ids, idCol, "image") { id =>
+      val w = 2 + (math.floorMod(id, 3)).toInt
+      val h = 2 + (math.floorMod(id, 2)).toInt
+      val px = new Array[Byte](w * h * 3)
+      var i = 0
+      while (i < px.length) {
+        px(i) = math.floorMod(id * 7 + i * 13L, 256L).toByte; i += 1
+      }
+      ppmBytes(w, h, px)
+    }
+
+  /** The one planted-media skeleton: (media_id, kind, payload) rows,
+    * one per id cast to long, the payload built from the id alone. */
+  private def planted(ids: DataFrame, idCol: String, kind: String)(
+      payload: Long => Array[Byte]): DataFrame = {
     val out = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("kind", StringType, nullable = false),
@@ -310,14 +325,7 @@ object Multimodal {
       .mapPartitions { rows =>
         rows.map { r =>
           val id = r.getLong(0)
-          val w = 2 + (math.floorMod(id, 3)).toInt
-          val h = 2 + (math.floorMod(id, 2)).toInt
-          val px = new Array[Byte](w * h * 3)
-          var i = 0
-          while (i < px.length) {
-            px(i) = math.floorMod(id * 7 + i * 13L, 256L).toByte; i += 1
-          }
-          Row(id, "image", ppmBytes(w, h, px))
+          Row(id, kind, payload(id))
         }
       }(enc)
   }
@@ -469,28 +477,18 @@ object Multimodal {
     * state, so the DuckDB oracle recomputes peak/RMS/duration without
     * ever seeing the bytes while Spark derives them by actually
     * decoding the payload (see the [[plantedPpm]] convention). */
-  def plantedWav(ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val out = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("kind", StringType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(out)
-    ids.select(col(idCol).cast("long").as("media_id"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val ch = 1 + math.floorMod(id, 2).toInt
-          val frames = 50 + math.floorMod(id, 20).toInt
-          val px = new Array[Short](frames * ch)
-          var i = 0
-          while (i < px.length) {
-            px(i) = (math.floorMod(id * 31 + i * 17L, 4001L) - 2000L).toShort
-            i += 1
-          }
-          Row(id, "audio", wavBytes(8000, ch, px))
-        }
-      }(enc)
-  }
+  def plantedWav(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    planted(ids, idCol, "audio") { id =>
+      val ch = 1 + math.floorMod(id, 2).toInt
+      val frames = 50 + math.floorMod(id, 20).toInt
+      val px = new Array[Short](frames * ch)
+      var i = 0
+      while (i < px.length) {
+        px(i) = (math.floorMod(id * 31 + i * 17L, 4001L) - 2000L).toShort
+        i += 1
+      }
+      wavBytes(8000, ch, px)
+    }
 
   // --------------------------------------------------------------------
   // REAL video codec path, the YUV4MPEG2 sibling of the PPM/WAV paths:
@@ -716,32 +714,22 @@ object Multimodal {
     * state, so the DuckDB oracle recomputes frame stats without ever
     * seeing the bytes while Spark derives them by actually parsing the
     * container (see the [[plantedPpm]] convention). */
-  def plantedY4m(ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val out = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("kind", StringType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(out)
-    ids.select(col(idCol).cast("long").as("media_id"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val w = 2 + math.floorMod(id, 3).toInt
-          val h = 2 + math.floorMod(id, 2).toInt
-          val nf = 3 + math.floorMod(id, 4).toInt
-          val frames = Array.tabulate(nf) { f =>
-            val plane = new Array[Byte](w * h)
-            var i = 0
-            while (i < plane.length) {
-              plane(i) = math.floorMod(id * 7 + f * 11L + i * 13L, 256L).toByte
-              i += 1
-            }
-            plane
-          }
-          Row(id, "video", y4mBytes(w, h, 25, 1, frames))
+  def plantedY4m(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    planted(ids, idCol, "video") { id =>
+      val w = 2 + math.floorMod(id, 3).toInt
+      val h = 2 + math.floorMod(id, 2).toInt
+      val nf = 3 + math.floorMod(id, 4).toInt
+      val frames = Array.tabulate(nf) { f =>
+        val plane = new Array[Byte](w * h)
+        var i = 0
+        while (i < plane.length) {
+          plane(i) = math.floorMod(id * 7 + f * 11L + i * 13L, 256L).toByte
+          i += 1
         }
-      }(enc)
-  }
+        plane
+      }
+      y4mBytes(w, h, 25, 1, frames)
+    }
 
   /** Sniff-routed decode over a MIXED payload column — the one-pass
     * shape a crawl dump actually needs: magic bytes pick the codec

@@ -778,30 +778,9 @@ object Profile {
     * domain-sized table. Output: (group, p, value_unit, n_total), one
     * row per (group, p) for every non-empty group. */
   def exactPercentiles(df: DataFrame, groupCol: String, colName: String,
-      ps: Seq[Int], scale: Int = 2): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
-      "percentiles must be in 1..100")
-    val unit = round(col(colName).cast(
-        org.apache.spark.sql.types.DecimalType(18, scale))
-        * math.pow(10, scale).toLong, 0).cast("long")
-    val cnts = df.where(col(colName).isNotNull &&
-        !isnan(col(colName).cast("double")))
-      .groupBy(col(groupCol).as("g"), unit.as("u"))
-      .agg(count(lit(1)).as("n_v"))
-    val wCum = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("g")).orderBy(col("u"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val wTot = org.apache.spark.sql.expressions.Window.partitionBy(col("g"))
-    cnts
-      .withColumn("cum_before", coalesce(sum(col("n_v")).over(wCum), lit(0L)))
-      .withColumn("n_total", sum(col("n_v")).over(wTot))
-      .withColumn("p", explode(array(ps.map(p => lit(p)).toIndexedSeq: _*)))
-      .withColumn("rank", expr("(n_total * p + 99) div 100"))
-      .where(col("cum_before") < col("rank") &&
-        col("rank") <= col("cum_before") + col("n_v"))
-      .select(col("g").as(groupCol), col("p"),
-        col("u").as("value_unit"), col("n_total"))
-  }
+      ps: Seq[Int], scale: Int = 2): DataFrame =
+    percentilesOver(df, groupCol, colName, count(lit(1)), "n_total", ps,
+      scale)
 
   /** Weighted form of [[exactPercentiles]]: each row counts
     * `weightCol` times — the pre-aggregated-data form (latency
@@ -814,19 +793,28 @@ object Profile {
   def exactPercentilesWeighted(df: DataFrame, groupCol: String,
       colName: String, weightCol: String, ps: Seq[Int],
       scale: Int = 2): DataFrame = {
+    val w = when(col(weightCol).cast("long") > 0,
+      col(weightCol).cast("long")).otherwise(raise_error(concat(
+        lit(s"exactPercentilesWeighted: non-positive weight in $weightCol: "),
+        col(weightCol).cast("string"))))
+    percentilesOver(df, groupCol, colName, sum(w), "total_weight", ps, scale)
+  }
+
+  /** The one percentile body: `mass` aggregates each (group, unit)
+    * cell's count or weight, and the group's total mass comes out as
+    * `totalCol`. (group, p, value_unit, totalCol) rows. */
+  private def percentilesOver(df: DataFrame, groupCol: String,
+      colName: String, mass: Column, totalCol: String, ps: Seq[Int],
+      scale: Int): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
       "percentiles must be in 1..100")
     val unit = round(col(colName).cast(
         org.apache.spark.sql.types.DecimalType(18, scale))
         * math.pow(10, scale).toLong, 0).cast("long")
-    val w = when(col(weightCol).cast("long") > 0,
-      col(weightCol).cast("long")).otherwise(raise_error(concat(
-        lit(s"exactPercentilesWeighted: non-positive weight in $weightCol: "),
-        col(weightCol).cast("string"))))
     val cnts = df.where(col(colName).isNotNull &&
         !isnan(col(colName).cast("double")))
       .groupBy(col(groupCol).as("g"), unit.as("u"))
-      .agg(sum(w).as("n_v"))
+      .agg(mass.as("n_v"))
     val wCum = org.apache.spark.sql.expressions.Window
       .partitionBy(col("g")).orderBy(col("u"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
@@ -839,7 +827,7 @@ object Profile {
       .where(col("cum_before") < col("rank") &&
         col("rank") <= col("cum_before") + col("n_v"))
       .select(col("g").as(groupCol), col("p"),
-        col("u").as("value_unit"), col("n_total").as("total_weight"))
+        col("u").as("value_unit"), col("n_total").as(totalCol))
   }
 
   /** Winsorized mean per group: clamp values into the [pLo, pHi]

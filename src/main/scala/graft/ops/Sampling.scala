@@ -386,9 +386,7 @@ object Sampling {
     val idImg =
       if (integralId) col(idCol).cast("long")
       else graft.ops.Kmv.hash60(col(idCol))
-    val priImg = conv(substring(
-      md5(concat(col(idCol).cast("string"), lit(":" + seed))), 1, 15),
-      16, 10).cast("long")
+    val priImg = graft.ops.Hll.hash60(col(idCol), ":" + seed)
     val base = emb
       .where(col(vecCol).isNotNull && size(col(vecCol)) >= signDims &&
         col(idCol).isNotNull)

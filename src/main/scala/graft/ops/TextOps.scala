@@ -1081,13 +1081,12 @@ object TextOps {
   private val M = 2147483647L // 2^31 - 1
 
   def fingerprint(text: Column): Column =
-    aggregate(transform(words(text), w => xxhash64(w).bitwiseAND(lit(0xFFFFFFFFL))),
-      lit(0L), (acc, h) => pmod(acc * P + h, lit(M)))
+    fingerprintWith(text, w => xxhash64(w).bitwiseAND(lit(0xFFFFFFFFL)))
 
   /** Min window-hash (window = n words): robust to local edits, the
     * winnowing primitive used for plagiarism/near-dup detection. */
   def minWindowHash(text: Column, n: Int): Column =
-    array_min(transform(wordShingles(text, n), s => xxhash64(s)))
+    minWindowHashWith(text, n, s => xxhash64(s))
 
   /** Split documents into overlapping token-window chunks — the
     * pre-tokenization step of every training-data pipeline (context

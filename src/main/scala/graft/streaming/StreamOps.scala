@@ -193,18 +193,8 @@ object StreamOps extends org.apache.spark.internal.Logging {
     * oracle) IS the oracle for the streaming one — parity pinned in
     * StreamingSpec. */
   def attributedClicks(purchases: DataFrame, clicks: DataFrame,
-      window: String = "1 day", watermark: String = "2 days"): DataFrame = {
-    val p = purchases.select(col("event_id").as("purchase_id"),
-        col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", watermark)
-    val c = clicks.select(col("event_id").as("click_id"),
-        col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", watermark)
-    p.join(c, col("c_user") === col("p_user") &&
-        col("c_ts") >= col("p_ts") &&
-        col("c_ts") < col("p_ts") + expr(s"INTERVAL $window"))
-      .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"))
-  }
+      window: String = "1 day", watermark: String = "2 days"): DataFrame =
+    attribution(purchases, clicks, window, watermark, "inner")
 
   /** LEFT OUTER form of [[attributedClicks]]: every purchase emits —
     * matched purchases as soon as their click arrives, UNMATCHED ones
@@ -222,7 +212,13 @@ object StreamOps extends org.apache.spark.internal.Logging {
     * join, which is the oracle StreamingSpec pins the streaming
     * results against. */
   def attributedClicksOuter(purchases: DataFrame, clicks: DataFrame,
-      window: String = "1 day", watermark: String = "2 days"): DataFrame = {
+      window: String = "1 day", watermark: String = "2 days"): DataFrame =
+    attribution(purchases, clicks, window, watermark, "left_outer")
+
+  /** The one attribution join body behind both forms: (user_id,
+    * purchase_id, click_id), joined as `joinType`. */
+  private def attribution(purchases: DataFrame, clicks: DataFrame,
+      window: String, watermark: String, joinType: String): DataFrame = {
     val p = purchases.select(col("event_id").as("purchase_id"),
         col("user_id").as("p_user"), col("ts").as("p_ts"))
       .withWatermark("p_ts", watermark)
@@ -231,8 +227,7 @@ object StreamOps extends org.apache.spark.internal.Logging {
       .withWatermark("c_ts", watermark)
     p.join(c, col("c_user") === col("p_user") &&
         col("c_ts") >= col("p_ts") &&
-        col("c_ts") < col("p_ts") + expr(s"INTERVAL $window"),
-        "left_outer")
+        col("c_ts") < col("p_ts") + expr(s"INTERVAL $window"), joinType)
       .select(col("p_user").as("user_id"), col("purchase_id"),
         col("click_id"))
   }

@@ -50,11 +50,13 @@ class KmvSpec extends SparkSpec {
   test("jvmHash60 mirrors the SQL hash60 bit for bit") {
     val keys = (1 to 100).map(i => s"key-$i-${"x" * (i % 7)}") ++
       Seq("", " ", "unicode-é-試", "0", "-1")
-    val sql = keys.toDF("k")
-      .select(col("k"), graft.ops.Kmv.hash60(col("k")).as("h"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    keys.foreach { k =>
-      assert(graft.ops.Kmv.jvmHash60(k) == sql(k), s"key $k")
+    Seq(":kmv", ":hll").foreach { salt =>
+      val sql = keys.toDF("k")
+        .select(col("k"), graft.ops.Hll.hash60(col("k"), salt).as("h"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      keys.foreach { k =>
+        assert(graft.ops.Hll.jvmHash60(k, salt) == sql(k), s"key $k salt $salt")
+      }
     }
   }
 
