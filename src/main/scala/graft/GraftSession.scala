@@ -1,14 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.internal.StaticSQLConf
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
 /** Session factory with the scale-tuned defaults this engine assumes.
   * One place to encode the 100 TB posture: AQE on (runtime re-planning,
   * partition coalescing, skew-join splitting), shuffle partitions sized
   * to the machine (not Spark's legacy 200), bounded scan partitions, UTC,
-  * the nanos-parquet compatibility flag the fixtures need, and a codegen
-  * cache that holds graft's working set ([[CodegenCacheEntries]]). */
+  * the nanos-parquet compatibility flag the fixtures need, and the two
+  * settings that let a long-lived session reuse its compiled classes
+  * ([[SessionReuseConf]]). */
 object GraftSession {
   /** Capacity of Spark's JVM-wide codegen cache
     * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100).
@@ -37,6 +38,40 @@ object GraftSession {
     * build time. */
   val CodegenCacheEntries: Int = 2000
 
+  /** The settings that let one long-lived JVM reuse its compiled classes,
+    * as one value that [[builder]] and every spec session builder apply:
+    *
+    *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]];
+    *  - `spark.sql.artifact.isolation.enabled` = false.
+    *
+    * Artifact isolation keeps the artifacts a session adds with
+    * `addArtifact` (jars, files, REPL classes) apart from other sessions'.
+    * To do that, each session's jobs carry its session id, and the
+    * executor runs their tasks under a class loader of that session's
+    * own. A streaming query runs in a clone of its session, with a new
+    * id, so each stream start brings a new loader; and since the codegen
+    * cache is keyed on (loader, source), every stream start compiled
+    * again the classes its previous start had compiled. Per warm pass of
+    * perfbench's `ingest_stream` (four streams started again each pass),
+    * on a 4-core VM with JDK 17: 114 compiles (0.49 s) with isolation
+    * on; 1 with it off, and 0 once `StreamOps.hllDistinct`'s state
+    * encoder was resolved once (BENCH_NOTES.md). Jobs, stages, tasks and
+    * state rows were equal. With it on, dead streams' classes also
+    * filled the cache at 114 entries a pass and would evict the batch
+    * working set after about 16 passes.
+    *
+    * What it gives up is only that isolation: artifacts added with
+    * `addArtifact`, a Spark Connect feature, become visible to every
+    * other session that has the setting off. graft makes no
+    * `addArtifact` or `ArtifactManager` call.
+    *
+    * The isolation flag is a session-level SQL setting, not a static
+    * one, but Spark reads it only when a session is created; setting it
+    * on a running session does nothing. */
+  val SessionReuseConf: Map[String, String] = Map(
+    StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key -> CodegenCacheEntries.toString,
+    SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false")
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -53,8 +88,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
-        CodegenCacheEntries.toLong)
+      .config(SessionReuseConf)
 
   /** Build + register the engine's custom Catalyst functions. */
   def create(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession =

@@ -8,6 +8,13 @@ import org.apache.spark.sql.types.DecimalType
 /** Table loaders and exact-sum helpers shared by the query families. */
 private[queries] object Fixtures {
 
+  /** A file of the checkout's own test data (`src/test/resources/data`),
+    * as an absolute path resolved against the working directory, so a
+    * frame and its oracle read the fixtures of the checkout the process
+    * runs from. */
+  def dataFile(name: String): String =
+    new java.io.File(s"src/test/resources/data/$name").getAbsolutePath
+
   /** Parquet table loader (fresh plan per call, so self-joins get distinct
     * attribute ids). */
   def t(s: SparkSession, dir: String, name: String): DataFrame =

@@ -278,14 +278,14 @@ private[graft] object RelationalQueries {
     // ---- §2.4 catalog + CSV source (ref catalog.rs + csv_table.rs) ----
     Query("q_csv_catalog", (s, _) => {
       val c = new Catalog(s)
-        .addCsvTable("people", "/root/repo/src/test/resources/data/people.csv")
+        .addCsvTable("people", dataFile("people.csv"))
       c.table("people")
         .filter(E.col("age") >= E.lit(24))
         .project(E.col("name"), E.col("score"))
         .df
     },
-      """SELECT name, score
-        |FROM read_csv_auto('/root/repo/src/test/resources/data/people.csv')
+      s"""SELECT name, score
+        |FROM read_csv_auto('${dataFile("people.csv")}')
         |WHERE age >= 24""".stripMargin),
 
     // line-oriented text source: one row per line, zero parsing — the
@@ -294,14 +294,15 @@ private[graft] object RelationalQueries {
     // at 100 TB (Catalog.addTextTable)
     Query("q_text_source", (s, _) => {
       val c = new Catalog(s)
-        .addTextTable("corpus_raw", "/root/repo/src/test/resources/data/corpus.txt")
+        .addTextTable("corpus_raw", dataFile("corpus.txt"))
       c.table("corpus_raw").df
         .select(col("value"), length(col("value")).cast("long").as("n_chars"),
           TextOps.nTokens(col("value")).cast("long").as("n_tokens"))
     },
-      """WITH l AS (
+      // raw: the regex's backslash stays as written
+      raw"""WITH l AS (
         |  SELECT unnest(string_split(content, chr(10))) AS value
-        |  FROM read_text('/root/repo/src/test/resources/data/corpus.txt'))
+        |  FROM read_text('${dataFile("corpus.txt")}'))
         |SELECT value, CAST(length(value) AS BIGINT) AS n_chars,
         |  CAST(CASE WHEN trim(value) = '' THEN 0
         |       ELSE len(string_split_regex(trim(value), '\s+')) END
@@ -312,14 +313,14 @@ private[graft] object RelationalQueries {
     // the three broken lines in the fixture, keeps the five clean rows
     Query("q_json_malformed", (s, _) =>
       new Catalog(s).addJsonTableStrict("docs_dirty",
-          "/root/repo/src/test/resources/data/docs_malformed.jsonl",
+          dataFile("docs_malformed.jsonl"),
           "id BIGINT, text STRING, lang STRING")
         .table("docs_dirty").df
         .select(col("id"), col("text"), col("lang")),
       // DuckDB's ignore_errors nulls unparseable lines instead of
       // dropping them — filter to mirror Spark's DROPMALFORMED
-      """SELECT id, text, lang FROM read_json(
-        |  '/root/repo/src/test/resources/data/docs_malformed.jsonl',
+      s"""SELECT id, text, lang FROM read_json(
+        |  '${dataFile("docs_malformed.jsonl")}',
         |  format = 'newline_delimited',
         |  columns = {'id': 'BIGINT', 'text': 'VARCHAR', 'lang': 'VARCHAR'},
         |  ignore_errors = true)

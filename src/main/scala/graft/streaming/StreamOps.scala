@@ -1,8 +1,10 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.ops.DirCommit
@@ -32,6 +34,23 @@ object StreamOps extends org.apache.spark.internal.Logging {
 
   private def warnOnce(key: String, msg: => String): Unit =
     if (warnedOnce.add(key)) logWarning(msg)
+
+  /** A state encoder built and resolved once per JVM, for the stateful
+    * operators whose state holds an array or a collection. Resolving an
+    * encoder's collection deserializer numbers its `MapObjects` lambda
+    * variable from a global counter, and the number is part of the
+    * generated source. Spark resolves the state encoder at each stream
+    * start, so an encoder derived per call, or one built once but left
+    * unresolved, made every start compile its state deserializer again
+    * (the one compile left in a warm `ingest_stream` pass,
+    * BENCH_NOTES.md). A resolved encoder resolves to itself, and it
+    * holds only expressions, so streams and sessions can share it. */
+  private def resolvedOnce[T <: Product : TypeTag]: Encoder[T] =
+    ExpressionEncoder[T]().resolveAndBind()
+  private lazy val zRingEncoder = resolvedOnce[ZRing]
+  private lazy val hllRegsEncoder = resolvedOnce[HllRegs]
+  private lazy val kmvHashesEncoder = resolvedOnce[KmvHashes]
+  private lazy val kmvValuesEncoder = resolvedOnce[KmvValues]
 
   /** Normalize an event-time column to TimestampType: driver fixtures
     * have shipped ts as a LONG of epoch-nanos (parquet TIMESTAMP(NANOS)
@@ -771,7 +790,7 @@ object StreamOps extends org.apache.spark.internal.Logging {
             idleTimeout.foreach(state.setTimeoutDuration)
             out.result().iterator
           }
-      }
+      }(zRingEncoder, implicitly[Encoder[ZScoreRow]])
   }
 
   /** Streaming distinct-count per group via a HyperLogLog register
@@ -813,7 +832,7 @@ object StreamOps extends org.apache.spark.internal.Logging {
           }
           state.update(HllRegs(regs))
           HllEstimate(g, graft.ops.Hll.estimateJvm(regs, p))
-      }
+      }(hllRegsEncoder, implicitly[Encoder[HllEstimate]])
   }
 
   /** Streaming bottom-k (KMV) distinct estimate per group — the
@@ -857,7 +876,7 @@ object StreamOps extends org.apache.spark.internal.Logging {
           val arr = set.toArray // sorted ascending
           state.update(KmvHashes(arr))
           KmvEstimate(g, graft.ops.Kmv.estimateJvm(arr, k), arr.length)
-      }
+      }(kmvHashesEncoder, implicitly[Encoder[KmvEstimate]])
   }
 
   /** Streaming grouped quantiles from a bottom-k row sample — the
@@ -930,7 +949,7 @@ object StreamOps extends org.apache.spark.internal.Logging {
           val qs = if (n == 0) Array.empty[Double]
             else pcts.map(p => obs((p * n + 99) / 100 - 1)).toArray
           KmvQuantiles(g, qs, n)
-      }
+      }(kmvValuesEncoder, implicitly[Encoder[KmvQuantiles]])
   }
 
   /** Per-batch staging shared by the ingest-lifecycle operators: the

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.internal.StaticSQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, Similarity}
@@ -87,8 +86,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .appName("graft-ext-test")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
-      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
-        GraftSession.CodegenCacheEntries.toLong)
+      .config(GraftSession.SessionReuseConf)
     val spark = (if (extensions)
       b.config("spark.sql.extensions", "graft.GraftExtensions") else b)
       .getOrCreate()

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Path}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.internal.StaticSQLConf
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,10 +19,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse-test")
-      // JVM-wide and fixed by the first session to generate code, so
-      // every builder in the forked test JVM sets the same capacity
-      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
-        GraftSession.CodegenCacheEntries.toLong)
+      // the codegen capacity is JVM-wide and fixed by the first session
+      // to generate code, so every builder in the forked test JVM applies
+      // the same settings
+      .config(GraftSession.SessionReuseConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     Graft.init(s)
