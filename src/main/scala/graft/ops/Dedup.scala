@@ -1077,8 +1077,7 @@ object Dedup {
     * the operator deletes it — the error says which file). */
   def compactGramIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val nBuckets = spark.read.parquet(s"$path/meta").head
-      .getAs[Int]("n_buckets")
+    val (_, nBuckets, _) = gramIndexMeta(spark, path)
     // hash-repartition on the partition column: each bucket's rows land
     // in exactly one task, so each bucket directory gets exactly one file
     compactIndex(spark, path, Seq("grams")) { (sub, staged) =>

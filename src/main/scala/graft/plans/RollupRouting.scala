@@ -296,8 +296,8 @@ object RollupRouting extends Rule[LogicalPlan] {
         // delete — the normal ingest motions) falls through to the
         // base plan, which is correct by construction; the stale
         // registration is reported once
-        if (Rollup.shouldWarnStale(session,
-            Rollup.staleKey(key, info.rollupPath))) logWarning(
+        if (Rollup.shouldWarnStale(session, key, info.rollupPath,
+            Rollup.Staleness.Base)) logWarning(
           s"rollup at ${info.rollupPath} is STALE for base $key " +
             s"(registered ${info.baseSnapshot}, base now $now); " +
             "queries use the base scan until re-registered")
@@ -366,8 +366,8 @@ object RollupRouting extends Rule[LogicalPlan] {
       Rollup.analyzedRelation(session,
         Rollup.currentDataPath(session, info.rollupPath))
     catch { case scala.util.control.NonFatal(e) =>
-      if (Rollup.shouldWarnStale(session,
-          s"${Rollup.staleKey(key, info.rollupPath)}|unreadable")) logWarning(
+      if (Rollup.shouldWarnStale(session, key, info.rollupPath,
+          Rollup.Staleness.Unreadable)) logWarning(
         s"rollup at ${info.rollupPath} is unreadable " +
           s"(${e.getClass.getSimpleName}: ${e.getMessage}); queries " +
           "use the base scan until it reappears or is re-registered")
@@ -386,8 +386,8 @@ object RollupRouting extends Rule[LogicalPlan] {
         Rollup.maxCol(m), Rollup.cntColOf(m)))
     val missingCols = promised.filterNot(byName.contains)
     if (missingCols.nonEmpty) {
-      if (Rollup.shouldWarnStale(session,
-          s"${Rollup.staleKey(key, info.rollupPath)}|schema")) logWarning(
+      if (Rollup.shouldWarnStale(session, key, info.rollupPath,
+          Rollup.Staleness.Schema)) logWarning(
         s"rollup at ${info.rollupPath} no longer carries the " +
           s"registered columns (missing: " +
           s"${missingCols.take(3).mkString(", ")}) — rebuilt with " +

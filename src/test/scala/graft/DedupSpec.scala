@@ -1160,9 +1160,10 @@ class DedupSpec extends SparkSpec {
       "theta iota kappa")).toDF("doc_id", "text")
     val batch = Seq((101L, "red orange yellow green blue indigo violet " +
       "ultraviolet")).toDF("doc_id", "text")
-    def refused(path: String)(body: => Any): Unit = {
+    def refused(path: String, found: String = "holds")(body: => Any)
+        : Unit = {
       val e = intercept[IllegalArgumentException](body)
-      assert(e.getMessage.contains(s"index meta at $path/meta holds") &&
+      assert(e.getMessage.contains(s"index meta at $path/meta $found") &&
         e.getMessage.contains("`generation`"), e.getMessage)
     }
     val gramIdx = tempDir("graft-gram-nogen").toString
@@ -1174,6 +1175,7 @@ class DedupSpec extends SparkSpec {
     refused(gramIdx)(Dedup.appendToGramIndex(batch, gramIdx, "doc_id",
       "text"))
     refused(gramIdx)(Dedup.indexGeneration(spark, gramIdx))
+    refused(gramIdx)(Dedup.compactGramIndex(spark, gramIdx))
     val sigIdx = tempDir("graft-sig-nogen").toString
     Dedup.saveSignatureIndex(corpus, sigIdx, "doc_id", "text")
     Seq((3, 16, 4)).toDF("shingle_n", "bands", "rows_per_band")
@@ -1182,8 +1184,16 @@ class DedupSpec extends SparkSpec {
       "text"))
     refused(sigIdx)(graft.streaming.StreamOps.nearDupIngestBatch(batch,
       0L, sigIdx, "doc_id", "text")((_, _) => ()))
-    assert(!new java.io.File(s"$gramIdx/gen").exists() &&
-      !new java.io.File(s"$sigIdx/gen").exists(),
+    refused(sigIdx)(Dedup.compactSignatureIndex(spark, sigIdx))
+    // both compactions read their meta like every other index op: an
+    // absent one is refused by path too
+    val noMeta = tempDir("graft-idx-nometa").toString
+    refused(noMeta, "is unreadable or absent")(
+      Dedup.compactGramIndex(spark, noMeta))
+    refused(noMeta, "is unreadable or absent")(
+      Dedup.compactSignatureIndex(spark, noMeta))
+    assert(Seq(gramIdx, sigIdx, noMeta).forall(p =>
+      !new java.io.File(s"$p/gen").exists()),
       "a refused index claims no generation")
   }
 

@@ -781,6 +781,65 @@ class RollupSpec extends SparkSpec {
     } finally Rollup.unregister(spark, bp)
   }
 
+  test("saveRollup and the streaming fold store the same schema and " +
+      "rows: one fold, Spark's own SUM types") {
+    import spark.implicits._
+    val dir = tempDir("graft-rollup-onefold")
+    val input = Seq[(String, String, java.lang.Long)](
+      ("en", "1.50", 100L), ("en", "2.25", null), ("de", null, 300L),
+      (null, "4.00", 400L), ("de", "0.75", 500L), ("en", "6.00", 600L))
+    def frame(r: Seq[(String, String, java.lang.Long)]) =
+      r.toDF("lang", "price_s", "n")
+        .withColumn("price", col("price_s").cast("decimal(10,2)"))
+        .drop("price_s")
+    val batch = dir.resolve("batch").toString
+    Rollup.saveRollup(frame(input), batch, Seq("lang"), Seq("price", "n"))
+    // the same rows as two micro-batches, so the second fold merges
+    val stream = dir.resolve("stream").toString
+    val (b0, b1) = (frame(input.take(3)), frame(input.drop(3)))
+    assert(graft.streaming.StreamOps.applyRoutableRollupBatch(stream, b0,
+      0L, Seq("lang"), Seq("price", "n")))
+    assert(graft.streaming.StreamOps.applyRoutableRollupBatch(stream, b1,
+      1L, Seq("lang"), Seq("price", "n")))
+    def stored(p: String) = spark.read.parquet(Rollup.currentDataPath(spark, p))
+    val (a, b) = (stored(batch), stored(stream))
+    assert(a.schema == b.schema, s"${a.schema.simpleString} vs " +
+      b.schema.simpleString)
+    assert(a.schema(Rollup.sumCol("price")).dataType ==
+      org.apache.spark.sql.types.DecimalType(20, 2))
+    assert(rows(a) == rows(b.select(a.columns.map(col): _*)))
+  }
+
+  test("register and refresh at a path with no rollup meta are refused " +
+      "by path") {
+    import spark.implicits._
+    val dir = tempDir("graft-rollup-nometa")
+    val bp = dir.resolve("base").toString
+    Seq(("en", 10L)).toDF("lang", "n").coalesce(1).write.parquet(bp)
+    val rp = dir.resolve("roll").toString
+    for (call <- Seq[() => Any](() => Rollup.register(spark, bp, rp),
+        () => Rollup.refresh(spark, bp, rp))) {
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(s"$rp/meta") &&
+        e.getMessage.contains("saveRollup"), e.getMessage)
+    }
+  }
+
+  test("a re-register re-arms each kind of staleness warning") {
+    Rollup.register(spark, basePath, rollupPath)
+    val key = Rollup.baseKeyOf(spark, basePath)
+    val kinds = Rollup.Staleness.values.toSeq
+    def warns() = kinds.map(Rollup.shouldWarnStale(spark, key, rollupPath, _))
+    try {
+      assert(warns() == kinds.map(_ => true), "register arms every kind")
+      assert(warns() == kinds.map(_ => false), "each kind warns once")
+      Rollup.register(spark, basePath, rollupPath)
+      assert(warns() == kinds.map(_ => true), "register re-arms every kind")
+      Rollup.unregister(spark, basePath)
+      assert(warns() == kinds.map(_ => true), "unregister re-arms every kind")
+    } finally Rollup.unregister(spark, basePath)
+  }
+
   test("an uncommitted version is invisible to resolution and swept " +
       "by the next writer (crash window)") {
     import spark.implicits._

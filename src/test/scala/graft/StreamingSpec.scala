@@ -494,18 +494,24 @@ class StreamingSpec extends SparkSpec {
 
   test("rollup sink folds each batch once; replayed ids are fenced out") {
     implicit val sql = spark.sqlContext
+    import graft.ops.Rollup
     val root = tempDir("graft-rollup")
     val path = root.resolve("agg").toString
+    // the exact fixed-scale total is the caller's cast of the measure
+    def exact(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("value", col("value").cast("decimal(18,6)"))
     val mem = MemoryStream[Ev]
-    val q = StreamOps.rollupSink(mem.toDF(), path, "event_type", "value",
-      root.resolve("ckpt").toString).start()
+    val q = StreamOps.routableRollupSink(exact(mem.toDF()), path,
+      Seq("event_type"), Seq("value"), root.resolve("ckpt").toString)
+      .start()
     mem.addData(evs.take(2): _*)
     q.processAllAvailable()
     mem.addData(evs.drop(2): _*)
     q.processAllAvailable()
     q.stop()
-    def snapshot() = spark.read.parquet(path)
-      .select(col("event_type"), col("n"), col("total").cast("double"))
+    def snapshot() = spark.read.parquet(Rollup.currentDataPath(spark, path))
+      .select(col("event_type"), col(Rollup.cntCol),
+        col(Rollup.sumCol("value")).cast("double"))
       .as[(String, Long, Double)].collect().toSet
     val batchOracle = evs.toDF()
       .groupBy(col("event_type"))
@@ -521,14 +527,15 @@ class StreamingSpec extends SparkSpec {
       root.resolve("ckpt").toString)
     assert(runId.nonEmpty, "checkpoint metadata must yield the query id")
     val before = snapshot()
-    val replayed = StreamOps.applyRollupBatch(path,
-      evs.take(2).toDF(), batchId = 0L, "event_type", "value", runId)
+    val replayed = StreamOps.applyRoutableRollupBatch(path,
+      exact(evs.take(2).toDF()), batchId = 0L, Seq("event_type"),
+      Seq("value"), runId = runId)
     assert(!replayed, "replayed batch id must be fenced out")
     assert(snapshot() == before)
     // a NEW batch id still folds
-    assert(StreamOps.applyRollupBatch(path,
-      Seq(Ev(9, ts(59), 9, "click", 10.0)).toDF(), 99L,
-      "event_type", "value", runId))
+    assert(StreamOps.applyRoutableRollupBatch(path,
+      exact(Seq(Ev(9, ts(59), 9, "click", 10.0)).toDF()), 99L,
+      Seq("event_type"), Seq("value"), runId = runId))
     assert(snapshot() != before)
   }
 
@@ -554,14 +561,6 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(cdc() == Set((1L, "a2")))
     } finally q.stop()
-    // applyRollupBatch: two folds accumulate; a replayed id is fenced
-    val agg = uri("agg")
-    def fold(b: Seq[Ev], id: Long) = StreamOps.applyRollupBatch(agg,
-      b.toDF(), id, "event_type", "value", runId = "r")
-    assert(fold(evs.take(2), 0L) && fold(evs.drop(2), 1L))
-    assert(!fold(evs.drop(2), 1L), "replayed batch id must be fenced out")
-    assert(spark.read.parquet(agg).select("event_type", "n")
-      .as[(String, Long)].collect().toSet == Set(("click", 3L), ("view", 1L)))
     // applyRoutableRollupBatch: the same, over committed versions
     val routable = uri("routable")
     def foldR(rows: Seq[(String, Long)], id: Long) =
@@ -1117,14 +1116,6 @@ class StreamingSpec extends SparkSpec {
     // the artifact survived intact (resolved through its version dir)
     assert(spark.read.parquet(Rollup.currentDataPath(spark, p2))
       .agg(sum(col(Rollup.cntCol))).head.getLong(0) == 2L)
-    // same guards on the (groupCol, n, total) sink
-    val p3 = tempDir("graft-roll-foreign3").toString
-    assert(StreamOps.applyRollupBatch(p3,
-      Seq(("a", 1.0)).toDF("k", "v"), 0L, "k", "v", runId = "runA"))
-    val eC = intercept[IllegalStateException](
-      StreamOps.applyRollupBatch(p3,
-        Seq(("b", 2.0)).toDF("k", "v"), 0L, "k", "v", runId = "runB"))
-    assert(eC.getMessage.contains("maintained by stream run"), eC.getMessage)
   }
 
   test("an unversioned rollup root is refused by name; an uncommitted " +
